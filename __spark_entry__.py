@@ -4864,10 +4864,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "customer_order_span": relational.customer_order_span,
         "events_gap_fill": relational.events_gap_fill,
     }
-    # --- r9 window (positions 0-49), per the head-sweep rule: the 16
-    # r7 statistics operators + 14 r8 operators with NO driver row yet
-    # (positions 0-29), then 20 entries whose code changed in r9 commits
-    # be3eaa4/06e9b28/3d369c9/0f676ec/41e0558 (loop unpersist ordering,
+    # --- reshape planner window (positions 0-7), per the head-sweep
+    # rule: the 8 registry entries that run the reshape planner, whose
+    # plans are now built as Spark SQL text (reshape_identity and
+    # reshape_primitive_container never plan and stay put). They
+    # replace the first 8 r7 statistics entries, swept green in
+    # CORRECTNESS_r09. ---
+    # --- r9 window (positions 8-49), per the head-sweep rule: 8 of the
+    # 16 r7 statistics operators + 14 r8 operators never swept before
+    # r9 (positions 8-29), then 20 entries whose code changed in
+    # r9 commits be3eaa4/06e9b28/3d369c9/0f676ec/41e0558 (loop unpersist ordering,
     # fused recall pass, hilbert one-expression fold, bloom probe-all
     # rewrite, tf-cosine anti-join cap, corpus_funnel eager pins,
     # compacted-scan spread) — all verified bit-strict against the
@@ -4876,11 +4882,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # reorder is by NAME over the literal dict above so no entry can be
     # added, dropped, or renamed by the rotation itself. ---
     head = [
+        # reshape planner now emits SQL text (re-verification rows)
+        "reshape_flat_rename", "reshape_star_exclusion",
+        "reshape_nested_path", "reshape_nested_star",
+        "reshape_withstructure", "reshape_array_project",
+        "reshape_map_project", "reshape_dup_names",
         # never driver-checked: r7 statistics block
-        "kendall_tau_daily", "page_hinkley_drift", "gumbel_daily_max_fit",
-        "ses_backtest_daily", "user_path_entropy",
-        "hoeffding_adequacy_report", "mcnemar_gate_compare",
-        "template_prefix_report", "robust_zscore_docs",
+        "robust_zscore_docs",
         "quality_gate_pareto", "odds_ratio_ci_report",
         "changepoint_daily_mean", "sprt_daily_audit", "topk_spender_churn",
         "cohens_kappa_gates", "g2_keyness_terms",

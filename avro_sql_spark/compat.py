@@ -20,9 +20,7 @@ from typing import Sequence
 from pyspark.sql import SparkSession
 
 from .plans.fields import parse
-from .plans.flatten import plan_flatten
-from .plans.structure import plan_withstructure
-from .reshape import reshape_fields
+from .reshape import apply_plan, empty_frame, plan_fields
 from .sources.avro_io import _avro_to_spark_value
 from .sources.avro_schema import avro_to_spark_schema, spark_to_avro_schema
 
@@ -34,9 +32,9 @@ _ROOT_RESERVED = {"type", "name", "namespace", "doc", "fields", "aliases"}
 
 class AvroSqlProcessor:
     """Parse/plan once, reshape many — entry point 3 of the reference
-    (AvroSql.scala:86-103) with the schema work AND the Column plan
-    hoisted out of the per-batch path (``apply`` is a bare
-    ``df.select`` on the pre-built expressions)."""
+    (AvroSql.scala:86-103) with the schema work AND the plan hoisted out
+    of the per-batch path (``apply`` is a bare ``df.selectExpr`` on the
+    pre-built SQL expressions)."""
 
     def __init__(self, spark: SparkSession, avro_schema: str | dict, query: str):
         self.spark = spark
@@ -46,16 +44,11 @@ class AvroSqlProcessor:
         self.in_schema = avro_to_spark_schema(self.avro_schema)
         self.fields, ws = parse(query)
         self.flatten = not ws
-        # plan once: Column expressions are schema-bound, not frame-bound,
-        # so the same plan serves every batch
-        self._plan = (
-            plan_flatten(self.in_schema, self.fields)
-            if self.flatten
-            else plan_withstructure(self.in_schema, self.fields)
-        )
+        # plan once: the SQL strings are schema-bound, not frame- or
+        # session-bound, so the same plan serves every batch
+        self._plan = plan_fields(self.in_schema, self.fields, self.flatten)
         # derive the output schema with no data (reference O3)
-        empty = spark.createDataFrame([], self.in_schema)
-        self.out_schema = reshape_fields(empty, self.fields, flatten=self.flatten).schema
+        self.out_schema = apply_plan(empty_frame(spark, self.in_schema), self._plan).schema
 
     def out_avro_schema(self) -> dict:
         """Avro JSON schema of the output, carrying the input's
@@ -81,6 +74,6 @@ class AvroSqlProcessor:
             _avro_to_spark_value(r, self.in_schema, self.avro_schema) for r in live
         ]
         df = self.spark.createDataFrame(rows, self.in_schema)
-        out = df.select(*self._plan) if self._plan is not None else df
+        out = apply_plan(df, self._plan)
         reshaped = iter([row.asDict(recursive=True) for row in out.collect()])
         return [None if r is None else next(reshaped) for r in records]

@@ -44,9 +44,10 @@ def _scan_row_groups(df: DataFrame, cap: int) -> int:
     """Effective scan-task upper bound for ``df``'s input, counted up
     to ``cap`` (returns early once the scan is provably wide enough).
     Falls back to ``cap`` (= "wide enough, leave it alone") when the
-    input isn't local parquet files the driver can footer-read."""
+    input isn't local parquet files the driver can footer-read,
+    including when it has no files at all (an in-memory frame)."""
     files = df.inputFiles()
-    if len(files) >= cap:
+    if not files or len(files) >= cap:
         return cap
     try:
         import pyarrow.parquet as pq
@@ -57,7 +58,7 @@ def _scan_row_groups(df: DataFrame, cap: int) -> int:
         path = uri[len("file://"):] if uri.startswith("file://") else uri
         if not os.path.isfile(path):
             return cap
-        total += pq.ParquetFile(path).metadata.num_row_groups
+        total += pq.read_metadata(path).num_row_groups
         if total >= cap:
             return total
     return total

@@ -1,11 +1,13 @@
 """Flatten-mode planner (reference O4-O9, O14, O15).
 
-Derives, ONCE at plan time, the ordered list of Spark ``Column``
-expressions for a flatten-mode reshape — the Spark-first replacement for
-the reference's per-record walk (AvroSql.scala:118-162 values,
-AvroSchemaSql.scala:105-240 schema). Catalyst's ``ExtractValue`` gives
-null-safe dotted-path navigation and nullability propagation through
-nullable ancestors natively (SURVEY.md §1.2, O14), so the planner only
+Derives, ONCE at plan time, the ordered list of Spark SQL expression
+strings for a flatten-mode reshape (`` `a`['b']['c'] AS `x` ``) — the
+Spark-first replacement for the reference's per-record walk
+(AvroSql.scala:118-162 values, AvroSchemaSql.scala:105-240 schema).
+Planning is pure Python; the strings reach the JVM in one
+``df.selectExpr``. Catalyst's ``ExtractValue`` gives null-safe
+dotted-path navigation and nullability propagation through nullable
+ancestors natively (SURVEY.md §1.2, O14), so the planner only
 validates, orders, and names; the result is a single ``Project`` node —
 whole-stage-codegen'd, zero per-row Python, safe at any scale.
 
@@ -23,11 +25,10 @@ Semantics mirrored from the reference:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 from ..errors import AvroSqlError
+from . import sqltext as sql
 from .fields import Field, NameAllocator
 
 
@@ -53,11 +54,11 @@ def _resolve(schema: StructType, path: tuple[str, ...]) -> DataType:
     return current
 
 
-def _col_for_path(path: tuple[str, ...]) -> Column:
-    col = F.col(f"`{path[0]}`")
+def _path_expr(path: tuple[str, ...]) -> str:
+    expr = sql.ident(path[0])
     for seg in path[1:]:
-        col = col[seg]
-    return col
+        expr = sql.field(expr, seg)
+    return expr
 
 
 def _check_flatten_leaf(dtype: DataType, path: str, schema: StructType) -> None:
@@ -67,9 +68,9 @@ def _check_flatten_leaf(dtype: DataType, path: str, schema: StructType) -> None:
         )
 
 
-def plan_flatten(schema: StructType, fields: list[Field]) -> list[Column] | None:
-    """Return the aliased select list, or ``None`` for identity
-    (lone ``SELECT *``)."""
+def plan_flatten(schema: StructType, fields: list[Field]) -> list[str] | None:
+    """Return the aliased select list as SQL expressions, or ``None``
+    for identity (lone ``SELECT *``)."""
     if len(fields) == 1 and fields[0].is_star and not fields[0].has_parents:
         return None  # identity passthrough (O15)
 
@@ -86,7 +87,7 @@ def plan_flatten(schema: StructType, fields: list[Field]) -> list[Column] | None
             names.append(f.name)
 
     alloc = NameAllocator()
-    out: list[Column] = []
+    out: list[str] = []
     for f in fields:
         if f.is_star:
             parent_dtype = _resolve(schema, f.parents)
@@ -100,9 +101,9 @@ def plan_flatten(schema: StructType, fields: list[Field]) -> list[Column] | None
                 if sub.name in excluded:
                     continue
                 _check_flatten_leaf(sub.dataType, ".".join((*f.parents, sub.name)), schema)
-                out.append(_col_for_path((*f.parents, sub.name)).alias(alloc.allocate(sub.name)))
+                out.append(sql.alias(_path_expr((*f.parents, sub.name)), alloc.allocate(sub.name)))
         else:
             leaf = _resolve(schema, (*f.parents, f.name))
             _check_flatten_leaf(leaf, f.path, schema)
-            out.append(_col_for_path((*f.parents, f.name)).alias(alloc.allocate(f.alias)))
+            out.append(sql.alias(_path_expr((*f.parents, f.name)), alloc.allocate(f.alias)))
     return out

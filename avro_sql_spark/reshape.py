@@ -2,10 +2,13 @@
 ``record.sql("SELECT ...")`` extension method (AvroSql.scala:43-65).
 
 The unit of data is a DataFrame instead of a single Avro record: the
-query is parsed and planned ONCE, compiled to Catalyst ``Column``
-expressions, and applied with a single ``df.select`` — batch or
-streaming (the projection is stateless, so the same plan works unchanged
-under Structured Streaming).
+query is parsed and planned ONCE, in pure Python, to one Spark SQL
+expression string per output column, and applied with a single
+``df.selectExpr`` — batch or streaming (the projection is stateless, so
+the same plan works unchanged under Structured Streaming). Catalyst
+parses the strings into the same expression trees the ``Column`` API
+would build, at one JVM call per output column instead of one per
+expression node.
 """
 
 from __future__ import annotations
@@ -27,12 +30,22 @@ def reshape(df: DataFrame, query: str) -> DataFrame:
     return reshape_fields(df, fields, flatten=not withstructure)
 
 
+def plan_fields(schema: StructType, fields: list[Field], flatten: bool = True) -> list[str] | None:
+    """Plan ``fields`` over ``schema``: the SQL select list, or ``None``
+    for identity. Needs no session, so a plan can be kept and applied
+    to any frame of this schema."""
+    return plan_flatten(schema, fields) if flatten else plan_withstructure(schema, fields)
+
+
+def apply_plan(df: DataFrame, plan: list[str] | None) -> DataFrame:
+    return df if plan is None else df.selectExpr(*plan)
+
+
 def reshape_fields(df: DataFrame, fields: list[Field], flatten: bool = True) -> DataFrame:
     """Pre-parsed entry point (reference entry point 3,
     AvroSql.scala:86-103): the host caches the projection list and
     dispatches many frames through one parse."""
-    plan = plan_flatten(df.schema, fields) if flatten else plan_withstructure(df.schema, fields)
-    return df if plan is None else df.select(*plan)
+    return apply_plan(df, plan_fields(df.schema, fields, flatten))
 
 
 def reshape_container(df: DataFrame, query: str) -> DataFrame:
@@ -56,8 +69,16 @@ def reshape_container(df: DataFrame, query: str) -> DataFrame:
     )
 
 
+def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """A frame of ``schema`` with no rows, as a local relation: three JVM
+    calls, where ``createDataFrame([], schema)`` makes 32 to ship an
+    empty Python RDD."""
+    js = spark._jsparkSession
+    return DataFrame(js.createDataFrame([], js.parseDataType(schema.json())), spark)
+
+
 def reshape_schema(spark: SparkSession, schema: StructType, query: str) -> StructType:
     """Schema-only transform (reference O3, ``Schema.copy``,
     AvroSchemaSql.scala:77-85): derive the output schema without any
     data — this is the planner applied to an empty frame."""
-    return reshape(spark.createDataFrame([], schema), query).schema
+    return reshape(empty_frame(spark, schema), query).schema

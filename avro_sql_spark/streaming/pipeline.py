@@ -19,8 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.fields import parse
-from ..plans.flatten import plan_flatten
-from ..plans.structure import plan_withstructure
+from ..reshape import reshape_fields
 
 
 def reshape_stream(stream_df: DataFrame, query: str) -> DataFrame:
@@ -28,12 +27,7 @@ def reshape_stream(stream_df: DataFrame, query: str) -> DataFrame:
     planning path to the batch entry point — the projection is stateless,
     so it composes with any downstream watermark/window."""
     fields, withstructure = parse(query)
-    plan = (
-        plan_flatten(stream_df.schema, fields)
-        if not withstructure
-        else plan_withstructure(stream_df.schema, fields)
-    )
-    return stream_df if plan is None else stream_df.select(*plan)
+    return reshape_fields(stream_df, fields, flatten=not withstructure)
 
 
 def windowed_counts(

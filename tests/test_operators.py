@@ -1953,3 +1953,24 @@ def test_weekday_hour_profile_known_dates(spark):
     assert set(out) == {(4, 5), (0, 23), (1, 0)}
     # shares are rounded at 6dp, so the sum is within n*5e-7 of 1
     assert abs(sum(r["share"] for r in out.values()) - 1.0) < 2e-6
+
+
+def test_scan_probe_leaves_in_memory_frames_alone(spark):
+    """A frame with no input files (in-memory rows) can't be footer-read:
+    the probe answers ``cap`` ("wide enough") and no repartition is
+    added."""
+    from avro_sql_spark.operators._scan import _scan_row_groups, spread_groupby_scan, spread_scan
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k LONG, v STRING")
+    assert df.inputFiles() == []
+    assert _scan_row_groups(df, 8) == 8
+    assert spread_groupby_scan(df, "k") is df
+    assert spread_scan(df) is df
+
+
+def test_scan_probe_counts_parquet_row_groups(spark, tmp_path):
+    from avro_sql_spark.operators._scan import _scan_row_groups
+
+    path = str(tmp_path / "t")
+    spark.range(100).coalesce(1).write.parquet(path)
+    assert _scan_row_groups(spark.read.parquet(path), 8) == 1

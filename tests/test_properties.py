@@ -5,7 +5,8 @@ Invariants over hypothesis-generated nested schemas + records:
  - ``SELECT *`` is identity in both modes
  - schema is derivable from schema alone (reshape_schema == reshape(df).schema)
  - every flatten-projected leaf equals the input value at its source path
- - withstructure with all leaves listed preserves all values
+ - withstructure with all leaves listed preserves all values, inside
+   arrays of records and maps too
  - nullability is monotone along paths (nullable ancestor ⇒ nullable output)
 """
 
@@ -17,10 +18,12 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql.types import (
+    ArrayType,
     BooleanType,
     DoubleType,
     IntegerType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
@@ -36,31 +39,58 @@ ATOMS = [
     (BooleanType(), st.booleans()),
     (StringType(), st.text(alphabet=string.ascii_letters, max_size=8)),
 ]
+ATOM_VALUES = {type(dtype): strat for dtype, strat in ATOMS}
 
 
 @st.composite
-def schema_and_row(draw, depth: int = 2):
+def schemas(draw, depth: int = 2, containers: bool = False) -> StructType:
     """A random struct schema (up to ``depth`` nesting levels, unique
-    names per level) plus one matching row."""
+    names per level). With ``containers``, fields may also be arrays of
+    records and string-keyed maps of atoms."""
     n_fields = draw(st.integers(1, 4))
     names = draw(
         st.lists(NAMES, min_size=n_fields, max_size=n_fields, unique=True)
     )
-    fields, values = [], []
+    fields = []
     for name in names:
         nullable = draw(st.booleans())
-        if depth > 0 and draw(st.integers(0, 3)) == 0:
-            sub_schema, sub_row = draw(schema_and_row(depth=depth - 1))
-            if nullable and draw(st.booleans()):
-                sub_row = None
-            fields.append(StructField(name, sub_schema, nullable))
-            values.append(sub_row)
+        kinds = ("record", "array", "map", "atom", "atom") if containers else ("record", "atom", "atom", "atom")
+        kind = draw(st.sampled_from(kinds))
+        atom = ATOMS[draw(st.integers(0, len(ATOMS) - 1))][0]
+        if depth > 0 and kind == "record":
+            dtype = draw(schemas(depth - 1, containers))
+        elif depth > 0 and kind == "array":
+            dtype = ArrayType(draw(schemas(depth - 1, containers)), draw(st.booleans()))
+        elif kind == "map":
+            dtype = MapType(StringType(), atom, draw(st.booleans()))
         else:
-            dtype, strat = ATOMS[draw(st.integers(0, len(ATOMS) - 1))]
-            val = None if (nullable and draw(st.booleans())) else draw(strat)
-            fields.append(StructField(name, dtype, nullable))
-            values.append(val)
-    return StructType(fields), tuple(values)
+            dtype = atom
+        fields.append(StructField(name, dtype, nullable))
+    return StructType(fields)
+
+
+@st.composite
+def values_of(draw, dtype, nullable: bool):
+    """A value of ``dtype``: ``None`` in about half the draws when
+    ``nullable``."""
+    if nullable and draw(st.booleans()):
+        return None
+    if isinstance(dtype, StructType):
+        return tuple(draw(values_of(f.dataType, f.nullable)) for f in dtype.fields)
+    if isinstance(dtype, ArrayType):
+        elem = values_of(dtype.elementType, dtype.containsNull)
+        return draw(st.lists(elem, max_size=3))
+    if isinstance(dtype, MapType):
+        value = values_of(dtype.valueType, dtype.valueContainsNull)
+        return draw(st.dictionaries(NAMES, value, max_size=3))
+    return draw(ATOM_VALUES[type(dtype)])
+
+
+@st.composite
+def schema_and_row(draw, depth: int = 2, containers: bool = False):
+    """A random schema (see :func:`schemas`) plus one matching row."""
+    schema = draw(schemas(depth, containers))
+    return schema, draw(values_of(schema, False))
 
 
 def leaf_paths(schema: StructType, prefix=()):
@@ -87,7 +117,7 @@ HSET = settings(
 )
 
 
-@given(sr=schema_and_row())
+@given(sr=schema_and_row(containers=True))
 @HSET
 def test_select_star_identity(spark, sr):
     schema, row = sr
@@ -96,6 +126,56 @@ def test_select_star_identity(spark, sr):
         out = reshape(df, q)
         assert out.schema == df.schema
         assert out.collect() == df.collect()
+
+
+def ws_leaf_paths(schema: StructType, prefix=()):
+    """Leaves as withstructure addresses them: through records and
+    arrays of records (arrays are transparent to paths); a map is a
+    leaf."""
+    for f in schema.fields:
+        t = f.dataType
+        if isinstance(t, ArrayType):
+            t = t.elementType
+        if isinstance(t, StructType):
+            yield from ws_leaf_paths(t, (*prefix, f.name))
+        else:
+            yield (*prefix, f.name)
+
+
+def rebuilt(schema: StructType, base_nullable: bool = False) -> StructType:
+    """``schema`` as a withstructure rebuild of every field returns it.
+    A field read out of a nullable struct is nullable in Spark, so a
+    leaf, map or array under a nullable record (counted from its column,
+    or from its array element) comes back nullable; records and array
+    elements keep their own nullability. The reference keeps every
+    field's own nullability; ROADMAP lists the divergence."""
+    out = []
+    for f in schema.fields:
+        t, read_nullable = f.dataType, base_nullable or f.nullable
+        if isinstance(t, StructType):
+            out.append(StructField(f.name, rebuilt(t, read_nullable), f.nullable))
+        elif isinstance(t, ArrayType):
+            elem = rebuilt(t.elementType, t.containsNull)
+            out.append(StructField(f.name, ArrayType(elem, t.containsNull), read_nullable))
+        else:
+            out.append(StructField(f.name, t, read_nullable))
+    return StructType(out)
+
+
+@given(sr=schema_and_row(containers=True))
+@HSET
+def test_withstructure_every_leaf_is_identity(spark, sr):
+    """Selecting every leaf in schema order keeps the structure: the
+    rows come back unchanged, and the schema too, up to the nullability
+    widening ``rebuilt`` spells out."""
+    schema, row = sr
+    df = spark.createDataFrame([row], schema)
+    q = "SELECT " + ", ".join(
+        ".".join(f"`{seg}`" for seg in p) for p in ws_leaf_paths(schema)
+    ) + " withstructure"
+    out = reshape(df, q)
+    assert out.schema == rebuilt(schema)
+    assert out.collect() == df.collect()
 
 
 @given(sr=schema_and_row())

@@ -26,7 +26,7 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from scale_probe import build_probe_data  # noqa: E402  (sibling tool)
+from tools.scale_probe import build_probe_data  # noqa: E402
 
 
 def time_entry(spark, queries, name: str, sf_dir: str, passes: int = 2) -> float:
