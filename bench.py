@@ -6,20 +6,23 @@ Each query is forced end-to-end with a noop sink (full computation, no
 collect-to-driver, no disk write) — the number is the distributed plan's
 wall time, not serialization overhead.
 
-HEADLINE covers every BATCH entry in ``queries()``. The only exclusions
-(20) are entries whose wall time is not a batch-plan cost: the 9
-``streaming_*`` entries (micro-batch runner latency, not plan cost), the
-8 ``reshape_*`` entries (LocalRelation-backed schema-transform fixtures,
-sub-ms plans), the 2 avro roundtrip entries (tempdir write+read harness
-cost dominates), and ``embedding_near_dup`` — the deliberate exact
-all-pairs O(n^2) oracle baseline for the LSH path (76s at sf0.1,
-alpha~2 by construction, probed sf0.01->sf0.1 in
-bench_scale_probe.json; its scale twin ``embedding_near_dup_lsh`` IS
-benched, and the exact entry stays oracle-checked in queries()).
-Everything else is benched."""
+HEADLINE is every entry of ``queries()``, in registry order, except the
+entries whose cost is not a batch plan (``NON_BATCH_ENTRIES`` next to
+``queries()``, which gives the reason for each group) and
+``ORACLE_BASELINE``.
+
+Usage:
+    python bench.py                      # full run, writes bench_full.json
+    python bench.py NAME [NAME ...]      # time only NAME..., print their map
+    python bench.py --explain TAG NAME   # also write plans/r09/NAME_TAG.txt
+
+Named runs use the same methodology (:func:`time_entries`) and write no
+``bench_full.json``. ``--explain`` writes each entry's formatted plan as
+built, before execution, during the warmup pass."""
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -33,358 +36,14 @@ from avro_sql_spark.session import get_spark  # noqa: E402
 
 import __spark_entry__ as entry_mod  # noqa: E402
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q4_priority_delivery",
-    "q5_local_supplier_volume",
-    "q6_revenue_forecast",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_nation_year_profit",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_late_shipments",
-    "q13_order_count_distribution",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q16_supplier_part_count",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "q19_disjunctive_revenue",
-    "q20_excess_inventory_suppliers",
-    "q21_waiting_suppliers",
-    "q22_idle_rich_customers",
-    "window_topk_orders",
-    "rollup_order_priority",
-    "cube_part_stats",
-    "grouping_sets_sales",
-    "token_topk",
-    "customer_order_span",
-    "events_gap_fill",
-    "events_sliding_windows",
-    "events_rolling_hour",
-    "approx_distinct_events",
-    "incremental_dedup",
-    "unigram_logprob",
-    "chunk_documents",
-    "quantization_error",
-    "source_quality",
-    "stratified_take_lang",
-    "pmi_collocations",
-    "asof_latest_order",
-    "range_join_attribution",
-    "sessionize_events",
-    "events_hourly",
-    "json_props_stats",
-    "reshape_star_exclusion",
-    "reshape_array_project",
-    "text_profile",
-    "dedup_exact_keep",
-    "split_assignment",
-    "quality_shards_approx",
-    "pack_sequences",
-    "decontam_exact",
-    "decontam_ngram",
-    "gopher_filter_stats",
-    "winnow_overlap_pairs",
-    "ngram_jaccard_pairs",
-    "ngram_jaccard_capped",
-    "minhash_candidate_pairs",
-    "simhash_fingerprints",
-    "embedding_near_dup_lsh",
-    "ann_cosine_topk",
-    "multimodal_features",
-    "jaccard_pairs_prefix",
-    "hourly_anomalies",
-    "weighted_take",
-    "table_profile_approx",
-    "cdc_snapshot",
-    "bigram_logprob",
-    "vocab_coverage",
-    "langid_confusion",
-    "dup_span_stats",
-    "embedding_outliers",
-    "funnel_conversion",
-    "key_skew_report",
-    "stats_moments",
-    "orders_unpivot",
-    "salted_event_stats",
-    "char_entropy",
-    "retention_cohorts",
-    "fuzzy_part_pairs",
-    "balance_ranks",
-    "remove_dup_spans",
-    "embedding_covariance",
-    "embedding_pca",
-    "kll_quantiles",
-    "theta_user_overlap",
-    "sketch_rollup",
-    "heavy_users_sketch",
-    "bm25_search",
-    "copurchase_pairs",
-    "scd2_history",
-    "quality_expectations",
-    "snapshot_diff",
-    "value_histogram",
-    "copurchase_pagerank",
-    "zorder_layout_report",
-    "bloom_prefilter_join",
-    "kmeans_clusters",
-    "jaccard_dup_clusters",
-    "merge_upsert_snapshot",
-    "bpe_top_pairs",
-    "redact_pii_text",
-    "decontam_embedding",
-    "entity_clusters",
-    "embedding_correlation",
-    "zipf_fit",
-    "event_value_outliers",
-    "source_overlap",
-    "dsir_weights",
-    "epoch_plan",
-    "triangle_census",
-    "salted_join_enrich",
-    "skipgram_pairs",
-    "tf_cosine_pairs",
-    "ewma_hourly",
-    "quality_rank_fusion",
-    "cluster_representatives",
-    "chi2_lang_source",
-    "copurchase_components",
-    "skipping_effectiveness",
-    "event_transitions",
-    "label_communities",
-    "corpus_funnel",
-    "embedding_power_iter",
-    "semantic_dedup",
-    "gopher_repetition",
-    "ccnet_buckets",
-    "ks_length_drift",
-    "bpe_merges",
-    "bpe_fertility",
-    "compaction_plan",
-    "kcore_summary",
-    "heaps_curve",
-    "event_throttle_dedup",
-    "nearest_order_attribution",
-    "multiformat_roundtrip",
-    "char_mass_median",
-    "quality_calibration",
-    "approx_distinct_events_kmv",
-    "table_profile_kmv",
-    "quality_shards_sampled",
-    "decontam_containment",
-    "hard_negative_mining",
-    "jl_shortlist_recall",
-    "mmr_selection",
-    "copurchase_bfs",
-    "leakage_safe_split",
-    "forget_cascade",
-    "avro_evolution_roundtrip",
-    "count_min_heavy_hitters",
-    "twopass_median",
-    "incremental_agg_merge",
-    "copurchase_ppr",
-    "quantile_normalized_quality",
-    "source_cap_sample",
-    "kn_bigram_logprob",
-    "padding_efficiency",
-    "event_type_scc",
-    "near_dup_source_matrix",
-    "winsorized_event_stats",
-    "session_paths_topk",
-    "ann_ivf_pq",
-    "stratified_kfold",
-    "hilbert_layout_report",
-    "blocklist_quarantine",
-    "incremental_join_agg",
-    "pareto_value_report",
-    "fano_burstiness",
-    "source_kl_matrix",
-    "dup_cluster_size_histogram",
-    "join_size_sketch",
-    "cusum_drift",
-    "seasonal_naive_backtest",
-    "rfm_segments",
-    "position_attribution",
-    "dataset_card",
-    "ab_conversion_ztest",
-    "skipping_effectiveness_hilbert",
-    "equi_depth_histogram",
-    "disorder_audit",
-    "degree_assortativity",
-    "lexical_diversity",
-    "term_burstiness",
-    "interarrival_stats",
-    "user_entropy",
-    "supplier_hhi",
-    "markov_stationary",
-    "benford_audit",
-    "gini_value_concentration",
-    "kaplan_meier_conversion",
-    "log_odds_terms",
-    "heldout_nll",
-    "negative_sampling_table",
-    "weekday_hour_profile",
-    # new in r5
-    "embedding_energy_profile",
-    "doremi_weights",
-    "link_prediction_topk",
-    "mutual_information_report",
-    "cuped_adjusted_lift",
-    "theilsen_trend",
-    "seasonal_residual_outliers",
-    "key_locality_report",
-    "file_overlap_depth",
-    "cow_rewrite_plan",
-    "payload_dedup_stats",
-    "good_turing_vocab",
-    "typo_candidate_pairs",
-    "markov_next_event_backtest",
-    "score_decile_calibration",
-    "ann_mrr_lsh",
-    "textrank_keywords",
-    "conformal_interval_counts",
-    "bloom_fpr_audit",
-    "source_ks_matrix",
-    "decayed_user_value",
-    "selectivity_estimate_audit",
-    "retention_decay_fit",
-    "roc_auc_by_source",
-    "acf_hourly",
-    "shuffle_skew_audit",
-    "spearman_user_corr",
-    "srm_audit",
-    "local_clustering_curve",
-    "mann_whitney_matrix",
-    "cramers_v_report",
-    "simpson_event_diversity",
-    "hits_supplier_authority",
-    "eb_shrunk_rates",
-    "dp_count_release",
-    "entropy_rate_bigram",
-    "burrows_delta",
-    "did_lift",
-    "lorenz_curve_points",
-    "new_vs_returning_mix",
-    "repeat_purchase_interval",
-    "negbin_overdispersion",
-    "basket_affinity_lift",
-    "price_elasticity",
-    "runs_test_daily",
-    "embedding_isotropy",
-    "script_profile",
-    "posting_list_histogram",
-    "degree_powerlaw_fit",
-    "join_order_cost_audit",
-    "mad_outlier_days",
-    "community_modularity",
-    "markov_removal_attribution",
-    "sequence_pattern_support",
-    "referential_coverage_report",
-    "power_analysis_report",
-    "dim_broadcast_audit",
-    "session_bounce_report",
-    "neyman_allocation",
-    "kmeans_silhouette",
-    "tail_index_user_value",
-    "lm_interpolation_weights",
-    "weighted_reservoir_sample",
-    "diameter_double_sweep",
-    "attribution_window_sensitivity",
-    "vocab_gini",
-    "quantile_treatment_effect",
-    # r6: the remaining batch entries, so bench coverage = every batch
-    # entry and round-over-round perf is visible for all of them
-    "quality_shards",
-    "ann_recall",
-    "minhash_calibration",
-    "incremental_near_dup",
-    "ann_pq_topk",
-    "ann_recall_lsh",
-    "udtf_shingle_counts",
-    "bucketed_join_revenue",
-    "near_dup_clusters",
-    "simhash_candidate_pairs",
-    "sample_10pct",
-    "stratified_sample_lang",
-    "mixture_by_lang",
-    "redact_pii_stats",
-    "repetition_stats",
-    "winnow_fingerprints",
-    "tfidf_top_terms",
-    "take_exact",
-    # embedding_near_dup deliberately NOT here: exact O(n^2) oracle
-    # baseline, excluded per the module docstring (LSH twin is benched)
-    "ann_lsh_bucketed",
-    "ann_ivf",
-    "multimodal_profile",
-    "multimodal_frames",
-    "table_profile",
-    "variant_props_stats",
-    "curation_pipeline_e2e",
-    "embedding_centroids",
-    "dedup_exact_groups",
-    "anti_join_no_orders",
-    "intersect_brand_buyers",
-    "distinct_agg_segments",
-    "exists_big_spenders",
-    "except_urgent_buyers",
-    "scalar_functions",
-    "union_order_extremes",
-    "quantity_percentiles",
-    "customer_value_vs_global",
-    "orders_pivot_by_status",
-    # new in r6
-    "chao1_vocab_richness",
-    "poisson_bootstrap_ci",
-    "bh_fdr_report",
-    "psi_drift_report",
-    "salt_plan_report",
-    "jackknife_ratio_ci",
-    "capture_recapture_overlap",
-    "cochran_armitage_trend",
-    "split_half_reliability",
-    "partition_layout_advisor",
-    "max_drawdown_daily",
-    "ljung_box_hourly",
-    "lift_curve_points",
-    "length_lognormal_fit",
-    # new in r7
-    "kendall_tau_daily",
-    "page_hinkley_drift",
-    "gumbel_daily_max_fit",
-    "ses_backtest_daily",
-    "user_path_entropy",
-    "hoeffding_adequacy_report",
-    "mcnemar_gate_compare",
-    "template_prefix_report",
-    "robust_zscore_docs",
-    "quality_gate_pareto",
-    "odds_ratio_ci_report",
-    "changepoint_daily_mean",
-    "sprt_daily_audit",
-    "topk_spender_churn",
-    "cohens_kappa_gates",
-    "g2_keyness_terms",
-    # new in r8
-    "kruskal_wallis_nchars",
-    "grubbs_daily_outlier",
-    "durbin_watson_daily",
-    "ann_ndcg_ivf",
-    "wald_iv_estimate",
-    "propensity_stratified_effect",
-    "ngram_novelty_report",
-    "periodogram_hourly_cycle",
-    "embedding_drift_split",
-    "curriculum_plan",
-    "rake_keyphrases",
-    "brown_forsythe_nchars",
-    "hurst_rs_daily",
-    "obrien_fleming_monitor",
-]
+# the deliberate exact all-pairs O(n^2) oracle baseline for the LSH path
+# (76s at sf0.1, alpha~2 by construction, probed sf0.01->sf0.1 in
+# bench_scale_probe.json); its scale twin ``embedding_near_dup_lsh`` IS
+# benched, and the exact entry stays oracle-checked in queries()
+ORACLE_BASELINE = "embedding_near_dup"
+
+_UNBENCHED = entry_mod.NON_BATCH_ENTRIES | {ORACLE_BASELINE}
+HEADLINE = [name for name in entry_mod.queries() if name not in _UNBENCHED]
 
 
 def sweep_persisted_rdds(spark) -> int:
@@ -403,43 +62,90 @@ def sweep_persisted_rdds(spark) -> int:
     return len(rdds)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-    spark = get_spark("avro-sql-spark-bench", cpus=cpus, shuffle_partitions=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+def _write_explain(df, name: str, tag: str) -> None:
+    out_dir = os.path.join(ROOT, "plans", "r09")
+    os.makedirs(out_dir, exist_ok=True)
+    with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
+        f.write(df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"))
 
-    queries = entry_mod.queries()
-    # warmup pass: JIT/codegen/parquet-footer caches - report steady state
-    for name in HEADLINE:
+
+def time_entries(
+    spark, queries, names, sf_dir: str, explain_tag: str | None = None
+) -> dict[str, float]:
+    """Bench methodology for ``names``: one warmup pass (JIT/codegen/
+    parquet-footer caches — report steady state), then two timed passes,
+    keeping each entry's minimum: single-machine runs have multi-second
+    scheduler/GC noise that would otherwise dominate.
+
+    The timed window INCLUDES DataFrame construction: iterative entries
+    (pagerank, k-means, connected components) run real jobs eagerly at
+    construction time (per-round localCheckpoint/collect), so timing
+    only the final write would understate them by orders of magnitude.
+
+    Caches are cold per entry: operators that persist() internally
+    (simhash pairs, dsir) must not leave frames resident to skew LATER
+    entries' memory, nor hit their own materialized cache from the
+    previous pass — each timing is the entry's real standalone cost.
+    The RDD sweep additionally drops localCheckpoint blocks (clearCache
+    never does). Both run OUTSIDE the timed window.
+
+    ``explain_tag`` writes each warmup frame's formatted plan, as built
+    and before execution, to ``plans/r09/<name>_<tag>.txt``."""
+
+    def reset() -> None:
         spark.catalog.clearCache()
         sweep_persisted_rdds(spark)
-        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # two timed passes, keep the per-query minimum: single-machine runs
-    # have multi-second scheduler/GC noise that would otherwise dominate.
-    # The timed window INCLUDES DataFrame construction: iterative
-    # entries (pagerank, k-means, connected components) run real jobs
-    # eagerly at construction time (per-round localCheckpoint/collect),
-    # so timing only the final write would understate them by orders of
-    # magnitude.
+
+    for name in names:
+        reset()
+        df = queries[name](spark, sf_dir)
+        if explain_tag:
+            _write_explain(df, name, explain_tag)
+        df.write.format("noop").mode("overwrite").save()
     timings: dict[str, float] = {}
     for _ in range(2):
-        for name in HEADLINE:
-            # cold caches per query: operators that persist() internally
-            # (simhash pairs, dsir) must not leave frames resident to
-            # skew LATER queries' memory, nor hit their own materialized
-            # cache from the previous pass — each timing is the
-            # query's real standalone cost. The RDD sweep additionally
-            # drops localCheckpoint blocks (clearCache never does).
-            spark.catalog.clearCache()
-            sweep_persisted_rdds(spark)
+        for name in names:
+            reset()
             start = time.perf_counter()
             df = queries[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             elapsed = round(time.perf_counter() - start, 3)
             timings[name] = min(timings.get(name, elapsed), elapsed)
+    return timings
+
+
+def main() -> None:
+    parser = argparse.ArgumentParser(
+        description="Time registry entries with the bench methodology."
+    )
+    parser.add_argument(
+        "names", nargs="*", metavar="NAME",
+        help="time only these entries and print their map "
+        "(default: the full HEADLINE run, written to bench_full.json)",
+    )
+    parser.add_argument(
+        "--explain", metavar="TAG",
+        help="also write plans/r09/<name>_<TAG>.txt for each entry",
+    )
+    args = parser.parse_args()
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
+    queries = entry_mod.queries()
+    unknown = [n for n in args.names if n not in queries]
+    if unknown:
+        parser.error(f"not registry entries: {', '.join(unknown)}")
+    spark = get_spark("avro-sql-spark-bench", cpus=cpus, shuffle_partitions=cpus)
+    spark.sparkContext.setLogLevel("ERROR")
+
+    timings = time_entries(
+        spark, queries, args.names or HEADLINE, sf_dir, args.explain
+    )
+    if args.names:
+        print(json.dumps(timings, indent=1))
+        return
 
     total = round(sum(timings.values()), 3)
     slowest = dict(

@@ -1,6 +1,7 @@
 """Bench-regression gate over the COMMITTED artifacts: the current
 ``bench_full.json`` must not show any per-query time >1.5x (and >+1s)
-its entry in the previous round's frozen ``bench_full_r*.json`` AFTER
+its entry in the previous round's frozen ``bench_full_r*.json`` at
+the same ``(sf, cpus)`` AFTER
 normalizing out the machine-speed drift between the two runs (the
 median per-entry ratio — see tools/check_bench_regression.py for why a
 fixed threshold cannot work on a box whose absolute speed moves
@@ -16,7 +17,10 @@ import glob
 import json
 import os
 
+import pytest
+
 from tools.check_bench_regression import (
+    config,
     find_regressions,
     latest_baseline,
     load_waivers,
@@ -26,26 +30,36 @@ from tools.check_bench_regression import (
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _frozen() -> list[tuple[str, dict]]:
+    return [
+        (p, json.load(open(p)))
+        for p in sorted(glob.glob(os.path.join(ROOT, "bench_full_r*.json")))
+    ]
+
+
 def test_committed_bench_within_budget():
-    # latest_baseline(new) skips any frozen artifact identical to the
-    # map under test, so freezing bench_full_r{N}.json cannot
-    # grandfather the regressions it carries (the r6 hole)
+    # latest_baseline(new) picks the newest frozen map at the same
+    # (sf, cpus) and skips any identical to the map under test, so
+    # freezing bench_full_r{N}.json cannot grandfather the regressions
+    # it carries (the r6 hole)
     #
     # The DRIVER overwrites bench_full.json after each round snapshot
     # with its own contended re-run (join-heavy entries inflate
-    # 1.6-1.8x under that contention — measured in r7). Those numbers
-    # are not the builder's measurement, so when bench_full.json
-    # matches no frozen bench_full_r*.json map (driver refresh
-    # detected), the gate judges the newest FROZEN artifact — which
-    # only the builder writes — against its prior instead.
-    new = json.load(open(os.path.join(ROOT, "bench_full.json")))["queries"]
-    frozen = sorted(glob.glob(os.path.join(ROOT, "bench_full_r*.json")))
-    frozen_maps = [json.load(open(p))["queries"] for p in frozen]
-    if frozen_maps and new not in frozen_maps:
-        new = frozen_maps[-1]
-    base = json.load(open(latest_baseline(new)))["queries"]
+    # 1.6-1.8x under that contention — measured in r7), at c8 as well
+    # as c32. Those numbers are not the builder's measurement, so when
+    # bench_full.json matches no frozen bench_full_r*.json map (driver
+    # refresh detected), the gate judges the newest FROZEN artifact —
+    # which only the builder writes — against its prior instead.
+    new = json.load(open(os.path.join(ROOT, "bench_full.json")))
+    frozen = [doc for _, doc in _frozen()]
+    if frozen and new["queries"] not in [doc["queries"] for doc in frozen]:
+        new = frozen[-1]
+    base = json.load(open(latest_baseline(new)))
     waivers = load_waivers()
-    regs = [r for r in find_regressions(new, base) if r[0] not in waivers]
+    regs = [
+        r for r in find_regressions(new["queries"], base["queries"])
+        if r[0] not in waivers
+    ]
     assert not regs, "bench regressions vs committed baseline: " + ", ".join(
         f"{n} {b:.2f}s->{t:.2f}s" for n, b, t in regs
     )
@@ -89,18 +103,18 @@ def test_gate_red_on_regression_hiding_under_drift():
 
 def test_latest_baseline_skips_self_identical_artifact():
     # the newest frozen artifact IS the map under test -> the gate
-    # must select the prior round's artifact, not self-compare
-    import tools.check_bench_regression as g
+    # must select the prior same-config artifact, not self-compare
+    frozen = _frozen()
+    newest_path, newest = frozen[-1]
+    prior = [p for p, doc in frozen[:-1] if config(doc) == config(newest)]
+    assert prior, "no same-config baseline for the newest frozen map"
+    assert latest_baseline(newest) == prior[-1]
 
-    newest = g.latest_baseline()
-    new = json.load(open(newest))["queries"]
-    prior = g.latest_baseline(new)
-    cands = sorted(
-        p
-        for p in os.listdir(ROOT)
-        if p.startswith("bench_full_r") and p.endswith(".json")
-    )
-    if len(cands) >= 2:
-        assert os.path.basename(prior) == cands[-2]
-    else:
-        assert prior == newest
+
+def test_latest_baseline_refuses_other_configs():
+    # a map measured at another (sf, cpus) has no baseline: the gate
+    # raises instead of comparing across configs or passing vacuously
+    _, newest = _frozen()[-1]
+    other = dict(newest, cpus=newest["cpus"] + 1)
+    with pytest.raises(SystemExit, match="no committed"):
+        latest_baseline(other)

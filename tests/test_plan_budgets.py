@@ -1,9 +1,10 @@
-"""Plan-shape regression guard: every bench headline query's physical
-plan is budgeted (shuffle exchanges, sort-merge joins, cartesian
-products) from a reviewed snapshot — an edit that silently adds a
-shuffle or degrades a broadcast join to SMJ fails here before it costs
-anything at scale. Covers every BATCH entry (streaming/reshape/roundtrip
-exempt — see the generator's docstring). Regenerate tests/plan_budgets.json
+"""Plan-shape regression guard: every batch entry's physical plan is
+budgeted (shuffle exchanges, round-robin spread exchanges, sort-merge
+joins, cartesian products) from a reviewed snapshot — an edit that
+silently adds a shuffle or degrades a broadcast join to SMJ fails here
+before it costs anything at scale. Covers every entry outside
+``__spark_entry__.NON_BATCH_ENTRIES`` (tests/test_entry_index.py pins
+that). Regenerate tests/plan_budgets.json
 deliberately when a plan change is intentional:
 ``python tools/gen_plan_budgets.py``.
 """

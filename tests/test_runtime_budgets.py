@@ -18,31 +18,11 @@ import os
 import pytest
 
 import __spark_entry__ as entry_mod
+from tools.gen_runtime_budgets import measure
 
-SF = "/root/testdata/sf0.001"
 BUDGETS = json.load(
     open(os.path.join(os.path.dirname(__file__), "runtime_stage_budgets.json"))
 )
-
-
-def _measure(spark, name, attempt):
-    sc = spark.sparkContext
-    spark.catalog.clearCache()
-    group = f"pytest-budget-{name}-{attempt}"
-    sc.setJobGroup(group, name)
-    try:
-        df = entry_mod.queries()[name](spark, SF)
-        df.write.format("noop").mode("overwrite").save()
-    finally:
-        sc.setJobGroup("pytest-budget-idle", "idle")
-    st = sc.statusTracker()
-    jobs = st.getJobIdsForGroup(group)
-    stages = set()
-    for j in jobs:
-        info = st.getJobInfo(j)
-        if info is not None:
-            stages.update(info.stageIds)
-    return max(0, len(stages) - len(jobs)), len(jobs), len(stages)
 
 
 @pytest.mark.parametrize("name", sorted(BUDGETS))
@@ -55,10 +35,11 @@ def test_runtime_stages_within_budget(spark, name):
     # an iterative operator costs O(rounds) ~ 10+ extra stages on EVERY
     # run and still trips both measurements.
     cap = BUDGETS[name]["shuffle_stages"] + 4
-    got, jobs, stages = _measure(spark, name, 1)
-    if got > cap:
-        got, jobs, stages = _measure(spark, name, 2)
-    assert got <= cap, (
-        f"{name}: executed shuffle-map stages regressed {cap} -> {got} "
-        f"({jobs} jobs, {stages} stages)"
+    fn = entry_mod.queries()[name]
+    got = measure(spark, name, fn, 1)
+    if got["shuffle_stages"] > cap:
+        got = measure(spark, name, fn, 2)
+    assert got["shuffle_stages"] <= cap, (
+        f"{name}: executed shuffle-map stages regressed {cap} -> "
+        f"{got['shuffle_stages']} ({got['jobs']} jobs, {got['stages']} stages)"
     )

@@ -34,7 +34,9 @@ visible in review.
 Usage:
     python tools/check_bench_regression.py [new_json] [baseline_json]
 
-Defaults: bench_full.json vs the newest committed bench_full_r*.json.
+Defaults: bench_full.json vs the newest committed bench_full_r*.json
+measured at the same ``(sf, cpus)``; maps from different configs are
+refused.
 tests/test_bench_regression.py runs the same comparison on the two
 COMMITTED artifacts, so a regressed bench cannot be committed green.
 """
@@ -89,27 +91,35 @@ def find_regressions(
     return out
 
 
-def latest_baseline(new_queries: dict[str, float] | None = None) -> str:
-    """Newest committed ``bench_full_r*.json`` — EXCLUDING any whose
-    query map is identical to the map under test. Without the
-    exclusion the gate has a freeze-ordering hole: the moment a new
-    round's map is committed it becomes the newest baseline, the gate
-    compares the map against itself, and any regression it carried is
-    grandfathered (this happened to quality_calibration in r6). With
-    it, the gate keeps judging a freshly-frozen map against the PRIOR
-    round until a genuinely newer measurement exists."""
-    cands = sorted(glob.glob(os.path.join(ROOT, "bench_full_r*.json")))
-    if not cands:
-        raise SystemExit("no committed bench_full_r*.json baseline found")
-    if new_queries is not None:
-        for path in reversed(cands):
-            try:
-                queries = json.load(open(path)).get("queries")
-            except (OSError, ValueError):
-                continue
-            if queries != new_queries:
-                return path
-    return cands[-1]
+def config(doc: dict) -> tuple:
+    """The ``(sf, cpus)`` a bench map was measured at: maps from
+    different configs are never compared (a c8 map against a c32
+    baseline reads as a uniform slowdown on one side and hides or
+    invents regressions on the other)."""
+    return doc.get("sf"), doc.get("cpus")
+
+
+def latest_baseline(new: dict) -> str:
+    """Newest committed ``bench_full_r*.json`` with the same ``(sf,
+    cpus)`` as the bench document ``new`` — EXCLUDING any whose query
+    map is identical to the map under test. Without the exclusion the
+    gate has a freeze-ordering hole: the moment a new round's map is
+    committed it becomes the newest baseline, the gate compares the map
+    against itself, and any regression it carried is grandfathered
+    (this happened to quality_calibration in r6). With it, the gate
+    keeps judging a freshly-frozen map against the PRIOR round until a
+    genuinely newer measurement exists. Raises when no such baseline
+    exists: the gate never passes by finding nothing to compare."""
+    for path in sorted(glob.glob(os.path.join(ROOT, "bench_full_r*.json")),
+                       reverse=True):
+        with open(path) as f:
+            doc = json.load(f)
+        if config(doc) == config(new) and doc["queries"] != new["queries"]:
+            return path
+    raise SystemExit(
+        "no committed bench_full_r*.json baseline at sf=%s cpus=%s"
+        % config(new)
+    )
 
 
 def load_waivers() -> dict[str, str]:
@@ -123,9 +133,15 @@ def main() -> int:
     new_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
         ROOT, "bench_full.json"
     )
-    new = json.load(open(new_path))["queries"]
-    base_path = sys.argv[2] if len(sys.argv) > 2 else latest_baseline(new)
-    base = json.load(open(base_path))["queries"]
+    new_doc = json.load(open(new_path))
+    base_path = sys.argv[2] if len(sys.argv) > 2 else latest_baseline(new_doc)
+    base_doc = json.load(open(base_path))
+    if config(base_doc) != config(new_doc):
+        raise SystemExit(
+            f"refusing to compare sf/cpus {config(new_doc)} against "
+            f"{config(base_doc)}"
+        )
+    new, base = new_doc["queries"], base_doc["queries"]
     drift = speed_drift(new, base)
     waivers = load_waivers()
     regs = [r for r in find_regressions(new, base) if r[0] not in waivers]

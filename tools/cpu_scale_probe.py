@@ -11,34 +11,21 @@ overhead-bound at sf1.
 Usage:
     python tools/cpu_scale_probe.py [entry ...]
 
-Defaults to the slowest 20 of the committed bench_full.json. Writes
+Timing is bench.py's methodology (``bench.time_entries``). Defaults to
+the slowest 20 of the committed bench_full.json. Writes
 bench_cpu_probe_r09.json (merge semantics like scale_probe).
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from tools.scale_probe import build_probe_data  # noqa: E402
-
-
-def time_entry(spark, queries, name: str, sf_dir: str, passes: int = 2) -> float:
-    best = math.inf
-    for _ in range(passes):
-        spark.catalog.clearCache()
-        start = time.perf_counter()
-        queries[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        best = min(best, time.perf_counter() - start)
-    return round(best, 3)
 
 
 def main() -> None:
@@ -58,6 +45,7 @@ def main() -> None:
         build_probe_data("/root/testdata/sf0.1", dst)
 
     from avro_sql_spark.session import get_spark
+    from bench import time_entries
 
     import __spark_entry__ as entry_mod
 
@@ -67,11 +55,7 @@ def main() -> None:
         spark = get_spark(f"cpu-probe-{cpus}", cpus=cpus, shuffle_partitions=cpus)
         spark.sparkContext.setLogLevel("ERROR")
         for name in names:
-            # warmup at sf0.1 (JIT/codegen), timed at the probe scale
-            queries[name](spark, "/root/testdata/sf0.1").write.format(
-                "noop"
-            ).mode("overwrite").save()
-            t = time_entry(spark, queries, name, dst)
+            t = time_entries(spark, queries, [name], dst)[name]
             results[name][f"c{cpus}_sec"] = t
             print(f"c{cpus} {name}: {t:.2f}s", flush=True)
         spark.stop()
@@ -90,7 +74,8 @@ def main() -> None:
                     "slow-tier entries timed on the 10x key-shifted probe "
                     "data (tools/scale_probe.py generator) at local[32] "
                     "vs local[8], shuffle.partitions = core count, "
-                    "noop sink, min of 2 passes after an sf0.1 warmup. "
+                    "noop sink, bench.time_entries (min of 2 passes "
+                    "after a warmup at the probe scale). "
                     "ratio_c8_over_c32 ~4 = compute-bound and "
                     "parallelizing; ~1 = still overhead-bound at sf1."
                 ),

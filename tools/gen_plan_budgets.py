@@ -6,12 +6,8 @@ scale.
 
 Counting matches tests/test_plan_budgets.py exactly: cpus=4,
 shuffle_partitions=4, sf0.001, clearCache before each entry, counts over
-``executedPlan().toString()``. Exempt (never budgeted here):
-
-- ``streaming_*``  — plans come from the streaming runner, not executedPlan;
-- reshape / avro-roundtrip entries whose frame is a LocalRelation or a
-  tempdir-lifetime materialization (their "plan" is an artifact of the
-  harness, not a scale shape).
+``executedPlan().toString()``. Exempt (never budgeted here): the
+registry's ``NON_BATCH_ENTRIES``, whose cost is not a batch plan.
 
 Iterative/checkpointed entries ALSO carry a listener-level runtime budget
 (tools/gen_runtime_budgets.py) because localCheckpoint truncates the plan
@@ -66,6 +62,10 @@ def plan_metrics(plan: str) -> dict[str, int]:
         + plan.count("Exchange rangepartitioning"),
         "sort_merge_joins": plan.count("SortMergeJoin"),
         "global_windows": gw,
+        # repartition(n) with no key — the scan-spread exchange; kept
+        # out of ``exchanges`` so that key's frozen values stay
+        # comparable across rounds
+        "roundrobin_exchanges": plan.count("Exchange RoundRobinPartitioning"),
     }
 OUT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -73,24 +73,14 @@ OUT = os.path.join(
     "plan_budgets.json",
 )
 
-EXEMPT_PREFIXES = ("streaming_", "reshape_")
-EXEMPT = {
-    "avro_roundtrip_reshape",
-    "avro_fallback_roundtrip",
-    "avro_evolution_roundtrip",
-    "multiformat_roundtrip",
-}
-
 
 def main() -> None:
     spark = get_spark("plan-budget-gen", cpus=4, shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry_mod.queries()
     budgets: dict[str, dict[str, int]] = {}
-    skipped = []
     for name, fn in queries.items():
-        if name.startswith(EXEMPT_PREFIXES) or name in EXEMPT:
-            skipped.append(name)
+        if name in entry_mod.NON_BATCH_ENTRIES:
             continue
         spark.catalog.clearCache()
         df = fn(spark, SF)
@@ -100,7 +90,8 @@ def main() -> None:
     with open(OUT, "w") as f:
         json.dump(dict(sorted(budgets.items())), f, indent=1, sort_keys=True)
         f.write("\n")
-    print(f"\nwrote {len(budgets)} budgets to {OUT}; exempt: {len(skipped)}")
+    print(f"\nwrote {len(budgets)} budgets to {OUT}; "
+          f"exempt: {len(entry_mod.NON_BATCH_ENTRIES)}")
 
 
 if __name__ == "__main__":

@@ -17,6 +17,11 @@ sf0.001 — identical to tests/conftest.py), so regenerate deliberately
 with ``python tools/gen_runtime_budgets.py`` when an intentional plan
 change lands. Each entry is measured twice and the max is kept (AQE
 may fold a stage between runs; the budget is an upper bound).
+
+The budgeted entries are the keys already committed in that file: the
+iterative/checkpointed entries that run jobs eagerly at construction
+behind localCheckpoint / collect bounds. To budget a new one, add its
+key (any value) and regenerate.
 """
 
 from __future__ import annotations
@@ -33,98 +38,11 @@ import __spark_entry__ as entry_mod  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
-# Every registered entry that runs jobs eagerly at construction behind
-# localCheckpoint / collect bounds (the static plan budget sees only
-# the post-checkpoint tail for these).
-ITERATIVE_ENTRIES = [
-    "corpus_funnel",
-    "kcore_summary",
-    "bpe_merges",
-    "bpe_top_pairs",
-    "bpe_fertility",
-    "salted_join_enrich",
-    "jaccard_dup_clusters",
-    "copurchase_components",
-    "copurchase_pagerank",
-    "label_communities",
-    "kmeans_clusters",
-    "entity_clusters",
-    "semantic_dedup",
-    "embedding_power_iter",
-    "embedding_covariance",
-    "embedding_correlation",
-    "triangle_census",
-    "incremental_near_dup",
-    "mmr_selection",
-    "copurchase_bfs",
-    "leakage_safe_split",
-    "copurchase_ppr",
-    "event_type_scc",
-    "dup_cluster_size_histogram",
-    "ann_ivf_pq",
-    "markov_stationary",
-    # global_rank / exact_ntile consumers: the rank device localCheckpoints
-    # its ranged frame (correctness — see curation.global_rank docstring),
-    # so their static plan budgets see only the post-checkpoint tail
-    "heaps_curve",
-    "zipf_fit",
-    "quality_shards",
-    "quality_shards_sampled",
-    "quality_rank_fusion",
-    "quantile_normalized_quality",
-    "rfm_segments",
-    "equi_depth_histogram",
-    "gini_value_concentration",
-    "pareto_value_report",
-    "skipping_effectiveness",
-    "skipping_effectiveness_hilbert",
-    # argmax-by-filter over a checkpointed bounded aggregate
-    "q15_top_supplier",
-    # internal bounded counts frame localCheckpointed (storage-leak fix)
-    "seasonal_naive_backtest",
-    # r5: exact_ntile consumers + bounded-frame localCheckpoint users
-    "key_locality_report",
-    "file_overlap_depth",
-    "cow_rewrite_plan",
-    "mutual_information_report",
-    "theilsen_trend",
-    "seasonal_residual_outliers",
-    "score_decile_calibration",
-    "textrank_keywords",
-    "conformal_interval_counts",
-    "bloom_fpr_audit",
-    "selectivity_estimate_audit",
-    # r5 continuation: compact-forward checkpoints + rank-device consumer
-    "local_clustering_curve",
-    "spearman_user_corr",
-    "hits_supplier_authority",
-    "burrows_delta",
-    "lorenz_curve_points",
-    "degree_powerlaw_fit",
-    "join_order_cost_audit",
-    "mad_outlier_days",
-    "community_modularity",
-    "kmeans_silhouette",
-    "tail_index_user_value",
-    "lm_interpolation_weights",
-    "diameter_double_sweep",
-    "vocab_gini",
-    "quantile_treatment_effect",
-    # r6: exact_ntile consumers + bounded-frame localCheckpoint users
-    "psi_drift_report",
-    "jackknife_ratio_ci",
-    "cochran_armitage_trend",
-    "ljung_box_hourly",
-    "lift_curve_points",
-    # r7: day-frame / template-frame localCheckpoint users
-    "kendall_tau_daily",
-    "page_hinkley_drift",
-    "ses_backtest_daily",
-    "template_prefix_report",
-    "changepoint_daily_mean",
-    "sprt_daily_audit",
-    "topk_spender_churn",
-]
+OUT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "tests",
+    "runtime_stage_budgets.json",
+)
 
 
 def measure(spark, name: str, fn, run: int) -> dict[str, int]:
@@ -154,21 +72,18 @@ def main() -> None:
     spark = get_spark("runtime-budgets", cpus=4, shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry_mod.queries()
+    with open(OUT) as f:
+        names = sorted(json.load(f))
     budgets: dict[str, dict[str, int]] = {}
-    for name in ITERATIVE_ENTRIES:
+    for name in names:
         runs = [measure(spark, name, queries[name], r) for r in (1, 2)]
         budgets[name] = {
             k: max(r[k] for r in runs) for k in ("jobs", "stages", "shuffle_stages")
         }
         print(name, budgets[name], flush=True)
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "tests",
-        "runtime_stage_budgets.json",
-    )
-    with open(out, "w") as f:
+    with open(OUT, "w") as f:
         json.dump(budgets, f, indent=1, sort_keys=True)
-    print("wrote", out)
+    print("wrote", OUT)
 
 
 if __name__ == "__main__":

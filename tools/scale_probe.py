@@ -19,7 +19,10 @@ the duplicate-heavy worst case, which upper-bounds the honest cost.
 Usage:
     python tools/scale_probe.py [entry ...]
 
-Defaults to the slowest-10 of the committed bench_full.json. MERGES
+Each scale is timed with bench.py's methodology (``bench.time_entries``:
+warmup, then min of 2 passes, caches and pinned RDDs dropped outside
+the timed window). Defaults to the slowest-10 of the committed
+bench_full.json. MERGES
 into bench_scale_probe.json (re-probing an entry overwrites its row;
 entries not named are preserved): per-entry sf0.1 time, sf1.0 time,
 ratio, and the log-log scaling exponent alpha (t ~ data^alpha;
@@ -37,7 +40,6 @@ import json
 import math
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -98,18 +100,6 @@ def build_probe_data(src: str, dst: str) -> None:
         print(f"  {t}: {base.num_rows} -> {out.num_rows} rows", flush=True)
 
 
-def time_entry(spark, queries, name: str, sf_dir: str) -> float:
-    best = math.inf
-    for _ in range(2):
-        spark.catalog.clearCache()
-        start = time.perf_counter()
-        queries[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        best = min(best, time.perf_counter() - start)
-    return round(best, 3)
-
-
 def main() -> None:
     src = "/root/testdata/sf0.1"
     dst = os.environ.get("SPARK_GRAFT_PROBE_DIR", "/tmp/sfprobe10")
@@ -128,6 +118,7 @@ def main() -> None:
         build_probe_data(src, dst)
 
     from avro_sql_spark.session import get_spark
+    from bench import time_entries
 
     import __spark_entry__ as entry_mod
 
@@ -142,12 +133,8 @@ def main() -> None:
         else:
             lo, hi = src, dst
             keys = ("sf0.1_sec", "sf1.0_sec")
-        # warmup at small scale (JIT/codegen), then timed at both scales
-        queries[name](spark, lo).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        t_small = time_entry(spark, queries, name, lo)
-        t_big = time_entry(spark, queries, name, hi)
+        t_small = time_entries(spark, queries, [name], lo)[name]
+        t_big = time_entries(spark, queries, [name], hi)[name]
         ratio = round(t_big / t_small, 3) if t_small > 0 else None
         alpha = (
             round(math.log(t_big / t_small) / math.log(FACTOR), 3)
