@@ -2819,11 +2819,10 @@ def _copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             damping=0.85,
             round_to=8,
             # symmetric edge list: every node has an out-edge, so the
-            # per-iteration dangling-mass pass is provably a no-op
+            # per-iteration dangling-mass pass is provably a no-op, and
+            # with one consumer per round every checkpoint is deferred
+            # to the one final action
             redistribute_dangling=False,
-            # single consumer per round (no dangling pass) -> linear
-            # plan depth; defer checkpoints to the one final action
-            eager_checkpoint=False,
         )
         .select(F.col("node").alias("part"), F.col("pr").alias("pr"))
         .orderBy("part")
@@ -4889,43 +4888,41 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # reshape_primitive_container never plan and stay put). They
     # replace the first 8 r7 statistics entries, swept green in
     # CORRECTNESS_r09. ---
-    # --- r9 window (positions 8-49), per the head-sweep rule: 8 of the
-    # 16 r7 statistics operators + 14 r8 operators never swept before
-    # r9 (positions 8-29), then 20 entries whose code changed in
-    # r9 commits be3eaa4/06e9b28/3d369c9/0f676ec/41e0558 (loop unpersist ordering,
-    # fused recall pass, hilbert one-expression fold, bloom probe-all
-    # rewrite, tf-cosine anti-join cap, corpus_funnel eager pins,
-    # compacted-scan spread) — all verified bit-strict against the
-    # DuckDB oracle at sf0.001/0.01/0.1 locally; the driver row is the
-    # re-verification. CODE FROZEN until CORRECTNESS_r09 lands. The
-    # reorder is by NAME over the literal dict above so no entry can be
-    # added, dropped, or renamed by the rotation itself. ---
+    # --- graph/loop window (positions 8-35), per the head-sweep rule:
+    # the 25 entries whose code path changed with the shared graph
+    # blocks (_undirected/_degrees/_closed_wedges), the dropped
+    # column-name options and the RoundPins retire rule, then ann_ivf,
+    # ann_ivf_pq and ann_pq_topk (ivf_topk gained centroids= in r9; not
+    # swept since). They displace the 8 r7 statistics entries and
+    # 7 of the r8-new block, all swept green in CORRECTNESS_r09.
+    # Positions 36-49 keep the rest of the r9 window, also green there.
+    # The reorder is by NAME over the literal dict above so no entry can
+    # be added, dropped, or renamed by the rotation itself. ---
     head = [
         # reshape planner now emits SQL text (re-verification rows)
         "reshape_flat_rename", "reshape_star_exclusion",
         "reshape_nested_path", "reshape_nested_star",
         "reshape_withstructure", "reshape_array_project",
         "reshape_map_project", "reshape_dup_names",
-        # never driver-checked: r7 statistics block
-        "robust_zscore_docs",
-        "quality_gate_pareto", "odds_ratio_ci_report",
-        "changepoint_daily_mean", "sprt_daily_audit", "topk_spender_churn",
-        "cohens_kappa_gates", "g2_keyness_terms",
-        # never driver-checked: r8-new block
-        "kruskal_wallis_nchars", "grubbs_daily_outlier",
-        "durbin_watson_daily", "ann_ndcg_ivf", "wald_iv_estimate",
-        "propensity_stratified_effect", "ngram_novelty_report",
-        "periodogram_hourly_cycle", "embedding_drift_split",
-        "curriculum_plan", "rake_keyphrases", "brown_forsythe_nchars",
-        "hurst_rs_daily", "obrien_fleming_monitor",
-        # r9 code-changed entries (re-verification rows)
-        "ann_recall", "bloom_fpr_audit", "skipping_effectiveness_hilbert",
-        "hilbert_layout_report", "tf_cosine_pairs", "corpus_funnel",
-        "kcore_summary", "copurchase_pairs", "degree_assortativity",
+        # graph blocks / RoundPins / dropped options (re-verification)
+        "corpus_funnel", "kcore_summary", "degree_assortativity",
         "copurchase_components", "copurchase_bfs", "copurchase_pagerank",
         "markov_removal_attribution", "bpe_merges", "bpe_fertility",
         "jaccard_dup_clusters", "triangle_census", "link_prediction_topk",
-        "event_type_scc", "poisson_bootstrap_ci",
+        "event_type_scc", "cluster_representatives", "community_modularity",
+        "copurchase_ppr", "degree_powerlaw_fit", "diameter_double_sweep",
+        "dup_cluster_size_histogram", "entity_clusters", "label_communities",
+        "leakage_safe_split", "local_clustering_curve", "markov_stationary",
+        "near_dup_clusters",
+        # not swept since ivf_topk gained centroids=
+        "ann_ivf", "ann_ivf_pq", "ann_pq_topk",
+        # rest of the r9 window (green in CORRECTNESS_r09)
+        "periodogram_hourly_cycle",
+        "embedding_drift_split", "curriculum_plan", "rake_keyphrases",
+        "brown_forsythe_nchars", "hurst_rs_daily", "obrien_fleming_monitor",
+        "ann_recall", "bloom_fpr_audit", "skipping_effectiveness_hilbert",
+        "hilbert_layout_report", "tf_cosine_pairs", "copurchase_pairs",
+        "poisson_bootstrap_ci",
     ]
     assert len(head) == 50 and len(set(head)) == 50
     return {n: base[n] for n in head} | {

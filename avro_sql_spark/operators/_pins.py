@@ -1,4 +1,4 @@
-"""RDD-level unpersist for localCheckpoint-ed frames.
+"""Round-frame pins for the iterative loops, retired by one rule.
 
 ``DataFrame.unpersist()`` only removes CACHE-MANAGER entries (plans
 registered via ``.cache()``/``.persist()``); a ``localCheckpoint``'s
@@ -6,18 +6,25 @@ blocks live on a persisted RDD referenced by a ``LogicalRDD`` leaf, so
 ``unpersist()`` on the checkpointed frame is a silent no-op and the
 blocks stay pinned until Python GC + ContextCleaner get around to
 them. The iterative loops here (BFS, path-doubling SCC, star-CC, BPE,
-PageRank's eager mode, CC label propagation) retire one superseded
-round frame per round; dropping those blocks deterministically bounds
-executor storage at ~2 rounds instead of growing with round count.
+PageRank's dangling mode, CC label propagation, Markov removal
+attribution) pin one or more frames per round; dropping the
+superseded ones deterministically bounds executor storage at ~2
+rounds instead of growing with round count.
 
-CONTRACT: call this only on a frame that (a) came straight from
-``localCheckpoint()`` (its analyzed plan is the LogicalRDD — no
-operators on top), and (b) has NO remaining consumer: a locally
-checkpointed RDD's lineage is truncated, so its blocks are
-unrecoverable after unpersisting (Spark logs exactly that warning).
-The safe ordering is dedup.py's materialize-then-unpersist: the
-action that materializes round N's checkpoint is the last read of
-round N-1's frame, THEN round N-1 is retired.
+THE RULE (:class:`RoundPins`): a loop pins its round frames through
+``pin`` and calls ``materialized()`` once per round, after the round's
+LAST action. That action computed every frame pinned since the
+previous call, and those frames were the last readers of everything
+pinned before the previous call — so exactly those older frames are
+unpersisted (materialize, then unpersist). A locally checkpointed
+RDD's lineage is truncated, so its blocks are unrecoverable once
+dropped: a frame must not be retired while a frame built on it is
+still unmaterialized. Frames that live for the whole operator (edge
+inputs, node sets) are plain pins outside the tracker and are never
+retired here.
+
+NOTE: localCheckpoint blocks live on executors only; losing an
+executor mid-loop fails the job (truncated lineage can't recompute).
 """
 
 from __future__ import annotations
@@ -25,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def unpersist_checkpoint(df: DataFrame, blocking: bool = False) -> None:
+def _unpersist_checkpoint(df: DataFrame) -> None:
     """Unpersist the RDD behind a localCheckpoint-ed ``df``.
 
     STRICT on purpose: acts only when the frame's analyzed plan IS the
@@ -39,4 +46,25 @@ def unpersist_checkpoint(df: DataFrame, blocking: bool = False) -> None:
     frames are DataFrame.unpersist()'s job."""
     plan = df._jdf.queryExecution().analyzed()
     if plan.getClass().getSimpleName() == "LogicalRDD":
-        plan.rdd().unpersist(blocking)
+        plan.rdd().unpersist(False)
+
+
+class RoundPins:
+    """Pins of one iterative loop's round frames (see the module rule)."""
+
+    def __init__(self) -> None:
+        self._since_last: list[DataFrame] = []
+        self._before_last: list[DataFrame] = []
+
+    def pin(self, df: DataFrame, eager: bool = False) -> DataFrame:
+        """localCheckpoint ``df`` and record it for retirement."""
+        df = df.localCheckpoint(eager=eager)
+        self._since_last.append(df)
+        return df
+
+    def materialized(self) -> None:
+        """Call after a round's last action: unpersists every frame
+        pinned before the previous call."""
+        for df in self._before_last:
+            _unpersist_checkpoint(df)
+        self._before_last, self._since_last = self._since_last, []

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._pins import unpersist_checkpoint
+from ._pins import RoundPins
 
 
 def word_freq_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -103,14 +103,10 @@ def train_bpe_state(
     plan while each round costs exactly ONE job (the top-pair collect
     materializes that round's rewritten words) — and a caller that
     never consumes the final word table (train_bpe) never pays the
-    last rewrite at all. Superseded rounds' blocks are dropped one
-    round late (dedup.py's materialize-then-unpersist ordering: round
-    r's collect materializes the round-r words checkpoint, which was
-    the round-(r-1) frame's last consumer), so pinned storage stays
-    ~2 vocabulary-sized frames deep instead of n_merges deep."""
-    words = word_freq_tokens(docs, text_col).localCheckpoint(eager=False)
+    last rewrite at all."""
+    rounds = RoundPins()
+    words = rounds.pin(word_freq_tokens(docs, text_col))
     merges = []
-    pending = None  # frame retired once the next collect materializes
     for rank in range(n_merges):
         top = (
             pair_counts(words)
@@ -118,19 +114,12 @@ def train_bpe_state(
             .limit(1)
             .collect()
         )
-        # the collect materialized the current words checkpoint — the
-        # frame it superseded has no consumer left
-        if pending is not None:
-            unpersist_checkpoint(pending)
-            pending = None
+        rounds.materialized()
         if not top:
             break
         t = top[0]
         merges.append((rank, t["left"], t["right"], t["left"] + t["right"], t["n"]))
-        pending = words
-        words = _apply_merge(words, t["left"], t["right"]).localCheckpoint(
-            eager=False
-        )
+        words = rounds.pin(_apply_merge(words, t["left"], t["right"]))
     return merges, words
 
 

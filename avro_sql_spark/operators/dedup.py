@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint
-from ._pins import unpersist_checkpoint
+from ._pins import RoundPins
 
 # MinHash permutation family: h_i(s) = (a_i * x(s) + b_i) mod P, the
 # textbook 2-universal family over the Mersenne prime P = 2^31-1, with
@@ -661,7 +661,7 @@ def connected_components(
         .cache()
     )
     labels = nodes.select(F.col("id"), F.col("id").alias("cluster_id")).cache()
-    backing = labels  # the cached/checkpointed frame to unpersist next round
+    rounds = RoundPins()
     for _ in range(max_iterations):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.id)
@@ -675,36 +675,27 @@ def connected_components(
         new_val = F.least(
             F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
         )
-        new_labels = (
+        # localCheckpoint (not cache): truncates the lineage so the
+        # logical plan doesn't deepen by one join per round — with plain
+        # cache, analysis time and recovery cost grow linearly in
+        # iterations, which is what kills long CC runs at scale. LAZY:
+        # the convergence count below computes every partition (a full
+        # aggregate, no limit short-circuit), so it doubles as the
+        # materializing job — one job per round, not an eager
+        # checkpoint job plus a probe job.
+        new_labels = rounds.pin(
             labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
             .select(
                 "id",
                 new_val.alias("cluster_id"),
                 (new_val < F.col("cluster_id")).alias("_chg"),
             )
-            # localCheckpoint (not cache): truncates the lineage so the
-            # logical plan doesn't deepen by one join per round — with
-            # plain cache, analysis time and recovery cost grow linearly
-            # in iterations, which is what kills long CC runs at scale.
-            # LAZY: the convergence count below computes every partition
-            # (a full aggregate, no limit short-circuit), so it doubles
-            # as the materializing job — one job per round, not an eager
-            # checkpoint job plus a probe job.
-            # Tradeoff: localCheckpoint blocks live on executors only, so
-            # losing an executor mid-loop fails the job (the truncated
-            # lineage can't recompute). On a real cluster set
-            # spark.sparkContext.setCheckpointDir(...) and swap this for
-            # reliable .checkpoint() to survive executor loss.
-            .localCheckpoint(eager=False)
         )
         changed = new_labels.filter("_chg").count()
-        # round 0's backing is a .cache() frame (DataFrame.unpersist
-        # clears it); later rounds' are localCheckpoints, whose blocks
-        # only an RDD-level unpersist drops (DataFrame.unpersist is a
-        # silent no-op on a checkpointed frame — found in r9)
-        backing.unpersist()
-        unpersist_checkpoint(backing)
-        backing = new_labels
+        rounds.materialized()
+        # round 0's labels are a .cache() frame, outside the pins; on
+        # later rounds' checkpoints DataFrame.unpersist is a no-op
+        labels.unpersist()
         labels = new_labels.drop("_chg")
         if changed == 0:
             break

@@ -21,21 +21,74 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._pins import unpersist_checkpoint
+from ._pins import RoundPins
+
+
+def _undirected(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """The canonical undirected edge set (a, b), a < b, of an edge list:
+    both orientations folded by least/greatest, self-loops dropped,
+    duplicates removed. Unpinned — each caller chooses its own pin."""
+    a, b = F.col(src), F.col(dst)
+    return (
+        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """(n, d): every endpoint of a canonical edge set with its degree —
+    one map-side-combined groupBy over both endpoint columns."""
+    return (
+        und.select(F.col("a").alias("n"))
+        .unionAll(und.select(F.col("b").alias("n")))
+        .groupBy("n")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
+def _closed_wedges(und: DataFrame, deg: DataFrame) -> DataFrame:
+    """Every triangle of the canonical edge set ``und`` EXACTLY once, as
+    the oriented closed wedge (u, v1, v2) — compact-forward /
+    node-iterator++. Every edge is oriented from the lower-(degree, id)
+    endpoint to the higher; a triangle is then the wedge
+    (u -> v1, u -> v2) with rank(v1) < rank(v2) closed by the oriented
+    edge (v1 -> v2). The degree orientation bounds every node's
+    out-degree by O(sqrt(m)), so the wedge self-join is m^1.5-bounded —
+    the standard distributed-triangle bound — instead of sum(deg^2) on
+    hub nodes, which is what makes a naive neighbor self-join die on
+    celebrity vertices at scale. ``deg`` is :func:`_degrees` of ``und``."""
+
+    def lower_first(da, a, db, b):  # (degree, id) rank order
+        return (F.col(da) < F.col(db)) | (
+            (F.col(da) == F.col(db)) & (F.col(a) < F.col(b))
+        )
+
+    ranked = und.join(
+        deg.select(F.col("n").alias("a"), F.col("d").alias("dega")), "a"
+    ).join(deg.select(F.col("n").alias("b"), F.col("d").alias("degb")), "b")
+    ab = lower_first("dega", "a", "degb", "b")
+    oriented = ranked.select(
+        F.when(ab, F.col("a")).otherwise(F.col("b")).alias("u"),
+        F.when(ab, F.col("b")).otherwise(F.col("a")).alias("v"),
+        F.when(ab, F.col("degb")).otherwise(F.col("dega")).alias("dv"),
+    ).localCheckpoint(eager=False)
+    x = oriented.select("u", F.col("v").alias("v1"), F.col("dv").alias("d1"))
+    y = oriented.select("u", F.col("v").alias("v2"), F.col("dv").alias("d2"))
+    wedges = x.join(y, "u").filter(lower_first("d1", "v1", "d2", "v2"))
+    closing = oriented.select(F.col("u").alias("v1"), F.col("v").alias("v2"))
+    return wedges.join(closing, ["v1", "v2"]).select("u", "v1", "v2")
 
 
 def pagerank(
     edges: DataFrame,
     iterations: int = 3,
     damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
     redistribute_dangling: bool = True,
     round_to: int | None = None,
-    eager_checkpoint: bool = True,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list. Returns one
-    row per node: (node, pr).
+    """Fixed-iteration PageRank over a directed (src, dst) edge list.
+    Returns one row per node: (node, pr).
 
     Semantics (classic Brin-Page with dangling redistribution):
     ``pr' = (1-d)/N + d * (sum_in(pr_src / outdeg_src) + dangling/N)``
@@ -50,25 +103,22 @@ def pagerank(
     node-linear, traffic edge-linear. The node count and the dangling
     mass are scalar aggregates (broadcast back, rows bounded by 1).
     Skewed in-degree (a celebrity node) is absorbed by the partial
-    aggregation, not a single reducer. Each iteration's ranks are
-    EAGERLY localCheckpoint-ed: without lineage truncation the plan
-    doubles per iteration (ranks feeds both contribs and dangling) and
-    an N-iteration run compiles an exponentially deep DAG — the classic
-    iterative-DataFrame failure. ``redistribute_dangling=False`` skips
-    the per-iteration anti-join + scalar aggregate when the caller
-    guarantees every node has an out-edge (symmetric edge lists).
-    With ``redistribute_dangling=False`` each round has a SINGLE
-    consumer of the previous ranks, so the plan deepens linearly, and
-    ``eager_checkpoint=False`` defers every checkpoint to the final
-    action — one job instead of one per round; keep the eager default
-    whenever dangling redistribution (two consumers per round) or a
-    large iteration budget is in play."""
+    aggregation, not a single reducer. With dangling redistribution
+    each iteration's ranks have TWO consumers (contribs and dangling),
+    so they are EAGERLY localCheckpoint-ed: without lineage truncation
+    the plan doubles per iteration and an N-iteration run compiles an
+    exponentially deep DAG — the classic iterative-DataFrame failure.
+    ``redistribute_dangling=False`` skips the per-iteration anti-join +
+    scalar aggregate when the caller guarantees every node has an
+    out-edge (symmetric edge lists); each round then has a SINGLE
+    consumer of the previous ranks, the plan deepens linearly, and every
+    checkpoint is deferred to the final action — one job instead of one
+    per round."""
+    eager = redistribute_dangling
     # lazy: the eager nodes checkpoint right below consumes e, so the
     # edge frame materializes once inside that job instead of paying
     # its own synchronous construction job first
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=False)
+    e = edges.select("src", "dst").localCheckpoint(eager=False)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -82,9 +132,7 @@ def pagerank(
         raise AvroSqlError("pagerank: empty edge list")
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od")).localCheckpoint()
     ranks = nodes.select("node", F.lit(1.0 / n).alias("pr"))
-    prev_ckpt = None  # last round's eager checkpoint, unpersisted once
-    # the next eager checkpoint has materialized (its only consumers
-    # are inside that round's ranks computation)
+    rounds = RoundPins()
     for i in range(iterations):
         contribs = (
             e.join(ranks.withColumnRenamed("node", "src"), "src")
@@ -117,16 +165,9 @@ def pagerank(
             ).alias("pr"),
         )
         if (i + 1) < iterations:
-            ranks = ranks.localCheckpoint(eager=eager_checkpoint)
-            if eager_checkpoint:
-                # this checkpoint is materialized NOW, and building it
-                # was the previous checkpoint's last read — safe to
-                # drop those blocks (lazy mode materializes nothing
-                # until the terminal action, so there is nothing to
-                # unpersist mid-loop there)
-                if prev_ckpt is not None:
-                    unpersist_checkpoint(prev_ckpt)
-                prev_ckpt = ranks
+            ranks = rounds.pin(ranks, eager=eager)
+            if eager:
+                rounds.materialized()
     if round_to is not None:
         ranks = ranks.select("node", F.round("pr", round_to).alias("pr"))
     return ranks
@@ -134,8 +175,6 @@ def pagerank(
 
 def connected_components_star(
     edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
     max_rounds: int = 10,
 ) -> DataFrame:
     """Connected components by alternating LARGE-STAR / SMALL-STAR
@@ -161,14 +200,10 @@ def connected_components_star(
     extra pass. Deterministic (min is order-free) -> the same
     WITH RECURSIVE reachability oracle as dedup.connected_components.
     """
-    a, b = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        # lazy: the edge count below materializes it in one job
-        .localCheckpoint(eager=False)
-    )
+    # lazy: the edge count below materializes it in one job. It stays
+    # pinned for the operator's lifetime: nodes' lazy checkpoint reads
+    # its blocks at the FINAL label join
+    e = _undirected(edges).localCheckpoint(eager=False)
     nodes = (
         e.select(F.col("a").alias("id"))
         .unionAll(e.select(F.col("b").alias("id")))
@@ -178,9 +213,7 @@ def connected_components_star(
         .localCheckpoint(eager=False)
     )
     n_edges = e.count()
-    e0 = e  # nodes' lazy checkpoint reads e0's blocks at the FINAL
-    # label join — e0 must stay pinned for the operator's lifetime;
-    # every later round's superseded edge frame is dropped below
+    rounds = RoundPins()
     for _ in range(max_rounds):
         # large-star: group the symmetrized neighborhood of u; attach
         # m = min(N(u) ∪ {u}); emit (m, v) for every neighbor v > u.
@@ -207,7 +240,7 @@ def connected_components_star(
         # smaller-neighbor star; attach m = min neighbor; emit (m, v)
         # for every smaller neighbor plus (m, b) for the center.
         smins = large.groupBy("b").agg(F.min("a").alias("m"))
-        small = (
+        small = rounds.pin(
             large.join(smins, "b")
             .select(F.col("m").alias("a"), F.col("a").alias("b"))
             .filter(F.col("a") != F.col("b"))
@@ -215,7 +248,6 @@ def connected_components_star(
             .distinct()
             # lazy: the convergence count right below materializes the
             # round — one job per round instead of checkpoint + count
-            .localCheckpoint(eager=False)
         )
         new_n = small.count()
         # both frames are DISTINCT sets; with equal counts, set
@@ -225,11 +257,7 @@ def connected_components_star(
             new_n != n_edges
             or small.join(e, ["a", "b"], "left_anti").limit(1).count() > 0
         )
-        # this round's count + anti-probe were the previous edge
-        # frame's last consumers — drop its blocks (materialize-then-
-        # unpersist; e0 stays pinned for the nodes checkpoint)
-        if e is not e0:
-            unpersist_checkpoint(e)
+        rounds.materialized()
         e = small
         n_edges = new_n
         if not changed:
@@ -278,15 +306,9 @@ def label_propagation(
     same lineage hygiene as every iterative operator here."""
     from pyspark.sql.window import Window
 
-    a, b = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        # lazy: materialized by the first round's job; the sym union's
-        # two branches then read the same frozen blocks
-        .localCheckpoint(eager=False)
-    )
+    # lazy: materialized by the first round's job; the sym union's two
+    # branches then read the same frozen blocks
+    e = _undirected(edges, src_col, dst_col).localCheckpoint(eager=False)
     sym = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
         e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
@@ -375,71 +397,28 @@ def copurchase_edges(
     ).select("e.src", "e.dst")
 
 
-def triangle_count(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    round_to: int = 6,
-) -> DataFrame:
+def triangle_count(edges: DataFrame, round_to: int = 6) -> DataFrame:
     """One-row triangle census of an undirected graph: (n_nodes,
     n_edges, n_wedges, n_triangles, clustering), where ``clustering``
     is the global coefficient 3 * triangles / wedges.
 
-    Algorithm: compact-forward / node-iterator++. Orient every
-    undirected edge from the lower-(degree, id) endpoint to the higher;
-    each triangle is then counted EXACTLY once, as the wedge
-    (u -> v, u -> w) with rank(v) < rank(w) closed by the oriented edge
-    (v -> w). The degree orientation bounds every node's out-degree by
-    O(sqrt(m)), so the wedge self-join is m^1.5-bounded — the standard
-    distributed-triangle bound — instead of sum(deg^2) on hub nodes,
-    which is what makes a naive neighbor self-join die on celebrity
-    vertices at scale.
+    Triangles come from :func:`_closed_wedges` (compact-forward: each
+    triangle counted EXACTLY once, m^1.5-bounded wedge join).
 
     Scale shape: degrees are one map-side-combined groupBy; orientation
     attaches two degree columns via node-keyed equi-joins; the wedge and
     closing joins are equi-joins on node keys feeding pure COUNT
     aggregates. Everything is integer arithmetic except the final
     rounded ratio, so the DuckDB oracle matches exactly."""
-    a, b = F.col(src_col), F.col(dst_col)
-    und = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        # consumed by degrees, orientation, and the edge count;
-        # localCheckpoint (same hygiene as pagerank/connected_components)
-        # materializes once and truncates the upstream edge-build
-        # lineage so the three consumers' plans stay shallow — LAZY, so
-        # the materialization folds into the terminal job instead of a
-        # synchronous construction barrier
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        und.select(F.col("a").alias("n"))
-        .unionAll(und.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    ranked = und.join(deg.select(F.col("n").alias("a"), F.col("d").alias("dega")), "a").join(
-        deg.select(F.col("n").alias("b"), F.col("d").alias("degb")), "b"
-    )
-    lower_first = (F.col("dega") < F.col("degb")) | (
-        (F.col("dega") == F.col("degb")) & (F.col("a") < F.col("b"))
-    )
-    oriented = ranked.select(
-        F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(lower_first, F.col("degb")).otherwise(F.col("dega")).alias("dv"),
-    ).localCheckpoint(eager=False)
-    x = oriented.select("u", F.col("v").alias("v1"), F.col("dv").alias("d1"))
-    y = oriented.select("u", F.col("v").alias("v2"), F.col("dv").alias("d2"))
-    wedges = x.join(y, "u").filter(
-        (F.col("d1") < F.col("d2"))
-        | ((F.col("d1") == F.col("d2")) & (F.col("v1") < F.col("v2")))
-    )
-    closing = oriented.select(F.col("u").alias("v1"), F.col("v").alias("v2"))
-    tri = wedges.join(closing, ["v1", "v2"]).agg(
-        F.count(F.lit(1)).alias("n_triangles")
-    )
+    # consumed by degrees, orientation, and the edge count;
+    # localCheckpoint (same hygiene as pagerank/connected_components)
+    # materializes once and truncates the upstream edge-build lineage
+    # so the three consumers' plans stay shallow — LAZY, so the
+    # materialization folds into the terminal job instead of a
+    # synchronous construction barrier
+    und = _undirected(edges).localCheckpoint(eager=False)
+    deg = _degrees(und)
+    tri = _closed_wedges(und, deg).agg(F.count(F.lit(1)).alias("n_triangles"))
     counts = und.agg(F.count(F.lit(1)).alias("n_edges"))
     nodes = deg.agg(
         F.count(F.lit(1)).alias("n_nodes"),
@@ -465,13 +444,7 @@ def triangle_count(
     )
 
 
-def kcore_peel(
-    edges: DataFrame,
-    k: int = 3,
-    rounds: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 4) -> DataFrame:
     """Fixed-round k-core peeling over an undirected edge list: each
     round drops every vertex whose degree in the SURVIVING subgraph is
     below ``k``, then discards edges touching dropped vertices. After
@@ -500,22 +473,10 @@ def kcore_peel(
         return spark.createDataFrame(
             [], "round int, n_nodes bigint, n_edges bigint"
         )
-    a, b = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected(edges).localCheckpoint(eager=False)
     out = None
     for r in range(1, rounds + 1):
-        deg = (
-            e.select(F.col("a").alias("id"))
-            .unionAll(e.select(F.col("b").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        alive = deg.filter(F.col("deg") >= k).select("id")
+        alive = _degrees(e).filter(F.col("d") >= k).select(F.col("n").alias("id"))
         e = (
             e.join(alive.withColumnRenamed("id", "a"), "a", "left_semi")
             .join(alive.withColumnRenamed("id", "b"), "b", "left_semi")
@@ -536,12 +497,7 @@ def kcore_peel(
 
 
 def bfs_distances(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_hops: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    node_col: str = "node",
+    edges: DataFrame, seeds: DataFrame, max_hops: int = 4
 ) -> DataFrame:
     """Multi-source BFS: hop distance from the nearest seed, bounded at
     ``max_hops`` rounds (nodes further away are absent). Textbook
@@ -553,61 +509,37 @@ def bfs_distances(
     no-op round; the result is identical to running all ``max_hops``,
     so the fixed-hop recursive-CTE oracle still matches exactly).
 
-    ``edges`` must already contain both directions for an undirected
-    graph (copurchase_edges does). ``seeds`` must be UNIQUE on
-    ``node_col`` (a stated precondition: duplicate seed rows would
+    ``edges`` (src, dst) must already contain both directions for an
+    undirected graph (copurchase_edges does). ``seeds`` must be UNIQUE
+    on ``node`` (a stated precondition: duplicate seed rows would
     yield duplicate dist=0 output rows; every in-repo caller passes a
     distinct or limit-1 seed frame). Frames localCheckpoint per round
-    LAZILY (the iterative-algorithm hygiene every loop in this repo
-    follows), so the frontier-emptiness count is the round's ONLY
-    driver job — it materializes that round's frontier and, through
-    the lazy chain, the cumulative dist union (formerly 3 eager jobs
-    per round: frontier checkpoint, count, union checkpoint).
-
-    Superseded checkpoints are unpersisted one round late (dedup.py's
-    materialize-then-unpersist ordering): round r's count materializes
-    this round's frontier AND the pending dist union, so the frames
-    retired when that union was BUILT (last round's dist + frontier)
-    have no live consumer left and their blocks are dropped — pinned
-    storage stays ~2 rounds deep instead of growing with hop count.
-    NOTE: localCheckpoint blocks live on executors only; losing an
-    executor mid-loop fails the job (truncated lineage can't
-    recompute). On a real cluster set setCheckpointDir(...) and swap
-    for reliable .checkpoint() to survive executor loss."""
-    dist = seeds.select(
-        F.col(node_col), F.lit(0).cast("int").alias("dist")
-    ).localCheckpoint(eager=False)
+    LAZILY through :class:`RoundPins`, so the frontier-emptiness count
+    is the round's ONLY driver job — it materializes that round's
+    frontier and, through the lazy chain, the cumulative dist union
+    (formerly 3 eager jobs per round: frontier checkpoint, count, union
+    checkpoint)."""
+    rounds = RoundPins()
+    dist = rounds.pin(seeds.select("node", F.lit(0).cast("int").alias("dist")))
     frontier = dist
-    retired: list[DataFrame] = []
     for r in range(max_hops):
         cand = (
-            frontier.join(edges, frontier[node_col] == edges[src_col])
-            .select(F.col(dst_col).alias(node_col))
+            frontier.join(edges, frontier["node"] == edges["src"])
+            .select(F.col("dst").alias("node"))
             .distinct()
         )
-        new = (
-            cand.join(dist, node_col, "left_anti")
-            .select(
-                F.col(node_col),
-                F.lit(r + 1).cast("int").alias("dist"),
+        new = rounds.pin(
+            cand.join(dist, "node", "left_anti").select(
+                "node", F.lit(r + 1).cast("int").alias("dist")
             )
-            .localCheckpoint(eager=False)
         )
         grew = new.count() > 0
-        # the count above materialized the pending dist checkpoint —
-        # the frames it superseded are dead now
-        for f in retired:
-            unpersist_checkpoint(f)
-        retired = []
+        rounds.materialized()
         if not grew:
             break
-        prev_dist, prev_frontier = dist, frontier
-        dist = dist.unionByName(new).localCheckpoint(eager=False)
+        dist = rounds.pin(dist.unionByName(new))
         frontier = new
-        retired = [prev_dist] if prev_frontier is prev_dist else [
-            prev_dist, prev_frontier
-        ]
-    return dist.orderBy(node_col)
+    return dist.orderBy("node")
 
 
 def personalized_pagerank(
@@ -615,8 +547,6 @@ def personalized_pagerank(
     seeds: DataFrame,
     iterations: int = 3,
     damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
     round_to: int | None = None,
 ) -> DataFrame:
     """Personalized PageRank (Haveliwala 2002): identical iteration to
@@ -633,9 +563,7 @@ def personalized_pagerank(
     # lazy: the seed count below (and then the first round's join)
     # materializes the pinned edge frame once; eager pins here were
     # three synchronous construction jobs serializing with each other
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=False)
+    e = edges.select("src", "dst").localCheckpoint(eager=False)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -686,19 +614,14 @@ def personalized_pagerank(
             # separately), so the plan deepens linearly and all round
             # materializations fold into the one final action instead
             # of one construction job per round (pagerank's
-            # eager_checkpoint=False rationale)
+            # no-dangling-pass rationale)
             ranks = ranks.localCheckpoint(eager=False)
     if round_to is not None:
         ranks = ranks.select("node", F.round("pr", round_to).alias("pr"))
     return ranks
 
 
-def scc_labels(
-    edges: DataFrame,
-    rounds: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def scc_labels(edges: DataFrame, rounds: int = 4) -> DataFrame:
     """Strongly connected components of a DIRECTED graph by transitive
     closure with path doubling: ``reach`` starts as the edge list and
     each round joins it with itself (paths of length ≤ 2^round), so
@@ -738,28 +661,21 @@ def scc_labels(
             .select(F.col("a.s").alias("s"), F.col("b.d").alias("d"))
         )
 
-    reach = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
+    # lazy pins: the convergence count after each one materializes it —
+    # one job per round instead of checkpoint + count
+    pins = RoundPins()
+    reach = pins.pin(
+        edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
         .filter(F.col("s").isNotNull() & F.col("d").isNotNull())
         .distinct()
-        # lazy: the convergence count right below materializes it —
-        # one job per round instead of checkpoint + count
-        .localCheckpoint(eager=False)
     )
     prev = reach.count()
+    pins.materialized()
     converged = False
     for _ in range(rounds):
-        superseded = reach
-        reach = reach.unionByName(_hop(reach)).distinct().localCheckpoint(
-            eager=False
-        )
+        reach = pins.pin(reach.unionByName(_hop(reach)).distinct())
         cnt = reach.count()
-        # the count materialized this round's closure; the previous
-        # round's checkpoint has no consumer left (every later read —
-        # nodes, mutual, the verification hop — goes through the new
-        # frame) — drop its blocks (dedup.py's materialize-then-
-        # unpersist ordering; bounds pinned storage at ~2 rounds)
-        unpersist_checkpoint(superseded)
+        pins.materialized()
         if cnt == prev:
             converged = True
             break
@@ -800,11 +716,7 @@ def scc_labels(
     )
 
 
-def degree_assortativity(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def degree_assortativity(edges: DataFrame) -> DataFrame:
     """Degree assortativity coefficient (Newman 2002): the Pearson
     correlation of endpoint degrees over all edges — positive when
     hubs link to hubs (social nets), negative when hubs link to leaves
@@ -823,11 +735,11 @@ def degree_assortativity(
     uncached, an expensive upstream edge builder runs three times."""
     edges = edges.cache()
     deg = (
-        edges.groupBy(F.col(src_col).alias("node"))
+        edges.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("deg"))
     )
     e = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .join(deg.select(F.col("node").alias("a"), F.col("deg").alias("dx")), "a")
         .join(deg.select(F.col("node").alias("b"), F.col("deg").alias("dy")), "b")
     )
@@ -851,14 +763,9 @@ def degree_assortativity(
     )
 
 
-def markov_stationary(
-    transitions: DataFrame,
-    iterations: int = 8,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    p_col: str = "p",
-) -> DataFrame:
-    """Stationary distribution of a Markov chain by fixed-iteration
+def markov_stationary(transitions: DataFrame, iterations: int = 8) -> DataFrame:
+    """Stationary distribution of a Markov chain (``transitions`` is a
+    (src, dst, p) frame) by fixed-iteration
     power method: π ← πP from uniform, ``iterations`` times — where the
     event-type process spends its time in steady state, the number that
     turns a transition matrix (event_transitions) into capacity shares.
@@ -885,7 +792,7 @@ def markov_stationary(
     # below materializes it. The state vector is states-bounded:
     # broadcast it.
     t = transitions.select(
-        F.col(src_col).alias("s"), F.col(dst_col).alias("d"), F.col(p_col).alias("p")
+        F.col("src").alias("s"), F.col("dst").alias("d"), "p"
     ).localCheckpoint(eager=False)
     # ONE endpoint pass yields both the state count and the dangling
     # probe (formerly a distinct count + an anti-join count — two more
@@ -923,12 +830,7 @@ def markov_stationary(
     return pi.select("node", F.round("pi", 6).alias("pi")).orderBy("node")
 
 
-def link_prediction_topk(
-    edges: DataFrame,
-    top_k: int = 50,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def link_prediction_topk(edges: DataFrame, top_k: int = 50) -> DataFrame:
     """Link-prediction candidate scores for an undirected graph
     (symmetric edge list, copurchase_edges' contract): for every
     NON-adjacent node pair sharing >= 1 neighbor, the common-neighbor
@@ -946,7 +848,7 @@ def link_prediction_topk(
     neighbor, so ln never hits 0). The hub-wedge blowup (Σ deg²) is the
     same bound triangle_count documents; cap hub degrees upstream for
     celebrity-vertex graphs."""
-    e = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
+    e = edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
     deg = e.groupBy(F.col("s").alias("z")).agg(F.count(F.lit(1)).alias("deg"))
     wedges = (
         e.select(F.col("d").alias("z"), F.col("s").alias("a"))
@@ -982,58 +884,25 @@ def link_prediction_topk(
     )
 
 
-def local_clustering_curve(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def local_clustering_curve(edges: DataFrame) -> DataFrame:
     """Degree vs average LOCAL clustering coefficient — the
     curve that separates a clustered network (flat or slowly-decaying
     cc) from a hub-and-spoke one (cc ~ 1/d): for each node, cc(n) =
     2·t(n) / (d(n)·(d(n)−1)) with t(n) the triangles through n, then
     the average of cc over all nodes of each degree.
 
-    Per-node triangle counts reuse the compact-forward orientation of
-    ``triangle_count`` (each triangle materializes EXACTLY once as an
-    oriented closed wedge, out-degrees bounded by O(sqrt m)), then one
-    explode credits the triangle to its three corners — the m^1.5
-    wedge bound survives, no per-node neighborhood self-join exists.
+    Per-node triangle counts reuse ``triangle_count``'s
+    :func:`_closed_wedges` (each triangle materializes EXACTLY once,
+    out-degrees bounded by O(sqrt m)), then one explode credits the
+    triangle to its three corners — the m^1.5 wedge bound survives, no
+    per-node neighborhood self-join exists.
     Exactness: t and d are integers; each node's cc rounds at 6dp into
     DECIMAL(38,6) so the per-degree average is an order-free decimal
     sum with one final division. The oracle counts the same triangles
     from the closed a<b<c triple join — algorithm-free semantics."""
-    a, b = F.col(src_col), F.col(dst_col)
-    und = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        und.select(F.col("a").alias("n"))
-        .unionAll(und.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    ranked = und.join(
-        deg.select(F.col("n").alias("a"), F.col("d").alias("dega")), "a"
-    ).join(deg.select(F.col("n").alias("b"), F.col("d").alias("degb")), "b")
-    lower_first = (F.col("dega") < F.col("degb")) | (
-        (F.col("dega") == F.col("degb")) & (F.col("a") < F.col("b"))
-    )
-    oriented = ranked.select(
-        F.when(lower_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(lower_first, F.col("degb")).otherwise(F.col("dega")).alias("dv"),
-    ).localCheckpoint(eager=False)
-    x = oriented.select("u", F.col("v").alias("v1"), F.col("dv").alias("d1"))
-    y = oriented.select("u", F.col("v").alias("v2"), F.col("dv").alias("d2"))
-    wedges = x.join(y, "u").filter(
-        (F.col("d1") < F.col("d2"))
-        | ((F.col("d1") == F.col("d2")) & (F.col("v1") < F.col("v2")))
-    )
-    closing = oriented.select(F.col("u").alias("v1"), F.col("v").alias("v2"))
-    tri = wedges.join(closing, ["v1", "v2"]).select("u", "v1", "v2")
+    und = _undirected(edges).localCheckpoint(eager=True)
+    deg = _degrees(und)
+    tri = _closed_wedges(und, deg)
     per_node_t = (
         tri.select(F.explode(F.array("u", "v1", "v2")).alias("n"))
         .groupBy("n")
@@ -1219,12 +1088,7 @@ def basket_affinity_lift(
     ).limit(top_k)
 
 
-def degree_powerlaw_fit(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    d_min: int = 2,
-) -> DataFrame:
+def degree_powerlaw_fit(edges: DataFrame, d_min: int = 2) -> DataFrame:
     """Hill/Clauset MLE for the degree-distribution power-law exponent
     α = 1 + n / Σ ln(d/d_min) over nodes with degree ≥ d_min — the
     one-number answer to "is this graph hub-dominated?" that decides
@@ -1236,24 +1100,13 @@ def degree_powerlaw_fit(
     by max degree, not node count) weighted by the node count at that
     degree, so the sum is order-free; α is one division. Also reports
     the tail share and max degree."""
-    a, b = F.col(src_col), F.col(dst_col)
     # und feeds both union branches of the degree count, and dom feeds
     # both the tail aggregate and the node total — pin each once so the
     # upstream edge build runs a single time
-    und = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        und.select(F.col("a").alias("n"))
-        .unionAll(und.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    und = _undirected(edges).localCheckpoint(eager=True)
     dom = (
-        deg.groupBy("d")
+        _degrees(und)
+        .groupBy("d")
         .agg(F.count(F.lit(1)).alias("k"))
         .localCheckpoint(eager=True)  # degree-domain-sized
     )
@@ -1301,13 +1154,7 @@ def community_modularity(
     in DECIMAL(38,0)); the single final division is the only float op.
     Scale shape: two label joins on the canonical edge list, one degree
     aggregate, one communities-sized reduction."""
-    a, b = F.col("src"), F.col("dst")
-    und = (
-        edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = _undirected(edges).localCheckpoint(eager=True)
     # three consumers (la, lb, dc) and label_propagation leaves its
     # LAST round unmaterialized — checkpoint so the final vote round
     # (join + window argmax) computes once, not three times
@@ -1324,14 +1171,9 @@ def community_modularity(
             F.sum((F.col("ca") == F.col("cb")).cast("long")).alias("sl"),
         )
     )
-    deg = (
-        und.select(F.col("a").alias("n"))
-        .unionAll(und.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
     dc = (
-        deg.join(labels.withColumnRenamed("id", "n"), "n")
+        _degrees(und)
+        .join(labels.withColumnRenamed("id", "n"), "n")
         .groupBy("community")
         .agg(F.sum("d").alias("dc"), F.count(F.lit(1)).alias("sz"))
     )
@@ -1358,12 +1200,7 @@ def community_modularity(
     )
 
 
-def diameter_double_sweep(
-    edges: DataFrame,
-    max_hops: int = 8,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def diameter_double_sweep(edges: DataFrame, max_hops: int = 8) -> DataFrame:
     """Graph-diameter lower bound by the classic DOUBLE SWEEP (Magnien
     et al. 2009): BFS from an arbitrary node (the minimum id — a
     deterministic choice), then BFS again from the farthest node found;
@@ -1383,9 +1220,7 @@ def diameter_double_sweep(
     up-to-2*max_hops rounds re-derives the whole edge list from its
     lineage (for copurchase_edges that is the full basket self-pairing
     aggregate per round — measured 11.3 s -> ~3 s at sf0.1)."""
-    sym = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=True)
+    sym = edges.select("src", "dst").localCheckpoint(eager=True)
     start = sym.agg(F.min("src").alias("node"))
     d1 = bfs_distances(sym, start, max_hops=max_hops).localCheckpoint(
         eager=True

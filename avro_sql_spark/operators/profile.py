@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ._pins import unpersist_checkpoint
+from ._pins import RoundPins
 
 
 def _stats_exprs(cols: list[str], approx: bool) -> list:
@@ -3575,6 +3575,7 @@ def markov_removal_attribution(
     a = states.join(F.broadcast(pc), ["removed", "s"], "left").select(
         "removed", "s", F.coalesce("pconv", F.lit(0.0)).alias("a")
     )
+    pins = RoundPins()
     for r in range(rounds):
         # every frame here is (variants x states)-bounded -> broadcast
         # hints keep the per-round joins exchange-free
@@ -3605,14 +3606,8 @@ def markov_removal_attribution(
             )
         )
         if (r + 1) < rounds:
-            a = a.localCheckpoint(eager=True)
-            # the eager checkpoint materialized NOW, and building it
-            # was the previous round's checkpoint's last read — drop
-            # those blocks (materialize-then-unpersist; bounds pinned
-            # storage at one (variants x states) frame)
-            if r > 0:
-                unpersist_checkpoint(prev_a)
-            prev_a = a
+            a = pins.pin(a, eager=True)
+            pins.materialized()
     b = a.filter(F.col("s") == "START").select(
         F.col("removed"), F.col("a").alias("b")
     )

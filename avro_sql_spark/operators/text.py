@@ -1685,7 +1685,7 @@ def textrank_keywords(
             # lazy: each round's ranks has ONE consumer (next round's
             # broadcast), so the 10-round chain folds into the final
             # action — one job instead of one construction job per
-            # round (pagerank's eager_checkpoint=False rationale)
+            # round (pagerank's no-dangling-pass rationale)
             ranks = ranks.localCheckpoint(eager=False)
     return (
         ranks.select("word", F.round("tr", 6).alias("textrank"))

@@ -1,6 +1,11 @@
 """Invariant tests for operators/graph.py (fixed-iteration PageRank)."""
 
+import itertools
+from collections import Counter
+
 import pytest
+from hypothesis import HealthCheck, assume, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from avro_sql_spark.operators.graph import (
@@ -241,3 +246,52 @@ def test_markov_stationary_two_state_chain(spark):
 
     out = {r["node"]: r["pi"] for r in markov_stationary(t, iterations=20).collect()}
     assert abs(out["a"] - 2 / 3) < 1e-6 and abs(out["b"] - 1 / 3) < 1e-6
+
+
+# drawn edge lists: duplicates, both orientations and self-loops occur
+# freely over 7 node ids, and small degrees make (degree, id) ties —
+# the orientation tie-break — common
+_EDGE_LISTS = st.lists(
+    st.tuples(st.integers(0, 6), st.integers(0, 6)), min_size=1, max_size=24
+)
+
+
+def _brute_triangles(edges):
+    und = {(min(a, b), max(a, b)) for a, b in edges if a != b}
+    deg = Counter(n for e in und for n in e)
+    tris = [
+        t for t in itertools.combinations(sorted(deg), 3)
+        if all(p in und for p in itertools.combinations(t, 2))
+    ]
+    per_node = Counter(n for t in tris for n in t)
+    return und, deg, tris, per_node
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
+@given(edges=_EDGE_LISTS)
+# all-tie triangle with a reversed duplicate and a self-loop, and two
+# triangles sharing a hub: orientation ties decided by id alone
+@example(edges=[(0, 1), (1, 2), (2, 0), (1, 0), (2, 2)])
+@example(edges=[(0, 1), (1, 2), (0, 2), (2, 3), (3, 4), (2, 4)])
+def test_triangle_kernel_matches_brute_force(spark, edges):
+    from avro_sql_spark.operators.graph import local_clustering_curve, triangle_count
+
+    und, deg, tris, per_node = _brute_triangles(edges)
+    assume(und)
+    df = spark.createDataFrame(edges, "src LONG, dst LONG")
+    r = triangle_count(df).collect()[0]
+    wedges = sum(d * (d - 1) // 2 for d in deg.values())
+    assert (r["n_nodes"], r["n_edges"], r["n_wedges"], r["n_triangles"]) == (
+        len(deg), len(und), wedges, len(tris)
+    )
+    by_degree = {}
+    for n, d in deg.items():
+        if d >= 2:
+            by_degree.setdefault(d, []).append(2 * per_node[n] / (d * (d - 1)))
+    got = {
+        row["degree"]: (row["n_nodes"], row["avg_clustering"])
+        for row in local_clustering_curve(df).collect()
+    }
+    assert {d: n for d, (n, _) in got.items()} == {d: len(c) for d, c in by_degree.items()}
+    for d, cc in by_degree.items():
+        assert got[d][1] == pytest.approx(sum(cc) / len(cc), abs=2e-6)

@@ -1,7 +1,7 @@
 """Storage-level hygiene of the iterative loops: superseded
 per-round localCheckpoint frames must be unpersisted once the next
-round's action materializes (dedup.py's materialize-then-unpersist
-ordering), so pinned executor storage stays ~2 rounds deep instead of
+round's action materializes (the ``operators/_pins.RoundPins`` rule),
+so pinned executor storage stays ~2 rounds deep instead of
 growing with round count — the r8-verdict item 1 contract."""
 
 import pytest
@@ -18,6 +18,23 @@ def _sweep(spark) -> int:
 
 def _n_persisted(spark) -> int:
     return len(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+@pytest.fixture
+def held(spark, monkeypatch):
+    """Keep every localCheckpoint frame referenced for the test, so GC +
+    ContextCleaner cannot drop a superseded round's blocks on its own:
+    the persisted count then measures the retire rule alone."""
+    frames = []
+    cls = type(spark.range(1))
+    pin = cls.localCheckpoint
+
+    def keep(self, *args, **kwargs):
+        frames.append(pin(self, *args, **kwargs))
+        return frames[-1]
+
+    monkeypatch.setattr(cls, "localCheckpoint", keep)
+    return frames
 
 
 def test_bfs_pinned_blocks_bounded(spark):
@@ -66,17 +83,107 @@ def test_bpe_pinned_blocks_bounded(spark):
     _sweep(spark)
 
 
+# two components: a 7-chain (multi-round convergence) + a pair
+_CC_EDGES = [(i, i + 1) for i in range(1, 7)] + [(20, 21)]
+_CC_LABELS = {**{i: 1 for i in range(1, 8)}, 20: 20, 21: 20}
+
+
+def _assert_cc_bounded_and_correct(spark, out):
+    assert {r["id"]: r["cluster_id"] for r in out.collect()} == _CC_LABELS
+    assert _n_persisted(spark) <= 5
+    _sweep(spark)
+
+
 def test_star_cc_pinned_blocks_bounded_and_correct(spark):
     from avro_sql_spark.operators.graph import connected_components_star
 
     _sweep(spark)
-    # two components: a 7-chain (multi-round convergence) + a pair
-    edges = [(i, i + 1) for i in range(1, 7)] + [(20, 21)]
-    df = spark.createDataFrame(edges, "src LONG, dst LONG")
-    out = {r["id"]: r["cluster_id"] for r in connected_components_star(df).collect()}
-    assert out == {**{i: 1 for i in range(1, 8)}, 20: 20, 21: 20}
-    assert _n_persisted(spark) <= 5
+    df = spark.createDataFrame(_CC_EDGES, "src LONG, dst LONG")
+    _assert_cc_bounded_and_correct(spark, connected_components_star(df))
+
+
+def test_label_cc_pinned_blocks_bounded_and_correct(spark, held):
+    """dedup.connected_components needs one label round per chain hop
+    (7 here): without the retire rule each round's labels stay pinned."""
+    from avro_sql_spark.operators.dedup import connected_components
+
     _sweep(spark)
+    pairs = spark.createDataFrame(_CC_EDGES, "id_a LONG, id_b LONG")
+    nodes = spark.createDataFrame([(n,) for n in _CC_LABELS], "id LONG")
+    _assert_cc_bounded_and_correct(spark, connected_components(nodes, pairs))
+
+
+def test_dangling_pagerank_pinned_blocks_bounded(spark, held):
+    """Dangling-mass mode pins every round eagerly; 12 iterations must
+    leave the three operator-lifetime pins plus ~2 round frames, with
+    ranks equal to a plain-Python power iteration."""
+    from avro_sql_spark.operators.graph import pagerank
+
+    _sweep(spark)
+    edges = [(1, 2), (2, 3), (3, 4), (5, 4), (1, 5)]  # 4 is dangling
+    df = spark.createDataFrame(edges, "src LONG, dst LONG")
+    got = {r["node"]: r["pr"] for r in pagerank(df, iterations=12).collect()}
+    nodes = sorted({n for e in edges for n in e})
+    out = {n: [d for s, d in edges if s == n] for n in nodes}
+    pr = {n: 1.0 / len(nodes) for n in nodes}
+    for _ in range(12):
+        dm = sum(pr[n] for n in nodes if not out[n])
+        contrib = {n: 0.0 for n in nodes}
+        for n in nodes:
+            for d in out[n]:
+                contrib[d] += pr[n] / len(out[n])
+        pr = {n: 0.15 / len(nodes) + 0.85 * (contrib[n] + dm / len(nodes)) for n in nodes}
+    assert got == pytest.approx(pr, abs=1e-12)
+    assert _n_persisted(spark) <= 6
+    _sweep(spark)
+
+
+def test_markov_removal_pinned_blocks_bounded(spark, held):
+    """12 absorption rounds over the removal grid: four operator-lifetime
+    chain frames plus ~2 round frames stay pinned, not one per round."""
+    from datetime import datetime, timedelta
+
+    from avro_sql_spark.operators.profile import markov_removal_attribution
+
+    _sweep(spark)
+    t0 = datetime(2024, 1, 1)
+    rows = []
+    for u in range(6):  # view -> click -> purchase, or view then drop
+        rows.append((len(rows), t0, u, "view", 1.0, ""))
+        rows.append((len(rows), t0 + timedelta(hours=1), u, "click", 1.0, ""))
+        if u % 2 == 0:
+            rows.append((len(rows), t0 + timedelta(hours=2), u, "purchase", 1.0, ""))
+    df = spark.createDataFrame(
+        rows,
+        "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING,"
+        " value DOUBLE, props STRING",
+    )
+    out = {r["channel"]: r for r in markov_removal_attribution(df, rounds=12).collect()}
+    assert set(out) == {"view", "click"}
+    # every converting path runs through both channels
+    assert out["view"]["removal_effect"] == pytest.approx(1.0)
+    assert out["click"]["removal_effect"] == pytest.approx(1.0)
+    assert out["view"]["base_conv"] == pytest.approx(0.5)
+    assert _n_persisted(spark) <= 7
+    _sweep(spark)
+
+
+def test_only_pins_module_unpersists_checkpoints():
+    """The retire rule lives in operators/_pins.py alone: no other
+    module may drop checkpoint blocks itself."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "avro_sql_spark"
+    pattern = re.compile(r"unpersist_checkpoint|\.rdd\(\)\.unpersist\(")
+    offenders = [
+        f"{path.relative_to(pkg)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "operators" / "_pins.py"
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert offenders == []
 
 
 def test_kcore_zero_rounds_empty_frame(spark):
