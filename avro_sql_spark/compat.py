@@ -21,7 +21,7 @@ from pyspark.sql import SparkSession
 
 from .plans.fields import parse
 from .reshape import apply_plan, empty_frame, plan_fields
-from .sources.avro_io import _avro_to_spark_value
+from .sources.avro_io import _avro_to_spark_value, resolve_names
 from .sources.avro_schema import avro_to_spark_schema, spark_to_avro_schema
 
 # root attributes with dedicated slots in the rebuilt schema; everything
@@ -38,7 +38,9 @@ class AvroSqlProcessor:
 
     def __init__(self, spark: SparkSession, avro_schema: str | dict, query: str):
         self.spark = spark
-        self.avro_schema = (
+        # named-type references (a field reusing a record by name) are
+        # inlined once, for the schema conversion and the value codec
+        self.avro_schema = resolve_names(
             json.loads(avro_schema) if isinstance(avro_schema, str) else avro_schema
         )
         self.in_schema = avro_to_spark_schema(self.avro_schema)

@@ -24,11 +24,12 @@ from pyspark.sql import functions as F
 from ._pins import RoundPins
 
 
-def _undirected(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """The canonical undirected edge set (a, b), a < b, of an edge list:
-    both orientations folded by least/greatest, self-loops dropped,
-    duplicates removed. Unpinned — each caller chooses its own pin."""
-    a, b = F.col(src), F.col(dst)
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The canonical undirected edge set (a, b), a < b, of a (src, dst)
+    edge list: both orientations folded by least/greatest, self-loops
+    dropped, duplicates removed. Unpinned — each caller chooses its own
+    pin."""
+    a, b = F.col("src"), F.col("dst")
     return (
         edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
         .filter(F.col("a") != F.col("b"))
@@ -280,12 +281,7 @@ def connected_components_star(
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    rounds: int = 2,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) over an
     undirected edge list, made DETERMINISTIC: labels start as node ids,
     each round every node adopts the most frequent label among its
@@ -304,11 +300,17 @@ def label_propagation(
     + ONE per-node argmax (window over the node key — partitions are
     node-sized, never global); labels localCheckpoint per round, the
     same lineage hygiene as every iterative operator here."""
-    from pyspark.sql.window import Window
-
     # lazy: materialized by the first round's job; the sym union's two
     # branches then read the same frozen blocks
-    e = _undirected(edges, src_col, dst_col).localCheckpoint(eager=False)
+    e = _undirected(edges).localCheckpoint(eager=False)
+    return _propagate(e, rounds).orderBy("id")
+
+
+def _propagate(e: DataFrame, rounds: int) -> DataFrame:
+    """The label-propagation rounds over a canonical, pinned edge set
+    ``e`` (a, b): (id, community), unordered, last round unpinned."""
+    from pyspark.sql.window import Window
+
     sym = e.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
         e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
@@ -335,7 +337,7 @@ def label_propagation(
             # next round's join) — the checkpoint only bounds plan
             # growth, it need not be a synchronous job
             labels = labels.localCheckpoint(eager=False)
-    return labels.orderBy("id")
+    return labels
 
 
 def copurchase_edges(
@@ -1144,8 +1146,8 @@ def community_modularity(
     partition — the one-number quality check for ANY community
     assignment (Q near 0: the "communities" are no better than random
     wiring; 0.3+: real structure worth exploiting for locality or
-    mixture design). Composes :func:`label_propagation` with the exact
-    modularity identity.
+    mixture design). Runs the :func:`label_propagation` rounds on its
+    own canonical edge set, then the exact modularity identity.
 
     Exactness: with m undirected edges, SL monochrome (intra-community)
     edges, and per-community degree sums D_c,
@@ -1155,12 +1157,10 @@ def community_modularity(
     Scale shape: two label joins on the canonical edge list, one degree
     aggregate, one communities-sized reduction."""
     und = _undirected(edges).localCheckpoint(eager=True)
-    # three consumers (la, lb, dc) and label_propagation leaves its
-    # LAST round unmaterialized — checkpoint so the final vote round
-    # (join + window argmax) computes once, not three times
-    labels = label_propagation(
-        und, rounds=rounds, src_col="a", dst_col="b"
-    ).localCheckpoint(eager=True)
+    # three consumers (la, lb, dc) and _propagate leaves its LAST round
+    # unmaterialized — checkpoint so the final vote round (join +
+    # window argmax) computes once, not three times
+    labels = _propagate(und, rounds).localCheckpoint(eager=True)
     la = labels.select(F.col("id").alias("a"), F.col("community").alias("ca"))
     lb = labels.select(F.col("id").alias("b"), F.col("community").alias("cb"))
     mono = (

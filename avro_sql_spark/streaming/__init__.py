@@ -1,8 +1,7 @@
 from .pipeline import (
-    reshape_stream,
     sessionize,
     streaming_dedup,
     windowed_counts,
 )
 
-__all__ = ["reshape_stream", "windowed_counts", "streaming_dedup", "sessionize"]
+__all__ = ["windowed_counts", "streaming_dedup", "sessionize"]

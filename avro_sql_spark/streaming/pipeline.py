@@ -18,17 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.fields import parse
-from ..reshape import reshape_fields
-
-
-def reshape_stream(stream_df: DataFrame, query: str) -> DataFrame:
-    """Apply a reshape-dialect query to a streaming DataFrame. Identical
-    planning path to the batch entry point — the projection is stateless,
-    so it composes with any downstream watermark/window."""
-    fields, withstructure = parse(query)
-    return reshape_fields(stream_df, fields, flatten=not withstructure)
-
 
 def windowed_counts(
     events: DataFrame,
@@ -94,7 +83,7 @@ def kafka_avro_stream(
     avro_schema_json: str,
     starting_offsets: str = "latest",
 ) -> DataFrame:
-    """Kafka source + from_avro decode + ready for reshape_stream — the
+    """Kafka source + from_avro decode + ready for ``reshape`` — the
     full reference deployment shape (Kafka Connect + avro-sql SMT)
     expressed natively. Requires spark-sql-kafka and spark-avro jars."""
     try:

@@ -2,6 +2,7 @@
 over Avro-JSON dicts, parse/plan once."""
 
 from avro_sql_spark.compat import AvroSqlProcessor
+from tests.test_avro_io import PERSON_AVRO
 from tests.test_avro_schema import PIZZA_AVRO
 
 PIZZA_REC = {
@@ -106,3 +107,26 @@ def test_processor_forwards_root_props(spark):
     }
     proc = AvroSqlProcessor(spark, schema, "SELECT a")
     assert proc.out_avro_schema()["connect.version"] == 2
+
+
+def test_processor_resolves_named_type_reference(spark):
+    """The reference's F2 person schema: street2 reuses the named record
+    Street, which the processor must resolve before converting."""
+    address = {"street": {"name": "Rock St"}, "city": "MtV", "state": "CA",
+               "zip": "94041", "country": "USA"}
+    p = AvroSqlProcessor(
+        spark,
+        PERSON_AVRO,
+        "SELECT name, address.street.name as streetName,"
+        " address.street2.name as streetName2",
+    )
+    out = p.apply([
+        {"name": "Rick", "address": {**address, "street2": None}},
+        {"name": "Rick", "address": {**address, "street2": {"name": "412 East"}}},
+    ])
+    assert out == [
+        {"name": "Rick", "streetName": "Rock St", "streetName2": None},
+        {"name": "Rick", "streetName": "Rock St", "streetName2": "412 East"},
+    ]
+    nullable = {f.name: f.nullable for f in p.out_schema.fields}
+    assert nullable == {"name": False, "streetName": False, "streetName2": True}

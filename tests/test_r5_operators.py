@@ -1182,6 +1182,12 @@ def test_modularity_two_cliques_vs_clique(spark):
     assert r["modularity"] > 0.3
     assert r["intra_edge_share"] >= 12 / 13 - 1e-6
 
+    # duplicate, reversed and self-loop edges leave the canonical edge
+    # set, and so every figure, unchanged
+    noisy = edges + [(b, a) for a, b in edges] + edges[:3] + [(1, 1), (6, 6)]
+    df3 = spark.createDataFrame(noisy, "src LONG, dst LONG")
+    assert community_modularity(df3, rounds=2).collect()[0] == r
+
     # single clique: one community, Q = 0 exactly (SL = m, D_c = 2m)
     one = spark.createDataFrame(clique([1, 2, 3, 4, 5]), "src LONG, dst LONG")
     r2 = community_modularity(one, rounds=2).collect()[0]

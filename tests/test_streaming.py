@@ -16,9 +16,9 @@ def _run_stream(sdf, name, timeout=60):
 
 
 def test_reshape_on_stream(spark, tmp_path):
-    """reshape_stream applies the dialect to a streaming frame — plan is
+    """reshape applies the dialect to a streaming frame — plan is
     stateless so append mode needs no watermark."""
-    from avro_sql_spark.streaming import reshape_stream
+    from avro_sql_spark import reshape
 
     src = str(tmp_path / "in")
     spark.createDataFrame(
@@ -26,7 +26,7 @@ def test_reshape_on_stream(spark, tmp_path):
     ).write.parquet(src)
     stream = spark.readStream.schema("id LONG, tag STRING, score DOUBLE").parquet(src)
     assert stream.isStreaming
-    out = reshape_stream(stream, "SELECT id as key, score")
+    out = reshape(stream, "SELECT id as key, score")
     assert out.columns == ["key", "score"]
     _run_stream(out, "reshaped")
     rows = sorted(spark.sql("SELECT * FROM reshaped").collect())
