@@ -20,7 +20,7 @@ from typing import Sequence
 from pyspark.sql import SparkSession
 
 from .plans.fields import parse
-from .reshape import apply_plan, empty_frame, plan_fields
+from .reshape import apply_plan, plan_fields, plan_schema
 from .sources.avro_io import _avro_to_spark_value, resolve_names
 from .sources.avro_schema import avro_to_spark_schema, spark_to_avro_schema
 
@@ -49,8 +49,8 @@ class AvroSqlProcessor:
         # plan once: the SQL strings are schema-bound, not frame- or
         # session-bound, so the same plan serves every batch
         self._plan = plan_fields(self.in_schema, self.fields, self.flatten)
-        # derive the output schema with no data (reference O3)
-        self.out_schema = apply_plan(empty_frame(spark, self.in_schema), self._plan).schema
+        # the plan carries its output schema (reference O3)
+        self.out_schema = plan_schema(self.in_schema, self._plan)
 
     def out_avro_schema(self) -> dict:
         """Avro JSON schema of the output, carrying the input's

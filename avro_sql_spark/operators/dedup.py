@@ -680,9 +680,10 @@ def connected_components(
         # cache, analysis time and recovery cost grow linearly in
         # iterations, which is what kills long CC runs at scale. LAZY:
         # the convergence count below computes every partition (a full
-        # aggregate, no limit short-circuit), so it doubles as the
-        # materializing job — one job per round, not an eager
-        # checkpoint job plus a probe job.
+        # aggregate, no limit short-circuit), so it also fills the pin
+        # and no separate checkpoint action runs. A round is still about
+        # 6 jobs: the pin's shuffle-map stages plus the count's two
+        # (_pins module docstring).
         new_labels = rounds.pin(
             labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
             .select(

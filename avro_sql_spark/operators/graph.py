@@ -247,8 +247,8 @@ def connected_components_star(
             .filter(F.col("a") != F.col("b"))
             .unionAll(smins.select(F.col("m").alias("a"), F.col("b").alias("b")))
             .distinct()
-            # lazy: the convergence count right below materializes the
-            # round — one job per round instead of checkpoint + count
+            # lazy: the convergence count right below fills the pin
+            # (jobs per round: _pins module docstring)
         )
         new_n = small.count()
         # both frames are DISTINCT sets; with equal counts, set
@@ -516,11 +516,12 @@ def bfs_distances(
     on ``node`` (a stated precondition: duplicate seed rows would
     yield duplicate dist=0 output rows; every in-repo caller passes a
     distinct or limit-1 seed frame). Frames localCheckpoint per round
-    LAZILY through :class:`RoundPins`, so the frontier-emptiness count
-    is the round's ONLY driver job — it materializes that round's
-    frontier and, through the lazy chain, the cumulative dist union
-    (formerly 3 eager jobs per round: frontier checkpoint, count, union
-    checkpoint)."""
+    LAZILY through :class:`RoundPins`, and the frontier-emptiness count
+    is the round's one action. It is not one job: each lazy pin runs
+    its shuffle-map stages as jobs when taken, and the count runs two
+    more (partial aggregate, final). On copurchase_bfs (sf0.001,
+    local[4], warm) the rounds cost 4, 5 and 6 jobs, and building the
+    entry 19: 3 for the edges, 1 for the seeds, then the rounds."""
     rounds = RoundPins()
     dist = rounds.pin(seeds.select("node", F.lit(0).cast("int").alias("dist")))
     frontier = dist
@@ -663,8 +664,8 @@ def scc_labels(edges: DataFrame, rounds: int = 4) -> DataFrame:
             .select(F.col("a.s").alias("s"), F.col("b.d").alias("d"))
         )
 
-    # lazy pins: the convergence count after each one materializes it —
-    # one job per round instead of checkpoint + count
+    # lazy pins: the convergence count after each one fills it (jobs
+    # per round: _pins module docstring)
     pins = RoundPins()
     reach = pins.pin(
         edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))

@@ -1,15 +1,16 @@
 """Flatten-mode planner (reference O4-O9, O14, O15).
 
 Derives, ONCE at plan time, the ordered list of Spark SQL expression
-strings for a flatten-mode reshape (`` `a`['b']['c'] AS `x` ``) — the
-Spark-first replacement for the reference's per-record walk
-(AvroSql.scala:118-162 values, AvroSchemaSql.scala:105-240 schema).
-Planning is pure Python; the strings reach the JVM in one
-``df.selectExpr``. Catalyst's ``ExtractValue`` gives null-safe
-dotted-path navigation and nullability propagation through nullable
-ancestors natively (SURVEY.md §1.2, O14), so the planner only
-validates, orders, and names; the result is a single ``Project`` node —
-whole-stage-codegen'd, zero per-row Python, safe at any scale.
+strings for a flatten-mode reshape (`` `a`['b']['c'] AS `x` ``), each
+with the field Catalyst types it as (``typed``) — the Spark-first
+replacement for the reference's per-record walk (AvroSql.scala:118-162
+values, AvroSchemaSql.scala:105-240 schema). Planning is pure Python;
+the strings reach the JVM in one ``df.selectExpr``. Catalyst's
+``ExtractValue`` gives null-safe dotted-path navigation and nullability
+propagation through nullable ancestors natively (SURVEY.md §1.2, O14),
+so the planner only validates, orders, names and types; the result is a
+single ``Project`` node — whole-stage-codegen'd, zero per-row Python,
+safe at any scale.
 
 Semantics mirrored from the reference:
  - lone ``SELECT *`` is identity passthrough (AvroSchemaSql.scala:107-111)
@@ -28,15 +29,18 @@ from __future__ import annotations
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 from ..errors import AvroSqlError
-from . import sqltext as sql
+from . import typed
 from .fields import Field, NameAllocator
+from .typed import Expr, PlanColumn
 
 
-def _resolve(schema: StructType, path: tuple[str, ...]) -> DataType:
-    """Walk ``path`` through nested structs; reject array/map traversal
-    with the reference's messages."""
+def _resolve(schema: StructType, path: tuple[str, ...]) -> tuple[DataType, Expr | None]:
+    """Walk ``path`` through nested structs: the type at its end and the
+    typed extraction reaching it (``None`` for the empty path). Rejects
+    array/map traversal with the reference's messages."""
     current: DataType = schema
-    for i, seg in enumerate(path):
+    expr = None
+    for seg in path:
         if isinstance(current, ArrayType):
             raise AvroSqlError(f"Can't select an element from an array(schema:{current.simpleString()})")
         if isinstance(current, MapType):
@@ -50,15 +54,10 @@ def _resolve(schema: StructType, path: tuple[str, ...]) -> DataType:
             raise AvroSqlError(
                 f"Can't find field:{seg} in schema:{current.simpleString()}"
             )
-        current = current[seg].dataType
-    return current
-
-
-def _path_expr(path: tuple[str, ...]) -> str:
-    expr = sql.ident(path[0])
-    for seg in path[1:]:
-        expr = sql.field(expr, seg)
-    return expr
+        sf = current.fields[names.index(seg)]
+        expr = typed.member(expr, sf)
+        current = sf.dataType
+    return current, expr
 
 
 def _check_flatten_leaf(dtype: DataType, path: str, schema: StructType) -> None:
@@ -68,9 +67,9 @@ def _check_flatten_leaf(dtype: DataType, path: str, schema: StructType) -> None:
         )
 
 
-def plan_flatten(schema: StructType, fields: list[Field]) -> list[str] | None:
-    """Return the aliased select list as SQL expressions, or ``None``
-    for identity (lone ``SELECT *``)."""
+def plan_flatten(schema: StructType, fields: list[Field]) -> list[PlanColumn] | None:
+    """Return the aliased select list as SQL expressions with their
+    fields, or ``None`` for identity (lone ``SELECT *``)."""
     if len(fields) == 1 and fields[0].is_star and not fields[0].has_parents:
         return None  # identity passthrough (O15)
 
@@ -87,10 +86,10 @@ def plan_flatten(schema: StructType, fields: list[Field]) -> list[str] | None:
             names.append(f.name)
 
     alloc = NameAllocator()
-    out: list[str] = []
+    out: list[PlanColumn] = []
     for f in fields:
         if f.is_star:
-            parent_dtype = _resolve(schema, f.parents)
+            parent_dtype, parent = _resolve(schema, f.parents)
             if not isinstance(parent_dtype, StructType):
                 raise AvroSqlError(
                     f"Field selection {'.'.join(f.parents)} resolves to schema type:"
@@ -101,9 +100,9 @@ def plan_flatten(schema: StructType, fields: list[Field]) -> list[str] | None:
                 if sub.name in excluded:
                     continue
                 _check_flatten_leaf(sub.dataType, ".".join((*f.parents, sub.name)), schema)
-                out.append(sql.alias(_path_expr((*f.parents, sub.name)), alloc.allocate(sub.name)))
+                out.append(typed.alias(typed.member(parent, sub), alloc.allocate(sub.name)))
         else:
-            leaf = _resolve(schema, (*f.parents, f.name))
-            _check_flatten_leaf(leaf, f.path, schema)
-            out.append(sql.alias(_path_expr((*f.parents, f.name)), alloc.allocate(f.alias)))
+            leaf_dtype, leaf = _resolve(schema, (*f.parents, f.name))
+            _check_flatten_leaf(leaf_dtype, f.path, schema)
+            out.append(typed.alias(leaf, alloc.allocate(f.alias)))
     return out

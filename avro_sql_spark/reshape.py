@@ -8,7 +8,8 @@ expression string per output column, and applied with a single
 the same plan works unchanged under Structured Streaming). Catalyst
 parses the strings into the same expression trees the ``Column`` API
 would build, at one JVM call per output column instead of one per
-expression node.
+expression node. The plan also carries the field Catalyst gives each
+column, so the output schema alone (``reshape_schema``) needs no JVM.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from .errors import AvroSqlError
 from .plans.fields import Field, parse
 from .plans.flatten import plan_flatten
 from .plans.structure import plan_withstructure
+from .plans.typed import PlanColumn
 
 
 def reshape(df: DataFrame, query: str) -> DataFrame:
@@ -30,15 +32,20 @@ def reshape(df: DataFrame, query: str) -> DataFrame:
     return reshape_fields(df, fields, flatten=not withstructure)
 
 
-def plan_fields(schema: StructType, fields: list[Field], flatten: bool = True) -> list[str] | None:
-    """Plan ``fields`` over ``schema``: the SQL select list, or ``None``
-    for identity. Needs no session, so a plan can be kept and applied
-    to any frame of this schema."""
+def plan_fields(schema: StructType, fields: list[Field], flatten: bool = True) -> list[PlanColumn] | None:
+    """Plan ``fields`` over ``schema``: the SQL select list with each
+    column's field, or ``None`` for identity. Needs no session, so a plan
+    can be kept and applied to any frame of this schema."""
     return plan_flatten(schema, fields) if flatten else plan_withstructure(schema, fields)
 
 
-def apply_plan(df: DataFrame, plan: list[str] | None) -> DataFrame:
-    return df if plan is None else df.selectExpr(*plan)
+def plan_schema(schema: StructType, plan: list[PlanColumn] | None) -> StructType:
+    """The schema of ``plan`` applied to a frame of ``schema``."""
+    return schema if plan is None else StructType([c.field for c in plan])
+
+
+def apply_plan(df: DataFrame, plan: list[PlanColumn] | None) -> DataFrame:
+    return df if plan is None else df.selectExpr(*(c.sql for c in plan))
 
 
 def reshape_fields(df: DataFrame, fields: list[Field], flatten: bool = True) -> DataFrame:
@@ -69,16 +76,10 @@ def reshape_container(df: DataFrame, query: str) -> DataFrame:
     )
 
 
-def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
-    """A frame of ``schema`` with no rows, as a local relation: three JVM
-    calls, where ``createDataFrame([], schema)`` makes 32 to ship an
-    empty Python RDD."""
-    js = spark._jsparkSession
-    return DataFrame(js.createDataFrame([], js.parseDataType(schema.json())), spark)
-
-
 def reshape_schema(spark: SparkSession, schema: StructType, query: str) -> StructType:
     """Schema-only transform (reference O3, ``Schema.copy``,
     AvroSchemaSql.scala:77-85): derive the output schema without any
-    data — this is the planner applied to an empty frame."""
-    return reshape(empty_frame(spark, schema), query).schema
+    data. The planner types every column it emits as Catalyst would, so
+    this makes no JVM call; ``spark`` is unused and kept for callers."""
+    fields, withstructure = parse(query)
+    return plan_schema(schema, plan_fields(schema, fields, flatten=not withstructure))

@@ -1,9 +1,11 @@
 """Compat-layer tests: the reference's record.sql() calling convention
 over Avro-JSON dicts, parse/plan once."""
 
+from avro_sql_spark import reshape
 from avro_sql_spark.compat import AvroSqlProcessor
 from tests.test_avro_io import PERSON_AVRO
 from tests.test_avro_schema import PIZZA_AVRO
+from tests.test_sqltext import py4j_calls
 
 PIZZA_REC = {
     "name": "pepperoni",
@@ -130,3 +132,14 @@ def test_processor_resolves_named_type_reference(spark):
     ]
     nullable = {f.name: f.nullable for f in p.out_schema.fields}
     assert nullable == {"name": False, "streetName": False, "streetName2": True}
+
+
+def test_processor_plans_without_jvm(spark, monkeypatch):
+    """The processor takes its output schema from the plan: building it
+    makes no JVM call, and the schema is the one Catalyst gives the
+    reshaped batch."""
+    q = "SELECT ingredients.name AS n, calories FROM topic withstructure"
+    n_calls, p = py4j_calls(spark, monkeypatch, lambda: AvroSqlProcessor(spark, PIZZA_AVRO, q))
+    assert n_calls == 0
+    assert p.out_schema == reshape(spark.createDataFrame([], p.in_schema), q).schema
+    assert p.apply([PIZZA_REC]) == [{"ingredients": [{"n": "pepperoni"}, {"n": "onions"}], "calories": 98}]

@@ -17,6 +17,7 @@ import string
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.errors import AnalysisException
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -29,7 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from avro_sql_spark import reshape, reshape_schema
+from avro_sql_spark import AvroSqlError, reshape, reshape_schema
 
 NAMES = st.text(alphabet=string.ascii_lowercase, min_size=1, max_size=6)
 ATOMS = [
@@ -42,11 +43,19 @@ ATOMS = [
 ATOM_VALUES = {type(dtype): strat for dtype, strat in ATOMS}
 
 
+AVRO_METADATA = st.dictionaries(
+    st.sampled_from(("avro.doc", "avro.order", "avro.aliases")),
+    st.one_of(st.integers(0, 3), st.text(alphabet=string.ascii_lowercase, max_size=3)),
+    max_size=2,
+)
+
+
 @st.composite
-def schemas(draw, depth: int = 2, containers: bool = False) -> StructType:
+def schemas(draw, depth: int = 2, containers: bool = False, metadata: bool = False) -> StructType:
     """A random struct schema (up to ``depth`` nesting levels, unique
     names per level). With ``containers``, fields may also be arrays of
-    records and string-keyed maps of atoms."""
+    records and string-keyed maps of atoms or records. With
+    ``metadata``, fields carry ``avro.*`` metadata."""
     n_fields = draw(st.integers(1, 4))
     names = draw(
         st.lists(NAMES, min_size=n_fields, max_size=n_fields, unique=True)
@@ -58,14 +67,16 @@ def schemas(draw, depth: int = 2, containers: bool = False) -> StructType:
         kind = draw(st.sampled_from(kinds))
         atom = ATOMS[draw(st.integers(0, len(ATOMS) - 1))][0]
         if depth > 0 and kind == "record":
-            dtype = draw(schemas(depth - 1, containers))
+            dtype = draw(schemas(depth - 1, containers, metadata))
         elif depth > 0 and kind == "array":
-            dtype = ArrayType(draw(schemas(depth - 1, containers)), draw(st.booleans()))
+            dtype = ArrayType(draw(schemas(depth - 1, containers, metadata)), draw(st.booleans()))
         elif kind == "map":
+            if depth > 0 and draw(st.booleans()):
+                atom = draw(schemas(depth - 1, containers, metadata))
             dtype = MapType(StringType(), atom, draw(st.booleans()))
         else:
             dtype = atom
-        fields.append(StructField(name, dtype, nullable))
+        fields.append(StructField(name, dtype, nullable, draw(AVRO_METADATA) if metadata else None))
     return StructType(fields)
 
 
@@ -87,18 +98,25 @@ def values_of(draw, dtype, nullable: bool):
 
 
 @st.composite
-def schema_and_row(draw, depth: int = 2, containers: bool = False):
+def schema_and_row(draw, depth: int = 2, containers: bool = False, metadata: bool = False):
     """A random schema (see :func:`schemas`) plus one matching row."""
-    schema = draw(schemas(depth, containers))
+    schema = draw(schemas(depth, containers, metadata))
     return schema, draw(values_of(schema, False))
 
 
-def leaf_paths(schema: StructType, prefix=()):
+def typed_leaves(schema: StructType, prefix=()):
+    """``(path, type)`` of every non-record field reached through
+    records."""
     for f in schema.fields:
         if isinstance(f.dataType, StructType):
-            yield from leaf_paths(f.dataType, (*prefix, f.name))
+            yield from typed_leaves(f.dataType, (*prefix, f.name))
         else:
-            yield (*prefix, f.name)
+            yield (*prefix, f.name), f.dataType
+
+
+def leaf_paths(schema: StructType):
+    for path, _ in typed_leaves(schema):
+        yield path
 
 
 def value_at(row, path):
@@ -195,16 +213,66 @@ def test_flatten_leaves_match_source(spark, sr):
         assert collected[a] == value_at(src, p), (p, a)
 
 
-@given(sr=schema_and_row())
+MAP_KEYS = st.sampled_from(("k", "kk"))
+
+
+@st.composite
+def ws_queries(draw, schema: StructType) -> str:
+    """A withstructure query over ``schema``: one to four items, each a
+    path through records, arrays (transparent to paths) and map keys,
+    sometimes on into a map's values, selected as is, aliased or
+    starred. Not every query is valid."""
+    items = []
+    for _ in range(draw(st.integers(1, 4))):
+        path, t = [], schema
+        while True:
+            while isinstance(t, ArrayType):
+                t = t.elementType
+            if isinstance(t, StructType):
+                f = draw(st.sampled_from(t.fields))
+                path.append(f.name)
+                t = f.dataType
+            elif isinstance(t, MapType):
+                path.append(draw(MAP_KEYS))
+                t = t.valueType
+            else:
+                break
+            if draw(st.booleans()):
+                break
+        item = ".".join(f"`{seg}`" for seg in path)
+        form = draw(st.sampled_from(("path", "alias", "star")))
+        if form == "alias":
+            item += f" AS `{draw(NAMES)}`"
+        elif form == "star":
+            item += ".*"
+        items.append(item)
+    return "SELECT " + ", ".join(items) + " withstructure"
+
+
+@given(sr=schema_and_row(containers=True, metadata=True), data=st.data())
 @HSET
-def test_schema_derivable_without_data(spark, sr):
+def test_schema_derivable_without_data(spark, sr, data):
+    """``reshape_schema`` types every column from the schema alone
+    exactly as Catalyst types the reshaped frame, nullability and field
+    metadata included, and raises on the same queries. Queries: the
+    flatten of every leaf reached through records, and withstructure
+    queries through arrays and map keys."""
     schema, row = sr
     df = spark.createDataFrame([row], schema)
-    paths = list(leaf_paths(schema))
-    q = "SELECT " + ", ".join(
-        f"{'.'.join(p)} as c{i}" for i, p in enumerate(paths)
-    )
-    assert reshape_schema(spark, schema, q) == reshape(df, q).schema
+    flat = [p for p, t in typed_leaves(schema) if not isinstance(t, (ArrayType, MapType))]
+    queries = [data.draw(ws_queries(schema)) for _ in range(3)]
+    if flat:
+        queries.append("SELECT " + ", ".join(
+            ".".join(f"`{seg}`" for seg in p) + f" AS c{i}" for i, p in enumerate(flat)
+        ))
+    for q in queries:
+        try:
+            want = reshape(df, q).schema
+        except (AvroSqlError, AnalysisException):
+            with pytest.raises(AvroSqlError):
+                reshape_schema(spark, schema, q)
+        else:
+            assert reshape_schema(spark, schema, q) == want, q
 
 
 @given(sr=schema_and_row())

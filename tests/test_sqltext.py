@@ -20,7 +20,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from avro_sql_spark import reshape
+from avro_sql_spark import reshape, reshape_schema
 from avro_sql_spark.plans import parse, plan_flatten, plan_withstructure
 from avro_sql_spark.plans import sqltext as sql
 from tests.conftest import PERSON_SCHEMA, PIZZA_SCHEMA
@@ -53,9 +53,13 @@ def test_field_uses_dereference_for_quote_and_backslash_names():
     assert sql.field("__e1", "p\\q") == "__e1.`p\\q`"
 
 
+def _text(plan):
+    return [c.sql for c in plan]
+
+
 def test_flatten_plan_text():
     fields, _ = parse("SELECT name, address.street.name AS sn")
-    assert plan_flatten(PERSON_SCHEMA, fields) == [
+    assert _text(plan_flatten(PERSON_SCHEMA, fields)) == [
         "`name` AS `name`",
         "`address`['street']['name'] AS `sn`",
     ]
@@ -63,7 +67,7 @@ def test_flatten_plan_text():
 
 def test_withstructure_plan_text_and_null_guard():
     fields, _ = parse("SELECT address.street2.name AS s2 withstructure")
-    assert plan_withstructure(PERSON_SCHEMA, fields) == [
+    assert _text(plan_withstructure(PERSON_SCHEMA, fields)) == [
         "struct(CASE WHEN `address`['street2'] IS NOT NULL"
         " THEN struct(`address`['street2']['name'] AS `s2`) END AS `street2`) AS `address`"
     ]
@@ -75,14 +79,14 @@ def test_lambda_names_are_fresh_per_plan():
         "`name` AS `name`",
         "transform(`ingredients`, __e1 -> struct(__e1['name'] AS `n`)) AS `ingredients`",
     ]
-    assert plan_withstructure(PIZZA_SCHEMA, fields) == want
-    assert plan_withstructure(PIZZA_SCHEMA, fields) == want
+    assert _text(plan_withstructure(PIZZA_SCHEMA, fields)) == want
+    assert _text(plan_withstructure(PIZZA_SCHEMA, fields)) == want
 
 
 def test_map_plan_text():
     schema = StructType([StructField("m", MapType(StringType(), IntegerType()))])
     fields, _ = parse("SELECT m.a AS x, m.b withstructure")
-    assert plan_withstructure(schema, fields) == [
+    assert _text(plan_withstructure(schema, fields)) == [
         "map_from_entries(transform("
         "filter(map_entries(`m`), __e1 -> __e1['key'] IN ('a', 'b')), "
         "__e2 -> struct(CASE WHEN __e2['key'] = 'a' THEN 'x' ELSE __e2['key'] END AS `key`, "
@@ -227,14 +231,8 @@ WIDE_QUERIES = {
 }
 
 
-@pytest.mark.parametrize("mode", sorted(WIDE_QUERIES))
-def test_reshape_round_trips_per_output_column(spark, monkeypatch, mode):
-    """py4j calls made by one ``reshape()`` stay within the top-level
-    output columns plus a fixed few: planning crosses into the JVM
-    nowhere, the select once per column (columns + 7 at present)."""
-    schema = _wide_schema()
-    assert _leaves(schema) == 90
-    df = spark.createDataFrame([], schema)
+def py4j_calls(spark, monkeypatch, fn):
+    """``(number of py4j calls fn() makes on this thread, its result)``."""
     client = spark.sparkContext._gateway._gateway_client
     calls = []
     send = client.send_command
@@ -248,8 +246,34 @@ def test_reshape_round_trips_per_output_column(spark, monkeypatch, mode):
         return send(*args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", counted)
-    out = reshape(df, WIDE_QUERIES[mode])
-    monkeypatch.undo()
+    try:
+        out = fn()
+    finally:
+        monkeypatch.undo()
+    return len(calls), out
+
+
+@pytest.mark.parametrize("mode", sorted(WIDE_QUERIES))
+def test_reshape_round_trips_per_output_column(spark, monkeypatch, mode):
+    """py4j calls made by one ``reshape()`` stay within the top-level
+    output columns plus a fixed few: planning crosses into the JVM
+    nowhere, the select once per column (columns + 7 at present)."""
+    schema = _wide_schema()
+    assert _leaves(schema) == 90
+    df = spark.createDataFrame([], schema)
+    n_calls, out = py4j_calls(spark, monkeypatch, lambda: reshape(df, WIDE_QUERIES[mode]))
     n_cols = len(out.columns)
     assert n_cols >= 10
-    assert len(calls) <= n_cols + 10, (len(calls), n_cols)
+    assert n_calls <= n_cols + 10, (n_calls, n_cols)
+
+
+@pytest.mark.parametrize("mode", sorted(WIDE_QUERIES))
+def test_reshape_schema_makes_no_jvm_call(spark, monkeypatch, mode):
+    """The planner types what it emits, so the schema alone needs no
+    JVM, and it is the schema Catalyst gives the reshaped frame."""
+    schema = _wide_schema()
+    n_calls, out = py4j_calls(
+        spark, monkeypatch, lambda: reshape_schema(spark, schema, WIDE_QUERIES[mode])
+    )
+    assert n_calls == 0
+    assert out == reshape(spark.createDataFrame([], schema), WIDE_QUERIES[mode]).schema
