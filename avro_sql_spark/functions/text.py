@@ -181,43 +181,23 @@ def gopher_signal_columns(text: Column) -> dict[str, Column]:
 
 
 def gopher_pass_of(
-    n: Column,
-    stop_hits: Column,
-    mwl: Column,
-    symbol_ratio: Column,
-    alpha_frac: Column,
-    min_tokens: int = 30,
-    max_tokens: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.05,
-    min_alpha_fraction: float = 0.8,
-    min_stopword_hits: int = 1,
+    n: Column, stop_hits: Column, mwl: Column, symbol_ratio: Column, alpha_frac: Column
 ) -> Column:
     """Gopher gate over ALREADY-PROJECTED signal columns (see
     :func:`gopher_signal_columns`); :func:`gopher_pass` is the
     plain-text convenience form of this."""
     return (
-        (n >= min_tokens)
-        & (n <= max_tokens)
-        & (mwl >= min_mean_word_len)
-        & (mwl <= max_mean_word_len)
-        & (symbol_ratio <= max_symbol_ratio)
-        & (alpha_frac >= min_alpha_fraction)
-        & (stop_hits >= min_stopword_hits)
+        (n >= 30)
+        & (n <= 100_000)
+        & (mwl >= 3.0)
+        & (mwl <= 10.0)
+        & (symbol_ratio <= 0.05)
+        & (alpha_frac >= 0.8)
+        & (stop_hits >= 1)
     )
 
 
-def gopher_pass(
-    text: Column,
-    min_tokens: int = 30,
-    max_tokens: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.05,
-    min_alpha_fraction: float = 0.8,
-    min_stopword_hits: int = 1,
-) -> Column:
+def gopher_pass(text: Column) -> Column:
     """Gopher-style document quality gate (Rae et al. 2021 §A1.1,
     adapted): token-count window, mean-word-length window, symbol ratio,
     alphabetic-word fraction, and a minimum count of English stopwords.
@@ -229,13 +209,6 @@ def gopher_pass(
         sig["mean_word_len"],
         sig["symbol_ratio"],
         sig["alpha_frac"],
-        min_tokens=min_tokens,
-        max_tokens=max_tokens,
-        min_mean_word_len=min_mean_word_len,
-        max_mean_word_len=max_mean_word_len,
-        max_symbol_ratio=max_symbol_ratio,
-        min_alpha_fraction=min_alpha_fraction,
-        min_stopword_hits=min_stopword_hits,
     )
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from ._pins import RoundPins
 
 
-def word_freq_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_freq_tokens(docs: DataFrame) -> DataFrame:
     """(word, freq, toks) over the SHARED tokenizer's words
     (functions.text.word_tokens — whitespace split, pure ^[a-z]+$ — so
     the learned merges cover the same token universe as the unigram/
@@ -34,7 +34,7 @@ def word_freq_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
     from ..functions.text import word_tokens
 
     words = docs.select(
-        F.explode(word_tokens(F.col(text_col))).alias("word")
+        F.explode(word_tokens(F.col("text"))).alias("word")
     )
     wf = words.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
     return wf.select(
@@ -92,7 +92,7 @@ def _apply_merge(words: DataFrame, left: str, right: str) -> DataFrame:
 
 
 def train_bpe_state(
-    docs: DataFrame, n_merges: int = 8, text_col: str = "text"
+    docs: DataFrame, n_merges: int = 8
 ) -> "tuple[list[tuple], DataFrame]":
     """The training loop behind :func:`train_bpe`, also returning the
     FINAL rewritten word table (word, freq, toks) — the state a
@@ -105,7 +105,7 @@ def train_bpe_state(
     never consumes the final word table (train_bpe) never pays the
     last rewrite at all."""
     rounds = RoundPins()
-    words = rounds.pin(word_freq_tokens(docs, text_col))
+    words = rounds.pin(word_freq_tokens(docs))
     merges = []
     for rank in range(n_merges):
         top = (
@@ -123,26 +123,19 @@ def train_bpe_state(
     return merges, words
 
 
-def train_bpe(
-    docs: DataFrame, n_merges: int = 8, text_col: str = "text"
-) -> DataFrame:
+def train_bpe(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     """Learn ``n_merges`` BPE merges; returns (rank, left, right,
     merged, n) — the merge table a tokenizer ships."""
     spark: SparkSession = docs.sparkSession
-    merges, _words = train_bpe_state(docs, n_merges, text_col)
+    merges, _words = train_bpe_state(docs, n_merges)
     return spark.createDataFrame(
         merges, "rank int, left string, right string, merged string, n bigint"
     )
 
 
-def bpe_fertility(
-    docs: DataFrame,
-    n_merges: int = 8,
-    text_col: str = "text",
-    group_col: str = "source",
-) -> DataFrame:
+def bpe_fertility(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     """Tokenizer-efficiency audit: train ``n_merges`` BPE merges on the
-    corpus, then report per ``group_col`` the FERTILITY (subword tokens
+    corpus, then report per ``source`` the FERTILITY (subword tokens
     per word) and compression (chars per token) the tokenizer achieves
     there — the table that decides whether a tokenizer is retrained
     before a new data mixture ships (a domain with outlier fertility
@@ -154,7 +147,7 @@ def bpe_fertility(
     occurrence counts as a BROADCAST build side (a vocabulary is
     bounded; the corpus is not). All sums are integers; each reported
     ratio is one division of two exact sums."""
-    _merges, words = train_bpe_state(docs, n_merges, text_col)
+    _merges, words = train_bpe_state(docs, n_merges)
     from ..functions.text import word_tokens
 
     vocab = words.select(
@@ -163,13 +156,13 @@ def bpe_fertility(
         F.length("word").alias("n_chars"),
     )
     occ = (
-        docs.select(F.col(group_col).alias("grp"), F.explode(word_tokens(F.col(text_col))).alias("word"))
+        docs.select(F.col("source").alias("grp"), F.explode(word_tokens(F.col("text"))).alias("word"))
         .groupBy("grp", "word")
         .agg(F.count(F.lit(1)).alias("occ"))
     )
     return (
         occ.join(F.broadcast(vocab), "word")
-        .groupBy(F.col("grp").alias(group_col))
+        .groupBy(F.col("grp").alias("source"))
         .agg(
             F.sum("occ").alias("n_words"),
             F.sum(F.col("occ") * F.col("n_toks")).alias("n_tokens"),
@@ -184,5 +177,5 @@ def bpe_fertility(
                 6,
             ).alias("chars_per_token"),
         )
-        .orderBy(group_col)
+        .orderBy("source")
     )

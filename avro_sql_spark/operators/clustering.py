@@ -133,54 +133,35 @@ def lloyd_centroids(
     return cents
 
 
-def kmeans_lloyd(
-    emb: DataFrame,
-    k: int = 4,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_lloyd(emb: DataFrame, k: int = 4, iterations: int = 2) -> DataFrame:
     """Fixed-iteration Lloyd k-means. Returns one row per point:
-    (id_col, cluster, sqdist) after `iterations` centroid updates.
+    (vec_id, cluster, sqdist) after `iterations` centroid updates.
 
     Each iteration: assign (in-row arithmetic against broadcast centroid
     literals) then update (posexplode → groupBy(cluster, dim) avg — the
     shuffle is k x d cells). A cluster that loses every point keeps its
     previous centroid (the standard empty-cluster rule)."""
-    cents = lloyd_centroids(emb, k, iterations, id_col, vec_col)
-    out = _assign(emb, cents, vec_col)
-    return out.select(id_col, "cluster", F.col("_dist").alias("sqdist"))
+    cents = lloyd_centroids(emb, k, iterations)
+    out = _assign(emb, cents, "embedding")
+    return out.select("vec_id", "cluster", F.col("_dist").alias("sqdist"))
 
 
-def kmeans_report(
-    emb: DataFrame,
-    k: int = 4,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 4,
-) -> DataFrame:
+def kmeans_report(emb: DataFrame, k: int = 4, iterations: int = 2) -> DataFrame:
     """Cluster-quality rollup of :func:`kmeans_lloyd`: per cluster the
     member count and the mean squared distance to its centroid — the
     inertia decomposition every clustering dashboard shows."""
-    a = kmeans_lloyd(emb, k, iterations, id_col, vec_col)
+    a = kmeans_lloyd(emb, k, iterations)
     return (
         a.groupBy("cluster")
         .agg(
             F.count(F.lit(1)).alias("n_points"),
-            F.round(F.avg("sqdist"), round_to).alias("mean_sqdist"),
+            F.round(F.avg("sqdist"), 4).alias("mean_sqdist"),
         )
         .orderBy("cluster")
     )
 
 
-def kmeans_silhouette(
-    emb: DataFrame,
-    k: int = 4,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_silhouette(emb: DataFrame, k: int = 4, iterations: int = 2) -> DataFrame:
     """Centroid-simplified silhouette of the Lloyd partition: per point
     s = (b − a)/max(a, b) with a = distance to the OWN centroid and
     b = distance to the nearest OTHER centroid (the O(n·k) medoid-free
@@ -195,7 +176,7 @@ def kmeans_silhouette(
     unrolled left-associated sum as ``_assign``, takes the two
     smallest via array_sort, and quantizes each point's s at 9dp into
     DECIMAL(38,9) so cluster averages are order-free."""
-    cents = lloyd_centroids(emb, k, iterations, id_col, vec_col)
+    cents = lloyd_centroids(emb, k, iterations)
     d = len(cents[0])
     dists = ", ".join(
         " + ".join(
@@ -205,13 +186,13 @@ def kmeans_silhouette(
         for c in cents
     )
     scored = (
-        emb.selectExpr("*", f"cast(`{vec_col}` as array<double>) AS _v")
+        emb.selectExpr("*", "cast(`embedding` as array<double>) AS _v")
         .selectExpr(
-            f"`{id_col}`",
+            "`vec_id`",
             f"array({dists}) AS _dists",
         )
         .selectExpr(
-            f"`{id_col}`",
+            "`vec_id`",
             "cast(array_position(_dists, array_min(_dists)) - 1 as int)"
             " AS cluster",
             "sqrt(element_at(array_sort(_dists), 1)) AS a",

@@ -43,20 +43,15 @@ def hash_unit(key: Column, salt: str = "") -> Column:
     return ((h % _BUCKETS) / F.lit(float(_BUCKETS))).cast("double")
 
 
-def deterministic_split(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    weights: dict[str, float] | None = None,
-    salt: str = "split",
-) -> DataFrame:
+def deterministic_split(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Add a ``split`` column assigning each row to one named fraction
-    (default 90/5/5 train/val/test). Assignment is a pure function of the
+    (90/5/5 train/val/test). Assignment is a pure function of the
     id, so it is stable across reruns and engines, and a given row keeps
     its split even as the rest of the dataset grows — the property that
     prevents test-set leakage when a corpus is re-crawled."""
-    weights = weights or {"train": 0.9, "val": 0.05, "test": 0.05}
+    weights = {"train": 0.9, "val": 0.05, "test": 0.05}
     total = sum(weights.values())
-    u = hash_unit(F.col(id_col), salt)
+    u = hash_unit(F.col(id_col), "split")
     expr = None
     acc = 0.0
     names = list(weights)
@@ -69,22 +64,17 @@ def deterministic_split(
 
 
 def deterministic_sample(
-    df: DataFrame, id_col: str = "doc_id", fraction: float = 0.1, salt: str = "sample"
+    df: DataFrame, fraction: float = 0.1, salt: str = "sample"
 ) -> DataFrame:
     """Keep ~``fraction`` of rows, chosen by id hash — reproducible,
     partitioning-independent, and composable (samples with different
     salts are independent; the same salt at a larger fraction is a
     superset, which makes growing a sample cheap)."""
-    return df.filter(hash_unit(F.col(id_col), salt) < fraction)
+    return df.filter(hash_unit(F.col("doc_id"), salt) < fraction)
 
 
 def stratified_sample(
-    df: DataFrame,
-    strata_col: str,
-    fractions: dict[str, float],
-    id_col: str = "doc_id",
-    default_fraction: float = 0.0,
-    salt: str = "strata",
+    df: DataFrame, strata_col: str, fractions: dict[str, float]
 ) -> DataFrame:
     """Per-stratum deterministic sampling (e.g. language rebalancing:
     keep 100% of rare languages, 5% of English). Row-local like
@@ -93,15 +83,12 @@ def stratified_sample(
     for value, f in fractions.items():
         cond = F.col(strata_col) == value
         frac = F.when(cond, F.lit(f)) if frac is None else frac.when(cond, F.lit(f))
-    frac = F.lit(default_fraction) if frac is None else frac.otherwise(F.lit(default_fraction))
-    return df.filter(hash_unit(F.col(id_col), salt) < frac)
+    frac = F.lit(0.0) if frac is None else frac.otherwise(F.lit(0.0))
+    return df.filter(hash_unit(F.col("doc_id"), "strata") < frac)
 
 
 def quality_shards(
-    df: DataFrame,
-    n_shards: int = 8,
-    score: Column | None = None,
-    id_col: str = "doc_id",
+    df: DataFrame, n_shards: int = 8, score: Column | None = None
 ) -> DataFrame:
     """Assign rows to ``n_shards`` quality-ordered shards (shard 1 =
     best) with SQL-NTILE semantics over (score desc, id) — the
@@ -117,7 +104,7 @@ def quality_shards(
     score = quality_score(F.col("text")) if score is None else score
     scored = df.withColumn("quality", score)
     return exact_ntile(
-        scored, [F.desc("quality"), F.asc(id_col)], n_shards, out_col="shard"
+        scored, [F.desc("quality"), F.asc("doc_id")], n_shards, out_col="shard"
     )
 
 
@@ -125,7 +112,6 @@ def quality_shards_approx(
     df: DataFrame,
     n_shards: int = 8,
     score: Column | None = None,
-    id_col: str = "doc_id",
     relative_error: float = 0.001,
 ) -> DataFrame:
     """The one-pass variant of :func:`quality_shards`: the exact
@@ -156,16 +142,10 @@ def quality_shards_approx(
     return scored.withColumn("shard", expr.otherwise(F.lit(n_shards)))
 
 
-def quality_shards_sampled(
-    df: DataFrame,
-    n_shards: int = 8,
-    score: Column | None = None,
-    id_col: str = "doc_id",
-    rate: float = 0.2,
-    salt: str = "shardsample",
-) -> DataFrame:
+def quality_shards_sampled(df: DataFrame, n_shards: int = 8) -> DataFrame:
     """The ORACLE-REPLAYABLE sketch-sharding twin of
-    :func:`quality_shards_approx`: shard cuts come from EXACT ORDER
+    :func:`quality_shards_approx`, scoring ``quality_score(text)`` into
+    ``quality`` and keyed by ``doc_id``: shard cuts come from EXACT ORDER
     STATISTICS of a deterministic md5-hash sample instead of a
     Greenwald-Khanna sketch. Every step is a closed-form function of
     the data — the hash sample is :func:`hash_unit` (engine-portable),
@@ -175,17 +155,16 @@ def quality_shards_sampled(
     broadcast-cut comparison as the GK path. A SQL engine replays it
     exactly; GK's merge-order-dependent cuts never can.
 
-    Scale shape: the sample is rate-bounded; ranking it uses
+    Scale shape: the sample is rate-bounded (20%); ranking it uses
     :func:`global_rank` (two-pass range-partitioned — no task sorts
     more than one range partition), the 7 cuts collapse to ONE row via
     conditional aggregation, and the full table sees only a broadcast
     of that row. No global sort anywhere."""
     from ..functions.text import quality_score
 
-    score = quality_score(F.col("text")) if score is None else score
-    scored = df.withColumn("quality", score.cast("double"))
-    sample = scored.filter(hash_unit(F.col(id_col), salt) < rate).select(
-        F.col(id_col).alias("_sid"), "quality"
+    scored = df.withColumn("quality", quality_score(F.col("text")).cast("double"))
+    sample = scored.filter(hash_unit(F.col("doc_id"), "shardsample") < 0.2).select(
+        F.col("doc_id").alias("_sid"), "quality"
     )
     # the sample size rides along from global_rank's own partition-
     # counts frame (total_col) — the former separate count aggregate
@@ -219,18 +198,12 @@ def quality_shards_sampled(
     ).drop(*[f"c{j}" for j in range(1, n_shards)])
 
 
-def pack_sequences(
-    df: DataFrame,
-    budget: int = 2048,
-    n_groups: int = 64,
-    id_col: str = "doc_id",
-    tokens: Column | None = None,
-    salt: str = "pack",
-) -> DataFrame:
-    """Assign each document a training-sequence slot: ``pack_group``
-    (which parallel packing stream), ``seq_id`` (which ~``budget``-token
-    sequence within the stream), ``seq_offset`` (the document's token
-    offset inside that sequence).
+def pack_sequences(df: DataFrame, budget: int = 2048, n_groups: int = 64) -> DataFrame:
+    """Assign each ``doc_id`` a training-sequence slot, counting the
+    whitespace tokens of ``text``: ``pack_group`` (which parallel
+    packing stream), ``seq_id`` (which ~``budget``-token sequence within
+    the stream), ``seq_offset`` (the document's token offset inside that
+    sequence).
 
     Semantics are token-offset packing — concatenate the group's docs in
     id order and cut every ``budget`` tokens; a doc belongs to the
@@ -247,13 +220,12 @@ def pack_sequences(
     DuckDB oracle reproduces the exact assignment."""
     from ..functions.text import whitespace_token_count
 
-    tokens = whitespace_token_count(F.col("text")) if tokens is None else tokens
     grouped = df.withColumn(
-        "pack_group", F.floor(hash_unit(F.col(id_col), salt) * n_groups).cast("int")
-    ).withColumn("n_tokens", tokens.cast("bigint"))
+        "pack_group", F.floor(hash_unit(F.col("doc_id"), "pack") * n_groups).cast("int")
+    ).withColumn("n_tokens", whitespace_token_count(F.col("text")).cast("bigint"))
     w = (
         Window.partitionBy("pack_group")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     cum_before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
@@ -262,11 +234,7 @@ def pack_sequences(
     )
 
 
-def mixture(
-    sources: dict[str, tuple[DataFrame, float]],
-    id_col: str = "doc_id",
-    salt: str = "mix",
-) -> DataFrame:
+def mixture(sources: dict[str, tuple[DataFrame, float]]) -> DataFrame:
     """Deterministic weighted dataset mixture: for each named source,
     weight w keeps floor(w) full copies (tagged ``epoch`` 0..floor(w)-1)
     plus a deterministic-hash sample of the fractional remainder — the
@@ -289,7 +257,7 @@ def mixture(
         frac = weight - whole
         if frac > 0:
             part = (
-                df.filter(hash_unit(F.col(id_col), f"{salt}:{name}:{whole}") < frac)
+                df.filter(hash_unit(F.col("doc_id"), f"mix:{name}:{whole}") < frac)
                 .withColumn("source", F.lit(name))
                 .withColumn("epoch", F.lit(whole))
             )
@@ -300,11 +268,7 @@ def mixture(
 
 
 def chunk_documents(
-    docs: DataFrame,
-    chunk_size: int = 128,
-    stride: int = 96,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, chunk_size: int = 128, stride: int = 96
 ) -> DataFrame:
     """Fixed-stride token chunking with overlap — the standard
     long-document → training-example splitter (stride < chunk_size
@@ -318,16 +282,16 @@ def chunk_documents(
     none. The trailing chunk may be shorter than ``chunk_size``."""
     if not (0 < stride <= chunk_size):
         raise ValueError("need 0 < stride <= chunk_size")
-    tokens = F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != "")
+    tokens = F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != "")
     n = F.size(F.col("__tk"))
     starts = F.when(n >= 1, F.sequence(F.lit(0), n - 1, F.lit(stride))).otherwise(
         F.array().cast("array<int>")
     )
     return (
-        docs.select(F.col(id_col), tokens.alias("__tk"))
-        .select(F.col(id_col), F.col("__tk"), F.posexplode(starts).alias("chunk_idx", "s"))
+        docs.select(F.col("doc_id"), tokens.alias("__tk"))
+        .select(F.col("doc_id"), F.col("__tk"), F.posexplode(starts).alias("chunk_idx", "s"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("chunk_idx").cast("int").alias("chunk_idx"),
             F.least(F.size("__tk") - F.col("s"), F.lit(chunk_size))
             .cast("int")
@@ -337,50 +301,36 @@ def chunk_documents(
     )
 
 
-def deterministic_take(
-    docs: DataFrame, k: int, id_col: str = "doc_id", salt: str = ""
-) -> DataFrame:
+def deterministic_take(docs: DataFrame, k: int, salt: str = "") -> DataFrame:
     """Exactly-k deterministic sample: the k rows with the smallest
     salted hash — a rerun-stable, engine-portable alternative to
     df.limit(k) (which is partition-order-dependent) for building
     fixed-size eval sets. TakeOrderedAndProject keeps per-partition
     heaps of k, so no global sort materializes."""
     return (
-        docs.withColumn("__u", hash_unit(F.col(id_col), f"{salt}:take"))
-        .orderBy("__u", id_col)
+        docs.withColumn("__u", hash_unit(F.col("doc_id"), f"{salt}:take"))
+        .orderBy("__u", "doc_id")
         .limit(k)
         .drop("__u")
     )
 
 
-def stratified_take(
-    docs: DataFrame,
-    k_per_group: int,
-    group_col: str,
-    id_col: str = "doc_id",
-    salt: str = "",
-) -> DataFrame:
+def stratified_take(docs: DataFrame, k_per_group: int, group_col: str) -> DataFrame:
     """Exactly k rows PER GROUP by smallest salted hash (rank window
     per group) — balanced eval sets from skewed corpora, where a
     fractional sample would starve small groups. One shuffle on the
     group key; WindowGroupLimit prunes to k per partition before the
     final rank."""
-    w = Window.partitionBy(group_col).orderBy("__u", id_col)
+    w = Window.partitionBy(group_col).orderBy("__u", "doc_id")
     return (
-        docs.withColumn("__u", hash_unit(F.col(id_col), f"{salt}:stake"))
+        docs.withColumn("__u", hash_unit(F.col("doc_id"), ":stake"))
         .withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") <= k_per_group)
         .drop("__u", "__rk")
     )
 
 
-def weighted_take(
-    docs: DataFrame,
-    weight_col: str,
-    k: int,
-    id_col: str = "doc_id",
-    salt: str = "wtake",
-) -> DataFrame:
+def weighted_take(docs: DataFrame, weight_col: str, k: int) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement (Efraimidis-
     Spirakis A-ES): each row gets key ``u^(1/w)`` for a hash-derived
     uniform ``u``, and the k largest keys win — inclusion probability
@@ -393,7 +343,7 @@ def weighted_take(
     (per-partition heap, driver merges k rows) — never a global sort.
     A half-bucket offset keeps u strictly positive (hash_unit quantizes
     to 1e-6 buckets, and ln(0) diverges)."""
-    u = hash_unit(F.col(id_col), salt) + F.lit(0.5 / _BUCKETS)
+    u = hash_unit(F.col("doc_id"), "wtake") + F.lit(0.5 / _BUCKETS)
     key = F.log(u) / F.col(weight_col)
     # rows with weight <= 0 are excluded up front: A-ES is defined for
     # w > 0, a zero weight would throw DIVIDE_BY_ZERO under ANSI mode,
@@ -402,21 +352,13 @@ def weighted_take(
     docs = docs.filter(F.col(weight_col) > 0)
     return (
         docs.withColumn("__aes_key", key)
-        .orderBy(F.desc("__aes_key"), F.col(id_col))
+        .orderBy(F.desc("__aes_key"), F.col("doc_id"))
         .limit(k)
         .drop("__aes_key")
     )
 
 
-def dsir_importance(
-    docs: DataFrame,
-    target: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    buckets: int = 4096,
-    alpha: float = 1.0,
-    round_to: int = 4,
-) -> DataFrame:
+def dsir_importance(docs: DataFrame, target: Column, buckets: int = 4096) -> DataFrame:
     """DSIR-style importance weights (Data Selection via Importance
     Resampling, Xie et al., NeurIPS 2023): score every document by the
     log-likelihood ratio of its hashed n-gram features under a TARGET
@@ -429,7 +371,7 @@ def dsir_importance(
     Features are word unigrams + bigrams WITH multiplicity, hashed into
     ``buckets`` buckets by the md5-derived integer hash (deterministic —
     the DuckDB oracle replays the whole pipeline, hash included).
-    Both models are Laplace-smoothed (``alpha``) over the same bucket
+    Both models are Laplace-smoothed (alpha = 1) over the same bucket
     space, so OOV buckets contribute a finite prior ratio.
 
     Scale shape: the explode+hash pass runs ONCE — it reduces straight
@@ -448,14 +390,14 @@ def dsir_importance(
     # gram/hash work onto a couple of cores, and AQE would coalesce a
     # bare repartition back down — measured 7x on the whole operator)
     n_parts = docs.sparkSession.sparkContext.defaultParallelism
-    base = docs.repartition(n_parts, F.col(id_col)).select(
-        F.col(id_col), target.cast("boolean").alias("is_target"), F.col(text_col)
+    base = docs.repartition(n_parts, F.col("doc_id")).select(
+        F.col("doc_id"), target.cast("boolean").alias("is_target"), F.col("text")
     )
     # tokenize ONCE into a materialized column, then build bigrams from
     # it: word_ngrams() inlines its split() into every element_at, which
     # re-splits the text per gram (fine for short fields, 2x here)
     toks = base.select(
-        F.col(id_col), "is_target", F.split(F.lower(F.col(text_col)), " ").alias("w")
+        F.col("doc_id"), "is_target", F.split(F.lower(F.col("text")), " ").alias("w")
     )
     k = F.size("w") - 1
     # the ONLY thing keeping a k<=0 row safe is F.when's per-row branch
@@ -470,10 +412,10 @@ def dsir_importance(
         ),
     ).otherwise(F.array().cast("array<string>"))
     grams = toks.select(
-        id_col, "is_target", F.explode(F.concat(F.col("w"), bigrams)).alias("g")
+        "doc_id", "is_target", F.explode(F.concat(F.col("w"), bigrams)).alias("g")
     )
     feats = grams.select(
-        id_col,
+        "doc_id",
         "is_target",
         (
             F.conv(F.substring(F.md5(F.col("g").cast("binary")), 1, 12), 16, 10).cast("long")
@@ -486,7 +428,7 @@ def dsir_importance(
     # consumers (model, totals, final reduce); caller owns cleanup,
     # same contract as simhash.
     doc_counts = (
-        feats.groupBy(id_col, "is_target", "b").agg(F.count(F.lit(1)).alias("n")).persist()
+        feats.groupBy("doc_id", "is_target", "b").agg(F.count(F.lit(1)).alias("n")).persist()
     )
     model = doc_counts.groupBy("b").agg(
         F.sum(F.when(F.col("is_target"), F.col("n")).otherwise(0)).alias("ct"),
@@ -496,19 +438,19 @@ def dsir_importance(
     llr_model = model.crossJoin(F.broadcast(tot)).select(
         "b",
         (
-            F.log((F.col("ct") + F.lit(alpha)) / (F.col("tt") + F.lit(alpha * buckets)))
-            - F.log((F.col("cr") + F.lit(alpha)) / (F.col("tr") + F.lit(alpha * buckets)))
+            F.log((F.col("ct") + F.lit(1.0)) / (F.col("tt") + F.lit(float(buckets))))
+            - F.log((F.col("cr") + F.lit(1.0)) / (F.col("tr") + F.lit(float(buckets))))
         ).alias("llr"),
     )
     return (
         doc_counts.join(F.broadcast(llr_model), "b")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("n").alias("n_feats"),
             # + 0.0 normalizes a rounded tiny-negative score's -0.0 (the
             # sign bit surfaced at sf0.1; oracle mirrors with + 0)
             (
-                F.round(F.sum(F.col("n") * F.col("llr")), round_to)
+                F.round(F.sum(F.col("n") * F.col("llr")), 4)
                 + F.lit(0.0)
             ).alias("log_importance"),
         )
@@ -516,13 +458,7 @@ def dsir_importance(
 
 
 def epoch_plan(
-    docs: DataFrame,
-    budget_tokens: float,
-    group_col: str = "source",
-    text_col: str = "text",
-    temperature: float = 2.0,
-    max_epochs: float = 4.0,
-    round_to: int = 4,
+    docs: DataFrame, budget_tokens: float, group_col: str = "source"
 ) -> DataFrame:
     """Token-budget epoch planner: allocate a training budget across
     sources with temperature-smoothed mixture weights and an epoch cap —
@@ -533,8 +469,8 @@ def epoch_plan(
     (group, avail_tokens, weight, desired_tokens, alloc_tokens, epochs,
     clipped).
 
-    Mechanics: weights ~ avail^(1/temperature), normalized; desired =
-    weight * budget; epochs clip at ``max_epochs``; the clipped surplus
+    Mechanics: weights ~ avail^(1/2) (temperature 2), normalized; desired =
+    weight * budget; epochs clip at 4; the clipped surplus
     is redistributed in ONE pass proportionally to the unclipped
     sources' remaining headroom, with the redistributed mass clamped at
     total headroom so NO source ever exceeds the cap (documented
@@ -550,23 +486,18 @@ def epoch_plan(
     first aggregate scales with the corpus."""
     from ..functions.text import whitespace_token_count
 
-    inv_t = 1.0 / temperature
-
-    def _tpow(col: Column) -> Column:
-        # sqrt is IEEE-exactly-rounded, so the default T=2 weights are
-        # bit-identical across engines; pow() is only ~1-ulp-portable
-        return F.sqrt(col) if temperature == 2.0 else F.pow(col, F.lit(inv_t))
-
     per_src = (
-        docs.filter(F.col(text_col).isNotNull())
+        docs.filter(F.col("text").isNotNull())
         .groupBy(F.col(group_col).alias("grp"))
-        .agg(F.sum(whitespace_token_count(F.col(text_col))).alias("avail"))
+        .agg(F.sum(whitespace_token_count(F.col("text"))).alias("avail"))
     )
-    tot = per_src.agg(F.sum(_tpow(F.col("avail").cast("double"))).alias("wsum"))
+    # temperature 2 is a sqrt, which is IEEE-exactly-rounded, so the
+    # weights are bit-identical across engines
+    tot = per_src.agg(F.sum(F.sqrt(F.col("avail").cast("double"))).alias("wsum"))
     base = per_src.crossJoin(F.broadcast(tot)).select(
         "grp",
         "avail",
-        (_tpow(F.col("avail").cast("double")) / F.col("wsum")).alias("weight"),
+        (F.sqrt(F.col("avail").cast("double")) / F.col("wsum")).alias("weight"),
     )
     alloc0 = base.select(
         "grp",
@@ -574,13 +505,13 @@ def epoch_plan(
         "weight",
         (F.col("weight") * F.lit(budget_tokens)).alias("desired"),
         F.least(
-            F.lit(max_epochs),
+            F.lit(4.0),
             (F.col("weight") * F.lit(budget_tokens)) / F.col("avail"),
         ).alias("e0"),
     ).withColumn("a0", F.col("e0") * F.col("avail"))
     totals = alloc0.agg(
         F.sum("a0").alias("asum"),
-        F.sum(F.lit(max_epochs) * F.col("avail") - F.col("a0")).alias("hsum"),
+        F.sum(F.lit(4.0) * F.col("avail") - F.col("a0")).alias("hsum"),
     )
     # deficit clamped at total headroom: a proportional share of more
     # than hsum would push sources past the cap (the invariant)
@@ -589,7 +520,7 @@ def epoch_plan(
     )
     alloc = F.col("a0") + deficit * F.when(
         F.col("hsum") > 0,
-        (F.lit(max_epochs) * F.col("avail") - F.col("a0")) / F.col("hsum"),
+        (F.lit(4.0) * F.col("avail") - F.col("a0")) / F.col("hsum"),
     ).otherwise(F.lit(0.0))
     final = (
         alloc0.crossJoin(F.broadcast(totals))
@@ -597,11 +528,11 @@ def epoch_plan(
         .select(
             F.col("grp").alias(group_col),
             F.col("avail").alias("avail_tokens"),
-            F.round("weight", round_to).alias("weight"),
-            F.round("desired", round_to).alias("desired_tokens"),
-            F.round("alloc", round_to).alias("alloc_tokens"),
-            F.round(F.col("alloc") / F.col("avail"), round_to).alias("epochs"),
-            (F.col("e0") >= F.lit(max_epochs)).alias("clipped"),
+            F.round("weight", 4).alias("weight"),
+            F.round("desired", 4).alias("desired_tokens"),
+            F.round("alloc", 4).alias("alloc_tokens"),
+            F.round(F.col("alloc") / F.col("avail"), 4).alias("epochs"),
+            (F.col("e0") >= F.lit(4.0)).alias("clipped"),
         )
     )
     return final.orderBy(group_col)
@@ -705,11 +636,7 @@ def global_rank(
 
 
 def exact_ntile(
-    df: DataFrame,
-    order_exprs: list,
-    n: int,
-    out_col: str = "tile",
-    num_partitions: int | None = None,
+    df: DataFrame, order_exprs: list, n: int, out_col: str = "tile"
 ) -> DataFrame:
     """SQL-standard ``NTILE(n)`` over a TOTAL order without the
     single-partition window ``ntile().over(Window.orderBy(...))`` costs:
@@ -721,13 +648,7 @@ def exact_ntile(
     order (unique tiebreak) for a deterministic assignment. n_rows
     rides along from global_rank's own partition-counts frame
     (``total_col``) — no extra pass over ``df``."""
-    ranked = global_rank(
-        df,
-        order_exprs,
-        rank_col="_nt_r",
-        num_partitions=num_partitions,
-        total_col="_nt_n",
-    )
+    ranked = global_rank(df, order_exprs, rank_col="_nt_r", total_col="_nt_n")
     k = F.lit(n).cast("long")
     q = F.floor(F.col("_nt_n") / k).cast("long")
     rem = (F.col("_nt_n") % k).cast("long")
@@ -739,13 +660,7 @@ def exact_ntile(
     return ranked.withColumn(out_col, tile.cast("int")).drop("_nt_r", "_nt_n")
 
 
-def rrf_fuse(
-    a: DataFrame,
-    b: DataFrame,
-    id_col: str,
-    k: int = 60,
-    rank_col: str = "rank",
-) -> DataFrame:
+def rrf_fuse(a: DataFrame, b: DataFrame, id_col: str, k: int = 60) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al., SIGIR 2009) of two
     ranked lists: ``score = 1/(k + rank_a) + 1/(k + rank_b)`` over the
     ids present in BOTH lists. The two divisions and one addition are a
@@ -756,8 +671,8 @@ def rrf_fuse(
     the inputs are per-query bounded top-k lists, in curation use they
     are corpus-wide ranks from :func:`global_rank` (itself two-pass
     parallel)."""
-    ra = a.select(F.col(id_col), F.col(rank_col).alias("rank_a"))
-    rb = b.select(F.col(id_col), F.col(rank_col).alias("rank_b"))
+    ra = a.select(F.col(id_col), F.col("rank").alias("rank_a"))
+    rb = b.select(F.col(id_col), F.col("rank").alias("rank_b"))
     one = F.lit(1.0)
     return ra.join(rb, id_col).select(
         F.col(id_col),
@@ -769,18 +684,10 @@ def rrf_fuse(
     )
 
 
-def perplexity_buckets(
-    docs: DataFrame,
-    scores: DataFrame,
-    score_col: str,
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    text_col: str = "text",
-    n_buckets: int = 3,
-) -> DataFrame:
+def perplexity_buckets(docs: DataFrame, scores: DataFrame, score_col: str) -> DataFrame:
     """CCNet-style quality bucketing (Wenzek et al. 2020): within each
     language, rank documents by an LM quality score and split them into
-    ``n_buckets`` NTILE buckets — bucket 1 is the "head" (best score,
+    3 NTILE buckets — bucket 1 is the "head" (best score,
     lowest perplexity), the last is the "tail" CCNet discards or
     down-samples. Returns per (lang, bucket): doc count, exact char
     mass, and the score range — counts and MIN/MAX only, so the report
@@ -793,29 +700,23 @@ def perplexity_buckets(
     would serialize the corpus). Ties break on the doc id so bucket
     membership is a pure function of the input."""
     j = docs.select(
-        F.col(id_col), F.col(lang_col), F.length(F.col(text_col)).alias("n_chars")
-    ).join(scores.select(F.col(id_col), F.col(score_col).alias("score")), id_col)
-    w = Window.partitionBy(lang_col).orderBy(F.desc("score"), F.asc(id_col))
+        F.col("doc_id"), F.col("lang"), F.length(F.col("text")).alias("n_chars")
+    ).join(scores.select(F.col("doc_id"), F.col(score_col).alias("score")), "doc_id")
+    w = Window.partitionBy("lang").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
-        j.withColumn("bucket", F.ntile(n_buckets).over(w))
-        .groupBy(lang_col, "bucket")
+        j.withColumn("bucket", F.ntile(3).over(w))
+        .groupBy("lang", "bucket")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").alias("n_chars"),
             F.min("score").alias("min_score"),
             F.max("score").alias("max_score"),
         )
-        .orderBy(lang_col, "bucket")
+        .orderBy("lang", "bucket")
     )
 
 
-def leakage_safe_split(
-    clusters: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    salt: str = "split",
-    weights: "dict[str, float] | None" = None,
-) -> DataFrame:
+def leakage_safe_split(clusters: DataFrame, pairs: DataFrame) -> DataFrame:
     """Near-dup-aware train/val/test split: assignment hashes the
     CLUSTER id, not the document id, so every member of a near-duplicate
     component lands in the same split — the leakage a plain per-doc
@@ -836,11 +737,11 @@ def leakage_safe_split(
     side is broadcastable), and a 1-row broadcast for the receipt
     column. The cluster frame itself is the output of the banded-LSH +
     connected-components pipeline, never an all-pairs product."""
-    assigned = deterministic_split(
-        clusters, id_col="cluster_id", salt=salt, weights=weights
-    ).select(F.col("id").alias(id_col), "cluster_id", "split")
-    a = assigned.select(F.col(id_col).alias("id_a"), F.col("split").alias("sa"))
-    b = assigned.select(F.col(id_col).alias("id_b"), F.col("split").alias("sb"))
+    assigned = deterministic_split(clusters, id_col="cluster_id").select(
+        F.col("id").alias("doc_id"), "cluster_id", "split"
+    )
+    a = assigned.select(F.col("doc_id").alias("id_a"), F.col("split").alias("sa"))
+    b = assigned.select(F.col("doc_id").alias("id_b"), F.col("split").alias("sb"))
     cross = (
         pairs.join(a, "id_a")
         .join(b, "id_b")
@@ -850,7 +751,7 @@ def leakage_safe_split(
     rep = assigned.groupBy("split").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("cluster_id").alias("n_clusters"),
-        F.min(id_col).alias("min_doc"),
+        F.min("doc_id").alias("min_doc"),
     )
     return rep.crossJoin(F.broadcast(cross)).orderBy("split")
 
@@ -861,7 +762,6 @@ def forget_cascade(
     lineitem: DataFrame,
     events: DataFrame,
     frac: float = 0.02,
-    salt: str = "forget",
 ) -> DataFrame:
     """Right-to-be-forgotten cascade audit: the forget policy is a pure
     function of the user key (``hash_unit(key) < frac`` — in production
@@ -882,7 +782,7 @@ def forget_cascade(
     in a single pass per table."""
 
     def gone(key: Column) -> Column:
-        return hash_unit(key, salt) < F.lit(frac)
+        return hash_unit(key, "forget") < F.lit(frac)
 
     def stat(df: DataFrame, name: str, dropped: Column) -> DataFrame:
         return df.agg(
@@ -913,13 +813,7 @@ def forget_cascade(
     )
 
 
-def source_cap(
-    docs: DataFrame,
-    cap: int,
-    id_col: str = "doc_id",
-    group_col: str = "source",
-    salt: str = "cap",
-) -> DataFrame:
+def source_cap(docs: DataFrame, cap: int) -> DataFrame:
     """Per-source document cap — keep at most ``cap`` docs per source,
     chosen by a deterministic md5 lottery (the Common Crawl pipeline
     staple: no single domain may dominate the mixture). Returns the
@@ -939,19 +833,16 @@ def source_cap(
     key order and the composed rank is identical to the single-sort
     rank the oracle states.
     """
-    ranked = grouped_hash_rank(docs, id_col, group_col, salt)
+    ranked = grouped_hash_rank(docs)
     return (
         ranked.withColumnRenamed("grank", "cap_rank")
         .filter(F.col("cap_rank") <= cap)
-        .orderBy(group_col, "cap_rank")
+        .orderBy("source", "cap_rank")
     )
 
 
 def grouped_hash_rank(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    group_col: str = "source",
-    salt: str = "cap",
+    df: DataFrame, group_col: str = "source", salt: str = "cap"
 ) -> DataFrame:
     """EXACT 1-based per-group rank by a deterministic md5 lottery,
     without a per-group single-task sort — the shared machinery behind
@@ -964,12 +855,12 @@ def grouped_hash_rank(
     order equals key order and the composed rank is identical to the
     single-window rank the oracles state. Returns (id, group, grank)."""
     key = F.md5(
-        F.concat(F.col(id_col).cast("string"), F.lit(":" + salt)).cast("binary")
+        F.concat(F.col("doc_id").cast("string"), F.lit(":" + salt)).cast("binary")
     )
     d = df.select(
-        F.col(id_col), F.col(group_col), key.alias("_k")
+        F.col("doc_id"), F.col(group_col), key.alias("_k")
     ).withColumn("_b", F.substring("_k", 1, 2))
-    w = Window.partitionBy(group_col, "_b").orderBy("_k", id_col)
+    w = Window.partitionBy(group_col, "_b").orderBy("_k", "doc_id")
     d = d.withColumn("_rn", F.row_number().over(w))
     offsets = (
         d.groupBy(group_col, "_b")
@@ -990,17 +881,11 @@ def grouped_hash_rank(
     return (
         d.join(F.broadcast(offsets), [group_col, "_b"])
         .withColumn("grank", (F.col("_off") + F.col("_rn")).cast("bigint"))
-        .select(id_col, group_col, "grank")
+        .select("doc_id", group_col, "grank")
     )
 
 
-def stratified_kfold(
-    df: DataFrame,
-    k: int = 5,
-    id_col: str = "doc_id",
-    group_col: str = "lang",
-    salt: str = "kfold",
-) -> DataFrame:
+def stratified_kfold(df: DataFrame, k: int = 5) -> DataFrame:
     """Stratified k-fold assignment: within every stratum, rows take a
     deterministic hash-lottery order and deal round-robin into folds
     0..k-1 — every fold gets within-1 the same count PER STRATUM (the
@@ -1008,20 +893,15 @@ def stratified_kfold(
     strata), and the assignment is engine- and partitioning-stable.
     Built on :func:`grouped_hash_rank`, so no stratum ever funnels
     through a single sort task. Returns (id, group, fold)."""
-    ranked = grouped_hash_rank(df, id_col, group_col, salt)
+    ranked = grouped_hash_rank(df, group_col="lang", salt="kfold")
     return ranked.select(
-        id_col,
-        group_col,
+        "doc_id",
+        "lang",
         ((F.col("grank") - 1) % k).cast("int").alias("fold"),
     )
 
 
-def padding_efficiency(
-    docs: DataFrame,
-    text_col: str = "text",
-    bucket: int = 16,
-    batch: int = 8,
-) -> DataFrame:
+def padding_efficiency(docs: DataFrame, bucket: int = 16, batch: int = 8) -> DataFrame:
     """Length-bucketed batching audit: round each doc's token count up
     to the next multiple of ``bucket`` (the padded sequence length),
     form fixed-size batches of ``batch`` docs per bucket, and report
@@ -1037,7 +917,7 @@ def padding_efficiency(
     fill_ratio is a single division of exact integers."""
     from avro_sql_spark.functions import text as T
 
-    n = F.size(T.word_tokens(F.col(text_col)))
+    n = F.size(T.word_tokens(F.col("text")))
     d = docs.select(n.alias("_n")).filter(F.col("_n") >= 1)
     blen = (F.floor((F.col("_n") + bucket - 1) / bucket) * bucket).cast("bigint")
     g = d.groupBy(blen.alias("bucket_len")).agg(
@@ -1057,11 +937,7 @@ def padding_efficiency(
 
 
 def quantile_normalize_report(
-    scored: DataFrame,
-    score_col: str,
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    deciles: int = 10,
+    scored: DataFrame, score_col: str, group_col: str = "source"
 ) -> DataFrame:
     """Per-group quantile normalization (CDF matching — the
     batch-effect correction genomics calls quantile normalization and
@@ -1086,18 +962,18 @@ def quantile_normalize_report(
     itself an expensive subtree (the unigram-LM fluency entry) each
     consumer would otherwise re-derive it wherever exchange reuse
     misses."""
-    scored = scored.select(group_col, id_col, score_col).localCheckpoint(
+    scored = scored.select(group_col, "doc_id", score_col).localCheckpoint(
         eager=False
     )
-    wg = Window.partitionBy(group_col).orderBy(score_col, id_col)
-    r = scored.select(group_col, id_col, score_col).withColumn(
+    wg = Window.partitionBy(group_col).orderBy(score_col, "doc_id")
+    r = scored.select(group_col, "doc_id", score_col).withColumn(
         "r", F.row_number().over(wg)
     )
     ng = scored.groupBy(group_col).agg(F.count(F.lit(1)).alias("n_g"))
     tot = scored.agg(F.count(F.lit(1)).alias("n_all"))
     g = global_rank(
         scored.select(
-            F.col(score_col).alias("gs"), F.col(id_col).alias("gid")
+            F.col(score_col).alias("gs"), F.col("doc_id").alias("gid")
         ),
         [F.asc("gs"), F.asc("gid")],
         rank_col="grk",
@@ -1107,7 +983,7 @@ def quantile_normalize_report(
         .crossJoin(F.broadcast(tot))
         .withColumn("k", F.expr("CAST((r * n_all + n_g - 1) DIV n_g AS BIGINT)"))
         .withColumn(
-            "decile", F.expr(f"CAST((r * {deciles} + n_g - 1) DIV n_g AS INT)")
+            "decile", F.expr("CAST((r * 10 + n_g - 1) DIV n_g AS INT)")
         )
         .join(g, F.col("k") == F.col("grk"))
     )
@@ -1124,11 +1000,7 @@ def quantile_normalize_report(
     )
 
 
-def negative_sampling_table(
-    docs: DataFrame,
-    text_col: str = "text",
-    top_k: int = 50,
-) -> DataFrame:
+def negative_sampling_table(docs: DataFrame, top_k: int = 50) -> DataFrame:
     """word2vec-style negative-sampling table (Mikolov et al. 2013):
     unigram counts raised to the 3/4 power, normalized, and laid out as
     cumulative [lo, hi) ranges a sampler hits with one uniform draw —
@@ -1147,7 +1019,7 @@ def negative_sampling_table(
     aliased."""
     from ..functions import text as T
 
-    toks = docs.select(F.explode(T.word_tokens(F.col(text_col))).alias("w"))
+    toks = docs.select(F.explode(T.word_tokens(F.col("text"))).alias("w"))
     counts = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     cd = F.col("c").cast("double")
     weighted = counts.select(
@@ -1176,13 +1048,7 @@ def negative_sampling_table(
     ).orderBy(F.desc("count"), F.asc("term"))
 
 
-def doremi_weights(
-    docs: DataFrame,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    temperature: float = 0.1,
-) -> DataFrame:
+def doremi_weights(docs: DataFrame) -> DataFrame:
     """DoReMi-lite domain reweighting (Xie et al. 2023, "DoReMi:
     Optimizing Data Mixtures Speeds Up Language Model Pretraining",
     reduced to its one-round statistical core): each source's mixture
@@ -1201,9 +1067,9 @@ def doremi_weights(
     DECIMAL-summed, so the softmax normalizer is order-free too."""
     from .text import unigram_logprob_scores
 
-    scored = unigram_logprob_scores(
-        docs, id_col=id_col, text_col=text_col
-    ).join(docs.select(F.col(id_col), F.col(source_col).alias("src")), id_col)
+    scored = unigram_logprob_scores(docs).join(
+        docs.select(F.col("doc_id"), F.col("source").alias("src")), "doc_id"
+    )
     dec = F.col("logprob_mean").cast("decimal(38,6)")
     per_src = scored.groupBy("src").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum(dec).alias("s_lp")
@@ -1221,7 +1087,7 @@ def doremi_weights(
         "n_docs",
         F.round(nll_s, 6).alias("nll"),
         exc.alias("excess_nll"),
-        F.round(F.exp(exc / F.lit(temperature)), 9)
+        F.round(F.exp(exc / F.lit(0.1)), 9)
         .cast("decimal(38,9)")
         .alias("e"),
     )
@@ -1229,7 +1095,7 @@ def doremi_weights(
     return (
         terms.crossJoin(F.broadcast(tot))
         .select(
-            F.col("src").alias(source_col),
+            F.col("src").alias("source"),
             "n_docs",
             "nll",
             "excess_nll",
@@ -1237,16 +1103,11 @@ def doremi_weights(
                 "weight"
             ),
         )
-        .orderBy(source_col)
+        .orderBy("source")
     )
 
 
-def score_decile_calibration(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 10,
-) -> DataFrame:
+def score_decile_calibration(docs: DataFrame, n_buckets: int = 10) -> DataFrame:
     """Calibration of the unigram-LM fluency score against an OUTCOME
     it should predict (exact-duplicate rate): docs rank into score
     deciles (:func:`exact_ntile` over (score desc, id) — decile 1 =
@@ -1265,12 +1126,12 @@ def score_decile_calibration(
     from ..functions.text import fingerprint as fp
     from .text import unigram_logprob_scores
 
-    scored = unigram_logprob_scores(docs, id_col=id_col, text_col=text_col).join(
-        docs.select(F.col(id_col), fp(F.col(text_col)).alias("fp")), id_col
+    scored = unigram_logprob_scores(docs).join(
+        docs.select(F.col("doc_id"), fp(F.col("text")).alias("fp")), "doc_id"
     )
     binned = exact_ntile(
         scored,
-        [F.desc("logprob_mean"), F.asc(id_col)],
+        [F.desc("logprob_mean"), F.asc("doc_id")],
         n_buckets,
         out_col="decile",
     )
@@ -1299,12 +1160,7 @@ def score_decile_calibration(
     )
 
 
-def dp_count_release(
-    events: DataFrame,
-    group_col: str = "event_type",
-    epsilon: float = 1.0,
-    salt: str = "dp",
-) -> DataFrame:
+def dp_count_release(events: DataFrame, epsilon: float = 1.0) -> DataFrame:
     """Differential-privacy release REHEARSAL for grouped counts: add
     Laplace(1/ε) noise to each group's count (sensitivity 1 — one user
     event moves one count by one) and report the utility cost
@@ -1327,10 +1183,10 @@ def dp_count_release(
     inputs; counts are exact integers. Scale shape: one
     map-side-combined aggregate; noise is row-local arithmetic on the
     groups-sized frame."""
-    per = events.groupBy(F.col(group_col).alias("g")).agg(
+    per = events.groupBy(F.col("event_type").alias("g")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    u = (hash_unit(F.col("g"), salt) * F.lit(999999.0) + F.lit(1.0)) / F.lit(
+    u = (hash_unit(F.col("g"), "dp") * F.lit(999999.0) + F.lit(1.0)) / F.lit(
         1000000.0
     )
     centered = u - F.lit(0.5)
@@ -1351,13 +1207,7 @@ def dp_count_release(
     ).orderBy("group_key")
 
 
-def weighted_reservoir_sample(
-    docs: DataFrame,
-    k: int = 50,
-    weight_col: str = "n_chars",
-    id_col: str = "doc_id",
-    salt: str = "wrs",
-) -> DataFrame:
+def weighted_reservoir_sample(docs: DataFrame, k: int = 50) -> DataFrame:
     """Weighted sampling WITHOUT replacement (Efraimidis–Spirakis
     A-ES): each row draws key = −ln(u)/w from the deterministic md5
     unit interval and the k SMALLEST keys form the sample — exactly
@@ -1373,53 +1223,48 @@ def weighted_reservoir_sample(
     lacks; u = 0 cannot occur (the interval is [buckets>0]/1e6 after
     the +1 offset below), so ln is finite. Weights ≤ 0 are excluded
     (stated precondition)."""
-    u = (hash_unit(F.col(id_col), salt) * F.lit(999999.0) + F.lit(1.0)) / F.lit(
+    u = (hash_unit(F.col("doc_id"), "wrs") * F.lit(999999.0) + F.lit(1.0)) / F.lit(
         1000000.0
     )
-    key = -F.log(u) / F.col(weight_col).cast("double")
+    key = -F.log(u) / F.col("n_chars").cast("double")
     sampled = (
-        docs.filter(F.col(weight_col) > 0)
+        docs.filter(F.col("n_chars") > 0)
         .select(
-            F.col(id_col).alias("id"),
-            F.col(weight_col).cast("long").alias("weight"),
+            F.col("doc_id").alias("id"),
+            F.col("n_chars").cast("long").alias("weight"),
             F.round(key, 9).alias("key"),
         )
         .orderBy("key", "id")
         .limit(k)
     )
-    stats = docs.filter(F.col(weight_col) > 0).agg(
+    stats = docs.filter(F.col("n_chars") > 0).agg(
         F.count(F.lit(1)).alias("n_corpus"),
         # exact integer sum / count — not F.avg's order-dependent
         # float accumulation
         (
-            F.sum(F.col(weight_col).cast("decimal(38,0)")).cast("double")
+            F.sum(F.col("n_chars").cast("decimal(38,0)")).cast("double")
             / F.count(F.lit(1)).cast("double")
         ).alias("avg_w_corpus"),
     )
     return (
         sampled.crossJoin(F.broadcast(stats))
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "weight",
             "key",
             F.col("n_corpus").cast("long").alias("n_corpus"),
             F.round("avg_w_corpus", 6).alias("avg_weight_corpus"),
         )
-        .orderBy("key", id_col)
+        .orderBy("key", "doc_id")
     )
 
 
-def curriculum_plan(
-    docs: DataFrame,
-    n_stages: int = 4,
-    replay_frac: float = 0.2,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def curriculum_plan(docs: DataFrame, n_stages: int = 4) -> DataFrame:
     """Quality-curriculum training schedule with spaced replay — the
     stage-sequencing companion to :func:`quality_shards` (which only
     TIERS the corpus) and :func:`epoch_plan` (which budgets epochs
     per source): stage k trains fresh on quality shard k (shard 1 =
-    best, first) and replays a deterministic ``replay_frac`` hash
+    best, first) and replays a deterministic 0.2 hash
     sample of every EARLIER shard — the standard anti-forgetting
     mixture for curriculum LM training (Bengio et al. 2009's
     curriculum + replay buffers).
@@ -1434,9 +1279,9 @@ def curriculum_plan(
     sums are integers in DECIMAL(38,0); the one share division is
     float. Scale shape: the ntile two-pass, then one explode bounded
     by n_stages per row and one stage-keyed aggregate."""
-    sharded = quality_shards(docs, n_shards=n_stages, id_col=id_col)
+    sharded = quality_shards(docs, n_shards=n_stages)
     st = sharded.select(
-        F.col(id_col), F.col("shard"), F.col("n_chars")
+        F.col("doc_id"), F.col("shard"), F.col("n_chars")
     ).select(
         "*",
         F.explode(
@@ -1448,7 +1293,7 @@ def curriculum_plan(
             F.substring(
                 F.md5(
                     F.concat(
-                        F.col(id_col).cast("string"),
+                        F.col("doc_id").cast("string"),
                         F.lit(":curriculum:"),
                         F.col("stage").cast("string"),
                     ).cast("binary")
@@ -1467,7 +1312,7 @@ def curriculum_plan(
         "n_chars",
         fresh.alias("f"),
         F.when(F.col("stage") == F.col("shard"), 1)
-        .when(u < F.lit(replay_frac), 1)
+        .when(u < F.lit(0.2), 1)
         .otherwise(0)
         .alias("k"),
     ).filter(F.col("k") == 1)

@@ -96,33 +96,31 @@ def _shingles(
     )
 
 
-def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Groups of byte-identical (post-normalization) documents:
     (fingerprint, n_copies, canonical_id) for groups with >1 member."""
     return (
-        _spread(docs, id_col).select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
+        _spread(docs, "doc_id").select(F.col("doc_id"), fingerprint(F.col("text")).alias("fp"))
         .groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n_copies"), F.min(id_col).alias("canonical_id"))
+        .agg(F.count(F.lit(1)).alias("n_copies"), F.min("doc_id").alias("canonical_id"))
         .filter(F.col("n_copies") > 1)
     )
 
 
-def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """Keep one representative (min id) per fingerprint — the 100 TB
     version of dropDuplicates(text): dedup on the 16-byte hash, never on
     the full text column."""
     keep = (
-        _spread(docs, id_col).select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
+        _spread(docs, "doc_id").select(F.col("doc_id"), fingerprint(F.col("text")).alias("fp"))
         .groupBy("fp")
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
     )
-    return docs.join(keep, id_col, "left_semi")
+    return docs.join(keep, "doc_id", "left_semi")
 
 
-def minhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", num_hashes: int = 64, shingle: int = 3
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame, num_hashes: int = 64) -> DataFrame:
     """(id, signature array<bigint>) — min over shingles of the
     full-range universal-hash family (a_i*x + b_i) mod 2^31-1 on an
     md5-derived base (see ``_minhash_params``), all JVM-side.
@@ -136,10 +134,10 @@ def minhash_signatures(
     permutations are multiply-add-mod on its 48-bit cut), and the whole
     family is deterministic integer arithmetic the DuckDB oracle
     replicates exactly."""
-    sh = _shingles(docs, id_col, text_col, shingle)
+    sh = _shingles(docs, "doc_id", "text", 3)
     p = F.lit(_MINHASH_P)
     based = sh.select(
-        F.col(id_col),
+        F.col("doc_id"),
         (
             F.conv(F.substring(F.md5(F.col("s_raw").cast("binary")), 1, 12), 16, 10).cast("long")
             % p
@@ -151,17 +149,17 @@ def minhash_signatures(
     # time per call in Py4J round trips (same fix as simhash); the
     # parsed trees and generated code are identical
     hashed = based.selectExpr(
-        f"`{id_col}`",  # backticks: selectExpr must quote what F.col would
+        "`doc_id`",  # backticks: selectExpr must quote what F.col would
         *[
             f"({a} * x + {b}) % {_MINHASH_P} AS h{i}"
             for i, (a, b) in ((i, _minhash_params(i)) for i in range(num_hashes))
         ],
     )
-    mins = hashed.groupBy(id_col).agg(
+    mins = hashed.groupBy("doc_id").agg(
         *[F.expr(f"min(h{i}) AS h{i}") for i in range(num_hashes)]
     )
     return mins.selectExpr(
-        f"`{id_col}`",
+        "`doc_id`",
         "array(" + ", ".join(f"h{i}" for i in range(num_hashes)) + ") AS signature",
     )
 
@@ -213,12 +211,7 @@ def _band_rows(
 
 
 def minhash_candidate_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle: int = 3,
+    docs: DataFrame, num_hashes: int = 64, bands: int = 16
 ) -> DataFrame:
     """LSH banding: split the signature into ``bands`` rows, hash each
     band, self-join on (band_idx, band_hash). Only same-bucket docs meet
@@ -229,12 +222,12 @@ def minhash_candidate_pairs(
     # shingle-explode + k-hash + k-min pipeline would run three times.
     # One 8k-byte row per doc, far smaller than the corpus; the
     # CacheManager dedupes repeated calls by logical plan.
-    sigs = minhash_signatures(docs, id_col, text_col, num_hashes, shingle).cache()
+    sigs = minhash_signatures(docs, num_hashes=num_hashes).cache()
     # the band self-join shuffles SKINNY rows (id, band_idx, band_hash =
     # 24 bytes) — not the 64-long signature, which would ride the shuffle
     # `bands` times per doc. Signatures re-attach once per side AFTER
     # candidate pairs are deduped, via two per-doc joins.
-    banded = _band_rows(sigs, id_col, num_hashes, bands)
+    banded = _band_rows(sigs, "doc_id", num_hashes, bands)
     a = banded.alias("a")
     b = banded.alias("b")
     cand = (
@@ -242,16 +235,16 @@ def minhash_candidate_pairs(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
         )
         .distinct()
     )
-    sa = sigs.select(F.col(id_col).alias("id_a"), F.col("signature").alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("id_b"), F.col("signature").alias("sig_b"))
+    sa = sigs.select(F.col("doc_id").alias("id_a"), F.col("signature").alias("sig_a"))
+    sb = sigs.select(F.col("doc_id").alias("id_b"), F.col("signature").alias("sig_b"))
     return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
@@ -273,9 +266,6 @@ def minhash_candidate_pairs(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = None,
     candidates: DataFrame | None = None,
@@ -310,7 +300,7 @@ def ngram_jaccard_pairs(
     # the pair join is shuffle-bound, so key width is the cost. xxhash64
     # collisions (~n²/2⁶⁴) are negligible against shingle-set sizes.
     sh = (
-        _shingles(docs, id_col, text_col, shingle, out_id="id")
+        _shingles(docs, "doc_id", "text", 3, out_id="id")
         .select("id", F.xxhash64("s_raw").alias("s"))
         # cached: consumed by per-doc sizes AND both self-join sides (and
         # the doc-frequency pass when capped) — uncached, the explode+hash
@@ -374,7 +364,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """64-bit SimHash over word shingles: for each bit, sum +1/-1 votes of
     each shingle's hash bit, emit the sign bitmap. The shingle hash is
     md5-derived (two 32-bit hex cuts recombined with shiftleft/OR — pure
@@ -393,10 +383,10 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     next lane — far above real documents; a runtime assert fails loudly
     on such inputs instead of corrupting (pre-chunk them upstream)."""
     ex = (
-        _shingles(docs, id_col, text_col, 3)
-        .select(F.col(id_col), F.md5(F.col("s_raw").cast("binary")).alias("m"))
+        _shingles(docs, "doc_id", "text", 3)
+        .select(F.col("doc_id"), F.md5(F.col("s_raw").cast("binary")).alias("m"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             # 64-bit hash = (first 8 hex chars as hi) << 32 | (next 8 as
             # lo): bit ops only, so a set bit 63 is a sign-bit pattern,
             # never an arithmetic overflow (ANSI-safe in Spark & DuckDB)
@@ -422,7 +412,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
             for lane, b in enumerate(bits)
         )
 
-    votes = ex.groupBy(id_col).agg(
+    votes = ex.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n"),
         *[
             F.expr(f"sum({_packed_term(bits)})").alias(f"p{j}")
@@ -450,15 +440,11 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
             "would overflow; pre-chunk pathological documents"
         ),
     )
-    return votes.select(F.col(id_col), F.when(guard.isNull(), sim).alias("simhash"))
+    return votes.select(F.col("doc_id"), F.when(guard.isNull(), sim).alias("simhash"))
 
 
 def simhash_candidate_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    blocks: int = 4,
-    max_hamming: int = 3,
+    docs: DataFrame, blocks: int = 4, max_hamming: int = 3
 ) -> DataFrame:
     """Hamming-banded SimHash near-dup pairs: split the 64-bit fingerprint
     into ``blocks`` equal bit-blocks, equi-join on (block_idx, block_bits),
@@ -479,11 +465,11 @@ def simhash_candidate_pairs(
         )
     # cached: consumed by the band explode and both re-attach joins;
     # caller owns cleanup (spark.catalog.clearCache between pipelines)
-    sigs = simhash(docs, id_col, text_col).cache()
+    sigs = simhash(docs).cache()
     width = 64 // blocks
     mask = (1 << width) - 1
     banded = sigs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.array(
                 *[
@@ -501,13 +487,13 @@ def simhash_candidate_pairs(
             b,
             (F.col("a.block_idx") == F.col("b.block_idx"))
             & (F.col("a.block_bits") == F.col("b.block_bits"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
-    sa = sigs.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sim_a"))
-    sb = sigs.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sim_b"))
+    sa = sigs.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("sim_a"))
+    sb = sigs.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("sim_b"))
     return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
@@ -521,12 +507,7 @@ def simhash_candidate_pairs(
 
 
 def embedding_near_duplicates(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    use_lsh: bool = False,
-    planes: int = 8,
+    emb: DataFrame, threshold: float = 0.95, use_lsh: bool = False, planes: int = 8
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs above threshold.
 
@@ -550,7 +531,7 @@ def embedding_near_duplicates(
 
         from .similarity import hyperplane_signature
 
-        id_type = emb.schema[id_col].dataType
+        id_type = emb.schema["vec_id"].dataType
         out_schema = StructType(
             [
                 StructField("id_a", id_type),
@@ -560,8 +541,8 @@ def embedding_near_duplicates(
         )
 
         def gram(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids = pdf[id_col].to_numpy()
-            m = np.stack(pdf[vec_col].values).astype(np.float64)
+            ids = pdf["vec_id"].to_numpy()
+            m = np.stack(pdf["embedding"].values).astype(np.float64)
             m /= np.linalg.norm(m, axis=1, keepdims=True)
             cos = m @ m.T
             iu, ju = np.triu_indices(len(ids), k=1)
@@ -577,28 +558,22 @@ def embedding_near_duplicates(
 
         # plan-time dim probe (one-row scan, same pattern as
         # gram_covariance): the hyperplane literals need the length
-        head = emb.filter(F.col(vec_col).isNotNull()).select(vec_col).first()
+        head = emb.filter(F.col("embedding").isNotNull()).select("embedding").first()
         dim = len(head[0]) if head is not None else 1
         bucketed = emb.withColumn(
-            "bucket", hyperplane_signature(f"`{vec_col}`", planes, dim=dim)
+            "bucket", hyperplane_signature("`embedding`", planes, dim=dim)
         )
         return bucketed.groupBy("bucket").applyInPandas(gram, out_schema)
 
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     joined = a.join(b, F.col("id_a") < F.col("id_b"))
     return joined.select(
         "id_a", "id_b", cosine(F.col("va"), F.col("vb")).alias("cos")
     ).filter(F.col("cos") >= threshold)
 
 
-def near_dup_clusters(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    est_threshold: float = 0.5,
-    max_iterations: int = 10,
-) -> DataFrame:
+def near_dup_clusters(docs: DataFrame, est_threshold: float = 0.5) -> DataFrame:
     """Near-duplicate CLUSTERS: MinHash-LSH candidate pairs -> connected
     components by iterative min-label propagation -> (id, cluster_id)
     where cluster_id is the smallest doc id in the component.
@@ -609,19 +584,15 @@ def near_dup_clusters(
     minhash family became deterministic integer arithmetic — the DuckDB
     twin replays the estimated edges and resolves the components with a
     WITH RECURSIVE reachability CTE."""
-    pairs = minhash_candidate_pairs(docs, id_col, text_col).filter(
+    pairs = minhash_candidate_pairs(docs).filter(
         F.col("est_jaccard") >= est_threshold
     )
-    nodes = docs.select(F.col(id_col).alias("id"))
-    return connected_components(nodes, pairs, max_iterations=max_iterations)
+    nodes = docs.select(F.col("doc_id").alias("id"))
+    return connected_components(nodes, pairs)
 
 
 def connected_components(
-    nodes: DataFrame,
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iterations: int = 10,
+    nodes: DataFrame, pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
 ) -> DataFrame:
     """Connected components by iterative min-label propagation:
     ``nodes`` is an (id) frame, ``pairs`` an undirected edge list;
@@ -662,7 +633,7 @@ def connected_components(
     )
     labels = nodes.select(F.col("id"), F.col("id").alias("cluster_id")).cache()
     rounds = RoundPins()
-    for _ in range(max_iterations):
+    for _ in range(10):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.id)
             .groupBy("src")
@@ -702,32 +673,25 @@ def connected_components(
             break
     else:
         # exhausting the budget with labels still moving means some
-        # component has diameter > max_iterations: the result would be
+        # component has diameter > 10: the result would be
         # silently partial (and any exact oracle would mismatch with no
         # pointer at the cause) — fail loudly instead
         from ..errors import AvroSqlError
 
         raise AvroSqlError(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations (component diameter exceeds the budget); raise "
-            "max_iterations"
+            "connected_components did not converge in 10 "
+            "iterations (component diameter exceeds the budget)"
         )
     edges.unpersist()
     return labels.orderBy("id")
 
 
 def decontaminate(
-    train: DataFrame,
-    test: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    method: str = "exact",
-    shingle: int = 3,
-    threshold: float = 0.5,
-    max_doc_freq: int | None = None,
+    train: DataFrame, test: DataFrame, method: str = "exact", threshold: float = 0.5
 ) -> DataFrame:
     """Remove training documents that leak evaluation content — the
-    benchmark-decontamination pass every training pipeline needs.
+    benchmark-decontamination pass every training pipeline needs. Both
+    sides are ``doc_id``/``text`` frames.
 
     ``method="exact"``: drop train docs whose normalized-text md5
     fingerprint appears in the test set. One anti-join on a 16-byte key;
@@ -738,7 +702,7 @@ def decontaminate(
     Jaccard with ANY test doc — catches paraphrased/partial leaks.
     Bipartite version of :func:`ngram_jaccard_pairs`: shingles of both
     sides meet in a shingle-keyed join (shuffle is |shingles|, never
-    |train|×|test|), with the same ``max_doc_freq`` hot-shingle guard.
+    |train|×|test|).
 
     ``method="containment"``: drop train docs CONTAINING ≥``threshold``
     of some test doc's shingles (Broder's one-sided containment
@@ -749,8 +713,8 @@ def decontaminate(
     ``ngram`` — only the acceptance arithmetic differs.
     """
     if method == "exact":
-        test_fps = test.select(fingerprint(F.col(text_col)).alias("fp")).distinct()
-        keyed = train.withColumn("__fp", fingerprint(F.col(text_col)))
+        test_fps = test.select(fingerprint(F.col("text")).alias("fp")).distinct()
+        keyed = train.withColumn("__fp", fingerprint(F.col("text")))
         return (
             keyed.join(
                 F.broadcast(test_fps), keyed["__fp"] == test_fps["fp"], "left_anti"
@@ -762,7 +726,7 @@ def decontaminate(
         )
     # same hashed-key rationale as ngram_jaccard_pairs: the bipartite
     # join shuffles 8-byte ints, not shingle strings
-    tr = _shingles(train, id_col, text_col, shingle, out_id="tid").select(
+    tr = _shingles(train, "doc_id", "text", 3, out_id="tid").select(
         "tid", F.xxhash64("s_raw").alias("s")
     )
     # the test/benchmark side stays un-spread (it is the small side; a
@@ -772,26 +736,16 @@ def decontaminate(
 
     te = (
         test.select(
-            F.col(id_col).alias("eid"), F.split(F.lower(F.col(text_col)), " ").alias("w")
+            F.col("doc_id").alias("eid"), F.split(F.lower(F.col("text")), " ").alias("w")
         )
         .select(
-            "eid", F.explode(F.array_distinct(word_ngrams_of(F.col("w"), shingle))).alias("s_raw")
+            "eid", F.explode(F.array_distinct(word_ngrams_of(F.col("w"), 3))).alias("s_raw")
         )
         .select("eid", F.xxhash64("s_raw").alias("s"))
     )
-    # each side feeds its size aggregate AND the bipartite join (plus the
-    # doc-frequency pass when capped) — cache so explode+hash runs once
+    # each side feeds its size aggregate AND the bipartite join — cache
+    # so explode+hash runs once
     tr, te = tr.cache(), te.cache()
-    if max_doc_freq is not None:
-        hot = (
-            tr.select(F.col("tid").alias("d"), "s").union(te.select(F.col("eid").alias("d"), "s"))
-            .groupBy("s")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_doc_freq)
-            .select("s")
-        )
-        tr = tr.join(F.broadcast(hot), "s", "left_anti")
-        te = te.join(F.broadcast(hot), "s", "left_anti")
     tr_sizes = tr.groupBy("tid").agg(F.count(F.lit(1)).alias("tn"))
     te_sizes = te.groupBy("eid").agg(F.count(F.lit(1)).alias("en"))
     inter = (
@@ -809,18 +763,13 @@ def decontaminate(
         inter.join(tr_sizes, "tid")
         .join(te_sizes, "eid")
         .filter(score >= threshold)
-        .select(F.col("tid").alias(id_col))
+        .select(F.col("tid").alias("doc_id"))
         .distinct()
     )
-    return train.join(contaminated, id_col, "left_anti")
+    return train.join(contaminated, "doc_id", "left_anti")
 
 
-def incremental_dedup(
-    new_docs: DataFrame,
-    seen_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def incremental_dedup(new_docs: DataFrame, seen_docs: DataFrame) -> DataFrame:
     """Continuous-ingest dedup: drop new documents whose content
     fingerprint already exists in the historical corpus, then dedup the
     batch against itself (min-id representative). The anti join runs on
@@ -831,26 +780,21 @@ def incremental_dedup(
     Cites the reference's per-record model (AvroSql.scala:67-84 — one
     record in, one record out): the batch-vs-history shape is what that
     host-driven model cannot express and a table engine gets for free."""
-    new_fp = new_docs.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
-    seen_fp = seen_docs.select(fingerprint(F.col(text_col)).alias("fp")).distinct()
+    new_fp = new_docs.select(F.col("doc_id"), fingerprint(F.col("text")).alias("fp"))
+    seen_fp = seen_docs.select(fingerprint(F.col("text")).alias("fp")).distinct()
     fresh = new_fp.join(seen_fp, "fp", "left_anti")
-    keep = fresh.groupBy("fp").agg(F.min(id_col).alias(id_col)).select(id_col)
-    return new_docs.join(keep, id_col, "left_semi")
+    keep = fresh.groupBy("fp").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
+    return new_docs.join(keep, "doc_id", "left_semi")
 
 
 def duplicated_span_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str = "source",
-    n: int = 8,
-    heavy_frac: float = 0.5,
+    docs: DataFrame, n: int = 8, heavy_frac: float = 0.5
 ) -> DataFrame:
     """Exact duplicated-SPAN report (substring-level dedup signal, the
     metric behind suffix-array training-data dedup a la Lee et al. 2022
     "Deduplicating Training Data Makes Language Models Better"): for
     each document, the fraction of its n-word spans that also occur in
-    at least one OTHER document, aggregated per ``group_col`` — average
+    at least one OTHER document, aggregated per ``source`` — average
     duplicated-span fraction, and how many docs are "heavy" (>=
     ``heavy_frac`` of their spans duplicated). Docs shorter than ``n``
     words contribute no spans and are excluded.
@@ -870,10 +814,10 @@ def duplicated_span_stats(
     # on the compacted scan's 1-3 partitions, and word_shingles would
     # re-split the text n times per span (no CSE inside lambda) — the
     # two together measured ~20x on this operator at sf0.1
-    toks = _spread(docs, id_col).select(
-        F.col(id_col).alias("did"),
-        F.col(group_col).alias("grp"),
-        F.split(F.lower(F.col(text_col)), " ").alias("w"),
+    toks = _spread(docs, "doc_id").select(
+        F.col("doc_id").alias("did"),
+        F.col("source").alias("grp"),
+        F.split(F.lower(F.col("text")), " ").alias("w"),
     )
     sh = (
         toks.select(
@@ -905,18 +849,12 @@ def duplicated_span_stats(
                 (F.col("dup_spans") >= F.lit(heavy_frac) * F.col("n_spans")).cast("long")
             ).alias("n_heavy"),
         )
-        .withColumnRenamed("grp", group_col)
-        .orderBy(group_col)
+        .withColumnRenamed("grp", "source")
+        .orderBy("source")
     )
 
 
-def jaccard_pairs_prefix(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
+def jaccard_pairs_prefix(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact n-gram Jaccard pairs via PREFIX FILTERING (the AllPairs /
     PPJoin candidate bound — Bayardo et al. WWW'07, Xiao et al. WWW'08):
     identical output to :func:`ngram_jaccard_pairs` at the same
@@ -939,7 +877,7 @@ def jaccard_pairs_prefix(
     (prefix explode + both verification sides) and is cached per the
     module contract; the shingle frame has a single consumer since the
     df window replaced the groupBy+join and needs no cache."""
-    sh = _shingles(docs, id_col, text_col, shingle, out_id="id").select(
+    sh = _shingles(docs, "doc_id", "text", 3, out_id="id").select(
         "id", F.xxhash64("s_raw").alias("s")
     )
     # deterministic global order: (doc frequency asc, hash asc); each
@@ -980,13 +918,7 @@ def jaccard_pairs_prefix(
 
 
 def incremental_near_dup(
-    new_docs: DataFrame,
-    seen_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    num_hashes: int = 64,
-    bands: int = 16,
+    new_docs: DataFrame, seen_docs: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
     """Continuous-ingest NEAR-duplicate gate (the MinHash companion to
     :func:`incremental_dedup`'s exact-fingerprint pass): drop new docs
@@ -1003,10 +935,10 @@ def incremental_near_dup(
     left_anti on ids. No new-vs-new comparison — within-batch dedup is
     :func:`minhash_candidate_pairs`'s job if wanted."""
     def _banded(sigs: DataFrame):
-        return _band_rows(sigs, id_col, num_hashes, bands)
+        return _band_rows(sigs, "doc_id", 64, 16)
 
-    new_sigs = minhash_signatures(new_docs, id_col, text_col, num_hashes).cache()
-    seen_sigs = minhash_signatures(seen_docs, id_col, text_col, num_hashes).cache()
+    new_sigs = minhash_signatures(new_docs).cache()
+    seen_sigs = minhash_signatures(seen_docs).cache()
     cand = (
         _banded(new_sigs)
         .alias("n")
@@ -1016,39 +948,34 @@ def incremental_near_dup(
             & (F.col("n.band_hash") == F.col("s.band_hash")),
         )
         .select(
-            F.col(f"n.{id_col}").alias("new_id"), F.col(f"s.{id_col}").alias("seen_id")
+            F.col("n.doc_id").alias("new_id"), F.col("s.doc_id").alias("seen_id")
         )
         .distinct()
     )
     est = (
         cand.join(
-            new_sigs.select(F.col(id_col).alias("new_id"), F.col("signature").alias("sig_n")),
+            new_sigs.select(F.col("doc_id").alias("new_id"), F.col("signature").alias("sig_n")),
             "new_id",
         )
         .join(
-            seen_sigs.select(F.col(id_col).alias("seen_id"), F.col("signature").alias("sig_s")),
+            seen_sigs.select(F.col("doc_id").alias("seen_id"), F.col("signature").alias("sig_s")),
             "seen_id",
         )
         .select(
             "new_id",
             (
                 F.size(F.filter(F.zip_with("sig_n", "sig_s", lambda a, b: a == b), lambda x: x))
-                / F.lit(float(num_hashes))
+                / F.lit(64.0)
             ).alias("est_jaccard"),
         )
     )
     dupes = est.filter(F.col("est_jaccard") >= threshold).select(
-        F.col("new_id").alias(id_col)
+        F.col("new_id").alias("doc_id")
     ).distinct()
-    return new_docs.join(dupes, id_col, "left_anti")
+    return new_docs.join(dupes, "doc_id", "left_anti")
 
 
-def remove_duplicated_spans(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-) -> DataFrame:
+def remove_duplicated_spans(docs: DataFrame, n: int = 8) -> DataFrame:
     """Duplicated-span REMOVAL (the transform behind the
     :func:`duplicated_span_stats` report, a la Lee et al. 2022): every
     n-word span occurring in >= 2 documents keeps its copies only in the
@@ -1057,7 +984,7 @@ def remove_duplicated_spans(
     the span-frequency aggregate); in all other documents the tokens
     covered by that span are dropped and the text is rebuilt. Returns
     the input rows plus ``n_tokens_before`` / ``n_tokens_after`` and the
-    rebuilt ``text_col``. Span MATCHING is case-insensitive (tokens are
+    rebuilt ``text``. Span MATCHING is case-insensitive (tokens are
     lowercased before hashing) but the rebuilt text keeps each surviving
     token's ORIGINAL case; inter-token whitespace is normalized to
     single spaces (the rebuild is token-level by construction).
@@ -1077,7 +1004,7 @@ def remove_duplicated_spans(
     # for span hashing. Both come from the same \s+ split, so positions
     # align one-to-one.
     toks = (
-        docs.withColumn("_wo", F.split(F.col(text_col), r"\s+"))
+        docs.withColumn("_wo", F.split(F.col("text"), r"\s+"))
         .withColumn("_ws", F.transform(F.col("_wo"), F.lower))
         .withColumn("_nw", F.size("_ws"))
     )
@@ -1086,7 +1013,7 @@ def remove_duplicated_spans(
     ).otherwise(F.array().cast("array<int>"))
     inst = (
         toks.select(
-            F.col(id_col).alias("did"),
+            F.col("doc_id").alias("did"),
             F.explode(starts).alias("pos"),
             F.col("_ws"),
         )
@@ -1108,7 +1035,7 @@ def remove_duplicated_spans(
         .groupBy("did")
         .agg(F.array_distinct(F.collect_list("pos")).alias("rm"))
     )
-    out = toks.join(removals, F.col(id_col) == F.col("did"), "left").drop("did")
+    out = toks.join(removals, F.col("doc_id") == F.col("did"), "left").drop("did")
     keep = F.filter(
         F.sequence(F.lit(1), F.col("_nw")),
         lambda i: ~F.exists(
@@ -1121,7 +1048,7 @@ def remove_duplicated_spans(
         .withColumn("n_tokens_before", F.col("_nw").cast("long"))
         .withColumn("n_tokens_after", F.size("_keep").cast("long"))
         .withColumn(
-            text_col,
+            "text",
             F.concat_ws(
                 " ", F.transform(F.col("_keep"), lambda i: F.element_at("_wo", i))
             ),
@@ -1130,12 +1057,7 @@ def remove_duplicated_spans(
     )
 
 
-def source_overlap(
-    docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-    prefix_len: "int | None" = None,
-) -> DataFrame:
+def source_overlap(docs: DataFrame, prefix_len: "int | None" = None) -> DataFrame:
     """Cross-source contamination matrix: for every pair of sources, the
     number of duplicate documents (normalized-text fingerprints) they
     share and the Jaccard overlap of their fingerprint sets. The triage
@@ -1158,12 +1080,12 @@ def source_overlap(
     the sorted set — the same linear pair-generation shape as
     ``copurchase_pairs``. Per-source totals are a second aggregate on
     the same skinny frame and broadcast back (sources² rows)."""
-    normalized = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
+    normalized = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     if prefix_len is not None:
         normalized = F.substring(normalized, 1, prefix_len)
     fps = docs.select(
         F.md5(normalized.cast("binary")).alias("fp"),
-        F.col(source_col).alias("source"),
+        F.col("source").alias("source"),
     ).distinct()
     totals = fps.groupBy("source").agg(F.count(F.lit(1)).alias("n_fps"))
     sets_ = fps.groupBy("fp").agg(F.array_sort(F.collect_set("source")).alias("ss"))
@@ -1205,12 +1127,7 @@ def source_overlap(
     )
 
 
-def cluster_representatives(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    est_threshold: float = 0.5,
-) -> DataFrame:
+def cluster_representatives(docs: DataFrame) -> DataFrame:
     """The dedup family's OUTPUT step: elect one representative document
     per near-duplicate cluster (longest text wins, smallest id breaks
     ties) — the frame a curation pipeline actually keeps after
@@ -1222,11 +1139,9 @@ def cluster_representatives(
     map-side instead of sorted on one task (same rationale as
     cdc_snapshot). One extra shuffle on cluster_id over a skinny
     (cluster_id, id, n_chars) frame."""
-    clusters = near_dup_clusters(
-        docs, id_col=id_col, text_col=text_col, est_threshold=est_threshold
-    )
+    clusters = near_dup_clusters(docs)
     sized = clusters.join(
-        docs.select(F.col(id_col).alias("id"), "n_chars"), "id"
+        docs.select(F.col("doc_id").alias("id"), "n_chars"), "id"
     )
     agg = sized.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_members"),
@@ -1240,11 +1155,7 @@ def cluster_representatives(
     ).orderBy("cluster_id")
 
 
-def capture_recapture_overlap(
-    docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def capture_recapture_overlap(docs: DataFrame) -> DataFrame:
     """Chapman capture-recapture estimate of the TOTAL underlying
     document population behind every source pair (Chapman 1951; the
     Lincoln-Petersen mark-recapture estimator with the +1 bias
@@ -1267,11 +1178,11 @@ def capture_recapture_overlap(
     product is computed in DECIMAL(38,0); the division and the two
     coverage ratios are the only float ops."""
     normalized = F.regexp_replace(
-        F.lower(F.trim(F.col(text_col))), r"\s+", " "
+        F.lower(F.trim(F.col("text"))), r"\s+", " "
     )
     fps = docs.select(
         F.md5(normalized.cast("binary")).alias("fp"),
-        F.col(source_col).alias("source"),
+        F.col("source").alias("source"),
     ).distinct()
     totals = fps.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_fps")

@@ -174,10 +174,7 @@ def pagerank(
     return ranks
 
 
-def connected_components_star(
-    edges: DataFrame,
-    max_rounds: int = 10,
-) -> DataFrame:
+def connected_components_star(edges: DataFrame) -> DataFrame:
     """Connected components by alternating LARGE-STAR / SMALL-STAR
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC 2014). Returns one row per node: (id, cluster_id) where
@@ -215,7 +212,7 @@ def connected_components_star(
     )
     n_edges = e.count()
     rounds = RoundPins()
-    for _ in range(max_rounds):
+    for _ in range(10):
         # large-star: group the symmetrized neighborhood of u; attach
         # m = min(N(u) ∪ {u}); emit (m, v) for every neighbor v > u.
         # m <= u < v keeps the output canonical with no re-orient pass.
@@ -267,8 +264,7 @@ def connected_components_star(
         from ..errors import AvroSqlError
 
         raise AvroSqlError(
-            f"connected_components_star did not converge in {max_rounds} "
-            "rounds; raise max_rounds"
+            "connected_components_star did not converge in 10 rounds"
         )
     # fixed point: every edge is (component_min, member); roots are the
     # nodes that never appear as the larger endpoint
@@ -399,7 +395,7 @@ def copurchase_edges(
     ).select("e.src", "e.dst")
 
 
-def triangle_count(edges: DataFrame, round_to: int = 6) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """One-row triangle census of an undirected graph: (n_nodes,
     n_edges, n_wedges, n_triangles, clustering), where ``clustering``
     is the global coefficient 3 * triangles / wedges.
@@ -437,7 +433,7 @@ def triangle_count(edges: DataFrame, round_to: int = 6) -> DataFrame:
             F.when(
                 F.col("n_wedges") > 0,
                 F.round(
-                    F.lit(3.0) * F.col("n_triangles") / F.col("n_wedges"), round_to
+                    F.lit(3.0) * F.col("n_triangles") / F.col("n_wedges"), 6
                 ),
             )
             .otherwise(F.lit(0.0))
@@ -546,11 +542,7 @@ def bfs_distances(
 
 
 def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iterations: int = 3,
-    damping: float = 0.85,
-    round_to: int | None = None,
+    edges: DataFrame, seeds: DataFrame, iterations: int = 3, round_to: int | None = None
 ) -> DataFrame:
     """Personalized PageRank (Haveliwala 2002): identical iteration to
     :func:`pagerank` except the restart mass returns to the SEED set
@@ -606,8 +598,8 @@ def personalized_pagerank(
             .select(
                 "node",
                 (
-                    F.lit(1.0 - damping) * F.col("t")
-                    + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
+                    F.lit(1.0 - 0.85) * F.col("t")
+                    + F.lit(0.85) * F.coalesce(F.col("contrib"), F.lit(0.0))
                 ).alias("pr"),
             )
         )
@@ -1091,9 +1083,9 @@ def basket_affinity_lift(
     ).limit(top_k)
 
 
-def degree_powerlaw_fit(edges: DataFrame, d_min: int = 2) -> DataFrame:
+def degree_powerlaw_fit(edges: DataFrame) -> DataFrame:
     """Hill/Clauset MLE for the degree-distribution power-law exponent
-    α = 1 + n / Σ ln(d/d_min) over nodes with degree ≥ d_min — the
+    α = 1 + n / Σ ln(d/d_min) over nodes with degree ≥ d_min = 2 — the
     one-number answer to "is this graph hub-dominated?" that decides
     whether joins on it need skew handling (α < 2.5: heavy hubs,
     salt; α > 3: effectively homogeneous).
@@ -1113,11 +1105,11 @@ def degree_powerlaw_fit(edges: DataFrame, d_min: int = 2) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("k"))
         .localCheckpoint(eager=True)  # degree-domain-sized
     )
-    tail = dom.filter(F.col("d") >= d_min)
+    tail = dom.filter(F.col("d") >= 2)
     # integer nano-nats: ln(d/dmin) quantized to 1e-9 as a LONG, then
     # weighted by the node count — pure integer sums, one final /1e9
     t9 = F.round(
-        F.log(F.col("d").cast("double") / F.lit(float(d_min))) * F.lit(1e9)
+        F.log(F.col("d").cast("double") / F.lit(2.0)) * F.lit(1e9)
     ).cast("long")
     s = tail.agg(
         F.sum("k").alias("n_tail"),

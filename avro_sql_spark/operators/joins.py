@@ -13,21 +13,17 @@ from pyspark.sql import functions as F
 
 
 def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    how: str = "inner",
-    salt_buckets: int = 16,
+    big: DataFrame, small: DataFrame, key: str, how: str = "inner"
 ) -> DataFrame:
     """Equi-join where ``big``'s hot keys are split across
-    ``salt_buckets`` tasks: big side gets a random-ish (hash-derived,
+    16 tasks: big side gets a random-ish (hash-derived,
     deterministic) salt, small side is replicated once per bucket, and
     the join key becomes (key, salt). Row multiplicity is unchanged —
     each big row matches exactly one replica of its key."""
-    salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))
+    salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(16))
     big_salted = big.withColumn("_salt", salt.cast("int"))
     small_salted = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(15)))
     )
     out = big_salted.join(small_salted, [key, "_salt"], how)
     return out.drop("_salt")
@@ -60,18 +56,16 @@ def _bloom_hashes(key, num_bits: int, k: int) -> "list":
     return [F.pmod(h1 + F.lit(i) * h2, F.lit(num_bits)) for i in range(k)]
 
 
-def build_bloom(
-    df: DataFrame, key: str, num_bits: int = 1 << 18, k: int = 7
-) -> "list[int]":
+def build_bloom(df: DataFrame, key: str, num_bits: int = 1 << 18) -> "list[int]":
     """Distributed Bloom-filter build over ``df[key]``: every row emits
-    its k bit positions in-row (explode), positions fold into 64-bit
+    its k = 7 bit positions in-row (explode), positions fold into 64-bit
     words with a ``bit_or`` partial aggregate, and only the packed words
     (num_bits/64 longs — kilobytes) reach the driver. No row-at-a-time
     Python, no key collect; the filter size is fixed by num_bits, not
     the key count. Size rule of thumb: ~10 bits/key for ~1% false
     positives at k=7."""
     num_bits = _round_bits(num_bits)
-    positions = F.array(*_bloom_hashes(F.col(key), num_bits, k))
+    positions = F.array(*_bloom_hashes(F.col(key), num_bits, 7))
     words = (
         df.select(F.explode(positions).alias("pos"))
         .select(
@@ -94,8 +88,8 @@ def build_bloom(
     return dense
 
 
-def bloom_might_contain(key, words: "list[int]", num_bits: int, k: int = 7):
-    """Membership-test Column against a built filter: k probes into the
+def bloom_might_contain(key, words: "list[int]", num_bits: int):
+    """Membership-test Column against a built filter: k = 7 probes into the
     word array, all pure JVM arithmetic inside codegen (array index +
     shift + mask per probe). The probes run inside ONE ``forall`` over
     the position array so the word-array literal appears once in the
@@ -116,16 +110,11 @@ def bloom_might_contain(key, words: "list[int]", num_bits: int, k: int = 7):
             == 1
         )
 
-    return F.forall(F.array(*_bloom_hashes(key, num_bits, k)), _probe)
+    return F.forall(F.array(*_bloom_hashes(key, num_bits, 7)), _probe)
 
 
 def bloom_prefilter_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    how: str = "inner",
-    num_bits: int = 1 << 18,
-    k: int = 7,
+    big: DataFrame, small: DataFrame, key: str, how: str = "inner"
 ) -> DataFrame:
     """Selective join with a Bloom prefilter on the BIG side: the small
     side's keys are folded into a fixed-size filter (build_bloom), the
@@ -151,9 +140,9 @@ def bloom_prefilter_join(
             f"'inner' and 'left_semi' joins, got '{how}' — outer/anti "
             "joins need the unmatched rows the prefilter drops"
         )
-    num_bits = _round_bits(num_bits)
-    words = build_bloom(small, key, num_bits, k)
-    pruned = big.filter(bloom_might_contain(F.col(key), words, num_bits, k))
+    num_bits = _round_bits(1 << 18)
+    words = build_bloom(small, key, num_bits)
+    pruned = big.filter(bloom_might_contain(F.col(key), words, num_bits))
     return pruned.join(small, key, how)
 
 

@@ -131,10 +131,8 @@ def skipping_report(
     df: DataFrame,
     cols: list[str],
     tiebreak_col: str,
-    bits: int = 16,
     n_files: int = 32,
     grid: int = 4,
-    round_to: int = 6,
     layouts: "tuple[str, ...]" = ("linear", "zorder"),
 ) -> DataFrame:
     """File-skipping effectiveness audit: how many of ``n_files`` would
@@ -175,7 +173,7 @@ def skipping_report(
     c0, c1 = cols
     # ONE scale-stats aggregate feeds both curves (zvalue and
     # hilbert_index each used to run their own)
-    coords = _scaled_coords(df, cols, bits)
+    coords = _scaled_coords(df, cols, 16)
     # audit columns only — project BEFORE any exchange (guide §2.3)
     need = df.select(c0, c1, tiebreak_col)
     if "hilbert" in layouts:
@@ -192,11 +190,11 @@ def skipping_report(
     # the hilbert layout pays one extra pass (the 16-level fold), so
     # it is opt-in via ``layouts``
     src = (
-        hilbert_index(need, cols, bits, out_col="__hv", coords=coords)
+        hilbert_index(need, cols, out_col="__hv", coords=coords)
         if "hilbert" in layouts
         else need
     )
-    z = interleave_bits(coords, bits).alias("__z")
+    z = interleave_bits(coords).alias("__z")
     # the tiebreak column makes each NTILE ordering TOTAL: rows tied on
     # the layout key (same price cell, same curve cell) would otherwise
     # land in engine-dependent files and flake the per-file min/max
@@ -221,7 +219,7 @@ def skipping_report(
     # through the single shuffle; formerly 3 shuffles + 3 checkpoints +
     # 3 counts jobs for the 3-layout audit). The curve keys ride in a
     # separate LONG field beside the double linear key (no cross-type
-    # cast, so any ``bits`` stays exact); the unused field is a constant
+    # cast, so 16 bits stay exact); the unused field is a constant
     # per layout and never affects the within-layout order.
     keyed = {
         "linear": (F.col("x"), F.lit(0).cast("long")),
@@ -313,12 +311,12 @@ def skipping_report(
             "layout",
             F.lit(n_files).alias("n_files"),
             F.lit(n_preds).alias("n_predicates"),
-            F.round(F.col("scanned") / F.lit(float(n_preds)), round_to).alias(
+            F.round(F.col("scanned") / F.lit(float(n_preds)), 6).alias(
                 "avg_files_scanned"
             ),
             F.round(
                 F.lit(1.0) - F.col("scanned") / F.lit(float(n_preds * n_files)),
-                round_to,
+                6,
             ).alias("pct_pruned"),
         )
         .orderBy("layout")
@@ -331,8 +329,6 @@ def zorder_write(
     cols: list[str],
     bits: int = 16,
     num_files: int | None = None,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
 ) -> None:
     """Write ``df`` clustered along the Z-order curve of ``cols``:
     range-repartition on the z-value (contiguous curve segments per
@@ -348,19 +344,16 @@ def zorder_write(
         .repartitionByRange(n, F.col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z")
-        .write.format(fmt)
-        .mode(mode)
+        .write.format("parquet")
+        .mode("overwrite")
         .save(path)
     )
 
 
 def compaction_plan(
-    files: DataFrame,
-    size_col: str = "bytes",
-    id_col: str = "file_id",
-    target_bytes: int = 128 * 1024 * 1024,
+    files: DataFrame, target_bytes: int = 128 * 1024 * 1024
 ) -> DataFrame:
-    """Small-file compaction plan: assign input files (in ``id_col``
+    """Small-file compaction plan: assign input files (in ``file_id``
     order) to ~``target_bytes`` output bins by BYTE OFFSET — file i
     lands in bin floor(cum_before_i / target), i.e. the bin its first
     byte falls in when the inputs are laid end-to-end. The classic
@@ -379,14 +372,14 @@ def compaction_plan(
     from pyspark.sql.window import Window
 
     w = (
-        Window.orderBy(id_col)
+        Window.orderBy("file_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     assigned = files.select(
-        F.col(id_col),
-        F.col(size_col).alias("sz"),
+        F.col("file_id"),
+        F.col("bytes").alias("sz"),
         F.floor(
-            (F.sum(size_col).over(w) - F.col(size_col))
+            (F.sum("bytes").over(w) - F.col("bytes"))
             / F.lit(target_bytes)
         ).cast("int").alias("bin"),
     )
@@ -404,22 +397,15 @@ def compaction_plan(
 
 
 def key_locality_report(
-    df: DataFrame,
-    key_col: str,
-    other_col: str,
-    tiebreak_col: str,
-    n_files: int = 32,
-    bits: int = 16,
-    bloom_bits_per_key: int = 10,
-    bloom_hashes: int = 7,
+    df: DataFrame, key_col: str, other_col: str, tiebreak_col: str, n_files: int = 32
 ) -> DataFrame:
     """Point-lookup locality audit: for each candidate layout, how many
     of ``n_files`` does a single-key lookup actually touch? Reports per
     layout: files containing an average key (exact containment — the
     file count a perfectly-sharp index pays), the worst key, and the
     expected extra files a per-file BLOOM filter fails to skip (the
-    standard parquet/ORC bloom with ``bloom_bits_per_key`` m/n and
-    ``bloom_hashes`` k: fpr = (1 - exp(-k*n/m))^k per file).
+    standard parquet/ORC bloom with m/n = 10 bits per key and
+    k = 7 hashes: fpr = (1 - exp(-k*n/m))^k per file).
 
     Layouts: ``linear_key`` (clustered by the lookup key — containment
     ~1 file), ``linear_other`` (clustered by an unrelated column — the
@@ -433,7 +419,7 @@ def key_locality_report(
     are n_files- and n_keys-bounded."""
     from .curation import global_rank
 
-    z = zvalue(df, [key_col, other_col], bits).alias("__z")
+    z = zvalue(df, [key_col, other_col]).alias("__z")
     # one scan: the projected frame (including the bit-interleaved
     # z-value) is materialized once (lazy — folds into the range
     # sampling pass) and feeds the single fused ranking below
@@ -509,11 +495,11 @@ def key_locality_report(
     per_file = pairs.groupBy("layout", "f").agg(F.count(F.lit(1)).alias("nk"))
     # per-file bloom fpr on exact distinct-key counts; m sized by the
     # AVERAGE file's key count (one filter budget per file)
-    m = F.lit(float(bloom_bits_per_key)) * F.col("nk").cast("double")
+    m = F.lit(10.0) * F.col("nk").cast("double")
     fpr = F.pow(
         F.lit(1.0)
-        - F.exp(F.lit(float(-bloom_hashes)) * F.col("nk").cast("double") / m),
-        F.lit(float(bloom_hashes)),
+        - F.exp(F.lit(-7.0) * F.col("nk").cast("double") / m),
+        F.lit(7.0),
     )
     blooms = per_file.groupBy("layout").agg(
         F.count(F.lit(1)).alias("nf"),
@@ -638,7 +624,6 @@ def cow_rewrite_plan(
     tiebreak_col: str,
     n_files: int = 32,
     update_rate: float = 0.01,
-    salt: str = "cow",
 ) -> DataFrame:
     """Copy-on-write amplification audit: given a deterministic ~1%
     update batch keyed by ``key_col``, how many files must a COW table
@@ -667,7 +652,7 @@ def cow_rewrite_plan(
         assigned = exact_ntile(
             base, [F.col(c) for c in ks], n_files, out_col="f"
         ).withColumn(
-            "is_upd", (hash_unit(F.col("k"), salt) < F.lit(update_rate)).cast("long")
+            "is_upd", (hash_unit(F.col("k"), "cow") < F.lit(update_rate)).cast("long")
         )
         per_file = assigned.groupBy("f").agg(
             F.count(F.lit(1)).alias("rows"), F.sum(upd).alias("n_upd")
@@ -705,14 +690,11 @@ def bloom_fpr_audit(
     key_col: str,
     order_col: str,
     n_files: int = 16,
-    n_hashes: int = 5,
-    n_longs: int = 8,
     probe_rate: float = 0.2,
-    salt: str = "bloomfpr",
 ) -> DataFrame:
     """EMPIRICAL Bloom-filter false-positive audit: per ingest-cut file,
-    build a real Bloom bitmap over the file's keys (m = ``n_longs``·63
-    bits, ``n_hashes`` md5-derived positions per key — 63 bits per long
+    build a real Bloom bitmap over the file's keys (m = 8·63
+    bits, 5 md5-derived positions per key — 63 bits per long
     keeps every shift off the sign bit), probe it with a deterministic
     hash-sample of keys the file does NOT contain, and count the exact
     false positives — measured FPR next to the (1-e^{-kn/m})^k formula
@@ -727,7 +709,7 @@ def bloom_fpr_audit(
     hash is md5 arithmetic both engines replay bit-for-bit."""
     from .curation import exact_ntile, hash_unit
 
-    m_bits = n_longs * 63
+    m_bits = 8 * 63
     base = df.select(F.col(key_col).alias("k"), F.col(order_col).alias("ob"))
     # (f, k) is consumed three times (bitmap build, anti-join probe
     # membership, per-file key counts). Deliberately NOT checkpointed:
@@ -751,7 +733,7 @@ def bloom_fpr_audit(
                         F.substring(
                             F.md5(
                                 F.concat(
-                                    key.cast("string"), F.lit(f":{salt}{i}")
+                                    key.cast("string"), F.lit(f":bloomfpr{i}")
                                 ).cast("binary")
                             ),
                             1,
@@ -762,7 +744,7 @@ def bloom_fpr_audit(
                     ).cast("bigint")
                     % m_bits
                 )
-                for i in range(n_hashes)
+                for i in range(5)
             ]
         )
 
@@ -782,7 +764,7 @@ def bloom_fpr_audit(
                     ).otherwise(F.lit(0).cast("long"))
                 ),
             ).alias(f"b{j}")
-            for j in range(n_longs)
+            for j in range(8)
         ]
 
     member_bits = files.select("f", *bitmap_longs(positions(F.col("k"))))
@@ -791,7 +773,7 @@ def bloom_fpr_audit(
     # — the separate nkeys pass (a third full exact_ntile re-derivation)
     # is gone (guide §2.4)
     blooms_nk = member_bits.groupBy("f").agg(
-        *[F.bit_or(f"b{j}").alias(f"m{j}") for j in range(n_longs)],
+        *[F.bit_or(f"b{j}").alias(f"m{j}") for j in range(8)],
         F.count(F.lit(1)).alias("nk"),
     )
     blooms = blooms_nk.drop("nk")
@@ -802,7 +784,7 @@ def bloom_fpr_audit(
     probe_keys = (
         base.select("k")
         .distinct()
-        .filter(hash_unit(F.col("k"), salt) < F.lit(probe_rate))
+        .filter(hash_unit(F.col("k"), "bloomfpr") < F.lit(probe_rate))
         .select("k", *bitmap_longs(positions(F.col("k"))))
     )
     # NO anti-join: a member key's bits are all set in its own file's
@@ -812,17 +794,17 @@ def bloom_fpr_audit(
     # ALL (sampled key × file) pairs and subtracting the sampled member
     # -pair count gives bit-identical n_probes / n_false_positives
     # while deleting the SortMergeJoin LeftAnti that sorted the wide
-    # (key + n_longs bitmap) probe side, and the files subtree it
+    # (key + 8-long bitmap) probe side, and the files subtree it
     # re-derived (was the plan's one SMJ; r9 plan pair).
     pb = probe_keys.crossJoin(F.broadcast(blooms))
     might = None
-    for j in range(n_longs):
+    for j in range(8):
         c = F.col(f"m{j}").bitwiseAND(F.col(f"b{j}")) == F.col(f"b{j}")
         might = c if might is None else (might & c)
     counted = pb.select(might.cast("long").alias("fp"))
     # sampled member pairs: the probe_keys sampling predicate verbatim,
     # applied to files — a scalar aggregate, not a join
-    ms = files.filter(hash_unit(F.col("k"), salt) < F.lit(probe_rate)).agg(
+    ms = files.filter(hash_unit(F.col("k"), "bloomfpr") < F.lit(probe_rate)).agg(
         F.count(F.lit(1)).alias("ms")
     )
     theo = blooms_nk.select(
@@ -830,11 +812,11 @@ def bloom_fpr_audit(
             F.pow(
                 F.lit(1.0)
                 - F.exp(
-                    F.lit(float(-n_hashes))
+                    F.lit(-5.0)
                     * F.col("nk").cast("double")
                     / F.lit(float(m_bits))
                 ),
-                F.lit(float(n_hashes)),
+                F.lit(5.0),
             ),
             9,
         )
@@ -862,7 +844,7 @@ def bloom_fpr_audit(
         .select(
             F.lit(n_files).alias("n_files"),
             F.lit(m_bits).alias("m_bits"),
-            F.lit(n_hashes).alias("k_hashes"),
+            F.lit(5).alias("k_hashes"),
             F.col("n_probes").cast("bigint").alias("n_probes"),
             F.col("n_false_positives").cast("bigint").alias("n_false_positives"),
             F.round(

@@ -45,16 +45,16 @@ MEDIA_META = StructType(
 )
 
 
-def attach_fake_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_fake_payload(docs: DataFrame) -> DataFrame:
     """Deterministic binary payload derived from the text column — stands
     in for real media bytes so the binary-column plumbing is testable."""
-    return docs.withColumn("payload", F.col(text_col).cast("binary")).withColumn(
+    return docs.withColumn("payload", F.col("text").cast("binary")).withColumn(
         "media",
         F.struct(
             F.lit("image").alias("kind"),
             F.lit("image/fake").alias("mime"),
-            (F.octet_length(F.col(text_col)) % 1920).cast("int").alias("width"),
-            (F.octet_length(F.col(text_col)) % 1080).cast("int").alias("height"),
+            (F.octet_length(F.col("text")) % 1920).cast("int").alias("width"),
+            (F.octet_length(F.col("text")) % 1080).cast("int").alias("height"),
             F.lit(None).cast("long").alias("duration_ms"),
         ),
     )
@@ -85,7 +85,7 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def extract_features(media_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def extract_features(media_df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads via
     ``mapInPandas`` — the pattern for any decode/resize/frame-sample op.
     Python touches each payload once per batch; no per-row round trips."""
@@ -106,7 +106,7 @@ def extract_features(media_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             payloads = pdf["payload"]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "n_bytes": payloads.map(len),
                     "byte_checksum": payloads.map(checksum),
                     "hist_0": payloads.map(hist0),
@@ -120,18 +120,18 @@ def extract_features(media_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     # features to extract
     n = media_df.sparkSession.sparkContext.defaultParallelism
     return (
-        media_df.select(id_col, "payload")
+        media_df.select("doc_id", "payload")
         .filter(F.col("payload").isNotNull())
-        .repartition(n, F.col(id_col))
+        .repartition(n, F.col("doc_id"))
         .mapInPandas(_extract, FEATURE_SCHEMA)
     )
 
 
-def payload_sizes(media_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def payload_sizes(media_df: DataFrame) -> DataFrame:
     """Metadata-only profile — stays entirely JVM-side (octet_length), and
     with parquet nested pruning never reads the payload bytes."""
     return media_df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.octet_length("payload").alias("n_bytes"),
         F.col("media.kind").alias("kind"),
         F.col("media.width").alias("width"),
@@ -148,9 +148,7 @@ RESIZED_SCHEMA = StructType(
 )
 
 
-def resize_images(
-    media_df: DataFrame, width: int = 32, height: int = 32, id_col: str = "doc_id"
-) -> DataFrame:
+def resize_images(media_df: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
     """Resize pass over image payloads via ``mapInPandas``. The real
     resample (PIL/opencv) is STUBBED with a deterministic stand-in —
     nearest-neighbor over the raw byte grid, so output size is exactly
@@ -175,7 +173,7 @@ def resize_images(
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "payload": pdf["payload"].map(fake_resample),
                     "width": width,
                     "height": height,
@@ -184,9 +182,9 @@ def resize_images(
 
     n = media_df.sparkSession.sparkContext.defaultParallelism
     return (
-        media_df.select(id_col, "payload")
+        media_df.select("doc_id", "payload")
         .filter(F.col("payload").isNotNull())  # see extract_features
-        .repartition(n, F.col(id_col))
+        .repartition(n, F.col("doc_id"))
         .mapInPandas(_resize, RESIZED_SCHEMA)
     )
 
@@ -201,10 +199,7 @@ FRAME_SCHEMA = StructType(
 
 
 def sample_frames(
-    media_df: DataFrame,
-    frame_bytes: int = 64,
-    every_n: int = 4,
-    id_col: str = "doc_id",
+    media_df: DataFrame, frame_bytes: int = 64, every_n: int = 4
 ) -> DataFrame:
     """Frame sampling for video payloads: treat the payload as a run of
     fixed-size frames and emit every ``every_n``-th one as its own row —
@@ -216,7 +211,7 @@ def sample_frames(
     def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, frames = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 n_frames = len(payload) // frame_bytes
                 for fi in range(0, n_frames, every_n):
                     ids.append(doc_id)
@@ -226,14 +221,14 @@ def sample_frames(
 
     n = media_df.sparkSession.sparkContext.defaultParallelism
     return (
-        media_df.select(id_col, "payload")
+        media_df.select("doc_id", "payload")
         .filter(F.col("payload").isNotNull())  # see extract_features
-        .repartition(n, F.col(id_col))
+        .repartition(n, F.col("doc_id"))
         .mapInPandas(_sample, FRAME_SCHEMA)
     )
 
 
-def payload_dedup_stats(media: DataFrame, payload_col: str = "payload") -> DataFrame:
+def payload_dedup_stats(media: DataFrame) -> DataFrame:
     """Exact dedup audit for binary media payloads — the first pass of
     every multimodal ingest (image/audio corpora are 30-50% byte-exact
     duplicates; dedup BEFORE decode saves the GPU fleet, not after):
@@ -249,8 +244,8 @@ def payload_dedup_stats(media: DataFrame, payload_col: str = "payload") -> DataF
     per_content = (
         media.select(
             F.col("media.kind").alias("kind"),
-            F.md5(F.col(payload_col)).alias("h"),
-            F.octet_length(F.col(payload_col)).alias("sz"),
+            F.md5(F.col("payload")).alias("h"),
+            F.octet_length(F.col("payload")).alias("sz"),
         )
         .groupBy("kind", "h")
         .agg(

@@ -242,16 +242,10 @@ def value_histogram(
     )
 
 
-def mad_outliers(
-    df: DataFrame,
-    group_col: str,
-    val_col: str,
-    cutoff: float = 3.5,
-    round_to: int = 4,
-) -> DataFrame:
+def mad_outliers(df: DataFrame, group_col: str, val_col: str) -> DataFrame:
     """Robust per-group outlier screen via the median absolute deviation:
     a value is an outlier when its modified z-score
-    ``0.6745 * |v - median| / MAD`` exceeds ``cutoff`` (3.5, the classic
+    ``0.6745 * |v - median| / MAD`` exceeds 3.5 (the classic
     Iglewicz-Hoaglin threshold). Unlike mean/stddev screens, the median
     and MAD do not move when the outliers themselves are extreme — this
     is the screen to run on raw telemetry BEFORE trusting any
@@ -265,20 +259,20 @@ def mad_outliers(
     100 TB swap both medians for ``approx_percentile(…, 0.5)`` /
     a t-digest — same plan shape, fixed-size mergeable state, and the
     3.5-sigma decision is insensitive to the approximation error.
-    Median and MAD are rounded to ``round_to`` (4) decimals BEFORE the
+    Median and MAD are rounded to 4 decimals BEFORE the
     z-comparison so the boundary decision is bit-identical across
     engines (a last-ulp interpolation difference cannot flip an
     outlier count)."""
     g, v = F.col(group_col), F.col(val_col)
     src = df.filter(v.isNotNull()).select(group_col, val_col)
     med = src.groupBy(group_col).agg(
-        F.round(F.median(v), round_to).alias("med")
+        F.round(F.median(v), 4).alias("med")
     )
     dev = src.join(F.broadcast(med), group_col).select(
         group_col, val_col, F.abs(v - F.col("med")).alias("adev")
     )
     mad = dev.groupBy(group_col).agg(
-        F.round(F.median("adev"), round_to).alias("mad")
+        F.round(F.median("adev"), 4).alias("mad")
     )
     stats = med.join(mad, group_col)
     z = F.lit(0.6745) * F.abs(v - F.col("med")) / F.col("mad")
@@ -286,7 +280,7 @@ def mad_outliers(
         group_col,
         # a zero-MAD group (>= half the values identical) yields NULL z:
         # no value is an outlier by this screen, matching the oracle
-        F.when(F.col("mad") > 0, z > cutoff).otherwise(F.lit(False)).alias("is_out"),
+        F.when(F.col("mad") > 0, z > 3.5).otherwise(F.lit(False)).alias("is_out"),
     )
     return (
         flagged.groupBy(group_col)
@@ -310,9 +304,7 @@ def mad_outliers(
     )
 
 
-def chi2_independence(
-    df: DataFrame, col_a: str, col_b: str, round_to: int = 4
-) -> DataFrame:
+def chi2_independence(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """Pearson chi-square independence audit of two categorical columns
     — the statistical check behind "is my corpus mixture balanced?"
     (e.g. language × source: a large statistic means sources have very
@@ -344,8 +336,8 @@ def chi2_independence(
         col_a,
         col_b,
         "obs",
-        F.round(exp, round_to).alias("expected"),
-        F.round(contrib, round_to).alias("contrib"),
+        F.round(exp, 4).alias("expected"),
+        F.round(contrib, 4).alias("contrib"),
         F.round(contrib, 6).cast("decimal(18,6)").alias("_c6"),
     )
     # the global statistic is a whole-frame window sum over the CELLS
@@ -365,7 +357,7 @@ def chi2_independence(
             "obs",
             "expected",
             "contrib",
-            F.round(total.cast("double"), round_to).alias("chi2_total"),
+            F.round(total.cast("double"), 4).alias("chi2_total"),
         )
         .orderBy(col_a, col_b)
     )
@@ -522,12 +514,7 @@ def twopass_median(
     )
 
 
-def incremental_agg_merge(
-    df: DataFrame,
-    group_col: str = "event_type",
-    value_col: str = "value",
-    delta_pred: Column | None = None,
-) -> DataFrame:
+def incremental_agg_merge(df: DataFrame, delta_pred: Column | None = None) -> DataFrame:
     """Incremental materialized-aggregate maintenance: the base
     partition's aggregate STATE (count / decimal-exact sum / min / max)
     merges with the delta partition's state, and the merged result is
@@ -545,23 +532,23 @@ def incremental_agg_merge(
     # a NULL predicate row must not vanish from BOTH partitions (the
     # merge would silently diverge from the full recompute)
     delta_pred = F.coalesce(delta_pred, F.lit(False))
-    dec = F.round(F.col(value_col), 6).cast("decimal(38,6)")
+    dec = F.round(F.col("value"), 6).cast("decimal(38,6)")
 
     def state(part: DataFrame) -> DataFrame:
-        return part.groupBy(group_col).agg(
+        return part.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(dec).alias("s"),
-            F.min(value_col).alias("mn"),
-            F.max(value_col).alias("mx"),
+            F.min("value").alias("mn"),
+            F.max("value").alias("mx"),
         )
 
     base = state(df.filter(~delta_pred))
     delta = state(df.filter(delta_pred))
     merged = (
         base.alias("b")
-        .join(delta.alias("d"), group_col, "full_outer")
+        .join(delta.alias("d"), "event_type", "full_outer")
         .select(
-            F.col(group_col),
+            F.col("event_type"),
             (F.coalesce(F.col("b.n"), F.lit(0)) + F.coalesce(F.col("d.n"), F.lit(0))).alias(
                 "n_events"
             ),
@@ -574,22 +561,15 @@ def incremental_agg_merge(
         )
     )
     return merged.select(
-        group_col,
+        "event_type",
         "n_events",
         F.round(F.col("s").cast("double"), 4).alias("total_value"),
         F.col("mn0").alias("min_value"),
         F.col("mx0").alias("max_value"),
-    ).orderBy(group_col)
+    ).orderBy("event_type")
 
 
-def grouped_winsorized_stats(
-    df: DataFrame,
-    group_col: str = "event_type",
-    value_col: str = "value",
-    lo_pct: int = 5,
-    hi_pct: int = 95,
-    buckets: int = 1024,
-) -> DataFrame:
+def grouped_winsorized_stats(df: DataFrame) -> DataFrame:
     """Per-group winsorized statistics with EXACT order-statistic
     thresholds and NO per-group sort: the robust-mean step every metrics
     pipeline runs before alerting on heavy-tailed values.
@@ -614,8 +594,8 @@ def grouped_winsorized_stats(
     — exact and order-free (the incremental_agg_merge pattern), so the
     oracle's independent accumulation hashes identically. Clamp counts
     use strict inequality (values AT the threshold are kept as-is)."""
-    src = df.filter(F.col(value_col).isNotNull()).select(
-        F.col(group_col).alias("g"), F.col(value_col).alias("v")
+    src = df.filter(F.col("value").isNotNull()).select(
+        F.col("event_type").alias("g"), F.col("value").alias("v")
     )
     stats = src.groupBy("g").agg(
         F.count(F.lit(1)).alias("n"),
@@ -631,9 +611,9 @@ def grouped_winsorized_stats(
                 F.floor(
                     (F.col("v") - F.col("mn"))
                     / (F.col("mx") - F.col("mn"))
-                    * F.lit(buckets)
+                    * F.lit(1024)
                 ).cast("int"),
-                F.lit(buckets - 1),
+                F.lit(1023),
             ),
         )
         .otherwise(F.lit(0))
@@ -655,11 +635,11 @@ def grouped_winsorized_stats(
             F.array(
                 F.struct(
                     F.lit("lo").alias("which"),
-                    F.expr(f"CAST((n * {lo_pct} + 99) DIV 100 AS BIGINT)").alias("k"),
+                    F.expr("CAST((n * 5 + 99) DIV 100 AS BIGINT)").alias("k"),
                 ),
                 F.struct(
                     F.lit("hi").alias("which"),
-                    F.expr(f"CAST((n * {hi_pct} + 99) DIV 100 AS BIGINT)").alias("k"),
+                    F.expr("CAST((n * 95 + 99) DIV 100 AS BIGINT)").alias("k"),
                 ),
             )
         ).alias("t"),
@@ -715,7 +695,7 @@ def grouped_winsorized_stats(
             .alias("_sum"),
         )
         .select(
-            F.col("g").alias(group_col),
+            F.col("g").alias("event_type"),
             "n_values",
             "p_lo",
             "p_hi",
@@ -723,16 +703,11 @@ def grouped_winsorized_stats(
             "n_clamped_hi",
             F.round(F.col("_sum") / F.col("n_values"), 6).alias("winsor_mean"),
         )
-        .orderBy(group_col)
+        .orderBy("event_type")
     )
 
 
-def pareto_concentration(
-    df: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-    pcts: tuple = (1, 5, 10, 25, 50),
-) -> DataFrame:
+def pareto_concentration(df: DataFrame) -> DataFrame:
     """Value-concentration (Lorenz/Pareto) report: what share of total
     value do the top p% of keys hold, for each p — the 'whales' table
     behind capacity planning, abuse triage, and revenue analysis.
@@ -748,15 +723,15 @@ def pareto_concentration(
     from .curation import global_rank
 
     totals = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(key_col)
+        df.filter(F.col("value").isNotNull())
+        .groupBy("user_id")
         .agg(
             F.sum(
-                F.round(F.col(value_col), 6).cast("decimal(38,6)")
+                F.round(F.col("value"), 6).cast("decimal(38,6)")
             ).alias("td")
         )
     )
-    ranked = global_rank(totals, [F.desc("td"), F.asc(key_col)], rank_col="rk")
+    ranked = global_rank(totals, [F.desc("td"), F.asc("user_id")], rank_col="rk")
     scalars = totals.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("td").alias("grand"),
@@ -770,7 +745,7 @@ def pareto_concentration(
                     F.col("rk") * 100 <= F.col("n") * p + 99, F.col("td")
                 ).otherwise(F.lit(0).cast("decimal(38,6)"))
             ).alias(f"top_{p}")
-            for p in pcts
+            for p in (1, 5, 10, 25, 50)
         ],
     )
     stacked = conds.select(
@@ -788,7 +763,7 @@ def pareto_concentration(
                             6,
                         ).alias("value_share"),
                     )
-                    for p in pcts
+                    for p in (1, 5, 10, 25, 50)
                 ]
             )
         ).alias("t")
@@ -796,11 +771,7 @@ def pareto_concentration(
     return stacked.select("t.pct", "t.top_keys", "t.value_share").orderBy("pct")
 
 
-def fano_burstiness(
-    df: DataFrame,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def fano_burstiness(df: DataFrame) -> DataFrame:
     """Burstiness (Fano factor = variance/mean of per-hour counts) per
     group: 1 for a Poisson arrival process, >1 for bursty traffic — the
     dispersion diagnostic behind rate-limiter sizing and anomaly
@@ -812,9 +783,9 @@ def fano_burstiness(
     groups × hours; variance uses the one-pass identity
     (Σc² − (Σc)²/n)/(n−1) with the identical expression on the oracle
     side, so the doubles agree bit-for-bit."""
-    h = F.date_trunc("hour", F.col(ts_col)).alias("h")
-    counts = df.groupBy(F.col(group_col), h).agg(F.count(F.lit(1)).alias("c"))
-    agg = counts.groupBy(group_col).agg(
+    h = F.date_trunc("hour", F.col("ts")).alias("h")
+    counts = df.groupBy(F.col("event_type"), h).agg(F.count(F.lit(1)).alias("c"))
+    agg = counts.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_hours"),
         F.sum("c").alias("s1"),
         F.sum(F.col("c") * F.col("c")).alias("s2"),
@@ -827,13 +798,13 @@ def fano_burstiness(
     return (
         agg.filter(F.col("n_hours") >= 2)
         .select(
-            group_col,
+            "event_type",
             "n_hours",
             F.round(mean, 6).alias("mean_per_hour"),
             F.round(var, 6).alias("var_per_hour"),
             F.round(var / mean, 6).alias("fano"),
         )
-        .orderBy(group_col)
+        .orderBy("event_type")
     )
 
 
@@ -891,11 +862,7 @@ def incremental_join_agg(
     )
 
 
-def cusum_drift(
-    df: DataFrame,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def cusum_drift(df: DataFrame) -> DataFrame:
     """CUSUM drift series per group (Page 1954, the no-reset form):
     hourly event counts minus the group's mean hourly count, cumulated
     in hour order — a sustained rate shift shows as a monotone ramp
@@ -908,36 +875,31 @@ def cusum_drift(
     fold the identical sequence. The window partitions by group over a
     frame bounded by groups × hours — aggregate-sized, never
     row-sized."""
-    h = F.date_trunc("hour", F.col(ts_col)).alias("h")
-    counts = df.groupBy(F.col(group_col), h).agg(F.count(F.lit(1)).alias("c"))
-    per = counts.groupBy(group_col).agg(
+    h = F.date_trunc("hour", F.col("ts")).alias("h")
+    counts = df.groupBy(F.col("event_type"), h).agg(F.count(F.lit(1)).alias("c"))
+    per = counts.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("nh"), F.sum("c").alias("tot")
     )
-    dev = counts.join(F.broadcast(per), group_col).select(
-        group_col,
+    dev = counts.join(F.broadcast(per), "event_type").select(
+        "event_type",
         "h",
         "c",
         (F.col("c") - F.col("tot").cast("double") / F.col("nh")).alias("dev"),
     )
     w = (
-        Window.partitionBy(group_col)
+        Window.partitionBy("event_type")
         .orderBy("h")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return dev.select(
-        group_col,
+        "event_type",
         "h",
         "c",
         F.round(F.sum("dev").over(w), 6).alias("cusum"),
-    ).orderBy(group_col, "h")
+    ).orderBy("event_type", "h")
 
 
-def seasonal_naive_backtest(
-    df: DataFrame,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    period_hours: int = 24,
-) -> DataFrame:
+def seasonal_naive_backtest(df: DataFrame) -> DataFrame:
     """Backtest of the seasonal-naive forecaster (predict hour h =
     actual at h − period) over hourly event counts — the baseline every
     capacity-planning model must beat, and the standard sanity row in a
@@ -950,20 +912,20 @@ def seasonal_naive_backtest(
     differences; MAE/bias are integer sums over one division; MAPE
     averages per-row rationals (rounded at 6dp, same convention as the
     LM scorers)."""
-    h = F.date_trunc("hour", F.col(ts_col)).alias("h")
+    h = F.date_trunc("hour", F.col("ts")).alias("h")
     # the groups x hours count frame feeds both join sides; a bounded
     # internal frame the caller never receives, so localCheckpoint
     # (eager) per the markov_stationary convention — cache() here would
     # leak session storage on every invocation (the caller has no
     # handle to unpersist)
     counts = (
-        df.groupBy(F.col(group_col).alias("g"), h)
+        df.groupBy(F.col("event_type").alias("g"), h)
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint(eager=True)
     )
     base = counts.select(
         F.col("g"),
-        (F.col("h") + F.expr(f"INTERVAL {period_hours} HOURS")).alias("h"),
+        (F.col("h") + F.expr("INTERVAL 24 HOURS")).alias("h"),
         F.col("c").alias("pred"),
     )
     joined = counts.join(base, ["g", "h"])
@@ -977,13 +939,13 @@ def seasonal_naive_backtest(
             F.round(F.sum(F.col("pred") - F.col("c")) / F.count(F.lit(1)), 6).alias("bias"),
         )
         .select(
-            F.col("g").alias(group_col), "n_predictions", "mae", "mape", "bias"
+            F.col("g").alias("event_type"), "n_predictions", "mae", "mape", "bias"
         )
-        .orderBy(group_col)
+        .orderBy("event_type")
     )
 
 
-def dataset_card(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def dataset_card(docs: DataFrame) -> DataFrame:
     """One-row dataset datasheet (Gebru et al. 2018, "Datasheets for
     Datasets"): corpus size, source/language spread, token volume,
     exact-duplicate rate, and Gopher quality-gate pass rate — the
@@ -996,7 +958,7 @@ def dataset_card(docs: DataFrame, text_col: str = "text") -> DataFrame:
     at extreme cardinalities — profile_table_approx's trade)."""
     from ..functions.text import fingerprint, gopher_pass, word_tokens
 
-    t = F.col(text_col)
+    t = F.col("text")
     agg = docs.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("source").alias("n_sources"),
@@ -1061,12 +1023,7 @@ def equi_depth_histogram(
     )
 
 
-def disorder_audit(
-    df: DataFrame,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-) -> DataFrame:
+def disorder_audit(df: DataFrame, order_col: str = "event_id") -> DataFrame:
     """Out-of-orderness audit over an event stream: within each group,
     walk events in ARRIVAL order (the ingestion-assigned ``order_col``)
     and flag rows whose event time is behind the running event-time
@@ -1079,14 +1036,14 @@ def disorder_audit(
     exact integer microseconds scaled to whole seconds by FLOOR, so
     every output cell is integer arithmetic."""
     w = (
-        Window.partitionBy(group_col)
+        Window.partitionBy("event_type")
         .orderBy(order_col)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     marked = df.select(
-        F.col(group_col),
-        F.col(ts_col).alias("t"),
-        F.max(ts_col).over(w).alias("hwm"),
+        F.col("event_type"),
+        F.col("ts").alias("t"),
+        F.max("ts").over(w).alias("hwm"),
     )
     late = F.col("hwm").isNotNull() & (F.col("t") < F.col("hwm"))
     lateness_s = F.when(
@@ -1100,7 +1057,7 @@ def disorder_audit(
         ),
     ).otherwise(F.lit(0))
     return (
-        marked.groupBy(group_col)
+        marked.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(late.cast("bigint")).alias("n_late"),
@@ -1109,16 +1066,11 @@ def disorder_audit(
                 F.sum(late.cast("bigint")) / F.count(F.lit(1)), 6
             ).alias("late_frac"),
         )
-        .orderBy(group_col)
+        .orderBy("event_type")
     )
 
 
-def interarrival_stats(
-    df: DataFrame,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-) -> DataFrame:
+def interarrival_stats(df: DataFrame) -> DataFrame:
     """Inter-arrival time distribution per group: mean gap and
     coefficient of variation over consecutive event-time differences —
     CV ≈ 1 is the Poisson signature, CV > 1 bursty, CV < 1 regular.
@@ -1131,18 +1083,18 @@ def interarrival_stats(
     overflows BIGINT — the overflow trap every naive variance-of-
     micros hits); the mean/CV finish is a handful of scalar double ops
     on the bounded per-group frame, rounded at 6dp."""
-    w = Window.partitionBy(group_col).orderBy(ts_col, order_col)
+    w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     gaps = (
         df.select(
-            F.col(group_col),
+            F.col("event_type"),
             (
-                F.unix_micros(F.col(ts_col).cast("timestamp"))
-                - F.unix_micros(F.lag(ts_col).over(w).cast("timestamp"))
+                F.unix_micros(F.col("ts").cast("timestamp"))
+                - F.unix_micros(F.lag("ts").over(w).cast("timestamp"))
             ).alias("d"),
         )
         .filter(F.col("d").isNotNull())
     )
-    agg = gaps.groupBy(group_col).agg(
+    agg = gaps.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_gaps"),
         F.sum(F.col("d").cast("decimal(38,0)")).alias("s1"),
         F.sum(
@@ -1157,20 +1109,16 @@ def interarrival_stats(
     return (
         agg.filter(F.col("n_gaps") >= 2)
         .select(
-            group_col,
+            "event_type",
             "n_gaps",
             F.round(mean_us / F.lit(1_000_000.0), 6).alias("mean_gap_s"),
             F.round(F.sqrt(var_us) / mean_us, 6).alias("cv"),
         )
-        .orderBy(group_col)
+        .orderBy("event_type")
     )
 
 
-def user_entropy(
-    df: DataFrame,
-    key_col: str = "user_id",
-    cat_col: str = "event_type",
-) -> DataFrame:
+def user_entropy(df: DataFrame) -> DataFrame:
     """Behavioral diversity per key: Shannon entropy (nats) of the
     category distribution — 0 for single-action bots, ln(k) for
     uniform explorers. The segmentation feature that separates
@@ -1182,17 +1130,17 @@ def user_entropy(
     aggregate is bounded by keys × categories, the outer by keys. The
     ≤category-count float terms per key drift sub-ulp across engines —
     absorbed by the 6dp round."""
-    counts = df.groupBy(key_col, cat_col).agg(F.count(F.lit(1)).alias("c"))
-    per = counts.groupBy(key_col).agg(
+    counts = df.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("c"))
+    per = counts.groupBy("user_id").agg(
         F.sum("c").alias("n"),
         F.sum(F.col("c") * F.log(F.col("c").cast("double"))).alias("clc"),
     )
     ent = F.log(F.col("n").cast("double")) - F.col("clc") / F.col("n")
     return per.select(
-        key_col,
+        "user_id",
         F.col("n").cast("bigint").alias("n_events"),
         F.round(ent, 6).alias("entropy"),
-    ).orderBy(key_col)
+    ).orderBy("user_id")
 
 
 def benford_audit(df: DataFrame, value_col: str) -> DataFrame:
@@ -1235,11 +1183,7 @@ def benford_audit(df: DataFrame, value_col: str) -> DataFrame:
     )
 
 
-def gini_coefficient(
-    df: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
+def gini_coefficient(df: DataFrame) -> DataFrame:
     """Gini coefficient of per-key value totals — the single-number
     integral of :func:`pareto_concentration`'s Lorenz curve:
     G = 2·Σᵢ i·xᵢ / (n·Σx) − (n+1)/n over values sorted ascending.
@@ -1252,13 +1196,13 @@ def gini_coefficient(
     from .curation import global_rank
 
     totals = (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(key_col)
+        df.filter(F.col("value").isNotNull())
+        .groupBy("user_id")
         .agg(
-            F.sum(F.round(F.col(value_col), 6).cast("decimal(38,6)")).alias("td")
+            F.sum(F.round(F.col("value"), 6).cast("decimal(38,6)")).alias("td")
         )
     )
-    ranked = global_rank(totals, [F.asc("td"), F.asc(key_col)], rank_col="rk")
+    ranked = global_rank(totals, [F.asc("td"), F.asc("user_id")], rank_col="rk")
     s = ranked.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("td").alias("sx"),
@@ -1274,14 +1218,7 @@ def gini_coefficient(
     )
 
 
-def kaplan_meier(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    start_type: str = "signup",
-    event_type_val: str = "purchase",
-    type_col: str = "event_type",
-) -> DataFrame:
+def kaplan_meier(df: DataFrame) -> DataFrame:
     """Kaplan-Meier survival curve for time-to-conversion: each user
     who signs up either converts after d seconds (an event) or is
     censored at their last observed activity — the estimator that uses
@@ -1296,15 +1233,15 @@ def kaplan_meier(
     exp(Σ ln(1−d/n)) — the identical libm composition on both engines,
     ordered by time, rounded at 6dp."""
     per_user = (
-        df.groupBy(user_col)
+        df.groupBy("user_id")
         .agg(
             F.min(
-                F.when(F.col(type_col) == start_type, F.col(ts_col))
+                F.when(F.col("event_type") == "signup", F.col("ts"))
             ).alias("t0"),
             F.min(
-                F.when(F.col(type_col) == event_type_val, F.col(ts_col))
+                F.when(F.col("event_type") == "purchase", F.col("ts"))
             ).alias("tc"),
-            F.max(F.col(ts_col)).alias("tlast"),
+            F.max(F.col("ts")).alias("tlast"),
         )
         .filter(F.col("t0").isNotNull())
         .filter(
@@ -1370,10 +1307,7 @@ def kaplan_meier(
     ).orderBy("t_seconds")
 
 
-def weekday_hour_profile(
-    df: DataFrame,
-    ts_col: str = "ts",
-) -> DataFrame:
+def weekday_hour_profile(df: DataFrame) -> DataFrame:
     """Activity calendar: event share per (weekday, hour-of-day) cell —
     the 7×24 heatmap behind maintenance-window picking and bot
     detection (organic traffic has a diurnal/weekly shape; scripted
@@ -1384,9 +1318,9 @@ def weekday_hour_profile(
     DAYOFWEEK disagree (Spark is 1-based Sunday, DuckDB 0-based), and
     the formula sidesteps both. One aggregate bounded by 168 cells;
     share is one division of exact integers."""
-    days = F.datediff(F.to_date(F.col(ts_col)), F.lit("1970-01-01"))
+    days = F.datediff(F.to_date(F.col("ts")), F.lit("1970-01-01"))
     dow = ((days + 4) % 7).cast("int")
-    hr = F.hour(F.col(ts_col)).cast("int")
+    hr = F.hour(F.col("ts")).cast("int")
     cells = df.groupBy(dow.alias("weekday"), hr.alias("hour")).agg(
         F.count(F.lit(1)).alias("n_events")
     )
@@ -1461,15 +1395,11 @@ def mutual_information_report(
     )
 
 
-def cuped_adjusted_lift(
-    events: DataFrame,
-    assign_salt: str = "cuped",
-    split_ts: str = "2024-01-16 00:00:00",
-) -> DataFrame:
+def cuped_adjusted_lift(events: DataFrame) -> DataFrame:
     """CUPED variance-reduced A/B lift (Deng et al. 2013, "Improving the
     Sensitivity of Online Controlled Experiments by Utilizing
     Pre-Experiment Data"): per-user PRE-period activity (events before
-    ``split_ts``) is the control covariate for the POST-period metric;
+    2024-01-16) is the control covariate for the POST-period metric;
     theta = cov(X, Y)/var(X) pooled over both arms, each user's
     adjusted metric is y - theta*(x - mean(x)), and the reported lift
     is the difference of adjusted arm means with the variance-reduction
@@ -1483,7 +1413,7 @@ def cuped_adjusted_lift(
     (lift and theta can be tiny negatives)."""
     from .curation import hash_unit
 
-    cut = F.lit(split_ts).cast("timestamp_ntz")
+    cut = F.lit("2024-01-16 00:00:00").cast("timestamp_ntz")
     per_user = (
         events.groupBy("user_id")
         .agg(
@@ -1492,7 +1422,7 @@ def cuped_adjusted_lift(
         )
         .withColumn(
             "arm",
-            F.when(hash_unit(F.col("user_id"), assign_salt) < 0.5, "A").otherwise(
+            F.when(hash_unit(F.col("user_id"), "cuped") < 0.5, "A").otherwise(
                 "B"
             ),
         )
@@ -1579,11 +1509,7 @@ def cuped_adjusted_lift(
     )
 
 
-def theilsen_trend(
-    events: DataFrame,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def theilsen_trend(events: DataFrame) -> DataFrame:
     """Theil–Sen trend estimate per group over the hourly event-count
     series: the MEDIAN of all pairwise slopes (c_j - c_i)/(h_j - h_i) —
     the robust trend line (up to ~29% outlier contamination) that OLS
@@ -1601,11 +1527,11 @@ def theilsen_trend(
     doubles in any engine."""
     hours = (
         events.groupBy(
-            F.col(group_col).alias("g"),
+            F.col("event_type").alias("g"),
             # integer hour index: slopes become int-diff / int-diff — one
             # double division, bit-identical in any engine
             F.floor(
-                F.unix_timestamp(F.date_trunc("hour", F.col(ts_col))) / 3600
+                F.unix_timestamp(F.date_trunc("hour", F.col("ts"))) / 3600
             ).cast("long").alias("h"),
         )
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1641,21 +1567,16 @@ def theilsen_trend(
     )
     return (
         med.select(
-            F.col("g").alias(group_col),
+            F.col("g").alias("event_type"),
             "n_hours",
             "n_pairs",
             (F.round(F.col("s"), 6) + F.lit(0.0)).alias("theilsen_slope"),
         )
-        .orderBy(group_col)
+        .orderBy("event_type")
     )
 
 
-def seasonal_residual_outliers(
-    events: DataFrame,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    z_threshold: float = 3.0,
-) -> DataFrame:
+def seasonal_residual_outliers(events: DataFrame) -> DataFrame:
     """Seasonality-adjusted anomaly counts: hourly counts minus the
     (group, weekday, hour-of-day) seasonal mean, studentized by the
     per-group residual standard deviation — the detector that does NOT
@@ -1671,8 +1592,8 @@ def seasonal_residual_outliers(
     time-bounded; the cell frame is 7x24-bounded per group."""
     hours = (
         events.groupBy(
-            F.col(group_col).alias("g"),
-            F.date_trunc("hour", F.col(ts_col)).alias("h"),
+            F.col("event_type").alias("g"),
+            F.date_trunc("hour", F.col("ts")).alias("h"),
         )
         .agg(F.count(F.lit(1)).alias("c"))
         .select(
@@ -1729,30 +1650,28 @@ def seasonal_residual_outliers(
         )
     )
     return (
-        resid.groupBy(F.col("g").alias(group_col))
+        resid.groupBy(F.col("g").alias("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_hours"),
-            F.sum((F.col("absz") > F.lit(z_threshold)).cast("long")).alias(
+            F.sum((F.col("absz") > F.lit(3.0)).cast("long")).alias(
                 "n_outlier_hours"
             ),
             (F.round(F.max("absz"), 6) + F.lit(0.0)).alias("max_abs_z"),
         )
         .join(
             gstats.select(
-                F.col("g").alias(group_col),
+                F.col("g").alias("event_type"),
                 (F.round(F.col("sd"), 6) + F.lit(0.0)).alias("residual_sd"),
             ),
-            group_col,
+            "event_type",
         )
-        .select(group_col, "n_hours", "residual_sd", "n_outlier_hours", "max_abs_z")
-        .orderBy(group_col)
+        .select("event_type", "n_hours", "residual_sd", "n_outlier_hours", "max_abs_z")
+        .orderBy("event_type")
     )
 
 
 def markov_next_event_backtest(
-    events: DataFrame,
-    cut_ts: str = "2024-01-24 00:00:00",
-    group_col: str = "event_type",
+    events: DataFrame, cut_ts: str = "2024-01-24 00:00:00"
 ) -> DataFrame:
     """Backtest of the first-order Markov next-event predictor: train
     the argmax-next-given-previous table on transitions whose TARGET
@@ -1768,7 +1687,7 @@ def markov_next_event_backtest(
     prediction table. Accuracies are exact-integer ratios."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     trans = (
-        events.select("user_id", "ts", "event_id", F.col(group_col).alias("prev"))
+        events.select("user_id", "ts", "event_id", F.col("event_type").alias("prev"))
         .withColumn("nxt", F.lead("prev").over(w))
         .withColumn("nxt_ts", F.lead("ts").over(w))
         .filter(F.col("nxt").isNotNull())
@@ -1824,18 +1743,11 @@ def markov_next_event_backtest(
     )
 
 
-def conformal_interval_report(
-    events: DataFrame,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    period_hours: int = 24,
-    cut_ts: str = "2024-01-24 00:00:00",
-    alpha: float = 0.9,
-) -> DataFrame:
+def conformal_interval_report(events: DataFrame) -> DataFrame:
     """Split-conformal prediction interval for the seasonal-naive
     forecaster (distribution-free finite-sample coverage — Vovk et al.;
     Lei et al. 2018): calibrate |count - count_{h-period}| on hours
-    before ``cut_ts``, take the ceil((n_cal+1)·alpha)-th smallest
+    before 2024-01-24, take the ceil((n_cal+1)·0.9)-th smallest
     absolute residual as the interval half-width q_hat, and report the
     EMPIRICAL coverage of pred ± q_hat on the held-out hours — the
     honest "are my alert bands actually 90%?" check, with a
@@ -1847,22 +1759,22 @@ def conformal_interval_report(
     window partitioned per group — never global); coverage is an
     integer ratio. Residuals are integer counts, so everything
     replays exactly."""
-    h = F.date_trunc("hour", F.col(ts_col)).alias("h")
+    h = F.date_trunc("hour", F.col("ts")).alias("h")
     counts = (
-        events.groupBy(F.col(group_col).alias("g"), h)
+        events.groupBy(F.col("event_type").alias("g"), h)
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint(eager=True)  # bounded series; both join sides
     )
     base = counts.select(
         "g",
-        (F.col("h") + F.expr(f"INTERVAL {period_hours} HOURS")).alias("h"),
+        (F.col("h") + F.expr("INTERVAL 24 HOURS")).alias("h"),
         F.col("c").alias("pred"),
     )
     joined = counts.join(base, ["g", "h"]).select(
         "g", "h", F.abs(F.col("c") - F.col("pred")).alias("ar"),
         (F.col("c") - F.col("pred")).alias("r"),
     )
-    cut = F.lit(cut_ts).cast("timestamp_ntz")
+    cut = F.lit("2024-01-24 00:00:00").cast("timestamp_ntz")
     cal = joined.filter(F.col("h") < cut)
     test = joined.filter(F.col("h") >= cut)
     w = Window.partitionBy("g").orderBy("ar", "h")
@@ -1873,7 +1785,7 @@ def conformal_interval_report(
         .filter(
             F.col("rk")
             == F.least(
-                F.ceil((F.col("n_cal") + 1) * F.lit(alpha)).cast("long"),
+                F.ceil((F.col("n_cal") + 1) * F.lit(0.9)).cast("long"),
                 F.col("n_cal").cast("long"),
             )
         )
@@ -1881,7 +1793,7 @@ def conformal_interval_report(
     )
     return (
         test.join(F.broadcast(qhat), "g")
-        .groupBy(F.col("g").alias(group_col))
+        .groupBy(F.col("g").alias("event_type"))
         .agg(
             F.min("n_cal").alias("n_cal"),
             F.count(F.lit(1)).alias("n_test"),
@@ -1892,20 +1804,17 @@ def conformal_interval_report(
                 6,
             ).alias("coverage"),
         )
-        .orderBy(group_col)
+        .orderBy("event_type")
     )
 
 
-def source_ks_matrix(
-    docs: DataFrame,
-    source_col: str = "source",
-    value_expr: Column | None = None,
-) -> DataFrame:
+def source_ks_matrix(docs: DataFrame) -> DataFrame:
     """Pairwise exact Kolmogorov–Smirnov drift matrix across ALL
     sources (the all-pairs generalization of :func:`ks_drift`): one row
     per unordered source pair with the exact two-sample D over the
-    document-length distribution — the triage table that says which
-    crawls actually came from the same distribution before mixing.
+    document-length (``length(text)``) distribution of each ``source``
+    — the triage table that says which crawls actually came from the
+    same distribution before mixing.
 
     Shape: lengths aggregate to their DISTINCT domain per source, each
     source's step-CDF evaluates once on the GLOBAL value domain
@@ -1914,12 +1823,7 @@ def source_ks_matrix(
     domain value. D stays in INTEGER cross-multiplied arithmetic
     (|cum_a·n_b − cum_b·n_a| / (n_a·n_b)) — no float discipline needed
     until the final division."""
-    v = (
-        value_expr
-        if value_expr is not None
-        else F.length(F.col("text"))
-    )
-    lens = docs.select(F.col(source_col).alias("s"), v.alias("v"))
+    lens = docs.select(F.col("source").alias("s"), F.length(F.col("text")).alias("v"))
     counts = lens.groupBy("s", "v").agg(F.count(F.lit(1)).alias("c"))
     grid = (
         counts.select("v").distinct()
@@ -1970,11 +1874,7 @@ def source_ks_matrix(
     )
 
 
-def decayed_user_value(
-    events: DataFrame,
-    half_life_lambda: float = 0.05,
-    top_k: int = 20,
-) -> DataFrame:
+def decayed_user_value(events: DataFrame, half_life_lambda: float = 0.05) -> DataFrame:
     """Recency-weighted user value (exponential time-decay LTV): each
     purchase contributes value·e^(−λ·age_days) anchored at the
     dataset's max timestamp — the ranking every retention/engagement
@@ -2022,7 +1922,7 @@ def decayed_user_value(
             F.round(F.col("dec").cast("double"), 6).alias("decayed_value"),
         )
         .orderBy(F.desc("decayed_value"), F.asc("user_id"))
-        .limit(top_k)
+        .limit(20)
     )
 
 
@@ -2202,11 +2102,7 @@ def selectivity_estimate_audit(
     )
 
 
-def retention_decay_fit(
-    events: DataFrame,
-    weeks: int = 4,
-    event_type: str | None = "purchase",
-) -> DataFrame:
+def retention_decay_fit(events: DataFrame) -> DataFrame:
     """Exponential retention-decay fit per signup cohort: weekly
     retention fractions (exact active-user counts over the cohort
     size), then the log-linear fit ln(retention) ~ week via regr_slope
@@ -2214,16 +2110,15 @@ def retention_decay_fit(
     plain retention table hides. Cohort = first-event week.
 
     Shape: first-event assignment is one groupBy-min; the cohort x week
-    activity matrix is a distinct count on a bounded (cohorts x weeks)
-    frame; the regression is a mergeable moment aggregate over <= weeks
+    activity matrix is a distinct count on a bounded (cohorts x 4 weeks)
+    frame; the regression is a mergeable moment aggregate over <= 4
     points per cohort (regr_slope — the zipf_fit-proven cross-engine
     pair). ln() only sees fractions > 0 (both engines filter
-    identically). ``event_type`` scopes both the cohort anchor and the
-    activity signal (default: repeat-PURCHASE retention — on this
+    identically). ``purchase`` events scope both the cohort anchor and the
+    activity signal (repeat-PURCHASE retention — on this
     corpus every user is active every week, so all-event retention is
     a flat 1.0)."""
-    if event_type is not None:
-        events = events.filter(F.col("event_type") == event_type)
+    events = events.filter(F.col("event_type") == "purchase")
     first = events.groupBy("user_id").agg(F.min("ts").alias("f0"))
     cohorted = (
         events.join(first, "user_id")
@@ -2235,7 +2130,7 @@ def retention_decay_fit(
                 / (7 * 86400)
             ).cast("int").alias("wk"),
         )
-        .filter(F.col("wk") < weeks)
+        .filter(F.col("wk") < 4)
     )
     sizes = cohorted.filter(F.col("wk") == 0).groupBy("cohort").agg(
         F.countDistinct("user_id").alias("n_users")
@@ -2275,13 +2170,7 @@ def retention_decay_fit(
     )
 
 
-def roc_auc_by_source(
-    docs: DataFrame,
-    source_col: str = "source",
-    score_col: str = "n_chars",
-    lang_col: str = "lang",
-    pos_lang: str = "en",
-) -> DataFrame:
+def roc_auc_by_source(docs: DataFrame) -> DataFrame:
     """Per-source ROC AUC of a score column separating a binary label
     (here: does document length discriminate English from everything
     else?) — the standard health check before trusting any quality
@@ -2300,9 +2189,9 @@ def roc_auc_by_source(
     single division, identical in any IEEE engine.
     """
     base = docs.select(
-        F.col(source_col).alias("s"),
-        F.col(score_col).cast("long").alias("v"),
-        (F.col(lang_col) == pos_lang).cast("long").alias("p"),
+        F.col("source").alias("s"),
+        F.col("n_chars").cast("long").alias("v"),
+        (F.col("lang") == "en").cast("long").alias("p"),
     )
     c = base.groupBy("s", "v").agg(
         F.sum("p").alias("np"),
@@ -2341,11 +2230,7 @@ def roc_auc_by_source(
     ).orderBy("source")
 
 
-def acf_hourly(
-    events: DataFrame,
-    max_lag: int = 24,
-    ts_col: str = "ts",
-) -> DataFrame:
+def acf_hourly(events: DataFrame, max_lag: int = 24) -> DataFrame:
     """Autocorrelation function of the hourly event-count series at
     lags 1..max_lag — the seasonality detector behind every
     capacity-planning and anomaly model (a spike at lag 24 says the
@@ -2369,7 +2254,7 @@ def acf_hourly(
     # diverges from the oracle's floor division for pre-1970 epochs
     # (the repo's FLOOR-both-sides rule).
     hrs = events.select(
-        F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(3600))
+        F.floor(F.unix_timestamp(F.col("ts")) / F.lit(3600))
         .cast("long")
         .alias("hi")
     )
@@ -2528,12 +2413,7 @@ def spearman_user_corr(events: DataFrame) -> DataFrame:
     )
 
 
-def srm_audit(
-    events: DataFrame,
-    id_col: str = "user_id",
-    salt: str = "srm",
-    z: float = 1.959963985,
-) -> DataFrame:
+def srm_audit(events: DataFrame) -> DataFrame:
     """Sample-ratio-mismatch audit for a 50/50 experiment assignment —
     the first thing to check before reading ANY experiment result: if
     the arms' user counts fail a chi-square against the intended 50/50
@@ -2554,14 +2434,14 @@ def srm_audit(
     from .curation import hash_unit
 
     per_user = (
-        events.groupBy(F.col(id_col).alias("uid"))
+        events.groupBy(F.col("user_id").alias("uid"))
         .agg(
             F.max(
                 (F.col("event_type") == "purchase").cast("long")
             ).alias("conv")
         )
         .select(
-            F.when(hash_unit(F.col("uid"), salt) < 0.5, F.lit("A"))
+            F.when(hash_unit(F.col("uid"), "srm") < 0.5, F.lit("A"))
             .otherwise(F.lit("B"))
             .alias("arm"),
             "conv",
@@ -2576,7 +2456,7 @@ def srm_audit(
         F.max(F.when(F.col("arm") == "B", F.col("n_users"))).alias("nb"),
     )
     p = F.col("conversions").cast("double") / F.col("n_users").cast("double")
-    zc = F.lit(z)
+    zc = F.lit(1.959963985)
     nn = F.col("n_users").cast("double")
     center = p + zc * zc / (F.lit(2.0) * nn)
     margin = zc * F.sqrt(
@@ -2604,16 +2484,13 @@ def srm_audit(
     )
 
 
-def mann_whitney_matrix(
-    docs: DataFrame,
-    source_col: str = "source",
-    value_expr: Column | None = None,
-) -> DataFrame:
-    """Pairwise Mann-Whitney U test across all sources over the
-    document-length distribution — the nonparametric companion to
-    :func:`source_ks_matrix`: KS asks "same distribution?", U asks the
-    directional question "does one source systematically produce longer
-    documents?", with a tie-corrected normal z for the verdict.
+def mann_whitney_matrix(docs: DataFrame) -> DataFrame:
+    """Pairwise Mann-Whitney U test across all ``source`` values over
+    the document-length (``length(text)``) distribution — the
+    nonparametric companion to :func:`source_ks_matrix`: KS asks "same
+    distribution?", U asks the directional question "does one source
+    systematically produce longer documents?", with a tie-corrected
+    normal z for the verdict.
 
     Shape (identical to the KS matrix): per-source counts aggregate to
     the GLOBAL length domain (sources × |domain| grid — bounded by the
@@ -2624,12 +2501,7 @@ def mann_whitney_matrix(
     z = (2U − n_a·n_b) / (2·sqrt(var)) with the tie-corrected
     var = n_a·n_b·((n+1) − T/(n(n−1)))/12 is a fixed tree of single
     IEEE ops, written identically in the oracle."""
-    v = (
-        value_expr
-        if value_expr is not None
-        else F.length(F.col("text"))
-    )
-    lens = docs.select(F.col(source_col).alias("s"), v.alias("v"))
+    lens = docs.select(F.col("source").alias("s"), F.length(F.col("text")).alias("v"))
     counts = lens.groupBy("s", "v").agg(F.count(F.lit(1)).alias("c"))
     grid = (
         counts.select("v").distinct()
@@ -2699,11 +2571,7 @@ def mann_whitney_matrix(
     ).orderBy("source_a", "source_b")
 
 
-def cramers_v_report(
-    docs: DataFrame,
-    x_col: str = "source",
-    y_col: str = "lang",
-) -> DataFrame:
+def cramers_v_report(docs: DataFrame) -> DataFrame:
     """Chi-square independence test + Cramér's V between two
     categorical columns — the association strength behind every
     "is language confounded with source?" mixing question (V near 0:
@@ -2717,7 +2585,7 @@ def cramers_v_report(
     contingency aggregate (bounded levels × levels grid), two marginal
     reductions joined back by level, one scalar row out."""
     o = (
-        docs.select(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
+        docs.select(F.col("source").alias("x"), F.col("lang").alias("y"))
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).alias("o"))
     )
@@ -2812,17 +2680,13 @@ def simpson_event_diversity(events: DataFrame) -> DataFrame:
     )
 
 
-def eb_shrunk_rates(
-    docs: DataFrame,
-    group_col: str = "source",
-    hit_expr: Column | None = None,
-) -> DataFrame:
-    """Empirical-Bayes (beta-binomial) shrunk per-group rates — the
-    smoothed-CTR device every ranking pipeline uses instead of raw
-    fractions: a group with 2/2 hits must NOT outrank one with
-    180/200, so each raw rate shrinks toward the cross-group mean
-    with strength learned from the method-of-moments beta fit
-    (α+β ≈ m(1−m)/var − 1).
+def eb_shrunk_rates(docs: DataFrame) -> DataFrame:
+    """Empirical-Bayes (beta-binomial) shrunk per-``source`` rates of
+    ``lang = 'en'`` hits — the smoothed-CTR device every ranking
+    pipeline uses instead of raw fractions: a group with 2/2 hits must
+    NOT outrank one with 180/200, so each raw rate shrinks toward the
+    cross-group mean with strength learned from the method-of-moments
+    beta fit (α+β ≈ m(1−m)/var − 1).
 
     Exactness: per-group (hits, n) are integers; each raw rate and
     each squared deviation rounds at 9dp into DECIMAL(38,9) before the
@@ -2832,12 +2696,9 @@ def eb_shrunk_rates(
     groups-sized moment reduction, broadcast back. Degenerate guard:
     var = 0 (all groups equal) keeps the raw rate (strength NULL →
     coalesce)."""
-    h = (
-        hit_expr
-        if hit_expr is not None
-        else (F.col("lang") == "en").cast("long")
+    g = docs.select(
+        F.col("source").alias("g"), (F.col("lang") == "en").cast("long").alias("hit")
     )
-    g = docs.select(F.col(group_col).alias("g"), h.alias("hit"))
     per = g.groupBy("g").agg(
         F.count(F.lit(1)).alias("n"), F.sum("hit").alias("c")
     )
@@ -2902,11 +2763,7 @@ def eb_shrunk_rates(
     )
 
 
-def did_lift(
-    events: DataFrame,
-    id_col: str = "user_id",
-    salt: str = "did",
-) -> DataFrame:
+def did_lift(events: DataFrame) -> DataFrame:
     """Difference-in-differences readout for a 50/50 experiment: split
     the data span at its midpoint into pre/post periods, and report
     per-(arm, period) purchase rates plus the DiD estimate
@@ -2929,7 +2786,7 @@ def did_lift(
     cells = (
         events.crossJoin(F.broadcast(bounds))
         .select(
-            F.when(hash_unit(F.col(id_col), salt) < 0.5, F.lit("A"))
+            F.when(hash_unit(F.col("user_id"), "did") < 0.5, F.lit("A"))
             .otherwise(F.lit("B"))
             .alias("arm"),
             F.when(
@@ -2937,7 +2794,7 @@ def did_lift(
             )
             .otherwise(F.lit("post"))
             .alias("period"),
-            F.col(id_col).alias("uid"),
+            F.col("user_id").alias("uid"),
             (F.col("event_type") == "purchase").cast("long").alias("pur"),
         )
         .groupBy("arm", "period")
@@ -2977,11 +2834,8 @@ def did_lift(
     )
 
 
-def lorenz_curve_points(
-    events: DataFrame,
-    deciles: int = 10,
-) -> DataFrame:
-    """Lorenz curve of user value concentration in ``deciles`` points —
+def lorenz_curve_points(events: DataFrame) -> DataFrame:
+    """Lorenz curve of user value concentration in 10 points —
     the picture behind the Gini number (gini_value_concentration):
     users sort ascending by lifetime value, and each decile row reports
     its share of total value plus the cumulative share. A straight
@@ -3005,7 +2859,7 @@ def lorenz_curve_points(
             ).alias("v")
         )
     )
-    tiled = exact_ntile(pu, [F.col("v"), F.col("user_id")], deciles,
+    tiled = exact_ntile(pu, [F.col("v"), F.col("user_id")], 10,
                         out_col="decile")
     per = tiled.groupBy("decile").agg(
         F.count(F.lit(1)).alias("n_users"), F.sum("v").alias("sv")
@@ -3401,7 +3255,7 @@ def join_order_cost_audit(
     )
 
 
-def mad_outlier_days(events: DataFrame, z_cut: float = 3.5) -> DataFrame:
+def mad_outlier_days(events: DataFrame) -> DataFrame:
     """Robust daily-volume anomaly summary via median absolute
     deviation: the modified z-score 0.6745·(c − median)/MAD flags
     outlier days without the masking problem mean/std anomaly
@@ -3450,7 +3304,7 @@ def mad_outlier_days(events: DataFrame, z_cut: float = 3.5) -> DataFrame:
         # when/otherwise (not a bare cast): a NULL z (mad = 0) must
         # count as 0, matching the oracle's CASE, not poison the sum
         F.sum(
-            F.when(F.abs(F.col("z")) > F.lit(z_cut), F.lit(1)).otherwise(
+            F.when(F.abs(F.col("z")) > F.lit(3.5), F.lit(1)).otherwise(
                 F.lit(0)
             )
         )
@@ -3466,11 +3320,7 @@ def mad_outlier_days(events: DataFrame, z_cut: float = 3.5) -> DataFrame:
     )
 
 
-def markov_removal_attribution(
-    events: DataFrame,
-    conv_type: str = "purchase",
-    rounds: int = 8,
-) -> DataFrame:
+def markov_removal_attribution(events: DataFrame, rounds: int = 8) -> DataFrame:
     """Markov removal-effect multi-touch attribution (Anderl et al.
     2016) — the data-driven alternative to position rules: build the
     START → channel → … → CONV/NULL journey chain from every user's
@@ -3501,14 +3351,14 @@ def markov_removal_attribution(
         "event_type",
         "i",
         F.min(
-            F.when(F.col("event_type") == conv_type, F.col("i"))
+            F.when(F.col("event_type") == "purchase", F.col("i"))
         ).over(Window.partitionBy("user_id")).alias("conv_i"),
     ).filter(F.col("conv_i").isNull() | (F.col("i") <= F.col("conv_i")))
     wj = Window.partitionBy("user_id").orderBy("i")
     steps = seq.select(
         "user_id",
         F.coalesce(F.lag("event_type").over(wj), F.lit("START")).alias("s"),
-        F.when(F.col("event_type") == conv_type, F.lit("CONV"))
+        F.when(F.col("event_type") == "purchase", F.lit("CONV"))
         .otherwise(F.col("event_type"))
         .alias("d"),
         "i",
@@ -3795,11 +3645,7 @@ def referential_coverage_report(
     return out.orderBy("relationship")
 
 
-def power_analysis_report(
-    events: DataFrame,
-    alpha_z: float = 1.959963985,
-    beta_z: float = 0.841621234,
-) -> DataFrame:
+def power_analysis_report(events: DataFrame) -> DataFrame:
     """Experiment sample-size planner anchored on the MEASURED baseline:
     from the data's purchase conversion rate, the required users per
     arm to detect each of a grid of relative lifts at α = 5% (two-
@@ -3837,8 +3683,8 @@ def power_analysis_report(
     p2 = F.col("p1") * (F.lit(1.0) + F.col("rel_lift"))
     pbar = (F.col("p1") + p2) / F.lit(2.0)
     num = (
-        F.lit(alpha_z) * F.sqrt(F.lit(2.0) * pbar * (F.lit(1.0) - pbar))
-        + F.lit(beta_z)
+        F.lit(1.959963985) * F.sqrt(F.lit(2.0) * pbar * (F.lit(1.0) - pbar))
+        + F.lit(0.841621234)
         * F.sqrt(
             F.col("p1") * (F.lit(1.0) - F.col("p1"))
             + p2 * (F.lit(1.0) - p2)
@@ -3857,10 +3703,7 @@ def power_analysis_report(
     ).orderBy("rel_lift")
 
 
-def dim_broadcast_audit(
-    tables: "dict[str, DataFrame]",
-    threshold_bytes: int = 10 * 1024 * 1024,
-) -> DataFrame:
+def dim_broadcast_audit(tables: "dict[str, DataFrame]") -> DataFrame:
     """Broadcast-feasibility audit for the dimension tables: estimated
     in-memory size (fixed 8 bytes per numeric/temporal column, exact
     summed byte-lengths for strings, 16 bytes row overhead) against
@@ -3898,7 +3741,7 @@ def dim_broadcast_audit(
                 F.lit(name).alias("table_name"),
                 F.col("n_rows").cast("long").alias("n_rows"),
                 F.col("est_bytes").cast("long").alias("est_bytes"),
-                (F.col("est_bytes") <= F.lit(threshold_bytes)).alias(
+                (F.col("est_bytes") <= F.lit(10 * 1024 * 1024)).alias(
                     "auto_broadcastable"
                 ),
             )
@@ -3909,12 +3752,9 @@ def dim_broadcast_audit(
     return out.orderBy("table_name")
 
 
-def session_bounce_report(
-    events: DataFrame,
-    gap_minutes: int = 30,
-) -> DataFrame:
+def session_bounce_report(events: DataFrame) -> DataFrame:
     """Per-entry-type session bounce rates: sessionize each user's
-    stream at ``gap_minutes`` gaps, key every session by its FIRST
+    stream at 30-minute gaps, key every session by its FIRST
     event type, and report how many sessions of each entry type end
     after that single event — the landing-quality table (a high-bounce
     entry type is where engagement dies).
@@ -3923,7 +3763,7 @@ def session_bounce_report(
     (the standard shape), session aggregates are one groupBy, all
     counts exact integers."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.lit(gap_minutes * 60)
+    gap = F.lit(30 * 60)
     sess = events.select(
         "user_id",
         "ts",
@@ -3982,12 +3822,7 @@ def session_bounce_report(
     )
 
 
-def neyman_allocation(
-    docs: DataFrame,
-    budget: int = 1000,
-    group_col: str = "source",
-    value_col: str = "n_chars",
-) -> DataFrame:
+def neyman_allocation(docs: DataFrame, budget: int = 1000) -> DataFrame:
     """Neyman-optimal stratified sampling design for estimating the
     corpus mean of a value column: each stratum's share of the sample
     budget is proportional to N_h·S_h (size × within-stratum std) —
@@ -3999,10 +3834,10 @@ def neyman_allocation(
     term N_h·S_h quantizes at 6dp into DECIMAL(38,6) so the
     normalizing sum is order-free; allocations are ceil(budget·w)."""
     dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731
-    per = docs.groupBy(F.col(group_col).alias("g")).agg(
+    per = docs.groupBy(F.col("source").alias("g")).agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(dec(F.col(value_col))).alias("sx"),
-        F.sum(dec(F.col(value_col)) * dec(F.col(value_col))).alias("sq"),
+        F.sum(dec(F.col("n_chars"))).alias("sx"),
+        F.sum(dec(F.col("n_chars")) * dec(F.col("n_chars"))).alias("sq"),
     )
     n = F.col("n").cast("double")
     var = (
@@ -4098,15 +3933,9 @@ def tail_index_user_value(
     )
 
 
-def lm_interpolation_weights(
-    docs: DataFrame,
-    rounds: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    salt: str = "lmmix",
-) -> DataFrame:
+def lm_interpolation_weights(docs: DataFrame) -> DataFrame:
     """Jelinek-Mercer interpolation weight λ for
-    P(w|v) = λ·P_bigram(w|v) + (1−λ)·P_unigram(w), fit by ``rounds``
+    P(w|v) = λ·P_bigram(w|v) + (1−λ)·P_unigram(w), fit by 3
     EM steps on a held-out md5 split — the classic LM smoothing
     calibration (Jelinek & Mercer 1980): high λ says bigram context
     generalizes to held-out text; low λ says the bigram table is
@@ -4123,9 +3952,9 @@ def lm_interpolation_weights(
     from .curation import hash_unit
 
     base = docs.select(
-        F.col(id_col).alias("d"),
-        word_tokens(F.col(text_col)).alias("tk"),
-        (hash_unit(F.col(id_col), salt) < 0.8).alias("is_train"),
+        F.col("doc_id").alias("d"),
+        word_tokens(F.col("text")).alias("tk"),
+        (hash_unit(F.col("doc_id"), "lmmix") < 0.8).alias("is_train"),
     ).filter(F.size("tk") >= 2)
     pairs = base.select(
         "is_train",
@@ -4176,7 +4005,7 @@ def lm_interpolation_weights(
     n_held = scored.count()
     lam = 0.5
     lams = []
-    for _ in range(rounds):
+    for _ in range(3):
         lam_col = F.lit(lam)
         resp = F.round(
             (lam_col * F.col("pb"))
@@ -4258,12 +4087,7 @@ def attribution_window_sensitivity(events: DataFrame) -> DataFrame:
     )
 
 
-def quantile_treatment_effect(
-    events: DataFrame,
-    id_col: str = "user_id",
-    salt: str = "qte",
-    deciles: int = 10,
-) -> DataFrame:
+def quantile_treatment_effect(events: DataFrame) -> DataFrame:
     """Quantile treatment effect: per-arm deciles of user lifetime
     value and their differences — the distributional readout an
     average lift hides (a treatment can leave the mean flat while
@@ -4279,14 +4103,14 @@ def quantile_treatment_effect(
 
     pu = (
         events.filter(F.col("value").isNotNull())
-        .groupBy(F.col(id_col).alias("uid"))
+        .groupBy(F.col("user_id").alias("uid"))
         .agg(
             F.sum(
                 F.round(F.col("value"), 6).cast("decimal(38,6)")
             ).alias("v")
         )
         .select(
-            F.when(hash_unit(F.col("uid"), salt) < 0.5, F.lit("A"))
+            F.when(hash_unit(F.col("uid"), "qte") < 0.5, F.lit("A"))
             .otherwise(F.lit("B"))
             .alias("arm"),
             "uid",
@@ -4298,7 +4122,7 @@ def quantile_treatment_effect(
     def arm_deciles(arm: str) -> DataFrame:
         part = pu.filter(F.col("arm") == arm)
         tiled = exact_ntile(
-            part, [F.col("v"), F.col("uid")], deciles, out_col="decile"
+            part, [F.col("v"), F.col("uid")], 10, out_col="decile"
         )
         return tiled.groupBy("decile").agg(
             F.max("v").alias(f"v_{arm.lower()}"),
@@ -4327,12 +4151,7 @@ def quantile_treatment_effect(
     )
 
 
-def poisson_bootstrap_ci(
-    events: DataFrame,
-    group_col: str = "event_type",
-    n_replicates: int = 32,
-    salt: str = "boot",
-) -> DataFrame:
+def poisson_bootstrap_ci(events: DataFrame) -> DataFrame:
     """Poisson-bootstrap confidence interval for the per-group mean
     value (Chamandy et al. 2012, "Estimating Uncertainty for Massive
     Data Streams" — the Google large-scale bootstrap): instead of
@@ -4340,7 +4159,7 @@ def poisson_bootstrap_ci(
     replicate), each row independently draws a Poisson(1) multiplicity
     per replicate, which converges to the multinomial bootstrap at
     large n and makes every replicate a ROW-LOCAL weight. All
-    ``n_replicates`` replicate sums accumulate in ONE aggregation
+    32 replicate sums accumulate in ONE aggregation
     (map-side combined — the explode inflates rows only inside the
     scan stage; the shuffle carries groups x replicates partials).
 
@@ -4355,7 +4174,7 @@ def poisson_bootstrap_ci(
     DECIMAL(38,0)-weight x DECIMAL(38,6)-value products (order-free);
     the mean division is the only float op per replicate."""
     ev = events.filter(F.col("value").isNotNull()).select(
-        F.col(group_col).alias("g"),
+        F.col("event_type").alias("g"),
         "event_id",
         F.round(F.col("value"), 6).cast("decimal(38,6)").alias("qv"),
     )
@@ -4366,16 +4185,16 @@ def poisson_bootstrap_ci(
     from ._scan import spread_scan
 
     # compacted-input guard (guide §2.5): the replicate explode, the
-    # n_replicates md5 draws per row, and the (g, b) partial aggregate
+    # 32 md5 draws per row, and the (g, b) partial aggregate
     # all live in the scan stage — single-core on a one-row-group file;
     # the spread carries the 3 projected columns once and is a no-op on
     # splittable input. Row placement cannot change the result: the
     # draws are keyed on (event_id, b) and the replicate sums are
     # order-free decimal accumulations.
     reps = spread_scan(ev).withColumn(
-        "b", F.explode(F.sequence(F.lit(0), F.lit(n_replicates - 1)))
+        "b", F.explode(F.sequence(F.lit(0), F.lit(31)))
     )
-    u = hash_unit(F.concat_ws(":", F.col("event_id"), F.col("b")), salt)
+    u = hash_unit(F.concat_ws(":", F.col("event_id"), F.col("b")), "boot")
     # exact Poisson(1) CDF ladder: P(X<=k) = e^-1 * sum 1/j!
     w = (
         F.when(u < F.lit(0.36787944117144233), F.lit(0))
@@ -4421,7 +4240,7 @@ def poisson_bootstrap_ci(
     )
     ci = ranked.groupBy("g").agg(
         F.max(F.when(F.col("r") == 2, F.col("m"))).alias("lo"),
-        F.max(F.when(F.col("r") == n_replicates - 1, F.col("m"))).alias(
+        F.max(F.when(F.col("r") == 31, F.col("m"))).alias(
             "hi"
         ),
     )
@@ -4445,18 +4264,13 @@ def poisson_bootstrap_ci(
     )
 
 
-def bh_fdr_report(
-    events: DataFrame,
-    id_col: str = "user_id",
-    q: float = 0.10,
-    salt: str = "bh",
-) -> DataFrame:
+def bh_fdr_report(events: DataFrame) -> DataFrame:
     """Benjamini-Hochberg FDR correction across the per-event-type A/B
     mean-value comparisons (Benjamini & Hochberg 1995) — the guard a
     metrics platform applies when ONE experiment readout fans out into
     many simultaneous tests: raw p < 0.05 on 20 metrics yields ~1 false
     positive by construction; BH bounds the expected false-discovery
-    rate at ``q`` by the step-up rule (reject the k smallest p-values
+    rate at q = 0.10 by the step-up rule (reject the k smallest p-values
     where p_(k) <= k*q/m).
 
     Per type: Welch z on per-event values between md5-assigned arms,
@@ -4476,7 +4290,7 @@ def bh_fdr_report(
     dec6 = lambda col: col.cast("decimal(38,6)")  # noqa: E731
     ev = events.filter(F.col("value").isNotNull()).select(
         F.col("event_type").alias("g"),
-        F.when(hash_unit(F.col(id_col), salt) < 0.5, F.lit("A"))
+        F.when(hash_unit(F.col("user_id"), "bh") < 0.5, F.lit("A"))
         .otherwise(F.lit("B"))
         .alias("arm"),
         F.round(F.col("value"), 6).cast("decimal(38,6)").alias("qv"),
@@ -4555,7 +4369,7 @@ def bh_fdr_report(
     k = F.max(
         F.when(
             F.col("p")
-            <= F.col("r").cast("double") * F.lit(q) / F.col("m").cast("double"),
+            <= F.col("r").cast("double") * F.lit(0.10) / F.col("m").cast("double"),
             F.col("r"),
         ).otherwise(F.lit(0))
     ).over(wall)
@@ -4570,10 +4384,7 @@ def bh_fdr_report(
     ).orderBy("p_rank")
 
 
-def psi_drift_report(
-    events: DataFrame,
-    n_buckets: int = 10,
-) -> DataFrame:
+def psi_drift_report(events: DataFrame) -> DataFrame:
     """Population-stability-index drift report for the event value
     distribution between the first and second half of the data span —
     the standard model-monitoring drift metric (PSI < 0.1 stable,
@@ -4593,7 +4404,7 @@ def psi_drift_report(
     DECIMAL(38,9) so the 10-term total is order-free; buckets empty in
     either half contribute NULL (excluded from the sum — the
     standard epsilon-free convention, stated in the output). Scale
-    shape: two rank passes + one 2x``n_buckets`` aggregate; the
+    shape: two rank passes + one 2x10 aggregate; the
     decile frame is localCheckpoint-ed (it forks into per-bucket rows
     and the total)."""
     from .curation import exact_ntile
@@ -4616,7 +4427,7 @@ def psi_drift_report(
         )
     )
     tiled = exact_ntile(
-        ev, [F.asc("value"), F.asc("event_id")], n_buckets, out_col="decile"
+        ev, [F.asc("value"), F.asc("event_id")], 10, out_col="decile"
     )
     cells = (
         tiled.groupBy("decile")
@@ -4668,21 +4479,15 @@ def psi_drift_report(
     )
 
 
-def salt_plan_report(
-    df: DataFrame,
-    key_col: str = "user_id",
-    num_partitions: int = 32,
-    max_salt: int = 16,
-    top_k: int = 20,
-) -> DataFrame:
+def salt_plan_report(df: DataFrame) -> DataFrame:
     """Skew-salting planner: from the key histogram, recommend a
     per-key salt factor that splits each hot key into enough sub-keys
     that no single task holds more than one partition-target of rows —
     the audit a pipeline runs BEFORE a shuffle on a suspected-skewed
     key (the prescriptive counterpart of shuffle_skew_audit, which
     only diagnoses). salt_n = ceil(key_rows / target) capped at
-    ``max_salt``, target = ceil(total / num_partitions); the report
-    shows the ``top_k`` heaviest keys with their before/after
+    16, target = ceil(total / 32); the report
+    shows the 20 heaviest keys with their before/after
     max-task-rows so the win is visible next to the cost (salt_n-way
     duplicate of the build side in a salted join).
 
@@ -4690,12 +4495,12 @@ def salt_plan_report(
     exact_ntile device) — bit-identical in any engine. Scale shape:
     one map-side-combined count per key, one scalar total broadcast
     back, top-k via orderBy+limit (TakeOrdered, no global sort)."""
-    per = df.groupBy(F.col(key_col).alias("k")).agg(
+    per = df.groupBy(F.col("user_id").alias("k")).agg(
         F.count(F.lit(1)).alias("n")
     )
     tot = per.agg(F.sum("n").alias("total"), F.count(F.lit(1)).alias("nk"))
     j = per.crossJoin(F.broadcast(tot))
-    target = F.expr(f"(total + {num_partitions} - 1) div {num_partitions}")
+    target = F.expr("(total + 32 - 1) div 32")
     out = (
         j.select("k", "n", target.alias("t"))
         .select(
@@ -4705,7 +4510,7 @@ def salt_plan_report(
             F.greatest(
                 F.lit(1).cast("long"),
                 F.least(
-                    F.lit(max_salt).cast("long"),
+                    F.lit(16).cast("long"),
                     F.expr("(n + t - 1) div t"),
                 ),
             ).alias("salt_n"),
@@ -4720,16 +4525,12 @@ def salt_plan_report(
             ),
         )
         .orderBy(F.desc("n_rows"), F.asc("key"))
-        .limit(top_k)
+        .limit(20)
     )
     return out
 
 
-def jackknife_ratio_ci(
-    events: DataFrame,
-    conv_type: str = "purchase",
-    z: float = 1.959963985,
-) -> DataFrame:
+def jackknife_ratio_ci(events: DataFrame) -> DataFrame:
     """Delete-one-day jackknife confidence interval for the
     conversions-per-event ratio (Quenouille 1956 / Tukey 1958; the
     delete-a-GROUP variant Google's experiment platform applies to
@@ -4754,7 +4555,7 @@ def jackknife_ratio_ci(
         .agg(
             F.count(F.lit(1)).alias("e"),
             F.sum(
-                F.when(F.col("event_type") == conv_type, F.lit(1)).otherwise(
+                F.when(F.col("event_type") == "purchase", F.lit(1)).otherwise(
                     F.lit(0)
                 )
             ).alias("p"),
@@ -4802,16 +4603,12 @@ def jackknife_ratio_ci(
         F.col("tp").cast("long").alias("n_conversions"),
         (F.round(ratio, 6) + F.lit(0.0)).alias("ratio"),
         (F.round(se, 6) + F.lit(0.0)).alias("jk_se"),
-        (F.round(ratio - F.lit(z) * se, 6) + F.lit(0.0)).alias("ci_lo"),
-        (F.round(ratio + F.lit(z) * se, 6) + F.lit(0.0)).alias("ci_hi"),
+        (F.round(ratio - F.lit(1.959963985) * se, 6) + F.lit(0.0)).alias("ci_lo"),
+        (F.round(ratio + F.lit(1.959963985) * se, 6) + F.lit(0.0)).alias("ci_hi"),
     )
 
 
-def cochran_armitage_trend(
-    events: DataFrame,
-    conv_type: str = "purchase",
-    n_groups: int = 3,
-) -> DataFrame:
+def cochran_armitage_trend(events: DataFrame, n_groups: int = 3) -> DataFrame:
     """Cochran-Armitage trend test (Cochran 1954; Armitage 1955) for
     "does conversion propensity RISE with user value?" — the ordered
     alternative a plain chi-square cannot see: users are ranked into
@@ -4839,7 +4636,7 @@ def cochran_armitage_trend(
                 F.lit(0).cast("decimal(38,6)"),
             ).alias("v"),
             F.max(
-                F.when(F.col("event_type") == conv_type, F.lit(1)).otherwise(
+                F.when(F.col("event_type") == "purchase", F.lit(1)).otherwise(
                     F.lit(0)
                 )
             ).alias("conv"),
@@ -4903,10 +4700,7 @@ def cochran_armitage_trend(
     )
 
 
-def split_half_reliability(
-    events: DataFrame,
-    salt: str = "shr",
-) -> DataFrame:
+def split_half_reliability(events: DataFrame) -> DataFrame:
     """Split-half reliability of per-user event counts with the
     Spearman-Brown step-up (Spearman 1910; Brown 1910) — the metric-
     quality audit an experimentation platform runs before trusting a
@@ -4926,12 +4720,12 @@ def split_half_reliability(
     halves = events.groupBy("user_id").agg(
         F.sum(
             F.when(
-                hash_unit(F.col("event_id"), salt) < 0.5, F.lit(1)
+                hash_unit(F.col("event_id"), "shr") < 0.5, F.lit(1)
             ).otherwise(F.lit(0))
         ).alias("x"),
         F.sum(
             F.when(
-                hash_unit(F.col("event_id"), salt) < 0.5, F.lit(0)
+                hash_unit(F.col("event_id"), "shr") < 0.5, F.lit(0)
             ).otherwise(F.lit(1))
         ).alias("y"),
     )
@@ -5153,11 +4947,7 @@ def ljung_box_hourly(
     )
 
 
-def lift_curve_points(
-    docs: DataFrame,
-    target: Column | None = None,
-    n_buckets: int = 10,
-) -> DataFrame:
+def lift_curve_points(docs: DataFrame, target: Column | None = None) -> DataFrame:
     """Cumulative-gains / lift curve of the heuristic quality score
     against a target label (default: the src1* source family, the same
     in-domain definition dsir_importance steers toward) — the
@@ -5185,7 +4975,7 @@ def lift_curve_points(
         target.cast("int").alias("pos"),
     )
     tiled = exact_ntile(
-        scored, [F.desc("q"), F.asc("doc_id")], n_buckets, out_col="decile"
+        scored, [F.desc("q"), F.asc("doc_id")], 10, out_col="decile"
     )
     cells = (
         tiled.groupBy("decile")
@@ -5397,27 +5187,24 @@ def gumbel_daily_max_fit(events: DataFrame) -> DataFrame:
     )
 
 
-def ses_backtest_daily(
-    events: DataFrame,
-    max_lag: int = 16,
-) -> DataFrame:
+def ses_backtest_daily(events: DataFrame) -> DataFrame:
     """One-step-ahead backtest of simple exponential smoothing
     (alpha = 1/2) on the daily event-count series against the naive
     last-value forecast — the "is a smoother even worth it?" check
     that precedes any forecasting investment. The SES forecast for day
-    t is the 2^-k-weighted mean of the up-to-``max_lag`` OBSERVED
+    t is the 2^-k-weighted mean of the up-to-16 OBSERVED
     previous days (weights renormalized over the lags present, so gap
     days skip rather than zero-fill); scored days are those whose
     immediately-previous day exists, so the naive forecast is defined
     on the same set.
 
     Exactness: with dyadic weights the forecast is a ratio of two
-    INTEGER sums — each lag contributes y * 2^(max_lag - k) and
-    2^(max_lag - k) — so the smoother is exact integer arithmetic
+    INTEGER sums — each lag contributes y * 2^(16 - k) and
+    2^(16 - k) — so the smoother is exact integer arithmetic
     until one final double division; per-day absolute errors quantize
     at 9 dp into DECIMAL(38,9) for the order-free MAE sums. Scale
     shape: one per-day aggregate; the lag join is a bounded range
-    join on the DAY frame (max_lag rows per day)."""
+    join on the DAY frame (16 rows per day)."""
     daily = (
         events.groupBy(
             F.floor(
@@ -5434,11 +5221,11 @@ def ses_backtest_daily(
     b = daily.select(F.col("di").alias("bi"), F.col("y").alias("yb"))
     j = F.broadcast(a).join(
         b,
-        (F.col("bi") >= F.col("ti") - F.lit(max_lag))
+        (F.col("bi") >= F.col("ti") - F.lit(16))
         & (F.col("bi") < F.col("ti")),
     )
     k = (F.col("ti") - F.col("bi")).cast("int")
-    w_scaled = F.expr(f"shiftleft(1L, {max_lag} - cast(k as int))")
+    w_scaled = F.expr("shiftleft(1L, 16 - cast(k as int))")
     per_day = j.select(
         "ti", "yt", "yb", k.alias("k")
     ).withColumn("w", w_scaled).groupBy("ti", "yt").agg(
@@ -5519,11 +5306,7 @@ def user_path_entropy(events: DataFrame) -> DataFrame:
     )
 
 
-def odds_ratio_ci_report(
-    events: DataFrame,
-    id_col: str = "user_id",
-    salt: str = "orci",
-) -> DataFrame:
+def odds_ratio_ci_report(events: DataFrame) -> DataFrame:
     """Per-event-type odds ratio between md5-assigned A/B arms for
     "value above the type's own mean", with the Woolf log-OR 95%
     confidence interval (Woolf 1955): OR = (a*d)/(b*c), ln OR +/-
@@ -5542,7 +5325,7 @@ def odds_ratio_ci_report(
 
     ev = events.filter(F.col("value").isNotNull()).select(
         F.col("event_type").alias("g"),
-        F.when(hash_unit(F.col(id_col), salt) < 0.5, F.lit("A"))
+        F.when(hash_unit(F.col("user_id"), "orci") < 0.5, F.lit("A"))
         .otherwise(F.lit("B"))
         .alias("arm"),
         (F.round(F.col("value"), 6) + F.lit(0.0)).alias("v6"),
@@ -5666,10 +5449,7 @@ def changepoint_daily_mean(events: DataFrame) -> DataFrame:
     )
 
 
-def sprt_daily_audit(
-    events: DataFrame,
-    conv_type: str = "purchase",
-) -> DataFrame:
+def sprt_daily_audit(events: DataFrame) -> DataFrame:
     """Wald sequential probability-ratio audit (Wald 1945) of the
     daily conversion share against H0: p = 0.18 vs H1: p = 0.22 at
     alpha = beta = 0.05 — the "could we have stopped this experiment
@@ -5691,7 +5471,7 @@ def sprt_daily_audit(
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
-            F.when(F.col("event_type") == conv_type, 1).otherwise(0)
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("k"),
     )
     llr = F.round(
@@ -6048,16 +5828,12 @@ def durbin_watson_daily(events: DataFrame) -> DataFrame:
     )
 
 
-def wald_iv_estimate(
-    events: DataFrame,
-    treat_type: str = "purchase",
-    outcome_type: str = "click",
-) -> DataFrame:
+def wald_iv_estimate(events: DataFrame) -> DataFrame:
     """Wald instrumental-variable estimator (the encouragement-design
     workhorse: Angrist, Imbens & Rubin 1996) over a deterministic
     50/50 user split: instrument z = md5-hash half of user_id,
-    treatment t = the user converted (any ``treat_type`` event),
-    outcome y = the user's summed ``outcome_type`` value.
+    treatment t = the user converted (any ``purchase`` event),
+    outcome y = the user's summed ``click`` value.
     wald_late = (E[y|z=1] - E[y|z=0]) / (E[t|z=1] - E[t|z=0]).
 
     On a hash instrument the true effect is zero by construction —
@@ -6075,12 +5851,12 @@ def wald_iv_estimate(
 
     users = events.groupBy("user_id").agg(
         F.sum(
-            F.when(F.col("event_type") == treat_type, 1).otherwise(0)
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("nt"),
         F.coalesce(
             F.sum(
                 F.when(
-                    F.col("event_type") == outcome_type,
+                    F.col("event_type") == "click",
                     F.round(F.col("value"), 6).cast("decimal(38,6)"),
                 )
             ),
@@ -6126,16 +5902,11 @@ def wald_iv_estimate(
     )
 
 
-def propensity_stratified_effect(
-    events: DataFrame,
-    treat_type: str = "purchase",
-    compare_type: str = "view",
-    outcome_type: str = "click",
-) -> DataFrame:
+def propensity_stratified_effect(events: DataFrame) -> DataFrame:
     """Stratified treatment-effect estimate (Rosenbaum & Rubin 1984's
     subclassification, on an observable activity score): treated =
-    users with more ``treat_type`` than ``compare_type`` events,
-    outcome = summed ``outcome_type`` value, strata = log2 bands of
+    users with more ``purchase`` than ``view`` events,
+    outcome = summed ``click`` value, strata = log2 bands of
     total activity (the propensity proxy). ATT = sum over strata of
     (treated share of stratum) x (treated mean - control mean),
     reported against the naive unadjusted difference — the gap
@@ -6151,15 +5922,15 @@ def propensity_stratified_effect(
     users = events.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("na"),
         F.sum(
-            F.when(F.col("event_type") == treat_type, 1).otherwise(0)
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("ntreat"),
         F.sum(
-            F.when(F.col("event_type") == compare_type, 1).otherwise(0)
+            F.when(F.col("event_type") == "view", 1).otherwise(0)
         ).alias("ncmp"),
         F.coalesce(
             F.sum(
                 F.when(
-                    F.col("event_type") == outcome_type,
+                    F.col("event_type") == "click",
                     F.round(F.col("value"), 6).cast("decimal(38,6)"),
                 )
             ),
@@ -6244,11 +6015,7 @@ def fourier_tables(period: int) -> "tuple[list[float], list[float]]":
     )
 
 
-def periodogram_hourly_cycle(
-    events: DataFrame,
-    periods: "tuple[int, ...]" = (12, 24, 168),
-    ts_col: str = "ts",
-) -> DataFrame:
+def periodogram_hourly_cycle(events: DataFrame) -> DataFrame:
     """Discrete-Fourier power at fixed seasonal candidate periods over
     the hourly event-count series — "how much of traffic is the daily
     (24 h), half-daily (12 h), and weekly (168 h) cycle?", the
@@ -6269,7 +6036,7 @@ def periodogram_hourly_cycle(
     one map-side-combined hourly aggregate, then one scalar fold —
     the periods multiply literal-table size, not data passes."""
     hourly = events.groupBy(
-        F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(3600))
+        F.floor(F.unix_timestamp(F.col("ts")) / F.lit(3600))
         .cast("long")
         .alias("hi")
     ).agg(F.count(F.lit(1)).alias("c"))
@@ -6277,7 +6044,7 @@ def periodogram_hourly_cycle(
         F.count(F.lit(1)).alias("nh"),
         F.sum(F.col("c").cast("decimal(38,0)")).alias("s"),
     ]
-    for p in periods:
+    for p in (12, 24, 168):
         cos_t, sin_t = fourier_tables(p)
         k = (F.col("hi") % F.lit(p)).cast("int")
         for nm, tab in (("c", cos_t), ("s", sin_t)):
@@ -6293,7 +6060,7 @@ def periodogram_hourly_cycle(
     # so the hourly aggregate runs once, not len(periods) times
     folded = hourly.agg(*aggs).localCheckpoint(eager=True)
     rows = []
-    for p in periods:
+    for p in (12, 24, 168):
         amp = (
             F.sqrt(
                 F.col(f"c{p}").cast("double") * F.col(f"c{p}").cast("double")
@@ -6430,10 +6197,7 @@ def brown_forsythe_nchars(docs: DataFrame) -> DataFrame:
     )
 
 
-def hurst_rs_daily(
-    events: DataFrame,
-    block_sizes: "tuple[int, ...]" = (3, 5, 10),
-) -> DataFrame:
+def hurst_rs_daily(events: DataFrame) -> DataFrame:
     """Hurst exponent by rescaled-range analysis (Hurst 1951; the
     Mandelbrot & Wallis 1969 R/S form) of the daily event-count
     series — "is traffic volume mean-reverting (H < 0.5), a random
@@ -6467,7 +6231,7 @@ def hurst_rs_daily(
         "c",
         "i",
         F.explode(
-            F.array(*[F.lit(b) for b in block_sizes])
+            F.array(*[F.lit(b) for b in (3, 5, 10)])
         ).alias("b"),
     ).select(
         "b", "c", (F.col("i") / F.col("b")).cast("long").alias("blk"),
@@ -6569,28 +6333,23 @@ def hurst_rs_daily(
         F.col("np").cast("long").alias("n_sizes"),
         (F.round(slope, 6) + F.lit(0.0)).alias("hurst_h"),
     )
-    wide = pts.groupBy().pivot("b", list(block_sizes)).agg(
+    wide = pts.groupBy().pivot("b", list((3, 5, 10))).agg(
         F.first(F.round(F.col("mean_rs"), 6) + F.lit(0.0))
     )
     renamed = wide.select(
         *[
             F.col(str(b)).alias(f"mean_rs_{b}")
-            for b in block_sizes
+            for b in (3, 5, 10)
         ]
     )
     return hurst.crossJoin(F.broadcast(renamed))
 
 
-def obrien_fleming_monitor(
-    events: DataFrame,
-    conv_type: str = "purchase",
-    p0: float = 0.2,
-    obf_const: float = 2.2414027276049473,
-) -> DataFrame:
+def obrien_fleming_monitor(events: DataFrame) -> DataFrame:
     """Group-sequential monitoring audit with O'Brien-Fleming-shaped
     boundaries (O'Brien & Fleming 1979, via the Lan-DeMets alpha-
     spending approximation b(t) = C / sqrt(t)): at each interim day,
-    the cumulative conversion share is z-tested against H0 p = p0 and
+    the cumulative conversion share is z-tested against H0 p = 0.2 and
     compared to the boundary at that day's information fraction —
     the "could we have called this early, under a spending rule that
     spends almost nothing at the start?" companion to sprt_daily_audit
@@ -6607,7 +6366,7 @@ def obrien_fleming_monitor(
     ).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
-            F.when(F.col("event_type") == conv_type, 1).otherwise(0)
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("x"),
     )
     wcum = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
@@ -6621,11 +6380,11 @@ def obrien_fleming_monitor(
         F.sum("n").over(wall).alias("nt"),
     )
     ncd = F.col("nc").cast("double")
-    z = (F.col("xc").cast("double") - ncd * F.lit(p0)) / F.sqrt(
-        ncd * F.lit(p0) * F.lit(1.0 - p0)
+    z = (F.col("xc").cast("double") - ncd * F.lit(0.2)) / F.sqrt(
+        ncd * F.lit(0.2) * F.lit(1.0 - 0.2)
     )
     t = ncd / F.col("nt").cast("double")
-    boundary = F.lit(obf_const) / F.sqrt(t)
+    boundary = F.lit(2.2414027276049473) / F.sqrt(t)
     z9 = F.round(F.abs(z), 9)
     b9 = F.round(boundary, 9)
     return cum.select(

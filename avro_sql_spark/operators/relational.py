@@ -375,7 +375,7 @@ def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("prev_type", "event_type")
 
 
-def session_paths_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
+def session_paths_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k session opening paths: events sessionize per user (new
     session when the gap is ≥ 30 minutes — the same convention as
     ``sessionize_events``), each session contributes the '>'-joined
@@ -436,7 +436,7 @@ def session_paths_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFra
         paths.groupBy("path")
         .agg(F.count(F.lit(1)).alias("n_sessions"))
         .orderBy(F.desc("n_sessions"), F.asc("path"))
-        .limit(k)
+        .limit(20)
     )
 
 
@@ -525,12 +525,10 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def position_attribution(
-    spark: SparkSession, sf_dir: str, window_hours: int = 24
-) -> DataFrame:
+def position_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U-shaped (position-based) multi-touch attribution: every
     purchase distributes credit over the user's touchpoints in the
-    prior ``window_hours`` — 40% first touch, 40% last, 20% split
+    prior 24 hours — 40% first touch, 40% last, 20% split
     across the middle (k=1 → 1.0, k=2 → 0.5/0.5) — reported as total
     credit per touch type. The marketing-analytics standard between
     last-click (streaming_click_attribution's rule) and Shapley.
@@ -556,7 +554,7 @@ def position_attribution(
     )
     joined = purchases.join(touches, "user_id").filter(
         (F.col("t_ts") < F.col("p_ts"))
-        & F.expr(f"t_ts >= p_ts - INTERVAL {window_hours} HOURS")
+        & F.expr("t_ts >= p_ts - INTERVAL 24 HOURS")
     )
     w = Window.partitionBy("p_id").orderBy("t_ts", "t_id")
     sized = joined.select(
@@ -1616,10 +1614,10 @@ def key_skew_report(spark: SparkSession, sf_dir: str, top: int = 10) -> DataFram
     )
 
 
-def hourly_anomalies(spark: SparkSession, sf_dir: str, z: float = 3.0) -> DataFrame:
+def hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Traffic anomaly screen: gap-filled hourly counts per event type
     (zero-filled hours matter — a silent outage IS the anomaly), then
-    per-type mean/stddev and the hours whose |z-score| exceeds ``z``.
+    per-type mean/stddev and the hours whose |z-score| exceeds 3.0.
 
     Scale shape: reuses the gap-fill plan (fact table shuffles once for
     the hourly count; grid join is broadcast-bounded by hours x types);
@@ -1641,7 +1639,7 @@ def hourly_anomalies(spark: SparkSession, sf_dir: str, z: float = 3.0) -> DataFr
     return (
         hourly.join(F.broadcast(stats), F.col("event_type") == F.col("s_type"))
         .select("event_type", "hour", "n_events", zscore.alias("zscore"))
-        .filter(F.abs(F.col("zscore")) > z)
+        .filter(F.abs(F.col("zscore")) > 3.0)
         .orderBy("event_type", "hour")
     )
 
@@ -1955,13 +1953,13 @@ def scd2_user_type_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ewma_hourly(spark: SparkSession, sf_dir: str, taps: int = 20) -> DataFrame:
+def ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted moving average (alpha = 1/2) of the hourly
     value totals per event type — the smoothing pass a monitoring /
     drift-detection pipeline runs over bucketed metrics.
 
-    The EWMA recurrence is sequential, but truncated at ``taps`` lags it
-    is a fixed-window weighted sum: collect the trailing ``taps`` hourly
+    The EWMA recurrence is sequential, but truncated at 20 lags it
+    is a fixed-window weighted sum: collect the trailing 20 hourly
     values with an ordered window frame (a tiny array — 20 doubles per
     row) and fold ``acc*0.5 + x`` left-to-right with ``F.aggregate``.
     Because alpha is exactly 1/2, every weight is a power of two: the
@@ -1972,7 +1970,7 @@ def ewma_hourly(spark: SparkSession, sf_dir: str, taps: int = 20) -> DataFrame:
 
     Scale shape: one partial-aggregated shuffle to (type, hour) — a
     types × hours frame, tiny relative to the event stream — then a
-    per-type ordered window whose state is ``taps`` doubles.  The window
+    per-type ordered window whose state is 20 doubles.  The window
     partitions by type only, but over the BUCKETED frame (each partition
     holds hours-per-type rows, not raw events), so no task ever sorts
     more than the metric series itself."""
@@ -1993,7 +1991,7 @@ def ewma_hourly(spark: SparkSession, sf_dir: str, taps: int = 20) -> DataFrame:
     w = (
         Window.partitionBy("event_type")
         .orderBy("hour")
-        .rowsBetween(-(taps - 1), Window.currentRow)
+        .rowsBetween(-19, Window.currentRow)
     )
     arr = F.collect_list("hour_value").over(w)
     folded = F.aggregate(

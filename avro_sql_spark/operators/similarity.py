@@ -19,34 +19,27 @@ from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine
 
-def brute_force_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
-) -> DataFrame:
+def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact cosine top-k of every corpus vector for each query vector.
 
     ``queries`` (small) is broadcast; ranking partitions by query only.
-    Cosine is rounded to ``round_to`` decimals *before* ranking with an id
+    Cosine is rounded to 6 decimals *before* ranking with an id
     tiebreak, so the result is stable across float summation orders (and
     reproducible by the DuckDB oracle)."""
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
     # spread the corpus side first: a compacted single-file scan would
     # otherwise run every dot product in one task (the broadcast join
     # adds no exchange of its own)
     n = emb.sparkSession.sparkContext.defaultParallelism
-    c = emb.repartition(n, F.col(id_col)).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+    c = emb.repartition(n, F.col("vec_id")).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), round_to).alias("cos"),
+            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -57,7 +50,7 @@ def brute_force_topk(
     )
 
 
-def _plane_components(planes: int, dim: int, seed: int = 0, modulus: int = 10_000_001) -> "list[list[float]]":
+def _plane_components(planes: int, dim: int, seed: int = 0) -> "list[list[float]]":
     """Hyperplane components as plan-time Python floats: md5 of
     "seed,plane,dim-index" cut to 48 bits, scaled to [-0.5, 0.5).
     Deterministic and engine-neutral — the Spark plan and the DuckDB
@@ -66,7 +59,9 @@ def _plane_components(planes: int, dim: int, seed: int = 0, modulus: int = 10_00
 
     return [
         [
-            int(hashlib.md5(f"{seed},{p},{j}".encode()).hexdigest()[:12], 16) % modulus / modulus
+            int(hashlib.md5(f"{seed},{p},{j}".encode()).hexdigest()[:12], 16)
+            % 10_000_001
+            / 10_000_001
             - 0.5
             for j in range(dim)
         ]
@@ -121,39 +116,32 @@ def hyperplane_signature(vec, planes: int = 16, seed: int = 0, dim: int = 64) ->
 
 
 def lsh_bucketed_ann(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    planes: int = 8,
-    tables: int = 4,
-    round_to: int = 6,
+    emb: DataFrame, queries: DataFrame, k: int = 10, planes: int = 8
 ) -> DataFrame:
     """Approximate top-k: exact cosine only among corpus vectors sharing
-    a hyperplane bucket with the query in AT LEAST ONE of ``tables``
+    a hyperplane bucket with the query in AT LEAST ONE of 4
     independent hash tables. Single-table sign-LSH recall is the
     AND-probability (1 - θ/π)^planes — low for any realistic neighbor
     angle — so production LSH always unions L tables (OR-construction);
     recall rises as 1-(1-p)^L while candidate volume grows linearly.
 
-    Scale shape: each side emits ``tables`` skinny (id, table, bucket)
+    Scale shape: each side emits 4 skinny (id, table, bucket)
     rows (in-row posexplode), candidates come from one equi-join on
     (table, bucket) deduped before the exact-cosine rerank — vectors
     re-attach per side after dedup, so signatures never ride the join."""
     # plan-time dim probe (one-row scan): the hyperplane literal arrays
     # need the vector length
-    _head = emb.filter(F.col(vec_col).isNotNull()).select(vec_col).first()
+    _head = emb.filter(F.col("embedding").isNotNull()).select("embedding").first()
     _dim = len(_head[0]) if _head is not None else 1
 
     def _buckets(df: DataFrame, out_id: str) -> DataFrame:
         return df.select(
-            F.col(id_col).alias(out_id),
+            F.col("vec_id").alias(out_id),
             F.posexplode(
                 F.array(
                     *[
-                        hyperplane_signature(f"`{vec_col}`", planes, seed=t, dim=_dim)
-                        for t in range(tables)
+                        hyperplane_signature("`embedding`", planes, seed=t, dim=_dim)
+                        for t in range(4)
                     ]
                 )
             ).alias("tbl", "bucket"),
@@ -168,19 +156,19 @@ def lsh_bucketed_ann(
     )
     scored = (
         cand.join(
-            emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
+            emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")),
             "neighbor_id",
         )
         .join(
             F.broadcast(
-                queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+                queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
             ),
             "query_id",
         )
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), round_to).alias("cos"),
+            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -272,13 +260,8 @@ def ivf_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_cells: int = 16,
     n_probe: int = 4,
-    round_to: int = 6,
-    train_limit: int = 100_000,
-    train_iterations: int = 2,
     centroids: "list[list[float]] | None" = None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: k-means coarse quantizer -> assign each
@@ -286,7 +269,7 @@ def ivf_topk(
     ``n_probe`` nearest cells.
 
     The 100 TB shape: centroids are tiny (n_cells x dim), trained on AT
-    MOST ``train_limit`` vectors (a coarse quantizer needs a bounded
+    MOST 100,000 vectors (a coarse quantizer needs a bounded
     training set, not full-corpus Lloyd's passes) and broadcast
     everywhere; cell assignment is one scan; the probe is an equi-join
     on cell id, so candidate generation shuffles only matching cells.
@@ -294,7 +277,7 @@ def ivf_topk(
 
     The quantizer is the DETERMINISTIC Lloyd loop shared with
     kmeans_lloyd (clustering.lloyd_centroids: lowest-id seeds and
-    training rows, fixed ``train_iterations``, 9dp-rounded updates) —
+    training rows, 2 fixed iterations, 9dp-rounded updates) —
     a closed-form expression of the input, so the ENTIRE approximate
     result (cells, probes, candidates, ranks) replays in an ANSI-SQL
     oracle; reruns build identical cells by construction.
@@ -305,17 +288,17 @@ def ivf_topk(
     # here, exactly as before
     if centroids is None:
         centroids = _coarse_centroids(
-            emb, n_cells, train_limit, train_iterations, id_col, vec_col
+            emb, n_cells, 100_000, 2, "vec_id", "embedding"
         )
     corpus = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        _cell_of(f"`{vec_col}`", centroids).alias("cell"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cv"),
+        _cell_of("`embedding`", centroids).alias("cell"),
     )
     probes = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-        F.explode(_probe_cells(f"`{vec_col}`", centroids, n_probe)).alias("cell"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("qv"),
+        F.explode(_probe_cells("`embedding`", centroids, n_probe)).alias("cell"),
     )
 
     scored = (
@@ -324,7 +307,7 @@ def ivf_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), round_to).alias("cos"),
+            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
@@ -490,11 +473,7 @@ def pq_topk(
     k: int = 10,
     m: int = 4,
     codebook_k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     train_limit: int = 512,
-    train_iterations: int = 2,
-    round_to: int = 4,
 ) -> DataFrame:
     """Product-quantization ANN (Jégou, Douze, Schmid, "Product
     Quantization for Nearest Neighbor Search", TPAMI 2011): split each
@@ -517,19 +496,19 @@ def pq_topk(
 
     Returns (query_id, neighbor_id, adist, rank): top-``k`` neighbors
     per query by ADC distance (ties break to the lower neighbor id),
-    ``adist`` rounded to ``round_to``.
+    ``adist`` rounded to 4.
     """
     _sub_dists_sql, _code_sql = _pq_model(
-        emb, m, codebook_k, id_col, vec_col, train_limit, train_iterations
+        emb, m, codebook_k, "vec_id", "embedding", train_limit, 2
     )
     n = emb.sparkSession.sparkContext.defaultParallelism
-    codes = emb.repartition(n, F.col(id_col)).selectExpr(
-        f"`{id_col}` AS neighbor_id",
-        *[f"{_code_sql(f'`{vec_col}`', s)} AS c{s}" for s in range(m)],
+    codes = emb.repartition(n, F.col("vec_id")).selectExpr(
+        "`vec_id` AS neighbor_id",
+        *[f"{_code_sql('`embedding`', s)} AS c{s}" for s in range(m)],
     )
     luts = queries.selectExpr(
-        f"`{id_col}` AS query_id",
-        *[f"{_sub_dists_sql(f'`{vec_col}`', s)} AS lut{s}" for s in range(m)],
+        "`vec_id` AS query_id",
+        *[f"{_sub_dists_sql('`embedding`', s)} AS lut{s}" for s in range(m)],
     )
     scored = codes.join(
         F.broadcast(luts), F.col("query_id") != F.col("neighbor_id")
@@ -538,7 +517,7 @@ def pq_topk(
     for s in range(1, m):
         adist = adist + F.element_at(F.col(f"lut{s}"), F.col(f"c{s}") + 1)
     scored = scored.select(
-        "query_id", "neighbor_id", F.round(adist, round_to).alias("adist")
+        "query_id", "neighbor_id", F.round(adist, 4).alias("adist")
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
     return (
@@ -556,12 +535,8 @@ def ivf_pq_topk(
     n_probe: int = 4,
     m: int = 4,
     codebook_k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     coarse_train_limit: int = 100_000,
     pq_train_limit: int = 512,
-    train_iterations: int = 2,
-    round_to: int = 4,
 ) -> DataFrame:
     """IVF+PQ ANN — the billion-vector FAISS composition (Jégou 2011
     §IV: IVFADC without the residual refinement): the IVF coarse
@@ -592,28 +567,28 @@ def ivf_pq_topk(
     with ThreadPoolExecutor(max_workers=2) as pool:
         fut_coarse = pool.submit(
             _coarse_centroids,
-            emb, n_cells, coarse_train_limit, train_iterations, id_col, vec_col,
+            emb, n_cells, coarse_train_limit, 2, "vec_id", "embedding",
         )
         fut_pq = pool.submit(
             _pq_model,
-            emb, m, codebook_k, id_col, vec_col, pq_train_limit, train_iterations,
+            emb, m, codebook_k, "vec_id", "embedding", pq_train_limit, 2,
         )
         centroids = fut_coarse.result()
         _sub_dists_sql, _code_sql = fut_pq.result()
     n = emb.sparkSession.sparkContext.defaultParallelism
-    codes = emb.repartition(n, F.col(id_col)).select(
-        F.col(id_col).alias("neighbor_id"),
-        _cell_of(f"`{vec_col}`", centroids).alias("cell"),
+    codes = emb.repartition(n, F.col("vec_id")).select(
+        F.col("vec_id").alias("neighbor_id"),
+        _cell_of("`embedding`", centroids).alias("cell"),
         *[
-            F.expr(_code_sql(f"`{vec_col}`", s)).alias(f"c{s}")
+            F.expr(_code_sql("`embedding`", s)).alias(f"c{s}")
             for s in range(m)
         ],
     )
     luts = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(_probe_cells(f"`{vec_col}`", centroids, n_probe)).alias("cell"),
+        F.col("vec_id").alias("query_id"),
+        F.explode(_probe_cells("`embedding`", centroids, n_probe)).alias("cell"),
         *[
-            F.expr(_sub_dists_sql(f"`{vec_col}`", s)).alias(f"lut{s}")
+            F.expr(_sub_dists_sql("`embedding`", s)).alias(f"lut{s}")
             for s in range(m)
         ],
     )
@@ -624,7 +599,7 @@ def ivf_pq_topk(
     for s in range(1, m):
         adist = adist + F.element_at(F.col(f"lut{s}"), F.col(f"c{s}") + 1)
     scored = scored.select(
-        "query_id", "neighbor_id", F.round(adist, round_to).alias("adist")
+        "query_id", "neighbor_id", F.round(adist, 4).alias("adist")
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
     return (
@@ -634,13 +609,7 @@ def ivf_pq_topk(
     )
 
 
-def label_centroids(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    round_to: int = 6,
-) -> DataFrame:
+def label_centroids(emb: DataFrame) -> DataFrame:
     """Per-label embedding centroids as FLAT (label, dim, mean_v) rows —
     the supervised companion to the IVF quantizer (class prototypes,
     nearest-centroid classification, drift monitoring).
@@ -653,24 +622,23 @@ def label_centroids(
     ``array_sort(collect_list(struct(dim, mean_v)))`` when an array
     column is wanted downstream."""
     n = emb.sparkSession.sparkContext.defaultParallelism
-    ex = emb.repartition(n, F.col(id_col)).select(
-        F.col(label_col).alias("label"),
-        F.posexplode(F.col(vec_col)).alias("dim", "v"),
+    ex = emb.repartition(n, F.col("vec_id")).select(
+        # a fresh attribute: embedding_outliers joins this back to ``emb``
+        F.col("label").alias("label"),
+        F.posexplode(F.col("embedding")).alias("dim", "v"),
     )
     return (
         ex.groupBy("label", "dim")
         .agg(
             F.round(
-                F.sum(F.col("v").cast("double")) / F.count(F.lit(1)), round_to
+                F.sum(F.col("v").cast("double")) / F.count(F.lit(1)), 6
             ).alias("mean_v")
         )
         .orderBy("label", "dim")
     )
 
 
-def quantization_error_stats(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding", label_col: str = "label"
-) -> DataFrame:
+def quantization_error_stats(emb: DataFrame) -> DataFrame:
     """Int8 scalar quantization quality report: per label, the mean
     absolute reconstruction error of symmetric per-vector int8 codes.
     Quantization cuts embedding storage/shuffle 4x (float32 -> int8 +
@@ -684,9 +652,9 @@ def quantization_error_stats(
     # spread: same single-file-scan rationale as brute_force_topk — the
     # per-row quantize/reconstruct array math needs every core
     emb = emb.repartition(
-        emb.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
+        emb.sparkSession.sparkContext.defaultParallelism, F.col("vec_id")
     )
-    v = F.col(vec_col)
+    v = F.col("embedding")
     scale = quantize_scale(v)
     recon = dequantize(quantize(v, scale), scale)
     err_sum = F.aggregate(
@@ -695,7 +663,7 @@ def quantization_error_stats(
         lambda acc, x: acc + x,
     )
     return (
-        emb.select(F.col(label_col).alias("label"), err_sum.alias("e"), F.size(v).alias("n"))
+        emb.select(F.col("label").alias("label"), err_sum.alias("e"), F.size(v).alias("n"))
         .groupBy("label")
         .agg(
             F.sum("n").alias("n_values"),
@@ -705,12 +673,7 @@ def quantization_error_stats(
     )
 
 
-def embedding_outliers(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def embedding_outliers(emb: DataFrame) -> DataFrame:
     """Per-label embedding OUTLIER report: distance of every vector to
     its label centroid, then per label the count, mean distance, and how
     many vectors sit more than two (sample) standard deviations above
@@ -730,7 +693,7 @@ def embedding_outliers(
     dedup module's cache contract. Distances are rounded to 6 decimals
     before the stats so both engines threshold identical values."""
     cents = (
-        label_centroids(emb, id_col, vec_col, label_col)
+        label_centroids(emb)
         .groupBy("label")
         .agg(
             F.transform(
@@ -739,7 +702,7 @@ def embedding_outliers(
             ).alias("cent")
         )
     )
-    v = F.col(vec_col)
+    v = F.col("embedding")
     dist = F.round(
         F.sqrt(
             F.aggregate(
@@ -753,9 +716,9 @@ def embedding_outliers(
         6,
     )
     dists = (
-        emb.repartition(emb.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
-        .join(F.broadcast(cents), emb[label_col] == cents["label"])
-        .select(emb[label_col].alias("lbl"), dist.alias("dist"))
+        emb.repartition(emb.sparkSession.sparkContext.defaultParallelism, F.col("vec_id"))
+        .join(F.broadcast(cents), emb["label"] == cents["label"])
+        .select(emb["label"].alias("lbl"), dist.alias("dist"))
         .cache()
     )
     stats = dists.groupBy("lbl").agg(
@@ -780,10 +743,7 @@ def ann_recall_report(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     planes: int = 8,
-    tables: int = 4,
     n_cells: int = 16,
     n_probe: int = 4,
 ) -> DataFrame:
@@ -803,7 +763,7 @@ def ann_recall_report(
     # serializes with the IVF training collects; lazy still pins one
     # materialization at the first action
     truth = (
-        brute_force_topk(emb, queries, k, id_col, vec_col)
+        brute_force_topk(emb, queries, k)
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=False)
     )
@@ -824,13 +784,13 @@ def ann_recall_report(
         # truth materialization. Identical deterministic training —
         # ivf_topk just receives the result instead of re-running it.
         fut_cents = pool.submit(
-            _coarse_centroids, emb, n_cells, 100_000, 2, id_col, vec_col
+            _coarse_centroids, emb, n_cells, 100_000, 2, "vec_id", "embedding"
         )
         lsh_cand = lsh_bucketed_ann(
-            emb, queries, k, id_col, vec_col, planes=planes, tables=tables
+            emb, queries, k, planes=planes
         ).select("query_id", "neighbor_id")
         ivf_cand = ivf_topk(
-            emb, queries, k=k, id_col=id_col, vec_col=vec_col,
+            emb, queries, k=k,
             n_cells=n_cells, n_probe=n_probe, centroids=fut_cents.result(),
         ).select("query_id", "neighbor_id")
         fut_truth.result()
@@ -930,7 +890,6 @@ def recall_vs_truth(truth: DataFrame, cand: DataFrame, method: str) -> DataFrame
 
 def gram_covariance(
     emb: DataFrame,
-    vec_col: str = "embedding",
     round_to: int = 6,
     partition_col: str | None = None,
     n_parts: int = 64,
@@ -955,8 +914,8 @@ def gram_covariance(
     the input split count and flaked a 6-dp round boundary at the r2
     gate). Null vectors are excluded, matching what any per-cell
     aggregate would do."""
-    src0 = emb.filter(F.col(vec_col).isNotNull())
-    head = src0.select(vec_col).first()
+    src0 = emb.filter(F.col("embedding").isNotNull())
+    head = src0.select("embedding").first()
     if head is None or head[0] is None:
         from ..errors import AvroSqlError
 
@@ -965,14 +924,14 @@ def gram_covariance(
     sess = emb.sparkSession
     if partition_col is not None:
         src = (
-            src0.select(F.col(partition_col).alias("k"), F.col(vec_col).alias("v"))
+            src0.select(F.col(partition_col).alias("k"), F.col("embedding").alias("v"))
             .repartition(n_parts, "k")
             .sortWithinPartitions("k")
             .select("v")
         )
     else:
         # fastest path when bit-stability across environments isn't needed
-        src = src0.select(F.col(vec_col).alias("v")).repartition(
+        src = src0.select(F.col("embedding").alias("v")).repartition(
             sess.sparkContext.defaultParallelism
         )
 
@@ -1032,12 +991,7 @@ def gram_covariance(
     )
 
 
-def fixed_point_covariance(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    scale: int = 1_000_000,
-    round_to: int | None = 6,
-) -> DataFrame:
+def fixed_point_covariance(emb: DataFrame, round_to: int | None = 6) -> DataFrame:
     """Population covariance matrix as (i, j, cov) rows from FIXED-POINT
     integer gram partials — the exactly-replayable twin of
     :func:`gram_covariance` (which keeps the float BLAS fast path).
@@ -1048,13 +1002,13 @@ def fixed_point_covariance(
     produce cells differing by ~1 ulp, and no output rounding can
     reconcile a cell that lands within 1 ulp of a rounding boundary.
     Here every element is quantized ONCE per value with
-    ``floor(v * scale + 0.5)`` (identical IEEE double ops in numpy and
+    ``floor(v * 1e6 + 0.5)`` (identical IEEE double ops in numpy and
     in any SQL engine — ties have no ambiguity because floor of the
     +0.5-shifted value is a single well-defined op), and all
     accumulation is exact integer arithmetic: the result is a
     closed-form function of the data, independent of partitioning,
-    summation order, or BLAS. Quantization error is <= 1/(2*scale) per
-    element (1e-6 at the default), far below the 6-dp report.
+    summation order, or BLAS. Quantization error is <= 1/(2*1e6) per
+    element, far below the 6-dp report.
 
     Scale shape is UNCHANGED from gram_covariance: per-partition
     integer gram partials via mapInPandas (numpy int64 matmul), one row
@@ -1062,22 +1016,22 @@ def fixed_point_covariance(
     shuffled volume is #partitions x d^2 ints, independent of row
     count; global merge is a map-side-combined DECIMAL(38,0) sum per
     cell (overflow-proof: int64 per-partition partials hold while
-    rows_per_partition * (scale * |v|_max)^2 < 2^63 — 3e6 rows per
-    partition at |v| <= 1 with the default scale; ``scale`` and the
-    partition row count are the only knobs). No fixed repartition
+    rows_per_partition * (1e6 * |v|_max)^2 < 2^63 — 3e6 rows per
+    partition at |v| <= 1; the partition row count is the only
+    knob). No fixed repartition
     pinning is needed — integer
     sums are order-free — so the default parallelism path is both the
     deterministic AND the fast one.
     """
-    src0 = emb.filter(F.col(vec_col).isNotNull())
-    head = src0.select(vec_col).first()
+    src0 = emb.filter(F.col("embedding").isNotNull())
+    head = src0.select("embedding").first()
     if head is None or head[0] is None:
         from ..errors import AvroSqlError
 
         raise AvroSqlError("fixed_point_covariance: input has no vectors")
     d = len(head[0])
     sess = emb.sparkSession
-    src = src0.select(F.col(vec_col).alias("v")).repartition(
+    src = src0.select(F.col("embedding").alias("v")).repartition(
         sess.sparkContext.defaultParallelism
     )
 
@@ -1088,7 +1042,7 @@ def fixed_point_covariance(
         n, s, g = 0, None, None
         for pdf in batches:
             x = np.vstack(pdf["v"].to_numpy()).astype("float64")
-            q = np.floor(x * float(scale) + 0.5).astype("int64")
+            q = np.floor(x * 1e6 + 0.5).astype("int64")
             n += q.shape[0]
             s = q.sum(0) if s is None else s + q.sum(0)
             g = q.T @ q if g is None else g + q.T @ q
@@ -1121,7 +1075,7 @@ def fixed_point_covariance(
     cov_expr = (
         "(CAST(gg AS DOUBLE) - CAST(si AS DOUBLE) * CAST(sj AS DOUBLE)"
         " / CAST(nn AS DOUBLE)) / CAST(nn AS DOUBLE)"
-        f" / CAST({scale} AS DOUBLE) / CAST({scale} AS DOUBLE)"
+        " / CAST(1000000 AS DOUBLE) / CAST(1000000 AS DOUBLE)"
     )
     if round_to is not None:
         cov_expr = f"ROUND({cov_expr}, {round_to})"
@@ -1193,12 +1147,7 @@ def power_iteration(
     return v, lam
 
 
-def pca_project(
-    emb: DataFrame,
-    k: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> "tuple[DataFrame, list[float]]":
+def pca_project(emb: DataFrame, k: int = 2) -> "tuple[DataFrame, list[float]]":
     """Project embeddings onto their top-k principal components.
 
     The covariance matrix is computed distributed
@@ -1211,7 +1160,7 @@ def pca_project(
     partitionings agree."""
     import numpy as np
 
-    cov_rows = gram_covariance(emb, vec_col, round_to=12).collect()
+    cov_rows = gram_covariance(emb, round_to=12).collect()
     d = max(r["i"] for r in cov_rows) + 1
     cov = np.zeros((d, d))
     for r in cov_rows:
@@ -1226,7 +1175,7 @@ def pca_project(
         comps.append(v)
     explained = [float(vals[c] / vals.sum()) for c in order]
     out = emb
-    x = F.col(vec_col)
+    x = F.col("embedding")
     for ci, comp in enumerate(comps):
         lit = F.array(*[F.lit(float(w)) for w in comp])
         out = out.withColumn(
@@ -1240,16 +1189,11 @@ def pca_project(
                 6,
             ),
         )
-    return out.drop(vec_col), explained
+    return out.drop("embedding"), explained
 
 
 def semantic_dedup_report(
-    emb: DataFrame,
-    k: int = 8,
-    iterations: int = 2,
-    tau: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, k: int = 8, iterations: int = 2, tau: float = 0.35
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — semantic
     near-duplicate pruning over an embedding column: k-means cluster
@@ -1278,7 +1222,7 @@ def semantic_dedup_report(
 
     from .clustering import _assign, lloyd_centroids
 
-    cents = lloyd_centroids(emb, k, iterations, id_col, vec_col)
+    cents = lloyd_centroids(emb, k, iterations)
     d = len(cents[0])
 
     # dot products as 0.0-seeded zip_with FOLDS — the identical IEEE
@@ -1330,10 +1274,10 @@ def semantic_dedup_report(
         )
     )
     pts = (
-        _assign(emb, cents, vec_col)
+        _assign(emb, cents, "embedding")
         .select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
+            F.col("vec_id").alias("id"),
+            F.col("embedding").cast("array<double>").alias("vec"),
             "cluster",
         )
         .selectExpr("*", f"({dot_sql('vec', 'vec')}) AS nn")
@@ -1419,18 +1363,9 @@ def semantic_dedup_report(
     )
 
 
-def hard_negatives(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    round_to: int = 6,
-    floor: float = 0.0,
-) -> DataFrame:
+def hard_negatives(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Contrastive hard-negative mining: for each query vector, the ``k``
-    most-similar corpus vectors whose ``label_col`` DIFFERS from the
+    most-similar corpus vectors whose ``label`` DIFFERS from the
     query's — the negatives an InfoNCE/triplet trainer should see
     (Robinson et al. 2021, "Contrastive Learning with Hard Negative
     Samples"). Same-label rows are positives and are excluded by the
@@ -1439,21 +1374,21 @@ def hard_negatives(
     Scale shape mirrors :func:`brute_force_topk`: the (small) query set
     is broadcast, the corpus side is spread and streams through one
     codegen'd stage, and ranking partitions by query id only — no
-    all-pairs shuffle, no global sort. ``floor`` drops anti-correlated
+    all-pairs shuffle, no global sort. A cosine floor of 0 drops anti-correlated
     vectors (easy negatives) before the window so the per-partition
-    top-k heap stays small. Cosine is rounded to ``round_to`` decimals
+    top-k heap stays small. Cosine is rounded to 6 decimals
     BEFORE ranking with an id tiebreak, making the selection stable
     across float summation orders (DuckDB-oracle-replayable)."""
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("query_label"),
-        F.col(vec_col).alias("qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("label").alias("query_label"),
+        F.col("embedding").alias("qv"),
     )
     n = emb.sparkSession.sparkContext.defaultParallelism
-    c = emb.repartition(n, F.col(id_col)).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("neighbor_label"),
-        F.col(vec_col).alias("cv"),
+    c = emb.repartition(n, F.col("vec_id")).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("label").alias("neighbor_label"),
+        F.col("embedding").alias("cv"),
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_label") != F.col("neighbor_label"))
@@ -1462,9 +1397,9 @@ def hard_negatives(
             "query_label",
             "neighbor_id",
             "neighbor_label",
-            F.round(cosine(F.col("qv"), F.col("cv")), round_to).alias("cos"),
+            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos"),
         )
-        .filter(F.col("cos") >= F.lit(floor))
+        .filter(F.col("cos") >= F.lit(0.0))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
@@ -1475,12 +1410,7 @@ def hard_negatives(
 
 
 def random_projection(
-    emb: DataFrame,
-    out_dim: int = 16,
-    in_dim: int = 64,
-    seed: int = 11,
-    vec_col: str = "embedding",
-    out_col: str = "projected",
+    emb: DataFrame, out_dim: int = 16, in_dim: int = 64, seed: int = 11
 ) -> DataFrame:
     """Johnson-Lindenstrauss random projection (Achlioptas 2003-style
     dense projection, components md5-derived): ``in_dim`` -> ``out_dim``
@@ -1522,26 +1452,18 @@ def random_projection(
             )
     arr = "array(" + ", ".join(terms) + ")"
     return (
-        emb.withColumn("_v", F.expr(f"cast({vec_col} as array<double>)"))
-        .withColumn(out_col, F.expr(arr))
+        emb.withColumn("_v", F.expr("cast(embedding as array<double>)"))
+        .withColumn("projected", F.expr(arr))
         .drop("_v")
     )
 
 
 def jl_shortlist_recall(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    shortlist: int = 32,
-    out_dim: int = 16,
-    seed: int = 11,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
+    emb: DataFrame, queries: DataFrame, k: int = 10, shortlist: int = 32
 ) -> DataFrame:
     """Recall report for the project->shortlist->exact-rerank ANN
     pipeline: shortlist the top ``shortlist`` corpus vectors per query
-    by cosine in the ``out_dim``-dim JL-projected space, then measure
+    by cosine in the 16-dim JL-projected space, then measure
     how many of the EXACT top-``k`` neighbors the shortlist contains.
 
     Because the exact top-k are by definition the globally
@@ -1552,21 +1474,21 @@ def jl_shortlist_recall(
     Scale shape: projection is row-local; shortlisting is the same
     broadcast-queries / per-partition-top-k plan as
     :func:`brute_force_topk`, but every dot product downstream of the
-    projection touches ``out_dim`` components instead of ``in_dim`` —
-    the 100 TB win this entry quantifies the cost of."""
-    proj_c = random_projection(emb, out_dim=out_dim, seed=seed, vec_col=vec_col)
-    proj_q = random_projection(queries, out_dim=out_dim, seed=seed, vec_col=vec_col)
+    projection touches 16 components instead of 64 — the 100 TB win
+    this entry quantifies the cost of."""
+    proj_c = random_projection(emb)
+    proj_q = random_projection(queries)
     q = proj_q.select(
-        F.col(id_col).alias("query_id"), F.col("projected").alias("qv")
+        F.col("vec_id").alias("query_id"), F.col("projected").alias("qv")
     )
     n = emb.sparkSession.sparkContext.defaultParallelism
-    c = proj_c.repartition(n, F.col(id_col)).select(
-        F.col(id_col).alias("neighbor_id"), F.col("projected").alias("cv")
+    c = proj_c.repartition(n, F.col("vec_id")).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("projected").alias("cv")
     )
     scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).select(
         "query_id",
         "neighbor_id",
-        F.round(cosine(F.col("qv"), F.col("cv")), round_to).alias("pcos"),
+        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("pcos"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("pcos"), F.asc("neighbor_id"))
     short = scored.withColumn("rank", F.row_number().over(w)).filter(
@@ -1574,9 +1496,7 @@ def jl_shortlist_recall(
     )
     # truth is |queries| x k rows and the hit counts are |queries| rows —
     # broadcast both joins so the report never plans a sort-merge join
-    truth = brute_force_topk(
-        emb, queries, k=k, id_col=id_col, vec_col=vec_col, round_to=round_to
-    ).select("query_id", "neighbor_id")
+    truth = brute_force_topk(emb, queries, k=k).select("query_id", "neighbor_id")
     hits = short.join(F.broadcast(truth), ["query_id", "neighbor_id"], "inner")
     return (
         short.groupBy("query_id")
@@ -1600,14 +1520,7 @@ def jl_shortlist_recall(
 
 
 def mmr_select(
-    emb: DataFrame,
-    query_vec: "list[float] | None" = None,
-    k: int = 8,
-    pool: int = 64,
-    seed: int = 23,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
+    emb: DataFrame, query_vec: "list[float] | None" = None, k: int = 8, pool: int = 64
 ) -> DataFrame:
     """Maximal Marginal Relevance selection (Carbonell & Goldstein,
     SIGIR 1998): greedily pick ``k`` vectors maximizing
@@ -1616,8 +1529,8 @@ def mmr_select(
     retrieval, trading pure relevance for coverage.
 
     Determinism discipline: the query vector defaults to a plan-time
-    md5-derived literal (``_plane_components`` seed ``seed``); relevance
-    and pairwise cosines are rounded to ``round_to`` dp BEFORE any
+    md5-derived literal (``_plane_components`` seed 23); relevance
+    and pairwise cosines are rounded to 6 dp BEFORE any
     comparison; the per-round score is one fixed-shape expression
     ``(rel * 0.7) - (maxsim * 0.3)`` over rounded inputs with an id
     tiebreak, so a SQL engine replays every pick exactly. (0.7/0.3 are
@@ -1632,14 +1545,14 @@ def mmr_select(
     state is k id/score rows. ``pool`` can grow to 10^6 without any
     plan change — rounds scan the checkpointed pair frame only."""
     if query_vec is None:
-        query_vec = _plane_components(1, 64, seed)[0]
+        query_vec = _plane_components(1, 64, 23)[0]
     qlit = F.expr(
         "array(" + ", ".join(f"CAST('{c!r}' AS DOUBLE)" for c in query_vec) + ")"
     )
     rel_df = emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("v"),
-        F.round(cosine(qlit, F.col(vec_col)), round_to).alias("rel"),
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").alias("v"),
+        F.round(cosine(qlit, F.col("embedding")), 6).alias("rel"),
     )
     pool_df = (
         rel_df.orderBy(F.desc("rel"), F.asc("vid")).limit(pool).localCheckpoint()
@@ -1653,7 +1566,7 @@ def mmr_select(
         .select(
             "id_a",
             "id_b",
-            F.round(cosine(F.col("va"), F.col("vb")), round_to).alias("c"),
+            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("c"),
         )
         .localCheckpoint()
     )
@@ -1699,10 +1612,7 @@ def mmr_select(
 
 
 def embedding_energy_profile(
-    emb: DataFrame,
-    dims: "tuple[int, ...]" = (4, 8, 16, 32, 64),
-    vec_col: str = "embedding",
-    round_to: int = 6,
+    emb: DataFrame, dims: "tuple[int, ...]" = (4, 8, 16, 32, 64)
 ) -> DataFrame:
     """Prefix-energy profile of an embedding column — the measurement
     behind a Matryoshka-style truncation decision (Kusupati et al. 2022,
@@ -1721,13 +1631,13 @@ def embedding_energy_profile(
     corpus mean is partition-order-free. One aggregate row out; no
     shuffle beyond the global agg's partial pair."""
     sq = lambda acc, x: acc + x.cast("double") * x.cast("double")  # noqa: E731
-    full = F.aggregate(F.col(vec_col), F.lit(0.0), sq)
+    full = F.aggregate(F.col("embedding"), F.lit(0.0), sq)
     row = emb.select(
         *[
             F.round(
-                F.aggregate(F.slice(F.col(vec_col), 1, d), F.lit(0.0), sq)
+                F.aggregate(F.slice(F.col("embedding"), 1, d), F.lit(0.0), sq)
                 / full,
-                round_to,
+                6,
             )
             .cast("decimal(38,6)")
             .alias(f"e{d}")
@@ -1741,7 +1651,7 @@ def embedding_energy_profile(
     return agg.select(
         "n_vectors",
         *[
-            F.round(F.col(f"s{d}").cast("double") / F.col("n_vectors"), round_to).alias(
+            F.round(F.col(f"s{d}").cast("double") / F.col("n_vectors"), 6).alias(
                 f"energy_d{d}"
             )
             for d in dims
@@ -1799,10 +1709,7 @@ def mrr_report(
     )
 
 
-def embedding_isotropy(
-    embeddings: DataFrame,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def embedding_isotropy(embeddings: DataFrame) -> DataFrame:
     """Isotropy health check for an embedding space: the ratio
     ‖μ‖² / E[‖x‖²] (share of total energy sitting in the common mean
     direction) plus the per-space norms — the first diagnostic for the
@@ -1816,7 +1723,7 @@ def embedding_isotropy(
     d-term assembly of ‖μ‖² quantizes each (S_d/n)² at 12dp. One
     posexplode pass, one d-sized reduction, one scalar row."""
     x = embeddings.select(
-        F.posexplode(F.col(vec_col)).alias("d", "v")
+        F.posexplode(F.col("embedding")).alias("d", "v")
     ).select(
         "d",
         F.round(F.col("v").cast("double"), 7).cast("decimal(38,7)").alias("v7"),
@@ -1856,13 +1763,7 @@ def embedding_isotropy(
 
 
 def ndcg_ivf_report(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, queries: DataFrame, k: int = 10, n_cells: int = 16, n_probe: int = 4
 ) -> DataFrame:
     """NDCG@k of the IVF path against exact brute force — the GRADED
     companion to recall@k (ann_recall_report): recall counts how many
@@ -1884,13 +1785,11 @@ def ndcg_ivf_report(
     in the oracle. Scale shape: both inputs are k-rows-per-query
     frames — everything after the two top-k operators is
     queries x k sized."""
-    truth = brute_force_topk(emb, queries, k, id_col=id_col, vec_col=vec_col)
+    truth = brute_force_topk(emb, queries, k)
     cand = ivf_topk(
         emb,
         queries,
         k,
-        id_col=id_col,
-        vec_col=vec_col,
         n_cells=n_cells,
         n_probe=n_probe,
     )
@@ -1946,12 +1845,7 @@ def ndcg_ivf_report(
 
 
 def drift_split_report(
-    emb: DataFrame,
-    n_cells: int = 8,
-    train_limit: int = 512,
-    train_iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, n_cells: int = 8, train_limit: int = 512
 ) -> DataFrame:
     """Embedding-distribution drift between two deterministic halves of
     the corpus, read through a shared coarse quantizer — the
@@ -1971,16 +1865,13 @@ def drift_split_report(
     assignment scan, a cells-sized aggregate."""
     from .clustering import _assign, lloyd_centroids
 
-    ref = emb.filter((F.col(id_col) % 2) == 0)
+    ref = emb.filter((F.col("vec_id") % 2) == 0)
     cents = lloyd_centroids(
-        ref.orderBy(id_col).limit(train_limit),
+        ref.orderBy("vec_id").limit(train_limit),
         k=n_cells,
-        iterations=train_iterations,
-        id_col=id_col,
-        vec_col=vec_col,
     )
-    assigned = _assign(emb, cents, vec_col).select(
-        ((F.col(id_col) % 2) == 0).cast("int").alias("a"),
+    assigned = _assign(emb, cents, "embedding").select(
+        ((F.col("vec_id") % 2) == 0).cast("int").alias("a"),
         F.col("cluster").alias("cell"),
     )
     counts = assigned.groupBy("cell").agg(

@@ -28,50 +28,43 @@ from pyspark.sql import functions as F
 from ..session import load_tables
 
 
-def kll_value_quantiles(
-    events: DataFrame,
-    key_col: str = "event_type",
-    val_col: str = "value",
-    k: int = 200,
-) -> DataFrame:
+def kll_value_quantiles(events: DataFrame, k: int = 200) -> DataFrame:
     """Per-key KLL(k) quantile estimates (p25/p50/p90/p99) of a double
     column. State is O(k log n) per group vs the full multiset an exact
     percentile needs — and two KLL states merge, so per-day sketches
     roll up to per-month without rescanning."""
-    sk = F.expr(f"kll_sketch_agg_double({val_col}, {k})").alias("sk")
-    agg = events.groupBy(key_col).agg(sk, F.count(F.lit(1)).alias("n_rows"))
+    sk = F.expr(f"kll_sketch_agg_double(value, {k})").alias("sk")
+    agg = events.groupBy("event_type").agg(sk, F.count(F.lit(1)).alias("n_rows"))
     q = "kll_sketch_get_quantile_double(sk, array(0.25D, 0.5D, 0.9D, 0.99D))"
     return (
         agg.select(
-            key_col,
+            "event_type",
             "n_rows",
             F.expr(q).alias("qs"),
         )
         .select(
-            key_col,
+            "event_type",
             "n_rows",
             F.round(F.col("qs")[0], 4).alias("p25"),
             F.round(F.col("qs")[1], 4).alias("p50"),
             F.round(F.col("qs")[2], 4).alias("p90"),
             F.round(F.col("qs")[3], 4).alias("p99"),
         )
-        .orderBy(key_col)
+        .orderBy("event_type")
     )
 
 
-def theta_user_overlap(
-    events: DataFrame, key_col: str = "event_type", id_col: str = "user_id"
-) -> DataFrame:
+def theta_user_overlap(events: DataFrame) -> DataFrame:
     """Pairwise audience-overlap estimates via theta sketches: one
     sketch per key (single scan), then intersection cardinality for
     every key pair — the set-algebra question exact COUNT(DISTINCT)
     can only answer with a self-join per pair. The pair join here is
     sketch x sketch (bytes), not data x data."""
-    sks = events.groupBy(key_col).agg(
-        F.expr(f"theta_sketch_agg({id_col})").alias("sk")
+    sks = events.groupBy("event_type").agg(
+        F.expr("theta_sketch_agg(user_id)").alias("sk")
     )
-    a = sks.select(F.col(key_col).alias("type_a"), F.col("sk").alias("sk_a"))
-    b = sks.select(F.col(key_col).alias("type_b"), F.col("sk").alias("sk_b"))
+    a = sks.select(F.col("event_type").alias("type_a"), F.col("sk").alias("sk_a"))
+    b = sks.select(F.col("event_type").alias("type_b"), F.col("sk").alias("sk_b"))
     return (
         a.join(b, F.col("type_a") < F.col("type_b"))
         .select(
@@ -87,20 +80,18 @@ def theta_user_overlap(
     )
 
 
-def heavy_users_topk(
-    events: DataFrame, id_col: str = "user_id", k: int = 10
-) -> DataFrame:
+def heavy_users_topk(events: DataFrame, k: int = 10) -> DataFrame:
     """approx_top_k heavy hitters: bounded sketch state instead of a
     full groupBy over the key universe. Returns (item, estimated
     count) rows."""
-    top = events.agg(F.expr(f"approx_top_k({id_col}, {k})").alias("t"))
+    top = events.agg(F.expr(f"approx_top_k(user_id, {k})").alias("t"))
     return (
         top.select(F.explode("t").alias("e"))
         .select(
-            F.col("e.item").alias(id_col),
+            F.col("e.item").alias("user_id"),
             F.col("e.count").cast("long").alias("est_count"),
         )
-        .orderBy(F.desc("est_count"), id_col)
+        .orderBy(F.desc("est_count"), "user_id")
     )
 
 

@@ -10,17 +10,17 @@ from pyspark.sql.window import Window
 from ..functions import text as T
 
 
-def analyze_documents(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def analyze_documents(docs: DataFrame) -> DataFrame:
     """One-scan text profile: token counts, punctuation/stopword ratios,
     language guess, quality score, fingerprint. All codegen'd Column
     expressions — the scan cost IS the operator cost at 100 TB."""
-    t = F.col(text_col)
+    t = F.col("text")
     # repartition first: a compacted single-file input would pin all the
     # string work to one core (same rationale + explicit-count caveat as
     # dedup._spread: AQE would coalesce a bare repartition(col) back)
-    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
+    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, F.col("doc_id"))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         T.whitespace_token_count(t).cast("long").alias("n_tokens_ws"),
         T.regex_token_count(t).cast("long").alias("n_tokens_re"),
         T.punct_ratio(t).alias("punct_ratio"),
@@ -31,9 +31,7 @@ def analyze_documents(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
     )
 
 
-def repetition_stats(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 2
-) -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document: ``top_frac`` (share
     of n-gram occurrences taken by the single most frequent n-gram) and
     ``dup_frac`` (share of occurrences that are repeats). Boilerplate
@@ -50,24 +48,18 @@ def repetition_stats(
     # run on a compacted scan's few partitions, and the gram transform
     # must not re-split the text per element
     grams = (
-        _spread(docs, id_col)
-        .select(F.col(id_col), F.split(F.lower(F.col(text_col)), " ").alias("w"))
-        .select(F.col(id_col), F.explode(word_ngrams_of(F.col("w"), n)).alias("g"))
+        _spread(docs, "doc_id")
+        .select(F.col("doc_id"), F.split(F.lower(F.col("text")), " ").alias("w"))
+        .select(F.col("doc_id"), F.explode(word_ngrams_of(F.col("w"))).alias("g"))
     )
-    per_gram = grams.groupBy(id_col, "g").agg(F.count(F.lit(1)).alias("c"))
-    return per_gram.groupBy(id_col).agg(
+    per_gram = grams.groupBy("doc_id", "g").agg(F.count(F.lit(1)).alias("c"))
+    return per_gram.groupBy("doc_id").agg(
         (F.max("c").cast("double") / F.sum("c")).alias("top_frac"),
         ((F.sum("c") - F.count(F.lit(1))).cast("double") / F.sum("c")).alias("dup_frac"),
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    k: int = 8,
-    w: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03): hash every character k-gram, slide a w-window over the
     hash sequence, keep each window's minimum — the selected minima are
@@ -89,7 +81,7 @@ def winnow_fingerprints(
     the row, and that output is already per-doc unique. Per-row cost is
     O(len·w) with an O(len) array held per row — bound document length
     upstream (chunk or truncate) if a corpus carries multi-MB docs."""
-    lowered = F.lower(F.col(text_col))
+    lowered = F.lower(F.col("text"))
     n_grams = F.length(lowered) - (k - 1)
 
     def _span(stop):  # sequence(1, stop), empty when stop < 1 (sequence descends!)
@@ -117,19 +109,14 @@ def winnow_fingerprints(
     # the old explode+sort-window's full k-gram shuffle.
     n = docs.sparkSession.sparkContext.defaultParallelism
     return (
-        docs.repartition(n, F.col(id_col))
-        .select(F.col(id_col), hashes.alias("__h"))
-        .select(F.col(id_col), F.explode(fps).alias("fp"))
+        docs.repartition(n, F.col("doc_id"))
+        .select(F.col("doc_id"), hashes.alias("__h"))
+        .select(F.col("doc_id"), F.explode(fps).alias("fp"))
     )
 
 
 def winnow_overlap_pairs(
-    docs: DataFrame,
-    k: int = 8,
-    w: int = 4,
-    min_shared: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, k: int = 8, w: int = 4, min_shared: int = 2
 ) -> DataFrame:
     """Partial-overlap candidate pairs: docs sharing >= ``min_shared``
     winnowing fingerprints — the copy/quotation detector (MOSS-style)
@@ -140,12 +127,12 @@ def winnow_overlap_pairs(
     proportionally smaller; fingerprints shared by huge doc sets are the
     same skew risk as hot shingles (drop them upstream with a frequency
     cap if the corpus has boilerplate)."""
-    fps = winnow_fingerprints(docs, k=k, w=w, id_col=id_col, text_col=text_col)
+    fps = winnow_fingerprints(docs, k=k, w=w)
     # cached: both self-join sides consume fps; uncached, the md5 k-gram
     # + window-min array pass runs twice
     fps = fps.cache()
-    a = fps.select(F.col(id_col).alias("id_a"), "fp")
-    b = fps.select(F.col(id_col).alias("id_b"), "fp")
+    a = fps.select(F.col("doc_id").alias("id_a"), "fp")
+    b = fps.select(F.col("doc_id").alias("id_b"), "fp")
     return (
         a.join(b, "fp")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -155,12 +142,7 @@ def winnow_overlap_pairs(
     )
 
 
-def tfidf_top_terms(
-    docs: DataFrame,
-    top_k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, top_k: int = 3) -> DataFrame:
     """Top-k characteristic terms per document by TF-IDF (ln-smoothed:
     tf * ln(N / df)) — keyword extraction / topic labeling.
 
@@ -171,9 +153,9 @@ def tfidf_top_terms(
     ranking so Spark's and DuckDB's ln() agree through the rank despite
     last-ulp libm differences, with (term) as the total tiebreak."""
     words = docs.select(
-        F.col(id_col), F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("term")
+        F.col("doc_id"), F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
     ).filter(F.col("term") != "")
-    tf = words.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = words.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     # lazy scalar N (no driver-side count action): 1-row aggregate,
     # broadcast into the df table
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
@@ -185,19 +167,15 @@ def tfidf_top_terms(
     scored = tf.join(F.broadcast(df_), "term").withColumn(
         "score", F.round(F.col("tf") * F.log(F.col("n_docs") / F.col("df")), 9)
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= top_k)
-        .select(id_col, "term", "score", "rk")
+        .select("doc_id", "term", "score", "rk")
     )
 
 
-def unigram_logprob_scores(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def unigram_logprob_scores(docs: DataFrame) -> DataFrame:
     """Unigram language-model quality score (KenLM-lite): pass 1 builds
     corpus token frequencies, pass 2 scores each doc by the mean ln
     probability of its tokens. Low scores flag gibberish / OCR noise /
@@ -212,8 +190,8 @@ def unigram_logprob_scores(
     shuffles on the doc id once. Mean ln p is rounded to 6 decimals so
     the float sum is stable across engines and partition orders."""
     toks = docs.select(
-        F.col(id_col),
-        F.explode(T.word_tokens(F.col(text_col))).alias("token"),
+        F.col("doc_id"),
+        F.explode(T.word_tokens(F.col("text"))).alias("token"),
     )
     freqs = toks.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
     total = freqs.agg(F.sum("c").alias("n")).select("n")
@@ -222,22 +200,16 @@ def unigram_logprob_scores(
     )
     return (
         toks.join(F.broadcast(logp), "token")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.round(F.avg("lp"), 6).alias("logprob_mean"),
         )
-        .orderBy(id_col)
+        .orderBy("doc_id")
     )
 
 
-def source_quality_report(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    lang_col: str = "lang",
-) -> DataFrame:
+def source_quality_report(docs: DataFrame) -> DataFrame:
     """Per-source corpus health report: document count, exact-duplicate
     rate (via content fingerprints), language breadth, and size stats —
     the triage view that decides which crawl/source to up- or
@@ -245,10 +217,12 @@ def source_quality_report(
     distinct-fingerprint count piggybacks per-source)."""
     return (
         docs.select(
-            F.col(source_col).alias("source"),
-            F.col(lang_col).alias("lang"),
-            F.length(F.col(text_col)).alias("len"),
-            T.fingerprint(F.col(text_col)).alias("fp"),
+            # fresh attributes: the distinct-aggregate rewrite below orders
+            # its Expand groups by attribute id, so these pin the plan
+            F.col("source").alias("source"),
+            F.col("lang").alias("lang"),
+            F.length(F.col("text")).alias("len"),
+            T.fingerprint(F.col("text")).alias("fp"),
         )
         .groupBy("source")
         .agg(
@@ -268,11 +242,7 @@ def source_quality_report(
 
 
 def pmi_collocations(
-    docs: DataFrame,
-    min_count: int = 10,
-    top_k: int = 30,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, min_count: int = 10, top_k: int = 30
 ) -> DataFrame:
     """Top-k collocations by pointwise mutual information over adjacent
     token pairs — the statistical phrase detector used for tokenizer
@@ -285,7 +255,7 @@ def pmi_collocations(
     counts); the tiny unigram table broadcasts back onto bigrams. The
     score is rounded to 6 decimals BEFORE ranking (rank-stable across
     engines despite last-ulp ln differences), pair text as tiebreak."""
-    tk = T.word_tokens(F.col(text_col))
+    tk = T.word_tokens(F.col("text"))
     base = docs.select(tk.alias("tk")).filter(F.size("tk") >= 1)
     uni = (
         base.select(F.explode("tk").alias("w"))
@@ -329,7 +299,7 @@ def pmi_collocations(
     return scored.orderBy(F.desc("pmi"), "bigram").limit(top_k)
 
 
-def quality_filter_observed(docs: DataFrame, text_col: str = "text"):
+def quality_filter_observed(docs: DataFrame):
     """Gopher quality gate with FREE runtime metrics: ``df.observe``
     attaches (n_rows, n_pass) accumulators to the scan itself, so the
     pipeline learns its own pass rate from the one pass it was already
@@ -341,7 +311,7 @@ def quality_filter_observed(docs: DataFrame, text_col: str = "text"):
     from pyspark.sql import Observation
 
     obs = Observation("quality_filter")
-    ok = T.gopher_pass(F.col(text_col))
+    ok = T.gopher_pass(F.col("text"))
     observed = docs.observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
@@ -350,12 +320,7 @@ def quality_filter_observed(docs: DataFrame, text_col: str = "text"):
     return observed.filter(ok), obs
 
 
-def bigram_logprob_scores(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: float = 0.5,
-) -> DataFrame:
+def bigram_logprob_scores(docs: DataFrame, k: float = 0.5) -> DataFrame:
     """Bigram language-model quality score with add-k smoothing: pass 1
     builds corpus bigram + unigram counts, pass 2 scores each doc by the
     mean ln P(w2|w1) = ln((c(w1 w2)+k) / (c(w1)+k·V)) over its adjacent
@@ -376,11 +341,11 @@ def bigram_logprob_scores(
     per-doc aggregation shuffles once on the doc id. Docs with fewer
     than two valid tokens have no transitions and are excluded, like
     the unigram scorer excludes token-free docs."""
-    words = T.word_tokens(F.col(text_col))
+    words = T.word_tokens(F.col("text"))
     sess = docs.sparkSession
     toks = (
-        docs.repartition(sess.sparkContext.defaultParallelism, F.col(id_col))
-        .select(F.col(id_col), words.alias("ws"))
+        docs.repartition(sess.sparkContext.defaultParallelism, F.col("doc_id"))
+        .select(F.col("doc_id"), words.alias("ws"))
         .cache()
     )
     n = F.size(F.col("ws"))
@@ -393,7 +358,7 @@ def bigram_logprob_scores(
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    doc_bigrams = toks.select(F.col(id_col), F.explode(pairs).alias("bg"))
+    doc_bigrams = toks.select(F.col("doc_id"), F.explode(pairs).alias("bg"))
     bc = doc_bigrams.groupBy("bg").agg(F.count(F.lit(1)).alias("cb"))
     uc = (
         toks.select(F.explode("ws").alias("w"))
@@ -414,21 +379,16 @@ def bigram_logprob_scores(
     )
     return (
         doc_bigrams.join(scored, "bg")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             F.round(F.avg("lp"), 6).alias("bigram_logprob_mean"),
         )
-        .orderBy(id_col)
+        .orderBy("doc_id")
     )
 
 
-def kneser_ney_scores(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    discount: float = 0.75,
-) -> DataFrame:
+def kneser_ney_scores(docs: DataFrame) -> DataFrame:
     """Interpolated Kneser-Ney bigram fluency score (Kneser & Ney 1995;
     Chen & Goodman 1999 §2.7) — the smoothing that backs off to how many
     CONTEXTS a word follows rather than how often it occurs, so "san
@@ -451,11 +411,11 @@ def kneser_ney_scores(
     touches per-instance rows; the doc join shuffles doc bigrams
     against the scored vocab table once. All terms are integer counts —
     the DuckDB oracle replays the identical formula exactly."""
-    words = T.word_tokens(F.col(text_col))
+    words = T.word_tokens(F.col("text"))
     sess = docs.sparkSession
     toks = (
-        docs.repartition(sess.sparkContext.defaultParallelism, F.col(id_col))
-        .select(F.col(id_col), words.alias("ws"))
+        docs.repartition(sess.sparkContext.defaultParallelism, F.col("doc_id"))
+        .select(F.col("doc_id"), words.alias("ws"))
         .cache()
     )
     n = F.size(F.col("ws"))
@@ -468,7 +428,7 @@ def kneser_ney_scores(
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    doc_bigrams = toks.select(F.col(id_col), F.explode(pairs).alias("bg"))
+    doc_bigrams = toks.select(F.col("doc_id"), F.explode(pairs).alias("bg"))
     bc = doc_bigrams.groupBy("bg").agg(F.count(F.lit(1)).alias("cb"))
     split = F.split(F.col("bg"), " ")
     typed = bc.select(
@@ -479,7 +439,7 @@ def kneser_ney_scores(
     )
     right = typed.groupBy("w2").agg(F.count(F.lit(1)).alias("bw"))
     btypes = typed.agg(F.count(F.lit(1)).alias("b"))
-    d = F.lit(discount)
+    d = F.lit(0.75)
     scored = (
         typed.join(F.broadcast(left), "w1")
         .join(F.broadcast(right), "w2")
@@ -494,21 +454,16 @@ def kneser_ney_scores(
     )
     return (
         doc_bigrams.join(scored, "bg")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             F.round(F.avg("lp"), 6).alias("kn_logprob_mean"),
         )
-        .orderBy(id_col)
+        .orderBy("doc_id")
     )
 
 
-def vocab_coverage(
-    docs: DataFrame,
-    text_col: str = "text",
-    group_col: str = "lang",
-    mass: float = 0.9,
-) -> DataFrame:
+def vocab_coverage(docs: DataFrame, mass: float = 0.9) -> DataFrame:
     """Vocabulary concentration per group: how many distinct tokens does
     it take to cover ``mass`` of the token occurrences — the tokenizer-
     budget / vocab-truncation planning number (a tight core vocab means
@@ -521,8 +476,8 @@ def vocab_coverage(
     token tiebreak) — bounded by distinct tokens, not corpus size, the
     acceptable low-cardinality-partition exception."""
     toks = docs.select(
-        F.col(group_col).alias("grp"),
-        F.explode(T.word_tokens(F.col(text_col))).alias("token"),
+        F.col("lang").alias("grp"),
+        F.explode(T.word_tokens(F.col("text"))).alias("token"),
     )
     counts = toks.groupBy("grp", "token").agg(F.count(F.lit(1)).alias("c"))
     w = (
@@ -549,25 +504,19 @@ def vocab_coverage(
             "grp",
         )
         .select(
-            F.col("grp").alias(group_col),
+            F.col("grp").alias("lang"),
             "n_vocab",
             "n_core_tokens",
             "covered_mass",
         )
-        .orderBy(group_col)
+        .orderBy("lang")
     )
 
 
-def char_entropy_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str = "lang",
-    low_bits: float = 3.0,
-) -> DataFrame:
+def char_entropy_stats(docs: DataFrame) -> DataFrame:
     """Per-group character-entropy quality screen: Shannon entropy
     (bits) of each document's character distribution, aggregated to
-    (avg, min, max, count below ``low_bits``). Natural text sits around
+    (avg, min, max, count below 3 bits). Natural text sits around
     4 bits/char; binary spew, repeated padding, and template boilerplate
     score far lower -- a standard cheap pre-filter before tokenization.
 
@@ -580,7 +529,7 @@ def char_entropy_stats(
     corpus size -- the shape that survives 100 TB. (A token-level
     entropy would have unbounded per-doc distinct counts; that variant
     belongs on the explode + two-shuffle path instead.)"""
-    chars = F.filter(F.split(F.lower(F.col(text_col)), ""), lambda c: c != "")
+    chars = F.filter(F.split(F.lower(F.col("text")), ""), lambda c: c != "")
     n = F.size(chars)
     distinct = F.array_distinct(chars)
     counts = F.transform(distinct, lambda c: F.size(F.filter(chars, lambda x: x == c)))
@@ -592,12 +541,12 @@ def char_entropy_stats(
     ) + F.lit(0.0)
     sess = docs.sparkSession
     per_doc = (
-        docs.repartition(sess.sparkContext.defaultParallelism, F.col(id_col))
+        docs.repartition(sess.sparkContext.defaultParallelism, F.col("doc_id"))
         # empty/NULL texts have no character distribution: exclude them,
         # matching the oracle's unnest (which emits no rows for them) —
         # n_docs therefore counts docs WITH text
         .filter(F.size(chars) > 0)
-        .select(F.col(group_col).alias("grp"), entropy.alias("h"))
+        .select(F.col("lang").alias("grp"), entropy.alias("h"))
     )
     return (
         per_doc.groupBy("grp")
@@ -606,34 +555,28 @@ def char_entropy_stats(
             F.round(F.avg("h"), 6).alias("avg_entropy_bits"),
             F.round(F.min("h"), 6).alias("min_entropy_bits"),
             F.round(F.max("h"), 6).alias("max_entropy_bits"),
-            F.sum((F.col("h") < low_bits).cast("long")).alias("n_low_entropy"),
+            F.sum((F.col("h") < 3.0).cast("long")).alias("n_low_entropy"),
         )
         .select(
-            F.col("grp").alias(group_col),
+            F.col("grp").alias("lang"),
             "n_docs",
             "avg_entropy_bits",
             "min_entropy_bits",
             "max_entropy_bits",
             "n_low_entropy",
         )
-        .orderBy(group_col)
+        .orderBy("lang")
     )
 
 
 def bm25_topk(
-    docs: DataFrame,
-    queries: list[tuple[str, list[str]]],
-    k: int = 5,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, queries: list[tuple[str, list[str]]], k: int = 5
 ) -> DataFrame:
     """BM25 retrieval scoring: rank documents for each named query (a
     bag of terms) with the Robertson/Sparck-Jones formula —
     idf(t) * tf * (k1+1) / (tf + k1 * (1 - b + b * |d|/avgdl)), with
-    idf(t) = ln(1 + (N - df + 0.5) / (df + 0.5)). Returns the top-k
-    (query, doc, score) rows per query.
+    k1 = 1.2, b = 0.75 and idf(t) = ln(1 + (N - df + 0.5) / (df + 0.5)).
+    Returns the top-k (query, doc, score) rows per query.
 
     Scale shape: ONE tokenize+explode pass builds (doc, term, tf) for
     query terms ONLY (the term filter is a broadcast semi-join, so the
@@ -648,62 +591,58 @@ def bm25_topk(
         "query string, term string",  # explicit: empty query sets are legal
     )
     words = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != ""
+        F.split(F.lower(F.col("text")), r"\s+"), lambda w: w != ""
     )
     toks = (
-        docs.repartition(sess.sparkContext.defaultParallelism, F.col(id_col))
-        .select(F.col(id_col), words.alias("ws"))
+        docs.repartition(sess.sparkContext.defaultParallelism, F.col("doc_id"))
+        .select(F.col("doc_id"), words.alias("ws"))
         .cache()
     )
-    lens = toks.select(F.col(id_col), F.size("ws").alias("dl"))
+    lens = toks.select(F.col("doc_id"), F.size("ws").alias("dl"))
     stats = lens.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
     )
     tf = (
-        toks.select(F.col(id_col), F.explode("ws").alias("term"))
+        toks.select(F.col("doc_id"), F.explode("ws").alias("term"))
         .join(F.broadcast(qt.select("term").distinct()), "term", "left_semi")
-        .groupBy(id_col, "term")
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = (
         tf.join(F.broadcast(qt), "term")
         .join(F.broadcast(df_), "term")
-        .join(lens, id_col)
+        .join(lens, "doc_id")
         .crossJoin(F.broadcast(stats))
         .select(
             "query",
-            F.col(id_col),
+            F.col("doc_id"),
             (
                 F.log(
                     1.0
                     + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
                 )
                 * F.col("tf")
-                * (k1 + 1)
+                * (1.2 + 1)
                 / (
                     F.col("tf")
-                    + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+                    + 1.2 * (1 - 0.75 + 0.75 * F.col("dl") / F.col("avgdl"))
                 )
             ).alias("s"),
         )
-        .groupBy("query", id_col)
+        .groupBy("query", "doc_id")
         .agg(F.round(F.sum("s"), 6).alias("score"))
     )
-    w = Window.partitionBy("query").orderBy(F.desc("score"), F.col(id_col))
+    w = Window.partitionBy("query").orderBy(F.desc("score"), F.col("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query", id_col, "score", "rank")
+        .select("query", "doc_id", "score", "rank")
         .orderBy("query", "rank")
     )
 
 
-def zipf_fit(
-    docs: DataFrame,
-    text_col: str = "text",
-    round_to: int = 4,
-) -> DataFrame:
+def zipf_fit(docs: DataFrame) -> DataFrame:
     """Zipf-law fit over the corpus token-frequency distribution: OLS of
     ln(count) on ln(rank), returning the slope (healthy natural-language
     corpora sit near -1), intercept, and R². A corpus whose slope drifts
@@ -726,11 +665,11 @@ def zipf_fit(
     get distinct ranks via the token tie-break, which leaves the fitted
     line unchanged — equal counts contribute the same y for whichever
     rank permutation — so the result is deterministic. Rounded to
-    ``round_to`` (4) decimals so moment-sum ordering differences across
+    4 decimals so moment-sum ordering differences across
     engines cannot flip a rounding boundary."""
     from .curation import global_rank
 
-    toks = docs.select(F.explode(T.word_tokens(F.col(text_col))).alias("token"))
+    toks = docs.select(F.explode(T.word_tokens(F.col("text"))).alias("token"))
     freqs = toks.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
     ranked = global_rank(
         freqs, [F.desc("c"), F.asc("token")], rank_col="rank"
@@ -739,19 +678,13 @@ def zipf_fit(
     return ranked.agg(
         F.count(F.lit(1)).alias("vocab_size"),
         F.sum("c").alias("total_tokens"),
-        F.round(F.regr_slope(ln_c, ln_r), round_to).alias("zipf_slope"),
-        F.round(F.regr_intercept(ln_c, ln_r), round_to).alias("zipf_intercept"),
-        F.round(F.regr_r2(ln_c, ln_r), round_to).alias("r2"),
+        F.round(F.regr_slope(ln_c, ln_r), 4).alias("zipf_slope"),
+        F.round(F.regr_intercept(ln_c, ln_r), 4).alias("zipf_intercept"),
+        F.round(F.regr_r2(ln_c, ln_r), 4).alias("r2"),
     )
 
 
-def skipgram_pairs(
-    docs: DataFrame,
-    window: int = 2,
-    top_k: int = 100,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def skipgram_pairs(docs: DataFrame, window: int = 2, top_k: int = 100) -> DataFrame:
     """Skip-gram co-occurrence counts — the (center, context) pair
     statistics a word2vec/GloVe-style embedding trainer consumes: for
     every token at position i, count each token at positions
@@ -770,8 +703,8 @@ def skipgram_pairs(
     # tokenize-once: the HOF lambdas below must reference a materialized
     # array column, not the split expression itself (no CSE inside
     # lambdas — see dedup._shingles)
-    toks = _spread(docs, id_col).select(
-        F.col(id_col), T.word_tokens(F.col(text_col)).alias("w")
+    toks = _spread(docs, "doc_id").select(
+        F.col("doc_id"), T.word_tokens(F.col("text")).alias("w")
     )
     w = F.col("w")
     pairs = F.flatten(
@@ -794,22 +727,17 @@ def skipgram_pairs(
 
 
 def tf_cosine_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    max_df: int = 100,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, threshold: float = 0.5, max_df: int = 100
 ) -> DataFrame:
     """Sparse shingle-frequency cosine similarity join: document pairs
-    whose raw-tf bag-of-``n``-gram vectors (over shingles with document
+    whose raw-tf bag-of-3-gram vectors (over shingles with document
     frequency <= ``max_df``) have cosine >= ``threshold`` — the
     WEIGHTED-vector near-duplicate detector that complements the
     set-overlap family (Jaccard/MinHash/SimHash counts each shingle
     once; this keeps multiplicities, so templated repetition and
     length asymmetry score differently).
 
-    Shape: tokenize ONCE, build word ``n``-grams in-row
+    Shape: tokenize ONCE, build word 3-grams in-row
     (``word_ngrams_of`` — no re-split per gram), hash each gram to a
     48-bit md5-derived BIGINT (the dedup family's oracle-replayable
     hash — every downstream shuffle and join carries an 8-byte key
@@ -838,13 +766,13 @@ def tf_cosine_pairs(
         F.substring(F.md5(F.col("g").cast("binary")), 1, 12), 16, 10
     ).cast("long")
     toks = (
-        _spread(docs, id_col)
-        .select(F.col(id_col), T.word_tokens(F.col(text_col)).alias("w"))
-        .filter(F.size("w") >= n)
-        .select(F.col(id_col), F.explode(word_ngrams_of(F.col("w"), n)).alias("g"))
-        .select(F.col(id_col), gram_hash.alias("term"))
+        _spread(docs, "doc_id")
+        .select(F.col("doc_id"), T.word_tokens(F.col("text")).alias("w"))
+        .filter(F.size("w") >= 3)
+        .select(F.col("doc_id"), F.explode(word_ngrams_of(F.col("w"), 3)).alias("g"))
+        .select(F.col("doc_id"), gram_hash.alias("term"))
     )
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     # df CAP as a broadcast ANTI-join on the HOT-term set, not a
     # count-over-term window: the window forced every posting of a
     # hot gram (df >> max_df) to co-locate in a single window task
@@ -861,7 +789,7 @@ def tf_cosine_pairs(
         .filter(F.col("_df") > max_df)
         .select("term")
     )
-    w_doc = Window.partitionBy(id_col)
+    w_doc = Window.partitionBy("doc_id")
     tfn = (
         tf.join(F.broadcast(hot), "term", "left_anti")
         # norms cover the SAME capped gram space as before (the cap
@@ -882,7 +810,7 @@ def tf_cosine_pairs(
         tfn.groupBy("term")
         .agg(
             F.array_sort(
-                F.collect_list(F.struct(F.col(id_col).alias("id"), "tf", "nrm"))
+                F.collect_list(F.struct(F.col("doc_id").alias("id"), "tf", "nrm"))
             ).alias("post")
         )
         .select("post")
@@ -928,13 +856,7 @@ def tf_cosine_pairs(
     )
 
 
-def gopher_repetition_signals(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    top_ns: "tuple[int, ...]" = (2, 3, 4),
-    dup_ns: "tuple[int, ...]" = (5, 10),
-) -> DataFrame:
+def gopher_repetition_signals(docs: DataFrame) -> DataFrame:
     """The multi-n Gopher repetition table (Rae et al. 2021, Table A1)
     as one frame of per-(doc, n) INTEGER signals: ``top_chars`` (chars
     covered by the single most frequent word n-gram = count x gram
@@ -954,11 +876,11 @@ def gopher_repetition_signals(
     from ..functions.text import word_ngrams_of
     from .dedup import _spread
 
-    ns = sorted(set(top_ns) | set(dup_ns))
-    base = _spread(docs, id_col).select(
-        F.col(id_col),
-        F.length(F.col(text_col)).alias("n_text_chars"),
-        F.split(F.lower(F.col(text_col)), " ").alias("w"),
+    ns = [2, 3, 4, 5, 10]  # top-gram signals read n = 2..4, dup-gram n = 5, 10
+    base = _spread(docs, "doc_id").select(
+        F.col("doc_id"),
+        F.length(F.col("text")).alias("n_text_chars"),
+        F.split(F.lower(F.col("text")), " ").alias("w"),
     )
     def _tag(n: int):
         # NB: the lambda must be unary — a second (defaulted) parameter
@@ -971,17 +893,17 @@ def gopher_repetition_signals(
         )
     )
     grams = base.select(
-        F.col(id_col), "n_text_chars", F.explode(tagged).alias("t")
+        F.col("doc_id"), "n_text_chars", F.explode(tagged).alias("t")
     ).select(
-        F.col(id_col), "n_text_chars", F.col("t.n").alias("n"), F.col("t.g").alias("g")
+        F.col("doc_id"), "n_text_chars", F.col("t.n").alias("n"), F.col("t.g").alias("g")
     )
-    per_gram = grams.groupBy(id_col, "n_text_chars", "n", "g").agg(
+    per_gram = grams.groupBy("doc_id", "n_text_chars", "n", "g").agg(
         F.count(F.lit(1)).alias("c")
     )
-    w = Window.partitionBy(id_col, "n").orderBy(F.desc("c"), F.asc("g"))
+    w = Window.partitionBy("doc_id", "n").orderBy(F.desc("c"), F.asc("g"))
     return (
         per_gram.withColumn("_rk", F.row_number().over(w))
-        .groupBy(id_col, "n_text_chars", "n")
+        .groupBy("doc_id", "n_text_chars", "n")
         .agg(
             F.max(
                 F.when(F.col("_rk") == 1, F.col("c") * F.length("g"))
@@ -994,13 +916,8 @@ def gopher_repetition_signals(
     )
 
 
-def gopher_repetition_report(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str = "source",
-) -> DataFrame:
-    """Per-``group_col`` Gopher repetition gate: corpus character-mass
+def gopher_repetition_report(docs: DataFrame) -> DataFrame:
+    """Per-``source`` Gopher repetition gate: corpus character-mass
     fractions for the top-{2,3,4}-gram signals, occurrence fractions
     for the dup-{5,10}-gram signals, and how many documents fail ANY of
     the paper's thresholds (top2 > 0.20, top3 > 0.18, top4 > 0.16,
@@ -1009,7 +926,7 @@ def gopher_repetition_report(
     every fraction is a single division of two exact integer sums — the
     whole report is bit-deterministic by construction, not by rounding
     discipline."""
-    sig = gopher_repetition_signals(docs, id_col, text_col)
+    sig = gopher_repetition_signals(docs)
 
     def pull(n: int, col: str):
         return F.coalesce(
@@ -1022,12 +939,12 @@ def gopher_repetition_report(
         # left-join's null side would zero its denominator (diverging
         # from the oracle, which always uses length(text))
         docs.select(
-            F.col(id_col),
-            F.col(group_col).alias("grp"),
-            F.length(F.col(text_col)).alias("doc_chars"),
+            F.col("doc_id"),
+            F.col("source").alias("grp"),
+            F.length(F.col("text")).alias("doc_chars"),
         )
-        .join(sig, id_col, "left")
-        .groupBy(id_col, "grp")
+        .join(sig, "doc_id", "left")
+        .groupBy("doc_id", "grp")
         .agg(
             F.max("doc_chars").alias("chars"),
             pull(2, "top_chars").alias("t2"),
@@ -1058,7 +975,7 @@ def gopher_repetition_report(
         )
 
     return (
-        per_doc.groupBy(F.col("grp").alias(group_col))
+        per_doc.groupBy(F.col("grp").alias("source"))
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(repetitive.cast("long")).alias("n_repetitive"),
@@ -1068,18 +985,13 @@ def gopher_repetition_report(
             frac("d5", "tot5").alias("dup5_occ_frac"),
             frac("d10", "tot10").alias("dup10_occ_frac"),
         )
-        .orderBy(group_col)
+        .orderBy("source")
     )
 
 
-def heaps_curve(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    buckets: int = 10,
-) -> DataFrame:
+def heaps_curve(docs: DataFrame, buckets: int = 10) -> DataFrame:
     """Heaps'-law vocabulary-growth curve: stream the corpus in
-    ``id_col`` order, checkpoint after each tenth (``buckets``), and
+    ``doc_id`` order, checkpoint after each tenth (``buckets``), and
     report cumulative token count and cumulative DISTINCT vocabulary —
     the saturation diagnostic that says whether more of the same data
     still buys new vocabulary (the complement of the Zipf rank-frequency
@@ -1102,10 +1014,10 @@ def heaps_curve(
     from .curation import global_rank
 
     toks = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(word_tokens(F.col(text_col))).alias("word"),
+        F.col("doc_id").alias("doc"),
+        F.explode(word_tokens(F.col("text"))).alias("word"),
     )
-    ids = docs.select(F.col(id_col).alias("doc"))
+    ids = docs.select(F.col("doc_id").alias("doc"))
     tot = ids.agg(F.count(F.lit(1)).alias("nn"))
     bucket_of = (
         global_rank(ids, [F.col("doc")], rank_col="rk")
@@ -1144,11 +1056,7 @@ def heaps_curve(
     ).orderBy("bucket")
 
 
-def source_kl_matrix(
-    docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def source_kl_matrix(docs: DataFrame) -> DataFrame:
     """Pairwise KL divergence between per-source add-1-smoothed unigram
     language models — the domain-similarity matrix behind data-selection
     (Moore & Lewis 2010 score corpora by exactly this cross-entropy
@@ -1173,8 +1081,8 @@ def source_kl_matrix(
     replays the same decomposition, keeping float-sum magnitudes (and
     thus cross-engine ulp drift) identical."""
     toks = docs.select(
-        F.col(source_col).alias("s"),
-        F.explode(T.word_tokens(F.col(text_col))).alias("w"),
+        F.col("source").alias("s"),
+        F.explode(T.word_tokens(F.col("text"))).alias("w"),
     )
     counts = toks.groupBy("s", "w").agg(F.count(F.lit(1)).alias("c")).cache()
     v = counts.agg(F.countDistinct("w").alias("v"))
@@ -1254,11 +1162,7 @@ def source_kl_matrix(
 
 
 def blocklist_report(
-    docs: DataFrame,
-    terms: "list[str]",
-    source_col: str = "source",
-    text_col: str = "text",
-    max_hits: int = 2,
+    docs: DataFrame, terms: "list[str]", max_hits: int = 2
 ) -> DataFrame:
     """Per-source blocklist screening: exact-token matches against a
     literal term list, counted WITH multiplicity in-row, and a doc is
@@ -1277,11 +1181,11 @@ def blocklist_report(
     lit_terms = F.array(*[F.lit(t) for t in terms])
     hits = F.size(
         F.filter(
-            T.word_tokens(F.col(text_col)),
+            T.word_tokens(F.col("text")),
             lambda w: F.array_contains(lit_terms, w),
         )
     )
-    h = docs.select(F.col(source_col).alias("source"), hits.alias("hits"))
+    h = docs.select(F.col("source").alias("source"), hits.alias("hits"))
     q = (F.col("hits") > max_hits).cast("bigint")
     return (
         h.groupBy("source")
@@ -1295,12 +1199,7 @@ def blocklist_report(
     )
 
 
-def lexical_diversity(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk: int = 25,
-) -> DataFrame:
+def lexical_diversity(docs: DataFrame) -> DataFrame:
     """Mean segmental type-token ratio (MSTTR, Johnson 1944): split
     each doc's token stream into fixed-size chunks, take distinct/size
     per FULL chunk, average — the lexical-diversity score that, unlike
@@ -1311,39 +1210,33 @@ def lexical_diversity(
     Entirely IN-ROW (sequence → slice → array_distinct per chunk, one
     ascending fold for the mean) — a narrow map fused into the scan,
     zero shuffles before the final ordering. Docs with fewer than
-    ``chunk`` tokens have no full chunk and are excluded."""
-    ws = T.word_tokens(F.col(text_col))
+    25 tokens have no full chunk and are excluded."""
+    ws = T.word_tokens(F.col("text"))
     sess = docs.sparkSession
     d = docs.repartition(
-        sess.sparkContext.defaultParallelism, F.col(id_col)
-    ).select(F.col(id_col), ws.alias("ws"))
-    n_full = F.floor(F.size("ws") / chunk).cast("int")
+        sess.sparkContext.defaultParallelism, F.col("doc_id")
+    ).select(F.col("doc_id"), ws.alias("ws"))
+    n_full = F.floor(F.size("ws") / 25).cast("int")
     ttrs = F.transform(
         F.sequence(F.lit(0), n_full - 1),
         lambda i: F.size(
-            F.array_distinct(F.slice("ws", i * chunk + 1, chunk))
+            F.array_distinct(F.slice("ws", i * 25 + 1, 25))
         ).cast("double")
-        / chunk,
+        / 25,
     )
     msttr = F.aggregate(ttrs, F.lit(0.0), lambda acc, x: acc + x) / n_full
     return (
         d.filter(n_full >= 1)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             n_full.alias("n_chunks"),
             F.round(msttr, 6).alias("msttr"),
         )
-        .orderBy(id_col)
+        .orderBy("doc_id")
     )
 
 
-def term_burstiness(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_df: int = 10,
-    top_k: int = 30,
-) -> DataFrame:
+def term_burstiness(docs: DataFrame, min_df: int = 10, top_k: int = 30) -> DataFrame:
     """Term burstiness (Church & Gale 1995): mean occurrences per
     CONTAINING document, cf/df — near 1 for function words that sprinkle
     evenly, high for topical terms that cluster where they appear. The
@@ -1356,10 +1249,10 @@ def term_burstiness(
     division, a 9dp pre-round before ranking (the tfidf_top_terms
     convention) with the term as the total tiebreak."""
     toks = docs.select(
-        F.col(id_col),
-        F.explode(T.word_tokens(F.col(text_col))).alias("w"),
+        F.col("doc_id"),
+        F.explode(T.word_tokens(F.col("text"))).alias("w"),
     )
-    per_doc = toks.groupBy(id_col, "w").agg(F.count(F.lit(1)).alias("c"))
+    per_doc = toks.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("c"))
     stats = per_doc.groupBy("w").agg(
         F.sum("c").alias("cf"), F.count(F.lit(1)).alias("df")
     )
@@ -1376,15 +1269,7 @@ def term_burstiness(
     )
 
 
-def log_odds_terms(
-    docs: DataFrame,
-    source_a: str,
-    source_b: str,
-    source_col: str = "source",
-    text_col: str = "text",
-    alpha: float = 1.0,
-    top_k: int = 20,
-) -> DataFrame:
+def log_odds_terms(docs: DataFrame, source_a: str, source_b: str) -> DataFrame:
     """Discriminative terms between two corpora by smoothed log-odds
     z-score (Monroe, Colaresi & Quinn 2008 "Fightin' Words", the
     Dirichlet-prior form with a uniform α): for each term,
@@ -1396,13 +1281,13 @@ def log_odds_terms(
     One tokenize pass filtered to the two sources, vocab-sized counts
     pivoted per side, all-integer inputs to a fixed composition of
     ln/sqrt (identical on both engines), a 9dp pre-round before the
-    rank with the term tiebreak. Returns the top_k by |z| with the
+    rank with the term tiebreak. Returns the top 20 by |z| with the
     sign carried (positive ⇒ A-leaning)."""
     toks = docs.filter(
-        F.col(source_col).isin(source_a, source_b)
+        F.col("source").isin(source_a, source_b)
     ).select(
-        F.col(source_col).alias("s"),
-        F.explode(T.word_tokens(F.col(text_col))).alias("w"),
+        F.col("source").alias("s"),
+        F.explode(T.word_tokens(F.col("text"))).alias("w"),
     )
     counts = toks.groupBy("w").agg(
         F.sum((F.col("s") == source_a).cast("long")).alias("ca"),
@@ -1413,7 +1298,7 @@ def log_odds_terms(
         F.sum("cb").alias("nb"),
         F.count(F.lit(1)).alias("v"),
     )
-    a = F.lit(float(alpha))
+    a = F.lit(1.0)
     j = counts.crossJoin(F.broadcast(totals))
     ca, cb = F.col("ca").cast("double"), F.col("cb").cast("double")
     na, nb = F.col("na").cast("double"), F.col("nb").cast("double")
@@ -1430,17 +1315,11 @@ def log_odds_terms(
             F.round(z, 9).alias("log_odds_z"),
         )
         .orderBy(F.desc(F.abs(F.col("log_odds_z"))), F.asc("term"))
-        .limit(top_k)
+        .limit(20)
     )
 
 
-def heldout_nll(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    salt: str = "lmeval",
-    test_frac: float = 0.2,
-) -> DataFrame:
+def heldout_nll(docs: DataFrame) -> DataFrame:
     """Held-out language-model evaluation — the TRAIN/TEST discipline
     the in-corpus scorers (unigram_logprob) skip: an add-1 unigram LM
     fits on the deterministic hash-split train docs only, and the
@@ -1456,10 +1335,10 @@ def heldout_nll(
     the 6dp round."""
     from .curation import hash_unit
 
-    is_test = hash_unit(F.col(id_col), salt) < test_frac
+    is_test = hash_unit(F.col("doc_id"), "lmeval") < 0.2
     toks = docs.select(
-        F.col(id_col), is_test.alias("is_test"),
-        F.explode(T.word_tokens(F.col(text_col))).alias("w"),
+        F.col("doc_id"), is_test.alias("is_test"),
+        F.explode(T.word_tokens(F.col("text"))).alias("w"),
     )
     train = toks.filter(~F.col("is_test"))
     counts = train.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
@@ -1471,7 +1350,7 @@ def heldout_nll(
         test.join(F.broadcast(counts), "w", "left")
         .crossJoin(F.broadcast(scal))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             (
                 -F.log(
                     (F.coalesce(F.col("c"), F.lit(0)).cast("double") + F.lit(1.0))
@@ -1481,20 +1360,16 @@ def heldout_nll(
         )
     )
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.round(F.avg("nll"), 6).alias("nll_per_token"),
         )
-        .orderBy(id_col)
+        .orderBy("doc_id")
     )
 
 
-def good_turing_report(
-    docs: DataFrame,
-    text_col: str = "text",
-    shingle_width: int = 3,
-) -> DataFrame:
+def good_turing_report(docs: DataFrame, shingle_width: int = 3) -> DataFrame:
     """Good–Turing unseen-mass estimate over word n-grams (Good 1953;
     the Gale & Sampson 1995 "simple Good–Turing" first step): from the
     frequency-of-frequencies table of ``shingle_width``-gram counts,
@@ -1515,7 +1390,7 @@ def good_turing_report(
     from ..functions.text import word_ngrams_of
 
     grams = docs.select(
-        F.split(F.lower(F.col(text_col)), " ").alias("ws")
+        F.split(F.lower(F.col("text")), " ").alias("ws")
     ).select(F.explode(word_ngrams_of(F.col("ws"), shingle_width)).alias("g"))
     freqs = grams.groupBy("g").agg(F.count(F.lit(1)).alias("c"))
     fof = freqs.groupBy("c").agg(F.count(F.lit(1)).alias("n_r"))
@@ -1546,11 +1421,7 @@ def good_turing_report(
     )
 
 
-def typo_candidate_pairs(
-    words: DataFrame,
-    word_col: str = "w",
-    count_col: str = "c",
-) -> DataFrame:
+def typo_candidate_pairs(words: DataFrame) -> DataFrame:
     """Edit-distance-1 candidate pairs over a vocabulary by SymSpell's
     deletion neighborhood (Garbe 2012, public domain algorithm): each
     word emits itself plus its |w| single-deletion variants as join
@@ -1563,7 +1434,7 @@ def typo_candidate_pairs(
     is ONE equi-join on the key — never an all-pairs distance matrix
     (the classic quadratic trap). The levenshtein verify runs only on
     candidates. Works on a VOCABULARY frame (≪ corpus)."""
-    w = F.col(word_col)
+    w = F.col("w")
     dels = F.transform(
         F.sequence(F.lit(1), F.length(w)),
         lambda i: F.concat(
@@ -1572,7 +1443,7 @@ def typo_candidate_pairs(
         ),
     )
     keys = words.select(
-        w.alias("wd"), F.col(count_col).alias("cnt"),
+        w.alias("wd"), F.col("c").alias("cnt"),
         F.explode(F.array_union(F.array(w), dels)).alias("k"),
     )
     pairs = (
@@ -1591,19 +1462,12 @@ def typo_candidate_pairs(
     return pairs.orderBy("word_a", "word_b")
 
 
-def textrank_keywords(
-    docs: DataFrame,
-    text_col: str = "text",
-    window: int = 2,
-    iterations: int = 10,
-    damping: float = 0.85,
-    top_k: int = 20,
-) -> DataFrame:
+def textrank_keywords(docs: DataFrame, top_k: int = 20) -> DataFrame:
     """TextRank keyword extraction (Mihalcea & Tarau 2004): a word
     co-occurrence graph (undirected, weight = co-occurrence count
-    within ``window`` positions) scored by weighted PageRank —
+    within 2 positions) scored by weighted PageRank —
     ``tr(w) = (1-d) + d·Σ_v w(v,w)/wdeg(v)·tr(v)`` from 1.0, fixed
-    ``iterations`` — then the top-k words by score. The classic
+    10 iterations — then the top-k words by score. The classic
     unsupervised keyword/keyphrase starter.
 
     Shape: pair generation is IN-ROW over the tokenized array (the
@@ -1616,13 +1480,13 @@ def textrank_keywords(
     class)."""
     from ..functions.text import word_tokens
 
-    toks = docs.select(word_tokens(F.col(text_col)).alias("w"))
+    toks = docs.select(word_tokens(F.col("text")).alias("w"))
     m = F.size("w")
     pair_structs = F.flatten(
         F.transform(
             F.sequence(F.lit(1), F.greatest(m - 1, F.lit(0))),
             lambda i: F.transform(
-                F.sequence(i + 1, F.least(i + window, m)),
+                F.sequence(i + 1, F.least(i + 2, m)),
                 lambda j: F.struct(
                     F.least(F.element_at("w", i), F.element_at("w", j)).alias("a"),
                     F.greatest(F.element_at("w", i), F.element_at("w", j)).alias("b"),
@@ -1665,7 +1529,7 @@ def textrank_keywords(
         eager=True
     )
     ranks = nodes.select("word", F.lit(1.0).alias("tr"))
-    for i in range(iterations):
+    for i in range(10):
         contribs = (
             coef.join(
                 F.broadcast(ranks.withColumnRenamed("word", "src")), "src"
@@ -1677,11 +1541,11 @@ def textrank_keywords(
         ranks = nodes.join(contribs, "word", "left").select(
             "word",
             (
-                F.lit(1.0 - damping)
-                + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+                F.lit(1.0 - 0.85)
+                + F.lit(0.85) * F.coalesce(F.col("s"), F.lit(0.0))
             ).alias("tr"),
         )
-        if (i + 1) < iterations:
+        if (i + 1) < 10:
             # lazy: each round's ranks has ONE consumer (next round's
             # broadcast), so the 10-round chain folds into the final
             # action — one job instead of one construction job per
@@ -1694,11 +1558,7 @@ def textrank_keywords(
     )
 
 
-def entropy_rate_bigram(
-    docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def entropy_rate_bigram(docs: DataFrame) -> DataFrame:
     """Per-source bigram entropy rate H(w₂|w₁) and its perplexity —
     the text-complexity number LM curricula sort by (low entropy rate:
     templated/boilerplate text; high: diverse prose), computed from
@@ -1712,8 +1572,8 @@ def entropy_rate_bigram(
     so the vocab-sized sum is order-free; the only unquantized float
     ops are the final division and exp, single IEEE ops the oracle
     replays."""
-    tk = T.word_tokens(F.col(text_col))
-    base = docs.select(F.col(source_col).alias("s"), tk.alias("tk")).filter(
+    tk = T.word_tokens(F.col("text"))
+    base = docs.select(F.col("source").alias("s"), tk.alias("tk")).filter(
         F.size("tk") >= 2
     )
     pairs = base.select(
@@ -1759,12 +1619,7 @@ def entropy_rate_bigram(
     )
 
 
-def burrows_delta(
-    docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-    top_terms: int = 30,
-) -> DataFrame:
+def burrows_delta(docs: DataFrame, top_terms: int = 30) -> DataFrame:
     """Burrows' Delta (Burrows 2002) stylometric distance between all
     source pairs — the classic authorship-attribution measure: z-score
     each source's relative frequency of the corpus' top function words
@@ -1780,8 +1635,8 @@ def burrows_delta(
     cross-row sum is an order-free DECIMAL; μ, σ, z are single-op
     scalar chains the oracle replays."""
     toks = docs.select(
-        F.col(source_col).alias("s"),
-        F.explode(T.word_tokens(F.col(text_col))).alias("w"),
+        F.col("source").alias("s"),
+        F.explode(T.word_tokens(F.col("text"))).alias("w"),
     )
     # counts fans out into three consumers (source totals, the top-k
     # selection, and the grid join) — pin ONE materialization so the
@@ -1868,11 +1723,7 @@ def burrows_delta(
     )
 
 
-def script_profile(
-    docs: DataFrame,
-    source_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def script_profile(docs: DataFrame) -> DataFrame:
     """Per-source Unicode-script composition: the fraction of
     characters that are Latin letters, digits, whitespace, CJK
     ideographs, or other — the first-pass corpus audit that catches a
@@ -1884,14 +1735,14 @@ def script_profile(
     per-class counts summed exactly; the five fractions are single
     divisions. The oracle replays the same character classes (RE2 and
     Java regex agree on literal BMP ranges)."""
-    t = F.col(text_col)
+    t = F.col("text")
     ln = F.length(t)
 
     def cnt(pattern: str) -> Column:
         return ln - F.length(F.regexp_replace(t, pattern, ""))
 
     per_doc = docs.select(
-        F.col(source_col).alias("s"),
+        F.col("source").alias("s"),
         ln.alias("total"),
         cnt("[a-zA-Z]").alias("latin"),
         cnt("[0-9]").alias("digit"),
@@ -1931,11 +1782,7 @@ def script_profile(
     ).orderBy("source")
 
 
-def posting_list_histogram(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def posting_list_histogram(docs: DataFrame) -> DataFrame:
     """Document-frequency histogram of the inverted index in power-of-
     two buckets — the search-engine capacity table: how many terms are
     hapax noise (bucket 1), how many live in the skippable mid-range,
@@ -1948,8 +1795,8 @@ def posting_list_histogram(
     one buckets-sized regroup; everything integer."""
     df_counts = (
         docs.select(
-            F.col(id_col).alias("d"),
-            F.explode(T.word_tokens(F.col(text_col))).alias("w"),
+            F.col("doc_id").alias("d"),
+            F.explode(T.word_tokens(F.col("text"))).alias("w"),
         )
         .distinct()
         .groupBy("w")
@@ -1974,10 +1821,7 @@ def posting_list_histogram(
     )
 
 
-def vocab_gini(
-    docs: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
+def vocab_gini(docs: DataFrame) -> DataFrame:
     """Gini coefficient of the term-frequency distribution — the
     one-number head-heaviness of the vocabulary (0: every term equally
     common; →1: a few stopwords carry all the mass), the companion
@@ -1991,7 +1835,7 @@ def vocab_gini(
     from ..operators.curation import global_rank
 
     counts = (
-        docs.select(F.explode(T.word_tokens(F.col(text_col))).alias("w"))
+        docs.select(F.explode(T.word_tokens(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -2017,11 +1861,7 @@ def vocab_gini(
     )
 
 
-def chao1_richness(
-    docs: DataFrame,
-    text_col: str = "text",
-    group_col: str = "source",
-) -> DataFrame:
+def chao1_richness(docs: DataFrame) -> DataFrame:
     """Chao1 nonparametric vocabulary-richness estimate per source
     (Chao 1984; the bias-corrected form in Colwell & Coddington 1994):
     from the frequency-of-frequencies of word counts, the number of
@@ -2044,8 +1884,8 @@ def chao1_richness(
     from ..functions.text import word_tokens
 
     toks = docs.select(
-        F.col(group_col).alias("s"),
-        F.explode(word_tokens(F.col(text_col))).alias("w"),
+        F.col("source").alias("s"),
+        F.explode(word_tokens(F.col("text"))).alias("w"),
     )
     counts = toks.groupBy("s", "w").agg(F.count(F.lit(1)).alias("c"))
     dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731
@@ -2077,11 +1917,7 @@ def chao1_richness(
     ).orderBy("source")
 
 
-def length_lognormal_fit(
-    docs: DataFrame,
-    len_col: str = "n_chars",
-    group_col: str = "source",
-) -> DataFrame:
+def length_lognormal_fit(docs: DataFrame) -> DataFrame:
     """Method-of-moments lognormal fit of the document-length
     distribution per source — the standard length model for natural
     text corpora (Mitzenmacher 2004 survey): report mu/sigma of
@@ -2097,17 +1933,17 @@ def length_lognormal_fit(
     aggregate per source."""
     dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731
     ti = F.round(
-        F.log(F.col(len_col).cast("double")) * F.lit(1000000000.0), 0
+        F.log(F.col("n_chars").cast("double")) * F.lit(1000000000.0), 0
     ).cast("long")
     per = (
-        docs.filter(F.col(len_col) > 0)
-        .select(F.col(group_col).alias("s"), ti.alias("ti"), F.col(len_col))
+        docs.filter(F.col("n_chars") > 0)
+        .select(F.col("source").alias("s"), ti.alias("ti"), F.col("n_chars"))
         .groupBy("s")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(dec(F.col("ti"))).alias("st"),
             F.sum(dec(F.col("ti")) * dec(F.col("ti"))).alias("stt"),
-            F.sum(dec(F.col(len_col))).alias("sl"),
+            F.sum(dec(F.col("n_chars"))).alias("sl"),
         )
         # a singleton source makes the sample variance 0/0 (NaN with
         # engine-specific bits); the fit needs n >= 2 (mirrored HAVING)
@@ -2138,10 +1974,7 @@ def length_lognormal_fit(
     ).orderBy("source")
 
 
-def hoeffding_adequacy_report(
-    docs: DataFrame,
-    target_eps: float = 0.02,
-) -> DataFrame:
+def hoeffding_adequacy_report(docs: DataFrame) -> DataFrame:
     """Per-source sample-size adequacy via the Hoeffding bound
     (Hoeffding 1963): the quality score lives in [0,1], so with n docs
     the 95% half-width on its mean is eps = sqrt(ln(2/0.05) / (2n))
@@ -2174,7 +2007,7 @@ def hoeffding_adequacy_report(
             "mean_quality"
         ),
         (F.round(eps, 6) + F.lit(0.0)).alias("epsilon95"),
-        (eps <= F.lit(target_eps)).alias("adequate"),
+        (eps <= F.lit(0.02)).alias("adequate"),
     ).orderBy("source")
 
 
@@ -2262,14 +2095,9 @@ def mcnemar_gate_compare(docs: DataFrame) -> DataFrame:
     )
 
 
-def template_prefix_report(
-    docs: DataFrame,
-    prefix_len: int = 24,
-    min_docs: int = 2,
-    top_k: int = 10,
-) -> DataFrame:
+def template_prefix_report(docs: DataFrame, min_docs: int = 2) -> DataFrame:
     """Boilerplate / template detection by normalized prefix: documents
-    opening with the same first ``prefix_len`` characters (lowercased,
+    opening with the same first 24 characters (lowercased,
     trimmed, whitespace-collapsed) are template candidates — the cheap
     high-precision screen crawl pipelines run BEFORE fuzzy dedup,
     because license headers / cookie banners / scraped nav bars share
@@ -2284,7 +2112,7 @@ def template_prefix_report(
     pairwise; the top-k rank runs on the filtered template frame."""
     norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     pre = docs.select(
-        F.substring(norm, 1, prefix_len).alias("prefix"), "source"
+        F.substring(norm, 1, 24).alias("prefix"), "source"
     )
     groups = (
         pre.groupBy("prefix")
@@ -2301,7 +2129,7 @@ def template_prefix_report(
         F.row_number()
         .over(Window.orderBy(F.desc("n_docs"), F.asc("prefix")))
         .alias("rk"),
-    ).filter(F.col("rk") <= top_k)
+    ).filter(F.col("rk") <= 10)
     return ranked.select(
         F.col("rk").cast("long").alias("rank"),
         "prefix",
@@ -2318,7 +2146,7 @@ def template_prefix_report(
     ).orderBy("rank")
 
 
-def robust_zscore_docs(docs: DataFrame, z_cut: float = 3.5) -> DataFrame:
+def robust_zscore_docs(docs: DataFrame) -> DataFrame:
     """Per-source robust length-outlier report via median absolute
     deviation: modified z = 0.6745 (len - median) / MAD on n_chars —
     the length-anomaly screen that survives the heavy tails mean/sigma
@@ -2373,7 +2201,7 @@ def robust_zscore_docs(docs: DataFrame, z_cut: float = 3.5) -> DataFrame:
             F.max("med").cast("long").alias("median_len"),
             F.max("mad").cast("long").alias("mad_len"),
             F.sum(
-                F.when(F.abs(F.col("z")) > F.lit(z_cut), 1).otherwise(0)
+                F.when(F.abs(F.col("z")) > F.lit(3.5), 1).otherwise(0)
             )
             .cast("long")
             .alias("n_outliers"),
@@ -2529,14 +2357,9 @@ def cohens_kappa_gates(docs: DataFrame) -> DataFrame:
     )
 
 
-def g2_keyness_terms(
-    docs: DataFrame,
-    family_prefix: str = "src1",
-    top_k: int = 20,
-    min_total: int = 20,
-) -> DataFrame:
+def g2_keyness_terms(docs: DataFrame, min_total: int = 20) -> DataFrame:
     """Dunning log-likelihood keyness (Dunning 1993 G^2) of vocabulary
-    terms between the ``family_prefix`` source family and the rest of
+    terms between the ``src1`` source family and the rest of
     the corpus — corpus linguistics' standard "what words characterize
     this subcorpus" test, more robust at low counts than the
     chi-square and complementary to log_odds_terms' Bayesian-smoothed
@@ -2551,7 +2374,7 @@ def g2_keyness_terms(
     9 dp pre-round + term tiebreak into a distributed TakeOrdered —
     the log_odds_terms scale shape."""
     toks = docs.select(
-        F.col("source").startswith(family_prefix).alias("fam"),
+        F.col("source").startswith("src1").alias("fam"),
         F.explode(T.word_tokens(F.col("text"))).alias("w"),
     )
     counts = toks.groupBy("w").agg(
@@ -2590,11 +2413,11 @@ def g2_keyness_terms(
             signed.alias("g2_signed"),
         )
         .orderBy(F.desc(F.abs(F.col("g2_signed"))), F.asc("term"))
-        .limit(top_k)
+        .limit(20)
     )
 
 
-def ngram_novelty_report(docs: DataFrame, n: int = 3) -> DataFrame:
+def ngram_novelty_report(docs: DataFrame) -> DataFrame:
     """Cross-document n-gram novelty by source — the self-BLEU-style
     diversity reading for training corpora (Zhu et al. 2018 measure
     template-ness the same way): for each source, the fraction of its
@@ -2632,7 +2455,7 @@ def ngram_novelty_report(docs: DataFrame, n: int = 3) -> DataFrame:
         .select(
             "doc_id",
             "source",
-            F.explode(F.array_distinct(word_ngrams_of(F.col("w"), n))).alias("g"),
+            F.explode(F.array_distinct(word_ngrams_of(F.col("w"), 3))).alias("g"),
         )
     )
     # two-level aggregation instead of joining per-gram df back onto
@@ -2700,11 +2523,7 @@ RAKE_STOPWORDS = (
 )
 
 
-def rake_keyphrases(
-    docs: DataFrame,
-    top_k: int = 20,
-    max_phrase_len: int = 4,
-) -> DataFrame:
+def rake_keyphrases(docs: DataFrame, top_k: int = 20) -> DataFrame:
     """RAKE keyphrase extraction (Rose et al. 2010) over the corpus —
     the multi-word companion to textrank_keywords (single tokens):
     candidate phrases are maximal runs of content tokens between
@@ -2759,7 +2578,7 @@ def rake_keyphrases(
                 ),
             ).alias("phrase"),
         )
-        .filter(F.col("len") <= max_phrase_len)
+        .filter(F.col("len") <= 4)
     )
     cw2 = cw.join(ph.select("doc_id", "g", "len"), ["doc_id", "g"])
     wstat = cw2.groupBy("w").agg(

@@ -43,6 +43,7 @@ from pyspark.sql.types import (
     DecimalType,
     MapType,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
@@ -52,6 +53,7 @@ from .avro_schema import avro_to_spark_schema, spark_to_avro_schema
 _MAGIC = b"Obj\x01"
 _EPOCH = date(1970, 1, 1)
 _EPOCH_TS = datetime(1970, 1, 1)
+_MILLIS = ("timestamp-millis", "local-timestamp-millis")
 _NAMED_TYPES = ("record", "enum", "fixed")
 
 
@@ -422,9 +424,9 @@ def _avro_to_spark_value(v: Any, dtype: DataType, avro: Any):
         return {k: _avro_to_spark_value(x, dtype.valueType, node["values"]) for k, x in v.items()}
     if isinstance(dtype, DateType):
         return _EPOCH + timedelta(days=v)
-    if isinstance(dtype, TimestampType):
+    if isinstance(dtype, (TimestampType, TimestampNTZType)):
         logical = node.get("logicalType") if isinstance(node, dict) else None
-        us = v * 1000 if logical == "timestamp-millis" else v
+        us = v * 1000 if logical in _MILLIS else v
         return _EPOCH_TS + timedelta(microseconds=us)
     if isinstance(dtype, DecimalType):
         # Avro JSON encoding carries bytes as an ISO-8859-1 string
@@ -452,11 +454,11 @@ def _spark_to_avro_value(v: Any, dtype: DataType, avro: Any):
         return {k: _spark_to_avro_value(x, dtype.valueType, node["values"]) for k, x in v.items()}
     if isinstance(dtype, DateType):
         return (v - _EPOCH).days
-    if isinstance(dtype, TimestampType):
+    if isinstance(dtype, (TimestampType, TimestampNTZType)):
         logical = node.get("logicalType") if isinstance(node, dict) else None
         delta = v.replace(tzinfo=None) - _EPOCH_TS
         us = delta // timedelta(microseconds=1)
-        return us // 1000 if logical == "timestamp-millis" else us
+        return us // 1000 if logical in _MILLIS else us
     if isinstance(dtype, DecimalType):
         unscaled = int(v.scaleb(dtype.scale))
         length = max(1, (unscaled.bit_length() + 8) // 8)

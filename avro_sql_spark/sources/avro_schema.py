@@ -13,7 +13,8 @@ Logical types follow AvroUnpacker.scala:37-43,98-119 but map to NATIVE
 Spark types instead of the reference's string formatting (documented
 divergence, SURVEY.md §1.2): decimal→DecimalType, uuid→StringType,
 date→DateType, time-millis→IntegerType(ms), timestamp-millis/micros→
-TimestampType. Union policy matches AvroSchemaSql.scala:40-47: only
+TimestampType, local-timestamp-millis/micros→TimestampNTZType (as
+spark-avro maps them). Union policy matches AvroSchemaSql.scala:40-47: only
 ``[null, T]`` (either order) or single-member unions; anything else
 raises the reference's message.
 """
@@ -39,6 +40,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
@@ -103,6 +105,8 @@ def avro_to_spark_type(avro: Any) -> tuple[DataType, bool, dict]:
         return IntegerType(), False, meta
     if logical in ("timestamp-millis", "timestamp-micros") and t == "long":
         return TimestampType(), False, meta
+    if logical in ("local-timestamp-millis", "local-timestamp-micros") and t == "long":
+        return TimestampNTZType(), False, meta
     if logical == "time-micros" and t == "long":
         return LongType(), False, meta
 
@@ -175,6 +179,8 @@ def spark_to_avro_type(dtype: DataType, nullable: bool, meta: dict, name_hint: s
         base = {"type": "int", "logicalType": "date"}
     elif isinstance(dtype, TimestampType):
         base = {"type": "long", "logicalType": logical or "timestamp-micros"}
+    elif isinstance(dtype, TimestampNTZType):
+        base = {"type": "long", "logicalType": logical or "local-timestamp-micros"}
     elif isinstance(dtype, StringType) and logical == "uuid":
         base = {"type": "string", "logicalType": "uuid"}
     elif isinstance(dtype, StringType) and "avro.symbols" in meta:

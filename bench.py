@@ -31,8 +31,10 @@ import time
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, ROOT)
+sys.path.append(os.path.join(ROOT, "perfbench"))  # for run.sweep_pins
 
 from avro_sql_spark.session import get_spark  # noqa: E402
+from run import sweep_pins  # noqa: E402
 
 import __spark_entry__ as entry_mod  # noqa: E402
 
@@ -44,22 +46,6 @@ ORACLE_BASELINE = "embedding_near_dup"
 
 _UNBENCHED = entry_mod.NON_BATCH_ENTRIES | {ORACLE_BASELINE}
 HEADLINE = [name for name in entry_mod.queries() if name not in _UNBENCHED]
-
-
-def sweep_persisted_rdds(spark) -> int:
-    """Unpersist every RDD still pinned on the executors and return how
-    many there were. catalog.clearCache() only drops CATALOG-cached
-    relations; localCheckpoint/persist blocks are RDD-level state it
-    never touches, so without this sweep the lazily-checkpointed loop
-    frames of earlier entries stay resident for the rest of the
-    342-entry run (a storage-level leak at bench scale, and a memory
-    bias on later entries). Runs OUTSIDE the timed window, next to
-    clearCache."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()  # py4j JavaMap
-    rdds = [jmap[k] for k in list(jmap.keys())]
-    for jrdd in rdds:
-        jrdd.unpersist()
-    return len(rdds)
 
 
 def _write_explain(df, name: str, tag: str) -> None:
@@ -87,18 +73,16 @@ def time_entries(
     (simhash pairs, dsir) must not leave frames resident to skew LATER
     entries' memory, nor hit their own materialized cache from the
     previous pass — each timing is the entry's real standalone cost.
-    The RDD sweep additionally drops localCheckpoint blocks (clearCache
-    never does). Both run OUTSIDE the timed window.
+    perfbench's ``sweep_pins`` unpersists every RDD still pinned on the
+    executors (localCheckpoint/persist blocks of earlier entries, which
+    clearCache alone never drops) and clears the catalog cache, OUTSIDE
+    the timed window.
 
     ``explain_tag`` writes each warmup frame's formatted plan, as built
     and before execution, to ``plans/r09/<name>_<tag>.txt``."""
 
-    def reset() -> None:
-        spark.catalog.clearCache()
-        sweep_persisted_rdds(spark)
-
     for name in names:
-        reset()
+        sweep_pins(spark)
         df = queries[name](spark, sf_dir)
         if explain_tag:
             _write_explain(df, name, explain_tag)
@@ -106,7 +90,7 @@ def time_entries(
     timings: dict[str, float] = {}
     for _ in range(2):
         for name in names:
-            reset()
+            sweep_pins(spark)
             start = time.perf_counter()
             df = queries[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()

@@ -100,6 +100,42 @@ def test_logical_types_roundtrip(spark, tmp_path):
     assert all(v is None for v in (b["d"], b["ts"], b["dec"], b["bin"]))
 
 
+def test_timestamp_ntz_orders_roundtrip(spark, tmp_path):
+    """``o_orderdate`` is ``timestamp_ntz``: the sidecar writes it as
+    ``local-timestamp-micros`` (spark-avro's mapping) and reads it back
+    as ``timestamp_ntz`` with every value unchanged."""
+    from avro_sql_spark.session import load_tables
+    from avro_sql_spark.sources.avro_schema import spark_to_avro_schema
+
+    orders = load_tables(spark, "/root/testdata/sf0.001", register=False)["orders"]
+    assert orders.schema["o_orderdate"].dataType.simpleString() == "timestamp_ntz"
+    avro = spark_to_avro_schema(orders.schema)
+    date_field = next(f for f in avro["fields"] if f["name"] == "o_orderdate")
+    assert "local-timestamp-micros" in json.dumps(date_field["type"])
+    path = str(tmp_path / "orders.avro")
+    assert write_avro_fallback(orders, path) == orders.count()
+    back = read_avro_fallback(spark, path)
+    fields = lambda df: [(f.name, f.dataType, f.nullable) for f in df.schema.fields]
+    assert fields(back) == fields(orders)
+    assert sorted(back.collect()) == sorted(orders.collect())
+
+
+def test_local_timestamp_millis_reads_as_ntz(spark, tmp_path):
+    schema = {
+        "type": "record",
+        "name": "E",
+        "fields": [
+            {"name": "t", "type": {"type": "long", "logicalType": "local-timestamp-millis"}},
+        ],
+    }
+    path = str(tmp_path / "e.avro")
+    with open(path, "wb") as out:
+        write_container(out, schema, [{"t": 1_700_000_000_123}])
+    back = read_avro_fallback(spark, path)
+    assert back.schema["t"].dataType.simpleString() == "timestamp_ntz"
+    assert back.collect()[0]["t"] == datetime(2023, 11, 14, 22, 13, 20, 123000)
+
+
 def test_map_and_deflate_codec(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, {"a": 1.5, "b": -2.0}), (2, {})], "id LONG, m MAP<STRING, DOUBLE>"

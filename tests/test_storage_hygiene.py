@@ -4,16 +4,14 @@ round's action materializes (the ``operators/_pins.RoundPins`` rule),
 so pinned executor storage stays ~2 rounds deep instead of
 growing with round count — the r8-verdict item 1 contract."""
 
+import os
+import sys
+
 import pytest
 
-
-def _sweep(spark) -> int:
-    import sys, os
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from bench import sweep_persisted_rdds
-
-    return sweep_persisted_rdds(spark)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.append(os.path.join(ROOT, "perfbench"))
+from run import sweep_pins as _sweep  # noqa: E402
 
 
 def _n_persisted(spark) -> int:
