@@ -5069,7 +5069,10 @@ def _textrank_oracle(
     weight counts and wdeg-normalized coefficients, and ``iterations``
     unrolled weighted-PageRank rounds with the exact expression shape
     ((CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) mirrors Python's
-    1.0 - 0.85 double); ROUND 6 at the end (pagerank-proven class)."""
+    1.0 - 0.85 double); ROUND 6 at the end (pagerank-proven class).
+    ``coef`` and ``nodes`` are MATERIALIZED: DuckDB inlines a plain CTE
+    at each reference, which re-ran the tokenizer and the edge build in
+    every round (at sf0.1 the checker grew past 12 GB)."""
     its = []
     prev = "r0"
     for k in range(1, iterations + 1):
@@ -5097,10 +5100,10 @@ und AS (SELECT a, b, COUNT(*) AS wt FROM pr GROUP BY 1, 2),
 edges AS (SELECT a AS src, b AS dst, wt FROM und
           UNION ALL SELECT b, a, wt FROM und),
 wdeg AS (SELECT src, SUM(wt) AS wd FROM edges GROUP BY 1),
-coef AS (SELECT e.src, e.dst,
+coef AS MATERIALIZED (SELECT e.src, e.dst,
                 CAST(e.wt AS DOUBLE) / CAST(w.wd AS DOUBLE) AS cf
          FROM edges e JOIN wdeg w USING (src)),
-nodes AS (SELECT DISTINCT src AS word FROM coef),
+nodes AS MATERIALIZED (SELECT DISTINCT src AS word FROM coef),
 r0 AS (SELECT word, CAST(1 AS DOUBLE) AS tr FROM nodes),
 {",".join(its)}
 SELECT word, ROUND(tr, 6) AS textrank FROM {prev}
@@ -5332,7 +5335,7 @@ FROM hits ORDER BY layout
 _FP = "md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))"
 
 # DuckDB replay of the MinHash pipeline (dedup.minhash_signatures +
-# _band_rows, defaults num_hashes=64 / bands=16 / shingle=3): word
+# _band_rows: 64 hashes, 16 bands, shingle 3): word
 # 3-shingles -> 48-bit md5 base mod P -> 64 full-range universal
 # permutations (a*x + b) mod P, P = 2^31-1, with (a, b) derived from
 # the index by dedup._minhash_params's exact formula -> per-doc MIN per

@@ -125,12 +125,12 @@ def fingerprint(text: Column) -> Column:
     return F.md5(normalized.cast("binary"))
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct n-word shingles of the lowercased text as
+def word_shingles(text: Column) -> Column:
+    """Distinct 3-word shingles of the lowercased text as
     ``array<string>`` — the input to MinHash / Jaccard dedup. The
     distinct-set view of :func:`word_ngrams` (one gram builder, two
     views). Pure Column expression, no Python."""
-    return F.array_distinct(word_ngrams(text, n))
+    return F.array_distinct(word_ngrams(text, 3))
 
 
 def mean_word_length(text: Column) -> Column:

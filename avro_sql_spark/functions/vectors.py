@@ -32,18 +32,6 @@ def cosine(a: Column, b: Column) -> Column:
     return (dot(a, b) / F.greatest(norm(a) * norm(b), F.lit(1e-12))).cast("double")
 
 
-def l2_normalize(a: Column) -> Column:
-    """Unit-normalize; zero vectors come back as zero vectors (epsilon
-    floor — ANSI mode would otherwise throw DIVIDE_BY_ZERO).
-
-    Cost note: Catalyst does not hoist the norm sub-expression out of
-    the transform lambda, so the O(d) norm re-evaluates per element
-    (O(d^2) per vector). Fine for occasional use; in a hot path
-    materialize the norm as its OWN column first and divide by that."""
-    n = F.greatest(norm(a), F.lit(1e-12))
-    return F.transform(a, lambda v: (v.cast("double") / n))
-
-
 def quantize_scale(v: Column) -> Column:
     """Per-vector symmetric int8 scale: max|x| / 127 (never 0)."""
     absmax = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))

@@ -22,9 +22,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _assign(emb: DataFrame, cents: "list[list[float]]", vec_col: str):
-    """Append 'cluster' (0-based argmin of squared L2 distance; ties →
-    lowest index) and '_dist' (the winning squared distance).
+def _assign(emb: DataFrame, cents: "list[list[float]]"):
+    """Append 'cluster' (0-based argmin of squared L2 distance of the
+    ``embedding`` vector; ties → lowest index) and '_dist' (the winning
+    squared distance).
 
     The per-centroid distance is an UNROLLED left-associated sum built
     as ONE SQL string: the identical IEEE value as the 0.0-seeded
@@ -68,7 +69,7 @@ def _assign(emb: DataFrame, cents: "list[list[float]]", vec_col: str):
 
         dists = ", ".join(fold(c) for c in cents)
     return (
-        emb.selectExpr("*", f"cast(`{vec_col}` as array<double>) AS _v")
+        emb.selectExpr("*", "cast(`embedding` as array<double>) AS _v")
         .selectExpr("*", f"array({dists}) AS _dists")
         .selectExpr(
             "*",
@@ -80,15 +81,11 @@ def _assign(emb: DataFrame, cents: "list[list[float]]", vec_col: str):
 
 
 def lloyd_centroids(
-    emb: DataFrame,
-    k: int = 4,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, k: int = 4, iterations: int = 2
 ) -> "list[list[float]]":
-    """The deterministic Lloyd TRAINING loop shared by
+    """The deterministic Lloyd TRAINING loop over ``embedding`` shared by
     :func:`kmeans_lloyd` and the IVF coarse quantizer
-    (similarity.ivf_topk): k lowest-id seeds, fixed iteration count,
+    (similarity.ivf_topk): k lowest-``vec_id`` seeds, fixed iteration count,
     9dp-rounded centroid updates. Returns the final k x d centroid
     list — bounded driver state, broadcast back as literals."""
     # the training frame is read by 1 + iterations separate driver jobs
@@ -98,9 +95,9 @@ def lloyd_centroids(
     # is a global sort-limit over the corpus — re-run per job otherwise)
     emb = emb.localCheckpoint(eager=False)
     seeds = (
-        emb.orderBy(id_col)
+        emb.orderBy("vec_id")
         .limit(k)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
+        .select(F.col("embedding").cast("array<double>").alias("v"))
         .collect()
     )
     if len(seeds) < k:
@@ -109,10 +106,10 @@ def lloyd_centroids(
         raise AvroSqlError(f"kmeans_lloyd: need at least k={k} rows, got {len(seeds)}")
     cents = [list(r["v"]) for r in seeds]
     for _ in range(iterations):
-        assigned = _assign(emb, cents, vec_col)
+        assigned = _assign(emb, cents)
         rows = (
             assigned.select(
-                "cluster", F.posexplode(F.col(vec_col).cast("array<double>")).alias("i", "v")
+                "cluster", F.posexplode(F.col("embedding").cast("array<double>")).alias("i", "v")
             )
             .groupBy("cluster", "i")
             .agg(F.avg("v").alias("m"))
@@ -142,7 +139,7 @@ def kmeans_lloyd(emb: DataFrame, k: int = 4, iterations: int = 2) -> DataFrame:
     shuffle is k x d cells). A cluster that loses every point keeps its
     previous centroid (the standard empty-cluster rule)."""
     cents = lloyd_centroids(emb, k, iterations)
-    out = _assign(emb, cents, "embedding")
+    out = _assign(emb, cents)
     return out.select("vec_id", "cluster", F.col("_dist").alias("sqdist"))
 
 
@@ -161,7 +158,7 @@ def kmeans_report(emb: DataFrame, k: int = 4, iterations: int = 2) -> DataFrame:
     )
 
 
-def kmeans_silhouette(emb: DataFrame, k: int = 4, iterations: int = 2) -> DataFrame:
+def kmeans_silhouette(emb: DataFrame) -> DataFrame:
     """Centroid-simplified silhouette of the Lloyd partition: per point
     s = (b − a)/max(a, b) with a = distance to the OWN centroid and
     b = distance to the nearest OTHER centroid (the O(n·k) medoid-free
@@ -171,12 +168,12 @@ def kmeans_silhouette(emb: DataFrame, k: int = 4, iterations: int = 2) -> DataFr
     the go/no-go readout before trusting k-means labels for SemDeDup
     or curriculum bucketing.
 
-    Replays :func:`lloyd_centroids` (same k/iterations as the oracled
-    kmeans entries), computes all k distances in-row with the same
+    Replays :func:`lloyd_centroids` (k=4, 2 iterations, as the oracled
+    kmeans entries), computes all 4 distances in-row with the same
     unrolled left-associated sum as ``_assign``, takes the two
     smallest via array_sort, and quantizes each point's s at 9dp into
     DECIMAL(38,9) so cluster averages are order-free."""
-    cents = lloyd_centroids(emb, k, iterations)
+    cents = lloyd_centroids(emb)
     d = len(cents[0])
     dists = ", ".join(
         " + ".join(

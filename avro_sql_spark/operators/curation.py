@@ -63,14 +63,12 @@ def deterministic_split(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.withColumn("split", expr)
 
 
-def deterministic_sample(
-    df: DataFrame, fraction: float = 0.1, salt: str = "sample"
-) -> DataFrame:
-    """Keep ~``fraction`` of rows, chosen by id hash — reproducible,
-    partitioning-independent, and composable (samples with different
-    salts are independent; the same salt at a larger fraction is a
-    superset, which makes growing a sample cheap)."""
-    return df.filter(hash_unit(F.col("doc_id"), salt) < fraction)
+def deterministic_sample(df: DataFrame, fraction: float = 0.1) -> DataFrame:
+    """Keep ~``fraction`` of rows, chosen by the id hash salted with
+    ``"sample"`` — reproducible, partitioning-independent, and
+    composable (a larger fraction is a superset, which makes growing a
+    sample cheap)."""
+    return df.filter(hash_unit(F.col("doc_id"), "sample") < fraction)
 
 
 def stratified_sample(
@@ -87,11 +85,10 @@ def stratified_sample(
     return df.filter(hash_unit(F.col("doc_id"), "strata") < frac)
 
 
-def quality_shards(
-    df: DataFrame, n_shards: int = 8, score: Column | None = None
-) -> DataFrame:
+def quality_shards(df: DataFrame, n_shards: int = 8) -> DataFrame:
     """Assign rows to ``n_shards`` quality-ordered shards (shard 1 =
-    best) with SQL-NTILE semantics over (score desc, id) — the
+    best) with SQL-NTILE semantics over (``quality_score(text)`` desc,
+    id) — the
     write-time curriculum / quality-tier pass. The id tiebreak makes
     the assignment total and deterministic despite heavily tied
     heuristic scores. Assignment is :func:`exact_ntile` (two-pass
@@ -101,19 +98,13 @@ def quality_shards(
     trade the exact equal-size guarantee for one fewer pass."""
     from ..functions.text import quality_score
 
-    score = quality_score(F.col("text")) if score is None else score
-    scored = df.withColumn("quality", score)
+    scored = df.withColumn("quality", quality_score(F.col("text")))
     return exact_ntile(
         scored, [F.desc("quality"), F.asc("doc_id")], n_shards, out_col="shard"
     )
 
 
-def quality_shards_approx(
-    df: DataFrame,
-    n_shards: int = 8,
-    score: Column | None = None,
-    relative_error: float = 0.001,
-) -> DataFrame:
+def quality_shards_approx(df: DataFrame, n_shards: int = 8) -> DataFrame:
     """The one-pass variant of :func:`quality_shards`: the exact
     version runs a two-pass range-partitioned rank (:func:`exact_ntile`
     — scale-safe, but two jobs). Here the shard boundaries come from
@@ -123,15 +114,15 @@ def quality_shards_approx(
     the sketch's own tree aggregation, arbitrarily many rows.
 
     Contract matches quality_shards (shard 1 = best) except shard sizes
-    are only approximately equal (within ``relative_error``) and rows
+    are only approximately equal (within the sketch's relative error
+    0.001) and rows
     tied exactly on a cut boundary stay together instead of being split
     by the id tiebreak."""
     from ..functions.text import quality_score
 
-    score = quality_score(F.col("text")) if score is None else score
-    scored = df.withColumn("quality", score.cast("double"))
+    scored = df.withColumn("quality", quality_score(F.col("text")).cast("double"))
     probs = [i / n_shards for i in range(1, n_shards)]
-    cuts = scored.approxQuantile("quality", probs, relative_error)
+    cuts = scored.approxQuantile("quality", probs, 0.001)
     if not cuts:
         return scored.withColumn("shard", F.lit(1))
     # cuts ascend; shard 1 = best: >= the top cut, shard n = below all
@@ -301,14 +292,14 @@ def chunk_documents(
     )
 
 
-def deterministic_take(docs: DataFrame, k: int, salt: str = "") -> DataFrame:
+def deterministic_take(docs: DataFrame, k: int) -> DataFrame:
     """Exactly-k deterministic sample: the k rows with the smallest
-    salted hash — a rerun-stable, engine-portable alternative to
-    df.limit(k) (which is partition-order-dependent) for building
-    fixed-size eval sets. TakeOrderedAndProject keeps per-partition
-    heaps of k, so no global sort materializes."""
+    id hash (salted ``":take"``) — a rerun-stable, engine-portable
+    alternative to df.limit(k) (which is partition-order-dependent) for
+    building fixed-size eval sets. TakeOrderedAndProject keeps
+    per-partition heaps of k, so no global sort materializes."""
     return (
-        docs.withColumn("__u", hash_unit(F.col("doc_id"), f"{salt}:take"))
+        docs.withColumn("__u", hash_unit(F.col("doc_id"), ":take"))
         .orderBy("__u", "doc_id")
         .limit(k)
         .drop("__u")
@@ -358,7 +349,7 @@ def weighted_take(docs: DataFrame, weight_col: str, k: int) -> DataFrame:
     )
 
 
-def dsir_importance(docs: DataFrame, target: Column, buckets: int = 4096) -> DataFrame:
+def dsir_importance(docs: DataFrame, target: Column) -> DataFrame:
     """DSIR-style importance weights (Data Selection via Importance
     Resampling, Xie et al., NeurIPS 2023): score every document by the
     log-likelihood ratio of its hashed n-gram features under a TARGET
@@ -369,7 +360,7 @@ def dsir_importance(docs: DataFrame, target: Column, buckets: int = 4096) -> Dat
     meaning "more target-like".
 
     Features are word unigrams + bigrams WITH multiplicity, hashed into
-    ``buckets`` buckets by the md5-derived integer hash (deterministic —
+    4096 buckets by the md5-derived integer hash (deterministic —
     the DuckDB oracle replays the whole pipeline, hash included).
     Both models are Laplace-smoothed (alpha = 1) over the same bucket
     space, so OOV buckets contribute a finite prior ratio.
@@ -379,10 +370,10 @@ def dsir_importance(docs: DataFrame, target: Column, buckets: int = 4096) -> Dat
     frame is persisted (spillable) because the model, the normalization
     totals, AND the final per-doc reduce all derive from it; without the
     persist Spark would re-run the gram explode per consumer branch
-    (measured 2x the operator cost). The 2x``buckets``-cell model and
+    (measured 2x the operator cost). The 2x4096-cell model and
     its 1-row totals broadcast back (no driver collect), and the final
     per-doc reduce is a second skinny shuffle on the id. The persisted
-    frame is bounded by docs x min(doc_len, buckets) rows — ~two orders
+    frame is bounded by docs x min(doc_len, 4096) rows — ~two orders
     smaller than the raw gram instances it summarizes — which is the
     100 TB property DSIR's hashed-feature design exists for."""
     # explicit-count repartition before the compute-heavy explode (same
@@ -419,7 +410,7 @@ def dsir_importance(docs: DataFrame, target: Column, buckets: int = 4096) -> Dat
         "is_target",
         (
             F.conv(F.substring(F.md5(F.col("g").cast("binary")), 1, 12), 16, 10).cast("long")
-            % buckets
+            % 4096
         ).alias("b"),
     )
     # is_target rides the groupBy key (functionally dependent on the id,
@@ -438,8 +429,8 @@ def dsir_importance(docs: DataFrame, target: Column, buckets: int = 4096) -> Dat
     llr_model = model.crossJoin(F.broadcast(tot)).select(
         "b",
         (
-            F.log((F.col("ct") + F.lit(1.0)) / (F.col("tt") + F.lit(float(buckets))))
-            - F.log((F.col("cr") + F.lit(1.0)) / (F.col("tr") + F.lit(float(buckets))))
+            F.log((F.col("ct") + F.lit(1.0)) / (F.col("tt") + F.lit(4096.0)))
+            - F.log((F.col("cr") + F.lit(1.0)) / (F.col("tr") + F.lit(4096.0)))
         ).alias("llr"),
     )
     return (
@@ -457,15 +448,13 @@ def dsir_importance(docs: DataFrame, target: Column, buckets: int = 4096) -> Dat
     )
 
 
-def epoch_plan(
-    docs: DataFrame, budget_tokens: float, group_col: str = "source"
-) -> DataFrame:
+def epoch_plan(docs: DataFrame, budget_tokens: float) -> DataFrame:
     """Token-budget epoch planner: allocate a training budget across
-    sources with temperature-smoothed mixture weights and an epoch cap —
-    the planning step of every data-mixing recipe (temperature sampling
-    a la multilingual LM training; the epoch cap is the
-    data-constrained-scaling guard against over-repeating small sources,
-    Muennighoff et al. 2023). Returns one row per source:
+    ``source`` values with temperature-smoothed mixture weights and an
+    epoch cap — the planning step of every data-mixing recipe
+    (temperature sampling a la multilingual LM training; the epoch cap
+    is the data-constrained-scaling guard against over-repeating small
+    sources, Muennighoff et al. 2023). Returns one row per source:
     (group, avail_tokens, weight, desired_tokens, alloc_tokens, epochs,
     clipped).
 
@@ -488,7 +477,7 @@ def epoch_plan(
 
     per_src = (
         docs.filter(F.col("text").isNotNull())
-        .groupBy(F.col(group_col).alias("grp"))
+        .groupBy(F.col("source").alias("grp"))
         .agg(F.sum(whitespace_token_count(F.col("text"))).alias("avail"))
     )
     # temperature 2 is a sqrt, which is IEEE-exactly-rounded, so the
@@ -526,7 +515,7 @@ def epoch_plan(
         alloc0.crossJoin(F.broadcast(totals))
         .withColumn("alloc", alloc)  # computed ONCE; epochs derives from it
         .select(
-            F.col("grp").alias(group_col),
+            F.col("grp").alias("source"),
             F.col("avail").alias("avail_tokens"),
             F.round("weight", 4).alias("weight"),
             F.round("desired", 4).alias("desired_tokens"),
@@ -535,14 +524,13 @@ def epoch_plan(
             (F.col("e0") >= F.lit(4.0)).alias("clipped"),
         )
     )
-    return final.orderBy(group_col)
+    return final.orderBy("source")
 
 
 def global_rank(
     df: DataFrame,
     order_exprs: list,
     rank_col: str = "rank",
-    num_partitions: int | None = None,
     total_col: str | None = None,
 ) -> DataFrame:
     """EXACT dense global rank (1-based) by a TOTAL order, without the
@@ -581,8 +569,7 @@ def global_rank(
     counts frame the offsets come from, so callers that need (rank, n)
     pairs (exact_ntile, quantile cuts) pay NO extra pass over the
     data."""
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     d = (
         df.repartitionByRange(n, *order_exprs)
         # the within-partition rank comes from sortWithinPartitions +
@@ -660,9 +647,9 @@ def exact_ntile(
     return ranked.withColumn(out_col, tile.cast("int")).drop("_nt_r", "_nt_n")
 
 
-def rrf_fuse(a: DataFrame, b: DataFrame, id_col: str, k: int = 60) -> DataFrame:
+def rrf_fuse(a: DataFrame, b: DataFrame, id_col: str) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al., SIGIR 2009) of two
-    ranked lists: ``score = 1/(k + rank_a) + 1/(k + rank_b)`` over the
+    ranked lists: ``score = 1/(60 + rank_a) + 1/(60 + rank_b)`` over the
     ids present in BOTH lists. The two divisions and one addition are a
     fixed-order float expression over integer ranks — bit-exact in any
     IEEE engine, no rounding needed for reproducibility.
@@ -678,7 +665,7 @@ def rrf_fuse(a: DataFrame, b: DataFrame, id_col: str, k: int = 60) -> DataFrame:
         F.col(id_col),
         "rank_a",
         "rank_b",
-        (one / (F.lit(k) + F.col("rank_a")) + one / (F.lit(k) + F.col("rank_b"))).alias(
+        (one / (F.lit(60) + F.col("rank_a")) + one / (F.lit(60) + F.col("rank_b"))).alias(
             "rrf"
         ),
     )
@@ -761,10 +748,9 @@ def forget_cascade(
     orders: DataFrame,
     lineitem: DataFrame,
     events: DataFrame,
-    frac: float = 0.02,
 ) -> DataFrame:
     """Right-to-be-forgotten cascade audit: the forget policy is a pure
-    function of the user key (``hash_unit(key) < frac`` — in production
+    function of the user key (``hash_unit(key) < 0.02`` — in production
     the predicate is a membership test against the deletion-request
     table; the hash stands in as a deterministic fixture), applied
     row-locally to ``customer``/``orders``/``events``, and cascaded to
@@ -777,12 +763,12 @@ def forget_cascade(
     Scale shape: three of four tables never shuffle (the predicate is
     row-local scan arithmetic fused into the aggregate); the lineitem
     leg is ONE keyed left-semi-style join against the dropped-orders
-    frame (a ``frac`` fraction of orders — keyed equi-join, broadcast
+    frame (a 0.02 fraction of orders — keyed equi-join, broadcast
     only if the optimizer proves it small). Counts are conditional sums
     in a single pass per table."""
 
     def gone(key: Column) -> Column:
-        return hash_unit(key, "forget") < F.lit(frac)
+        return hash_unit(key, "forget") < F.lit(0.02)
 
     def stat(df: DataFrame, name: str, dropped: Column) -> DataFrame:
         return df.agg(
@@ -1000,7 +986,7 @@ def quantile_normalize_report(
     )
 
 
-def negative_sampling_table(docs: DataFrame, top_k: int = 50) -> DataFrame:
+def negative_sampling_table(docs: DataFrame) -> DataFrame:
     """word2vec-style negative-sampling table (Mikolov et al. 2013):
     unigram counts raised to the 3/4 power, normalized, and laid out as
     cumulative [lo, hi) ranges a sampler hits with one uniform draw —
@@ -1010,7 +996,7 @@ def negative_sampling_table(docs: DataFrame, top_k: int = 50) -> DataFrame:
     The 3/4 power is computed as sqrt(c)·sqrt(sqrt(c)) — each sqrt is
     exactly rounded by IEEE-754, so the COMPOSITION is bit-identical
     across engines, unlike a libm pow(x, 0.75) whose last-ulp behavior
-    is implementation-defined. The table keeps the ``top_k`` heaviest
+    is implementation-defined. The table keeps the 50 heaviest
     terms (count-desc, term tiebreak — at real scale the sampler's
     table is capped anyway and the tail aliases into a remainder
     bucket); the cumulative window runs over that bounded frame only.
@@ -1028,7 +1014,7 @@ def negative_sampling_table(docs: DataFrame, top_k: int = 50) -> DataFrame:
     total = weighted.agg(F.sum("wt").alias("tot"))
     top = (
         weighted.orderBy(F.desc("c"), F.asc("w"))
-        .limit(top_k)
+        .limit(50)
         .crossJoin(F.broadcast(total))
     )
     win = (
@@ -1107,7 +1093,7 @@ def doremi_weights(docs: DataFrame) -> DataFrame:
     )
 
 
-def score_decile_calibration(docs: DataFrame, n_buckets: int = 10) -> DataFrame:
+def score_decile_calibration(docs: DataFrame) -> DataFrame:
     """Calibration of the unigram-LM fluency score against an OUTCOME
     it should predict (exact-duplicate rate): docs rank into score
     deciles (:func:`exact_ntile` over (score desc, id) — decile 1 =
@@ -1132,7 +1118,7 @@ def score_decile_calibration(docs: DataFrame, n_buckets: int = 10) -> DataFrame:
     binned = exact_ntile(
         scored,
         [F.desc("logprob_mean"), F.asc("doc_id")],
-        n_buckets,
+        10,
         out_col="decile",
     )
     return (
@@ -1160,10 +1146,10 @@ def score_decile_calibration(docs: DataFrame, n_buckets: int = 10) -> DataFrame:
     )
 
 
-def dp_count_release(events: DataFrame, epsilon: float = 1.0) -> DataFrame:
-    """Differential-privacy release REHEARSAL for grouped counts: add
-    Laplace(1/ε) noise to each group's count (sensitivity 1 — one user
-    event moves one count by one) and report the utility cost
+def dp_count_release(events: DataFrame) -> DataFrame:
+    """Differential-privacy release REHEARSAL for grouped counts at
+    ε = 1: add Laplace(1/ε) noise to each group's count (sensitivity 1 —
+    one user event moves one count by one) and report the utility cost
     (absolute + relative error) next to the release — the audit a
     pipeline runs BEFORE committing to an ε, answering "is the noisy
     histogram still usable?".
@@ -1191,7 +1177,7 @@ def dp_count_release(events: DataFrame, epsilon: float = 1.0) -> DataFrame:
     )
     centered = u - F.lit(0.5)
     noise = (
-        F.lit(-1.0 / epsilon)
+        F.lit(-1.0)
         * F.signum(centered)
         * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(centered))
     )
@@ -1207,10 +1193,10 @@ def dp_count_release(events: DataFrame, epsilon: float = 1.0) -> DataFrame:
     ).orderBy("group_key")
 
 
-def weighted_reservoir_sample(docs: DataFrame, k: int = 50) -> DataFrame:
+def weighted_reservoir_sample(docs: DataFrame) -> DataFrame:
     """Weighted sampling WITHOUT replacement (Efraimidis–Spirakis
     A-ES): each row draws key = −ln(u)/w from the deterministic md5
-    unit interval and the k SMALLEST keys form the sample — exactly
+    unit interval and the 50 SMALLEST keys form the sample — exactly
     the distribution of sequential weighted draws, computed as one
     embarrassingly-parallel map + a map-side top-k (orderBy+limit =
     TakeOrdered; no global sort, no sequential reservoir). THE
@@ -1235,7 +1221,7 @@ def weighted_reservoir_sample(docs: DataFrame, k: int = 50) -> DataFrame:
             F.round(key, 9).alias("key"),
         )
         .orderBy("key", "id")
-        .limit(k)
+        .limit(50)
     )
     stats = docs.filter(F.col("n_chars") > 0).agg(
         F.count(F.lit(1)).alias("n_corpus"),
@@ -1259,15 +1245,14 @@ def weighted_reservoir_sample(docs: DataFrame, k: int = 50) -> DataFrame:
     )
 
 
-def curriculum_plan(docs: DataFrame, n_stages: int = 4) -> DataFrame:
+def curriculum_plan(docs: DataFrame) -> DataFrame:
     """Quality-curriculum training schedule with spaced replay — the
     stage-sequencing companion to :func:`quality_shards` (which only
-    TIERS the corpus) and :func:`epoch_plan` (which budgets epochs
-    per source): stage k trains fresh on quality shard k (shard 1 =
-    best, first) and replays a deterministic 0.2 hash
-    sample of every EARLIER shard — the standard anti-forgetting
-    mixture for curriculum LM training (Bengio et al. 2009's
-    curriculum + replay buffers).
+    TIERS the corpus) and :func:`epoch_plan` (which budgets epochs per
+    source): 4 stages, stage k trains fresh on quality shard k (shard 1
+    = best, first) and replays a deterministic 0.2 hash sample of every
+    EARLIER shard — the standard anti-forgetting mixture for curriculum
+    LM training (Bengio et al. 2009's curriculum + replay buffers).
 
     Per stage: fresh/replay doc counts, fresh/replay char volumes,
     and the replay share of the stage's mix.
@@ -1278,14 +1263,14 @@ def curriculum_plan(docs: DataFrame, n_stages: int = 4) -> DataFrame:
     stage so a doc's replay draws are independent across stages);
     sums are integers in DECIMAL(38,0); the one share division is
     float. Scale shape: the ntile two-pass, then one explode bounded
-    by n_stages per row and one stage-keyed aggregate."""
-    sharded = quality_shards(docs, n_shards=n_stages)
+    by the 4 stages per row and one stage-keyed aggregate."""
+    sharded = quality_shards(docs, n_shards=4)
     st = sharded.select(
         F.col("doc_id"), F.col("shard"), F.col("n_chars")
     ).select(
         "*",
         F.explode(
-            F.sequence(F.col("shard"), F.lit(n_stages))
+            F.sequence(F.col("shard"), F.lit(4))
         ).alias("stage"),
     )
     u = (

@@ -120,10 +120,11 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
     return docs.join(keep, "doc_id", "left_semi")
 
 
-def minhash_signatures(docs: DataFrame, num_hashes: int = 64) -> DataFrame:
-    """(id, signature array<bigint>) — min over shingles of the
-    full-range universal-hash family (a_i*x + b_i) mod 2^31-1 on an
-    md5-derived base (see ``_minhash_params``), all JVM-side.
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(id, signature array<bigint>) — min over word 3-shingles of 64
+    hashes from the full-range universal-hash family (a_i*x + b_i) mod
+    2^31-1 on an md5-derived base (see ``_minhash_params``), all
+    JVM-side.
 
     Shape: explode shingles → k affine hashes per shingle → groupBy(id)
     with k MIN aggregates → pack array. The k aggregates are combined
@@ -152,38 +153,30 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64) -> DataFrame:
         "`doc_id`",  # backticks: selectExpr must quote what F.col would
         *[
             f"({a} * x + {b}) % {_MINHASH_P} AS h{i}"
-            for i, (a, b) in ((i, _minhash_params(i)) for i in range(num_hashes))
+            for i, (a, b) in ((i, _minhash_params(i)) for i in range(64))
         ],
     )
     mins = hashed.groupBy("doc_id").agg(
-        *[F.expr(f"min(h{i}) AS h{i}") for i in range(num_hashes)]
+        *[F.expr(f"min(h{i}) AS h{i}") for i in range(64)]
     )
     return mins.selectExpr(
         "`doc_id`",
-        "array(" + ", ".join(f"h{i}" for i in range(num_hashes)) + ") AS signature",
+        "array(" + ", ".join(f"h{i}" for i in range(64)) + ") AS signature",
     )
 
 
-def _band_rows(
-    sigs: DataFrame, id_col: str, num_hashes: int, bands: int
-) -> DataFrame:
-    """Skinny (id, band_idx, band_hash) rows from a minhash signature
-    table — the single definition of the banding key used by every LSH
-    consumer (batch pairs + incremental gate), so a banding change can
-    never diverge between them. Validates that ``bands`` divides
-    ``num_hashes``: a silent remainder would drop hashes from every band
-    key and lower recall below what the caller asked for."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"bands={bands} must divide num_hashes={num_hashes} "
-            f"(remainder {num_hashes % bands} hashes would be dropped)"
-        )
-    rows_per_band = num_hashes // bands
+def _band_rows(sigs: DataFrame) -> DataFrame:
+    """Skinny (doc_id, band_idx, band_hash) rows from a minhash
+    signature table: the 64 hashes cut into 16 bands of 4 — the single
+    definition of the banding key used by every LSH consumer (batch
+    pairs + incremental gate), so a banding change can never diverge
+    between them."""
+    rows_per_band = 4
     return sigs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(15)),
                 # band key = md5 of the comma-joined band slice, cut to
                 # 15 hex chars (60-bit bigint): same shuffle width as a
                 # long hash, and — unlike xxhash64 — the DuckDB oracle
@@ -210,24 +203,23 @@ def _band_rows(
     )
 
 
-def minhash_candidate_pairs(
-    docs: DataFrame, num_hashes: int = 64, bands: int = 16
-) -> DataFrame:
-    """LSH banding: split the signature into ``bands`` rows, hash each
-    band, self-join on (band_idx, band_hash). Only same-bucket docs meet
-    in the shuffle; estimated Jaccard = matching minhash fraction."""
+def minhash_candidate_pairs(docs: DataFrame) -> DataFrame:
+    """LSH banding: split the 64-hash signature into 16 bands of 4,
+    hash each band, self-join on (band_idx, band_hash). Only same-bucket
+    docs meet in the shuffle; estimated Jaccard = matching minhash
+    fraction."""
     # cache the per-doc signature table: it has THREE consumers (band
     # explode + both re-attach joins) and Catalyst does not reuse the
     # aggregation exchange across them — uncached, the whole
     # shingle-explode + k-hash + k-min pipeline would run three times.
     # One 8k-byte row per doc, far smaller than the corpus; the
     # CacheManager dedupes repeated calls by logical plan.
-    sigs = minhash_signatures(docs, num_hashes=num_hashes).cache()
+    sigs = minhash_signatures(docs).cache()
     # the band self-join shuffles SKINNY rows (id, band_idx, band_hash =
     # 24 bytes) — not the 64-long signature, which would ride the shuffle
-    # `bands` times per doc. Signatures re-attach once per side AFTER
+    # 16 times per doc. Signatures re-attach once per side AFTER
     # candidate pairs are deduped, via two per-doc joins.
-    banded = _band_rows(sigs, "doc_id", num_hashes, bands)
+    banded = _band_rows(sigs)
     a = banded.alias("a")
     b = banded.alias("b")
     cand = (
@@ -258,7 +250,7 @@ def minhash_candidate_pairs(
                         lambda eq: eq,
                     )
                 )
-                / F.lit(float(num_hashes))
+                / F.lit(64.0)
             ).alias("est_jaccard"),
         )
     )
@@ -591,11 +583,10 @@ def near_dup_clusters(docs: DataFrame, est_threshold: float = 0.5) -> DataFrame:
     return connected_components(nodes, pairs)
 
 
-def connected_components(
-    nodes: DataFrame, pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
-) -> DataFrame:
+def connected_components(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     """Connected components by iterative min-label propagation:
-    ``nodes`` is an (id) frame, ``pairs`` an undirected edge list;
+    ``nodes`` is an (id) frame, ``pairs`` an undirected (id_a, id_b)
+    edge list;
     returns (id, cluster_id) where cluster_id is the smallest id in the
     component.
 
@@ -619,10 +610,10 @@ def connected_components(
             F.explode(
                 F.array(
                     F.struct(
-                        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+                        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
                     ),
                     F.struct(
-                        F.col(id_b).alias("src"), F.col(id_a).alias("dst")
+                        F.col("id_b").alias("src"), F.col("id_a").alias("dst")
                     ),
                 )
             ).alias("e")
@@ -787,16 +778,14 @@ def incremental_dedup(new_docs: DataFrame, seen_docs: DataFrame) -> DataFrame:
     return new_docs.join(keep, "doc_id", "left_semi")
 
 
-def duplicated_span_stats(
-    docs: DataFrame, n: int = 8, heavy_frac: float = 0.5
-) -> DataFrame:
+def duplicated_span_stats(docs: DataFrame, n: int = 8) -> DataFrame:
     """Exact duplicated-SPAN report (substring-level dedup signal, the
     metric behind suffix-array training-data dedup a la Lee et al. 2022
     "Deduplicating Training Data Makes Language Models Better"): for
     each document, the fraction of its n-word spans that also occur in
     at least one OTHER document, aggregated per ``source`` — average
-    duplicated-span fraction, and how many docs are "heavy" (>=
-    ``heavy_frac`` of their spans duplicated). Docs shorter than ``n``
+    duplicated-span fraction, and how many docs are "heavy" (>= half
+    of their spans duplicated). Docs shorter than ``n``
     words contribute no spans and are excluded.
 
     Scale shape: spans are hashed to 64-bit keys before any shuffle
@@ -846,7 +835,7 @@ def duplicated_span_stats(
             F.count(F.lit(1)).alias("n_docs"),
             F.round(F.avg(F.col("dup_spans") / F.col("n_spans")), 9).alias("avg_dup_frac"),
             F.sum(
-                (F.col("dup_spans") >= F.lit(heavy_frac) * F.col("n_spans")).cast("long")
+                (F.col("dup_spans") >= F.lit(0.5) * F.col("n_spans")).cast("long")
             ).alias("n_heavy"),
         )
         .withColumnRenamed("grp", "source")
@@ -934,16 +923,13 @@ def incremental_near_dup(
     post-dedup), and survivors come back via a broadcast-friendly
     left_anti on ids. No new-vs-new comparison — within-batch dedup is
     :func:`minhash_candidate_pairs`'s job if wanted."""
-    def _banded(sigs: DataFrame):
-        return _band_rows(sigs, "doc_id", 64, 16)
-
     new_sigs = minhash_signatures(new_docs).cache()
     seen_sigs = minhash_signatures(seen_docs).cache()
     cand = (
-        _banded(new_sigs)
+        _band_rows(new_sigs)
         .alias("n")
         .join(
-            _banded(seen_sigs).alias("s"),
+            _band_rows(seen_sigs).alias("s"),
             (F.col("n.band_idx") == F.col("s.band_idx"))
             & (F.col("n.band_hash") == F.col("s.band_hash")),
         )

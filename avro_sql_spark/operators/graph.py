@@ -825,14 +825,14 @@ def markov_stationary(transitions: DataFrame, iterations: int = 8) -> DataFrame:
     return pi.select("node", F.round("pi", 6).alias("pi")).orderBy("node")
 
 
-def link_prediction_topk(edges: DataFrame, top_k: int = 50) -> DataFrame:
+def link_prediction_topk(edges: DataFrame) -> DataFrame:
     """Link-prediction candidate scores for an undirected graph
     (symmetric edge list, copurchase_edges' contract): for every
     NON-adjacent node pair sharing >= 1 neighbor, the common-neighbor
     count and the Adamic–Adar index Σ_z 1/ln(deg(z)) (Adamic & Adar
     2003) — the classic "products bought together next quarter" /
-    recommendation-candidate generator. Top-k by (adamic_adar desc, a,
-    b).
+    recommendation-candidate generator. Top 50 by (adamic_adar desc,
+    a, b).
 
     Shape: candidate pairs come from one self-equi-join of the edge
     list ON THE SHARED NEIGHBOR (wedges z: a–z–b, a < b) — never an
@@ -875,7 +875,7 @@ def link_prediction_topk(edges: DataFrame, top_k: int = 50) -> DataFrame:
             F.round(F.col("aa_dec").cast("double"), 6).alias("adamic_adar"),
         )
         .orderBy(F.desc("adamic_adar"), F.asc("a"), F.asc("b"))
-        .limit(top_k)
+        .limit(50)
     )
 
 
@@ -932,24 +932,19 @@ def local_clustering_curve(edges: DataFrame) -> DataFrame:
     )
 
 
-def hits_supplier_authority(
-    orders: DataFrame,
-    lineitem: DataFrame,
-    rounds: int = 3,
-    top_k: int = 20,
-) -> DataFrame:
+def hits_supplier_authority(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """HITS (Kleinberg 1999) on the bipartite customer→supplier
     purchase graph: a supplier is a good AUTHORITY when good HUB
     customers (those who buy broadly from good suppliers) buy from it
     — the mutually-recursive ranking that separates "many sales" from
-    "sales to discerning buyers". Top-k suppliers by authority after
-    ``rounds`` mutual-reinforcement rounds, max-normalized.
+    "sales to discerning buyers". Top 20 suppliers by authority after
+    3 mutual-reinforcement rounds, max-normalized.
 
     Exactness: the iteration runs UNNORMALIZED in pure integer
     arithmetic — h₀ = 1, a_{r+1}(s) = Σ_c w(c,s)·h_r(c), h_{r+1}(c) =
     Σ_s w(c,s)·a_{r+1}(s), all accumulated in DECIMAL(38,0) (ranking
     is scale-invariant, so skipping per-round normalization changes
-    nothing but magnitude; with rounds=3 the worst-case magnitude is
+    nothing but magnitude; with 3 rounds the worst-case magnitude is
     (Σw)³ ≪ 10³⁸). The ONLY float op is the final max-normalization
     division. Scale shape: the weight frame aggregates once; each
     round is one node-keyed equi-join + one map-side-combined
@@ -973,7 +968,7 @@ def hits_supplier_authority(
     # shuffles, which IS the scale plan for a big-side score frame
     auth = None
     hub = None
-    for r in range(rounds):
+    for r in range(3):
         if hub is None:
             auth = w.groupBy("s").agg(F.sum("w").alias("a"))
         else:
@@ -982,7 +977,7 @@ def hits_supplier_authority(
                 .groupBy("s")
                 .agg(F.sum(F.col("w") * F.col("h")).alias("a"))
             )
-        if r + 1 == rounds:
+        if r == 2:
             break  # the trailing hub frame would go unused
         hub = (
             w.join(F.broadcast(auth), "s")
@@ -1003,19 +998,16 @@ def hits_supplier_authority(
             ).alias("authority"),
         )
         .orderBy(F.desc("authority"), F.asc("supplier"))
-        .limit(top_k)
+        .limit(20)
     )
 
 
-def basket_affinity_lift(
-    lineitem: DataFrame,
-    min_pair_orders: int = 3,
-    top_k: int = 20,
-) -> DataFrame:
+def basket_affinity_lift(lineitem: DataFrame) -> DataFrame:
     """Market-basket association rules over co-purchased part pairs:
     support, confidence, and LIFT (observed co-occurrence over the
     independence expectation) — the "customers who bought A also
-    bought B" table, reported for the top-k pairs by lift. Lift > 1
+    bought B" table, reported for the top 20 pairs by lift among pairs
+    bought together in at least 3 orders. Lift > 1
     is real affinity; confidence alone just rediscovers popular items.
 
     Shape: the pair frame is the IN-ROW basket-pair device (baskets
@@ -1047,7 +1039,7 @@ def basket_affinity_lift(
         .select(F.explode(pair_structs).alias("p"))
         .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
         .agg(F.count(F.lit(1)).alias("cab"))
-        .filter(F.col("cab") >= min_pair_orders)
+        .filter(F.col("cab") >= 3)
     )
     per_part = d.groupBy(F.col("l_partkey").alias("k")).agg(
         F.count(F.lit(1)).alias("ck")
@@ -1080,7 +1072,7 @@ def basket_affinity_lift(
     )
     return scored.orderBy(
         F.desc("lift"), F.asc("pa"), F.asc("pb")
-    ).limit(top_k)
+    ).limit(20)
 
 
 def degree_powerlaw_fit(edges: DataFrame) -> DataFrame:
@@ -1131,15 +1123,12 @@ def degree_powerlaw_fit(edges: DataFrame) -> DataFrame:
     )
 
 
-def community_modularity(
-    edges: DataFrame,
-    rounds: int = 2,
-) -> DataFrame:
+def community_modularity(edges: DataFrame) -> DataFrame:
     """Newman modularity Q of the deterministic label-propagation
     partition — the one-number quality check for ANY community
     assignment (Q near 0: the "communities" are no better than random
     wiring; 0.3+: real structure worth exploiting for locality or
-    mixture design). Runs the :func:`label_propagation` rounds on its
+    mixture design). Runs 2 :func:`label_propagation` rounds on its
     own canonical edge set, then the exact modularity identity.
 
     Exactness: with m undirected edges, SL monochrome (intra-community)
@@ -1153,7 +1142,7 @@ def community_modularity(
     # three consumers (la, lb, dc) and _propagate leaves its LAST round
     # unmaterialized — checkpoint so the final vote round (join +
     # window argmax) computes once, not three times
-    labels = _propagate(und, rounds).localCheckpoint(eager=True)
+    labels = _propagate(und, 2).localCheckpoint(eager=True)
     la = labels.select(F.col("id").alias("a"), F.col("community").alias("ca"))
     lb = labels.select(F.col("id").alias("b"), F.col("community").alias("cb"))
     mono = (
@@ -1193,7 +1182,7 @@ def community_modularity(
     )
 
 
-def diameter_double_sweep(edges: DataFrame, max_hops: int = 8) -> DataFrame:
+def diameter_double_sweep(edges: DataFrame) -> DataFrame:
     """Graph-diameter lower bound by the classic DOUBLE SWEEP (Magnien
     et al. 2009): BFS from an arbitrary node (the minimum id — a
     deterministic choice), then BFS again from the farthest node found;
@@ -1203,23 +1192,23 @@ def diameter_double_sweep(edges: DataFrame, max_hops: int = 8) -> DataFrame:
     that survives a billion-node graph.
 
     Both sweeps reuse :func:`bfs_distances` (edge-linear frontier
-    rounds, ``max_hops``-bounded — hops beyond the bound are absent and
+    rounds, bounded at 8 hops — hops beyond the bound are absent and
     the estimate is then itself a lower bound, stated in the output
     name); all outputs are integers. Requires a symmetric edge list
     (copurchase_edges emits both directions).
 
     The edge frame is localCheckpoint-ed ONCE up front: every BFS round
     joins the frontier against it, so without the checkpoint each of the
-    up-to-2*max_hops rounds re-derives the whole edge list from its
+    up-to-16 rounds re-derives the whole edge list from its
     lineage (for copurchase_edges that is the full basket self-pairing
     aggregate per round — measured 11.3 s -> ~3 s at sf0.1)."""
     sym = edges.select("src", "dst").localCheckpoint(eager=True)
     start = sym.agg(F.min("src").alias("node"))
-    d1 = bfs_distances(sym, start, max_hops=max_hops).localCheckpoint(
+    d1 = bfs_distances(sym, start, max_hops=8).localCheckpoint(
         eager=True
     )
     far = d1.orderBy(F.desc("dist"), F.asc("node")).limit(1).select("node")
-    d2 = bfs_distances(sym, far, max_hops=max_hops)
+    d2 = bfs_distances(sym, far, max_hops=8)
     s1 = d1.agg(
         F.max("dist").alias("ecc_start"), F.count(F.lit(1)).alias("n_reached")
     )

@@ -12,10 +12,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_join(
-    big: DataFrame, small: DataFrame, key: str, how: str = "inner"
-) -> DataFrame:
-    """Equi-join where ``big``'s hot keys are split across
+def salted_join(big: DataFrame, small: DataFrame, key: str) -> DataFrame:
+    """Inner equi-join where ``big``'s hot keys are split across
     16 tasks: big side gets a random-ish (hash-derived,
     deterministic) salt, small side is replicated once per bucket, and
     the join key becomes (key, salt). Row multiplicity is unchanged —
@@ -25,8 +23,7 @@ def salted_join(
     small_salted = small.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(15)))
     )
-    out = big_salted.join(small_salted, [key, "_salt"], how)
-    return out.drop("_salt")
+    return big_salted.join(small_salted, [key, "_salt"]).drop("_salt")
 
 
 def _round_bits(num_bits: int) -> int:
@@ -113,10 +110,8 @@ def bloom_might_contain(key, words: "list[int]", num_bits: int):
     return F.forall(F.array(*_bloom_hashes(key, num_bits, 7)), _probe)
 
 
-def bloom_prefilter_join(
-    big: DataFrame, small: DataFrame, key: str, how: str = "inner"
-) -> DataFrame:
-    """Selective join with a Bloom prefilter on the BIG side: the small
+def bloom_prefilter_join(big: DataFrame, small: DataFrame, key: str) -> DataFrame:
+    """Selective inner join with a Bloom prefilter on the BIG side: the small
     side's keys are folded into a fixed-size filter (build_bloom), the
     big side drops non-matching rows BEFORE its shuffle, then the real
     equi-join runs on the survivors. False positives pass the filter but
@@ -126,32 +121,22 @@ def bloom_prefilter_join(
     rows that can match move). This is the hand-rolled, always-on form
     of Spark's runtime row-level bloom pushdown, usable when the
     optimizer won't inject one (non-equi plans, reused filters, or a
-    filter persisted across jobs).
-
-    Only join types where pre-pruning unmatched BIG rows is semantics-
-    preserving are allowed: inner (false positives die in the join) and
-    left_semi (the filter is a superset of the semi-join predicate).
-    Outer/anti joins NEED the unmatched rows the filter removes."""
-    if how not in ("inner", "left_semi"):
-        from ..errors import AvroSqlError
-
-        raise AvroSqlError(
-            "bloom_prefilter_join preserves semantics only for "
-            f"'inner' and 'left_semi' joins, got '{how}' — outer/anti "
-            "joins need the unmatched rows the prefilter drops"
-        )
+    filter persisted across jobs). The join is inner because pre-pruning
+    unmatched BIG rows preserves only inner (and semi) semantics:
+    outer/anti joins NEED the unmatched rows the filter removes."""
     num_bits = _round_bits(1 << 18)
     words = build_bloom(small, key, num_bits)
     pruned = big.filter(bloom_might_contain(F.col(key), words, num_bits))
-    return pruned.join(small, key, how)
+    return pruned.join(small, key)
 
 
-def broadcast_if_small(df: DataFrame, max_rows: int = 1_000_000) -> DataFrame:
-    """Broadcast hint guarded by a cheap count — for dimension tables of
-    unknown size in generic pipelines. (On a real deployment prefer
-    statistics / AQE; the explicit hint is for when stats are missing.)"""
-    n = df.limit(max_rows + 1).count()
-    return F.broadcast(df) if n <= max_rows else df
+def broadcast_if_small(df: DataFrame) -> DataFrame:
+    """Broadcast hint guarded by a cheap count (at most 1,000,000 rows)
+    — for dimension tables of unknown size in generic pipelines. (On a
+    real deployment prefer statistics / AQE; the explicit hint is for
+    when stats are missing.)"""
+    n = df.limit(1_000_001).count()
+    return F.broadcast(df) if n <= 1_000_000 else df
 
 def blocked_fuzzy_pairs(
     df: DataFrame,

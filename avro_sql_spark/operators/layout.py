@@ -323,22 +323,16 @@ def skipping_report(
     )
 
 
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 16,
-    num_files: int | None = None,
-) -> None:
+def zorder_write(df: DataFrame, path: str, cols: list[str]) -> None:
     """Write ``df`` clustered along the Z-order curve of ``cols``:
     range-repartition on the z-value (contiguous curve segments per
     file — this is what localizes each column's value range per file)
     then sort within partitions so row groups inside a file stay tight.
     Downstream range predicates on ANY of ``cols`` then prune files via
-    parquet min/max stats. ``num_files`` defaults to the current
-    shuffle parallelism."""
-    z = zvalue(df, cols, bits).alias("__z")
-    n = num_files or df.sparkSession.sparkContext.defaultParallelism
+    parquet min/max stats. The z-value is 16 bits per column, and the
+    write makes one file per default-parallelism slot."""
+    z = zvalue(df, cols).alias("__z")
+    n = df.sparkSession.sparkContext.defaultParallelism
     (
         df.withColumn("__z", z)
         .repartitionByRange(n, F.col("__z"))
@@ -689,14 +683,12 @@ def bloom_fpr_audit(
     df: DataFrame,
     key_col: str,
     order_col: str,
-    n_files: int = 16,
-    probe_rate: float = 0.2,
 ) -> DataFrame:
-    """EMPIRICAL Bloom-filter false-positive audit: per ingest-cut file,
-    build a real Bloom bitmap over the file's keys (m = 8·63
-    bits, 5 md5-derived positions per key — 63 bits per long
-    keeps every shift off the sign bit), probe it with a deterministic
-    hash-sample of keys the file does NOT contain, and count the exact
+    """EMPIRICAL Bloom-filter false-positive audit: per ingest-cut file
+    (16 files), build a real Bloom bitmap over the file's keys (m = 8·63
+    bits, 5 md5-derived positions per key — 63 bits per long keeps every
+    shift off the sign bit), probe it with a deterministic hash-sample
+    (rate 0.2) of keys the file does NOT contain, and count the exact
     false positives — measured FPR next to the (1-e^{-kn/m})^k formula
     the planner uses (:func:`key_locality_report`). The formula-vs-
     reality gap is what decides whether footer blooms are worth their
@@ -705,7 +697,7 @@ def bloom_fpr_audit(
     Shape: bitmap construction is one bit_or aggregate per file over
     in-row per-key bitmaps (pure integer Column arithmetic — no UDF);
     membership leaves via left_anti; the probe cross join is
-    (sampled keys × n_files) — rate-bounded, never keys × keys. Every
+    (sampled keys × 16 files) — rate-bounded, never keys × keys. Every
     hash is md5 arithmetic both engines replay bit-for-bit."""
     from .curation import exact_ntile, hash_unit
 
@@ -722,7 +714,7 @@ def bloom_fpr_audit(
     # cheaper than checkpoint-block re-reads here. Twice-confirmed
     # negative result; see OPTIMIZATION_r09.md.
     files = exact_ntile(
-        base, [F.col("ob"), F.col("k")], n_files, out_col="f"
+        base, [F.col("ob"), F.col("k")], 16, out_col="f"
     ).select("f", "k").distinct()
 
     def positions(key: F.Column) -> F.Column:
@@ -779,12 +771,12 @@ def bloom_fpr_audit(
     blooms = blooms_nk.drop("nk")
     # the probe key's bitmap depends only on k: compute the 5-md5 fold
     # ONCE per sampled key BEFORE the files crossJoin (inside it, each
-    # key would recompute the fold n_files times — measured 16x md5
+    # key would recompute the fold once per file — measured 16x md5
     # work on the probe side)
     probe_keys = (
         base.select("k")
         .distinct()
-        .filter(hash_unit(F.col("k"), "bloomfpr") < F.lit(probe_rate))
+        .filter(hash_unit(F.col("k"), "bloomfpr") < F.lit(0.2))
         .select("k", *bitmap_longs(positions(F.col("k"))))
     )
     # NO anti-join: a member key's bits are all set in its own file's
@@ -804,7 +796,7 @@ def bloom_fpr_audit(
     counted = pb.select(might.cast("long").alias("fp"))
     # sampled member pairs: the probe_keys sampling predicate verbatim,
     # applied to files — a scalar aggregate, not a join
-    ms = files.filter(hash_unit(F.col("k"), "bloomfpr") < F.lit(probe_rate)).agg(
+    ms = files.filter(hash_unit(F.col("k"), "bloomfpr") < F.lit(0.2)).agg(
         F.count(F.lit(1)).alias("ms")
     )
     theo = blooms_nk.select(
@@ -842,7 +834,7 @@ def bloom_fpr_audit(
         )
         .crossJoin(F.broadcast(theo))
         .select(
-            F.lit(n_files).alias("n_files"),
+            F.lit(16).alias("n_files"),
             F.lit(m_bits).alias("m_bits"),
             F.lit(5).alias("k_hashes"),
             F.col("n_probes").cast("bigint").alias("n_probes"),

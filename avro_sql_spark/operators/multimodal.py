@@ -3,10 +3,10 @@ with a typed metadata struct (north-star scope; absent in the reference).
 
 The Spark-side plumbing is real and tested — schema convention, Arrow
 batch shape, ``mapInPandas`` feature extraction, partition sizing. The
-actual codec decode is STUBBED (the image/audio libraries are not in this
-container): ``decode_image`` raises ``NotImplementedError`` unless
-``fake=True``, in which case a deterministic fake decoder stands in so
-the distributed plumbing can be exercised end-to-end.
+actual codecs are STUBBED (the image/audio libraries are not in this
+container): deterministic byte-level stand-ins (``resize_images``'
+nearest-neighbor resample, ``sample_frames``' fixed-size frames) take
+their place so the distributed plumbing can be exercised end-to-end.
 
 Schema convention:
     payload  BINARY                  -- the raw media bytes
@@ -58,21 +58,6 @@ def attach_fake_payload(docs: DataFrame) -> DataFrame:
             F.lit(None).cast("long").alias("duration_ms"),
         ),
     )
-
-
-def decode_image(payload: bytes, fake: bool = False):
-    """Decode an image payload. STUB: real codecs (PIL/opencv) are not
-    available in this environment."""
-    if not fake:
-        raise NotImplementedError(
-            "image decoding requires PIL/opencv, not present in this environment; "
-            "pass fake=True for the deterministic stand-in"
-        )
-    # deterministic fake: 'pixels' are the byte histogram
-    hist = [0] * 8
-    for b in payload:
-        hist[b % 8] += 1
-    return hist
 
 
 FEATURE_SCHEMA = StructType(
@@ -148,11 +133,11 @@ RESIZED_SCHEMA = StructType(
 )
 
 
-def resize_images(media_df: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
-    """Resize pass over image payloads via ``mapInPandas``. The real
-    resample (PIL/opencv) is STUBBED with a deterministic stand-in —
+def resize_images(media_df: DataFrame) -> DataFrame:
+    """Resize pass over image payloads to 32x32 via ``mapInPandas``. The
+    real resample (PIL/opencv) is STUBBED with a deterministic stand-in —
     nearest-neighbor over the raw byte grid, so output size is exactly
-    width*height and reruns agree byte-for-byte — but the Spark shape is
+    32*32 bytes and reruns agree byte-for-byte — but the Spark shape is
     the production one: Arrow batches in, fixed-size payloads out, and
     the output schema carries the new dimensions so downstream metadata
     queries never re-read the bytes."""
@@ -160,7 +145,7 @@ def resize_images(media_df: DataFrame, width: int = 32, height: int = 32) -> Dat
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        target = width * height
+        target = 32 * 32
 
         def fake_resample(b: bytes) -> bytes:
             arr = np.frombuffer(b, dtype=np.uint8)
@@ -175,8 +160,8 @@ def resize_images(media_df: DataFrame, width: int = 32, height: int = 32) -> Dat
                 {
                     "doc_id": pdf["doc_id"],
                     "payload": pdf["payload"].map(fake_resample),
-                    "width": width,
-                    "height": height,
+                    "width": 32,
+                    "height": 32,
                 }
             )
 

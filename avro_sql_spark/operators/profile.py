@@ -440,27 +440,23 @@ def ks_drift(
     return out.orderBy(*gcols) if gcols else out
 
 
-def twopass_median(
-    df: DataFrame,
-    value_col: str = "value",
-    buckets: int = 1024,
-) -> DataFrame:
+def twopass_median(df: DataFrame, value_col: str = "value") -> DataFrame:
     """EXACT global median (lower median: the ceil(n/2)-th smallest
     value) with NO global sort — the two-pass bucketing scheme every
     warehouse uses for exact percentiles at scale:
 
     pass 1: one aggregate for (n, min, max);
-    pass 2: equal-width bucket counts (<= ``buckets`` rows) + a
+    pass 2: equal-width bucket counts (<= 1024 rows) + a
       cumulative sum over that BOUNDED frame locates the bucket holding
       the k-th element and the within-bucket offset;
     pass 3: only that bucket's rows are re-read; the offset-th smallest
       among them is the median (sort_array over one bucket — expected
-      n/buckets values; a skewed bucket would recurse with a second
+      n/1024 values; a skewed bucket would recurse with a second
       bucketing round, same contract).
 
     Contrast with ``ORDER BY value LIMIT 1 OFFSET k-1``: that plan
     funnels every row through one sorting task; this one shuffles
-    <= buckets + bucket-m rows total. The answer is a data value, so
+    <= 1024 + bucket-m rows total. The answer is a data value, so
     the oracle can state it as the k-th order statistic directly."""
     stats = df.agg(
         F.count(value_col).alias("n"),
@@ -480,16 +476,16 @@ def twopass_median(
                     F.floor(
                         (F.col("v") - F.col("mn"))
                         / (F.col("mx") - F.col("mn"))
-                        * F.lit(buckets)
+                        * F.lit(1024)
                     ).cast("int"),
-                    F.lit(buckets - 1),
+                    F.lit(1023),
                 ),
             ).otherwise(F.lit(0)).alias("b"),  # degenerate all-equal input
         )
     )
     counts = b.groupBy("n", "b").agg(F.count(F.lit(1)).alias("c"))
     w = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
-    # k = ceil(n/2); the window is over the <= `buckets`-row counts
+    # k = ceil(n/2); the window is over the <= 1024-row counts
     # frame (bounded), not the data
     med_bucket = (
         counts.withColumn("cum_before", F.coalesce(F.sum("c").over(w), F.lit(0)))
@@ -514,10 +510,11 @@ def twopass_median(
     )
 
 
-def incremental_agg_merge(df: DataFrame, delta_pred: Column | None = None) -> DataFrame:
+def incremental_agg_merge(df: DataFrame) -> DataFrame:
     """Incremental materialized-aggregate maintenance: the base
     partition's aggregate STATE (count / decimal-exact sum / min / max)
-    merges with the delta partition's state, and the merged result is
+    merges with the delta partition's state (the delta is the rows
+    whose ``dayofmonth(ts) % 7 == 3``), and the merged result is
     byte-identical to a full recompute — the invariant that lets a
     100 TB pipeline aggregate yesterday's state with today's delta
     instead of rescanning history. The oracle IS the full recompute, so
@@ -527,11 +524,11 @@ def incremental_agg_merge(df: DataFrame, delta_pred: Column | None = None) -> Da
     and ORDER-FREE, so base+delta addition equals the one-pass sum
     regardless of float summation order (the chi2_independence
     pattern)."""
-    if delta_pred is None:
-        delta_pred = (F.dayofmonth(F.col("ts").cast("timestamp")) % 7) == 3
     # a NULL predicate row must not vanish from BOTH partitions (the
     # merge would silently diverge from the full recompute)
-    delta_pred = F.coalesce(delta_pred, F.lit(False))
+    delta_pred = F.coalesce(
+        (F.dayofmonth(F.col("ts").cast("timestamp")) % 7) == 3, F.lit(False)
+    )
     dec = F.round(F.col("value"), 6).cast("decimal(38,6)")
 
     def state(part: DataFrame) -> DataFrame:
@@ -1337,17 +1334,13 @@ def weekday_hour_profile(df: DataFrame) -> DataFrame:
     )
 
 
-def mutual_information_report(
-    df: DataFrame,
-    x_col: str = "event_type",
-    y_expr: Column | None = None,
-    y_name: str = "weekday",
-) -> DataFrame:
-    """Mutual information between two categorical columns — the
-    feature-selection / drift measurement (how much does knowing the
-    weekday tell you about the event mix?) reported with its companion
-    entropies: one row (n, h_x, h_y, h_xy, mi_nats, mi_normalized),
-    where mi_normalized = MI / min(H(X), H(Y)) in [0, 1].
+def mutual_information_report(df: DataFrame) -> DataFrame:
+    """Mutual information between ``event_type`` and the weekday of
+    ``ts`` — the feature-selection / drift measurement (how much does
+    knowing the weekday tell you about the event mix?) reported with its
+    companion entropies: one row (n, h_x, h_y, h_xy, mi_nats,
+    mi_normalized), where mi_normalized = MI / min(H(X), H(Y)) is in
+    [0, 1].
 
     Shape: ONE groupBy on the (x, y) cell — the marginals are exact
     integer sums over the bounded |X|x|Y| cell frame (never a second
@@ -1356,9 +1349,8 @@ def mutual_information_report(
     are order-free and DuckDB replays them exactly. H via the identity
     H = ln(n) - (Σ c ln c)/n (user_entropy's device); MI =
     H(X) + H(Y) - H(X,Y)."""
-    y = y_expr if y_expr is not None else F.dayofweek("ts")
     cells = (
-        df.groupBy(F.col(x_col).alias("x"), y.alias("y"))
+        df.groupBy(F.col("event_type").alias("x"), F.dayofweek("ts").alias("y"))
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint(eager=True)  # bounded |X|x|Y| frame, 3 consumers
     )
@@ -1670,12 +1662,10 @@ def seasonal_residual_outliers(events: DataFrame) -> DataFrame:
     )
 
 
-def markov_next_event_backtest(
-    events: DataFrame, cut_ts: str = "2024-01-24 00:00:00"
-) -> DataFrame:
+def markov_next_event_backtest(events: DataFrame) -> DataFrame:
     """Backtest of the first-order Markov next-event predictor: train
     the argmax-next-given-previous table on transitions whose TARGET
-    lands before ``cut_ts``, score on the rest — the honest check that
+    lands before 2024-01-24, score on the rest — the honest check that
     a transition matrix (event_transitions) actually predicts, against
     the always-predict-the-majority baseline. One row: train/test
     sizes, model accuracy, baseline accuracy, and the lift.
@@ -1693,7 +1683,7 @@ def markov_next_event_backtest(
         .filter(F.col("nxt").isNotNull())
         .select("prev", "nxt", "nxt_ts")
     )
-    cut = F.lit(cut_ts).cast("timestamp_ntz")
+    cut = F.lit("2024-01-24 00:00:00").cast("timestamp_ntz")
     train = trans.filter(F.col("nxt_ts") < cut)
     test = trans.filter(F.col("nxt_ts") >= cut)
     counts = train.groupBy("prev", "nxt").agg(F.count(F.lit(1)).alias("c"))
@@ -1874,9 +1864,9 @@ def source_ks_matrix(docs: DataFrame) -> DataFrame:
     )
 
 
-def decayed_user_value(events: DataFrame, half_life_lambda: float = 0.05) -> DataFrame:
+def decayed_user_value(events: DataFrame) -> DataFrame:
     """Recency-weighted user value (exponential time-decay LTV): each
-    purchase contributes value·e^(−λ·age_days) anchored at the
+    purchase contributes value·e^(−λ·age_days), λ = 0.05, anchored at the
     dataset's max timestamp — the ranking every retention/engagement
     dashboard uses instead of the raw lifetime sum, which never decays
     a whale who left a year ago. Top-k users by decayed value, with the
@@ -1896,7 +1886,7 @@ def decayed_user_value(events: DataFrame, half_life_lambda: float = 0.05) -> Dat
             F.round(
                 F.col("value")
                 * F.exp(
-                    F.lit(-half_life_lambda)
+                    F.lit(-0.05)
                     * (
                         (F.col("smx") - F.unix_timestamp(F.col("ts")))
                         / F.lit(86400.0)
@@ -2230,13 +2220,13 @@ def roc_auc_by_source(docs: DataFrame) -> DataFrame:
     ).orderBy("source")
 
 
-def acf_hourly(events: DataFrame, max_lag: int = 24) -> DataFrame:
+def acf_hourly(events: DataFrame) -> DataFrame:
     """Autocorrelation function of the hourly event-count series at
-    lags 1..max_lag — the seasonality detector behind every
-    capacity-planning and anomaly model (a spike at lag 24 says the
-    series is daily-periodic; fast decay says yesterday predicts
-    nothing). Missing hours count as zero — computing ACF on a
-    gap-compressed series aliases the periods.
+    lags 1..24 (those shorter than the series) — the seasonality
+    detector behind every capacity-planning and anomaly model (a spike
+    at lag 24 says the series is daily-periodic; fast decay says
+    yesterday predicts nothing). Missing hours count as zero — computing
+    ACF on a gap-compressed series aliases the periods.
 
     Exactness: with integer hourly counts c_t, series length H, sum S,
     and sum of squares Q, the standard full-series-mean estimator
@@ -2273,7 +2263,7 @@ def acf_hourly(events: DataFrame, max_lag: int = 24) -> DataFrame:
         F.sum(dec(F.col("c")) * dec(F.col("c"))).alias("q"),
     )
     spark = events.sparkSession
-    lags = spark.range(1, max_lag + 1).select(F.col("id").alias("lag"))
+    lags = spark.range(1, 25).select(F.col("id").alias("lag"))
     cur = spine.crossJoin(lags).select(
         "lag", "hi", "c", (F.col("hi") - F.col("lag")).alias("hj")
     )
@@ -3020,13 +3010,10 @@ def negbin_overdispersion(events: DataFrame) -> DataFrame:
     )
 
 
-def price_elasticity(
-    part: DataFrame,
-    lineitem: DataFrame,
-    min_parts: int = 10,
-) -> DataFrame:
-    """Log-log price elasticity of demand per brand: the OLS slope of
-    ln(quantity sold) on ln(retail price) across a brand's parts — the
+def price_elasticity(part: DataFrame, lineitem: DataFrame) -> DataFrame:
+    """Log-log price elasticity of demand per brand with at least 10
+    parts: the OLS slope of ln(quantity sold) on ln(retail price)
+    across a brand's parts — the
     classic price-sensitivity readout (≈ −1: revenue-neutral pricing;
     < −1: price cuts pay for themselves; ≈ 0: captive demand).
 
@@ -3067,7 +3054,7 @@ def price_elasticity(
         F.lit(0.0),
     )
     return (
-        g.filter(F.col("n") >= min_parts)
+        g.filter(F.col("n") >= 10)
         .select(
             "brand",
             F.col("n").cast("long").alias("n_parts"),
@@ -3320,7 +3307,7 @@ def mad_outlier_days(events: DataFrame) -> DataFrame:
     )
 
 
-def markov_removal_attribution(events: DataFrame, rounds: int = 8) -> DataFrame:
+def markov_removal_attribution(events: DataFrame) -> DataFrame:
     """Markov removal-effect multi-touch attribution (Anderl et al.
     2016) — the data-driven alternative to position rules: build the
     START → channel → … → CONV/NULL journey chain from every user's
@@ -3332,7 +3319,7 @@ def markov_removal_attribution(events: DataFrame, rounds: int = 8) -> DataFrame:
     Scale shape: ONE per-user lag pass builds transitions (the
     sessionize window shape); everything after lives on the bounded
     (variants × states²) chain frame — the 5-variant removal grid
-    iterates JOINTLY, ``rounds`` fixed join+aggregate steps on a
+    iterates JOINTLY, 8 fixed join+aggregate steps on a
     checkpointed tiny frame (the markov_stationary discipline), so the
     oracle unrolls the identical recursion. Absorption sums are over
     ≤|states| float terms — the pagerank-proven class."""
@@ -3426,7 +3413,7 @@ def markov_removal_attribution(events: DataFrame, rounds: int = 8) -> DataFrame:
         "removed", "s", F.coalesce("pconv", F.lit(0.0)).alias("a")
     )
     pins = RoundPins()
-    for r in range(rounds):
+    for r in range(8):
         # every frame here is (variants x states)-bounded -> broadcast
         # hints keep the per-round joins exchange-free
         contrib = (
@@ -3455,7 +3442,7 @@ def markov_removal_attribution(events: DataFrame, rounds: int = 8) -> DataFrame:
                 ).alias("a"),
             )
         )
-        if (r + 1) < rounds:
+        if r < 7:
             a = pins.pin(a, eager=True)
             pins.materialized()
     b = a.filter(F.col("s") == "START").select(
@@ -3497,12 +3484,10 @@ def markov_removal_attribution(events: DataFrame, rounds: int = 8) -> DataFrame:
     )
 
 
-def sequence_pattern_support(
-    events: DataFrame,
-    min_support: float = 0.05,
-) -> DataFrame:
+def sequence_pattern_support(events: DataFrame) -> DataFrame:
     """Frequent 2-sequence mining over user event histories (the GSP /
-    PrefixSpan first level): for every ordered type pair a→b, the
+    PrefixSpan first level): for every ordered type pair a→b with
+    support >= 0.05, the
     number of users whose FIRST a precedes their FIRST b, its support,
     and the lift against independence P(a→b)/(P(a in history)·
     P(b after a's median?)) simplified to support/(p_a·p_b) — the
@@ -3574,7 +3559,7 @@ def sequence_pattern_support(
                 6,
             ).alias("lift"),
         )
-        .filter(F.col("support") >= F.lit(min_support))
+        .filter(F.col("support") >= F.lit(0.05))
         .orderBy(F.desc("support"), "first_type", "then_type")
     )
     return out
@@ -3822,17 +3807,17 @@ def session_bounce_report(events: DataFrame) -> DataFrame:
     )
 
 
-def neyman_allocation(docs: DataFrame, budget: int = 1000) -> DataFrame:
+def neyman_allocation(docs: DataFrame) -> DataFrame:
     """Neyman-optimal stratified sampling design for estimating the
-    corpus mean of a value column: each stratum's share of the sample
-    budget is proportional to N_h·S_h (size × within-stratum std) —
+    corpus mean of a value column: each stratum's share of a 1000-row
+    sample budget is proportional to N_h·S_h (size × within-stratum std) —
     the allocation that minimizes estimator variance, and the reason
     high-variance strata deserve more than proportional sampling.
 
     Exactness: per-stratum N and S come from exact integer Σx, Σx²
     (sample variance (n·Σx² − S²)/(n(n−1)), one sqrt); each weight
     term N_h·S_h quantizes at 6dp into DECIMAL(38,6) so the
-    normalizing sum is order-free; allocations are ceil(budget·w)."""
+    normalizing sum is order-free; allocations are ceil(1000·w)."""
     dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731
     per = docs.groupBy(F.col("source").alias("g")).agg(
         F.count(F.lit(1)).alias("n"),
@@ -3863,7 +3848,7 @@ def neyman_allocation(docs: DataFrame, budget: int = 1000) -> DataFrame:
                 "stddev"
             ),
             F.round(w, 6).alias("neyman_share"),
-            F.ceil(w * F.lit(float(budget))).cast("long").alias(
+            F.ceil(w * F.lit(1000.0)).cast("long").alias(
                 "allocated_n"
             ),
         )
@@ -3871,14 +3856,11 @@ def neyman_allocation(docs: DataFrame, budget: int = 1000) -> DataFrame:
     )
 
 
-def tail_index_user_value(
-    events: DataFrame,
-    k: int = 100,
-) -> DataFrame:
-    """Hill tail-index estimate over the top-k user lifetime values —
-    the heavy-tail exponent of revenue concentration (α ≤ 1: the mean
-    is dominated by whales and capacity plans built on averages are
-    fiction; α > 2: finite variance, normal statistics apply), plus
+def tail_index_user_value(events: DataFrame) -> DataFrame:
+    """Hill tail-index estimate over the top k = 100 user lifetime
+    values — the heavy-tail exponent of revenue concentration (α ≤ 1:
+    the mean is dominated by whales and capacity plans built on averages
+    are fiction; α > 2: finite variance, normal statistics apply), plus
     the top-k value share.
 
     Scale shape: per-user totals are order-free DECIMAL sums; the
@@ -3896,7 +3878,7 @@ def tail_index_user_value(
         .filter(F.col("v") > 0)
         .localCheckpoint(eager=True)
     )
-    top = pu.orderBy(F.desc("v"), F.asc("user_id")).limit(k).localCheckpoint(
+    top = pu.orderBy(F.desc("v"), F.asc("user_id")).limit(100).localCheckpoint(
         eager=True
     )
     thr = top.agg(F.min("v").alias("xk"), F.count(F.lit(1)).alias("ke"))
@@ -4608,12 +4590,12 @@ def jackknife_ratio_ci(events: DataFrame) -> DataFrame:
     )
 
 
-def cochran_armitage_trend(events: DataFrame, n_groups: int = 3) -> DataFrame:
+def cochran_armitage_trend(events: DataFrame) -> DataFrame:
     """Cochran-Armitage trend test (Cochran 1954; Armitage 1955) for
     "does conversion propensity RISE with user value?" — the ordered
     alternative a plain chi-square cannot see: users are ranked into
-    ``n_groups`` value tiers (exact_ntile over per-user quantized
-    spend), each tier scored 1..k, and the statistic tests a linear
+    3 value tiers (exact_ntile over per-user quantized spend), each
+    tier scored 1..3, and the statistic tests a linear
     trend in per-tier conversion rates. One row: per-tier user/convert
     counts plus z and its two-sided p.
 
@@ -4624,7 +4606,7 @@ def cochran_armitage_trend(events: DataFrame, n_groups: int = 3) -> DataFrame:
     the sqrt/division are the only float ops, and p comes from the
     same Bowling-approximation normal CDF as bh_fdr_report (identical
     closed form both engines). Scale shape: one per-user aggregate,
-    two rank passes (the exact_ntile device), one k-row cell
+    two rank passes (the exact_ntile device), one 3-row cell
     aggregate, scalar assembly."""
     from .curation import exact_ntile
 
@@ -4644,12 +4626,11 @@ def cochran_armitage_trend(events: DataFrame, n_groups: int = 3) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     tiled = exact_ntile(
-        pu, [F.asc("v"), F.asc("user_id")], n_groups, out_col="tier"
+        pu, [F.asc("v"), F.asc("user_id")], 3, out_col="tier"
     )
     cells = tiled.groupBy("tier").agg(
         F.count(F.lit(1)).alias("n"), F.sum("conv").alias("c")
     )
-    mid_tier = (n_groups + 1) // 2
     dec = lambda col: col.cast("decimal(38,0)")  # noqa: E731
     s = cells.agg(
         F.sum("n").alias("nn"),
@@ -4661,13 +4642,10 @@ def cochran_armitage_trend(events: DataFrame, n_groups: int = 3) -> DataFrame:
         ).alias("snn"),
         F.max(F.when(F.col("tier") == 1, F.col("c"))).alias("c1"),
         F.max(F.when(F.col("tier") == 1, F.col("n"))).alias("n1"),
-        # mid tier derived from n_groups, not hardwired to 2 (which is
-        # the middle only for the default n_groups=3); the oracle, per
-        # repo convention, covers only the default n_groups=3
-        F.max(F.when(F.col("tier") == mid_tier, F.col("c"))).alias("c2"),
-        F.max(F.when(F.col("tier") == mid_tier, F.col("n"))).alias("n2"),
-        F.max(F.when(F.col("tier") == n_groups, F.col("c"))).alias("ck"),
-        F.max(F.when(F.col("tier") == n_groups, F.col("n"))).alias("nk"),
+        F.max(F.when(F.col("tier") == 2, F.col("c"))).alias("c2"),
+        F.max(F.when(F.col("tier") == 2, F.col("n"))).alias("n2"),
+        F.max(F.when(F.col("tier") == 3, F.col("c"))).alias("ck"),
+        F.max(F.when(F.col("tier") == 3, F.col("n"))).alias("nk"),
     )
     num = (dec(F.col("nn")) * F.col("sc") - dec(F.col("r")) * F.col("sn")).cast(
         "double"
@@ -4751,17 +4729,14 @@ def split_half_reliability(events: DataFrame) -> DataFrame:
     )
 
 
-def partition_layout_advisor(
-    events: DataFrame,
-    target_rows: int = 50000,
-) -> DataFrame:
+def partition_layout_advisor(events: DataFrame) -> DataFrame:
     """Partition-column advisor: for each candidate partition key of
     the events table (event_type, event day, a 256-way user bucket),
     report the partition-count/skew/small-file profile a writer would
     produce — the decision table behind ``partitionBy(...)``: too few
     partitions loses pruning, too many drowns the table in small
     files, a skewed key does both. ``est_files`` is the file count at
-    ``target_rows`` rows per file (ceil per partition, the writer's
+    50,000 rows per file (ceil per partition, the writer's
     behavior); ``frac_small`` the fraction of partitions under a
     quarter-target (the small-file-problem share).
 
@@ -4792,7 +4767,7 @@ def partition_layout_advisor(
                 F.round(
                     F.sum(
                         F.when(
-                            F.col("n") < F.lit(target_rows // 4), F.lit(1)
+                            F.col("n") < F.lit(12500), F.lit(1)
                         ).otherwise(F.lit(0))
                     ).cast("double")
                     / F.count(F.lit(1)).cast("double"),
@@ -4801,7 +4776,7 @@ def partition_layout_advisor(
                 + F.lit(0.0)
             ).alias("frac_small"),
             F.sum(
-                F.expr(f"(n + {target_rows} - 1) div {target_rows}")
+                F.expr("(n + 50000 - 1) div 50000")
             )
             .cast("long")
             .alias("est_files"),
@@ -4878,31 +4853,28 @@ def max_drawdown_daily(events: DataFrame) -> DataFrame:
     )
 
 
-def ljung_box_hourly(
-    events: DataFrame,
-    max_lag: int = 24,
-) -> DataFrame:
+def ljung_box_hourly(events: DataFrame) -> DataFrame:
     """Ljung-Box portmanteau test on the hourly event-count series
-    (Ljung & Box 1978): Q = H(H+2) * sum_k r_k^2/(H-k) over the first
-    ``max_lag`` autocorrelations — the one-number answer to "is this
-    series white noise, or is there structure worth a seasonal model?"
-    Builds directly on :func:`acf_hourly`'s exact integer-ratio
-    autocorrelations (already 6 dp-quantized and engine-identical);
-    each Q term quantizes at 12 dp into DECIMAL(38,12) so the 24-term
-    sum is order-free. The 5% verdict compares against the chi-square
-    0.95 quantile at the REALIZED df via the Wilson-Hilferty cube
-    approximation (Wilson & Hilferty 1931): chi2_q(df, .95) ~=
-    df * (1 - 2/(9 df) + z_.95 * sqrt(2/(9 df)))^3 with z_.95 =
-    1.6448536269514722 (|err| < 0.05 for df >= 3; df=24 gives 36.404
-    vs exact 36.415). Neither engine ships a chi-square CDF, so the
-    quantile is assembled from sqrt/div/mul only — each IEEE
-    correctly-rounded, so both engines compute the identical double
-    (pow is deliberately avoided: libm pow may differ in the last ulp
-    between the JVM and DuckDB).
+    (Ljung & Box 1978): Q = H(H+2) * sum_k r_k^2/(H-k) over the first 24
+    autocorrelations (fewer on a series of at most 24 hours) — the
+    one-number answer to "is this series white noise, or is there
+    structure worth a seasonal model?" Builds directly on
+    :func:`acf_hourly`'s exact integer-ratio autocorrelations (already 6
+    dp-quantized and engine-identical); each Q term quantizes at 12 dp
+    into DECIMAL(38,12) so the 24-term sum is order-free. The 5% verdict
+    compares against the chi-square 0.95 quantile at the REALIZED df via
+    the Wilson-Hilferty cube approximation (Wilson & Hilferty 1931):
+    chi2_q(df, .95) ~= df * (1 - 2/(9 df) + z_.95 * sqrt(2/(9 df)))^3
+    with z_.95 = 1.6448536269514722 (|err| < 0.05 for df >= 3; df=24
+    gives 36.404 vs exact 36.415). Neither engine ships a chi-square
+    CDF, so the quantile is assembled from sqrt/div/mul only — each IEEE
+    correctly-rounded, so both engines compute the identical double (pow
+    is deliberately avoided: libm pow may differ in the last ulp between
+    the JVM and DuckDB).
 
     Scale shape: acf_hourly's time-bounded spine + one 24-row
     aggregate and a scalar assembly."""
-    acf = acf_hourly(events, max_lag=max_lag)
+    acf = acf_hourly(events)
     hrs = events.select(
         F.floor(F.unix_timestamp(F.col("ts")) / F.lit(3600))
         .cast("long")
@@ -4947,10 +4919,10 @@ def ljung_box_hourly(
     )
 
 
-def lift_curve_points(docs: DataFrame, target: Column | None = None) -> DataFrame:
+def lift_curve_points(docs: DataFrame) -> DataFrame:
     """Cumulative-gains / lift curve of the heuristic quality score
-    against a target label (default: the src1* source family, the same
-    in-domain definition dsir_importance steers toward) — the
+    against a target label (the src1* source family, the same in-domain
+    definition dsir_importance steers toward) — the
     classifier-triage readout "if I keep only the top-k score deciles,
     what share of the in-domain documents do I capture?": rank by
     (score desc, id), bucket into deciles, report per-decile counts
@@ -4967,12 +4939,10 @@ def lift_curve_points(docs: DataFrame, target: Column | None = None) -> DataFram
     from ..functions.text import quality_score
     from .curation import exact_ntile
 
-    if target is None:
-        target = F.col("source").like("src1%")
     scored = docs.select(
         "doc_id",
         (F.round(quality_score(F.col("text")), 6) + F.lit(0.0)).alias("q"),
-        target.cast("int").alias("pos"),
+        F.col("source").like("src1%").cast("int").alias("pos"),
     )
     tiled = exact_ntile(
         scored, [F.desc("q"), F.asc("doc_id")], 10, out_col="decile"
@@ -5520,9 +5490,9 @@ def sprt_daily_audit(events: DataFrame) -> DataFrame:
     )
 
 
-def topk_spender_churn(events: DataFrame, k: int = 20) -> DataFrame:
-    """Day-over-day churn of the top-k spender set: rank users per day
-    by quantized value total (user_id tiebreak), keep the top k, and
+def topk_spender_churn(events: DataFrame) -> DataFrame:
+    """Day-over-day churn of the top-20 spender set: rank users per day
+    by quantized value total (user_id tiebreak), keep the top 20, and
     report each day's overlap and Jaccard with the PREVIOUS day's set
     — the leaderboard-stability metric behind "is our whale cohort a
     stable population or a daily lottery?".
@@ -5531,7 +5501,7 @@ def topk_spender_churn(events: DataFrame, k: int = 20) -> DataFrame:
     rank is a day-PARTITIONED window (never global); overlap counts
     are integers and Jaccard is one rounded division. Scale shape: one
     (day, user) aggregate, a partitioned rank, and a self-join of the
-    k-bounded daily sets on adjacent day indices."""
+    20-bounded daily sets on adjacent day indices."""
     per = events.filter(F.col("value").isNotNull()).groupBy(
         F.floor(
             F.unix_timestamp(F.date_trunc("day", F.col("ts")))
@@ -5546,8 +5516,8 @@ def topk_spender_churn(events: DataFrame, k: int = 20) -> DataFrame:
     wday = Window.partitionBy("di").orderBy(F.desc("sv"), F.asc("u"))
     top = (
         per.select("di", "u", F.row_number().over(wday).alias("rk"))
-        .filter(F.col("rk") <= k)
-        .localCheckpoint(eager=True)  # k-bounded daily sets, forked below
+        .filter(F.col("rk") <= 20)
+        .localCheckpoint(eager=True)  # 20-bounded daily sets, forked below
     )
     sizes = top.groupBy("di").agg(F.count(F.lit(1)).alias("sz"))
     prev = top.select((F.col("di") + 1).alias("di"), F.col("u"))

@@ -1310,9 +1310,9 @@ def grouping_sets_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def token_topk(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFrame:
+def token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lateral explode + global top-k: whitespace-tokenize documents,
-    keep pure [a-z]+ tokens, count, return the k most frequent.
+    keep pure [a-z]+ tokens, count, return the 50 most frequent.
 
     Scale: explode happens executor-side inside whole-stage codegen (no
     Python), the count is a partial-aggregated shuffle on token, and the
@@ -1324,7 +1324,7 @@ def token_topk(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFrame:
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("token"))
-        .limit(k)
+        .limit(50)
     )
 
 
@@ -1579,8 +1579,8 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def key_skew_report(spark: SparkSession, sf_dir: str, top: int = 10) -> DataFrame:
-    """Join-key skew diagnostic: the ``top`` heaviest ``o_custkey``
+def key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Join-key skew diagnostic: the 10 heaviest ``o_custkey``
     values in orders with their row count, share of all rows, and
     skew factor vs a uniform key (cnt / (total/n_keys)) — the report
     you run BEFORE a 100 TB shuffle join to decide between AQE skew
@@ -1588,7 +1588,7 @@ def key_skew_report(spark: SparkSession, sf_dir: str, top: int = 10) -> DataFram
 
     Scale shape: per-key counts combine map-side; the global scalars
     (total/n_keys/max) are one tiny aggregate broadcast back; top-k is
-    TakeOrderedAndProject (per-partition heap + driver merge of `top`
+    TakeOrderedAndProject (per-partition heap + driver merge of 10
     rows), never a global sort."""
     orders = load_tables(spark, sf_dir, register=False)["orders"]
     counts = orders.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("cnt"))
@@ -1596,7 +1596,7 @@ def key_skew_report(spark: SparkSession, sf_dir: str, top: int = 10) -> DataFram
         F.sum("cnt").alias("total"),
         F.count(F.lit(1)).alias("n_keys"),
     )
-    topk = counts.orderBy(F.desc("cnt"), F.col("o_custkey")).limit(top)
+    topk = counts.orderBy(F.desc("cnt"), F.col("o_custkey")).limit(10)
     return (
         topk.crossJoin(F.broadcast(tot))
         .select(
@@ -1831,12 +1831,10 @@ def customer_balance_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def copurchase_pairs(
-    spark: SparkSession, sf_dir: str, min_count: int = 2, k: int = 20
-) -> DataFrame:
-    """Market-basket co-occurrence: the top-k pairs of parts that appear
-    together in the most orders (the input to item-item recommenders and
-    association-rule mining).
+def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Market-basket co-occurrence: the top 20 pairs of parts that appear
+    together in the most orders, among pairs in at least 2 orders (the
+    input to item-item recommenders and association-rule mining).
 
     Scale shape: NO self-join — per-order baskets come from ONE shuffle
     (groupBy orderkey, collect_set bounded by the schema's <= 7
@@ -1891,7 +1889,7 @@ def copurchase_pairs(
     return (
         pairs.groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("n_orders"))
-        .filter(F.col("n_orders") >= min_count)
+        .filter(F.col("n_orders") >= 2)
         .join(F.broadcast(pa), "part_a")
         .join(F.broadcast(pb), "part_b")
         .crossJoin(F.broadcast(totals))
@@ -1908,7 +1906,7 @@ def copurchase_pairs(
             ).alias("lift"),
         )
         .orderBy(F.desc("n_orders"), "part_a", "part_b")
-        .limit(k)
+        .limit(20)
     )
 
 

@@ -179,28 +179,15 @@ def lsh_bucketed_ann(
     )
 
 
-def _coarse_centroids(
-    emb: DataFrame,
-    n_cells: int,
-    train_limit: int,
-    train_iterations: int,
-    id_col: str,
-    vec_col: str,
-) -> "list[list[float]]":
+def _coarse_centroids(emb: DataFrame) -> "list[list[float]]":
     """The shared IVF coarse quantizer: the DETERMINISTIC Lloyd loop
     (clustering.lloyd_centroids — lowest-id seeds and training rows,
-    fixed iterations, 9dp-rounded updates) over at most ``train_limit``
-    vectors, returned as plan-time literals (n_cells × dim driver
+    2 fixed iterations, 9dp-rounded updates) over at most 100,000
+    vectors, returned as plan-time literals (16 cells × dim driver
     state, the bounded-model contract every quantizer here follows)."""
     from .clustering import lloyd_centroids
 
-    return lloyd_centroids(
-        emb.orderBy(id_col).limit(train_limit),
-        k=n_cells,
-        iterations=train_iterations,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
+    return lloyd_centroids(emb.orderBy("vec_id").limit(100_000), k=16)
 
 
 def _centroid_dists(vec: str, centroids: "list[list[float]]"):
@@ -260,20 +247,17 @@ def ivf_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
     centroids: "list[list[float]] | None" = None,
 ) -> DataFrame:
-    """IVF (inverted-file) ANN: k-means coarse quantizer -> assign each
-    corpus vector to its nearest centroid cell -> a query scans only its
-    ``n_probe`` nearest cells.
+    """IVF (inverted-file) ANN: k-means coarse quantizer (16 cells) ->
+    assign each corpus vector to its nearest centroid cell -> a query
+    scans only its 4 nearest cells.
 
-    The 100 TB shape: centroids are tiny (n_cells x dim), trained on AT
+    The 100 TB shape: centroids are tiny (16 x dim), trained on AT
     MOST 100,000 vectors (a coarse quantizer needs a bounded
     training set, not full-corpus Lloyd's passes) and broadcast
     everywhere; cell assignment is one scan; the probe is an equi-join
     on cell id, so candidate generation shuffles only matching cells.
-    Recall is tunable via n_probe.
 
     The quantizer is the DETERMINISTIC Lloyd loop shared with
     kmeans_lloyd (clustering.lloyd_centroids: lowest-id seeds and
@@ -287,9 +271,7 @@ def ivf_topk(
     # work — ann_recall_report) passes the result in; None trains
     # here, exactly as before
     if centroids is None:
-        centroids = _coarse_centroids(
-            emb, n_cells, 100_000, 2, "vec_id", "embedding"
-        )
+        centroids = _coarse_centroids(emb)
     corpus = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("cv"),
@@ -298,7 +280,7 @@ def ivf_topk(
     probes = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").cast("array<double>").alias("qv"),
-        F.explode(_probe_cells("`embedding`", centroids, n_probe)).alias("cell"),
+        F.explode(_probe_cells("`embedding`", centroids, 4)).alias("cell"),
     )
 
     scored = (
@@ -318,17 +300,10 @@ def ivf_topk(
     )
 
 
-def _pq_model(
-    emb: DataFrame,
-    m: int,
-    codebook_k: int,
-    id_col: str,
-    vec_col: str,
-    train_limit: int,
-    train_iterations: int,
-):
-    """Train the per-subspace PQ codebooks (deterministic shared Lloyd
-    over at most ``train_limit`` lowest-id vectors) and return the two
+def _pq_model(emb: DataFrame):
+    """Train the per-subspace PQ codebooks (m = 4 subspaces, codebook_k
+    = 16 centroids each; deterministic shared Lloyd, 2 iterations, over
+    at most 512 lowest-id vectors) and return the two
     SQL-string builders ``(sub_dists_sql, code_sql)`` shared by
     :func:`pq_topk` and :func:`ivf_pq_topk`.
 
@@ -353,17 +328,16 @@ def _pq_model(
     books, and therefore the oracle replay, are unchanged."""
     from ..errors import AvroSqlError
 
+    m, codebook_k = 4, 16
     # one LAZY checkpoint pins the bounded train slice (the seed
     # collect right below materializes it — no separate construction
     # job); the cast to array<double> is hoisted here so every
     # downstream term reads `_v` (the clustering._assign codegen-size
     # lesson)
     train = (
-        emb.orderBy(id_col)
-        .limit(train_limit)
-        .selectExpr(
-            f"`{id_col}` AS _tid", f"cast(`{vec_col}` as array<double>) AS _v"
-        )
+        emb.orderBy("vec_id")
+        .limit(512)
+        .selectExpr("`vec_id` AS _tid", "cast(`embedding` as array<double>) AS _v")
         .localCheckpoint(eager=False)
     )
     seed_rows = train.orderBy("_tid").limit(codebook_k).select("_v").collect()
@@ -383,14 +357,14 @@ def _pq_model(
         [list(r["_v"][s * sd : (s + 1) * sd]) for r in seed_rows]
         for s in range(m)
     ]
-    for _ in range(train_iterations):
+    for _ in range(2):
         # per-subspace subvector columns hoisted first, then one
         # distance array per subspace in the compact 0.0-seeded
         # aggregate/zip_with FOLD form — the IDENTICAL IEEE value as
         # the unrolled left-associated sum (0.0 + x == x, same add
         # order; clustering._assign's documented equivalence). The
         # unrolled form optimizes row THROUGHPUT, but this frame is
-        # bounded at train_limit (<= 512) rows and its literals change
+        # bounded at 512 rows and its literals change
         # every iteration, so whole-stage-codegen COMPILE time
         # dominates — the ~50x-smaller fold text compiles in a
         # fraction of the time and the interpreted evaluation over 512
@@ -467,26 +441,19 @@ def _pq_model(
     return _sub_dists_sql, _code_sql
 
 
-def pq_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    m: int = 4,
-    codebook_k: int = 16,
-    train_limit: int = 512,
-) -> DataFrame:
+def pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Product-quantization ANN (Jégou, Douze, Schmid, "Product
     Quantization for Nearest Neighbor Search", TPAMI 2011): split each
-    d-dim vector into ``m`` subvectors, learn a ``codebook_k``-centroid
-    codebook per subspace, store each corpus vector as m small codes,
+    d-dim vector into m = 4 subvectors, learn a 16-centroid codebook
+    per subspace, store each corpus vector as m small codes,
     and answer queries with asymmetric distance computation (ADC) — a
     per-query lookup table of query-subvector-to-centroid distances,
     summed across subspaces by code.
 
     The 100 TB shape: the corpus compresses from d floats to m bytes
     per vector (64x here) — THE memory-bound ANN layout; codebooks are
-    m x k x (d/m) driver literals trained on AT MOST ``train_limit``
-    lowest-id vectors via the deterministic shared Lloyd loop
+    m x 16 x (d/m) driver literals trained on AT MOST 512 lowest-id
+    vectors via the deterministic shared Lloyd loop
     (clustering.lloyd_centroids — same contract as ivf_topk's coarse
     quantizer), encoding is one in-row argmin scan, and scoring is m
     array lookups + adds per (query, code) pair with the small query
@@ -498,23 +465,21 @@ def pq_topk(
     per query by ADC distance (ties break to the lower neighbor id),
     ``adist`` rounded to 4.
     """
-    _sub_dists_sql, _code_sql = _pq_model(
-        emb, m, codebook_k, "vec_id", "embedding", train_limit, 2
-    )
+    _sub_dists_sql, _code_sql = _pq_model(emb)
     n = emb.sparkSession.sparkContext.defaultParallelism
     codes = emb.repartition(n, F.col("vec_id")).selectExpr(
         "`vec_id` AS neighbor_id",
-        *[f"{_code_sql('`embedding`', s)} AS c{s}" for s in range(m)],
+        *[f"{_code_sql('`embedding`', s)} AS c{s}" for s in range(4)],
     )
     luts = queries.selectExpr(
         "`vec_id` AS query_id",
-        *[f"{_sub_dists_sql('`embedding`', s)} AS lut{s}" for s in range(m)],
+        *[f"{_sub_dists_sql('`embedding`', s)} AS lut{s}" for s in range(4)],
     )
     scored = codes.join(
         F.broadcast(luts), F.col("query_id") != F.col("neighbor_id")
     )
     adist = F.element_at(F.col("lut0"), F.col("c0") + 1)
-    for s in range(1, m):
+    for s in range(1, 4):
         adist = adist + F.element_at(F.col(f"lut{s}"), F.col(f"c{s}") + 1)
     scored = scored.select(
         "query_id", "neighbor_id", F.round(adist, 4).alias("adist")
@@ -527,22 +492,14 @@ def pq_topk(
     )
 
 
-def ivf_pq_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    m: int = 4,
-    codebook_k: int = 16,
-    coarse_train_limit: int = 100_000,
-    pq_train_limit: int = 512,
-) -> DataFrame:
+def ivf_pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """IVF+PQ ANN — the billion-vector FAISS composition (Jégou 2011
     §IV: IVFADC without the residual refinement): the IVF coarse
-    quantizer restricts each query to its ``n_probe`` nearest cells,
-    and within those cells candidates rank by PQ asymmetric-distance
-    (ADC) over m-byte codes instead of raw vectors.
+    quantizer (16 cells, trained on at most 100,000 vectors) restricts
+    each query to its 4 nearest cells, and within those cells
+    candidates rank by :func:`pq_topk`'s asymmetric distance (ADC) over
+    4-byte codes (16-centroid books trained on at most 512 vectors)
+    instead of raw vectors.
 
     The 100 TB shape combines both parents': the inverted-file join
     touches only probed cells (never the whole corpus), the scan that
@@ -565,14 +522,8 @@ def ivf_pq_topk(
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_coarse = pool.submit(
-            _coarse_centroids,
-            emb, n_cells, coarse_train_limit, 2, "vec_id", "embedding",
-        )
-        fut_pq = pool.submit(
-            _pq_model,
-            emb, m, codebook_k, "vec_id", "embedding", pq_train_limit, 2,
-        )
+        fut_coarse = pool.submit(_coarse_centroids, emb)
+        fut_pq = pool.submit(_pq_model, emb)
         centroids = fut_coarse.result()
         _sub_dists_sql, _code_sql = fut_pq.result()
     n = emb.sparkSession.sparkContext.defaultParallelism
@@ -581,22 +532,22 @@ def ivf_pq_topk(
         _cell_of("`embedding`", centroids).alias("cell"),
         *[
             F.expr(_code_sql("`embedding`", s)).alias(f"c{s}")
-            for s in range(m)
+            for s in range(4)
         ],
     )
     luts = queries.select(
         F.col("vec_id").alias("query_id"),
-        F.explode(_probe_cells("`embedding`", centroids, n_probe)).alias("cell"),
+        F.explode(_probe_cells("`embedding`", centroids, 4)).alias("cell"),
         *[
             F.expr(_sub_dists_sql("`embedding`", s)).alias(f"lut{s}")
-            for s in range(m)
+            for s in range(4)
         ],
     )
     scored = codes.join(F.broadcast(luts), "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
     adist = F.element_at(F.col("lut0"), F.col("c0") + 1)
-    for s in range(1, m):
+    for s in range(1, 4):
         adist = adist + F.element_at(F.col(f"lut{s}"), F.col(f"c{s}") + 1)
     scored = scored.select(
         "query_id", "neighbor_id", F.round(adist, 4).alias("adist")
@@ -739,31 +690,24 @@ def embedding_outliers(emb: DataFrame) -> DataFrame:
     )
 
 
-def ann_recall_report(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    planes: int = 8,
-    n_cells: int = 16,
-    n_probe: int = 4,
-) -> DataFrame:
-    """Recall@k of the approximate ANN paths against exact brute force —
+def ann_recall_report(emb: DataFrame, queries: DataFrame, planes: int = 8) -> DataFrame:
+    """Recall@10 of the approximate ANN paths against exact brute force —
     one row per method with mean recall and worst-query recall. This is
     the acceptance gate before switching a 100 TB retrieval pipeline
     from exact to approximate: "fast" only counts if the recall target
     holds (measure, don't guess).
 
     Scale shape: ground truth and candidates are the operators' own
-    bounded top-k outputs (k rows per query), so the comparison joins
-    touch k x |queries| rows regardless of corpus size."""
-    # k x |queries| bounded, but consumed FOUR times (twice per
+    bounded top-10 outputs (10 rows per query), so the comparison joins
+    touch 10 x |queries| rows regardless of corpus size."""
+    # 10 x |queries| bounded, but consumed FOUR times (twice per
     # recall_vs_truth call, two calls) — checkpoint so the exact
     # brute-force scan over the corpus runs once, not four times. LAZY:
     # an eager checkpoint here is a synchronous construction job that
     # serializes with the IVF training collects; lazy still pins one
     # materialization at the first action
     truth = (
-        brute_force_topk(emb, queries, k)
+        brute_force_topk(emb, queries)
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=False)
     )
@@ -783,16 +727,13 @@ def ann_recall_report(
         # leg's plan-construction py4j round-trips; both overlap the
         # truth materialization. Identical deterministic training —
         # ivf_topk just receives the result instead of re-running it.
-        fut_cents = pool.submit(
-            _coarse_centroids, emb, n_cells, 100_000, 2, "vec_id", "embedding"
+        fut_cents = pool.submit(_coarse_centroids, emb)
+        lsh_cand = lsh_bucketed_ann(emb, queries, planes=planes).select(
+            "query_id", "neighbor_id"
         )
-        lsh_cand = lsh_bucketed_ann(
-            emb, queries, k, planes=planes
-        ).select("query_id", "neighbor_id")
-        ivf_cand = ivf_topk(
-            emb, queries, k=k,
-            n_cells=n_cells, n_probe=n_probe, centroids=fut_cents.result(),
-        ).select("query_id", "neighbor_id")
+        ivf_cand = ivf_topk(emb, queries, centroids=fut_cents.result()).select(
+            "query_id", "neighbor_id"
+        )
         fut_truth.result()
     # BOTH method legs' recalls from ONE union + two aggregations,
     # replacing two recall_vs_truth subtrees (per leg: a cand
@@ -888,12 +829,7 @@ def recall_vs_truth(truth: DataFrame, cand: DataFrame, method: str) -> DataFrame
     ).select(F.lit(method).alias("method"), "mean_recall", "worst_recall")
 
 
-def gram_covariance(
-    emb: DataFrame,
-    round_to: int = 6,
-    partition_col: str | None = None,
-    n_parts: int = 64,
-) -> DataFrame:
+def gram_covariance(emb: DataFrame, round_to: int = 6) -> DataFrame:
     """Population covariance matrix of an embedding column as (i, j,
     cov) rows — the input to whitening/PCA and the canonical
     distributed-linear-algebra shape.
@@ -904,16 +840,10 @@ def gram_covariance(
     independent of row count. The partials are then posexploded and
     merged by a map-side-combined sum per cell. Nothing driver-side
     grows with the data; d is the only scaling knob (d^2 floats per
-    partition row).
-
-    Determinism: with ``partition_col`` set, rows are hash-partitioned
-    into a FIXED ``n_parts`` buckets on that key and sorted within each
-    partition, so partial-summation grouping and order are identical
-    regardless of scan layout or cluster size — float output is
-    bit-stable across environments (the round-robin default varies with
-    the input split count and flaked a 6-dp round boundary at the r2
-    gate). Null vectors are excluded, matching what any per-cell
-    aggregate would do."""
+    partition row). The rows spread round-robin over the default
+    parallelism, so the partial-summation grouping follows the scan
+    layout and cluster size. Null vectors are excluded, matching what
+    any per-cell aggregate would do."""
     src0 = emb.filter(F.col("embedding").isNotNull())
     head = src0.select("embedding").first()
     if head is None or head[0] is None:
@@ -921,19 +851,9 @@ def gram_covariance(
 
         raise AvroSqlError("gram_covariance: input has no vectors")
     d = len(head[0])  # one cheap dimension-probe job; d is not in the schema
-    sess = emb.sparkSession
-    if partition_col is not None:
-        src = (
-            src0.select(F.col(partition_col).alias("k"), F.col("embedding").alias("v"))
-            .repartition(n_parts, "k")
-            .sortWithinPartitions("k")
-            .select("v")
-        )
-    else:
-        # fastest path when bit-stability across environments isn't needed
-        src = src0.select(F.col("embedding").alias("v")).repartition(
-            sess.sparkContext.defaultParallelism
-        )
+    src = src0.select(F.col("embedding").alias("v")).repartition(
+        emb.sparkSession.sparkContext.defaultParallelism
+    )
 
     def _partials(batches):
         import numpy as np
@@ -1274,7 +1194,7 @@ def semantic_dedup_report(
         )
     )
     pts = (
-        _assign(emb, cents, "embedding")
+        _assign(emb, cents)
         .select(
             F.col("vec_id").alias("id"),
             F.col("embedding").cast("array<double>").alias("vec"),
@@ -1409,47 +1329,32 @@ def hard_negatives(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame
     )
 
 
-def random_projection(
-    emb: DataFrame, out_dim: int = 16, in_dim: int = 64, seed: int = 11
-) -> DataFrame:
+def random_projection(emb: DataFrame) -> DataFrame:
     """Johnson-Lindenstrauss random projection (Achlioptas 2003-style
-    dense projection, components md5-derived): ``in_dim`` -> ``out_dim``
+    dense projection, components md5-derived with seed 11): 64 -> 16
     doubles per row. The projection matrix is PLAN-TIME literal — the
     same device as :func:`hyperplane_signature` — so there is no stored
     model, no join, and the DuckDB oracle embeds the identical double
     literals. Each output component is a left-associated ``_v[j] * c``
-    sum — unrolled straight-line SQL when the matrix is small enough for
-    janino, a bit-identical 0.0-seeded zip_with/aggregate fold above
-    that — so both engines reproduce it bit-for-bit either way.
+    sum, written as a 0.0-seeded zip_with/aggregate fold, so both
+    engines reproduce it bit-for-bit.
 
     Row-local: zero shuffle. At 100 TB this is the standard 4x
     shrink applied BEFORE any shuffle-heavy similarity stage — the
     projected column is what gets exchanged, not the raw vectors."""
-    comps = _plane_components(out_dim, in_dim, seed)
-    if out_dim * in_dim <= 256:
-        # small matrices: unrolled straight-line arithmetic, fully
-        # whole-stage-codegen'd (fastest shape under janino's 64 KB
-        # method limit — the clustering._assign lesson)
-        terms = []
-        for p in range(out_dim):
-            dot = " + ".join(
-                f"_v[{j}] * CAST('{c!r}' AS DOUBLE)" for j, c in enumerate(comps[p])
-            )
-            terms.append(f"({dot})")
-    else:
-        # 16 x 64 = 1024 multiply-adds unrolled blow the 64 KB janino
-        # method limit and silently drop the WHOLE stage to interpreted
-        # execution (observed). The 0.0-seeded left fold over zip_with
-        # is the IDENTICAL IEEE value (ascending element order,
-        # 0.0+x == x), so the oracle replay is unchanged and the
-        # surrounding stage keeps codegen.
-        terms = []
-        for p in range(out_dim):
-            lits = ", ".join(f"CAST('{c!r}' AS DOUBLE)" for c in comps[p])
-            terms.append(
-                f"aggregate(zip_with(_v, array({lits}),"
-                " (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
-            )
+    comps = _plane_components(16, 64, 11)
+    # 16 x 64 = 1024 multiply-adds unrolled blow the 64 KB janino method
+    # limit and silently drop the WHOLE stage to interpreted execution
+    # (observed). The 0.0-seeded left fold over zip_with is the
+    # IDENTICAL IEEE value as the unrolled sum (ascending element order,
+    # 0.0+x == x), and the surrounding stage keeps codegen.
+    terms = []
+    for p in range(16):
+        lits = ", ".join(f"CAST('{c!r}' AS DOUBLE)" for c in comps[p])
+        terms.append(
+            f"aggregate(zip_with(_v, array({lits}),"
+            " (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
+        )
     arr = "array(" + ", ".join(terms) + ")"
     return (
         emb.withColumn("_v", F.expr("cast(embedding as array<double>)"))
@@ -1519,16 +1424,14 @@ def jl_shortlist_recall(
     )
 
 
-def mmr_select(
-    emb: DataFrame, query_vec: "list[float] | None" = None, k: int = 8, pool: int = 64
-) -> DataFrame:
+def mmr_select(emb: DataFrame, k: int = 8, pool: int = 64) -> DataFrame:
     """Maximal Marginal Relevance selection (Carbonell & Goldstein,
     SIGIR 1998): greedily pick ``k`` vectors maximizing
     ``0.7 * relevance - 0.3 * max_sim_to_already_selected`` — the
     diverse-exemplar pass a few-shot/eval-set builder runs after
     retrieval, trading pure relevance for coverage.
 
-    Determinism discipline: the query vector defaults to a plan-time
+    Determinism discipline: the query vector is a plan-time
     md5-derived literal (``_plane_components`` seed 23); relevance
     and pairwise cosines are rounded to 6 dp BEFORE any
     comparison; the per-round score is one fixed-shape expression
@@ -1544,8 +1447,7 @@ def mmr_select(
     of the k rounds is one tiny aggregate+argmax job over it; driver
     state is k id/score rows. ``pool`` can grow to 10^6 without any
     plan change — rounds scan the checkpointed pair frame only."""
-    if query_vec is None:
-        query_vec = _plane_components(1, 64, 23)[0]
+    query_vec = _plane_components(1, 64, 23)[0]
     qlit = F.expr(
         "array(" + ", ".join(f"CAST('{c!r}' AS DOUBLE)" for c in query_vec) + ")"
     )
@@ -1611,17 +1513,15 @@ def mmr_select(
     return out.orderBy("step")
 
 
-def embedding_energy_profile(
-    emb: DataFrame, dims: "tuple[int, ...]" = (4, 8, 16, 32, 64)
-) -> DataFrame:
+def embedding_energy_profile(emb: DataFrame) -> DataFrame:
     """Prefix-energy profile of an embedding column — the measurement
     behind a Matryoshka-style truncation decision (Kusupati et al. 2022,
-    "Matryoshka Representation Learning"): for each prefix length d,
-    the corpus-mean fraction of a vector's squared L2 norm carried by
-    its first d coordinates. cos(full, renormalized-d-prefix) equals
-    sqrt(prefix-energy), so a profile row ~0.99 at d=16 says a 4x
-    cheaper 16-dim index loses ~0.5% cosine fidelity — decided from one
-    scan, before building any index.
+    "Matryoshka Representation Learning"): for each prefix length d in
+    (4, 8, 16, 32, 64), the corpus-mean fraction of a vector's squared
+    L2 norm carried by its first d coordinates. cos(full,
+    renormalized-d-prefix) equals sqrt(prefix-energy), so a profile row
+    ~0.99 at d=16 says a 4x cheaper 16-dim index loses ~0.5% cosine
+    fidelity — decided from one scan, before building any index.
 
     Shape: one projection computes all prefix energies IN-ROW with
     ``aggregate`` over ``slice`` (each element cast to double BEFORE
@@ -1630,6 +1530,7 @@ def embedding_energy_profile(
     fraction is rounded and accumulated in DECIMAL(38,6), so the
     corpus mean is partition-order-free. One aggregate row out; no
     shuffle beyond the global agg's partial pair."""
+    dims = (4, 8, 16, 32, 64)
     sq = lambda acc, x: acc + x.cast("double") * x.cast("double")  # noqa: E731
     full = F.aggregate(F.col("embedding"), F.lit(0.0), sq)
     row = emb.select(
@@ -1762,10 +1663,8 @@ def embedding_isotropy(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def ndcg_ivf_report(
-    emb: DataFrame, queries: DataFrame, k: int = 10, n_cells: int = 16, n_probe: int = 4
-) -> DataFrame:
-    """NDCG@k of the IVF path against exact brute force — the GRADED
+def ndcg_ivf_report(emb: DataFrame, queries: DataFrame) -> DataFrame:
+    """NDCG@10 of the IVF path against exact brute force — the GRADED
     companion to recall@k (ann_recall_report): recall counts how many
     true neighbors the approximate path returns, NDCG@k also scores
     WHERE it puts them (Järvelin & Kekäläinen 2002). A path can hold
@@ -1773,7 +1672,7 @@ def ndcg_ivf_report(
     report catches that.
 
     Relevance of a returned neighbor is its graded truth position
-    (k+1-rank in the exact top-k, 0 if absent); DCG discounts by
+    (11-rank in the exact top 10, 0 if absent); DCG discounts by
     log2(position+1); IDCG is assembled from the SAME truth rows, so
     ndcg = dcg/idcg is 1.0 exactly when the approximate head equals
     the exact head.
@@ -1782,21 +1681,15 @@ def ndcg_ivf_report(
     oracle-replayable brute/IVF rankings; each DCG term is
     9 dp-quantized into DECIMAL(38,9) so the per-query sum is
     order-free; the ln-based log2 composition is written identically
-    in the oracle. Scale shape: both inputs are k-rows-per-query
+    in the oracle. Scale shape: both inputs are 10-rows-per-query
     frames — everything after the two top-k operators is
-    queries x k sized."""
-    truth = brute_force_topk(emb, queries, k)
-    cand = ivf_topk(
-        emb,
-        queries,
-        k,
-        n_cells=n_cells,
-        n_probe=n_probe,
-    )
+    queries x 10 sized."""
+    truth = brute_force_topk(emb, queries)
+    cand = ivf_topk(emb, queries)
     rel = truth.select(
         "query_id",
         "neighbor_id",
-        (F.lit(k + 1) - F.col("rank")).alias("rel"),
+        (F.lit(11) - F.col("rank")).alias("rel"),
     )
 
     def dcg_term(rel_col, rank_col):
@@ -1823,7 +1716,7 @@ def ndcg_ivf_report(
     )
     ideal = truth.groupBy("query_id").agg(
         F.sum(
-            dcg_term(F.lit(k + 1) - F.col("rank"), F.col("rank"))
+            dcg_term(F.lit(11) - F.col("rank"), F.col("rank"))
         ).alias("idcg")
     )
     return (
@@ -1844,15 +1737,13 @@ def ndcg_ivf_report(
     )
 
 
-def drift_split_report(
-    emb: DataFrame, n_cells: int = 8, train_limit: int = 512
-) -> DataFrame:
+def drift_split_report(emb: DataFrame) -> DataFrame:
     """Embedding-distribution drift between two deterministic halves of
-    the corpus, read through a shared coarse quantizer — the
-    monitoring primitive behind "did the embedding distribution of
-    this week's crawl move?": train the deterministic Lloyd quantizer
-    on the REFERENCE half only (even ids — the stand-in for the
-    baseline snapshot), assign BOTH halves, and compare per-cell
+    the corpus, read through a shared coarse quantizer — the monitoring
+    primitive behind "did the embedding distribution of this week's
+    crawl move?": train the deterministic 8-cell Lloyd quantizer on at
+    most 512 rows of the REFERENCE half only (even ids — the stand-in
+    for the baseline snapshot), assign BOTH halves, and compare per-cell
     occupancy shares. A drifted batch piles into different cells; the
     per-cell |share_ref - share_cur| column is the term of the total-
     variation distance (TV = half their sum).
@@ -1866,11 +1757,8 @@ def drift_split_report(
     from .clustering import _assign, lloyd_centroids
 
     ref = emb.filter((F.col("vec_id") % 2) == 0)
-    cents = lloyd_centroids(
-        ref.orderBy("vec_id").limit(train_limit),
-        k=n_cells,
-    )
-    assigned = _assign(emb, cents, "embedding").select(
+    cents = lloyd_centroids(ref.orderBy("vec_id").limit(512), k=8)
+    assigned = _assign(emb, cents).select(
         ((F.col("vec_id") % 2) == 0).cast("int").alias("a"),
         F.col("cluster").alias("cell"),
     )

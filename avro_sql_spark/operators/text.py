@@ -241,14 +241,12 @@ def source_quality_report(docs: DataFrame) -> DataFrame:
     )
 
 
-def pmi_collocations(
-    docs: DataFrame, min_count: int = 10, top_k: int = 30
-) -> DataFrame:
-    """Top-k collocations by pointwise mutual information over adjacent
+def pmi_collocations(docs: DataFrame) -> DataFrame:
+    """Top-30 collocations by pointwise mutual information over adjacent
     token pairs — the statistical phrase detector used for tokenizer
     merges and stop-phrase lists. PMI = ln(p(ab) / (p(a)·p(b))) over
-    corpus unigram/bigram frequencies; ``min_count`` suppresses the
-    unstable low-frequency tail.
+    corpus unigram/bigram frequencies; a floor of 10 occurrences
+    suppresses the unstable low-frequency tail.
 
     Shape: tokens and adjacent pairs are built in-row (filter +
     transform), then two partial-aggregated shuffles (unigram, bigram
@@ -279,7 +277,7 @@ def pmi_collocations(
     ua = uni.select(F.col("w").alias("wa"), F.col("c1").alias("ca"))
     ub = uni.select(F.col("w").alias("wb"), F.col("c1").alias("cb"))
     scored = (
-        big.filter(F.col("c2") >= min_count)
+        big.filter(F.col("c2") >= 10)
         .join(F.broadcast(ua), "wa")
         .join(F.broadcast(ub), "wb")
         .crossJoin(F.broadcast(t1))
@@ -296,7 +294,7 @@ def pmi_collocations(
             ).alias("pmi"),
         )
     )
-    return scored.orderBy(F.desc("pmi"), "bigram").limit(top_k)
+    return scored.orderBy(F.desc("pmi"), "bigram").limit(30)
 
 
 def quality_filter_observed(docs: DataFrame):
@@ -320,12 +318,13 @@ def quality_filter_observed(docs: DataFrame):
     return observed.filter(ok), obs
 
 
-def bigram_logprob_scores(docs: DataFrame, k: float = 0.5) -> DataFrame:
-    """Bigram language-model quality score with add-k smoothing: pass 1
-    builds corpus bigram + unigram counts, pass 2 scores each doc by the
-    mean ln P(w2|w1) = ln((c(w1 w2)+k) / (c(w1)+k·V)) over its adjacent
-    token pairs. Catches shuffled-word and template junk that the
-    unigram score cannot (every token frequent, transitions absurd).
+def bigram_logprob_scores(docs: DataFrame) -> DataFrame:
+    """Bigram language-model quality score with add-k smoothing (k =
+    0.5): pass 1 builds corpus bigram + unigram counts, pass 2 scores
+    each doc by the mean ln P(w2|w1) = ln((c(w1 w2)+k) / (c(w1)+k·V))
+    over its adjacent token pairs. Catches shuffled-word and template
+    junk that the unigram score cannot (every token frequent,
+    transitions absurd).
 
     Adjacency is computed IN-ROW: non-word tokens are filtered from the
     token array before pairing, so punctuation never fabricates or
@@ -373,7 +372,7 @@ def bigram_logprob_scores(docs: DataFrame, k: float = 0.5) -> DataFrame:
         .select(
             "bg",
             F.log(
-                (F.col("cb") + F.lit(k)) / (F.col("cu") + F.lit(k) * F.col("v"))
+                (F.col("cb") + F.lit(0.5)) / (F.col("cu") + F.lit(0.5) * F.col("v"))
             ).alias("lp"),
         )
     )
@@ -463,9 +462,9 @@ def kneser_ney_scores(docs: DataFrame) -> DataFrame:
     )
 
 
-def vocab_coverage(docs: DataFrame, mass: float = 0.9) -> DataFrame:
+def vocab_coverage(docs: DataFrame) -> DataFrame:
     """Vocabulary concentration per group: how many distinct tokens does
-    it take to cover ``mass`` of the token occurrences — the tokenizer-
+    it take to cover 90% of the token occurrences — the tokenizer-
     budget / vocab-truncation planning number (a tight core vocab means
     aggressive truncation is safe; a flat distribution means it is not).
 
@@ -492,7 +491,7 @@ def vocab_coverage(docs: DataFrame, mass: float = 0.9) -> DataFrame:
         (F.sum("c").over(w) - F.col("c")).alias("before"),
         F.sum("c").over(totals).alias("total"),
     )
-    core = ranked.filter(F.col("before") < F.lit(mass) * F.col("total"))
+    core = ranked.filter(F.col("before") < F.lit(0.9) * F.col("total"))
     return (
         core.groupBy("grp")
         .agg(
@@ -1236,12 +1235,13 @@ def lexical_diversity(docs: DataFrame) -> DataFrame:
     )
 
 
-def term_burstiness(docs: DataFrame, min_df: int = 10, top_k: int = 30) -> DataFrame:
-    """Term burstiness (Church & Gale 1995): mean occurrences per
-    CONTAINING document, cf/df — near 1 for function words that sprinkle
-    evenly, high for topical terms that cluster where they appear. The
-    dispersion statistic behind keyword weighting and stopword
-    discovery that raw frequency cannot provide.
+def term_burstiness(docs: DataFrame) -> DataFrame:
+    """Term burstiness (Church & Gale 1995) of the top 30 terms found in
+    at least 10 documents: mean occurrences per CONTAINING document,
+    cf/df — near 1 for function words that sprinkle evenly, high for
+    topical terms that cluster where they appear. The dispersion
+    statistic behind keyword weighting and stopword discovery that raw
+    frequency cannot provide.
 
     One tokenize-explode pass into a (doc, term) count (both shuffles
     key on the term after the first combine), then a vocab-sized
@@ -1257,7 +1257,7 @@ def term_burstiness(docs: DataFrame, min_df: int = 10, top_k: int = 30) -> DataF
         F.sum("c").alias("cf"), F.count(F.lit(1)).alias("df")
     )
     return (
-        stats.filter(F.col("df") >= min_df)
+        stats.filter(F.col("df") >= 10)
         .select(
             F.col("w").alias("term"),
             F.col("cf").cast("bigint").alias("cf"),
@@ -1265,7 +1265,7 @@ def term_burstiness(docs: DataFrame, min_df: int = 10, top_k: int = 30) -> DataF
             F.round(F.col("cf") / F.col("df"), 9).alias("burstiness"),
         )
         .orderBy(F.desc("burstiness"), F.asc("term"))
-        .limit(top_k)
+        .limit(30)
     )
 
 
@@ -1462,12 +1462,12 @@ def typo_candidate_pairs(words: DataFrame) -> DataFrame:
     return pairs.orderBy("word_a", "word_b")
 
 
-def textrank_keywords(docs: DataFrame, top_k: int = 20) -> DataFrame:
+def textrank_keywords(docs: DataFrame) -> DataFrame:
     """TextRank keyword extraction (Mihalcea & Tarau 2004): a word
     co-occurrence graph (undirected, weight = co-occurrence count
     within 2 positions) scored by weighted PageRank —
     ``tr(w) = (1-d) + d·Σ_v w(v,w)/wdeg(v)·tr(v)`` from 1.0, fixed
-    10 iterations — then the top-k words by score. The classic
+    10 iterations — then the top 20 words by score. The classic
     unsupervised keyword/keyphrase starter.
 
     Shape: pair generation is IN-ROW over the tokenized array (the
@@ -1554,7 +1554,7 @@ def textrank_keywords(docs: DataFrame, top_k: int = 20) -> DataFrame:
     return (
         ranks.select("word", F.round("tr", 6).alias("textrank"))
         .orderBy(F.desc("textrank"), F.asc("word"))
-        .limit(top_k)
+        .limit(20)
     )
 
 
@@ -1619,10 +1619,10 @@ def entropy_rate_bigram(docs: DataFrame) -> DataFrame:
     )
 
 
-def burrows_delta(docs: DataFrame, top_terms: int = 30) -> DataFrame:
+def burrows_delta(docs: DataFrame) -> DataFrame:
     """Burrows' Delta (Burrows 2002) stylometric distance between all
     source pairs — the classic authorship-attribution measure: z-score
-    each source's relative frequency of the corpus' top function words
+    each source's relative frequency of the corpus' top 30 function words
     against the cross-source distribution, then Delta = mean |z_a−z_b|.
     Low Delta says two crawls share register/boilerplate even when
     their vocabularies differ — a mixing signal KL misses because
@@ -1630,7 +1630,7 @@ def burrows_delta(docs: DataFrame, top_terms: int = 30) -> DataFrame:
 
     Shape: the top-term selection is a map-side top-k (orderBy+limit =
     TakeOrdered, no full vocab sort), everything after lives on the
-    bounded top_terms × sources grid. Relative frequencies quantize at
+    bounded 30-terms × sources grid. Relative frequencies quantize at
     9dp, squared deviations at 12dp, |z_a−z_b| at 9dp — every
     cross-row sum is an order-free DECIMAL; μ, σ, z are single-op
     scalar chains the oracle replays."""
@@ -1651,7 +1651,7 @@ def burrows_delta(docs: DataFrame, top_terms: int = 30) -> DataFrame:
         counts.groupBy("w")
         .agg(F.sum("c").alias("tc"))
         .orderBy(F.desc("tc"), F.asc("w"))
-        .limit(top_terms)
+        .limit(30)
         .select("w")
     )
     grid = (
@@ -2095,14 +2095,14 @@ def mcnemar_gate_compare(docs: DataFrame) -> DataFrame:
     )
 
 
-def template_prefix_report(docs: DataFrame, min_docs: int = 2) -> DataFrame:
-    """Boilerplate / template detection by normalized prefix: documents
-    opening with the same first 24 characters (lowercased,
-    trimmed, whitespace-collapsed) are template candidates — the cheap
-    high-precision screen crawl pipelines run BEFORE fuzzy dedup,
-    because license headers / cookie banners / scraped nav bars share
-    exact prefixes long before they share shingles. Top templates by
-    document count, with the source spread (a template spanning many
+def template_prefix_report(docs: DataFrame) -> DataFrame:
+    """Boilerplate / template detection by normalized prefix: two or
+    more documents opening with the same first 24 characters
+    (lowercased, trimmed, whitespace-collapsed) are template candidates
+    — the cheap high-precision screen crawl pipelines run BEFORE fuzzy
+    dedup, because license headers / cookie banners / scraped nav bars
+    share exact prefixes long before they share shingles. Top templates
+    by document count, with the source spread (a template spanning many
     sources is infrastructure boilerplate, not an author's style).
 
     Exactness: string normalization is the fingerprint device
@@ -2120,7 +2120,7 @@ def template_prefix_report(docs: DataFrame, min_docs: int = 2) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.countDistinct("source").alias("n_sources"),
         )
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= 2)
         .localCheckpoint(eager=True)  # templates-sized, forked below
     )
     tot = docs.agg(F.count(F.lit(1)).alias("total"))
@@ -2357,7 +2357,7 @@ def cohens_kappa_gates(docs: DataFrame) -> DataFrame:
     )
 
 
-def g2_keyness_terms(docs: DataFrame, min_total: int = 20) -> DataFrame:
+def g2_keyness_terms(docs: DataFrame) -> DataFrame:
     """Dunning log-likelihood keyness (Dunning 1993 G^2) of vocabulary
     terms between the ``src1`` source family and the rest of
     the corpus — corpus linguistics' standard "what words characterize
@@ -2368,7 +2368,7 @@ def g2_keyness_terms(docs: DataFrame, min_total: int = 20) -> DataFrame:
     rate comparison (positive = family-leaning, decided by the EXACT
     integer cross-product a*N_b > b*N_a).
 
-    Terms with an empty cell or pooled count below ``min_total`` are
+    Terms with an empty cell or pooled count below 20 are
     excluded (0 ln 0 handling and rare-noise cap, mirrored in the
     oracle). One tokenize pass, integer cells, fixed ln composition,
     9 dp pre-round + term tiebreak into a distributed TakeOrdered —
@@ -2388,7 +2388,7 @@ def g2_keyness_terms(docs: DataFrame, min_total: int = 20) -> DataFrame:
         counts.filter(
             (F.col("a") > 0)
             & (F.col("b") > 0)
-            & ((F.col("a") + F.col("b")) >= min_total)
+            & ((F.col("a") + F.col("b")) >= 20)
         )
         .crossJoin(F.broadcast(totals))
     )
@@ -2523,7 +2523,7 @@ RAKE_STOPWORDS = (
 )
 
 
-def rake_keyphrases(docs: DataFrame, top_k: int = 20) -> DataFrame:
+def rake_keyphrases(docs: DataFrame) -> DataFrame:
     """RAKE keyphrase extraction (Rose et al. 2010) over the corpus —
     the multi-word companion to textrank_keywords (single tokens):
     candidate phrases are maximal runs of content tokens between
@@ -2542,7 +2542,7 @@ def rake_keyphrases(docs: DataFrame, top_k: int = 20) -> DataFrame:
     orders by the exact decimal score with a phrase tiebreak. Scale
     shape: one posexplode, per-doc running-sum windows (partitioned
     by doc, never global), word-keyed equi-joins, a distributed
-    TakeOrdered top-k."""
+    TakeOrdered top 20."""
     from pyspark.sql.window import Window as W
 
     toks = docs.select(
@@ -2606,7 +2606,7 @@ def rake_keyphrases(docs: DataFrame, top_k: int = 20) -> DataFrame:
             F.max("s9").alias("s9"),
         )
         .orderBy(F.desc("s9"), F.asc("phrase"))
-        .limit(top_k)
+        .limit(20)
         .select(
             "phrase",
             F.col("nw").cast("long").alias("n_words"),

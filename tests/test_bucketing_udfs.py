@@ -56,13 +56,3 @@ def test_shingle_udtf(spark):
     assert [(r["doc_id"], r["shingle"]) for r in rows] == [(1, "a b c"), (1, "b c d")]
 
 
-def test_band_validation_rejects_non_dividing_bands(spark):
-    """bands must divide num_hashes — a remainder would silently drop
-    hashes from every band key (lowered recall with no error)."""
-    import pytest as _pytest
-
-    from avro_sql_spark.operators.dedup import minhash_candidate_pairs
-
-    docs = spark.createDataFrame([(1, "a b c d e")], ["doc_id", "text"])
-    with _pytest.raises(ValueError, match="must divide"):
-        minhash_candidate_pairs(docs, num_hashes=64, bands=12).collect()

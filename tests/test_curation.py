@@ -47,12 +47,6 @@ def test_sample_superset_property(docs):
     assert small.count() < big.count()
 
 
-def test_sample_salts_differ(docs):
-    a = curation.deterministic_sample(docs, fraction=0.5, salt="a").select("doc_id")
-    b = curation.deterministic_sample(docs, fraction=0.5, salt="b").select("doc_id")
-    assert a.exceptAll(b).count() > 0  # different salts pick different rows
-
-
 def test_stratified_fractions(docs):
     out = curation.stratified_sample(docs, "lang", {"fr": 1.0})
     # fr kept fully, everything else dropped (default_fraction=0)
@@ -103,20 +97,6 @@ def test_quality_shards_approx_contract(docs):
     # assignment is row-local: no Exchange in the labeled frame's plan
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-
-
-def test_quality_shards_approx_agrees_with_exact(docs):
-    """With a tight sketch and a high-cardinality score (n_chars — the
-    quality heuristic has only 4 distinct values), approx shard sizes
-    track the exact NTILE within a loose band."""
-    score = F.col("n_chars").cast("double")
-    exact = curation.quality_shards(docs, n_shards=4, score=score)
-    approx = curation.quality_shards_approx(docs, n_shards=4, score=score, relative_error=0.0001)
-    n = docs.count()
-    ex = {r["shard"]: r["n"] for r in exact.groupBy("shard").agg(F.count(F.lit(1)).alias("n")).collect()}
-    ap = {r["shard"]: r["n"] for r in approx.groupBy("shard").agg(F.count(F.lit(1)).alias("n")).collect()}
-    for s in ex:
-        assert abs(ex[s] - ap.get(s, 0)) <= 0.5 * n / 4 + 1
 
 
 def test_pack_sequences_invariants(docs):
@@ -223,8 +203,6 @@ def test_deterministic_take_exact_k_and_stable(spark):
     a = sorted(r["doc_id"] for r in curation.deterministic_take(docs, 10).collect())
     b = sorted(r["doc_id"] for r in curation.deterministic_take(docs, 10).collect())
     assert len(a) == 10 and a == b  # exact k, rerun-stable
-    c = sorted(r["doc_id"] for r in curation.deterministic_take(docs, 10, salt="x").collect())
-    assert a != c  # salt changes the sample
     # no global sort: top-k via TakeOrderedAndProject
     plan = curation.deterministic_take(docs, 10)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
@@ -379,17 +357,18 @@ def test_forget_cascade_bridges_lineitem(spark):
     from avro_sql_spark.operators import curation
     from pyspark.sql import functions as F
 
-    customer = spark.createDataFrame([(i,) for i in range(10)], "c_custkey LONG")
+    # 500 customers, so the 0.02 forget fraction drops some of them
+    customer = spark.createDataFrame([(i,) for i in range(500)], "c_custkey LONG")
     orders = spark.createDataFrame(
-        [(oid, oid % 10) for oid in range(30)], "o_orderkey LONG, o_custkey LONG"
+        [(oid, oid % 500) for oid in range(1500)], "o_orderkey LONG, o_custkey LONG"
     )
     lineitem = spark.createDataFrame(
-        [(oid, j) for oid in range(30) for j in range(2)],
+        [(oid, j) for oid in range(1500) for j in range(2)],
         "l_orderkey LONG, l_linenumber LONG",
     )
-    events = spark.createDataFrame([(i % 10,) for i in range(50)], "user_id LONG")
+    events = spark.createDataFrame([(i % 500,) for i in range(2500)], "user_id LONG")
     out = {r["table_name"]: r for r in curation.forget_cascade(
-        customer, orders, lineitem, events, frac=0.5
+        customer, orders, lineitem, events
     ).collect()}
     assert set(out) == {"customer", "orders", "lineitem", "events"}
     for r in out.values():
@@ -398,6 +377,7 @@ def test_forget_cascade_bridges_lineitem(spark):
     assert out["lineitem"]["n_dropped"] == 2 * out["orders"]["n_dropped"]
     # forgetting is keyed consistently: a dropped customer's orders all drop
     gone_c = out["customer"]["n_dropped"]
+    assert gone_c > 0
     assert out["orders"]["n_dropped"] == 3 * gone_c  # 3 orders per customer
 
 
@@ -488,8 +468,11 @@ def test_negative_sampling_table_ranges(docs):
     """Ranges are contiguous ([lo, hi) chains), shares positive and the
     3/4-power damping holds: a term with 16x the count gets only 8x the
     weight share."""
-    out = curation.negative_sampling_table(docs, top_k=20).collect()
-    assert len(out) == 20
+    from avro_sql_spark.functions.text import word_tokens
+
+    out = curation.negative_sampling_table(docs).collect()
+    vocab = docs.select(F.explode(word_tokens(F.col("text")))).distinct().count()
+    assert len(out) == min(50, vocab)  # the 50 heaviest terms, or all
     prev_hi = 0.0
     for r in out:
         assert abs(r["cum_lo"] - prev_hi) < 2e-9

@@ -99,7 +99,7 @@ def test_cc_star_matches_min_label_cc(spark):
     prop = {
         r["id"]: r["cluster_id"]
         for r in connected_components(
-            nodes, df.filter("src != dst"), "src", "dst"
+            nodes, df.filter("src != dst").toDF("id_a", "id_b")
         ).collect()
     }
     # the self-loop node 4 is edge-filtered by the star variant (no

@@ -20,16 +20,9 @@ def test_salted_join_matches_plain_join(spark):
     assert hot == big.filter(F.col("k") == 1).count()
 
 
-def test_salted_join_left(spark):
-    big = spark.createDataFrame([(1, 10), (2, 20), (9, 90)], "k LONG, v LONG")
-    small = spark.createDataFrame([(1, "x")], "k LONG, s STRING")
-    out = salted_join(big, small, "k", how="left").orderBy("k").collect()
-    assert [(r["k"], r["s"]) for r in out] == [(1, "x"), (2, None), (9, None)]
-
-
 def test_broadcast_if_small(spark):
     small = spark.range(10)
-    hinted = broadcast_if_small(small, max_rows=100)
+    hinted = broadcast_if_small(small)
     big = spark.range(10000).withColumnRenamed("id", "id2")
     plan = big.join(hinted, big.id2 == hinted.id)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
@@ -102,23 +95,6 @@ def test_bloom_no_false_negatives(spark):
         ~bloom_might_contain(F.col("k"), words, 1 << 14)
     ).count()
     assert misses == 0
-
-
-def test_bloom_prefilter_join_rejects_outer(spark):
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from avro_sql_spark.errors import AvroSqlError
-    from avro_sql_spark.operators.joins import bloom_prefilter_join
-
-    big = spark.range(10).select(F.col("id").alias("k"))
-    small = spark.range(3).select(F.col("id").alias("k"))
-    for how in ("left", "full", "left_anti", "right"):
-        with _pytest.raises(AvroSqlError, match="preserves semantics only"):
-            bloom_prefilter_join(big, small, "k", how=how)
-    # left_semi is allowed and equals the plain semi join
-    got = bloom_prefilter_join(big, small, "k", how="left_semi").count()
-    assert got == big.join(small, "k", "left_semi").count()
 
 
 def test_bloom_num_bits_normalized(spark):

@@ -43,7 +43,7 @@ def test_fingerprint_normalizes_whitespace(spark):
 
 def test_word_shingles(spark):
     df = spark.createDataFrame([("a b c d",), ("a b",)], "text STRING")
-    out = df.select(word_shingles(F.col("text"), 3).alias("sh")).collect()
+    out = df.select(word_shingles(F.col("text")).alias("sh")).collect()
     assert out[0]["sh"] == ["a b c", "b c d"]
     assert out[1]["sh"] == []  # shorter than the shingle width
 
@@ -175,10 +175,10 @@ def test_ivf_topk_recall(spark):
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
     queries = emb.filter(F.col("vec_id") < 3)
     exact = similarity.brute_force_topk(emb, queries, k=5)
-    approx = similarity.ivf_topk(emb, queries, k=5, n_cells=8, n_probe=4)
+    approx = similarity.ivf_topk(emb, queries, k=5)
     ex = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     ap = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
-    # probing half the cells should recover most exact neighbors
+    # probing 4 of the 16 cells should recover most exact neighbors
     assert len(ex & ap) / len(ex) >= 0.5
     # and every approx hit is ranked by cosine desc within its query
     for qid in (0, 1, 2):
@@ -193,7 +193,7 @@ def test_ivf_topk_large_query_set(spark):
 
     rows = [(i, [math.cos(i * 0.3), math.sin(i * 0.3), float(i % 5), 1.0]) for i in range(100)]
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    out = similarity.ivf_topk(emb, emb, k=3, n_cells=8, n_probe=8)
+    out = similarity.ivf_topk(emb, emb, k=3)
     grouped = {}
     for r in out.collect():
         grouped.setdefault(r["query_id"], []).append(r["cos"])
@@ -516,7 +516,7 @@ def test_pmi_collocations(spark):
         [(i, "strong glue filler" + (" weak" * (i % 3))) for i in range(30)],
         "doc_id LONG, text STRING",
     )
-    rows = {r["bigram"]: r for r in pmi_collocations(docs, min_count=5, top_k=5).collect()}
+    rows = {r["bigram"]: r for r in pmi_collocations(docs).collect()}
     assert "strong glue" in rows
     # exact PMI recompute: c2=30; unigrams strong=30, glue=30; totals from data
     uni_total = 30 + 30 + 30 + sum((i % 3) for i in range(30))
@@ -541,9 +541,7 @@ def test_duplicated_span_stats(spark):
     )
     rows = {
         r["source"]: r
-        for r in dedup.duplicated_span_stats(
-            docs, n=3, heavy_frac=0.5
-        ).collect()
+        for r in dedup.duplicated_span_stats(docs, n=3).collect()
     }
     # s1: both docs 100% duplicated spans, both heavy
     assert rows["s1"]["n_docs"] == 2
@@ -666,7 +664,7 @@ def test_bigram_logprob_hand_computed(spark):
     docs = spark.createDataFrame(
         [(1, "a b c"), (2, "a b")], "doc_id long, text string"
     )
-    rows = {r["doc_id"]: r for r in bigram_logprob_scores(docs, k=0.5).collect()}
+    rows = {r["doc_id"]: r for r in bigram_logprob_scores(docs).collect()}
     # corpus: bigrams {a b:2, b c:1}; unigrams {a:2, b:2, c:1}; V=3
     lp_ab = math.log((2 + 0.5) / (2 + 0.5 * 3))
     lp_bc = math.log((1 + 0.5) / (2 + 0.5 * 3))
@@ -698,7 +696,7 @@ def test_vocab_coverage_hand_computed(spark):
     docs = spark.createDataFrame(
         [(1, "a a a a a a a a b c", "en")], "doc_id long, text string, lang string"
     )
-    r = vocab_coverage(docs, mass=0.9).collect()[0]
+    r = vocab_coverage(docs).collect()[0]
     assert r["n_vocab"] == 3
     assert r["n_core_tokens"] == 2  # a (before=0) + b (before=8 < 9)
     assert r["covered_mass"] == 0.9
@@ -707,26 +705,28 @@ def test_vocab_coverage_hand_computed(spark):
 def test_ann_recall_report_bounds_and_selfcheck(spark):
     """recall in [0,1] for both methods, and brute-force-vs-itself would
     be 1.0 — the report's hit-join logic checked via a clustered corpus
-    where IVF with generous probes recovers most of the truth."""
+    where the IVF probes cover the query's whole cluster."""
     import random
 
     random.seed(7)
-    means = [(5.0, 0.0), (0.0, 5.0), (-5.0, -5.0)]  # angularly separated
+    # 4 angularly separated clusters of 15; the 16 lowest ids (the
+    # quantizer's seeds) put 4 of the 16 cells in each cluster
+    means = [(5.0, 0.0), (0.0, 5.0), (-5.0, 0.0), (0.0, -5.0)]
     rows = []
     for i in range(60):
-        mx, my = means[i % 3]
+        mx, my = means[i % 4]
         rows.append((i, [random.gauss(mx, 0.3), random.gauss(my, 0.3)]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     rep = {
         r["method"]: r
         for r in similarity.ann_recall_report(
-            emb, emb.filter("vec_id < 6"), k=5, planes=2, n_cells=3, n_probe=1
+            emb, emb.filter("vec_id < 6"), planes=2
         ).collect()
     }
     for m in ("lsh_bucketed", "ivf"):
         assert 0.0 <= rep[m]["worst_recall"] <= rep[m]["mean_recall"] <= 1.0
-    # 3 tight clusters, 3 cells, probe 1: the query's own cluster cell
-    # holds its true neighbors
+    # the 4 probed cells are the query's own cluster's, which holds
+    # its 10 true neighbors
     assert rep["ivf"]["mean_recall"] >= 0.9
 
 
@@ -793,7 +793,7 @@ def test_power_iteration_matches_eigh(spark):
     from avro_sql_spark.session import load_tables
 
     emb = load_tables(spark, "/root/testdata/sf0.001", register=False)["embeddings"]
-    cov = gram_covariance(emb, round_to=4, partition_col="vec_id", n_parts=16)
+    cov = gram_covariance(emb, round_to=4)
     v, lam = power_iteration(cov, iters=800)
     rows = cov.collect()
     d = max(r["i"] for r in rows) + 1
@@ -840,19 +840,20 @@ def test_copurchase_fanout_bounded_and_counts(spark):
     import avro_sql_spark.session as sess_mod
 
     ev = spark.createDataFrame(
-        [(1, 10), (1, 20), (1, 20), (2, 10), (2, 20), (2, 30), (3, 10)],
+        [(1, 10), (1, 20), (1, 20), (2, 10), (2, 20), (2, 30), (3, 10),
+         (4, 10), (4, 20), (4, 30), (5, 10), (5, 40)],
         ["l_orderkey", "l_partkey"],
     )
     orig = relational.load_tables
     try:
         relational.load_tables = lambda *a, **k: {"lineitem": ev}
         rows = {(r["part_a"], r["part_b"]): r["n_orders"]
-                for r in relational.copurchase_pairs(spark, "unused",
-                                                     min_count=1, k=10).collect()}
+                for r in relational.copurchase_pairs(spark, "unused").collect()}
     finally:
         relational.load_tables = orig
-    assert rows[(10, 20)] == 2     # orders 1 and 2 (dup lineitem counted once)
-    assert rows[(10, 30)] == 1 and rows[(20, 30)] == 1
+    assert rows[(10, 20)] == 3     # orders 1, 2, 4 (dup lineitem counted once)
+    assert rows[(10, 30)] == 2 and rows[(20, 30)] == 2
+    assert (10, 40) not in rows    # one order only: under the 2-order floor
 
 
 def test_snapshot_diff_classifies_changes(spark):
@@ -1046,7 +1047,7 @@ def test_dsir_importance_directional(spark):
 
     out = {
         r["doc_id"]: r["log_importance"]
-        for r in dsir_importance(df, F.col("is_t"), buckets=64).collect()
+        for r in dsir_importance(df, F.col("is_t")).collect()
     }
     assert len(out) == 6
     assert out[20] > out[21]          # target-vocab doc outranks raw-vocab doc
@@ -1061,7 +1062,7 @@ def test_epoch_plan_budget_and_cap(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
     from avro_sql_spark.operators.curation import epoch_plan
 
-    out = epoch_plan(df, budget_tokens=5000.0, group_col="source").collect()
+    out = epoch_plan(df, budget_tokens=5000.0).collect()
     assert len(out) == 3
     # tolerance covers the 4dp output rounding (each source can round up
     # by <= 5e-5), not float noise
@@ -1083,7 +1084,7 @@ def test_epoch_plan_cap_holds_when_budget_exceeds_capacity(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
     from avro_sql_spark.operators.curation import epoch_plan
 
-    out = epoch_plan(df, budget_tokens=500.0, group_col="source").collect()
+    out = epoch_plan(df, budget_tokens=500.0).collect()
     for r in out:
         assert r["epochs"] <= 4.0 + 5e-5, r
     # all capacity consumed at the cap: alloc == 4 * avail for every row
@@ -1111,7 +1112,7 @@ def test_triangle_count_golden(spark):
 def test_pq_topk_recall_and_determinism(spark):
     import math
 
-    # 4-dim vectors, m=2 subspaces of 2 dims; tight angular clusters so
+    # 4-dim vectors, 4 subspaces of 1 dim; tight angular clusters so
     # ADC with per-subspace codebooks recovers most exact neighbors
     rows = [
         (i, [math.cos(i * 0.3), math.sin(i * 0.3), float(i % 5), 1.0])
@@ -1119,9 +1120,7 @@ def test_pq_topk_recall_and_determinism(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
     queries = emb.filter(F.col("vec_id") < 3)
-    out = similarity.pq_topk(
-        emb, queries, k=5, m=2, codebook_k=8, train_limit=100
-    )
+    out = similarity.pq_topk(emb, queries, k=5)
     got = out.collect()
     # shape: 3 queries x top-5, ranks 1..5, adist nondecreasing per query
     assert len(got) == 15
@@ -1149,9 +1148,7 @@ def test_pq_topk_recall_and_determinism(spark):
         hits += len(set(truth) & set(approx))
     assert hits / 15 >= 0.5
     # deterministic: a rerun returns the identical frame
-    again = similarity.pq_topk(
-        emb, queries, k=5, m=2, codebook_k=8, train_limit=100
-    ).collect()
+    again = similarity.pq_topk(emb, queries, k=5).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, again))
 
 
@@ -1160,7 +1157,7 @@ def test_pq_topk_rejects_indivisible_dim(spark):
         [(0, [1.0, 2.0, 3.0])], "vec_id LONG, embedding ARRAY<DOUBLE>"
     )
     with pytest.raises(ValueError, match="not divisible"):
-        similarity.pq_topk(emb, emb, m=2)
+        similarity.pq_topk(emb, emb)  # 3 dims into 4 subspaces
 
 
 def test_semantic_dedup_report_drops_centroid_near_member(spark):
@@ -1311,20 +1308,16 @@ def test_hard_negatives_excludes_same_label(spark):
 
 def test_random_projection_matches_manual_dot(spark):
     # the projected component must equal the literal-matrix dot product
-    # (left fold) for a hand-checkable vector, in both unrolled (small)
-    # and folded (large) codegen regimes
+    # (left fold) for a hand-checkable vector
     vec = [1.0 if j % 7 == 0 else 0.25 for j in range(64)]
     emb = spark.createDataFrame([(0, vec)], "vec_id LONG, embedding ARRAY<DOUBLE>")
-    for out_dim in (2, 16):  # 128 terms -> unrolled; 1024 -> folded
-        comps = similarity._plane_components(out_dim, 64, seed=11)
-        got = similarity.random_projection(
-            emb, out_dim=out_dim, in_dim=64, seed=11
-        ).collect()[0]["projected"]
-        for p in range(out_dim):
-            acc = 0.0
-            for j in range(64):
-                acc += vec[j] * comps[p][j]
-            assert got[p] == acc, f"component {p} mismatch at out_dim={out_dim}"
+    comps = similarity._plane_components(16, 64, seed=11)
+    got = similarity.random_projection(emb).collect()[0]["projected"]
+    for p in range(16):
+        acc = 0.0
+        for j in range(64):
+            acc += vec[j] * comps[p][j]
+        assert got[p] == acc, f"component {p} mismatch"
 
 
 def test_jl_shortlist_recall_bounds(spark):
@@ -1347,24 +1340,25 @@ def test_jl_shortlist_recall_bounds(spark):
 
 
 def test_mmr_select_diversifies(spark):
-    # query sits between two orthogonal directions; vec 1 duplicates
-    # vec 0, so pure relevance would rank it second, but its maxsim of
-    # 1.0 must push it behind the orthogonal (maxsim 0) vec 2
+    # the fixed query q splits into two orthogonal halves: vec 0 is q's
+    # first 32 coordinates (relevance 0.737), vec 2 its last 32 (0.676).
+    # vec 1 duplicates vec 0, so pure relevance would rank it second,
+    # but its maxsim of 1.0 must push it behind the orthogonal vec 2
+    q = similarity._plane_components(1, 64, 23)[0]
+    head = q[:32] + [0.0] * 32
     rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),
-        (1, [1.0, 0.0, 0.0, 0.0]),  # exact duplicate of 0
-        (2, [0.0, 1.0, 0.0, 0.0]),  # same relevance, orthogonal to 0
-        (3, [0.0, 0.0, 1.0, 0.0]),  # irrelevant
+        (0, head),
+        (1, head),  # exact duplicate of 0
+        (2, [0.0] * 32 + q[32:]),  # orthogonal to 0, a little less relevant
+        (3, [q[1], -q[0]] + [0.0] * 62),  # orthogonal to q: irrelevant
     ]
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    out = similarity.mmr_select(
-        emb, query_vec=[1.0, 1.0, 0.0, 0.0], k=3, pool=4
-    ).collect()
+    out = similarity.mmr_select(emb, k=3, pool=4).collect()
     assert [r["step"] for r in out] == [1, 2, 3]
-    # relevance tie between 0 and 2 breaks to the lowest id
+    # relevance tie between 0 and 1 breaks to the lowest id
     assert out[0]["vec_id"] == 0
     # second pick is the orthogonal direction, not the duplicate:
-    # 0.7*0.707 - 0.3*0 beats 0.7*0.707 - 0.3*1.0
+    # 0.7*0.676 - 0.3*0 beats 0.7*0.737 - 0.3*1.0
     assert out[1]["vec_id"] == 2
     assert out[2]["vec_id"] == 1
     assert out[0]["score"] >= out[1]["score"] >= out[2]["score"]
@@ -1375,11 +1369,11 @@ def test_twopass_median_matches_sorted(spark):
 
     vals = [float(x) for x in [9, 1, 7, 3, 5, 11, 2, 8, 4]]  # n=9, k=5 -> 5.0
     df = spark.createDataFrame([(v,) for v in vals], "value DOUBLE")
-    r = profile.twopass_median(df, "value", buckets=4).collect()[0]
+    r = profile.twopass_median(df, "value").collect()[0]
     assert (r["n_rows"], r["rank"], r["median_value"]) == (9, 5, 5.0)
     # even n takes the LOWER median: k = ceil(n/2)
     df2 = spark.createDataFrame([(float(v),) for v in [1, 2, 3, 4]], "value DOUBLE")
-    r2 = profile.twopass_median(df2, "value", buckets=4).collect()[0]
+    r2 = profile.twopass_median(df2, "value").collect()[0]
     assert (r2["rank"], r2["median_value"]) == (2, 2.0)
     # degenerate all-equal input must not divide by zero
     df3 = spark.createDataFrame([(7.0,)] * 5, "value DOUBLE")
@@ -1389,14 +1383,16 @@ def test_twopass_median_matches_sorted(spark):
 def test_incremental_agg_merge_equals_recompute(spark):
     from avro_sql_spark.operators import profile
 
+    from datetime import datetime
+
+    # the delta is days 3, 10 and 17 (dayofmonth % 7 == 3); "b" has one
+    # row on each side of the split
     df = spark.createDataFrame(
-        [("a", float(i), i) for i in range(20)]
-        + [("b", 0.125, 3), ("b", -2.5, 10)],
-        "event_type STRING, value DOUBLE, day INT",
+        [("a", float(i), datetime(2024, 1, 1 + i)) for i in range(20)]
+        + [("b", 0.125, datetime(2024, 1, 3)), ("b", -2.5, datetime(2024, 1, 4))],
+        "event_type STRING, value DOUBLE, ts TIMESTAMP",
     )
-    out = {r["event_type"]: r for r in profile.incremental_agg_merge(
-        df, delta_pred=(F.col("day") % 2 == 0)
-    ).collect()}
+    out = {r["event_type"]: r for r in profile.incremental_agg_merge(df).collect()}
     assert out["a"]["n_events"] == 20
     assert out["a"]["total_value"] == sum(range(20))
     assert (out["b"]["min_value"], out["b"]["max_value"]) == (-2.5, 0.125)
@@ -1569,10 +1565,7 @@ def test_ivf_pq_topk_contract_and_cell_restriction(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
     queries = emb.filter(F.col("vec_id") < 3)
-    out = similarity.ivf_pq_topk(
-        emb, queries, k=5, n_cells=8, n_probe=3, m=2, codebook_k=8,
-        coarse_train_limit=100, pq_train_limit=100,
-    ).collect()
+    out = similarity.ivf_pq_topk(emb, queries, k=5).collect()
     per_q = {}
     for r in out:
         per_q.setdefault(r["query_id"], []).append((r["rank"], r["adist"], r["neighbor_id"]))
@@ -1583,10 +1576,7 @@ def test_ivf_pq_topk_contract_and_cell_restriction(spark):
         assert all(rs[i][1] <= rs[i + 1][1] for i in range(len(rs) - 1))
         assert q not in {r[2] for r in rs}  # self excluded
     # determinism: identical second run
-    again = similarity.ivf_pq_topk(
-        emb, queries, k=5, n_cells=8, n_probe=3, m=2, codebook_k=8,
-        coarse_train_limit=100, pq_train_limit=100,
-    ).collect()
+    again = similarity.ivf_pq_topk(emb, queries, k=5).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 
@@ -1752,15 +1742,15 @@ def test_lexical_diversity_hand_computed(spark):
 
 
 def test_term_burstiness_hand_computed(spark):
-    """'aa' appears 6x across 2 docs -> burstiness 3; 'bb' once in each
-    of 2 docs -> 1 (the function-word signature)."""
+    """'aa' appears 30x across 10 docs -> burstiness 3; 'bb' once in
+    each of 10 docs -> 1 (the function-word signature)."""
     from avro_sql_spark.operators.text import term_burstiness
 
     docs = spark.createDataFrame(
-        [(1, "aa aa aa bb"), (2, "aa aa aa bb")], "doc_id long, text string"
+        [(i, "aa aa aa bb") for i in range(10)], "doc_id long, text string"
     )
-    out = {r["term"]: r for r in term_burstiness(docs, min_df=2, top_k=10).collect()}
-    assert out["aa"]["cf"] == 6 and out["aa"]["df"] == 2
+    out = {r["term"]: r for r in term_burstiness(docs).collect()}
+    assert out["aa"]["cf"] == 30 and out["aa"]["df"] == 10
     assert out["aa"]["burstiness"] == 3.0
     assert out["bb"]["burstiness"] == 1.0
 

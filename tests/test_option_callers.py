@@ -1,16 +1,18 @@
-"""Every operator option has a caller.
+"""Every operator option has a program caller.
 
 An operator or function parameter with a default is a configuration.
-If no call in the program or the tests ever sets it, that configuration
-is never run or checked, so it belongs in the body as a constant.
+If no call in the program ever sets it, the bench and the oracle never
+run that configuration, so it belongs in the body as a constant. A
+test that sets it checks only a value the program never uses, so calls
+in tests do not count.
 
 The scan is plain ``ast`` (no Spark). It covers the defaulted parameters
 of top-level functions in ``avro_sql_spark/operators/`` and
 ``avro_sql_spark/functions/``. A parameter counts as set by a keyword or
-a positional argument in any call anywhere in the repository, or by a
-``_bind(op, tables, **kwargs)`` registry row (the tables are passed
-positionally, the kwargs by keyword). Calls are matched by function
-name only, so a name collision counts as set.
+a positional argument in any call in the repository outside a ``tests/``
+directory, or by a ``_bind(op, tables, **kwargs)`` registry row (the
+tables are passed positionally, the kwargs by keyword). Calls are
+matched by function name only, so a name collision counts as set.
 """
 
 import ast
@@ -60,16 +62,22 @@ def defaulted_options():
     return out
 
 
+def _is_test(rel):
+    return "tests" in rel.split(os.sep)[:-1]
+
+
 def set_by_calls():
     """``{function name: (max positional args, keyword names)}`` over
-    every call in the repository, ``_bind`` rows included."""
+    every call outside the tests, ``_bind`` rows included."""
     seen = {}
 
     def note(name, npos, keys):
         n, k = seen.get(name, (0, set()))
         seen[name] = (max(n, npos), k | keys)
 
-    for _, tree in _sources():
+    for rel, tree in _sources():
+        if _is_test(rel):
+            continue
         for node in ast.walk(tree):
             if not isinstance(node, ast.Call):
                 continue

@@ -47,16 +47,18 @@ def test_exact_ntile_matches_sql_ntile(spark):
 
 
 def test_embedding_energy_profile_concentrated_vector(spark):
-    # all energy in the first coordinate -> every prefix fraction is 1
+    # vec 1: all energy in the first coordinate -> every prefix fraction
+    # is 1; vec 2: all in the last of 64
     df = spark.createDataFrame(
-        [(1, [2.0, 0.0, 0.0, 0.0]), (2, [0.0, 0.0, 0.0, 3.0])],
+        [(1, [2.0] + [0.0] * 63), (2, [0.0] * 63 + [3.0])],
         "vec_id LONG, embedding ARRAY<FLOAT>",
     )
-    row = embedding_energy_profile(df, dims=(1, 2, 4)).collect()[0]
-    # vec 1 contributes 1.0 at every prefix; vec 2 contributes 0 until d=4
+    row = embedding_energy_profile(df).collect()[0]
+    # vec 1 contributes 1.0 at every prefix; vec 2 contributes 0 until d=64
     assert row["n_vectors"] == 2
-    assert row["energy_d1"] == pytest.approx(0.5)
-    assert row["energy_d4"] == pytest.approx(1.0)
+    assert row["energy_d4"] == pytest.approx(0.5)
+    assert row["energy_d32"] == pytest.approx(0.5)
+    assert row["energy_d64"] == pytest.approx(1.0)
 
 
 def test_link_prediction_scores_triangle_plus_leaf(spark):
@@ -65,7 +67,7 @@ def test_link_prediction_scores_triangle_plus_leaf(spark):
     df = spark.createDataFrame(edges, "src LONG, dst LONG")
     out = {
         (r["a"], r["b"]): (r["common_neighbors"], r["adamic_adar"])
-        for r in link_prediction_topk(df, top_k=10).collect()
+        for r in link_prediction_topk(df).collect()
     }
     # all three leaf pairs share exactly hub 9 with deg 3
     expected = round(1.0 / math.log(3.0), 6)
@@ -76,18 +78,18 @@ def test_link_prediction_scores_triangle_plus_leaf(spark):
 
 
 def test_mutual_information_independent_and_dependent(spark):
-    # independent: MI ~ 0; fully dependent: MI = H(X)
-    rows = [("a", i % 2, 1) for i in range(8)] + [("b", i % 2, 1) for i in range(8)]
-    df = spark.createDataFrame(rows, "x STRING, y INT, c INT")
-    ind = mutual_information_report(
-        df, x_col="x", y_expr=F.col("y"), y_name="y"
-    ).collect()[0]
+    from datetime import datetime
+
+    # independent: MI ~ 0; fully dependent: MI = H(X). Event type vs
+    # weekday: 2024-01-01 is a Monday, 2024-01-02 a Tuesday
+    days = [datetime(2024, 1, 1), datetime(2024, 1, 2)]
+    rows = [("a", days[i % 2]) for i in range(8)] + [("b", days[i % 2]) for i in range(8)]
+    df = spark.createDataFrame(rows, "event_type STRING, ts TIMESTAMP")
+    ind = mutual_information_report(df).collect()[0]
     assert ind["mi_nats"] == pytest.approx(0.0, abs=1e-5)
-    rows2 = [("a", 0, 1)] * 8 + [("b", 1, 1)] * 8
-    df2 = spark.createDataFrame(rows2, "x STRING, y INT, c INT")
-    dep = mutual_information_report(
-        df2, x_col="x", y_expr=F.col("y"), y_name="y"
-    ).collect()[0]
+    rows2 = [("a", days[0])] * 8 + [("b", days[1])] * 8
+    df2 = spark.createDataFrame(rows2, "event_type STRING, ts TIMESTAMP")
+    dep = mutual_information_report(df2).collect()[0]
     assert dep["mi_nats"] == pytest.approx(dep["h_x"], abs=1e-5)
     assert dep["mi_normalized"] == pytest.approx(1.0, abs=1e-5)
 
@@ -253,10 +255,11 @@ def test_typo_pairs_distance_one_only(spark):
 
 
 def test_markov_backtest_learns_deterministic_chain(spark):
-    # a -> b -> a -> b ... deterministic chain: model acc 1, baseline < 1
+    # a -> b -> a -> b ... deterministic chain: model acc 1, baseline < 1;
+    # days 1-30, so transitions on both sides of the 2024-01-24 cut
     rows = []
     for uid in range(4):
-        for i in range(40):
+        for i in range(60):
             rows.append(
                 (uid, i, f"2024-01-{1 + i // 2:02d} {i % 24:02d}:00:00",
                  "a" if i % 2 == 0 else "b")
@@ -269,7 +272,7 @@ def test_markov_backtest_learns_deterministic_chain(spark):
     )
     from avro_sql_spark.operators.profile import markov_next_event_backtest
 
-    r = markov_next_event_backtest(df, cut_ts="2024-01-15 00:00:00").collect()[0]
+    r = markov_next_event_backtest(df).collect()[0]
     assert r["model_accuracy"] == pytest.approx(1.0)
     assert r["baseline_accuracy"] < 1.0
     assert r["accuracy_lift"] > 0
@@ -303,8 +306,8 @@ def test_score_decile_calibration_shape(spark):
         for i in range(20)
     ]
     df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    out = score_decile_calibration(df, n_buckets=4).collect()
-    assert [r["decile"] for r in out] == [1, 2, 3, 4]
+    out = score_decile_calibration(df).collect()
+    assert [r["decile"] for r in out] == list(range(1, 11))
     assert sum(r["n_docs"] for r in out) == 40
     # fluent (common) docs rank first and are exact dups of each other
     assert out[0]["dup_rate"] > out[-1]["dup_rate"]
@@ -319,7 +322,7 @@ def test_textrank_hub_word_wins(spark):
          (2, "spark aggregates spark scans")],
         "doc_id LONG, text STRING",
     )
-    out = textrank_keywords(df, top_k=3).collect()
+    out = textrank_keywords(df).collect()
     assert out[0]["word"] == "spark"  # the hub co-occurs with everything
     assert out[0]["textrank"] > out[1]["textrank"]
 
@@ -351,7 +354,7 @@ def test_bloom_fpr_audit_member_keys_always_hit(spark):
     df = spark.range(2000).select(
         (F.col("id") % 200).alias("k"), (F.col("id") % 200).alias("ob")
     )
-    r = bloom_fpr_audit(df, "k", "ob", n_files=8, probe_rate=1.0).collect()[0]
+    r = bloom_fpr_audit(df, "k", "ob").collect()[0]
     # empirical FPR must be a valid probability in the same ballpark as
     # the formula (small-n noise allowed), and the audit probed rows
     assert r["n_probes"] > 0
@@ -384,7 +387,7 @@ def test_decayed_value_prefers_recent(spark):
     df = spark.createDataFrame(rows, "user_id LONG, ts_s STRING, value DOUBLE").select(
         "user_id", F.col("ts_s").cast("timestamp_ntz").alias("ts"), "value"
     )
-    out = decayed_user_value(df, half_life_lambda=0.1).collect()
+    out = decayed_user_value(df).collect()
     assert out[0]["user_id"] == 2                 # recency wins
     assert out[1]["total_value"] > out[0]["total_value"]  # raw sum disagrees
 
@@ -491,7 +494,7 @@ def test_acf_constant_series_is_null_and_period2_alternation(spark):
         "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING,"
         " value DOUBLE, props STRING",
     )
-    got = {r["lag"]: r["acf"] for r in acf_hourly(df, max_lag=3).collect()}
+    got = {r["lag"]: r["acf"] for r in acf_hourly(df).collect()}
     # finite-series boundary terms keep |r| below 1; signs + ordering
     # are the period-2 signature
     assert got[1] < -0.5
@@ -515,8 +518,8 @@ def test_acf_zero_fills_missing_hours(spark):
         "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING,"
         " value DOUBLE, props STRING",
     )
-    out = acf_hourly(df, max_lag=3).collect()
-    assert [r["lag"] for r in out] == [1, 2, 3]
+    out = acf_hourly(df).collect()
+    assert [r["lag"] for r in out] == [1, 2, 3]  # only lags inside H
     # series 1,0,0,1: mean .5-ish math — just assert lag-3 is the max
     # correlation (the two spikes line up) and lag-1 is negative
     got = {r["lag"]: r["acf"] for r in out}
@@ -712,7 +715,7 @@ def test_hits_authority_prefers_discerning_buyers(spark):
         [(1, 10), (1, 10), (2, 11), (3, 10), (4, 11), (5, 12)],
         "l_orderkey LONG, l_suppkey LONG",
     )
-    out = hits_supplier_authority(orders, li, rounds=3, top_k=10).collect()
+    out = hits_supplier_authority(orders, li).collect()
     scores = {r["supplier"]: r["authority"] for r in out}
     assert scores[10] == pytest.approx(1.0)  # max-normalized winner
     assert scores[11] < 1.0
@@ -759,8 +762,8 @@ def test_dp_release_noise_is_bounded_and_deterministic(spark):
         "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING,"
         " value DOUBLE, props STRING",
     )
-    out1 = dp_count_release(df, epsilon=1.0).collect()
-    out2 = dp_count_release(df, epsilon=1.0).collect()
+    out1 = dp_count_release(df).collect()
+    out2 = dp_count_release(df).collect()
     assert out1 == out2  # replayable rehearsal
     for r in out1:
         assert r["true_count"] == 100
@@ -809,7 +812,7 @@ def test_burrows_delta_same_style_near_zero(spark):
     )
     got = {
         (r["source_a"], r["source_b"]): r["delta"]
-        for r in burrows_delta(df, top_terms=5).collect()
+        for r in burrows_delta(df).collect()
     }
     assert got[("A", "B")] == pytest.approx(0.0, abs=1e-6)
     assert got[("A", "C")] > 0.5
@@ -980,7 +983,7 @@ def test_basket_lift_anticorrelation_and_affinity(spark):
     df = spark.createDataFrame(rows, "l_orderkey LONG, l_partkey LONG")
     out = {
         (r["pa"], r["pb"]): r
-        for r in basket_affinity_lift(df, min_pair_orders=2, top_k=50).collect()
+        for r in basket_affinity_lift(df).collect()
     }
     # N=8 baskets; pair (1,2): cab=4, ca=cb=4 -> lift = 4*8/16 = 2.0
     assert out[(1, 2)]["lift"] == pytest.approx(2.0)
@@ -1009,7 +1012,7 @@ def test_price_elasticity_exact_slope(spark):
     lineitem = spark.createDataFrame(
         li, "l_orderkey LONG, l_partkey LONG, l_quantity DOUBLE"
     )
-    out = price_elasticity(part, lineitem, min_parts=5).collect()
+    out = price_elasticity(part, lineitem).collect()
     assert len(out) == 1
     assert out[0]["elasticity"] == pytest.approx(-2.0, abs=1e-3)
 
@@ -1177,7 +1180,7 @@ def test_modularity_two_cliques_vs_clique(spark):
 
     edges = clique([1, 2, 3, 4]) + clique([5, 6, 7, 8]) + [(4, 5)]
     df = spark.createDataFrame(edges, "src LONG, dst LONG")
-    r = community_modularity(df, rounds=2).collect()[0]
+    r = community_modularity(df).collect()[0]
     assert r["n_edges"] == 13
     assert r["modularity"] > 0.3
     assert r["intra_edge_share"] >= 12 / 13 - 1e-6
@@ -1186,11 +1189,11 @@ def test_modularity_two_cliques_vs_clique(spark):
     # set, and so every figure, unchanged
     noisy = edges + [(b, a) for a, b in edges] + edges[:3] + [(1, 1), (6, 6)]
     df3 = spark.createDataFrame(noisy, "src LONG, dst LONG")
-    assert community_modularity(df3, rounds=2).collect()[0] == r
+    assert community_modularity(df3).collect()[0] == r
 
     # single clique: one community, Q = 0 exactly (SL = m, D_c = 2m)
     one = spark.createDataFrame(clique([1, 2, 3, 4, 5]), "src LONG, dst LONG")
-    r2 = community_modularity(one, rounds=2).collect()[0]
+    r2 = community_modularity(one).collect()[0]
     assert r2["n_communities"] == 1
     assert r2["modularity"] == pytest.approx(0.0)
 
@@ -1251,7 +1254,7 @@ def test_sequence_pattern_order_matters(spark):
     )
     got = {
         (r["first_type"], r["then_type"]): r
-        for r in sequence_pattern_support(df, min_support=0.05).collect()
+        for r in sequence_pattern_support(df).collect()
     }
     assert got[("view", "purchase")]["n_users"] == 8
     assert got[("view", "purchase")]["support"] == pytest.approx(0.8)
@@ -1379,24 +1382,25 @@ def test_neyman_gives_variable_stratum_more(spark):
     df = spark.createDataFrame(
         rows, "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
     )
-    got = {r["stratum"]: r for r in neyman_allocation(df, budget=100).collect()}
+    got = {r["stratum"]: r for r in neyman_allocation(df).collect()}
     assert got["A"]["stddev"] == pytest.approx(0.0)
     assert got["A"]["neyman_share"] == pytest.approx(0.0)
     assert got["B"]["neyman_share"] == pytest.approx(1.0)
-    assert got["B"]["allocated_n"] == 100
+    assert got["B"]["allocated_n"] == 1000
 
 
 def test_silhouette_separated_blobs_near_one(spark):
     from avro_sql_spark.operators.clustering import kmeans_silhouette
 
-    # two tight far-apart blobs, k=2: silhouette near 1 for both
-    rows = [(i, [0.0 + 0.01 * i, 0.0]) for i in range(5)] + [
-        (10 + i, [100.0 + 0.01 * i, 0.0]) for i in range(5)
+    # four tight far-apart blobs, one of the 4 lowest ids (the k=4
+    # seeds) in each: silhouette near 1 for all four
+    rows = [
+        (b + 4 * i, [100.0 * b + 0.01 * i, 0.0]) for b in range(4) for i in range(5)
     ]
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
-    out = kmeans_silhouette(df, k=2, iterations=2).collect()
-    assert len(out) == 2
-    assert sum(r["n_points"] for r in out) == 10
+    out = kmeans_silhouette(df).collect()
+    assert len(out) == 4
+    assert sum(r["n_points"] for r in out) == 20
     for r in out:
         assert r["avg_silhouette"] > 0.99
 
@@ -1406,24 +1410,28 @@ def test_hill_alpha_exact_pareto(spark):
 
     from avro_sql_spark.operators.profile import tail_index_user_value
 
-    # values v_i = 2^(i/10): ln spacing 0.1*ln2 -> Hill alpha over
-    # k covering all = k / sum(ln(v_i/v_min))
+    # values v_i = 2^(i/10): ln spacing 0.1*ln2 -> Hill alpha over the
+    # top k = 100 of 120 users = k / sum(ln(v_i/v_k)), v_k = 2^2
     import math
 
     rows = [
         (u, datetime(2024, 1, 1), u, "purchase", float(2 ** (u / 10.0)), "")
-        for u in range(20)
+        for u in range(120)
     ]
     df = spark.createDataFrame(
         rows,
         "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING,"
         " value DOUBLE, props STRING",
     )
-    r = tail_index_user_value(df, k=20).collect()[0]
-    assert r["k_used"] == 20
-    expected = 20.0 / sum(math.log(2 ** (u / 10.0) / 1.0) for u in range(20))
+    r = tail_index_user_value(df).collect()[0]
+    assert r["k_used"] == 100
+    assert r["threshold_value"] == pytest.approx(4.0)
+    expected = 100.0 / sum(math.log(2 ** (u / 10.0) / 4.0) for u in range(20, 120))
     assert r["hill_alpha"] == pytest.approx(expected, rel=1e-4)
-    assert r["topk_value_share"] == pytest.approx(1.0)
+    share = sum(2 ** (u / 10.0) for u in range(20, 120)) / sum(
+        2 ** (u / 10.0) for u in range(120)
+    )
+    assert r["topk_value_share"] == pytest.approx(share, rel=1e-4)
 
 
 def test_lm_interpolation_memorized_corpus_high_lambda(spark):
@@ -1445,7 +1453,7 @@ def test_lm_interpolation_memorized_corpus_high_lambda(spark):
 def test_weighted_sample_prefers_heavy_docs(spark):
     from avro_sql_spark.operators.curation import weighted_reservoir_sample
 
-    # 100 light docs (weight 1) + 100 heavy (weight 1000): the k=20
+    # 100 light docs (weight 1) + 100 heavy (weight 1000): the k=50
     # sample must be dominated by heavy docs, deterministically
     rows = [(i, "t", "en", "s", 1) for i in range(100)] + [
         (1000 + i, "t", "en", "s", 1000) for i in range(100)
@@ -1453,11 +1461,11 @@ def test_weighted_sample_prefers_heavy_docs(spark):
     df = spark.createDataFrame(
         rows, "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
     )
-    out1 = weighted_reservoir_sample(df, k=20).collect()
-    out2 = weighted_reservoir_sample(df, k=20).collect()
+    out1 = weighted_reservoir_sample(df).collect()
+    out2 = weighted_reservoir_sample(df).collect()
     assert out1 == out2  # deterministic
     heavy = sum(1 for r in out1 if r["weight"] == 1000)
-    assert heavy >= 18  # ~1000x odds per draw
+    assert len(out1) == 50 and heavy >= 45  # ~1000x odds per draw
     assert all(r["n_corpus"] == 200 for r in out1)
     assert out1[0]["avg_weight_corpus"] == pytest.approx(500.5)
 
@@ -1469,7 +1477,7 @@ def test_diameter_path_graph_exact(spark):
     path = [(i, i + 1) for i in range(1, 5)]
     sym = path + [(b, a) for a, b in path]
     df = spark.createDataFrame(sym, "src LONG, dst LONG")
-    r = diameter_double_sweep(df, max_hops=8).collect()[0]
+    r = diameter_double_sweep(df).collect()[0]
     assert r["start_node"] == 1
     assert r["ecc_start"] == 4
     assert r["far_node"] == 5

@@ -206,8 +206,8 @@ def test_template_prefix_groups_across_sources(spark):
     rows = [
         (i, tpl + f"unique tail {i}", f"src{i % 3}", 100) for i in range(6)
     ] + [(100 + i, f"totally different doc {i}", "src9", 50) for i in range(4)]
-    out = template_prefix_report(_docs(spark, rows), min_docs=5).collect()
-    assert len(out) == 1  # only the template group clears min_docs=5
+    out = template_prefix_report(_docs(spark, rows)).collect()
+    assert len(out) == 1  # only the template prefix is shared by >= 2 docs
     r = out[0]
     assert r["n_docs"] == 6 and r["n_sources"] == 3
     assert r["prefix"] == tpl.lower().strip()[:24]
@@ -343,7 +343,7 @@ def test_topk_churn_stable_and_shuffled_sets(spark):
                 (eid, dt.datetime(2024, 1, 1 + day), u, "a", float(u))
             )
             eid += 1
-    out = topk_spender_churn(_events(spark, rows), k=3).collect()
+    out = topk_spender_churn(_events(spark, rows)).collect()
     assert len(out) == 2
     assert out[0]["n_common"] == 3 and out[0]["jaccard"] == pytest.approx(1.0)
     assert out[1]["n_common"] == 0 and out[1]["jaccard"] == pytest.approx(0.0)
@@ -379,7 +379,7 @@ def test_g2_keyness_flags_the_discriminative_term(spark):
         [(i, fam, "src1a", len(fam)) for i in range(5)]
         + [(10 + i, rest, "src9", len(rest)) for i in range(5)],
     )
-    out = g2_keyness_terms(docs, min_total=10).collect()
+    out = g2_keyness_terms(docs).collect()
     by_term = {r["term"]: r for r in out}
     # alpha/beta have an empty cell -> excluded; the shared fillers
     # have identical rates -> G2 = 0
@@ -391,7 +391,7 @@ def test_g2_keyness_flags_the_discriminative_term(spark):
         [(i, fam, "src1a", len(fam)) for i in range(5)]
         + [(10 + i, rest + " alpha", "src9", len(rest)) for i in range(5)],
     )
-    out2 = g2_keyness_terms(docs2, min_total=10).collect()
+    out2 = g2_keyness_terms(docs2).collect()
     top = out2[0]
     assert top["term"] == "alpha"
     assert top["g2_signed"] > 0  # family-leaning sign carried

@@ -127,23 +127,24 @@ def test_dw_trending_series_small(spark):
 
 
 def test_ndcg_perfect_when_ivf_matches_brute(spark):
-    # clustered corpus small enough that IVF probes everything ->
-    # candidate ranking == brute ranking -> ndcg 1.0 everywhere
+    # 4 angularly separated clusters of 12: the 16 lowest ids (the
+    # quantizer's seeds) put 4 cells in each, so the 4 probed cells
+    # cover the query's whole cluster -> candidate ranking == brute
+    # ranking -> ndcg 1.0 everywhere
     import random
 
     rng = random.Random(7)
+    bases = [[1.0, 0.0], [0.0, 1.0], [-1.0, 0.0], [0.0, -1.0]]
     rows = []
-    for i in range(40):
-        base = [1.0, 0.0] if i % 2 else [0.0, 1.0]
+    for i in range(48):
+        base = bases[i % 4]
         vec = [base[0] + rng.random() * 0.1, base[1] + rng.random() * 0.1]
-        rows.append((i, [float(x) for x in vec], i % 2))
+        rows.append((i, [float(x) for x in vec], i % 4))
     emb = _emb(spark, rows)
-    out = ndcg_ivf_report(
-        emb, emb.filter(F.col("vec_id") < 3), k=5, n_cells=2, n_probe=2
-    ).collect()
+    out = ndcg_ivf_report(emb, emb.filter(F.col("vec_id") < 3)).collect()
     assert len(out) == 3
     for r in out:
-        assert r["n_overlap"] == 5
+        assert r["n_overlap"] == 10
         assert r["ndcg"] == pytest.approx(1.0)
 
 
@@ -235,9 +236,7 @@ def test_drift_split_shares_sum_to_one(spark):
     rows = [
         (i, [rng.random() for _ in range(4)], 0) for i in range(64)
     ]
-    out = drift_split_report(
-        _emb(spark, rows), n_cells=4, train_limit=32
-    ).collect()
+    out = drift_split_report(_emb(spark, rows)).collect()
     assert sum(r["n_ref"] for r in out) == 32
     assert sum(r["n_cur"] for r in out) == 32
     assert sum(r["share_ref"] for r in out) == pytest.approx(1.0, abs=1e-5)
@@ -276,7 +275,7 @@ def test_curriculum_stages_cover_shards(spark):
         (i, "the quick brown fox jumps over the lazy dog " * 3, "s", 120)
         for i in range(40)
     ]
-    out = curriculum_plan(_docs(spark, rows), n_stages=4).collect()
+    out = curriculum_plan(_docs(spark, rows)).collect()
     stages = {r["stage"]: r for r in out}
     assert set(stages) == {1, 2, 3, 4}
     # every stage trains fresh on exactly its shard (40/4 = 10 docs)
@@ -297,7 +296,7 @@ def test_rake_scores_multiword_runs(spark):
         (1, "deep learning models and deep learning systems", "s", 46),
         (2, "deep learning wins", "s", 18),
     ]
-    out = rake_keyphrases(_docs(spark, rows), top_k=5).collect()
+    out = rake_keyphrases(_docs(spark, rows)).collect()
     by_phrase = {r["phrase"]: r for r in out}
     # "deep learning models" beats the bare pair: its words carry the
     # same freq but higher deg
@@ -308,7 +307,7 @@ def test_rake_scores_multiword_runs(spark):
 
 def test_rake_stopwords_break_runs(spark):
     rows = [(1, "alpha beta and gamma delta", "s", 26)]
-    out = rake_keyphrases(_docs(spark, rows), top_k=10).collect()
+    out = rake_keyphrases(_docs(spark, rows)).collect()
     phrases = {r["phrase"] for r in out}
     assert "alpha beta" in phrases and "gamma delta" in phrases
     assert all("and" not in p.split() for p in phrases)

@@ -10,7 +10,7 @@ from avro_sql_spark.operators.dedup import cluster_representatives
 def test_global_rank_matches_single_window(spark):
     rows = [(i, float((i * 37) % 101)) for i in range(200)]
     df = spark.createDataFrame(rows, "id LONG, score DOUBLE")
-    ranked = global_rank(df, [F.desc("score"), F.asc("id")], num_partitions=7)
+    ranked = global_rank(df, [F.desc("score"), F.asc("id")])
     got = {r.id: r.rank for r in ranked.collect()}
     expect_order = sorted(rows, key=lambda t: (-t[1], t[0]))
     for rank, (i, _) in enumerate(expect_order, start=1):
@@ -19,7 +19,7 @@ def test_global_rank_matches_single_window(spark):
 
 def test_global_rank_is_total_and_dense(spark):
     df = spark.createDataFrame([(i,) for i in range(50)], "id LONG")
-    ranked = global_rank(df, [F.asc("id")], num_partitions=3)
+    ranked = global_rank(df, [F.asc("id")])
     ranks = sorted(r.rank for r in ranked.collect())
     assert ranks == list(range(1, 51))
 
@@ -27,7 +27,7 @@ def test_global_rank_is_total_and_dense(spark):
 def test_rrf_fuse_hand_value(spark):
     a = spark.createDataFrame([(1, 1), (2, 2)], "id LONG, rank LONG")
     b = spark.createDataFrame([(1, 2), (2, 1)], "id LONG, rank LONG")
-    out = {r.id: r.rrf for r in rrf_fuse(a, b, "id", k=60).collect()}
+    out = {r.id: r.rrf for r in rrf_fuse(a, b, "id").collect()}
     assert out[1] == 1.0 / 61 + 1.0 / 62
     assert out[2] == 1.0 / 62 + 1.0 / 61
 

@@ -69,14 +69,6 @@ def test_multimodal_plumbing(spark):
     assert feats[2]["byte_checksum"] == (97 + 98 + 99) % 1_000_003
 
 
-def test_decode_stub_raises(spark):
-    from avro_sql_spark.operators.multimodal import decode_image
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"bytes")
-    assert sum(decode_image(b"abcd", fake=True)) == 4
-
-
 def test_multimodal_resize(spark):
     from avro_sql_spark.operators import multimodal
 
@@ -84,11 +76,11 @@ def test_multimodal_resize(spark):
         [(1, "abcdefgh" * 10), (2, "xy"), (3, "")], "doc_id LONG, text STRING"
     )
     media = multimodal.attach_fake_payload(docs)
-    out = {r.doc_id: r for r in multimodal.resize_images(media, width=4, height=3).collect()}
-    assert all(len(out[i].payload) == 12 for i in (1, 2, 3))
-    assert all((out[i].width, out[i].height) == (4, 3) for i in (1, 2, 3))
+    out = {r.doc_id: r for r in multimodal.resize_images(media).collect()}
+    assert all(len(out[i].payload) == 32 * 32 for i in (1, 2, 3))
+    assert all((out[i].width, out[i].height) == (32, 32) for i in (1, 2, 3))
     # deterministic across runs
-    again = {r.doc_id: r for r in multimodal.resize_images(media, width=4, height=3).collect()}
+    again = {r.doc_id: r for r in multimodal.resize_images(media).collect()}
     assert all(bytes(out[i].payload) == bytes(again[i].payload) for i in (1, 2, 3))
 
 

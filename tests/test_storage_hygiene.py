@@ -137,7 +137,7 @@ def test_dangling_pagerank_pinned_blocks_bounded(spark, held):
 
 
 def test_markov_removal_pinned_blocks_bounded(spark, held):
-    """12 absorption rounds over the removal grid: four operator-lifetime
+    """8 absorption rounds over the removal grid: four operator-lifetime
     chain frames plus ~2 round frames stay pinned, not one per round."""
     from datetime import datetime, timedelta
 
@@ -156,7 +156,7 @@ def test_markov_removal_pinned_blocks_bounded(spark, held):
         "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING,"
         " value DOUBLE, props STRING",
     )
-    out = {r["channel"]: r for r in markov_removal_attribution(df, rounds=12).collect()}
+    out = {r["channel"]: r for r in markov_removal_attribution(df).collect()}
     assert set(out) == {"view", "click"}
     # every converting path runs through both channels
     assert out["view"]["removal_effect"] == pytest.approx(1.0)
