@@ -340,9 +340,7 @@ def _simhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle-checked end-to-end: deterministic fingerprints + 16-bit block
     band join + bit_count(xor) verify replay in DuckDB."""
     t = load_tables(spark, sf_dir, register=False)
-    return dedup.simhash_candidate_pairs(t["documents"], blocks=4, max_hamming=3).orderBy(
-        "id_a", "id_b"
-    )
+    return dedup.simhash_candidate_pairs(t["documents"]).orderBy("id_a", "id_b")
 
 
 def _split_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -367,7 +365,7 @@ def _sample_10pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact row set."""
     t = load_tables(spark, sf_dir, register=False)
     return (
-        curation.deterministic_sample(t["documents"], fraction=0.1)
+        curation.deterministic_sample(t["documents"])
         .select("doc_id", "lang", "n_chars")
         .orderBy("doc_id")
     )
@@ -411,7 +409,7 @@ def _tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.text import tfidf_top_terms
 
     t = load_tables(spark, sf_dir, register=False)
-    top = tfidf_top_terms(t["documents"], top_k=3)
+    top = tfidf_top_terms(t["documents"])
     return (
         top.filter(F.col("rk") == 1)
         .groupBy("term")
@@ -449,9 +447,7 @@ def _winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.text import winnow_overlap_pairs
 
     t = load_tables(spark, sf_dir, register=False)
-    return winnow_overlap_pairs(t["documents"], k=16, w=8, min_shared=4).orderBy(
-        "id_a", "id_b"
-    )
+    return winnow_overlap_pairs(t["documents"]).orderBy("id_a", "id_b")
 
 
 def _repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -557,7 +553,7 @@ def _pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-offset sequence packing (budget 512, 8 parallel groups)
     summarized per (group, sequence)."""
     t = load_tables(spark, sf_dir, register=False)
-    packed = curation.pack_sequences(t["documents"], budget=512, n_groups=8)
+    packed = curation.pack_sequences(t["documents"])
     return (
         packed.groupBy("pack_group", "seq_id")
         .agg(
@@ -574,7 +570,7 @@ def _quality_shards_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     with no global sort. No oracle: the GK sketch's cuts are not
     reproducible in DuckDB; driver does a rows-only check."""
     t = load_tables(spark, sf_dir, register=False)
-    sharded = curation.quality_shards_approx(t["documents"], n_shards=8)
+    sharded = curation.quality_shards_approx(t["documents"])
     return (
         sharded.groupBy("shard")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.min("quality").alias("min_q"))
@@ -591,7 +587,7 @@ def _quality_shards_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than GK-sketch output, so DuckDB replays every comparison
     bit-for-bit."""
     t = load_tables(spark, sf_dir, register=False)
-    sharded = curation.quality_shards_sampled(t["documents"], n_shards=8)
+    sharded = curation.quality_shards_sampled(t["documents"])
     return (
         sharded.groupBy("shard")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.min("quality").alias("min_q"))
@@ -631,7 +627,7 @@ def _ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (k-means cells) ANN — approximate, rows-only check."""
     t = load_tables(spark, sf_dir, register=False)
     emb = t["embeddings"]
-    return similarity.ivf_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
+    return similarity.ivf_topk(emb, emb.filter(F.col("vec_id") < 5))
 
 
 def _ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -641,7 +637,7 @@ def _ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank at 6 dp."""
     t = load_tables(spark, sf_dir, register=False)
     emb = t["embeddings"]
-    return similarity.lsh_bucketed_ann(emb, emb.filter(F.col("vec_id") < 5), k=10)
+    return similarity.lsh_bucketed_ann(emb, emb.filter(F.col("vec_id") < 5))
 
 
 def _multimodal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -668,7 +664,7 @@ def _multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     is pure byte-length arithmetic, so DuckDB can oracle it."""
     t = load_tables(spark, sf_dir, register=False)
     media = multimodal.attach_fake_payload(t["documents"])
-    frames = multimodal.sample_frames(media, frame_bytes=64, every_n=4)
+    frames = multimodal.sample_frames(media)
     return (
         frames.groupBy("frame_idx")
         .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -757,7 +753,7 @@ def _hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     join predicate before ranking."""
     t = load_tables(spark, sf_dir, register=False)
     emb = t["embeddings"]
-    return similarity.hard_negatives(emb, emb.filter(F.col("vec_id") < 8), k=10)
+    return similarity.hard_negatives(emb, emb.filter(F.col("vec_id") < 8))
 
 
 def _jl_shortlist_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -767,9 +763,7 @@ def _jl_shortlist_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard pre-shuffle shrink at 100 TB."""
     t = load_tables(spark, sf_dir, register=False)
     emb = t["embeddings"]
-    return similarity.jl_shortlist_recall(
-        emb, emb.filter(F.col("vec_id") < 8), k=10, shortlist=32
-    )
+    return similarity.jl_shortlist_recall(emb, emb.filter(F.col("vec_id") < 8))
 
 
 def _mmr_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -778,7 +772,7 @@ def _mmr_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = 0.7*rel - 0.3*max_sim_to_selected, all cosines rounded
     before comparison so the oracle replays the rounds exactly."""
     t = load_tables(spark, sf_dir, register=False)
-    return similarity.mmr_select(t["embeddings"], k=8, pool=64)
+    return similarity.mmr_select(t["embeddings"])
 
 
 def _copurchase_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -789,12 +783,12 @@ def _copurchase_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators import graph
 
     t = load_tables(spark, sf_dir, register=False)
-    edges = graph.copurchase_edges(t["lineitem"], min_count=2).localCheckpoint()
+    edges = graph.copurchase_edges(t["lineitem"]).localCheckpoint()
     seeds = (
         edges.select(F.col("src").alias("node")).distinct().orderBy("node").limit(3)
     )
     return (
-        graph.personalized_pagerank(edges, seeds, iterations=3, round_to=8)
+        graph.personalized_pagerank(edges, seeds)
         .withColumnRenamed("node", "part")
         .orderBy("part")
     )
@@ -808,7 +802,7 @@ def _copurchase_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators import graph
 
     t = load_tables(spark, sf_dir, register=False)
-    edges = graph.copurchase_edges(t["lineitem"], min_count=2).localCheckpoint()
+    edges = graph.copurchase_edges(t["lineitem"]).localCheckpoint()
     seeds = (
         edges.select(F.col("src").alias("node")).distinct().orderBy("node").limit(3)
     )
@@ -898,9 +892,7 @@ def _count_min_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-sided overestimate visible against exact counts for the top-20
     users (sketches.count_min_report)."""
     t = load_tables(spark, sf_dir, register=False)
-    return sketches.count_min_report(
-        t["events"], "user_id", depth=4, width=64, topk=20
-    )
+    return sketches.count_min_report(t["events"], "user_id")
 
 
 def _twopass_median(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -910,7 +902,7 @@ def _twopass_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators import profile
 
     t = load_tables(spark, sf_dir, register=False)
-    return profile.twopass_median(t["events"], "value")
+    return profile.twopass_median(t["events"])
 
 
 def _incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -936,7 +928,7 @@ def _quantile_normalized_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t["documents"]
     scores = unigram_logprob_scores(docs).select("doc_id", "logprob_mean")
     scored = docs.select("doc_id", "source").join(scores, "doc_id")
-    return curation.quantile_normalize_report(scored, "logprob_mean", "source")
+    return curation.quantile_normalize_report(scored, "logprob_mean")
 
 
 def _source_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -964,7 +956,7 @@ def _padding_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-token length bucket at batch size 8 — the padding-waste baseline
     that motivates pack_sequences (curation.padding_efficiency)."""
     t = load_tables(spark, sf_dir, register=False)
-    return curation.padding_efficiency(t["documents"], bucket=16, batch=8)
+    return curation.padding_efficiency(t["documents"])
 
 
 def _event_type_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -992,9 +984,7 @@ def _event_type_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") * 100 >= F.col("tn") * 20)
         .select(F.col("prev_type").alias("src"), F.col("event_type").alias("dst"))
     )
-    return scc_labels(edges, rounds=3).select(
-        F.col("node").alias("event_type"), "scc_id", "scc_size"
-    )
+    return scc_labels(edges).select(F.col("node").alias("event_type"), "scc_id", "scc_size")
 
 
 def _near_dup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1039,13 +1029,6 @@ def _winsorized_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return profile.grouped_winsorized_stats(t["events"])
 
 
-def _session_paths_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 session opening paths (first four event types per 30-min
-    session, '>'-joined): lag/cumsum sessionization, in-row path build,
-    bounded path groupBy (relational.session_paths_topk)."""
-    return relational.session_paths_topk(spark, sf_dir)
-
-
 def _stratified_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified 5-fold assignment per language: deterministic hash
     lottery ranks within each stratum (the bucketed two-pass rank — no
@@ -1053,7 +1036,7 @@ def _stratified_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds within-1 the same count per stratum
     (curation.stratified_kfold)."""
     t = load_tables(spark, sf_dir, register=False)
-    return curation.stratified_kfold(t["documents"], k=5).orderBy("doc_id")
+    return curation.stratified_kfold(t["documents"]).orderBy("doc_id")
 
 
 def _ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1065,7 +1048,7 @@ def _ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (similarity.ivf_pq_topk)."""
     t = load_tables(spark, sf_dir, register=False)
     emb = t["embeddings"]
-    return similarity.ivf_pq_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
+    return similarity.ivf_pq_topk(emb, emb.filter(F.col("vec_id") < 5))
 
 
 def _pareto_value_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1143,10 +1126,6 @@ def _incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _approx_distinct_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return relational.approx_distinct_events(spark, sf_dir)
-
-
 def _approx_distinct_events_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users per event type via the deterministic KMV sketch
     (sketches.kmv_distinct, k=64) — the ORACLE-REPLAYABLE twin of
@@ -1160,7 +1139,6 @@ def _approx_distinct_events_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         t["events"],
         ["event_type"],
         "CAST(user_id AS STRING)",
-        k=64,
         out_col="est_users",
     )
 
@@ -1171,7 +1149,7 @@ def _chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no orderBy: there is no shuffle below it, so range-bound sampling
     # would re-run the whole tokenize+chunk pass; the compare sorts anyway
     t = load_tables(spark, sf_dir, register=False)
-    return curation.chunk_documents(t["documents"], chunk_size=128, stride=96)
+    return curation.chunk_documents(t["documents"])
 
 
 def _unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1202,9 +1180,7 @@ def _ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrieval to approximate. Approximate inputs -> rows-only check."""
     t = load_tables(spark, sf_dir, register=False)
     emb = t["embeddings"]
-    # planes=4: 16 buckets — at 8 planes the 256 buckets starve recall on
-    # this corpus size, which is exactly what this report exists to catch
-    return similarity.ann_recall_report(emb, emb.filter(F.col("vec_id") < 20), planes=4)
+    return similarity.ann_recall_report(emb, emb.filter(F.col("vec_id") < 20))
 
 
 def _epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1228,7 +1204,7 @@ def _ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t["embeddings"]
     qs = emb.filter(F.col("vec_id") < 20)
     truth = similarity.brute_force_topk(emb, qs, 10)
-    cand = similarity.lsh_bucketed_ann(emb, qs, 10, planes=4)
+    cand = similarity.lsh_bucketed_ann(emb, qs, planes=4)
     return similarity.recall_vs_truth(truth, cand, "lsh_bucketed")
 
 
@@ -1258,16 +1234,10 @@ def _incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
     return (
-        dedup.incremental_near_dup(new, seen, threshold=0.5)
+        dedup.incremental_near_dup(new, seen)
         .select("doc_id", "lang", "n_chars")
         .orderBy("doc_id")
     )
-
-
-def _cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Latest-event-per-user upsert compaction (argmax agg, tombstones
-    dropped)."""
-    return relational.cdc_snapshot(spark, sf_dir)
 
 
 def _minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1353,9 +1323,7 @@ def _table_profile_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     stacked = reduce(lambda a, b: a.unionByName(b), stacks)
-    return sketches.kmv_distinct(
-        stacked, ["col_name"], "v", k=64, out_col="est_distinct"
-    )
+    return sketches.kmv_distinct(stacked, ["col_name"], "v", out_col="est_distinct")
 
 
 def _weighted_take(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1368,55 +1336,25 @@ def _weighted_take(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-filled hourly counts per type, |z| > 3 anomalies."""
-    return relational.hourly_anomalies(spark, sf_dir)
-
-
 def _jaccard_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-filtered exact Jaccard pairs (AllPairs/PPJoin bound): the
     oracle is the full all-pairs SQL, so a green row proves the prefix
     filter misses no pair."""
     t = load_tables(spark, sf_dir, register=False)
-    return dedup.jaccard_pairs_prefix(t["documents"], threshold=0.5).orderBy("id_a", "id_b")
+    return dedup.jaccard_pairs_prefix(t["documents"]).orderBy("id_a", "id_b")
 
 
 def _dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicated 8-word-span report per source (Lee et al. 2022
     substring-dedup signal): avg duplicated-span fraction + heavy docs."""
     t = load_tables(spark, sf_dir, register=False)
-    return dedup.duplicated_span_stats(t["documents"], n=8)
+    return dedup.duplicated_span_stats(t["documents"])
 
 
 def _embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid-distance outlier screen (mislabel detector)."""
     t = load_tables(spark, sf_dir, register=False)
     return similarity.embedding_outliers(t["embeddings"])
-
-
-def _funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered view->click->purchase funnel with per-stage conversion."""
-    return relational.funnel_conversion(spark, sf_dir)
-
-
-def _key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy-hitter o_custkey diagnostic (share + skew factor)."""
-    return relational.key_skew_report(spark, sf_dir)
-
-
-def _stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical aggregates (variance/corr/covar/regression) per flag."""
-    return relational.stats_moments(spark, sf_dir)
-
-
-def _orders_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIVOT -> UNPIVOT (melt) round trip to long form with zero-fill."""
-    return relational.orders_unpivot(spark, sf_dir)
-
-
-def _salted_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-phase salted aggregation over the skewed event_type key."""
-    return relational.salted_event_stats(spark, sf_dir)
 
 
 def _char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1447,7 +1385,7 @@ def _snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value")
         ),
     )
-    return snapshot_diff(old, ev, ["event_id"], ["value"]).orderBy("event_id")
+    return snapshot_diff(old, ev, ["event_id"]).orderBy("event_id")
 
 
 def _value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1455,12 +1393,7 @@ def _value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.profile import value_histogram
 
     ev = load_tables(spark, sf_dir, register=False)["events"]
-    return value_histogram(ev, "value", "event_type", bins=10)
-
-
-def _scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD type-2 validity intervals per user from the events changelog."""
-    return relational.scd2_user_type_history(spark, sf_dir)
+    return value_histogram(ev, "value")
 
 
 def _expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1484,12 +1417,7 @@ def _bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.text import bm25_topk
 
     t = load_tables(spark, sf_dir, register=False)
-    return bm25_topk(t["documents"], _BM25_QUERIES, k=5)
-
-
-def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 part pairs co-occurring in the most orders."""
-    return relational.copurchase_pairs(spark, sf_dir)
+    return bm25_topk(t["documents"], _BM25_QUERIES)
 
 
 def _avro_roundtrip_reshape(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1575,7 +1503,7 @@ def _kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators import sketches
 
     t = load_tables(spark, sf_dir, register=False)
-    return sketches.kll_value_quantiles(t["events"], k=32768)
+    return sketches.kll_value_quantiles(t["events"])
 
 
 def _theta_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1588,14 +1516,6 @@ def _theta_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sketches.theta_user_overlap(t["events"])
 
 
-def _sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theta-union mergeability proof: per-type sketches unioned ==
-    direct whole-table sketch (== exact distinct at gate SFs)."""
-    from avro_sql_spark.operators import sketches
-
-    return sketches.sketch_rollup_report(spark, sf_dir)
-
-
 def _heavy_users_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_top_k heavy hitters. Exactness trick: the sketch tracks
     up to 10k items, far above the user universe at gate SFs, so counts
@@ -1606,7 +1526,7 @@ def _heavy_users_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators import sketches
 
     t = load_tables(spark, sf_dir, register=False)
-    return sketches.heavy_users_topk(t["events"], k=23)
+    return sketches.heavy_users_topk(t["events"])
 
 
 def _embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1633,7 +1553,7 @@ def _embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     eigen PATH itself is oracle-checked via the fixed-round twin entry
     ``embedding_power_iter`` (similarity.power_iteration)."""
     t = load_tables(spark, sf_dir, register=False)
-    proj, _explained = similarity.pca_project(t["embeddings"], k=2)
+    proj, _explained = similarity.pca_project(t["embeddings"])
     return (
         proj.groupBy("label")
         .agg(
@@ -1661,7 +1581,7 @@ def _embedding_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (dim, loading, eigenvalue), 6-dp."""
     t = load_tables(spark, sf_dir, register=False)
     cov = similarity.fixed_point_covariance(t["embeddings"], round_to=None)
-    v, lam = similarity.power_iteration(cov, iters=800)
+    v, lam = similarity.power_iteration(cov)
     return (
         spark.createDataFrame(
             [(i, x) for i, x in enumerate(v)], "dim int, loading double"
@@ -1818,13 +1738,17 @@ def _multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     total name length — the last catches CSV quoting/trim mangling).
     Oracle: the same aggregates straight off the parquet table, once
     per format — a lossless round trip must reproduce them exactly."""
+    import os
+
+    from avro_sql_spark.session import scratch_dir
     from avro_sql_spark.sources.io import read_table, write_table
 
     t = load_tables(spark, sf_dir, register=False)
     nation = t["nation"]
     out = None
     for fmt in ("csv", "json", "orc"):
-        path = f"/tmp/avro-sql-spark-roundtrip/{fmt}"
+        # the frame reads these files lazily, so they stay until exit
+        path = os.path.join(scratch_dir(), "roundtrip", fmt)
         write_table(nation, path, fmt=fmt)
         back = read_table(spark, path, fmt=fmt, schema=nation.schema)
         agg = back.agg(
@@ -1843,23 +1767,6 @@ def _multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("fmt")
 
 
-def _event_throttle_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Telemetry near-duplicate screen (relational.near_duplicate_events,
-    10-minute gap): the batch twin of dropDuplicatesWithinWatermark —
-    per (user, type) lag window on exact integer microseconds. Oracle
-    is the identical lag arithmetic on epoch_us."""
-    return relational.near_duplicate_events(spark, sf_dir, gap_minutes=10)
-
-
-def _nearest_order_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-in-either-direction as-of join
-    (relational.nearest_order_attribution): merge-formulation flanking
-    orders per event, microsecond-exact distance pick with
-    backward-wins ties. Oracle replays both frames with IGNORE NULLS
-    window picks."""
-    return relational.nearest_order_attribution(spark, sf_dir)
-
-
 def _heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps'-law vocabulary-growth curve (text.heaps_curve): corpus
     streamed in doc-id order, 10 NTILE checkpoints of cumulative tokens
@@ -1869,7 +1776,7 @@ def _heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.text import heaps_curve
 
     t = load_tables(spark, sf_dir, register=False)
-    return heaps_curve(t["documents"], buckets=10)
+    return heaps_curve(t["documents"])
 
 
 def _kcore_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1880,7 +1787,7 @@ def _kcore_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.graph import copurchase_edges, kcore_peel
 
     t = load_tables(spark, sf_dir, register=False)
-    return kcore_peel(copurchase_edges(t["lineitem"], min_count=2), k=3, rounds=4)
+    return kcore_peel(copurchase_edges(t["lineitem"]))
 
 
 def _compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1910,10 +1817,7 @@ def _ks_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, register=False)
     d = curation.deterministic_split(t["documents"])
     return ks_drift(
-        d.filter(F.col("split") == "train"),
-        d.filter(F.col("split") == "test"),
-        "n_chars",
-        group_col="lang",
+        d.filter(F.col("split") == "train"), d.filter(F.col("split") == "test"), "n_chars"
     )
 
 
@@ -1956,14 +1860,7 @@ def _semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the synthetic embeddings are isotropic (max pair cos ~0.5) — the
     rule's semantics are what's under test, thresholds are data."""
     t = load_tables(spark, sf_dir, register=False)
-    return similarity.semantic_dedup_report(
-        t["embeddings"], k=8, iterations=2, tau=0.35
-    )
-
-
-def _balance_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """percent_rank/cume_dist/NTILE decile summary per market segment."""
-    return relational.customer_balance_ranks(spark, sf_dir)
+    return similarity.semantic_dedup_report(t["embeddings"])
 
 
 def _streaming_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2045,7 +1942,7 @@ def _remove_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicated-span removal transform (Lee et al. 2022 dedup), summarized
     per source: docs changed, token counts before/after, removed mass."""
     t = load_tables(spark, sf_dir, register=False)
-    out = dedup.remove_duplicated_spans(t["documents"], n=8)
+    out = dedup.remove_duplicated_spans(t["documents"])
     return (
         out.groupBy("source")
         .agg(
@@ -2061,11 +1958,6 @@ def _remove_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-
-
-def _retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-seen-day cohort x day-offset retention matrix over events."""
-    return relational.retention_cohorts(spark, sf_dir)
 
 
 def _streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2126,7 +2018,7 @@ def _fuzzy_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, register=False)
     return blocked_fuzzy_pairs(
-        t["part"], "p_partkey", "p_name", ["p_type", "p_size"], max_distance=2
+        t["part"], "p_partkey", "p_name", ["p_type", "p_size"]
     ).orderBy("id_a", "id_b")
 
 
@@ -2277,7 +2169,7 @@ def _entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, register=False)
     pairs = blocked_fuzzy_pairs(
-        t["part"], "p_partkey", "p_name", ["p_type", "p_size"], max_distance=2
+        t["part"], "p_partkey", "p_name", ["p_type", "p_size"]
     )
     nodes = t["part"].select(F.col("p_partkey").alias("id"))
     labels = dedup.connected_components(nodes, pairs)
@@ -2587,7 +2479,7 @@ def _merge_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    merged = merge_upsert(c, updates, ["c_custkey"], delete_col="is_delete")
+    merged = merge_upsert(c, updates, ["c_custkey"])
     return (
         merged.groupBy("c_mktsegment")
         .agg(
@@ -2607,7 +2499,7 @@ def _jaccard_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     reachability CTE — the loop's first driver-green row."""
     t = load_tables(spark, sf_dir, register=False)
     docs = t["documents"]
-    pairs = dedup.jaccard_pairs_prefix(docs, threshold=0.5)
+    pairs = dedup.jaccard_pairs_prefix(docs)
     nodes = docs.select(F.col("doc_id").alias("id"))
     return dedup.connected_components(nodes, pairs).orderBy("id")
 
@@ -2622,7 +2514,7 @@ def _kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.clustering import kmeans_report
 
     t = load_tables(spark, sf_dir, register=False)
-    return kmeans_report(t["embeddings"], k=4, iterations=2)
+    return kmeans_report(t["embeddings"])
 
 
 def _salted_join_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2683,7 +2575,7 @@ def _triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators import graph
 
     t = load_tables(spark, sf_dir, register=False)
-    edges = graph.copurchase_edges(t["lineitem"], min_count=2)
+    edges = graph.copurchase_edges(t["lineitem"])
     return graph.triangle_count(edges)
 
 
@@ -2706,14 +2598,7 @@ def _skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.text import skipgram_pairs
 
     t = load_tables(spark, sf_dir, register=False)
-    return skipgram_pairs(t["documents"], window=2, top_k=100)
-
-
-def _ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Truncated (20-tap) EWMA, alpha=1/2, of per-type hourly value
-    totals. DECIMAL hourly sums + power-of-two weights + array-pinned
-    fold order → bit-exact vs the DuckDB list_reduce replay."""
-    return relational.ewma_hourly(spark, sf_dir)
+    return skipgram_pairs(t["documents"])
 
 
 def _quality_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2762,19 +2647,8 @@ def _copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators import graph
 
     t = load_tables(spark, sf_dir, register=False)
-    edges = graph.copurchase_edges(t["lineitem"], min_count=2)
     return (
-        graph.pagerank(
-            edges,
-            iterations=3,
-            damping=0.85,
-            round_to=8,
-            # symmetric edge list: every node has an out-edge, so the
-            # per-iteration dangling-mass pass is provably a no-op, and
-            # with one consumer per round every checkpoint is deferred
-            # to the one final action
-            redistribute_dangling=False,
-        )
+        graph.pagerank(graph.copurchase_edges(t["lineitem"]))
         .select(F.col("node").alias("part"), F.col("pr").alias("pr"))
         .orderBy("part")
     )
@@ -2792,7 +2666,7 @@ def _zorder_layout_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, register=False)
     orders = t["orders"]
-    z = zvalue(orders, ["o_totalprice", "o_custkey"], bits=16)
+    z = zvalue(orders, ["o_totalprice", "o_custkey"])
     return (
         orders.select(
             F.shiftright(z, 28).cast("int").alias("segment"),
@@ -2829,9 +2703,7 @@ def _join_size_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     overestimate visible (sketches.join_size_sketch). Deterministic
     md5 rows, so the oracle replays every cell."""
     t = load_tables(spark, sf_dir, register=False)
-    return sketches.join_size_sketch(
-        t["events"], "user_id", t["orders"], "o_custkey", depth=4, width=64
-    )
+    return sketches.join_size_sketch(t["events"], "user_id", t["orders"], "o_custkey")
 
 
 def _cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2931,9 +2803,7 @@ def _markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("dst"),
         (F.col("n").cast("double") / F.col("tn")).alias("p"),
     )
-    return markov_stationary(trans, iterations=8).select(
-        F.col("node").alias("event_type"), "pi"
-    )
+    return markov_stationary(trans).select(F.col("node").alias("event_type"), "pi")
 
 
 def _benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2955,13 +2825,6 @@ def _user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, register=False)
     return profile.user_entropy(t["events"])
-
-
-def _supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Herfindahl concentration of supplier shipped-value shares per
-    nation: DECIMAL-exact values, one division per share, bounded
-    square-sum (relational.supplier_hhi)."""
-    return relational.supplier_hhi(spark, sf_dir)
 
 
 def _term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3015,9 +2878,7 @@ def _equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators import profile
 
     t = load_tables(spark, sf_dir, register=False)
-    return profile.equi_depth_histogram(
-        t["orders"], "o_totalprice", "o_orderkey", buckets=16
-    )
+    return profile.equi_depth_histogram(t["orders"], "o_totalprice", "o_orderkey")
 
 
 def _disorder_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3034,15 +2895,7 @@ def _disorder_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t["events"].withColumn(
         "arrival", F.md5(F.col("event_id").cast("string").cast("binary"))
     )
-    return profile.disorder_audit(ev, order_col="arrival")
-
-
-def _ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion z-test experiment readout over a deterministic
-    50/50 user split: per-arm conversion, pooled z, 5% verdict — exact
-    integer counts, single IEEE divisions/sqrt
-    (relational.ab_conversion_ztest)."""
-    return relational.ab_conversion_ztest(spark, sf_dir)
+    return profile.disorder_audit(ev)
 
 
 def _dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3054,21 +2907,6 @@ def _dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, register=False)
     return profile.dataset_card(t["documents"])
-
-
-def _position_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U-shaped multi-touch attribution (40/20/40 with k=1/k=2 edge
-    cases) over the 24h pre-purchase window: one user-keyed range join,
-    purchase-keyed position windows, exact-rational credits
-    (relational.position_attribution)."""
-    return relational.position_attribution(spark, sf_dir)
-
-
-def _rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM segmentation grid: exact ceil(4·rank/n) quartiles per
-    dimension on two-pass ranks (never NTILE), DECIMAL-exact monetary,
-    users counted per (r,f,m) cell (relational.rfm_segments)."""
-    return relational.rfm_segments(spark, sf_dir)
 
 
 def _seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3089,9 +2927,7 @@ def _blocklist_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.text import blocklist_report
 
     t = load_tables(spark, sf_dir, register=False)
-    return blocklist_report(
-        t["documents"], terms=["slow", "hash", "merge"], max_hits=2
-    )
+    return blocklist_report(t["documents"], terms=["slow", "hash", "merge"])
 
 
 def _hilbert_layout_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3111,7 +2947,7 @@ def _hilbert_layout_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # carrying only the two audit columns); the segment rollup is
     # min/max/count — order-free, so placement can't change the result
     orders = spread_scan(t["orders"].select("o_totalprice", "o_custkey"))
-    h = hilbert_index(orders, ["o_totalprice", "o_custkey"], bits=16)
+    h = hilbert_index(orders, ["o_totalprice", "o_custkey"])
     return (
         h.select(
             F.shiftright(F.col("hval"), 28).cast("int").alias("segment"),
@@ -3144,7 +2980,7 @@ def _copurchase_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     t = load_tables(spark, sf_dir, register=False)
-    edges = copurchase_edges(t["lineitem"], min_count=2)
+    edges = copurchase_edges(t["lineitem"])
     return (
         connected_components_star(edges)
         .select(F.col("id").alias("part"), F.col("cluster_id").alias("component"))
@@ -3163,19 +2999,7 @@ def _skipping_effectiveness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.layout import skipping_report
 
     t = load_tables(spark, sf_dir, register=False)
-    return skipping_report(
-        t["orders"], ["o_totalprice", "o_custkey"], "o_orderkey",
-        n_files=32, grid=4,
-    )
-
-
-def _event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov next-event transition matrix (lag window per
-    user, totally ordered by (ts, event_id); counts bounded by the
-    event-type universe squared)."""
-    from avro_sql_spark.operators.relational import event_transitions
-
-    return event_transitions(spark, sf_dir)
+    return skipping_report(t["orders"], ["o_totalprice", "o_custkey"], "o_orderkey")
 
 
 def _corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3209,7 +3033,7 @@ def _corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of four synchronous construction barriers
     q = docs.filter(gopher_pass(F.col("text"))).localCheckpoint(eager=False)
     ex = dedup.dedup_exact(q).localCheckpoint(eager=False)
-    labels = dedup.near_dup_clusters(ex, est_threshold=0.5)
+    labels = dedup.near_dup_clusters(ex)
     nd = ex.join(
         labels.filter(F.col("id") == F.col("cluster_id"))
         .select(F.col("id").alias("doc_id")),
@@ -3247,9 +3071,9 @@ def _label_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.graph import copurchase_edges, label_propagation
 
     t = load_tables(spark, sf_dir, register=False)
-    edges = copurchase_edges(t["lineitem"], min_count=2)
+    edges = copurchase_edges(t["lineitem"])
     return (
-        label_propagation(edges, rounds=2)
+        label_propagation(edges)
         .select(F.col("id").alias("part"), "community")
         .orderBy("part")
     )
@@ -3266,7 +3090,7 @@ def _ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, register=False)
     emb = t["embeddings"]
-    return pq_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
+    return pq_topk(emb, emb.filter(F.col("vec_id") < 5))
 
 
 def _zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3298,7 +3122,7 @@ def _source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.dedup import source_overlap
 
     t = load_tables(spark, sf_dir, register=False)
-    return source_overlap(t["documents"], prefix_len=80)
+    return source_overlap(t["documents"])
 
 
 def _embedding_energy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3328,7 +3152,7 @@ def _link_prediction_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.graph import copurchase_edges, link_prediction_topk
 
     t = load_tables(spark, sf_dir, register=False)
-    return link_prediction_topk(copurchase_edges(t["lineitem"], min_count=2))
+    return link_prediction_topk(copurchase_edges(t["lineitem"]))
 
 
 def _mutual_information_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3377,9 +3201,7 @@ def _key_locality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.layout import key_locality_report
 
     t = load_tables(spark, sf_dir, register=False)
-    return key_locality_report(
-        t["orders"], "o_custkey", "o_totalprice", "o_orderkey", n_files=32
-    )
+    return key_locality_report(t["orders"], "o_custkey", "o_totalprice", "o_orderkey")
 
 
 def _file_overlap_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3389,9 +3211,7 @@ def _file_overlap_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.layout import file_overlap_depth
 
     t = load_tables(spark, sf_dir, register=False)
-    return file_overlap_depth(
-        t["orders"], "o_orderkey", "o_totalprice", "o_orderkey", n_files=32
-    )
+    return file_overlap_depth(t["orders"], "o_orderkey", "o_totalprice", "o_orderkey")
 
 
 def _cow_rewrite_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3400,10 +3220,7 @@ def _cow_rewrite_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.layout import cow_rewrite_plan
 
     t = load_tables(spark, sf_dir, register=False)
-    return cow_rewrite_plan(
-        t["orders"], "o_custkey", "o_totalprice", "o_orderkey",
-        n_files=32, update_rate=0.01,
-    )
+    return cow_rewrite_plan(t["orders"], "o_custkey", "o_totalprice", "o_orderkey")
 
 
 def _payload_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3426,7 +3243,7 @@ def _good_turing_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.text import good_turing_report
 
     t = load_tables(spark, sf_dir, register=False)
-    return good_turing_report(t["documents"], shingle_width=3)
+    return good_turing_report(t["documents"])
 
 
 def _typo_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3474,7 +3291,7 @@ def _ann_mrr_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t["embeddings"]
     qs = emb.filter(F.col("vec_id") < 20)
     truth1 = similarity.brute_force_topk(emb, qs, 1)
-    cand = similarity.lsh_bucketed_ann(emb, qs, 10, planes=4)
+    cand = similarity.lsh_bucketed_ann(emb, qs, planes=4)
     return similarity.mrr_report(truth1, cand, "lsh_bucketed")
 
 
@@ -3525,9 +3342,7 @@ def _selectivity_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.profile import selectivity_estimate_audit
 
     t = load_tables(spark, sf_dir, register=False)
-    return selectivity_estimate_audit(
-        t["orders"], "o_totalprice", "o_orderkey", buckets=32, grid=10
-    )
+    return selectivity_estimate_audit(t["orders"], "o_totalprice", "o_orderkey")
 
 
 def _retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3565,7 +3380,7 @@ def _shuffle_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from avro_sql_spark.operators.profile import shuffle_skew_audit
 
     t = load_tables(spark, sf_dir, register=False)
-    return shuffle_skew_audit(t["events"], "user_id", 64)
+    return shuffle_skew_audit(t["events"])
 
 
 def _spearman_user_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3650,7 +3465,7 @@ def _community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     t = load_tables(spark, sf_dir, register=False)
-    return community_modularity(copurchase_edges(t["lineitem"], min_count=2))
+    return community_modularity(copurchase_edges(t["lineitem"]))
 
 
 def _dim_broadcast_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3674,7 +3489,7 @@ def _diameter_double_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     t = load_tables(spark, sf_dir, register=False)
-    return diameter_double_sweep(copurchase_edges(t["lineitem"], min_count=2))
+    return diameter_double_sweep(copurchase_edges(t["lineitem"]))
 
 
 def _hoeffding_adequacy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4005,7 +3820,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "obrien_fleming_monitor": _bind(profile.obrien_fleming_monitor, "events"),
         # --- cumulative-green (driver rows r6 AND r7: this block was the
         # r6/r7 window, swept green twice at positions 0-49) ---
-        "supplier_hhi": _supplier_hhi,
+        "supplier_hhi": relational.supplier_hhi,
         "markov_stationary": _markov_stationary,
         "benford_audit": _benford_audit,
         "gini_value_concentration": _gini_value_concentration,
@@ -4086,14 +3901,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "event_type_scc": _event_type_scc,
         "near_dup_source_matrix": _near_dup_source_matrix,
         "winsorized_event_stats": _winsorized_event_stats,
-        "session_paths_topk": _session_paths_topk,
+        "session_paths_topk": relational.session_paths_topk,
         "ann_ivf_pq": _ann_ivf_pq,
         "stratified_kfold": _stratified_kfold,
         "hilbert_layout_report": _hilbert_layout_report,
         # its own entry so the two-layout row stays cost-comparable across rounds
         "skipping_effectiveness_hilbert": _bind(
             layout.skipping_report, "orders", cols=["o_totalprice", "o_custkey"],
-            tiebreak_col="o_orderkey", n_files=32, grid=4,
+            tiebreak_col="o_orderkey",
             layouts=("linear", "zorder", "hilbert"),
         ),
         "blocklist_quarantine": _blocklist_quarantine,
@@ -4101,10 +3916,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "join_size_sketch": _join_size_sketch,
         "cusum_drift": _cusum_drift,
         "seasonal_naive_backtest": _seasonal_naive_backtest,
-        "rfm_segments": _rfm_segments,
-        "position_attribution": _position_attribution,
+        "rfm_segments": relational.rfm_segments,
+        "position_attribution": relational.position_attribution,
         "dataset_card": _dataset_card,
-        "ab_conversion_ztest": _ab_conversion_ztest,
+        "ab_conversion_ztest": relational.ab_conversion_ztest,
         "equi_depth_histogram": _equi_depth_histogram,
         "disorder_audit": _disorder_audit,
         "degree_assortativity": _degree_assortativity,
@@ -4117,7 +3932,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "heaps_curve": _heaps_curve,
         "embedding_power_iter": _embedding_power_iter,
         "copurchase_components": _copurchase_components,
-        "event_transitions": _event_transitions,
+        "event_transitions": relational.event_transitions,
         "ann_pq_topk": _ann_pq_topk,
         "label_communities": _label_communities,
         "corpus_funnel": _corpus_funnel,
@@ -4126,18 +3941,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ccnet_buckets": _ccnet_buckets,
         "ks_length_drift": _ks_length_drift,
         # oracle: the shared unrolled-BPE CTE chain plus the same occurrence join
-        "bpe_fertility": _bind(bpe.bpe_fertility, "documents", n_merges=8),
+        "bpe_fertility": _bind(bpe.bpe_fertility, "documents"),
         "compaction_plan": _compaction_plan,
         "kcore_summary": _kcore_summary,
-        "event_throttle_dedup": _event_throttle_dedup,
+        # oracle: the identical lag arithmetic on epoch_us
+        "event_throttle_dedup": relational.near_duplicate_events,
         "multiformat_roundtrip": _multiformat_roundtrip,
         "streaming_reshape_totals": _streaming_reshape_totals,
         "char_mass_median": _char_mass_median,
         "quality_calibration": _quality_calibration,
-        "nearest_order_attribution": _nearest_order_attribution,
+        # oracle: both frames replayed with IGNORE NULLS window picks
+        "nearest_order_attribution": relational.nearest_order_attribution,
         "skipgram_pairs": _skipgram_pairs,
-        "tf_cosine_pairs": _bind(text.tf_cosine_pairs, "documents", threshold=0.5, max_df=100),
-        "ewma_hourly": _ewma_hourly,
+        "tf_cosine_pairs": _bind(text.tf_cosine_pairs, "documents"),
+        "ewma_hourly": relational.ewma_hourly,
         "quality_rank_fusion": _quality_rank_fusion,
         # oracle: the minhash clusters replayed WITH RECURSIVE, QUALIFY election
         "cluster_representatives": _bind(dedup.cluster_representatives, "documents"),
@@ -4160,7 +3977,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "event_value_outliers": _event_value_outliers,
         "source_overlap": _source_overlap,
         # oracle: the 8 rounds unrolled as CTE blocks (_bpe_merges_oracle)
-        "bpe_merges": _bind(bpe.train_bpe, "documents", n_merges=8),
+        "bpe_merges": _bind(bpe.train_bpe, "documents"),
         "dedup_exact_keep": _dedup_exact_keep,
         "ngram_jaccard_pairs": _ngram_jaccard,
         "ngram_jaccard_capped": _ngram_jaccard_capped,
@@ -4184,7 +4001,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chunk_documents": _chunk_documents,
         "unigram_logprob": _unigram_logprob,
         "incremental_dedup": _incremental_dedup,
-        "approx_distinct_events": _approx_distinct_events,
+        "approx_distinct_events": relational.approx_distinct_events,
         "events_sliding_windows": relational.events_sliding_windows,
         "events_rolling_hour": relational.events_rolling_hour,
         "decontam_ngram": _decontam_ngram,
@@ -4206,7 +4023,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "reshape_dup_names": _reshape_dup_names,
         "avro_roundtrip_reshape": _avro_roundtrip_reshape,
         "value_histogram": _value_histogram,
-        "salted_event_stats": _salted_event_stats,
+        "salted_event_stats": relational.salted_event_stats,
         "snapshot_diff": _snapshot_diff,
         "copurchase_pagerank": _copurchase_pagerank,
         "embedding_pca": _embedding_pca,
@@ -4214,18 +4031,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "reshape_map_project": _reshape_map_project,
         "reshape_identity": _reshape_identity,
         "reshape_primitive_container": _reshape_primitive_container,
-        "stats_moments": _stats_moments,
-        "orders_unpivot": _orders_unpivot,
+        "stats_moments": relational.stats_moments,
+        "orders_unpivot": relational.orders_unpivot,
         "char_entropy": _char_entropy,
-        "retention_cohorts": _retention_cohorts,
+        "retention_cohorts": relational.retention_cohorts,
         "fuzzy_part_pairs": _fuzzy_part_pairs,
-        "balance_ranks": _balance_ranks,
-        "scd2_history": _scd2_history,
+        "balance_ranks": relational.customer_balance_ranks,
+        "scd2_history": relational.scd2_user_type_history,
         "quality_expectations": _expectations,
         "bm25_search": _bm25_search,
-        "copurchase_pairs": _copurchase_pairs,
+        "copurchase_pairs": relational.copurchase_pairs,
         "theta_user_overlap": _theta_user_overlap,
-        "sketch_rollup": _sketch_rollup,
+        # theta is exact below its sketch threshold: == exact distinct at gate SFs
+        "sketch_rollup": sketches.sketch_rollup_report,
         "streaming_hourly_counts": _streaming_hourly_counts,
         "streaming_dedup_users": _streaming_dedup_users,
         "streaming_funnel_stages": _streaming_funnel_stages,
@@ -4233,17 +4051,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_sessions": _streaming_sessions,
         "remove_dup_spans": _remove_dup_spans,
         "jaccard_pairs_prefix": _jaccard_pairs_prefix,
-        "hourly_anomalies": _hourly_anomalies,
+        "hourly_anomalies": relational.hourly_anomalies,
         "weighted_take": _weighted_take,
         "table_profile": _table_profile,
-        "cdc_snapshot": _cdc_snapshot,
+        "cdc_snapshot": relational.cdc_snapshot,
         "bigram_logprob": _bigram_logprob,
         "vocab_coverage": _vocab_coverage,
         "langid_confusion": _langid_confusion,
         "dup_span_stats": _dup_span_stats,
         "embedding_outliers": _embedding_outliers,
-        "funnel_conversion": _funnel_conversion,
-        "key_skew_report": _key_skew_report,
+        "funnel_conversion": relational.funnel_conversion,
+        "key_skew_report": relational.key_skew_report,
         "variant_props_stats": _variant_props_stats,
         "curation_pipeline_e2e": _curation_pipeline,
         "embedding_centroids": _embedding_centroids,

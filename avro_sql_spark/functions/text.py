@@ -130,7 +130,7 @@ def word_shingles(text: Column) -> Column:
     ``array<string>`` — the input to MinHash / Jaccard dedup. The
     distinct-set view of :func:`word_ngrams` (one gram builder, two
     views). Pure Column expression, no Python."""
-    return F.array_distinct(word_ngrams(text, 3))
+    return F.array_distinct(word_ngrams(text))
 
 
 def mean_word_length(text: Column) -> Column:
@@ -242,9 +242,9 @@ def word_ngrams_of(words: Column, n: int = 2) -> Column:
     return F.when(k > 0, grams).otherwise(F.array().cast("array<string>"))
 
 
-def word_ngrams(text: Column, n: int = 2) -> Column:
-    """All n-word grams of the lowercased text (NOT deduplicated —
+def word_ngrams(text: Column) -> Column:
+    """All 3-word grams of the lowercased text (NOT deduplicated —
     repetition analysis needs multiplicities; :func:`word_shingles` is
     the distinct-set variant for Jaccard/MinHash). For hot paths see
     :func:`word_ngrams_of`."""
-    return word_ngrams_of(F.split(F.lower(text), " "), n)
+    return word_ngrams_of(F.split(F.lower(text), " "), 3)

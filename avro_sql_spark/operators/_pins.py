@@ -6,8 +6,8 @@ blocks live on a persisted RDD referenced by a ``LogicalRDD`` leaf, so
 ``unpersist()`` on the checkpointed frame is a silent no-op and the
 blocks stay pinned until Python GC + ContextCleaner get around to
 them. The iterative loops here (BFS, path-doubling SCC, star-CC, BPE,
-PageRank's dangling mode, CC label propagation, Markov removal
-attribution) pin one or more frames per round; dropping the
+CC label propagation, Markov removal attribution) pin one or more
+frames per round; dropping the
 superseded ones deterministically bounds executor storage at ~2
 rounds instead of growing with round count.
 

@@ -91,15 +91,13 @@ def _apply_merge(words: DataFrame, left: str, right: str) -> DataFrame:
     )
 
 
-def train_bpe_state(
-    docs: DataFrame, n_merges: int = 8
-) -> "tuple[list[tuple], DataFrame]":
-    """The training loop behind :func:`train_bpe`, also returning the
+def train_bpe_state(docs: DataFrame) -> "tuple[list[tuple], DataFrame]":
+    """The 8-merge training loop behind :func:`train_bpe`, also returning the
     FINAL rewritten word table (word, freq, toks) — the state a
     tokenizer-application pass needs (see :func:`bpe_fertility`).
     Driver state is the merge list only; each round is one pair-count
     aggregate over the vocabulary-sized word table plus an in-row
-    rewrite, localCheckpointed LAZILY so N merges never deepen the
+    rewrite, localCheckpointed LAZILY so the merges never deepen the
     plan while each round costs exactly ONE job (the top-pair collect
     materializes that round's rewritten words) — and a caller that
     never consumes the final word table (train_bpe) never pays the
@@ -107,7 +105,7 @@ def train_bpe_state(
     rounds = RoundPins()
     words = rounds.pin(word_freq_tokens(docs))
     merges = []
-    for rank in range(n_merges):
+    for rank in range(8):
         top = (
             pair_counts(words)
             .orderBy(F.desc("n"), "left", "right")
@@ -123,18 +121,18 @@ def train_bpe_state(
     return merges, words
 
 
-def train_bpe(docs: DataFrame, n_merges: int = 8) -> DataFrame:
-    """Learn ``n_merges`` BPE merges; returns (rank, left, right,
-    merged, n) — the merge table a tokenizer ships."""
+def train_bpe(docs: DataFrame) -> DataFrame:
+    """Learn 8 BPE merges; returns (rank, left, right, merged, n) — the
+    merge table a tokenizer ships."""
     spark: SparkSession = docs.sparkSession
-    merges, _words = train_bpe_state(docs, n_merges)
+    merges, _words = train_bpe_state(docs)
     return spark.createDataFrame(
         merges, "rank int, left string, right string, merged string, n bigint"
     )
 
 
-def bpe_fertility(docs: DataFrame, n_merges: int = 8) -> DataFrame:
-    """Tokenizer-efficiency audit: train ``n_merges`` BPE merges on the
+def bpe_fertility(docs: DataFrame) -> DataFrame:
+    """Tokenizer-efficiency audit: train 8 BPE merges on the
     corpus, then report per ``source`` the FERTILITY (subword tokens
     per word) and compression (chars per token) the tokenizer achieves
     there — the table that decides whether a tokenizer is retrained
@@ -147,7 +145,7 @@ def bpe_fertility(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     occurrence counts as a BROADCAST build side (a vocabulary is
     bounded; the corpus is not). All sums are integers; each reported
     ratio is one division of two exact sums."""
-    _merges, words = train_bpe_state(docs, n_merges)
+    _merges, words = train_bpe_state(docs)
     from ..functions.text import word_tokens
 
     vocab = words.select(

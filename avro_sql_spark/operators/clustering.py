@@ -80,15 +80,13 @@ def _assign(emb: DataFrame, cents: "list[list[float]]"):
     )
 
 
-def lloyd_centroids(
-    emb: DataFrame, k: int = 4, iterations: int = 2
-) -> "list[list[float]]":
+def lloyd_centroids(emb: DataFrame, k: int = 4) -> "list[list[float]]":
     """The deterministic Lloyd TRAINING loop over ``embedding`` shared by
     :func:`kmeans_lloyd` and the IVF coarse quantizer
-    (similarity.ivf_topk): k lowest-``vec_id`` seeds, fixed iteration count,
+    (similarity.ivf_topk): k lowest-``vec_id`` seeds, 2 iterations,
     9dp-rounded centroid updates. Returns the final k x d centroid
     list — bounded driver state, broadcast back as literals."""
-    # the training frame is read by 1 + iterations separate driver jobs
+    # the training frame is read by 3 separate driver jobs
     # (seed collect + one assignment aggregate per iteration); pin ONE
     # materialization so each job reads the frozen blocks instead of
     # re-deriving the input subtree (for the IVF quantizer that subtree
@@ -105,7 +103,7 @@ def lloyd_centroids(
 
         raise AvroSqlError(f"kmeans_lloyd: need at least k={k} rows, got {len(seeds)}")
     cents = [list(r["v"]) for r in seeds]
-    for _ in range(iterations):
+    for _ in range(2):
         assigned = _assign(emb, cents)
         rows = (
             assigned.select(
@@ -130,24 +128,24 @@ def lloyd_centroids(
     return cents
 
 
-def kmeans_lloyd(emb: DataFrame, k: int = 4, iterations: int = 2) -> DataFrame:
-    """Fixed-iteration Lloyd k-means. Returns one row per point:
-    (vec_id, cluster, sqdist) after `iterations` centroid updates.
+def kmeans_lloyd(emb: DataFrame) -> DataFrame:
+    """Fixed-iteration Lloyd k-means, k = 4. Returns one row per point:
+    (vec_id, cluster, sqdist) after 2 centroid updates.
 
     Each iteration: assign (in-row arithmetic against broadcast centroid
     literals) then update (posexplode → groupBy(cluster, dim) avg — the
     shuffle is k x d cells). A cluster that loses every point keeps its
     previous centroid (the standard empty-cluster rule)."""
-    cents = lloyd_centroids(emb, k, iterations)
+    cents = lloyd_centroids(emb)
     out = _assign(emb, cents)
     return out.select("vec_id", "cluster", F.col("_dist").alias("sqdist"))
 
 
-def kmeans_report(emb: DataFrame, k: int = 4, iterations: int = 2) -> DataFrame:
+def kmeans_report(emb: DataFrame) -> DataFrame:
     """Cluster-quality rollup of :func:`kmeans_lloyd`: per cluster the
     member count and the mean squared distance to its centroid — the
     inertia decomposition every clustering dashboard shows."""
-    a = kmeans_lloyd(emb, k, iterations)
+    a = kmeans_lloyd(emb)
     return (
         a.groupBy("cluster")
         .agg(

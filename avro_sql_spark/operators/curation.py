@@ -63,12 +63,12 @@ def deterministic_split(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.withColumn("split", expr)
 
 
-def deterministic_sample(df: DataFrame, fraction: float = 0.1) -> DataFrame:
-    """Keep ~``fraction`` of rows, chosen by the id hash salted with
+def deterministic_sample(df: DataFrame) -> DataFrame:
+    """Keep ~10% of rows, chosen by the id hash salted with
     ``"sample"`` — reproducible, partitioning-independent, and
     composable (a larger fraction is a superset, which makes growing a
     sample cheap)."""
-    return df.filter(hash_unit(F.col("doc_id"), "sample") < fraction)
+    return df.filter(hash_unit(F.col("doc_id"), "sample") < 0.1)
 
 
 def stratified_sample(
@@ -104,8 +104,8 @@ def quality_shards(df: DataFrame, n_shards: int = 8) -> DataFrame:
     )
 
 
-def quality_shards_approx(df: DataFrame, n_shards: int = 8) -> DataFrame:
-    """The one-pass variant of :func:`quality_shards`: the exact
+def quality_shards_approx(df: DataFrame) -> DataFrame:
+    """The one-pass variant of :func:`quality_shards` at 8 shards: the exact
     version runs a two-pass range-partitioned rank (:func:`exact_ntile`
     — scale-safe, but two jobs). Here the shard boundaries come from
     an ``approxQuantile`` sketch (Greenwald-Khanna, driver-merged,
@@ -121,7 +121,7 @@ def quality_shards_approx(df: DataFrame, n_shards: int = 8) -> DataFrame:
     from ..functions.text import quality_score
 
     scored = df.withColumn("quality", quality_score(F.col("text")).cast("double"))
-    probs = [i / n_shards for i in range(1, n_shards)]
+    probs = [i / 8 for i in range(1, 8)]
     cuts = scored.approxQuantile("quality", probs, 0.001)
     if not cuts:
         return scored.withColumn("shard", F.lit(1))
@@ -130,12 +130,12 @@ def quality_shards_approx(df: DataFrame, n_shards: int = 8) -> DataFrame:
     for shard, cut in enumerate(reversed(cuts), start=1):
         cond = F.col("quality") >= F.lit(cut)
         expr = F.when(cond, shard) if expr is None else expr.when(cond, shard)
-    return scored.withColumn("shard", expr.otherwise(F.lit(n_shards)))
+    return scored.withColumn("shard", expr.otherwise(F.lit(8)))
 
 
-def quality_shards_sampled(df: DataFrame, n_shards: int = 8) -> DataFrame:
+def quality_shards_sampled(df: DataFrame) -> DataFrame:
     """The ORACLE-REPLAYABLE sketch-sharding twin of
-    :func:`quality_shards_approx`, scoring ``quality_score(text)`` into
+    :func:`quality_shards_approx` (8 shards), scoring ``quality_score(text)`` into
     ``quality`` and keyed by ``doc_id``: shard cuts come from EXACT ORDER
     STATISTICS of a deterministic md5-hash sample instead of a
     Greenwald-Khanna sketch. Every step is a closed-form function of
@@ -163,7 +163,7 @@ def quality_shards_sampled(df: DataFrame, n_shards: int = 8) -> DataFrame:
     ranked = global_rank(
         sample, [F.desc("quality"), F.asc("_sid")], rank_col="rk", total_col="m"
     )
-    # cut_j = quality at rank ceil(j*m/n_shards) = (j*m + n-1) DIV n
+    # cut_j = quality at rank ceil(j*m/8) = (j*m + 7) DIV 8
     cuts = (
         ranked
         .groupBy()
@@ -171,48 +171,47 @@ def quality_shards_sampled(df: DataFrame, n_shards: int = 8) -> DataFrame:
             *[
                 F.max(
                     F.when(
-                        F.expr(f"rk = ({j} * m + {n_shards - 1}) DIV {n_shards}"),
+                        F.expr(f"rk = ({j} * m + 7) DIV 8"),
                         F.col("quality"),
                     )
                 ).alias(f"c{j}")
-                for j in range(1, n_shards)
+                for j in range(1, 8)
             ]
         )
     )
     out = scored.crossJoin(F.broadcast(cuts))
     expr = None
-    for shard in range(1, n_shards):
+    for shard in range(1, 8):
         cond = F.col("quality") >= F.col(f"c{shard}")
         expr = F.when(cond, shard) if expr is None else expr.when(cond, shard)
-    return out.withColumn(
-        "shard", expr.otherwise(F.lit(n_shards))
-    ).drop(*[f"c{j}" for j in range(1, n_shards)])
+    return out.withColumn("shard", expr.otherwise(F.lit(8))).drop(
+        *[f"c{j}" for j in range(1, 8)]
+    )
 
 
-def pack_sequences(df: DataFrame, budget: int = 2048, n_groups: int = 64) -> DataFrame:
+def pack_sequences(df: DataFrame) -> DataFrame:
     """Assign each ``doc_id`` a training-sequence slot, counting the
-    whitespace tokens of ``text``: ``pack_group`` (which parallel
-    packing stream), ``seq_id`` (which ~``budget``-token sequence within
-    the stream), ``seq_offset`` (the document's token offset inside that
+    whitespace tokens of ``text``: ``pack_group`` (which of 8 parallel
+    packing streams), ``seq_id`` (which ~512-token sequence within the
+    stream), ``seq_offset`` (the document's token offset inside that
     sequence).
 
     Semantics are token-offset packing — concatenate the group's docs in
-    id order and cut every ``budget`` tokens; a doc belongs to the
+    id order and cut every 512 tokens; a doc belongs to the
     sequence where its first token falls (trainers truncate/carry the
     tail across the cut). This is deterministic and windows-expressible,
     unlike strict greedy first-fit, whose running remainder needs
     sequential state.
 
-    Scale shape: docs are hash-split into ``n_groups`` independent
-    streams, so packing is one shuffle by group and each window sorts
-    only |docs|/n_groups rows — raise n_groups to bound per-partition
-    sort size (at 100 TB, ~10k groups keeps windows in memory). The
+    Scale shape: docs are hash-split into 8 independent streams, so
+    packing is one shuffle by group and each window sorts only |docs|/8
+    rows (at 100 TB, ~10k groups would keep windows in memory). The
     group hash reuses the engine-portable md5 unit interval, so the
     DuckDB oracle reproduces the exact assignment."""
     from ..functions.text import whitespace_token_count
 
     grouped = df.withColumn(
-        "pack_group", F.floor(hash_unit(F.col("doc_id"), "pack") * n_groups).cast("int")
+        "pack_group", F.floor(hash_unit(F.col("doc_id"), "pack") * 8).cast("int")
     ).withColumn("n_tokens", whitespace_token_count(F.col("text")).cast("bigint"))
     w = (
         Window.partitionBy("pack_group")
@@ -220,8 +219,8 @@ def pack_sequences(df: DataFrame, budget: int = 2048, n_groups: int = 64) -> Dat
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     cum_before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    return grouped.withColumn("seq_id", F.floor(cum_before / F.lit(budget))).withColumn(
-        "seq_offset", (cum_before % F.lit(budget)).cast("bigint")
+    return grouped.withColumn("seq_id", F.floor(cum_before / F.lit(512))).withColumn(
+        "seq_offset", (cum_before % F.lit(512)).cast("bigint")
     )
 
 
@@ -258,24 +257,20 @@ def mixture(sources: dict[str, tuple[DataFrame, float]]) -> DataFrame:
     return out
 
 
-def chunk_documents(
-    docs: DataFrame, chunk_size: int = 128, stride: int = 96
-) -> DataFrame:
+def chunk_documents(docs: DataFrame) -> DataFrame:
     """Fixed-stride token chunking with overlap — the standard
-    long-document → training-example splitter (stride < chunk_size
-    keeps ``chunk_size - stride`` tokens of context between chunks).
+    long-document → training-example splitter: 128-token chunks every
+    96 tokens keep 32 tokens of context between chunks.
 
     Whitespace-tokenizes in-row, computes every chunk start as an array
     expression, and ``posexplode``s starts to (doc, chunk) rows — a
     narrow 1→N map with no shuffle and no Python; chunk text is
     ``array_join`` of a token slice. A doc with at least one token
-    yields ceil(n/stride) chunks capped to starts < n; empty docs yield
-    none. The trailing chunk may be shorter than ``chunk_size``."""
-    if not (0 < stride <= chunk_size):
-        raise ValueError("need 0 < stride <= chunk_size")
+    yields ceil(n/96) chunks capped to starts < n; empty docs yield
+    none. The trailing chunk may be shorter than 128 tokens."""
     tokens = F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != "")
     n = F.size(F.col("__tk"))
-    starts = F.when(n >= 1, F.sequence(F.lit(0), n - 1, F.lit(stride))).otherwise(
+    starts = F.when(n >= 1, F.sequence(F.lit(0), n - 1, F.lit(96))).otherwise(
         F.array().cast("array<int>")
     )
     return (
@@ -284,10 +279,10 @@ def chunk_documents(
         .select(
             F.col("doc_id"),
             F.col("chunk_idx").cast("int").alias("chunk_idx"),
-            F.least(F.size("__tk") - F.col("s"), F.lit(chunk_size))
+            F.least(F.size("__tk") - F.col("s"), F.lit(128))
             .cast("int")
             .alias("n_tokens"),
-            F.array_join(F.slice("__tk", F.col("s") + 1, chunk_size), " ").alias("chunk"),
+            F.array_join(F.slice("__tk", F.col("s") + 1, 128), " ").alias("chunk"),
         )
     )
 
@@ -871,11 +866,11 @@ def grouped_hash_rank(
     )
 
 
-def stratified_kfold(df: DataFrame, k: int = 5) -> DataFrame:
-    """Stratified k-fold assignment: within every stratum, rows take a
+def stratified_kfold(df: DataFrame) -> DataFrame:
+    """Stratified 5-fold assignment: within every stratum, rows take a
     deterministic hash-lottery order and deal round-robin into folds
-    0..k-1 — every fold gets within-1 the same count PER STRATUM (the
-    exactness property a plain ``hash % k`` cannot give on small
+    0..4 — every fold gets within-1 the same count PER STRATUM (the
+    exactness property a plain ``hash % 5`` cannot give on small
     strata), and the assignment is engine- and partitioning-stable.
     Built on :func:`grouped_hash_rank`, so no stratum ever funnels
     through a single sort task. Returns (id, group, fold)."""
@@ -883,14 +878,14 @@ def stratified_kfold(df: DataFrame, k: int = 5) -> DataFrame:
     return ranked.select(
         "doc_id",
         "lang",
-        ((F.col("grank") - 1) % k).cast("int").alias("fold"),
+        ((F.col("grank") - 1) % 5).cast("int").alias("fold"),
     )
 
 
-def padding_efficiency(docs: DataFrame, bucket: int = 16, batch: int = 8) -> DataFrame:
+def padding_efficiency(docs: DataFrame) -> DataFrame:
     """Length-bucketed batching audit: round each doc's token count up
-    to the next multiple of ``bucket`` (the padded sequence length),
-    form fixed-size batches of ``batch`` docs per bucket, and report
+    to the next multiple of 16 (the padded sequence length), form
+    fixed-size batches of 8 docs per bucket, and report
     how much of the padded token grid is real data — the padding-waste
     table that decides between naive batching and sequence packing
     (:func:`pack_sequences` is the packing alternative; this is its
@@ -899,18 +894,18 @@ def padding_efficiency(docs: DataFrame, bucket: int = 16, batch: int = 8) -> Dat
     Row-local arithmetic (token count via the shared
     :func:`~avro_sql_spark.functions.text.word_tokens` tokenizer, then
     integer ceil-division) fused into the scan; ONE groupBy on the
-    bucketed length whose result is bounded by max_len/bucket rows.
+    bucketed length whose result is bounded by max_len/16 rows.
     fill_ratio is a single division of exact integers."""
     from avro_sql_spark.functions import text as T
 
     n = F.size(T.word_tokens(F.col("text")))
     d = docs.select(n.alias("_n")).filter(F.col("_n") >= 1)
-    blen = (F.floor((F.col("_n") + bucket - 1) / bucket) * bucket).cast("bigint")
+    blen = (F.floor((F.col("_n") + 16 - 1) / 16) * 16).cast("bigint")
     g = d.groupBy(blen.alias("bucket_len")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("_n").alias("n_tokens"),
     )
-    slots = F.floor((F.col("n_docs") + batch - 1) / batch) * batch
+    slots = F.floor((F.col("n_docs") + 8 - 1) / 8) * 8
     return g.select(
         "bucket_len",
         "n_docs",
@@ -922,10 +917,8 @@ def padding_efficiency(docs: DataFrame, bucket: int = 16, batch: int = 8) -> Dat
     ).orderBy("bucket_len")
 
 
-def quantile_normalize_report(
-    scored: DataFrame, score_col: str, group_col: str = "source"
-) -> DataFrame:
-    """Per-group quantile normalization (CDF matching — the
+def quantile_normalize_report(scored: DataFrame, score_col: str) -> DataFrame:
+    """Per-``source`` quantile normalization (CDF matching — the
     batch-effect correction genomics calls quantile normalization and
     retrieval calls score calibration): a doc at within-group rank r of
     n_g maps to the GLOBAL order statistic at rank ceil(r*N/n_g), so
@@ -948,14 +941,14 @@ def quantile_normalize_report(
     itself an expensive subtree (the unigram-LM fluency entry) each
     consumer would otherwise re-derive it wherever exchange reuse
     misses."""
-    scored = scored.select(group_col, "doc_id", score_col).localCheckpoint(
+    scored = scored.select("source", "doc_id", score_col).localCheckpoint(
         eager=False
     )
-    wg = Window.partitionBy(group_col).orderBy(score_col, "doc_id")
-    r = scored.select(group_col, "doc_id", score_col).withColumn(
+    wg = Window.partitionBy("source").orderBy(score_col, "doc_id")
+    r = scored.select("source", "doc_id", score_col).withColumn(
         "r", F.row_number().over(wg)
     )
-    ng = scored.groupBy(group_col).agg(F.count(F.lit(1)).alias("n_g"))
+    ng = scored.groupBy("source").agg(F.count(F.lit(1)).alias("n_g"))
     tot = scored.agg(F.count(F.lit(1)).alias("n_all"))
     g = global_rank(
         scored.select(
@@ -965,7 +958,7 @@ def quantile_normalize_report(
         rank_col="grk",
     ).select("grk", "gs")
     mapped = (
-        r.join(F.broadcast(ng), group_col)
+        r.join(F.broadcast(ng), "source")
         .crossJoin(F.broadcast(tot))
         .withColumn("k", F.expr("CAST((r * n_all + n_g - 1) DIV n_g AS BIGINT)"))
         .withColumn(
@@ -974,7 +967,7 @@ def quantile_normalize_report(
         .join(g, F.col("k") == F.col("grk"))
     )
     return (
-        mapped.groupBy(group_col, "decile")
+        mapped.groupBy("source", "decile")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.min(score_col).alias("orig_lo"),
@@ -982,7 +975,7 @@ def quantile_normalize_report(
             F.min("gs").alias("norm_lo"),
             F.max("gs").alias("norm_hi"),
         )
-        .orderBy(group_col, "decile")
+        .orderBy("source", "decile")
     )
 
 

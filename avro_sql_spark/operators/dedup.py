@@ -435,39 +435,30 @@ def simhash(docs: DataFrame) -> DataFrame:
     return votes.select(F.col("doc_id"), F.when(guard.isNull(), sim).alias("simhash"))
 
 
-def simhash_candidate_pairs(
-    docs: DataFrame, blocks: int = 4, max_hamming: int = 3
-) -> DataFrame:
+def simhash_candidate_pairs(docs: DataFrame) -> DataFrame:
     """Hamming-banded SimHash near-dup pairs: split the 64-bit fingerprint
-    into ``blocks`` equal bit-blocks, equi-join on (block_idx, block_bits),
-    then exact-verify with a popcount distance filter.
+    into 4 equal 16-bit blocks, equi-join on (block_idx, block_bits),
+    then exact-verify with a popcount distance filter (Hamming distance
+    <= 3).
 
-    Pigeonhole guarantee: two fingerprints within Hamming distance
-    ``blocks - 1`` agree on at least one whole block, so with the default
-    ``blocks = max_hamming + 1`` recall is exact — every qualifying pair
-    collides in some band. Same scale shape as
+    Pigeonhole guarantee: two fingerprints within Hamming distance 3
+    agree on at least one of the 4 whole blocks, so recall is exact —
+    every qualifying pair collides in some band. Same scale shape as
     ``minhash_candidate_pairs``: the band self-join shuffles skinny
     (id, block_idx, block_bits) rows, only same-bucket docs ever meet,
     and fingerprints re-attach per-doc AFTER pair dedup.
     """
-    if blocks < max_hamming + 1:
-        raise ValueError(
-            f"blocks={blocks} cannot guarantee recall at max_hamming={max_hamming}; "
-            f"need blocks >= max_hamming + 1"
-        )
     # cached: consumed by the band explode and both re-attach joins;
     # caller owns cleanup (spark.catalog.clearCache between pipelines)
     sigs = simhash(docs).cache()
-    width = 64 // blocks
-    mask = (1 << width) - 1
     banded = sigs.select(
         F.col("doc_id"),
         F.posexplode(
             F.array(
                 *[
                     # arithmetic shift is fine: the AND clears sign-fill bits
-                    F.shiftright("simhash", b * width).bitwiseAND(F.lit(mask)).cast("long")
-                    for b in range(blocks)
+                    F.shiftright("simhash", b * 16).bitwiseAND(F.lit(0xFFFF)).cast("long")
+                    for b in range(4)
                 ]
             )
         ).alias("block_idx", "block_bits"),
@@ -494,7 +485,7 @@ def simhash_candidate_pairs(
             "id_b",
             F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("int").alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
     )
 
 
@@ -565,10 +556,11 @@ def embedding_near_duplicates(
     ).filter(F.col("cos") >= threshold)
 
 
-def near_dup_clusters(docs: DataFrame, est_threshold: float = 0.5) -> DataFrame:
-    """Near-duplicate CLUSTERS: MinHash-LSH candidate pairs -> connected
-    components by iterative min-label propagation -> (id, cluster_id)
-    where cluster_id is the smallest doc id in the component.
+def near_dup_clusters(docs: DataFrame) -> DataFrame:
+    """Near-duplicate CLUSTERS: MinHash-LSH candidate pairs (estimated
+    Jaccard >= 0.5) -> connected components by iterative min-label
+    propagation -> (id, cluster_id) where cluster_id is the smallest doc
+    id in the component.
 
     This is the genuinely iterative operator: each round is one join +
     one min-aggregate, the classic Spark connected-components loop (see
@@ -577,7 +569,7 @@ def near_dup_clusters(docs: DataFrame, est_threshold: float = 0.5) -> DataFrame:
     twin replays the estimated edges and resolves the components with a
     WITH RECURSIVE reachability CTE."""
     pairs = minhash_candidate_pairs(docs).filter(
-        F.col("est_jaccard") >= est_threshold
+        F.col("est_jaccard") >= 0.5
     )
     nodes = docs.select(F.col("doc_id").alias("id"))
     return connected_components(nodes, pairs)
@@ -778,14 +770,14 @@ def incremental_dedup(new_docs: DataFrame, seen_docs: DataFrame) -> DataFrame:
     return new_docs.join(keep, "doc_id", "left_semi")
 
 
-def duplicated_span_stats(docs: DataFrame, n: int = 8) -> DataFrame:
+def duplicated_span_stats(docs: DataFrame) -> DataFrame:
     """Exact duplicated-SPAN report (substring-level dedup signal, the
     metric behind suffix-array training-data dedup a la Lee et al. 2022
     "Deduplicating Training Data Makes Language Models Better"): for
-    each document, the fraction of its n-word spans that also occur in
+    each document, the fraction of its 8-word spans that also occur in
     at least one OTHER document, aggregated per ``source`` — average
     duplicated-span fraction, and how many docs are "heavy" (>= half
-    of their spans duplicated). Docs shorter than ``n``
+    of their spans duplicated). Docs shorter than 8
     words contribute no spans and are excluded.
 
     Scale shape: spans are hashed to 64-bit keys before any shuffle
@@ -795,13 +787,13 @@ def duplicated_span_stats(docs: DataFrame, n: int = 8) -> DataFrame:
     build side). The exploded span frame feeds two consumers
     (frequency count + re-attach) so it is cached per the module cache
     contract. Hot spans (stop-phrase n-grams) skew the re-attach join;
-    AQE skew-join handles it, and raising ``n`` shrinks hot-span mass.
+    AQE skew-join handles it (longer spans would shrink hot-span mass).
     """
     from ..functions.text import word_ngrams_of
 
     # spread + tokenize-once: without the repartition the explode runs
     # on the compacted scan's 1-3 partitions, and word_shingles would
-    # re-split the text n times per span (no CSE inside lambda) — the
+    # re-split the text 8 times per span (no CSE inside lambda) — the
     # two together measured ~20x on this operator at sf0.1
     toks = _spread(docs, "doc_id").select(
         F.col("doc_id").alias("did"),
@@ -812,7 +804,7 @@ def duplicated_span_stats(docs: DataFrame, n: int = 8) -> DataFrame:
         toks.select(
             "did",
             "grp",
-            F.explode(F.array_distinct(word_ngrams_of(F.col("w"), n))).alias("span"),
+            F.explode(F.array_distinct(word_ngrams_of(F.col("w"), 8))).alias("span"),
         )
         .withColumn("h", F.xxhash64("span"))
         .drop("span")
@@ -843,18 +835,19 @@ def duplicated_span_stats(docs: DataFrame, n: int = 8) -> DataFrame:
     )
 
 
-def jaccard_pairs_prefix(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """Exact n-gram Jaccard pairs via PREFIX FILTERING (the AllPairs /
-    PPJoin candidate bound — Bayardo et al. WWW'07, Xiao et al. WWW'08):
-    identical output to :func:`ngram_jaccard_pairs` at the same
-    threshold, but the self-join runs only on each document's PREFIX —
+def jaccard_pairs_prefix(docs: DataFrame) -> DataFrame:
+    """Exact n-gram Jaccard pairs at Jaccard >= t = 0.5 via PREFIX
+    FILTERING (the AllPairs / PPJoin candidate bound — Bayardo et al.
+    WWW'07, Xiao et al. WWW'08): identical output to
+    :func:`ngram_jaccard_pairs` at the same threshold, but the self-join
+    runs only on each document's PREFIX —
     its ``|d| - ceil(t*|d|) + 1`` globally-rarest shingles — instead of
     all of them. Two sets with Jaccard >= t must share at least one
     prefix shingle under any consistent global order, so no pair is
     missed; exact verification then computes true Jaccard on the
     candidates.
 
-    Scale shape vs the full self-join: at t=0.5 the join input drops to
+    Scale shape vs the full self-join: at t = 0.5 the join input drops to
     ~half the shingle rows, and — because the global order is
     document-frequency ASCENDING — prefixes preferentially hold RARE
     shingles, so the hot-shingle N^2 bucket blowup that forces
@@ -885,7 +878,7 @@ def jaccard_pairs_prefix(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     )
     arr = F.transform(F.col("rs"), lambda r: r["s"])
     n = F.size("rs")
-    plen = (n - F.ceil(F.lit(threshold) * n) + 1).cast("int")
+    plen = (n - F.ceil(F.lit(0.5) * n) + 1).cast("int")
     d = ranked.select(
         F.col("id"), arr.alias("toks"), F.slice(arr, F.lit(1), plen).alias("prefix")
     ).cache()
@@ -902,16 +895,14 @@ def jaccard_pairs_prefix(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     inter = F.size(F.array_intersect("ta", "tb"))
     jac = inter.cast("double") / (F.size("ta") + F.size("tb") - inter)
     return withsets.select("id_a", "id_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
+        F.col("jaccard") >= 0.5
     )
 
 
-def incremental_near_dup(
-    new_docs: DataFrame, seen_docs: DataFrame, threshold: float = 0.5
-) -> DataFrame:
+def incremental_near_dup(new_docs: DataFrame, seen_docs: DataFrame) -> DataFrame:
     """Continuous-ingest NEAR-duplicate gate (the MinHash companion to
     :func:`incremental_dedup`'s exact-fingerprint pass): drop new docs
-    whose estimated Jaccard vs ANY historical doc reaches ``threshold``.
+    whose estimated Jaccard vs ANY historical doc reaches 0.5.
     In production the historical side is the stored signature table —
     signatures are computed once at ingest and reused every batch, so
     the recurring cost is banding + one band equi-join, never
@@ -955,16 +946,16 @@ def incremental_near_dup(
             ).alias("est_jaccard"),
         )
     )
-    dupes = est.filter(F.col("est_jaccard") >= threshold).select(
+    dupes = est.filter(F.col("est_jaccard") >= 0.5).select(
         F.col("new_id").alias("doc_id")
     ).distinct()
     return new_docs.join(dupes, "doc_id", "left_anti")
 
 
-def remove_duplicated_spans(docs: DataFrame, n: int = 8) -> DataFrame:
+def remove_duplicated_spans(docs: DataFrame) -> DataFrame:
     """Duplicated-span REMOVAL (the transform behind the
     :func:`duplicated_span_stats` report, a la Lee et al. 2022): every
-    n-word span occurring in >= 2 documents keeps its copies only in the
+    8-word span occurring in >= 2 documents keeps its copies only in the
     OWNER document (the smallest doc id containing the span — a
     deterministic, coordination-free election: just ``min(doc_id)`` in
     the span-frequency aggregate); in all other documents the tokens
@@ -995,7 +986,7 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 8) -> DataFrame:
         .withColumn("_nw", F.size("_ws"))
     )
     starts = F.when(
-        F.col("_nw") >= n, F.sequence(F.lit(1), F.col("_nw") - (n - 1))
+        F.col("_nw") >= 8, F.sequence(F.lit(1), F.col("_nw") - 7)
     ).otherwise(F.array().cast("array<int>"))
     inst = (
         toks.select(
@@ -1007,7 +998,7 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 8) -> DataFrame:
             "did",
             "pos",
             F.xxhash64(
-                F.concat_ws(" ", F.slice(F.col("_ws"), F.col("pos"), n))
+                F.concat_ws(" ", F.slice(F.col("_ws"), F.col("pos"), 8))
             ).alias("h"),
         )
         .cache()
@@ -1026,7 +1017,7 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 8) -> DataFrame:
         F.sequence(F.lit(1), F.col("_nw")),
         lambda i: ~F.exists(
             F.coalesce(F.col("rm"), F.array().cast("array<int>")),
-            lambda s: (s <= i) & (i < s + n),
+            lambda s: (s <= i) & (i < s + 8),
         ),
     )
     return (
@@ -1043,7 +1034,7 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 8) -> DataFrame:
     )
 
 
-def source_overlap(docs: DataFrame, prefix_len: "int | None" = None) -> DataFrame:
+def source_overlap(docs: DataFrame) -> DataFrame:
     """Cross-source contamination matrix: for every pair of sources, the
     number of duplicate documents (normalized-text fingerprints) they
     share and the Jaccard overlap of their fingerprint sets. The triage
@@ -1052,12 +1043,11 @@ def source_overlap(docs: DataFrame, prefix_len: "int | None" = None) -> DataFram
     is also the cheap screen for benchmark contamination between an
     eval source and a train source.
 
-    ``prefix_len`` fingerprints only the first N normalized characters
-    (head dedup): re-crawls and syndicated boilerplate share document
-    heads long after trailing chrome/timestamps diverge, so the head
+    Fingerprints cover only the first 80 normalized characters (head
+    dedup): re-crawls and syndicated boilerplate share document heads
+    long after trailing chrome/timestamps diverge, so the head
     fingerprint catches overlap the full-text hash misses — at the cost
     of some false sharing between legitimately same-opening documents.
-    ``None`` hashes the full text (exact-duplicate overlap only).
 
     Scale shape: NO fingerprint self-join. Distinct (fp, source) pairs
     come from one shuffle; the per-fingerprint source-set is a
@@ -1067,10 +1057,9 @@ def source_overlap(docs: DataFrame, prefix_len: "int | None" = None) -> DataFram
     ``copurchase_pairs``. Per-source totals are a second aggregate on
     the same skinny frame and broadcast back (sources² rows)."""
     normalized = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    if prefix_len is not None:
-        normalized = F.substring(normalized, 1, prefix_len)
+    head = F.substring(normalized, 1, 80)
     fps = docs.select(
-        F.md5(normalized.cast("binary")).alias("fp"),
+        F.md5(head.cast("binary")).alias("fp"),
         F.col("source").alias("source"),
     ).distinct()
     totals = fps.groupBy("source").agg(F.count(F.lit(1)).alias("n_fps"))

@@ -81,41 +81,27 @@ def _closed_wedges(und: DataFrame, deg: DataFrame) -> DataFrame:
     return wedges.join(closing, ["v1", "v2"]).select("u", "v1", "v2")
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 3,
-    damping: float = 0.85,
-    redistribute_dangling: bool = True,
-    round_to: int | None = None,
-) -> DataFrame:
-    """Fixed-iteration PageRank over a directed (src, dst) edge list.
-    Returns one row per node: (node, pr).
+def pagerank(edges: DataFrame) -> DataFrame:
+    """Fixed-iteration PageRank over a symmetric (src, dst) edge list:
+    3 iterations, damping 0.85, ranks rounded to 8 decimals. Returns one
+    row per node: (node, pr).
 
-    Semantics (classic Brin-Page with dangling redistribution):
-    ``pr' = (1-d)/N + d * (sum_in(pr_src / outdeg_src) + dangling/N)``
-    where ``dangling`` is the total rank mass sitting on nodes with no
-    out-edges. For a symmetric edge list (undirected graphs) dangling
-    is always 0.
+    Semantics (classic Brin-Page): ``pr' = (1-d)/N + d * sum_in(pr_src
+    / outdeg_src)``. Precondition: every node has an out-edge, which a
+    symmetric edge list guarantees (:func:`copurchase_edges` emits both
+    directions), so no rank mass sits on dangling nodes and none needs
+    redistributing.
 
     Scale shape per iteration: ONE edges-to-ranks equi-join on src (both
     sides hash-partition on the node key — at scale both sides are too
     big to broadcast, so the node-keyed shuffle join IS the intended
     plan) feeding ONE groupBy(dst) sum with map-side partials; state is
-    node-linear, traffic edge-linear. The node count and the dangling
-    mass are scalar aggregates (broadcast back, rows bounded by 1).
-    Skewed in-degree (a celebrity node) is absorbed by the partial
-    aggregation, not a single reducer. With dangling redistribution
-    each iteration's ranks have TWO consumers (contribs and dangling),
-    so they are EAGERLY localCheckpoint-ed: without lineage truncation
-    the plan doubles per iteration and an N-iteration run compiles an
-    exponentially deep DAG — the classic iterative-DataFrame failure.
-    ``redistribute_dangling=False`` skips the per-iteration anti-join +
-    scalar aggregate when the caller guarantees every node has an
-    out-edge (symmetric edge lists); each round then has a SINGLE
-    consumer of the previous ranks, the plan deepens linearly, and every
-    checkpoint is deferred to the final action — one job instead of one
-    per round."""
-    eager = redistribute_dangling
+    node-linear, traffic edge-linear. The node count is a scalar driver
+    value. Skewed in-degree (a celebrity node) is absorbed by the
+    partial aggregation, not a single reducer. Each round has a SINGLE
+    consumer of the previous ranks, so the plan deepens linearly and
+    every round checkpoint is deferred to the final action — one job
+    instead of one per round."""
     # lazy: the eager nodes checkpoint right below consumes e, so the
     # edge frame materializes once inside that job instead of paying
     # its own synchronous construction job first
@@ -133,8 +119,7 @@ def pagerank(
         raise AvroSqlError("pagerank: empty edge list")
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od")).localCheckpoint()
     ranks = nodes.select("node", F.lit(1.0 / n).alias("pr"))
-    rounds = RoundPins()
-    for i in range(iterations):
+    for i in range(3):
         contribs = (
             e.join(ranks.withColumnRenamed("node", "src"), "src")
             .join(outdeg, "src")
@@ -142,36 +127,16 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("contrib"))
         )
-        if redistribute_dangling:
-            # rank mass on dangling nodes (no out-edges) is redistributed
-            # uniformly; 1-row aggregate, broadcast via crossJoin
-            dangling = (
-                ranks.join(
-                    outdeg.select(F.col("src").alias("node")), "node", "left_anti"
-                ).agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm"))
-            )
-            dangling_term = F.col("dm") / n
-        else:
-            dangling = None
-            dangling_term = F.lit(0.0)
-        ranks = nodes.join(contribs.withColumnRenamed("dst", "node"), "node", "left")
-        if dangling is not None:
-            ranks = ranks.crossJoin(F.broadcast(dangling))
-        ranks = ranks.select(
+        ranks = nodes.join(contribs.withColumnRenamed("dst", "node"), "node", "left").select(
             "node",
             (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping)
-                * (F.coalesce(F.col("contrib"), F.lit(0.0)) + dangling_term)
+                F.lit((1.0 - 0.85) / n)
+                + F.lit(0.85) * F.coalesce(F.col("contrib"), F.lit(0.0))
             ).alias("pr"),
         )
-        if (i + 1) < iterations:
-            ranks = rounds.pin(ranks, eager=eager)
-            if eager:
-                rounds.materialized()
-    if round_to is not None:
-        ranks = ranks.select("node", F.round("pr", round_to).alias("pr"))
-    return ranks
+        if i < 2:
+            ranks = ranks.localCheckpoint(eager=False)
+    return ranks.select("node", F.round("pr", 8).alias("pr"))
 
 
 def connected_components_star(edges: DataFrame) -> DataFrame:
@@ -277,7 +242,7 @@ def connected_components_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
+def label_propagation(edges: DataFrame) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) over an
     undirected edge list, made DETERMINISTIC: labels start as node ids,
     each round every node adopts the most frequent label among its
@@ -288,8 +253,8 @@ def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
     tie-break variant trades a little convergence speed for exact
     reproducibility — the same determinism contract as pagerank.)
 
-    Returns (id, community) — community = the node's label after
-    ``rounds`` rounds.
+    Returns (id, community) — community = the node's label after 2
+    rounds.
 
     Scale shape per round: ONE node-keyed equi-join (attach neighbor
     labels) + ONE (node, label) count aggregate with map-side partials
@@ -299,7 +264,7 @@ def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
     # lazy: materialized by the first round's job; the sym union's two
     # branches then read the same frozen blocks
     e = _undirected(edges).localCheckpoint(eager=False)
-    return _propagate(e, rounds).orderBy("id")
+    return _propagate(e, 2).orderBy("id")
 
 
 def _propagate(e: DataFrame, rounds: int) -> DataFrame:
@@ -336,17 +301,15 @@ def _propagate(e: DataFrame, rounds: int) -> DataFrame:
     return labels
 
 
-def copurchase_edges(
-    lineitem: DataFrame, min_count: int = 2
-) -> DataFrame:
+def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     """Symmetric co-purchase edge list: (src part, dst part) for every
-    unordered part pair co-occurring in >= min_count orders, emitted in
-    both directions.
+    unordered part pair co-occurring in >= 2 orders, emitted in both
+    directions.
 
     Scale shape: NO self-join — the same in-row basket-pair generation
     as relational.copurchase_pairs (baskets schema-bounded at <= 7
     items, C(7,2) <= 21 pairs per order), so the pair frame is linear
-    in the fact table; min_count prunes the long tail before the
+    in the fact table; the 2-order floor prunes the long tail before the
     symmetric union doubles it."""
     from ._scan import spread_groupby_scan
 
@@ -377,7 +340,7 @@ def copurchase_edges(
         .select(F.explode(pair_structs).alias("p"))
         .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
         .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= min_count)
+        .filter(F.col("c") >= 2)
         .select("pa", "pb")
     )
     # symmetrize in ONE pass: each undirected pair row emits both
@@ -442,12 +405,12 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     )
 
 
-def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 4) -> DataFrame:
-    """Fixed-round k-core peeling over an undirected edge list: each
-    round drops every vertex whose degree in the SURVIVING subgraph is
-    below ``k``, then discards edges touching dropped vertices. After
-    enough rounds the survivors are exactly the classic k-core; a FIXED
-    ``rounds`` keeps the result a closed-form function of the input
+def kcore_peel(edges: DataFrame) -> DataFrame:
+    """Fixed-round 3-core peeling over an undirected edge list: each
+    of 4 rounds drops every vertex whose degree in the SURVIVING
+    subgraph is below 3, then discards edges touching dropped vertices.
+    After enough rounds the survivors are exactly the classic k-core; a
+    FIXED round count keeps the result a closed-form function of the input
     (the same determinism contract as pagerank/label_propagation), so a
     SQL oracle unrolls the identical rounds. Returns one row per round:
     (round, n_nodes, n_edges) of the surviving subgraph — the
@@ -458,23 +421,14 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 4) -> DataFrame:
     TWO node-keyed semi-joins pruning the edge list; the edge frame
     localCheckpoints per round (lazily) so lineage stays flat while ALL
     per-round stats fold into one terminal job — the former
-    distinct().count() + count() driver round-trips per round (3 jobs x
-    rounds) are now one union of per-round single-row aggregates over
+    distinct().count() + count() driver round-trips per round (3 jobs a
+    round) are now one union of per-round single-row aggregates over
     the checkpointed edge frames (n_edges = endpoint rows div 2,
     n_nodes = distinct endpoints — same integers, zero extra passes)."""
-    if rounds < 1:
-        # the unioned-aggregates accumulator below starts from None; a
-        # zero-round call would return None.orderBy (AttributeError)
-        # where the old createDataFrame path returned an empty frame
-        # with the documented schema — keep that contract
-        spark = edges.sparkSession
-        return spark.createDataFrame(
-            [], "round int, n_nodes bigint, n_edges bigint"
-        )
     e = _undirected(edges).localCheckpoint(eager=False)
     out = None
-    for r in range(1, rounds + 1):
-        alive = _degrees(e).filter(F.col("d") >= k).select(F.col("n").alias("id"))
+    for r in range(1, 5):
+        alive = _degrees(e).filter(F.col("d") >= 3).select(F.col("n").alias("id"))
         e = (
             e.join(alive.withColumnRenamed("id", "a"), "a", "left_semi")
             .join(alive.withColumnRenamed("id", "b"), "b", "left_semi")
@@ -541,20 +495,18 @@ def bfs_distances(
     return dist.orderBy("node")
 
 
-def personalized_pagerank(
-    edges: DataFrame, seeds: DataFrame, iterations: int = 3, round_to: int | None = None
-) -> DataFrame:
+def personalized_pagerank(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     """Personalized PageRank (Haveliwala 2002): identical iteration to
-    :func:`pagerank` except the restart mass returns to the SEED set
-    instead of the uniform vector — ``pr' = (1-d)*tele + d*sum_in``
-    with ``tele = 1/|S|`` on seeds and 0 elsewhere. The relevance-from-
-    here scoring a recommender runs around an anchor item, and the same
-    edge-linear shuffle shape per round.
+    :func:`pagerank` (3 iterations, damping 0.85, ranks rounded to 8
+    decimals) except the restart mass returns to the SEED set instead
+    of the uniform vector — ``pr' = (1-d)*tele + d*sum_in`` with ``tele
+    = 1/|S|`` on seeds and 0 elsewhere. The relevance-from-here scoring
+    a recommender runs around an anchor item, and the same edge-linear
+    shuffle shape per round.
 
     Expects a symmetric (undirected) edge list, where dangling mass is
     structurally zero — the precondition :func:`copurchase_edges`
-    guarantees; directed graphs need the dangling redistribution the
-    uniform variant implements."""
+    guarantees."""
     # lazy: the seed count below (and then the first round's join)
     # materializes the pinned edge frame once; eager pins here were
     # three synchronous construction jobs serializing with each other
@@ -585,7 +537,7 @@ def personalized_pagerank(
         .localCheckpoint(eager=False)
     )
     ranks = tele.select("node", F.col("t").alias("pr"))
-    for i in range(iterations):
+    for i in range(3):
         contribs = (
             e.join(ranks.withColumnRenamed("node", "src"), "src")
             .join(outdeg, "src")
@@ -603,25 +555,22 @@ def personalized_pagerank(
                 ).alias("pr"),
             )
         )
-        if (i + 1) < iterations:
+        if i < 2:
             # lazy: each round's ranks has a SINGLE consumer (next
             # round's contribs join — tele/e/outdeg are checkpointed
             # separately), so the plan deepens linearly and all round
             # materializations fold into the one final action instead
-            # of one construction job per round (pagerank's
-            # no-dangling-pass rationale)
+            # of one construction job per round (as in pagerank)
             ranks = ranks.localCheckpoint(eager=False)
-    if round_to is not None:
-        ranks = ranks.select("node", F.round("pr", round_to).alias("pr"))
-    return ranks
+    return ranks.select("node", F.round("pr", 8).alias("pr"))
 
 
-def scc_labels(edges: DataFrame, rounds: int = 4) -> DataFrame:
+def scc_labels(edges: DataFrame) -> DataFrame:
     """Strongly connected components of a DIRECTED graph by transitive
     closure with path doubling: ``reach`` starts as the edge list and
     each round joins it with itself (paths of length ≤ 2^round), so
-    ``rounds`` = ceil(log2(longest shortest path)) suffices — 4 rounds
-    cover paths of length 16. Two nodes share a component iff each
+    ceil(log2(longest shortest path)) rounds suffice — the 3 rounds run
+    here cover paths of length 8. Two nodes share a component iff each
     reaches the other; the component label is the smallest mutually
     reachable node (every node trivially reaches itself).
 
@@ -637,13 +586,13 @@ def scc_labels(edges: DataFrame, rounds: int = 4) -> DataFrame:
     makes the result a closed-form function of the edge list that a
     bounded recursive CTE replays exactly.
 
-    A too-small ``rounds`` fails LOUDLY: each round's row count is
+    A too-long path fails LOUDLY: each round's row count is
     compared to the previous (checkpointed frames make the count free),
     the loop exits early on convergence, and if the final round still
     added rows one extra verification hop runs — growth there raises
     ``ValueError`` instead of silently under-merging components (the
     failure mode of any fixed-round closure on a graph whose
-    reachability diameter exceeds 2**rounds)."""
+    reachability diameter exceeds 2**3)."""
 
     def _hop(r: DataFrame) -> DataFrame:
         # the closure frame is bounded by the label-graph's reachable
@@ -667,7 +616,7 @@ def scc_labels(edges: DataFrame, rounds: int = 4) -> DataFrame:
     prev = reach.count()
     pins.materialized()
     converged = False
-    for _ in range(rounds):
+    for _ in range(3):
         reach = pins.pin(reach.unionByName(_hop(reach)).distinct())
         cnt = reach.count()
         pins.materialized()
@@ -680,9 +629,8 @@ def scc_labels(edges: DataFrame, rounds: int = 4) -> DataFrame:
         if grown != prev:
             raise ValueError(
                 f"scc_labels: transitive closure still growing after "
-                f"{rounds} doubling rounds ({prev} -> {grown} pairs); "
-                f"the graph's reachability diameter exceeds 2**{rounds} "
-                f"— raise `rounds`"
+                f"3 doubling rounds ({prev} -> {grown} pairs); "
+                f"the graph's reachability diameter exceeds 2**3"
             )
     nodes = (
         reach.select(F.col("s").alias("node"))
@@ -758,10 +706,10 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     )
 
 
-def markov_stationary(transitions: DataFrame, iterations: int = 8) -> DataFrame:
+def markov_stationary(transitions: DataFrame) -> DataFrame:
     """Stationary distribution of a Markov chain (``transitions`` is a
     (src, dst, p) frame) by fixed-iteration
-    power method: π ← πP from uniform, ``iterations`` times — where the
+    power method: π ← πP from uniform, 8 times — where the
     event-type process spends its time in steady state, the number that
     turns a transition matrix (event_transitions) into capacity shares.
 
@@ -778,8 +726,8 @@ def markov_stationary(transitions: DataFrame, iterations: int = 8) -> DataFrame:
     state would RECEIVE mass one round and silently drop it the next
     (its row has no outgoing match), so the returned π would neither
     sum to 1 nor be stationary. Chains with absorbing states need a
-    dangling-mass redistribution like personalized_pagerank's, which is
-    a different operator contract."""
+    dangling-mass redistribution, which is a different operator
+    contract."""
     # checkpoint the (bounded) transition frame LAZILY: 8 unrolled
     # rounds each consume it, and an uncheckpointed upstream (lag
     # window + two aggregates) would re-derive per round — a
@@ -810,12 +758,12 @@ def markov_stationary(transitions: DataFrame, iterations: int = 8) -> DataFrame:
             f"markov_stationary: {dangling} state(s) appear only as dst "
             "(no outgoing transitions) — their probability mass would "
             "silently drain each iteration; add self-loops or use a "
-            "dangling-mass redistribution (personalized_pagerank)"
+            "dangling-mass redistribution"
         )
     nodes = t.select(F.col("s").alias("node")).distinct()
     n = int(probe["n_all"])
     pi = nodes.select("node", F.lit(1.0 / n).alias("pi"))
-    for _ in range(iterations):
+    for _ in range(8):
         pi = (
             t.join(F.broadcast(pi.withColumnRenamed("node", "s")), "s")
             .select("d", (F.col("pi") * F.col("p")).alias("m"))

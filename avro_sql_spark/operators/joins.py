@@ -143,10 +143,9 @@ def blocked_fuzzy_pairs(
     id_col: str,
     name_col: str,
     block_cols: list[str],
-    max_distance: int = 2,
 ) -> DataFrame:
     """Entity-resolution-style fuzzy matching: pairs of rows whose
-    ``name_col`` values are within ``max_distance`` Levenshtein edits,
+    ``name_col`` values are within 2 Levenshtein edits,
     restricted to rows sharing ``block_cols`` (the classic blocking-key
     trick). Returns (id_a, id_b, name_a, name_b, distance), id_a < id_b.
 
@@ -172,6 +171,6 @@ def blocked_fuzzy_pairs(
         a.join(b, keys)
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("distance", F.levenshtein("name_a", "name_b"))
-        .filter(F.col("distance") <= max_distance)
+        .filter(F.col("distance") <= 2)
         .select("id_a", "id_b", "name_a", "name_b", "distance")
     )

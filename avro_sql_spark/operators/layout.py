@@ -21,25 +21,25 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def interleave_bits(cols: list[Column], bits: int = 16) -> Column:
+def interleave_bits(cols: list[Column]) -> Column:
     """Morton/Z-value of ``cols``: bit b of column i lands at output bit
     ``b * len(cols) + i``. Inputs must already be non-negative ints
-    < 2**bits. Total output bits = bits * len(cols) (keep <= 63)."""
+    < 2**16. Total output bits = 16 * len(cols) (keep <= 63)."""
     n = len(cols)
-    if bits * n > 63:
-        raise ValueError(f"bits * n_cols = {bits * n} exceeds a signed long")
+    if 16 * n > 63:
+        raise ValueError(f"16 bits * n_cols = {16 * n} exceeds a signed long")
     z = F.lit(0).cast("long")
     for i, c in enumerate(cols):
         c = c.cast("long")
-        for b in range(bits):
+        for b in range(16):
             z = z.bitwiseOR(
                 F.shiftleft(F.shiftright(c, b).bitwiseAND(F.lit(1)), b * n + i)
             )
     return z
 
 
-def _scaled_coords(df: DataFrame, cols: list[str], bits: int) -> list[Column]:
-    """Each column min/max scaled into [0, 2**bits) using one tiny stats
+def _scaled_coords(df: DataFrame, cols: list[str]) -> list[Column]:
+    """Each column min/max scaled into [0, 2**16) using one tiny stats
     aggregate (collected once at plan time — a driver action on a scalar
     row, the same footprint as ``approxQuantile``). NULL in any column
     maps to curve position 0 (sorts first). Shared by the Morton and
@@ -48,7 +48,7 @@ def _scaled_coords(df: DataFrame, cols: list[str], bits: int) -> list[Column]:
         *[F.min(F.col(c).cast("double")).alias(f"mn_{c}") for c in cols],
         *[F.max(F.col(c).cast("double")).alias(f"mx_{c}") for c in cols],
     ).collect()[0]
-    top = (1 << bits) - 1
+    top = (1 << 16) - 1
     scaled = []
     for c in cols:
         mn, mx = stats_row[f"mn_{c}"], stats_row[f"mx_{c}"]
@@ -62,20 +62,19 @@ def _scaled_coords(df: DataFrame, cols: list[str], bits: int) -> list[Column]:
     return scaled
 
 
-def zvalue(df: DataFrame, cols: list[str], bits: int = 16) -> Column:
+def zvalue(df: DataFrame, cols: list[str]) -> Column:
     """Z-value Column for ``df`` rows over ``cols``: min/max scaled
-    coordinates (see :func:`_scaled_coords`), bit-interleaved."""
-    return interleave_bits(_scaled_coords(df, cols, bits), bits)
+    16-bit coordinates (see :func:`_scaled_coords`), bit-interleaved."""
+    return interleave_bits(_scaled_coords(df, cols))
 
 
 def hilbert_index(
     df: DataFrame,
     cols: list[str],
-    bits: int = 16,
     out_col: str = "hval",
     coords: "list[Column] | None" = None,
 ) -> DataFrame:
-    """2-D Hilbert-curve index over two columns — the locality curve
+    """2-D Hilbert-curve index (16 levels) over two columns — the locality curve
     lakehouses reach for past Z-order (Delta/Iceberg both ship it):
     unlike Morton, the Hilbert curve never jumps, so consecutive index
     ranges are tighter rectangles and file min/max boxes prune better
@@ -83,12 +82,12 @@ def hilbert_index(
 
     The standard xy2d recurrence (one rotate-and-reflect per curve
     level) is rendered as ONE parsed SQL ``aggregate`` fold over
-    ``sequence(bits-1, 0, -1)`` with a named_struct (x, y, d)
+    ``sequence(15, 0, -1)`` with a named_struct (x, y, d)
     accumulator — the lambda is a LOOP at runtime, so the expression
-    stays constant-size (no 2^bits subtree copying), and the whole
-    index is a single projection instead of ``bits`` chained selects.
+    stays constant-size (no 2^16 subtree copying), and the whole
+    index is a single projection instead of 16 chained selects.
     The chained-projection form cost ~1.3 s of driver py4j round-trips
-    per call at bits=16 AND made every downstream checkpoint/action
+    per call AND made every downstream checkpoint/action
     re-analyze a 16-select-deep plan (measured r9: skipping audit
     construction 3.6 s, 1.3 s of it this chain, ~1.4 s planning the
     chain-backed checkpoints — the _centroid_dists F.expr lesson
@@ -102,7 +101,7 @@ def hilbert_index(
     # ``coords``: callers that also build a Morton key (skipping_report)
     # pass the _scaled_coords result in, so the stats aggregate behind
     # it runs ONCE per audit instead of once per curve
-    sx, sy = coords if coords is not None else _scaled_coords(df, cols, bits)
+    sx, sy = coords if coords is not None else _scaled_coords(df, cols)
     keep = list(df.columns)
     # per-level recurrence, inlined with s = 1 << lvl:
     #   rx = (x & s) > 0 ; ry = (y & s) > 0
@@ -112,7 +111,7 @@ def hilbert_index(
     rx = f"((acc.x & {s_}) > 0)"
     ry = f"((acc.y & {s_}) > 0)"
     fold = (
-        f"aggregate(sequence({bits - 1}, 0, -1), "
+        "aggregate(sequence(15, 0, -1), "
         "named_struct('x', _hx, 'y', _hy, 'd', cast(0 as bigint)), "
         "(acc, lvl) -> named_struct("
         f"'x', (case when {ry} then acc.x when {rx} then ({s_} - 1 - acc.y) else acc.y end), "
@@ -131,11 +130,9 @@ def skipping_report(
     df: DataFrame,
     cols: list[str],
     tiebreak_col: str,
-    n_files: int = 32,
-    grid: int = 4,
     layouts: "tuple[str, ...]" = ("linear", "zorder"),
 ) -> DataFrame:
-    """File-skipping effectiveness audit: how many of ``n_files`` would
+    """File-skipping effectiveness audit: how many of 32 files would
     a min/max-pruning reader actually scan under each candidate layout,
     for a grid of 2-D range predicates? Returns one row per layout:
     (layout, n_files, n_predicates, avg_files_scanned, pct_pruned).
@@ -147,7 +144,7 @@ def skipping_report(
     :func:`hilbert_index` — tighter file boxes than Morton at the same
     file count). This is the read-side proof of what the write-side
     layout buys: the number the lakehouse OPTIMIZE decision should be
-    made on, not a hunch. Predicates are a ``grid`` x ``grid`` lattice of
+    made on, not a hunch. Predicates are a 4 x 4 lattice of
     equal-width rectangles spanning each column's global min/max; a
     file must be scanned iff its [min, max] box intersects the
     predicate rectangle — exactly the parquet footer-stats test.
@@ -162,7 +159,7 @@ def skipping_report(
     projection through ONE task per layout, the classic 100x scale
     killer). Everything
     downstream of the per-file min/max aggregate is arithmetic on
-    n_files x grid^2 rows — driver-negligible, oracle-replayable (the
+    32 x 4^2 rows — driver-negligible, oracle-replayable (the
     z-value is the same integer interleave as :func:`zvalue`, and the
     NTILE remainder rule is replayed bit-exactly)."""
     from ._scan import spread_scan
@@ -173,7 +170,7 @@ def skipping_report(
     c0, c1 = cols
     # ONE scale-stats aggregate feeds both curves (zvalue and
     # hilbert_index each used to run their own)
-    coords = _scaled_coords(df, cols, 16)
+    coords = _scaled_coords(df, cols)
     # audit columns only — project BEFORE any exchange (guide §2.3)
     need = df.select(c0, c1, tiebreak_col)
     if "hilbert" in layouts:
@@ -249,7 +246,7 @@ def skipping_report(
     )
     n_rows = F.expr(f"_N div {len(layouts)}")  # exact: _N = n_layouts * n
     r = F.col("_r") - F.col("li").cast("long") * n_rows
-    k = F.lit(n_files).cast("long")
+    k = F.lit(32).cast("long")
     q = F.floor(n_rows / k).cast("long")
     rem = (n_rows % k).cast("long")
     big = (q + F.lit(1)) * rem
@@ -267,7 +264,7 @@ def skipping_report(
         .agg(F.min("x").alias("mnx"), F.max("x").alias("mxx"),
              F.min("y").alias("mny"), F.max("y").alias("mxy"))
     )
-    # global bounds (1 row) -> grid x grid predicate rectangles, built
+    # global bounds (1 row) -> 4 x 4 predicate rectangles, built
     # in-row from a sequence — no driver collect
     bounds = df.agg(
         F.min(F.col(c0).cast("double")).alias("lx"),
@@ -275,15 +272,15 @@ def skipping_report(
         F.min(F.col(c1).cast("double")).alias("ly"),
         F.max(F.col(c1).cast("double")).alias("hy"),
     )
-    g = F.lit(float(grid))
+    g = F.lit(4.0)
     preds = (
         bounds.select(
-            F.explode(F.sequence(F.lit(0), F.lit(grid - 1))).alias("i"),
+            F.explode(F.sequence(F.lit(0), F.lit(3))).alias("i"),
             "lx", "hx", "ly", "hy",
         )
         .select(
             "i",
-            F.explode(F.sequence(F.lit(0), F.lit(grid - 1))).alias("j"),
+            F.explode(F.sequence(F.lit(0), F.lit(3))).alias("j"),
             "lx", "hx", "ly", "hy",
         )
         .select(
@@ -305,19 +302,15 @@ def skipping_report(
         .groupBy("layout")
         .agg(F.sum("hit").alias("scanned"))
     )
-    n_preds = grid * grid
     return (
         hits.select(
             "layout",
-            F.lit(n_files).alias("n_files"),
-            F.lit(n_preds).alias("n_predicates"),
-            F.round(F.col("scanned") / F.lit(float(n_preds)), 6).alias(
-                "avg_files_scanned"
+            F.lit(32).alias("n_files"),
+            F.lit(16).alias("n_predicates"),
+            F.round(F.col("scanned") / F.lit(16.0), 6).alias("avg_files_scanned"),
+            F.round(F.lit(1.0) - F.col("scanned") / F.lit(512.0), 6).alias(
+                "pct_pruned"
             ),
-            F.round(
-                F.lit(1.0) - F.col("scanned") / F.lit(float(n_preds * n_files)),
-                6,
-            ).alias("pct_pruned"),
         )
         .orderBy("layout")
     )
@@ -391,10 +384,10 @@ def compaction_plan(
 
 
 def key_locality_report(
-    df: DataFrame, key_col: str, other_col: str, tiebreak_col: str, n_files: int = 32
+    df: DataFrame, key_col: str, other_col: str, tiebreak_col: str
 ) -> DataFrame:
     """Point-lookup locality audit: for each candidate layout, how many
-    of ``n_files`` does a single-key lookup actually touch? Reports per
+    of 32 files does a single-key lookup actually touch? Reports per
     layout: files containing an average key (exact containment — the
     file count a perfectly-sharp index pays), the worst key, and the
     expected extra files a per-file BLOOM filter fails to skip (the
@@ -410,7 +403,7 @@ def key_locality_report(
     containment counts are exact integers; per-key means accumulate in
     DECIMAL; the bloom fpr uses exp/ln doubles on exact integer counts
     (the kaplan_meier-proven cross-engine pair). The metadata frames
-    are n_files- and n_keys-bounded."""
+    are file- and key-count-bounded."""
     from .curation import global_rank
 
     z = zvalue(df, [key_col, other_col]).alias("__z")
@@ -465,7 +458,7 @@ def key_locality_report(
     )
     n_rows = F.expr(f"_N div {len(layouts)}")  # exact: _N = n_layouts * n
     r = F.col("_r") - F.col("li").cast("long") * n_rows
-    kf = F.lit(n_files).cast("long")
+    kf = F.lit(32).cast("long")
     q = F.floor(n_rows / kf).cast("long")
     rem = (n_rows % kf).cast("long")
     big = (q + F.lit(1)) * rem
@@ -513,7 +506,7 @@ def key_locality_report(
         containment.join(F.broadcast(blooms), "layout")
         .select(
             "layout",
-            F.lit(n_files).alias("n_files"),
+            F.lit(32).alias("n_files"),
             "n_keys",
             F.round(F.col("s_cf").cast("double") / F.col("n_keys"), 6).alias(
                 "avg_files_per_key"
@@ -534,9 +527,8 @@ def file_overlap_depth(
     ingest_col: str,
     sort_col: str,
     tiebreak_col: str,
-    n_files: int = 32,
 ) -> DataFrame:
-    """LSM-style overlap audit: when files are cut by INGEST order, how
+    """LSM-style overlap audit: when 32 files are cut by INGEST order, how
     many files' [min, max] ranges over ``sort_col`` stack on top of each
     other (the number of files a merging reader — or a compactor — must
     open at once)? Reports per layout (``ingest`` vs ``sorted``):
@@ -544,11 +536,11 @@ def file_overlap_depth(
     is the after-compaction baseline (depth ~1); the gap between the
     two rows is the compaction payoff, measured before running it.
 
-    Sweep-line on the 2*n_files boundary METADATA rows: +1 at each
+    Sweep-line on the 2*32 boundary METADATA rows: +1 at each
     file's min, -1 after its max, running sum ordered by (value, close
     flag, file id) — closes sort before opens at ties via the flag, so
     touching-but-not-overlapping boxes don't count as stacked. The
-    running sum's unpartitioned window is n_files-bounded (frozen in
+    running sum's unpartitioned window is file-count-bounded (frozen in
     the plan budget's global_windows metric); file assignment is
     :func:`curation.exact_ntile`."""
     from .curation import exact_ntile
@@ -562,7 +554,7 @@ def file_overlap_depth(
     parts = []
     for name, ks in keys.items():
         boxes = (
-            exact_ntile(base, [F.col(c) for c in ks], n_files, out_col="f")
+            exact_ntile(base, [F.col(c) for c in ks], 32, out_col="f")
             .groupBy("f")
             .agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
         )
@@ -598,7 +590,7 @@ def file_overlap_depth(
             )
             .select(
                 F.lit(name).alias("layout"),
-                F.lit(n_files).alias("n_files"),
+                F.lit(32).alias("n_files"),
                 F.col("max_overlap_depth").cast("int").alias("max_overlap_depth"),
                 F.round(F.col("sd").cast("double") / F.col("nf"), 6).alias(
                     "avg_depth_at_open"
@@ -616,10 +608,8 @@ def cow_rewrite_plan(
     key_col: str,
     other_col: str,
     tiebreak_col: str,
-    n_files: int = 32,
-    update_rate: float = 0.01,
 ) -> DataFrame:
-    """Copy-on-write amplification audit: given a deterministic ~1%
+    """Copy-on-write amplification audit over 32 files: given a deterministic ~1%
     update batch keyed by ``key_col``, how many files must a COW table
     rewrite, and how many untouched rows ride along? Reports per
     layout (clustered ``by_key`` vs ``by_other``): updated rows, files
@@ -631,7 +621,7 @@ def cow_rewrite_plan(
     (:func:`curation.hash_unit` — reproducible across engines); file
     assignment is :func:`curation.exact_ntile`; rewritten rows = the
     exact row counts of touched files (integer sums). Everything after
-    assignment runs on n_files-bounded metadata."""
+    assignment runs on file-count-bounded metadata."""
     from .curation import exact_ntile, hash_unit
 
     base = df.select(
@@ -644,9 +634,9 @@ def cow_rewrite_plan(
     parts = []
     for name, ks in keys.items():
         assigned = exact_ntile(
-            base, [F.col(c) for c in ks], n_files, out_col="f"
+            base, [F.col(c) for c in ks], 32, out_col="f"
         ).withColumn(
-            "is_upd", (hash_unit(F.col("k"), "cow") < F.lit(update_rate)).cast("long")
+            "is_upd", (hash_unit(F.col("k"), "cow") < F.lit(0.01)).cast("long")
         )
         per_file = assigned.groupBy("f").agg(
             F.count(F.lit(1)).alias("rows"), F.sum(upd).alias("n_upd")
@@ -662,7 +652,7 @@ def cow_rewrite_plan(
                 ),
             ).select(
                 F.lit(name).alias("layout"),
-                F.lit(n_files).alias("n_files"),
+                F.lit(32).alias("n_files"),
                 F.col("rows_updated").cast("bigint").alias("rows_updated"),
                 F.col("files_touched").cast("bigint").alias("files_touched"),
                 F.col("rows_rewritten").cast("bigint").alias("rows_rewritten"),

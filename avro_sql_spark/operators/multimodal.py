@@ -183,11 +183,9 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def sample_frames(
-    media_df: DataFrame, frame_bytes: int = 64, every_n: int = 4
-) -> DataFrame:
+def sample_frames(media_df: DataFrame) -> DataFrame:
     """Frame sampling for video payloads: treat the payload as a run of
-    fixed-size frames and emit every ``every_n``-th one as its own row —
+    64-byte frames and emit every 4th one as its own row —
     the 1→N explode shape every video pipeline needs. Real demuxing
     (ffmpeg) is STUBBED by the fixed-stride split; the distributed
     mechanics (Arrow batches, row multiplication inside the worker, tall
@@ -197,11 +195,11 @@ def sample_frames(
         for pdf in batches:
             ids, idxs, frames = [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n_frames = len(payload) // frame_bytes
-                for fi in range(0, n_frames, every_n):
+                n_frames = len(payload) // 64
+                for fi in range(0, n_frames, 4):
                     ids.append(doc_id)
                     idxs.append(fi)
-                    frames.append(payload[fi * frame_bytes : (fi + 1) * frame_bytes])
+                    frames.append(payload[fi * 64 : (fi + 1) * 64])
             yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame": frames})
 
     n = media_df.sparkSession.sparkContext.defaultParallelism

@@ -117,40 +117,20 @@ def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
     key_cols: "list[str]",
-    compare_cols: "list[str] | None" = None,
 ) -> DataFrame:
     """Table-diff between two snapshots: one row per changed key with
     change_type in (added, removed, changed) — the verification step
     after any backfill/migration, and the change feed when no CDC log
-    exists.
+    exists. Rows compare on their ``value`` column.
 
     Scale shape: ONE full-outer join on the key (both sides hash-
-    partition on it) comparing a single xxhash64 over the compare
-    columns — unchanged rows (the overwhelming majority in a real diff)
+    partition on it) comparing a single xxhash64 over the compared
+    column — unchanged rows (the overwhelming majority in a real diff)
     are filtered out before anything else happens, so the output is
     proportional to the churn, not the table. Row values are NOT
     carried through the join, only keys + hashes; join the result back
     to either snapshot to materialize changed payloads."""
-    if compare_cols is None:
-        old_val = {c for c in old.columns if c not in key_cols}
-        new_val = {c for c in new.columns if c not in key_cols}
-        if old_val != new_val:
-            from ..errors import AvroSqlError
-
-            raise AvroSqlError(
-                "snapshot_diff: snapshots disagree on non-key columns "
-                f"(old-only {sorted(old_val - new_val)}, new-only "
-                f"{sorted(new_val - old_val)}); pass compare_cols explicitly"
-            )
-        compare_cols = [c for c in new.columns if c not in key_cols]
-    if not compare_cols:
-        from ..errors import AvroSqlError
-
-        raise AvroSqlError(
-            "snapshot_diff: no compare columns (key-only tables have "
-            "nothing to diff beyond membership; pass key_cols only?)"
-        )
-    h = F.xxhash64(*[F.coalesce(F.col(c).cast("string"), F.lit("\0")) for c in compare_cols])
+    h = F.xxhash64(F.coalesce(F.col("value").cast("string"), F.lit("\0")))
     o = old.select(*key_cols, h.alias("h_old"))
     n = new.select(*key_cols, h.alias("h_new"))
     joined = o.join(n, key_cols, "full_outer")
@@ -170,11 +150,10 @@ def merge_upsert(
     target: DataFrame,
     updates: DataFrame,
     key_cols: "list[str]",
-    delete_col: "str | None" = None,
 ) -> DataFrame:
     """Batch MERGE (the Delta/Iceberg ``MERGE INTO`` shape on raw
     frames): rows in ``updates`` replace matching ``target`` rows by
-    key, unmatched update rows insert, and rows where ``delete_col`` is
+    key, unmatched update rows insert, and rows whose ``is_delete`` is
     true are tombstones — the matching target row disappears and the
     tombstone itself is not emitted.
 
@@ -187,44 +166,36 @@ def merge_upsert(
     the caller owns the rename (same contract as compact_table)."""
     upd_keys = updates.select(*key_cols)
     survivors = target.join(upd_keys, key_cols, "left_anti")
-    incoming = updates
-    if delete_col is not None:
-        incoming = incoming.filter(
-            ~F.coalesce(F.col(delete_col), F.lit(False))
-        ).drop(delete_col)
+    incoming = updates.filter(~F.coalesce(F.col("is_delete"), F.lit(False))).drop(
+        "is_delete"
+    )
     return survivors.unionByName(incoming.select(*target.columns))
 
 
-def value_histogram(
-    df: DataFrame,
-    val_col: str,
-    group_col: "str | None" = None,
-    bins: int = 10,
-) -> DataFrame:
-    """Equi-width histogram of a numeric column (optionally per group):
+def value_histogram(df: DataFrame, val_col: str) -> DataFrame:
+    """Equi-width 10-bin histogram of a numeric column per ``event_type``:
     bin edges from the global min/max, counts per bin — the profiling
     primitive behind every distribution dashboard.
 
     Scale shape: pass 1 is a tiny global min/max aggregate (broadcast
     back as a 1-row cross join); pass 2 buckets each row with pure
     arithmetic and partial-aggregates the counts. Two scans total, no
-    sort, no per-row Python; output bounded by groups x bins. (The max
+    sort, no per-row Python; output bounded by groups x 10. (The max
     value lands in the last bin — least() clamps the edge case. NULL
     values are excluded, like any aggregate would; a constant column
     collapses into bin 0 rather than dividing by a zero width.)"""
     v = F.col(val_col).cast("double")
     bounds = df.agg(F.min(v).alias("lo"), F.max(v).alias("hi"))
-    gcols = [group_col] if group_col else []
     width = F.col("hi") - F.col("lo")
     binned = (
         df.filter(F.col(val_col).isNotNull())
         .crossJoin(F.broadcast(bounds))
         .select(
-            *gcols,
+            "event_type",
             F.least(
-                F.lit(bins - 1),
+                F.lit(9),
                 F.when(
-                    width > 0, F.floor((v - F.col("lo")) * bins / width).cast("int")
+                    width > 0, F.floor((v - F.col("lo")) * 10 / width).cast("int")
                 ).otherwise(F.lit(0)),
             ).alias("bin"),
             "lo",
@@ -232,13 +203,13 @@ def value_histogram(
         )
     )
     return (
-        binned.groupBy(*gcols, "bin")
+        binned.groupBy("event_type", "bin")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.first("lo") + F.col("bin") * (F.first("hi") - F.first("lo")) / bins, 6).alias("bin_lo"),
-            F.round(F.first("lo") + (F.col("bin") + 1) * (F.first("hi") - F.first("lo")) / bins, 6).alias("bin_hi"),
+            F.round(F.first("lo") + F.col("bin") * (F.first("hi") - F.first("lo")) / 10, 6).alias("bin_lo"),
+            F.round(F.first("lo") + (F.col("bin") + 1) * (F.first("hi") - F.first("lo")) / 10, 6).alias("bin_hi"),
         )
-        .orderBy(*gcols, "bin")
+        .orderBy("event_type", "bin")
     )
 
 
@@ -367,10 +338,9 @@ def ks_drift(
     a: DataFrame,
     b: DataFrame,
     value_col: str,
-    group_col: str | None = None,
 ) -> DataFrame:
     """Exact two-sample Kolmogorov-Smirnov statistic between two frames'
-    ``value_col`` distributions (optionally per ``group_col``) — the
+    ``value_col`` distributions per ``lang`` — the
     distribution-shift audit a training pipeline runs between splits,
     snapshots, or crawl generations before trusting a refreshed corpus.
 
@@ -385,45 +355,43 @@ def ks_drift(
     window runs over the value DOMAIN, not the rows — for doc lengths
     that is thousands of points regardless of corpus size (continuous
     metrics should be bucketed first, e.g. via value_histogram's bins).
-    The window partitions by ``group_col``, so nothing sorts globally
-    unless there is genuinely one group."""
+    The window partitions by ``lang``, so nothing sorts globally
+    unless there is genuinely one language."""
     from pyspark.sql.window import Window
-
-    gcols = [group_col] if group_col else []
 
     def counts(df: DataFrame, side: str) -> DataFrame:
         return (
-            df.select(*gcols, F.col(value_col).alias("v"))
-            .groupBy(*gcols, "v")
+            df.select("lang", F.col(value_col).alias("v"))
+            .groupBy("lang", "v")
             .agg(F.count(F.lit(1)).alias(f"c_{side}"))
         )
 
     ca, cb = counts(a, "a"), counts(b, "b")
-    merged = ca.join(cb, [*gcols, "v"], "full_outer").na.fill(
+    merged = ca.join(cb, ["lang", "v"], "full_outer").na.fill(
         {"c_a": 0, "c_b": 0}
     )
-    part = Window.partitionBy(*gcols) if gcols else Window.partitionBy(F.lit(1))
+    part = Window.partitionBy("lang")
     w = part.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     # group totals as a second frame over the SAME partitioning (not a
     # join back onto a recomputed count merge — that would duplicate
     # the full-outer branch and its shuffle)
     wall = part.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     cum = merged.select(
-        *gcols,
+        "lang",
         F.sum("c_a").over(w).alias("cum_a"),
         F.sum("c_b").over(w).alias("cum_b"),
         F.sum("c_a").over(wall).alias("n_a"),
         F.sum("c_b").over(wall).alias("n_b"),
     )
     out = (
-        cum.groupBy(*gcols, "n_a", "n_b")
+        cum.groupBy("lang", "n_a", "n_b")
         .agg(
             F.max(
                 F.abs(F.col("cum_a") * F.col("n_b") - F.col("cum_b") * F.col("n_a"))
             ).alias("ks_num")
         )
         .select(
-            *gcols,
+            "lang",
             "n_a",
             "n_b",
             "ks_num",
@@ -437,11 +405,11 @@ def ks_drift(
             ).alias("ks_stat"),
         )
     )
-    return out.orderBy(*gcols) if gcols else out
+    return out.orderBy("lang")
 
 
-def twopass_median(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """EXACT global median (lower median: the ceil(n/2)-th smallest
+def twopass_median(df: DataFrame) -> DataFrame:
+    """EXACT global median of ``value`` (lower median: the ceil(n/2)-th smallest
     value) with NO global sort — the two-pass bucketing scheme every
     warehouse uses for exact percentiles at scale:
 
@@ -459,14 +427,14 @@ def twopass_median(df: DataFrame, value_col: str = "value") -> DataFrame:
     <= 1024 + bucket-m rows total. The answer is a data value, so
     the oracle can state it as the k-th order statistic directly."""
     stats = df.agg(
-        F.count(value_col).alias("n"),
-        F.min(value_col).alias("mn"),
-        F.max(value_col).alias("mx"),
+        F.count("value").alias("n"),
+        F.min("value").alias("mn"),
+        F.max("value").alias("mx"),
     )
     # bucket index: same expression shape both engines (bit-exact given
     # identical doubles); max value clamped into the last bucket
     b = (
-        df.select(F.col(value_col).alias("v"))
+        df.select(F.col("value").alias("v"))
         .crossJoin(F.broadcast(stats))
         .select(
             "v",
@@ -984,10 +952,9 @@ def equi_depth_histogram(
     df: DataFrame,
     value_col: str,
     tiebreak_col: str,
-    buckets: int = 16,
 ) -> DataFrame:
-    """Equi-DEPTH histogram (the optimizer-statistics twin of the
-    equi-width ``value_histogram``): bucket b holds ranks
+    """Equi-DEPTH histogram with B = 16 buckets (the optimizer-statistics
+    twin of the equi-width ``value_histogram``): bucket b holds ranks
     ceil(n·(b−1)/B) < r ≤ ceil(n·b/B), so counts are within-1 equal by
     construction and the boundaries are exact ORDER STATISTICS — data
     values, never interpolation floats. The histogram selectivity
@@ -997,7 +964,7 @@ def equi_depth_histogram(
     :func:`~avro_sql_spark.operators.curation.global_rank` (total order
     via the tiebreak key — equal values may split across buckets, which
     is the equi-depth contract), so no single task sorts the table; the
-    per-bucket rollup is a bounded ``buckets``-row frame."""
+    per-bucket rollup is a bounded 16-row frame."""
     from .curation import global_rank
 
     src = df.filter(F.col(value_col).isNotNull()).select(
@@ -1007,7 +974,7 @@ def equi_depth_histogram(
     n = src.agg(F.count(F.lit(1)).alias("n"))
     b = ranked.crossJoin(F.broadcast(n)).select(
         "v",
-        F.expr(f"CAST((rk * {buckets} + n - 1) DIV n AS INT)").alias("bucket"),
+        F.expr("CAST((rk * 16 + n - 1) DIV n AS INT)").alias("bucket"),
     )
     return (
         b.groupBy("bucket")
@@ -1020,9 +987,9 @@ def equi_depth_histogram(
     )
 
 
-def disorder_audit(df: DataFrame, order_col: str = "event_id") -> DataFrame:
+def disorder_audit(df: DataFrame) -> DataFrame:
     """Out-of-orderness audit over an event stream: within each group,
-    walk events in ARRIVAL order (the ingestion-assigned ``order_col``)
+    walk events in ARRIVAL order (the ingestion-assigned ``arrival``)
     and flag rows whose event time is behind the running event-time
     maximum — the empirical basis for choosing a Structured Streaming
     watermark delay (max_lateness_s is exactly the delay that would
@@ -1034,7 +1001,7 @@ def disorder_audit(df: DataFrame, order_col: str = "event_id") -> DataFrame:
     every output cell is integer arithmetic."""
     w = (
         Window.partitionBy("event_type")
-        .orderBy(order_col)
+        .orderBy("arrival")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     marked = df.select(
@@ -1920,12 +1887,10 @@ def selectivity_estimate_audit(
     df: DataFrame,
     value_col: str,
     tiebreak_col: str,
-    buckets: int = 32,
-    grid: int = 16,
 ) -> DataFrame:
-    """Optimizer-statistics audit: for a lattice of ``grid`` range
-    predicates, the TRUE row count next to what an equi-WIDTH histogram
-    and an equi-DEPTH histogram estimate (fractional-overlap
+    """Optimizer-statistics audit: for a lattice of 10 range
+    predicates, the TRUE row count next to what a 32-bucket equi-WIDTH
+    histogram and a 32-bucket equi-DEPTH histogram estimate (fractional-overlap
     interpolation — the standard cardinality model), with per-predicate
     relative errors. The companion to the layout audits: skipping
     measures what FILE stats buy, this measures what COLUMN stats are
@@ -1936,8 +1901,8 @@ def selectivity_estimate_audit(
     equi-depth boundaries are EXACT order statistics (global_rank cut
     ranks — two-pass, no global sort) with exact per-bucket counts from
     consecutive rank differences; the true counts are ONE pass of
-    ``grid`` conditional sums (no row expansion); every estimate is
-    arithmetic on the (buckets + grid)-row metadata. Predicate bounds
+    10 conditional sums (no row expansion); every estimate is
+    arithmetic on the (32 + 10)-row metadata. Predicate bounds
     are the same double expressions on (lo, hi) everywhere, so the
     audit replays exactly."""
     from .curation import global_rank
@@ -1951,7 +1916,7 @@ def selectivity_estimate_audit(
     ).localCheckpoint(eager=False)  # 1 row, many consumers
 
     span = F.col("hi") - F.col("lo")
-    g = F.lit(float(grid))
+    g = F.lit(10.0)
 
     def plo(i):
         return F.col("lo") + span * i / g
@@ -1966,7 +1931,7 @@ def selectivity_estimate_audit(
                     & (F.col("v") < plo(F.lit(float(i + 1))))
                 ).cast("long")
             ).alias(f"t{i}")
-            for i in range(grid)
+            for i in range(10)
         ]
     )
     true_counts = true_row.select(
@@ -1976,7 +1941,7 @@ def selectivity_estimate_audit(
                     F.struct(
                         F.lit(i).alias("i"), F.col(f"t{i}").alias("true_n")
                     )
-                    for i in range(grid)
+                    for i in range(10)
                 ]
             )
         ).alias("s")
@@ -1987,9 +1952,9 @@ def selectivity_estimate_audit(
         F.floor(
             F.when(span > 0, (F.col("v") - F.col("lo")) / span)
             .otherwise(F.lit(0.0))
-            * buckets
+            * 32
         ).cast("int"),
-        F.lit(buckets - 1),
+        F.lit(31),
     )
     wb = (
         withst.select(b.alias("b"), "lo", "hi")
@@ -1999,9 +1964,9 @@ def selectivity_estimate_audit(
         .select(
             "c",
             (F.col("lo") + (F.col("hi") - F.col("lo")) * F.col("b")
-             / F.lit(float(buckets))).alias("blo"),
+             / F.lit(32.0)).alias("blo"),
             (F.col("lo") + (F.col("hi") - F.col("lo")) * (F.col("b") + 1)
-             / F.lit(float(buckets))).alias("bhi"),
+             / F.lit(32.0)).alias("bhi"),
         )
     )
 
@@ -2009,20 +1974,20 @@ def selectivity_estimate_audit(
     ranked = global_rank(src, [F.col("v"), F.col("tb")], rank_col="rk")
     spark = df.sparkSession
     cutr = (
-        spark.range(0, buckets + 1)
+        spark.range(0, 33)
         .select(F.col("id").alias("j"))
         .crossJoin(F.broadcast(st))
         .select(
             "j",
             F.greatest(
-                F.ceil(F.col("j") * F.col("n") / buckets).cast("long"),
+                F.ceil(F.col("j") * F.col("n") / 32).cast("long"),
                 F.lit(1),
             ).alias("rk"),
         )
         .distinct()
     )
     bounds = ranked.join(F.broadcast(cutr), "rk").select("j", "v")
-    wj = Window.orderBy("j")  # buckets+1 metadata rows
+    wj = Window.orderBy("j")  # 33 metadata rows
     # bucket j holds ranks (ceil((j-1)n/B), ceil(jn/B)] — the count is
     # pure integer arithmetic on n (no rank subtraction across the lag,
     # which would under-count bucket 1 by the rank-1 row)
@@ -2034,15 +1999,15 @@ def selectivity_estimate_audit(
         .select(
             "blo", "bhi",
             (
-                F.ceil(F.col("j") * F.col("n") / buckets)
-                - F.ceil((F.col("j") - 1) * F.col("n") / buckets)
+                F.ceil(F.col("j") * F.col("n") / 32)
+                - F.ceil((F.col("j") - 1) * F.col("n") / 32)
             ).cast("long").alias("c"),
         )
     )
 
     # --- predicates frame + interpolated estimates ---
     preds = st.select(
-        F.explode(F.sequence(F.lit(0), F.lit(grid - 1))).alias("i"),
+        F.explode(F.sequence(F.lit(0), F.lit(9))).alias("i"),
         "lo", "hi", "n",
     ).select(
         "i", "n",
@@ -2298,13 +2263,9 @@ def acf_hourly(events: DataFrame) -> DataFrame:
     ).orderBy("lag")
 
 
-def shuffle_skew_audit(
-    df: DataFrame,
-    key_col: str = "user_id",
-    num_buckets: int = 64,
-) -> DataFrame:
+def shuffle_skew_audit(df: DataFrame) -> DataFrame:
     """Pre-shuffle skew diagnostic: hash-partition the frame's join key
-    into ``num_buckets`` reducers (engine-portable md5 hash, the same
+    ``user_id`` into 64 reducers (engine-portable md5 hash, the same
     unit-interval device the samplers use) and report each bucket's row
     count, distinct-key count, and its load relative to the uniform
     ideal — the table you read BEFORE deciding whether a join needs
@@ -2317,11 +2278,11 @@ def shuffle_skew_audit(
     buckets-sized.
     """
     b = (
-        F.conv(F.substring(F.md5(F.col(key_col).cast("string").cast("binary")), 1, 12), 16, 10)
+        F.conv(F.substring(F.md5(F.col("user_id").cast("string").cast("binary")), 1, 12), 16, 10)
         .cast("long")
-        % num_buckets
+        % 64
     )
-    per_key = df.select(b.alias("bucket"), F.col(key_col).alias("k")).groupBy(
+    per_key = df.select(b.alias("bucket"), F.col("user_id").alias("k")).groupBy(
         "bucket", "k"
     ).agg(F.count(F.lit(1)).alias("kc"))
     per_bucket = per_key.groupBy("bucket").agg(
@@ -2338,7 +2299,7 @@ def shuffle_skew_audit(
             F.col("n_keys").cast("long").alias("n_keys"),
             F.col("max_key_rows").cast("long").alias("max_key_rows"),
             F.round(
-                (F.col("n_rows") * F.lit(num_buckets)).cast("double")
+                (F.col("n_rows") * F.lit(64)).cast("double")
                 / F.col("n").cast("double"),
                 6,
             ).alias("ratio_to_avg"),

@@ -2009,12 +2009,10 @@ def ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def near_duplicate_events(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 10
-) -> DataFrame:
+def near_duplicate_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Telemetry near-duplicate screen (the batch twin of streaming
     dropDuplicatesWithinWatermark): an event is a near-dup when the
-    PRECEDING event of the same (user, type) is within ``gap_minutes``.
+    PRECEDING event of the same (user, type) is within 10 minutes.
     Returns per event_type: total, near-dup, and kept counts.
 
     One lag window per (user, type) key — partitions are per-user
@@ -2030,10 +2028,9 @@ def near_duplicate_events(
         F.col("event_id"),
         F.col("user_id"),
     )
-    gap_us = gap_minutes * 60 * 1_000_000
     flagged = ev.withColumn(
         "is_dup",
-        (F.col("us") - F.lag("us").over(w) <= F.lit(gap_us)).cast("long"),
+        (F.col("us") - F.lag("us").over(w) <= F.lit(10 * 60 * 1_000_000)).cast("long"),
     )
     return (
         flagged.groupBy("event_type")

@@ -115,10 +115,8 @@ def hyperplane_signature(vec, planes: int = 16, seed: int = 0, dim: int = 64) ->
     return F.expr(" | ".join(terms))
 
 
-def lsh_bucketed_ann(
-    emb: DataFrame, queries: DataFrame, k: int = 10, planes: int = 8
-) -> DataFrame:
-    """Approximate top-k: exact cosine only among corpus vectors sharing
+def lsh_bucketed_ann(emb: DataFrame, queries: DataFrame, planes: int = 8) -> DataFrame:
+    """Approximate top-10: exact cosine only among corpus vectors sharing
     a hyperplane bucket with the query in AT LEAST ONE of 4
     independent hash tables. Single-table sign-LSH recall is the
     AND-probability (1 - θ/π)^planes — low for any realistic neighbor
@@ -174,7 +172,7 @@ def lsh_bucketed_ann(
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 10)
         .orderBy("query_id", "rank")
     )
 
@@ -246,11 +244,10 @@ def _probe_cells(vec, centroids: "list[list[float]]", n_probe: int):
 def ivf_topk(
     emb: DataFrame,
     queries: DataFrame,
-    k: int = 10,
     centroids: "list[list[float]] | None" = None,
 ) -> DataFrame:
-    """IVF (inverted-file) ANN: k-means coarse quantizer (16 cells) ->
-    assign each corpus vector to its nearest centroid cell -> a query
+    """IVF (inverted-file) ANN top-10: k-means coarse quantizer (16 cells)
+    -> assign each corpus vector to its nearest centroid cell -> a query
     scans only its 4 nearest cells.
 
     The 100 TB shape: centroids are tiny (16 x dim), trained on AT
@@ -295,7 +292,7 @@ def ivf_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 10)
         .orderBy("query_id", "rank")
     )
 
@@ -441,7 +438,7 @@ def _pq_model(emb: DataFrame):
     return _sub_dists_sql, _code_sql
 
 
-def pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+def pq_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """Product-quantization ANN (Jégou, Douze, Schmid, "Product
     Quantization for Nearest Neighbor Search", TPAMI 2011): split each
     d-dim vector into m = 4 subvectors, learn a 16-centroid codebook
@@ -461,7 +458,7 @@ def pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     Fully deterministic -> the DuckDB oracle replays the per-subspace
     Lloyd training, the argmin codes, and the ADC ranking exactly.
 
-    Returns (query_id, neighbor_id, adist, rank): top-``k`` neighbors
+    Returns (query_id, neighbor_id, adist, rank): top-10 neighbors
     per query by ADC distance (ties break to the lower neighbor id),
     ``adist`` rounded to 4.
     """
@@ -487,12 +484,12 @@ def pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 10)
         .orderBy("query_id", "rank")
     )
 
 
-def ivf_pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+def ivf_pq_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF+PQ ANN — the billion-vector FAISS composition (Jégou 2011
     §IV: IVFADC without the residual refinement): the IVF coarse
     quantizer (16 cells, trained on at most 100,000 vectors) restricts
@@ -511,7 +508,7 @@ def ivf_pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     with the PQ codebook CTEs and replays cells, probes, codes, and
     the left-assoc ADC fold exactly.
 
-    Returns (query_id, neighbor_id, adist, rank): top-``k`` per query
+    Returns (query_id, neighbor_id, adist, rank): top-10 per query
     by ADC distance within probed cells (ties to lower neighbor id)."""
     # the two quantizer trainings are INDEPENDENT sequential driver-job
     # chains over bounded slices of the same input; submitting them
@@ -555,7 +552,7 @@ def ivf_pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 10)
         .orderBy("query_id", "rank")
     )
 
@@ -690,8 +687,9 @@ def embedding_outliers(emb: DataFrame) -> DataFrame:
     )
 
 
-def ann_recall_report(emb: DataFrame, queries: DataFrame, planes: int = 8) -> DataFrame:
-    """Recall@10 of the approximate ANN paths against exact brute force —
+def ann_recall_report(emb: DataFrame, queries: DataFrame) -> DataFrame:
+    """Recall@10 of the approximate ANN paths (LSH at 4 planes a table,
+    and IVF) against exact brute force —
     one row per method with mean recall and worst-query recall. This is
     the acceptance gate before switching a 100 TB retrieval pipeline
     from exact to approximate: "fast" only counts if the recall target
@@ -728,7 +726,9 @@ def ann_recall_report(emb: DataFrame, queries: DataFrame, planes: int = 8) -> Da
         # truth materialization. Identical deterministic training —
         # ivf_topk just receives the result instead of re-running it.
         fut_cents = pool.submit(_coarse_centroids, emb)
-        lsh_cand = lsh_bucketed_ann(emb, queries, planes=planes).select(
+        # 4 planes: 16 buckets — at 8 planes the 256 buckets starve recall
+        # on small corpora, which is exactly what this report exists to catch
+        lsh_cand = lsh_bucketed_ann(emb, queries, planes=4).select(
             "query_id", "neighbor_id"
         )
         ivf_cand = ivf_topk(emb, queries, centroids=fut_cents.result()).select(
@@ -829,10 +829,10 @@ def recall_vs_truth(truth: DataFrame, cand: DataFrame, method: str) -> DataFrame
     ).select(F.lit(method).alias("method"), "mean_recall", "worst_recall")
 
 
-def gram_covariance(emb: DataFrame, round_to: int = 6) -> DataFrame:
+def gram_covariance(emb: DataFrame) -> DataFrame:
     """Population covariance matrix of an embedding column as (i, j,
-    cov) rows — the input to whitening/PCA and the canonical
-    distributed-linear-algebra shape.
+    cov) rows, ``cov`` rounded to 12 decimals — the input to
+    whitening/PCA and the canonical distributed-linear-algebra shape.
 
     Scale shape: per-PARTITION BLAS partials via mapInPandas — each
     partition emits ONE row holding (count, sum-vector, flattened d x d
@@ -904,7 +904,7 @@ def gram_covariance(emb: DataFrame, round_to: int = 6) -> DataFrame:
             F.round(
                 F.col("gg") / F.col("nn")
                 - (F.col("si") / F.col("nn")) * (F.col("sj") / F.col("nn")),
-                round_to,
+                12,
             ).alias("cov"),
         )
         .orderBy("i", "j")
@@ -1011,11 +1011,9 @@ def fixed_point_covariance(emb: DataFrame, round_to: int | None = 6) -> DataFram
     )
 
 
-def power_iteration(
-    cov: DataFrame, iters: int = 10
-) -> "tuple[list[float], float]":
+def power_iteration(cov: DataFrame) -> "tuple[list[float], float]":
     """Dominant eigenvector of a distributed (i, j, cov) matrix by
-    FIXED-ROUND power iteration — the fully-replayable eigen path next
+    800 FIXED rounds of power iteration — the fully-replayable eigen path next
     to :func:`pca_project`'s exact numpy eigendecomposition: every
     arithmetic step (mat-vec fold over j ascending, norm fold over i
     ascending, both left-associated from 0.0, IEEE sqrt/div) is pinned,
@@ -1025,9 +1023,9 @@ def power_iteration(
 
     The matrix is collected to the driver — bounded by d^2 cells, never
     by row count, the same legitimate collect as pca_project — and the
-    iteration runs in pure Python doubles: d x d x iters flops on d<10^3
-    matrices is microseconds; the distributed work is producing ``cov``
-    (gram_covariance's partitions-x-d^2 shuffle). A fixed ``iters``
+    iteration runs in pure Python doubles: d x d x 800 flops on d<10^3
+    matrices is milliseconds; the distributed work is producing ``cov``
+    (gram_covariance's partitions-x-d^2 shuffle). A fixed round count
     (not a convergence test) keeps the result a closed-form function of
     the input. Returns (loadings, rayleigh_norm) — the final normalized
     vector and the last pre-normalization norm (the eigenvalue estimate
@@ -1047,7 +1045,7 @@ def power_iteration(
         m[r["i"]][r["j"]] = float(r["cov"])
     v = [1.0] * d
     lam = 0.0
-    for _ in range(iters):
+    for _ in range(800):
         y = []
         for i in range(d):
             acc = 0.0
@@ -1067,26 +1065,26 @@ def power_iteration(
     return v, lam
 
 
-def pca_project(emb: DataFrame, k: int = 2) -> "tuple[DataFrame, list[float]]":
-    """Project embeddings onto their top-k principal components.
+def pca_project(emb: DataFrame) -> "tuple[DataFrame, list[float]]":
+    """Project embeddings onto their top-2 principal components.
 
     The covariance matrix is computed distributed
     (:func:`gram_covariance`), collected to the driver — BOUNDED by d^2
     cells, never by row count, the legitimate kind of driver collect —
-    eigendecomposed with numpy, and the k components are broadcast back
+    eigendecomposed with numpy, and the 2 components are broadcast back
     as array literals; the projection itself is an in-row zip_with dot
     product, zero shuffle. Eigenvector sign is fixed deterministically
     (largest-|component| coordinate made positive) so reruns and
     partitionings agree."""
     import numpy as np
 
-    cov_rows = gram_covariance(emb, round_to=12).collect()
+    cov_rows = gram_covariance(emb).collect()
     d = max(r["i"] for r in cov_rows) + 1
     cov = np.zeros((d, d))
     for r in cov_rows:
         cov[r["i"], r["j"]] = r["cov"]
     vals, vecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(vals)[::-1][:k]
+    order = np.argsort(vals)[::-1][:2]
     comps = []
     for c in order:
         v = vecs[:, c]
@@ -1112,22 +1110,20 @@ def pca_project(emb: DataFrame, k: int = 2) -> "tuple[DataFrame, list[float]]":
     return out.drop("embedding"), explained
 
 
-def semantic_dedup_report(
-    emb: DataFrame, k: int = 8, iterations: int = 2, tau: float = 0.35
-) -> DataFrame:
+def semantic_dedup_report(emb: DataFrame) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — semantic
     near-duplicate pruning over an embedding column: k-means cluster
-    the corpus, compare COSINE similarity only WITHIN clusters, and for
-    every pair above ``tau`` drop the member MORE similar to its
-    cluster centroid (the paper's keep-the-outlier rule — the dropped
-    item is the redundant one nearer the cluster's semantic center);
-    ties break to dropping the higher id. Returns one row per cluster:
+    the corpus (k = 8, 2 Lloyd iterations), compare COSINE similarity
+    only WITHIN clusters, and for every pair at or above 0.35 drop the
+    member MORE similar to its cluster centroid (the paper's
+    keep-the-outlier rule — the dropped item is the redundant one nearer
+    the cluster's semantic center); ties break to dropping the higher id. Returns one row per cluster:
     (cluster, n_points, n_pairs, n_dropped, n_kept).
 
     Scale shape — the whole point of the paper: clustering bounds the
     quadratic term. The pairwise join is an equi-join on ``cluster``,
     so work is sum(cluster_size^2), never corpus^2; at 100 TB you scale
-    ``k`` with the corpus (the paper uses k ~ 100k on billions of
+    k with the corpus (the paper uses k ~ 100k on billions of
     items) to hold cluster sizes constant. Centroids are the bounded
     k x d driver state (clustering.lloyd_centroids), broadcast back as
     literals; every cosine is an in-row left-associated fold (no UDF).
@@ -1142,7 +1138,7 @@ def semantic_dedup_report(
 
     from .clustering import _assign, lloyd_centroids
 
-    cents = lloyd_centroids(emb, k, iterations)
+    cents = lloyd_centroids(emb, 8)
     d = len(cents[0])
 
     # dot products as 0.0-seeded zip_with FOLDS — the identical IEEE
@@ -1251,7 +1247,7 @@ def semantic_dedup_report(
         .join(v2, "ib")
         .filter(
             F.expr(f"round(({dot_sql('va', 'vb')}) / (na * nb), 6)")
-            >= F.lit(tau)
+            >= F.lit(0.35)
         )
         .select("cluster", "ia", "ib", "ca", "cb")
         # two consumers (pair counts + drop election): checkpoint the
@@ -1283,8 +1279,8 @@ def semantic_dedup_report(
     )
 
 
-def hard_negatives(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
-    """Contrastive hard-negative mining: for each query vector, the ``k``
+def hard_negatives(emb: DataFrame, queries: DataFrame) -> DataFrame:
+    """Contrastive hard-negative mining: for each query vector, the 10
     most-similar corpus vectors whose ``label`` DIFFERS from the
     query's — the negatives an InfoNCE/triplet trainer should see
     (Robinson et al. 2021, "Contrastive Learning with Hard Negative
@@ -1324,7 +1320,7 @@ def hard_negatives(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 10)
         .orderBy("query_id", "rank")
     )
 
@@ -1363,18 +1359,16 @@ def random_projection(emb: DataFrame) -> DataFrame:
     )
 
 
-def jl_shortlist_recall(
-    emb: DataFrame, queries: DataFrame, k: int = 10, shortlist: int = 32
-) -> DataFrame:
+def jl_shortlist_recall(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """Recall report for the project->shortlist->exact-rerank ANN
-    pipeline: shortlist the top ``shortlist`` corpus vectors per query
+    pipeline: shortlist the top 32 corpus vectors per query
     by cosine in the 16-dim JL-projected space, then measure
-    how many of the EXACT top-``k`` neighbors the shortlist contains.
+    how many of the EXACT top-10 neighbors the shortlist contains.
 
-    Because the exact top-k are by definition the globally
+    Because the exact top-10 are by definition the globally
     highest-exact-cosine rows, every truth row that reaches the
-    shortlist survives an exact-cosine rerank to the final top-k — so
-    ``n_hit / k`` IS the end-to-end recall@k of the two-stage pipeline.
+    shortlist survives an exact-cosine rerank to the final top-10 — so
+    ``n_hit / 10`` IS the end-to-end recall@10 of the two-stage pipeline.
 
     Scale shape: projection is row-local; shortlisting is the same
     broadcast-queries / per-partition-top-k plan as
@@ -1397,11 +1391,11 @@ def jl_shortlist_recall(
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("pcos"), F.asc("neighbor_id"))
     short = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= shortlist
+        F.col("rank") <= 32
     )
-    # truth is |queries| x k rows and the hit counts are |queries| rows —
+    # truth is |queries| x 10 rows and the hit counts are |queries| rows —
     # broadcast both joins so the report never plans a sort-merge join
-    truth = brute_force_topk(emb, queries, k=k).select("query_id", "neighbor_id")
+    truth = brute_force_topk(emb, queries).select("query_id", "neighbor_id")
     hits = short.join(F.broadcast(truth), ["query_id", "neighbor_id"], "inner")
     return (
         short.groupBy("query_id")
@@ -1418,15 +1412,15 @@ def jl_shortlist_recall(
             "query_id",
             "n_shortlist",
             "n_hit",
-            F.round(F.col("n_hit") / F.lit(float(k)), 6).alias("recall_at_k"),
+            F.round(F.col("n_hit") / F.lit(10.0), 6).alias("recall_at_k"),
         )
         .orderBy("query_id")
     )
 
 
-def mmr_select(emb: DataFrame, k: int = 8, pool: int = 64) -> DataFrame:
+def mmr_select(emb: DataFrame) -> DataFrame:
     """Maximal Marginal Relevance selection (Carbonell & Goldstein,
-    SIGIR 1998): greedily pick ``k`` vectors maximizing
+    SIGIR 1998): greedily pick 8 vectors maximizing
     ``0.7 * relevance - 0.3 * max_sim_to_already_selected`` — the
     diverse-exemplar pass a few-shot/eval-set builder runs after
     retrieval, trading pure relevance for coverage.
@@ -1441,11 +1435,11 @@ def mmr_select(emb: DataFrame, k: int = 8, pool: int = 64) -> DataFrame:
     0.30000000000000004 and break the replay.)
 
     Scale shape: relevance is row-local against the literal query
-    (zero joins), the pool is a bounded TakeOrderedAndProject top-N
+    (zero joins), the pool is a bounded TakeOrderedAndProject top-64
     (per-partition heaps, no global sort), the pool's pairwise-cosine
-    frame is pool² rows computed ONCE and localCheckpoint-ed, and each
-    of the k rounds is one tiny aggregate+argmax job over it; driver
-    state is k id/score rows. ``pool`` can grow to 10^6 without any
+    frame is 64² rows computed ONCE and localCheckpoint-ed, and each
+    of the 8 rounds is one tiny aggregate+argmax job over it; driver
+    state is 8 id/score rows. The pool could grow to 10^6 without any
     plan change — rounds scan the checkpointed pair frame only."""
     query_vec = _plane_components(1, 64, 23)[0]
     qlit = F.expr(
@@ -1457,7 +1451,7 @@ def mmr_select(emb: DataFrame, k: int = 8, pool: int = 64) -> DataFrame:
         F.round(cosine(qlit, F.col("embedding")), 6).alias("rel"),
     )
     pool_df = (
-        rel_df.orderBy(F.desc("rel"), F.asc("vid")).limit(pool).localCheckpoint()
+        rel_df.orderBy(F.desc("rel"), F.asc("vid")).limit(64).localCheckpoint()
     )
     a = pool_df.select(
         F.col("vid").alias("id_a"), F.col("v").alias("va"), "rel"
@@ -1479,7 +1473,7 @@ def mmr_select(emb: DataFrame, k: int = 8, pool: int = 64) -> DataFrame:
         (1, first["vid"], float(first["rel"]), 0.0, first["rel"] * 0.7 - 0.0 * 0.3)
     ]
     sel_ids = [first["vid"]]
-    for step in range(2, k + 1):
+    for step in range(2, 9):
         ms = (
             pc.filter(F.col("id_b").isin(sel_ids))
             .groupBy("id_a")

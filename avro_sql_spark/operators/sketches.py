@@ -28,12 +28,12 @@ from pyspark.sql import functions as F
 from ..session import load_tables
 
 
-def kll_value_quantiles(events: DataFrame, k: int = 200) -> DataFrame:
-    """Per-key KLL(k) quantile estimates (p25/p50/p90/p99) of a double
-    column. State is O(k log n) per group vs the full multiset an exact
+def kll_value_quantiles(events: DataFrame) -> DataFrame:
+    """Per-key KLL(k = 32768) quantile estimates (p25/p50/p90/p99) of a
+    double column. State is O(k log n) per group vs the full multiset an exact
     percentile needs — and two KLL states merge, so per-day sketches
     roll up to per-month without rescanning."""
-    sk = F.expr(f"kll_sketch_agg_double(value, {k})").alias("sk")
+    sk = F.expr("kll_sketch_agg_double(value, 32768)").alias("sk")
     agg = events.groupBy("event_type").agg(sk, F.count(F.lit(1)).alias("n_rows"))
     q = "kll_sketch_get_quantile_double(sk, array(0.25D, 0.5D, 0.9D, 0.99D))"
     return (
@@ -80,11 +80,11 @@ def theta_user_overlap(events: DataFrame) -> DataFrame:
     )
 
 
-def heavy_users_topk(events: DataFrame, k: int = 10) -> DataFrame:
-    """approx_top_k heavy hitters: bounded sketch state instead of a
-    full groupBy over the key universe. Returns (item, estimated
-    count) rows."""
-    top = events.agg(F.expr(f"approx_top_k(user_id, {k})").alias("t"))
+def heavy_users_topk(events: DataFrame) -> DataFrame:
+    """approx_top_k heavy hitters (the top 23 users): bounded sketch
+    state instead of a full groupBy over the key universe. Returns
+    (item, estimated count) rows."""
+    top = events.agg(F.expr("approx_top_k(user_id, 23)").alias("t"))
     return (
         top.select(F.explode("t").alias("e"))
         .select(
@@ -127,12 +127,11 @@ def kmv_distinct(
     df: DataFrame,
     group_cols: list[str],
     value_expr: str,
-    k: int = 64,
     out_col: str = "est_distinct",
 ) -> DataFrame:
     """Deterministic K-Minimum-Values distinct sketch (Bar-Yossef et
     al. 2002): hash each value to a uniform point in [0, 1), keep the
-    ``k`` smallest distinct hashes per group, and estimate the distinct
+    k = 64 smallest distinct hashes per group, and estimate the distinct
     count as (k-1) / u_k (the k-th smallest hash). The ORACLE-REPLAYABLE
     twin of the HLL entries: the hash is a 48-bit md5 cut (exact in a
     double, portable across engines), so the estimate is a closed-form
@@ -160,7 +159,7 @@ def kmv_distinct(
             F.spark_partition_id().alias("_pid"),
         )
     )
-    kmin = lambda c: F.slice(F.array_sort(F.collect_set(c)), 1, k)  # noqa: E731
+    kmin = lambda c: F.slice(F.array_sort(F.collect_set(c)), 1, 64)  # noqa: E731
     part = src.groupBy(*group_cols, "_pid").agg(kmin("u").alias("mins"))
     merged = (
         part.select(*group_cols, F.explode("mins").alias("u"))
@@ -169,38 +168,32 @@ def kmv_distinct(
     )
     n = F.size("mins")
     est = F.when(
-        n >= k,
-        F.round(F.lit(float(k - 1)) / F.element_at("mins", k), 4),
+        n >= 64,
+        F.round(F.lit(63.0) / F.element_at("mins", 64), 4),
     ).otherwise(F.round(n.cast("double"), 4))
     return merged.select(*group_cols, est.alias(out_col)).orderBy(*group_cols)
 
 
-def count_min_report(
-    df: DataFrame,
-    key_expr: str,
-    depth: int = 4,
-    width: int = 256,
-    topk: int = 20,
-) -> DataFrame:
+def count_min_report(df: DataFrame, key_expr: str) -> DataFrame:
     """Deterministic Count-Min sketch with a heavy-hitter accuracy
-    report (Cormode & Muthukrishnan 2005): ``depth`` hash rows of
-    ``width`` counters each; a key's estimate is the MIN of its cells,
+    report (Cormode & Muthukrishnan 2005): 4 hash rows of 64 counters
+    each; a key's estimate is the MIN of its cells,
     which can only OVER-estimate (collisions add, never subtract) —
     the report makes that one-sided guarantee visible as an
-    ``overestimate`` column on the exact top-``topk`` keys.
+    ``overestimate`` column on the exact top-20 keys.
 
     The ORACLE-REPLAYABLE member of the frequency-sketch family (the
     KMV/HLL relationship, but for counts): row positions are 48-bit md5
-    cuts mod width — pure integer arithmetic any SQL engine replays —
+    cuts mod 64 — pure integer arithmetic any SQL engine replays —
     so sketch cells AND estimates match bit-for-bit, which a library
     CM sketch's murmur-seeded layout never allows.
 
     Scale shape: the sketch is ONE groupBy over in-row (row, pos)
-    explosion — depth x width counters total (kilobytes), partial-
+    explosion — 4 x 64 counters total (kilobytes), partial-
     aggregated map-side and mergeable by cell-wise SUM, so incremental
     pipelines union yesterday's sketch with today's. Point queries join
     the candidate keys against the broadcast-sized sketch frame. The
-    exact top-k pass exists only to ground the error report; production
+    exact top-20 pass exists only to ground the error report; production
     candidate tracking is approx_top_k's job."""
 
     def arr_sql(col: str) -> str:
@@ -208,8 +201,8 @@ def count_min_report(
             "array("
             + ", ".join(
                 f"CAST(CONV(SUBSTRING(MD5(CONCAT('{d}:', CAST({col} AS STRING))), 1, 12), 16, 10) AS BIGINT)"
-                f" % {width}"
-                for d in range(depth)
+                " % 64"
+                for d in range(4)
             )
             + ")"
         )
@@ -224,7 +217,7 @@ def count_min_report(
         src.groupBy(F.expr(key_expr).alias("key"))
         .agg(F.count(F.lit(1)).alias("exact_n"))
         .orderBy(F.desc("exact_n"), F.asc("key"))
-        .limit(topk)
+        .limit(20)
     )
     cand = exact.select(
         "key",
@@ -249,10 +242,9 @@ def join_size_sketch(
     a_key: str,
     b: DataFrame,
     b_key: str,
-    depth: int = 4,
-    width: int = 64,
 ) -> DataFrame:
-    """Join-cardinality estimation by Count-Min inner product (Cormode &
+    """Join-cardinality estimation by Count-Min inner product (4 rows of
+    64 counters; Cormode &
     Muthukrishnan 2005 §4.2): |A ⋈ B| with multiplicities equals the
     inner product of the two key-frequency vectors, and the MIN over
     hash rows of Σ_i cmA[d][i]·cmB[d][i] estimates it one-sidedly
@@ -262,7 +254,7 @@ def join_size_sketch(
     product so the overestimate is visible.
 
     Scale shape: each sketch is one groupBy over an in-row (row, pos)
-    explosion — depth × width counters, map-side combined, mergeable by
+    explosion — 4 × 64 counters, map-side combined, mergeable by
     cell-wise SUM; the inner product joins two sketch frames of that
     bounded size on (row, pos). The exact pass (two key-count
     aggregates + one equi-join on the key) exists only to ground the
@@ -273,8 +265,8 @@ def join_size_sketch(
             "array("
             + ", ".join(
                 f"CAST(CONV(SUBSTRING(MD5(CONCAT('{d}:', CAST(`{key}` AS STRING))), 1, 12), 16, 10) AS BIGINT)"
-                f" % {width}"
-                for d in range(depth)
+                " % 64"
+                for d in range(4)
             )
             + ")"
         )

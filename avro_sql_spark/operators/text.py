@@ -115,19 +115,17 @@ def winnow_fingerprints(docs: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
     )
 
 
-def winnow_overlap_pairs(
-    docs: DataFrame, k: int = 8, w: int = 4, min_shared: int = 2
-) -> DataFrame:
-    """Partial-overlap candidate pairs: docs sharing >= ``min_shared``
-    winnowing fingerprints — the copy/quotation detector (MOSS-style)
-    that exact dedup and whole-doc similarity both miss.
+def winnow_overlap_pairs(docs: DataFrame) -> DataFrame:
+    """Partial-overlap candidate pairs: docs sharing >= 4 winnowing
+    fingerprints (16-grams, window 8) — the copy/quotation detector
+    (MOSS-style) that exact dedup and whole-doc similarity both miss.
 
     Scale shape mirrors ngram_jaccard but on the winnowed hash set,
     which is ~1/w the k-gram count per doc, so the self-join shuffle is
     proportionally smaller; fingerprints shared by huge doc sets are the
     same skew risk as hot shingles (drop them upstream with a frequency
     cap if the corpus has boilerplate)."""
-    fps = winnow_fingerprints(docs, k=k, w=w)
+    fps = winnow_fingerprints(docs, k=16, w=8)
     # cached: both self-join sides consume fps; uncached, the md5 k-gram
     # + window-min array pass runs twice
     fps = fps.cache()
@@ -138,12 +136,12 @@ def winnow_overlap_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared_fp"))
-        .filter(F.col("shared_fp") >= min_shared)
+        .filter(F.col("shared_fp") >= 4)
     )
 
 
-def tfidf_top_terms(docs: DataFrame, top_k: int = 3) -> DataFrame:
-    """Top-k characteristic terms per document by TF-IDF (ln-smoothed:
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
+    """Top-3 characteristic terms per document by TF-IDF (ln-smoothed:
     tf * ln(N / df)) — keyword extraction / topic labeling.
 
     Shape: explode words → (doc, term) counts → term doc-frequencies →
@@ -170,7 +168,7 @@ def tfidf_top_terms(docs: DataFrame, top_k: int = 3) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= top_k)
+        .filter(F.col("rk") <= 3)
         .select("doc_id", "term", "score", "rk")
     )
 
@@ -568,21 +566,19 @@ def char_entropy_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def bm25_topk(
-    docs: DataFrame, queries: list[tuple[str, list[str]]], k: int = 5
-) -> DataFrame:
+def bm25_topk(docs: DataFrame, queries: list[tuple[str, list[str]]]) -> DataFrame:
     """BM25 retrieval scoring: rank documents for each named query (a
     bag of terms) with the Robertson/Sparck-Jones formula —
     idf(t) * tf * (k1+1) / (tf + k1 * (1 - b + b * |d|/avgdl)), with
     k1 = 1.2, b = 0.75 and idf(t) = ln(1 + (N - df + 0.5) / (df + 0.5)).
-    Returns the top-k (query, doc, score) rows per query.
+    Returns the top-5 (query, doc, score) rows per query.
 
     Scale shape: ONE tokenize+explode pass builds (doc, term, tf) for
     query terms ONLY (the term filter is a broadcast semi-join, so the
     posting-list build prunes at the scan — no full inverted index is
     materialized); document lengths ride the same pass via a size()
     aggregate; df/N/avgdl are tiny broadcast aggregates; scoring is one
-    grouped sum per (query, doc), and the final top-k is a
+    grouped sum per (query, doc), and the final top-5 is a
     WindowGroupLimit, never a global sort."""
     sess = docs.sparkSession
     qt = sess.createDataFrame(
@@ -635,7 +631,7 @@ def bm25_topk(
     w = Window.partitionBy("query").orderBy(F.desc("score"), F.col("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("query", "doc_id", "score", "rank")
         .orderBy("query", "rank")
     )
@@ -683,19 +679,20 @@ def zipf_fit(docs: DataFrame) -> DataFrame:
     )
 
 
-def skipgram_pairs(docs: DataFrame, window: int = 2, top_k: int = 100) -> DataFrame:
+def skipgram_pairs(docs: DataFrame) -> DataFrame:
     """Skip-gram co-occurrence counts — the (center, context) pair
     statistics a word2vec/GloVe-style embedding trainer consumes: for
     every token at position i, count each token at positions
-    (i+1 .. i+window) as a directed context, then rank pairs globally.
+    (i+1 .. i+2) as a directed context, then keep the top 100 pairs
+    globally.
 
     Shape: tokenize ONCE into an array column, then generate the pairs
     IN-ROW with nested ``transform`` over the array + a length-bounded
     ``slice`` (the same no-self-join pattern as ``copurchase_pairs``) —
-    the pair frame is linear in total tokens × window, never quadratic
+    the pair frame is linear in total tokens × 2, never quadratic
     in document length, and there is no join at all.  One shuffle for
     the (w1, w2) count (map-side combined), then TakeOrderedAndProject
-    for the global top-k.  Counts are integers, so the result is
+    for the global top 100.  Counts are integers, so the result is
     hash-exact across engines."""
     from .dedup import _spread
 
@@ -710,7 +707,7 @@ def skipgram_pairs(docs: DataFrame, window: int = 2, top_k: int = 100) -> DataFr
         F.transform(
             w,
             lambda t, i: F.transform(
-                F.slice(w, i + F.lit(2), F.lit(window)),
+                F.slice(w, i + F.lit(2), F.lit(2)),
                 lambda u: F.struct(t.alias("w1"), u.alias("w2")),
             ),
         )
@@ -721,16 +718,14 @@ def skipgram_pairs(docs: DataFrame, window: int = 2, top_k: int = 100) -> DataFr
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("w1"), F.asc("w2"))
-        .limit(top_k)
+        .limit(100)
     )
 
 
-def tf_cosine_pairs(
-    docs: DataFrame, threshold: float = 0.5, max_df: int = 100
-) -> DataFrame:
+def tf_cosine_pairs(docs: DataFrame) -> DataFrame:
     """Sparse shingle-frequency cosine similarity join: document pairs
     whose raw-tf bag-of-3-gram vectors (over shingles with document
-    frequency <= ``max_df``) have cosine >= ``threshold`` — the
+    frequency <= max_df = 100) have cosine >= 0.5 — the
     WEIGHTED-vector near-duplicate detector that complements the
     set-overlap family (Jaccard/MinHash/SimHash counts each shingle
     once; this keeps multiplicities, so templated repetition and
@@ -741,7 +736,7 @@ def tf_cosine_pairs(
     48-bit md5-derived BIGINT (the dedup family's oracle-replayable
     hash — every downstream shuffle and join carries an 8-byte key
     instead of a multi-word string), explode to (doc, gram_hash, tf);
-    grams with df > ``max_df`` are dropped BEFORE pair generation, so
+    grams with df > max_df are dropped BEFORE pair generation, so
     fan-out per gram is bounded by max_df² — the absolute df cap is
     the 100 TB guard (a boilerplate shingle shared by N docs would
     otherwise emit N² candidate rows; high-df shingles carry no
@@ -785,7 +780,7 @@ def tf_cosine_pairs(
     hot = (
         tf.groupBy("term")
         .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") > max_df)
+        .filter(F.col("_df") > 100)
         .select("term")
     )
     w_doc = Window.partitionBy("doc_id")
@@ -819,7 +814,7 @@ def tf_cosine_pairs(
         F.transform(
             p,
             lambda x, i: F.transform(
-                F.slice(p, i + F.lit(2), F.lit(max_df)),
+                F.slice(p, i + F.lit(2), F.lit(100)),
                 lambda y: F.struct(
                     x["id"].alias("doc_a"),
                     y["id"].alias("doc_b"),
@@ -850,7 +845,7 @@ def tf_cosine_pairs(
                 F.col("dot").cast("double") / (F.col("nrm_a") * F.col("nrm_b")), 6
             ).alias("cosine"),
         )
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= 0.5)
         .orderBy("doc_a", "doc_b")
     )
 
@@ -988,9 +983,9 @@ def gopher_repetition_report(docs: DataFrame) -> DataFrame:
     )
 
 
-def heaps_curve(docs: DataFrame, buckets: int = 10) -> DataFrame:
+def heaps_curve(docs: DataFrame) -> DataFrame:
     """Heaps'-law vocabulary-growth curve: stream the corpus in
-    ``doc_id`` order, checkpoint after each tenth (``buckets``), and
+    ``doc_id`` order, checkpoint after each of 10 buckets, and
     report cumulative token count and cumulative DISTINCT vocabulary —
     the saturation diagnostic that says whether more of the same data
     still buys new vocabulary (the complement of the Zipf rank-frequency
@@ -1006,7 +1001,7 @@ def heaps_curve(docs: DataFrame, buckets: int = 10) -> DataFrame:
     10^11 docs); the bucket formula reproduces NTILE semantics bit-for-
     bit (first n%b buckets get ceil(n/b) rows, the rest floor(n/b)), so
     the oracle stays DuckDB's one-line ntile(). The final cumulative
-    sums run over the ``buckets``-row frame."""
+    sums run over the 10-row frame."""
     from pyspark.sql.window import Window
 
     from ..functions.text import word_tokens
@@ -1024,11 +1019,11 @@ def heaps_curve(docs: DataFrame, buckets: int = 10) -> DataFrame:
         .select(
             "doc",
             F.expr(
-                f"CAST(CASE WHEN rk <= (nn % {buckets}) * (nn DIV {buckets} + 1)"
-                f" THEN (rk - 1) DIV (nn DIV {buckets} + 1) + 1"
-                f" ELSE (nn % {buckets})"
-                f"  + (rk - (nn % {buckets}) * (nn DIV {buckets} + 1) - 1)"
-                f"    DIV (nn DIV {buckets}) + 1"
+                "CAST(CASE WHEN rk <= (nn % 10) * (nn DIV 10 + 1)"
+                " THEN (rk - 1) DIV (nn DIV 10 + 1) + 1"
+                " ELSE (nn % 10)"
+                "  + (rk - (nn % 10) * (nn DIV 10 + 1) - 1)"
+                "    DIV (nn DIV 10) + 1"
                 " END AS INT)"
             ).alias("bucket"),
         )
@@ -1160,12 +1155,10 @@ def source_kl_matrix(docs: DataFrame) -> DataFrame:
     )
 
 
-def blocklist_report(
-    docs: DataFrame, terms: "list[str]", max_hits: int = 2
-) -> DataFrame:
+def blocklist_report(docs: DataFrame, terms: "list[str]") -> DataFrame:
     """Per-source blocklist screening: exact-token matches against a
     literal term list, counted WITH multiplicity in-row, and a doc is
-    quarantined when its hit count exceeds ``max_hits`` — the
+    quarantined when its hit count exceeds 2 — the
     content-safety gate every corpus pipeline runs before mixing (the
     occurrence threshold, not mere presence, is what keeps a quoted
     mention from nuking a document).
@@ -1185,7 +1178,7 @@ def blocklist_report(
         )
     )
     h = docs.select(F.col("source").alias("source"), hits.alias("hits"))
-    q = (F.col("hits") > max_hits).cast("bigint")
+    q = (F.col("hits") > 2).cast("bigint")
     return (
         h.groupBy("source")
         .agg(
@@ -1369,10 +1362,10 @@ def heldout_nll(docs: DataFrame) -> DataFrame:
     )
 
 
-def good_turing_report(docs: DataFrame, shingle_width: int = 3) -> DataFrame:
+def good_turing_report(docs: DataFrame) -> DataFrame:
     """Good–Turing unseen-mass estimate over word n-grams (Good 1953;
     the Gale & Sampson 1995 "simple Good–Turing" first step): from the
-    frequency-of-frequencies table of ``shingle_width``-gram counts,
+    frequency-of-frequencies table of word 3-gram counts,
     the probability mass of UNSEEN n-grams is P0 = N1/N — the number
     that says how open-ended the corpus still is (near 0: saturated /
     heavily duplicated; large: keep crawling). One row: vocab size,
@@ -1391,7 +1384,7 @@ def good_turing_report(docs: DataFrame, shingle_width: int = 3) -> DataFrame:
 
     grams = docs.select(
         F.split(F.lower(F.col("text")), " ").alias("ws")
-    ).select(F.explode(word_ngrams_of(F.col("ws"), shingle_width)).alias("g"))
+    ).select(F.explode(word_ngrams_of(F.col("ws"), 3)).alias("g"))
     freqs = grams.groupBy("g").agg(F.count(F.lit(1)).alias("c"))
     fof = freqs.groupBy("c").agg(F.count(F.lit(1)).alias("n_r"))
     nr = lambda r: F.max(F.when(F.col("c") == r, F.col("n_r")))  # noqa: E731

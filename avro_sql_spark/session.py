@@ -18,9 +18,23 @@ paths do prune to the named leaves.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+
+@functools.lru_cache(maxsize=None)
+def scratch_dir() -> str:
+    """This process's own scratch directory, removed at exit. The default
+    warehouse and the registry's file round trips live under it, so two
+    processes on one host never write to the same path."""
+    path = tempfile.mkdtemp(prefix="avro-sql-spark-")
+    atexit.register(shutil.rmtree, path, True)
+    return path
 
 
 def get_spark(app_name: str = "avro-sql-spark", cpus: int | None = None, shuffle_partitions: int | None = None) -> SparkSession:
@@ -55,7 +69,7 @@ def get_spark(app_name: str = "avro-sql-spark", cpus: int | None = None, shuffle
         .config("spark.ui.enabled", "false")
         .config(
             "spark.sql.warehouse.dir",
-            os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/avro-sql-spark-warehouse"),
+            os.environ.get("SPARK_GRAFT_WAREHOUSE") or os.path.join(scratch_dir(), "warehouse"),
         )
     )
     return builder.getOrCreate()

@@ -159,6 +159,37 @@ def _read_n(buf, n: int) -> bytes:
     return b
 
 
+def _read_string(buf) -> str:
+    return _read_n(buf, _read_long(buf)).decode("utf-8")
+
+
+def _read_index(buf, n: int, kind: str, unit: str) -> int:
+    """A union branch or enum symbol index, checked against the ``n``
+    the schema declares (a bare list index would wrap a negative one)."""
+    idx = _read_long(buf)
+    if not 0 <= idx < n:
+        raise AvroSqlError(
+            f"Corrupt Avro container: {kind} index {idx} out of range "
+            f"for {n}-{unit} {kind}"
+        )
+    return idx
+
+
+def _block_items(buf) -> Iterator[None]:
+    """One step per item of a block-encoded array or map: reads each
+    block's count (a negative count is followed by the block's byte
+    size, skipped) until the zero-count terminator."""
+    while True:
+        n = _read_long(buf)
+        if n == 0:
+            return
+        if n < 0:
+            n = -n
+            _read_long(buf)
+        for _ in range(n):
+            yield
+
+
 # --------------------------------------------------------------------------
 # schema-driven encode / decode (resolved schema dicts)
 # --------------------------------------------------------------------------
@@ -221,13 +252,7 @@ def _encode(buf: io.BytesIO, schema: Any, v: Any) -> None:
 
 def _decode(buf, schema: Any) -> Any:
     if isinstance(schema, list):
-        idx = _read_long(buf)
-        if not 0 <= idx < len(schema):
-            raise AvroSqlError(
-                f"Corrupt Avro container: union index {idx} out of range "
-                f"for {len(schema)}-branch union"
-            )
-        return _decode(buf, schema[idx])
+        return _decode(buf, schema[_read_index(buf, len(schema), "union", "branch")])
     t = schema if isinstance(schema, str) else schema["type"]
     if isinstance(t, (list, dict)):
         return _decode(buf, t)
@@ -244,36 +269,17 @@ def _decode(buf, schema: Any) -> Any:
     if t == "bytes":
         return _read_n(buf, _read_long(buf))
     if t == "string":
-        return _read_n(buf, _read_long(buf)).decode("utf-8")
+        return _read_string(buf)
     if t == "fixed":
         return _read_n(buf, schema["size"])
     if t == "enum":
-        return schema["symbols"][_read_long(buf)]
+        symbols = schema["symbols"]
+        return symbols[_read_index(buf, len(symbols), "enum", "symbol")]
     if t == "array":
-        out = []
-        while True:
-            n = _read_long(buf)
-            if n == 0:
-                break
-            if n < 0:  # block with byte-size prefix
-                n = -n
-                _read_long(buf)
-            for _ in range(n):
-                out.append(_decode(buf, schema["items"]))
-        return out
+        return [_decode(buf, schema["items"]) for _ in _block_items(buf)]
     if t == "map":
-        out = {}
-        while True:
-            n = _read_long(buf)
-            if n == 0:
-                break
-            if n < 0:
-                n = -n
-                _read_long(buf)
-            for _ in range(n):
-                k = _read_n(buf, _read_long(buf)).decode("utf-8")
-                out[k] = _decode(buf, schema["values"])
-        return out
+        # a dict comprehension evaluates each key before its value
+        return {_read_string(buf): _decode(buf, schema["values"]) for _ in _block_items(buf)}
     if t == "record":
         return {f["name"]: _decode(buf, f["type"]) for f in schema["fields"]}
     raise AvroSqlError(f"Invalid Avro schema type:{t}")

@@ -195,17 +195,12 @@ def decode_resolved(buf, writer: Any, plan: dict) -> Any:
     """Decode one value written under ``writer`` into the reader shape
     described by ``plan`` (from :func:`resolution_plan` on the SAME
     name-resolved writer schema)."""
-    from .avro_io import _decode, _read_long
+    from .avro_io import _block_items, _decode, _read_index, _read_string
 
     writer = _node(writer)
     kind = plan["kind"]
     if kind == "writer_union":
-        idx = _read_long(buf)
-        if not 0 <= idx < len(writer):
-            raise AvroSqlError(
-                f"Corrupt Avro container: union index {idx} out of range "
-                f"for {len(writer)}-branch union"
-            )
+        idx = _read_index(buf, len(writer), "union", "branch")
         return decode_resolved(buf, writer[idx], plan["branches"][idx])
     if kind == "reader_union":
         return decode_resolved(buf, writer, plan["plan"])
@@ -224,34 +219,16 @@ def decode_resolved(buf, writer: Any, plan: dict) -> Any:
             return v.decode("utf-8")
         raise AvroSqlError(f"Invalid promotion target {to}")
     if kind == "enum":
-        sym = writer["symbols"][_read_long(buf)]
-        return plan["mapping"][sym]
+        symbols = writer["symbols"]
+        return plan["mapping"][symbols[_read_index(buf, len(symbols), "enum", "symbol")]]
     if kind == "array":
-        out = []
-        while True:
-            n = _read_long(buf)
-            if n == 0:
-                break
-            if n < 0:
-                n = -n
-                _read_long(buf)
-            for _ in range(n):
-                out.append(decode_resolved(buf, writer["items"], plan["items"]))
-        return out
+        return [decode_resolved(buf, writer["items"], plan["items"]) for _ in _block_items(buf)]
     if kind == "map":
-        out = {}
-        while True:
-            n = _read_long(buf)
-            if n == 0:
-                break
-            if n < 0:
-                n = -n
-                _read_long(buf)
-            for _ in range(n):
-                klen = _read_long(buf)
-                k = buf.read(klen).decode("utf-8")
-                out[k] = decode_resolved(buf, writer["values"], plan["values"])
-        return out
+        # a dict comprehension evaluates each key before its value
+        return {
+            _read_string(buf): decode_resolved(buf, writer["values"], plan["values"])
+            for _ in _block_items(buf)
+        }
     if kind == "record":
         out = {}
         for wf, action in zip(writer["fields"], plan["actions"]):

@@ -342,3 +342,56 @@ def test_resolution_enum_default_and_fixed():
     buf.seek(0)
     _, recs = read_container(buf, reader_schema=reader)
     assert [r["e"] for r in recs] == ["A", "OTHER"]
+
+
+_ENUM = {"type": "enum", "name": "E", "symbols": ["A", "B", "C"]}
+
+
+def _decode_both(raw: bytes, writer, reader):
+    """Decode ``raw`` with the plain decoder and with the resolving one."""
+    from avro_sql_spark.sources.avro_io import _decode
+    from avro_sql_spark.sources.avro_resolve import decode_resolved, resolution_plan
+
+    plan = resolution_plan(writer, reader)
+    return _decode(_io.BytesIO(raw), writer), decode_resolved(_io.BytesIO(raw), writer, plan)
+
+
+@pytest.mark.parametrize("idx", [-1, 3])
+def test_enum_index_out_of_range_is_corrupt(idx):
+    """An enum index outside the symbol list is a corrupt container in
+    both decoders: -1 must not wrap to the last symbol, and 3 must not
+    leak an IndexError."""
+    from avro_sql_spark.sources.avro_io import _decode, _write_long
+    from avro_sql_spark.sources.avro_resolve import decode_resolved, resolution_plan
+
+    buf = _io.BytesIO()
+    _write_long(buf, idx)
+    raw = buf.getvalue()
+    with pytest.raises(AvroSqlError, match="Corrupt Avro container: enum index"):
+        _decode(_io.BytesIO(raw), _ENUM)
+    with pytest.raises(AvroSqlError, match="Corrupt Avro container: enum index"):
+        decode_resolved(_io.BytesIO(raw), _ENUM, resolution_plan(_ENUM, _ENUM))
+
+
+def test_array_and_map_blocks_decode_alike():
+    """Arrays and maps split into blocks, one of them with a negative
+    count and a byte-size prefix, decode the same in both decoders."""
+    from avro_sql_spark.sources.avro_io import _write_bytes, _write_long
+
+    buf = _io.BytesIO()
+    for n in (-2, 8, 1, 2, 1, 3, 0):  # [1, 2] with size 8, then [3]
+        _write_long(buf, n)
+    arr = {"type": "array", "items": "long"}
+    assert _decode_both(buf.getvalue(), arr, arr) == ([1, 2, 3], [1, 2, 3])
+
+    buf = _io.BytesIO()
+    _write_long(buf, 1)
+    _write_bytes(buf, b"a")
+    _write_long(buf, 7)
+    _write_long(buf, -1)
+    _write_long(buf, 3)
+    _write_bytes(buf, b"b")
+    _write_long(buf, 8)
+    _write_long(buf, 0)
+    m = {"type": "map", "values": "long"}
+    assert _decode_both(buf.getvalue(), m, m) == ({"a": 7, "b": 8}, {"a": 7, "b": 8})

@@ -34,14 +34,19 @@ def test_pair_counts_round1(corpus):
 def test_train_bpe_golden_sequence(corpus):
     got = [
         (r["rank"], r["left"], r["right"], r["merged"], r["n"])
-        for r in train_bpe(corpus, n_merges=4).orderBy("rank").collect()
+        for r in train_bpe(corpus).orderBy("rank").collect()
     ]
-    # ties at 8 break (count desc, left, right): e<s<t lexicographically
+    # ties break (count desc, left, right): e<s<t lexicographically at
+    # 8, then e<l<n<o among the five pairs at 5, "ew"<"l" next
     assert got == [
         (0, "e", "s", "es", 8),
         (1, "es", "t", "est", 8),
         (2, "est", "</w>", "est</w>", 8),
         (3, "e", "w", "ew", 5),
+        (4, "ew", "est</w>", "ewest</w>", 5),
+        (5, "l", "o", "lo", 5),
+        (6, "lo", "w", "low", 5),
+        (7, "n", "ewest</w>", "newest</w>", 5),
     ]
 
 
@@ -58,29 +63,36 @@ def test_apply_merge_greedy_leftmost(spark):
 
 
 def test_bpe_fertility_hand_truth(spark):
-    """With zero learnable merges beyond the dominant ones, fertility
-    is exact: every word contributes len(word)+1 tokens before merges;
-    after 2 merges of a 2-word corpus the counts follow the merge
-    table."""
+    """Fertility after the 8 merges follows the merge table: a word
+    the merges cover is one token, a word they only partly cover keeps
+    its unmerged tail."""
     from avro_sql_spark.operators.bpe import bpe_fertility, train_bpe
 
     df = spark.createDataFrame(
-        [(1, "aa aa ab", "s1"), (2, "aa ab ab", "s2")],
+        [(1, "abc abc", "s1"), (2, "abc defghij", "s2")],
         "doc_id long, text string, source string",
     )
-    merges = [
-        (r["left"], r["right"], r["n"]) for r in train_bpe(df, n_merges=2).collect()
+    merges = [(r["left"], r["right"], r["n"]) for r in train_bpe(df).collect()]
+    # hand trace: abc (freq 3) merges fully first, (a,b) winning the
+    # round-1 tie at 3 by left; then every defghij pair ties at 1 and
+    # the leftmost wins, so the 8th merge stops at "defghi"
+    assert merges == [
+        ("a", "b", 3),
+        ("ab", "c", 3),
+        ("abc", "</w>", 3),
+        ("d", "e", 1),
+        ("de", "f", 1),
+        ("def", "g", 1),
+        ("defg", "h", 1),
+        ("defgh", "i", 1),
     ]
-    # hand trace: all round-1 pairs tie at n=3; (a,</w>) wins the
-    # (left, right) tie-break ('<' < 'a'), then (a, a</w>) wins round 2
-    assert merges == [("a", "</w>", 3), ("a", "a</w>", 3)]
-    # final toks: "aa" -> [aa</w>] (1 token), "ab" -> [a, b, </w>] (3)
-    out = {r["source"]: r for r in bpe_fertility(df, n_merges=2).collect()}
-    # s1 = {aa x2, ab x1}: 2*1 + 1*3 = 5 tokens over 3 words, 6 chars
-    assert (out["s1"]["n_words"], out["s1"]["n_tokens"]) == (3, 5)
-    assert out["s1"]["fertility"] == round(5 / 3, 6)
-    assert out["s1"]["chars_per_token"] == round(6 / 5, 6)
-    # s2 = {aa x1, ab x2}: 1 + 6 = 7 tokens over 3 words, 6 chars
-    assert (out["s2"]["n_words"], out["s2"]["n_tokens"]) == (3, 7)
-    assert out["s2"]["fertility"] == round(7 / 3, 6)
-    assert out["s2"]["chars_per_token"] == round(6 / 7, 6)
+    # final toks: "abc" -> [abc</w>] (1), "defghij" -> [defghi, j, </w>] (3)
+    out = {r["source"]: r for r in bpe_fertility(df).collect()}
+    # s1 = {abc x2}: 2 tokens over 2 words, 6 chars
+    assert (out["s1"]["n_words"], out["s1"]["n_tokens"]) == (2, 2)
+    assert out["s1"]["fertility"] == 1.0
+    assert out["s1"]["chars_per_token"] == 3.0
+    # s2 = {abc, defghij}: 1 + 3 = 4 tokens over 2 words, 10 chars
+    assert (out["s2"]["n_words"], out["s2"]["n_tokens"]) == (2, 4)
+    assert out["s2"]["fertility"] == 2.0
+    assert out["s2"]["chars_per_token"] == 2.5

@@ -39,11 +39,14 @@ def test_split_stable_under_repartition(docs):
 
 
 def test_sample_superset_property(docs):
-    """Same salt, larger fraction => superset (growing a sample never
+    """The sample is row-local: sampling a larger corpus keeps exactly
+    the rows the smaller corpus sampled (growing a corpus never
     resamples)."""
-    small = curation.deterministic_sample(docs, fraction=0.1).select("doc_id")
-    big = curation.deterministic_sample(docs, fraction=0.3).select("doc_id")
+    part = docs.filter(F.col("doc_id") % 2 == 0)
+    small = curation.deterministic_sample(part).select("doc_id")
+    big = curation.deterministic_sample(docs).select("doc_id")
     assert small.exceptAll(big).count() == 0
+    assert big.filter(F.col("doc_id") % 2 == 0).exceptAll(small).count() == 0
     assert small.count() < big.count()
 
 
@@ -71,7 +74,7 @@ def test_splits_row_local_no_shuffle(docs):
     """split/sample must not introduce an Exchange — they fuse into the
     scan."""
     plan = (
-        curation.deterministic_sample(curation.deterministic_split(docs), fraction=0.5)
+        curation.deterministic_sample(curation.deterministic_split(docs))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -81,15 +84,15 @@ def test_splits_row_local_no_shuffle(docs):
 
 def test_quality_shards_approx_contract(docs):
     """The sketch-based variant must cover every row with shard labels
-    1..n, keep shard 1 >= shard n in quality, and stay shuffle-free in
+    1..8, keep shard 1 >= shard 8 in quality, and stay shuffle-free in
     the assignment pass (the sketch itself is a separate aggregation)."""
-    out = curation.quality_shards_approx(docs, n_shards=4)
+    out = curation.quality_shards_approx(docs)
     n = docs.count()
     assert out.count() == n
     labels = {r["shard"] for r in out.select("shard").distinct().collect()}
     # the heavily-tied quality score may leave some shards empty (ties
     # cross boundaries whole) but the best shard always exists
-    assert labels <= {1, 2, 3, 4} and 1 in labels
+    assert labels <= set(range(1, 9)) and 1 in labels
     worst = max(labels)
     q1 = out.filter(F.col("shard") == 1).agg(F.min("quality")).first()[0]
     qw = out.filter(F.col("shard") == worst).agg(F.max("quality")).first()[0]
@@ -103,28 +106,33 @@ def test_pack_sequences_invariants(docs):
     """Offsets stay inside the budget, seq_ids start at 0 per group and
     increase with id order, and the (group, seq, offset) assignment is
     stable under repartitioning."""
-    out = curation.pack_sequences(docs, budget=256, n_groups=8)
+    out = curation.pack_sequences(docs)
     assert out.count() == docs.count()
-    assert out.filter((F.col("seq_offset") < 0) | (F.col("seq_offset") >= 256)).count() == 0
+    assert out.filter((F.col("seq_offset") < 0) | (F.col("seq_offset") >= 512)).count() == 0
     assert out.filter(F.col("seq_id") < 0).count() == 0
     first = out.groupBy("pack_group").agg(F.min("seq_id").alias("m"))
     assert first.filter(F.col("m") != 0).count() == 0
     a = out.select("doc_id", "pack_group", "seq_id", "seq_offset")
-    b = curation.pack_sequences(docs.repartition(13), budget=256, n_groups=8).select(
+    b = curation.pack_sequences(docs.repartition(13)).select(
         "doc_id", "pack_group", "seq_id", "seq_offset"
     )
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_pack_sequences_offset_math(spark):
-    """Hand-checked: one group, docs of 10 tokens each, budget 25 —
-    cumulative offsets 0,10,20,30,... map to seqs 0,0,0,1,1,2,..."""
-    rows = [(i, " ".join(["w"] * 10)) for i in range(6)]
+    """Docs of 200 tokens each: the k-th doc of a group (in id order)
+    starts at cumulative offset 200k, so it lands in sequence
+    200k div 512 at offset 200k mod 512 — seqs 0,0,0,1,1,1,2,... with
+    offsets 0,200,400,88,288,488,176,..."""
+    rows = [(i, " ".join(["w"] * 200)) for i in range(40)]
     df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    out = curation.pack_sequences(df, budget=25, n_groups=1).orderBy("doc_id").collect()
-    assert [(r.seq_id, r.seq_offset) for r in out] == [
-        (0, 0), (0, 10), (0, 20), (1, 5), (1, 15), (2, 0)
-    ]
+    out = curation.pack_sequences(df).orderBy("doc_id").collect()
+    groups = {}
+    for r in out:
+        groups.setdefault(r.pack_group, []).append((r.seq_id, r.seq_offset))
+    assert set(groups) <= set(range(8)) and len(groups) > 1
+    for got in groups.values():
+        assert got == [(200 * k // 512, 200 * k % 512) for k in range(len(got))]
 
 
 def test_mixture_weights(docs):
@@ -162,38 +170,33 @@ def test_hash_unit_matches_reference_md5(spark):
         assert got[i] == (h % 1_000_000) / 1_000_000.0
 
 
+def _tokens(a, b):
+    return " ".join(f"t{i}" for i in range(a, b + 1))
+
+
 def test_chunk_documents_stride_overlap(spark):
     docs = spark.createDataFrame(
-        [(1, "t1 t2 t3 t4 t5 t6 t7 t8 t9 t10"), (2, ""), (3, "only")],
+        [(1, _tokens(1, 250)), (2, ""), (3, "only")],
         "doc_id LONG, text STRING",
     )
-    out = curation.chunk_documents(docs, chunk_size=4, stride=3).orderBy(
-        "doc_id", "chunk_idx"
-    ).collect()
+    out = curation.chunk_documents(docs).orderBy("doc_id", "chunk_idx").collect()
     d1 = [r for r in out if r["doc_id"] == 1]
-    assert [r["chunk_idx"] for r in d1] == [0, 1, 2, 3]
-    assert [r["n_tokens"] for r in d1] == [4, 4, 4, 1]
-    assert d1[0]["chunk"] == "t1 t2 t3 t4"
-    assert d1[1]["chunk"] == "t4 t5 t6 t7"  # one-token overlap with stride 3
-    assert d1[3]["chunk"] == "t10"
+    assert [r["chunk_idx"] for r in d1] == [0, 1, 2]
+    assert [r["n_tokens"] for r in d1] == [128, 128, 58]
+    assert d1[0]["chunk"] == _tokens(1, 128)
+    assert d1[1]["chunk"] == _tokens(97, 224)  # 32-token overlap at stride 96
+    assert d1[2]["chunk"] == _tokens(193, 250)
     assert not [r for r in out if r["doc_id"] == 2]  # empty doc -> no chunks
     assert [r["chunk"] for r in out if r["doc_id"] == 3] == ["only"]
 
 
 def test_chunk_documents_no_overlap_reconstructs(spark):
-    docs = spark.createDataFrame([(7, "a b c d e f g")], "doc_id LONG, text STRING")
-    out = (
-        curation.chunk_documents(docs, chunk_size=3, stride=3)
-        .orderBy("chunk_idx")
-        .collect()
-    )
-    assert " ".join(r["chunk"] for r in out) == "a b c d e f g"
-
-
-def test_chunk_documents_rejects_bad_stride(spark):
-    docs = spark.createDataFrame([(1, "x")], "doc_id LONG, text STRING")
-    with pytest.raises(ValueError):
-        curation.chunk_documents(docs, chunk_size=4, stride=5)
+    """Dropping each later chunk's 32-token overlap rebuilds the text."""
+    docs = spark.createDataFrame([(7, _tokens(1, 300))], "doc_id LONG, text STRING")
+    out = curation.chunk_documents(docs).orderBy("chunk_idx").collect()
+    chunks = [r["chunk"].split(" ") for r in out]
+    rebuilt = chunks[0] + [t for c in chunks[1:] for t in c[32:]]
+    assert " ".join(rebuilt) == _tokens(1, 300)
 
 
 def test_deterministic_take_exact_k_and_stable(spark):
@@ -256,7 +259,7 @@ def test_remove_dup_spans_owner_keeps_copy(spark):
         ],
         ["doc_id", "text"],
     )
-    out = {r["doc_id"]: r for r in remove_duplicated_spans(docs, n=8).collect()}
+    out = {r["doc_id"]: r for r in remove_duplicated_spans(docs).collect()}
     assert out[10]["text"] == f"intro {span} outro"
     assert out[10]["n_tokens_after"] == out[10]["n_tokens_before"]
     assert out[20]["text"] == "pre post words"
@@ -273,7 +276,7 @@ def test_remove_dup_spans_overlapping_spans_union_coverage(spark):
     docs = spark.createDataFrame(
         [(1, f"x {nine} y"), (2, f"p q {nine} r")], ["doc_id", "text"]
     )
-    out = {r["doc_id"]: r for r in remove_duplicated_spans(docs, n=8).collect()}
+    out = {r["doc_id"]: r for r in remove_duplicated_spans(docs).collect()}
     assert out[1]["n_tokens_after"] == out[1]["n_tokens_before"]
     # victim loses the 9 shared tokens exactly once
     assert out[2]["n_tokens_before"] - out[2]["n_tokens_after"] == 9
@@ -296,7 +299,7 @@ def test_remove_dup_spans_preserves_case(spark):
         ],
         ["doc_id", "text"],
     )
-    out = {r["doc_id"]: r for r in remove_duplicated_spans(docs, n=8).collect()}
+    out = {r["doc_id"]: r for r in remove_duplicated_spans(docs).collect()}
     assert out[1]["text"] == f"Intro {span_lower} Outro"     # owner keeps case
     assert out[2]["text"] == "Pre POST"                      # victim: case-insensitive match
     assert out[3]["text"] == "Totally Unrelated MIXED case Text"
@@ -390,7 +393,7 @@ def test_quantile_normalize_matches_global_distribution(spark):
         ("B", 100 + i, float(100 + i)) for i in range(10)
     ]
     df = spark.createDataFrame(rows, "source STRING, doc_id LONG, s DOUBLE")
-    out = curation.quantile_normalize_report(df, "s", "source").collect()
+    out = curation.quantile_normalize_report(df, "s").collect()
     by = {(r["source"], r["decile"]): r for r in out}
     # every (source, decile) holds exactly one doc here
     for (src, d), r in by.items():
@@ -436,7 +439,7 @@ def test_padding_efficiency_arithmetic(spark):
         (4, "123 456 ..."),            # 0 valid tokens -> excluded
     ]
     df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    out = {r["bucket_len"]: r for r in padding_efficiency(df, bucket=16, batch=8).collect()}
+    out = {r["bucket_len"]: r for r in padding_efficiency(df).collect()}
     assert set(out) == {16, 32}
     b16 = out[16]
     assert b16["n_docs"] == 2 and b16["n_tokens"] == 8
@@ -450,7 +453,7 @@ def test_padding_efficiency_arithmetic(spark):
 def test_stratified_kfold_balanced_partition(docs):
     """Every doc lands in exactly one fold; per stratum the fold sizes
     differ by at most 1; assignment is deterministic across calls."""
-    out = curation.stratified_kfold(docs, k=5)
+    out = curation.stratified_kfold(docs)
     assert out.count() == docs.count()
     sizes = {
         (r["lang"], r["fold"]): r["count"]
@@ -460,7 +463,7 @@ def test_stratified_kfold_balanced_partition(docs):
     for lang in langs:
         per = [sizes.get((lang, f), 0) for f in range(5)]
         assert max(per) - min(per) <= 1, (lang, per)
-    again = curation.stratified_kfold(docs, k=5)
+    again = curation.stratified_kfold(docs)
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, again.collect()))
 
 

@@ -43,7 +43,7 @@ def test_blocked_fuzzy_pairs_blocks_and_bounds(spark):
         ],
         ["id", "name", "blk"],
     )
-    rows = blocked_fuzzy_pairs(df, "id", "name", ["blk"], max_distance=2).collect()
+    rows = blocked_fuzzy_pairs(df, "id", "name", ["blk"]).collect()
     pairs = {(r["id_a"], r["id_b"]): r["distance"] for r in rows}
     assert pairs == {(1, 2): 1}
 

@@ -14,12 +14,13 @@ from avro_sql_spark.operators.layout import (
 
 
 def test_interleave_bits_hand_values(spark):
-    """Morton order for 2x2-bit inputs: z(x=0b10, y=0b11) interleaves to
-    y1 x1 y0 x0 = 1 1 1 0 = 14; plus axis identities."""
+    """Morton order for 2-bit inputs (their 14 high bits are zero):
+    z(x=0b10, y=0b11) interleaves to y1 x1 y0 x0 = 1 1 1 0 = 14; plus
+    axis identities."""
     df = spark.range(1).select(
-        interleave_bits([F.lit(2), F.lit(3)], bits=2).alias("z"),
-        interleave_bits([F.lit(3), F.lit(0)], bits=2).alias("zx"),
-        interleave_bits([F.lit(0), F.lit(3)], bits=2).alias("zy"),
+        interleave_bits([F.lit(2), F.lit(3)]).alias("z"),
+        interleave_bits([F.lit(3), F.lit(0)]).alias("zx"),
+        interleave_bits([F.lit(0), F.lit(3)]).alias("zy"),
     )
     row = df.collect()[0]
     assert row["z"] == 14
@@ -31,7 +32,7 @@ def test_interleave_bits_hand_values(spark):
 def test_interleave_bits_monotone_on_axis(spark):
     """Holding y fixed, z is strictly increasing in x (curve locality)."""
     df = spark.range(16).select(
-        F.col("id"), interleave_bits([F.col("id"), F.lit(5)], bits=4).alias("z")
+        F.col("id"), interleave_bits([F.col("id"), F.lit(5)]).alias("z")
     )
     rows = df.orderBy("id").collect()
     zs = [r["z"] for r in rows]
@@ -100,20 +101,19 @@ def test_skipping_report_zorder_beats_linear_off_axis(spark):
     predicates on BOTH columns while the linear layout prunes only its
     sort column — so z-order scans strictly fewer file-predicate pairs
     and the report's schema/arithmetic hold (scanned fractions in
-    (0, n_files], pruned fractions in [0, 1))."""
+    (0, 32], pruned fractions in [0, 1))."""
     n = 64
     df = spark.range(n * n).select(
         F.col("id").alias("tb"),
         (F.col("id") % n).cast("double").alias("x"),
         (F.col("id") / n).cast("long").cast("double").alias("y"),
     )
-    rep = skipping_report(df, ["x", "y"], "tb", n_files=16, grid=4,
-                          layouts=("linear", "zorder", "hilbert"))
+    rep = skipping_report(df, ["x", "y"], "tb", layouts=("linear", "zorder", "hilbert"))
     rows = {r["layout"]: r for r in rep.collect()}
     assert set(rows) == {"linear", "zorder", "hilbert"}
     for r in rows.values():
-        assert r["n_files"] == 16 and r["n_predicates"] == 16
-        assert 0 < r["avg_files_scanned"] <= 16
+        assert r["n_files"] == 32 and r["n_predicates"] == 16
+        assert 0 < r["avg_files_scanned"] <= 32
         assert 0 <= r["pct_pruned"] < 1
     # the linear layout sorts by x only: every file spans ALL of y, so
     # a y-restricted predicate can never prune -> z-order wins
@@ -138,10 +138,11 @@ def test_compaction_plan_offsets(spark):
 
 
 def test_hilbert_index_matches_reference_xy2d(spark):
-    """The chained-projection recurrence must equal the textbook xy2d
-    on raw grid coordinates (identity scaling via corner points), and
+    """The 16-level fold must equal the textbook xy2d on raw grid
+    coordinates (passed in as ``coords``, so no scaling applies), and
     adjacent curve positions must be grid neighbors (the no-jump
-    property Morton lacks)."""
+    property Morton lacks). An 8x8 corner grid is the curve's first 64
+    positions."""
     from avro_sql_spark.operators.layout import hilbert_index
 
     def xy2d(n, x, y):
@@ -159,20 +160,19 @@ def test_hilbert_index_matches_reference_xy2d(spark):
             s //= 2
         return d
 
-    bits = 3  # 8x8 grid: 64 cells, exhaustive
-    n = 1 << bits
+    n = 8  # 8x8 grid: 64 cells, exhaustive
     pts = [(i, float(x), float(y)) for i, (x, y) in enumerate(
         (x, y) for x in range(n) for y in range(n)
     )]
     df = spark.createDataFrame(pts, "pid long, x double, y double")
-    # corners 0..n-1 present in both cols -> min/max scaling is identity
+    coords = [F.col("x").cast("long"), F.col("y").cast("long")]
     out = {
         (int(r["x"]), int(r["y"])): r["hval"]
-        for r in hilbert_index(df, ["x", "y"], bits=bits).collect()
+        for r in hilbert_index(df, ["x", "y"], coords=coords).collect()
     }
     for x in range(n):
         for y in range(n):
-            assert out[(x, y)] == xy2d(n, x, y), (x, y)
+            assert out[(x, y)] == xy2d(1 << 16, x, y), (x, y)
     # no-jump: consecutive d are Manhattan-adjacent cells
     byd = {d: xy for xy, d in out.items()}
     for d in range(n * n - 1):

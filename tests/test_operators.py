@@ -92,29 +92,26 @@ def test_simhash_near_dup_hamming(docs):
 
 def test_simhash_candidate_pairs(docs):
     pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in dedup.simhash_candidate_pairs(docs, blocks=9, max_hamming=8).collect()}
+             for r in dedup.simhash_candidate_pairs(docs).collect()}
     assert pairs[(1, 2)] == 0  # identical docs: distance 0, always banded together
     # every reported pair respects the exact popcount filter
-    assert all(d <= 8 for d in pairs.values())
-    # far pair must not appear (distance verified > 8 in the fingerprint test)
+    assert all(d <= 3 for d in pairs.values())
+    # far pairs must not appear
     assert (1, 4) not in pairs and (4, 5) not in pairs
 
 
 def test_simhash_candidate_pairs_pigeonhole(spark):
-    # hand-built near-identical docs: one changed word flips few bits;
-    # with blocks = max_hamming+1 the pair MUST be recalled (pigeonhole)
+    # hand-built near-identical docs: one changed word flips 2 bits;
+    # within Hamming distance 3 of 4 blocks the pair MUST be recalled
+    # (pigeonhole)
     rows = [(1, "alpha beta gamma delta epsilon zeta eta theta"),
-            (2, "alpha beta gamma delta epsilon zeta eta iota")]
+            (2, "alpha beta gamma delta epsilon zeta eta nu")]
     df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
     fps = {r["doc_id"]: r["simhash"] for r in dedup.simhash(df).collect()}
     dist = bin((fps[1] ^ fps[2]) & 0xFFFFFFFFFFFFFFFF).count("1")
-    got = dedup.simhash_candidate_pairs(df, blocks=dist + 1, max_hamming=dist).collect()
+    assert 0 < dist <= 3
+    got = dedup.simhash_candidate_pairs(df).collect()
     assert [(r["id_a"], r["id_b"], r["hamming"]) for r in got] == [(1, 2, dist)]
-
-
-def test_simhash_candidate_pairs_rejects_bad_blocks(docs):
-    with pytest.raises(ValueError):
-        dedup.simhash_candidate_pairs(docs, blocks=2, max_hamming=3)
 
 
 def test_lang_id(spark):
@@ -161,7 +158,7 @@ def test_lsh_ann_subset_of_bucket(spark):
 
     rows = [(i, [math.cos(i * 0.01), math.sin(i * 0.01), 0.5, -0.5]) for i in range(30)]
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    out = similarity.lsh_bucketed_ann(emb, emb.filter(F.col("vec_id") == 0), k=5, planes=4)
+    out = similarity.lsh_bucketed_ann(emb, emb.filter(F.col("vec_id") == 0), planes=4)
     rows_out = out.collect()
     # all results share vec 0's bucket and are ranked by cosine desc
     cos_vals = [r["cos"] for r in rows_out]
@@ -174,8 +171,8 @@ def test_ivf_topk_recall(spark):
     rows = [(i, [math.cos(i * 0.3), math.sin(i * 0.3), float(i % 5), 1.0]) for i in range(100)]
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
     queries = emb.filter(F.col("vec_id") < 3)
-    exact = similarity.brute_force_topk(emb, queries, k=5)
-    approx = similarity.ivf_topk(emb, queries, k=5)
+    exact = similarity.brute_force_topk(emb, queries)
+    approx = similarity.ivf_topk(emb, queries)
     ex = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     ap = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     # probing 4 of the 16 cells should recover most exact neighbors
@@ -193,12 +190,12 @@ def test_ivf_topk_large_query_set(spark):
 
     rows = [(i, [math.cos(i * 0.3), math.sin(i * 0.3), float(i % 5), 1.0]) for i in range(100)]
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    out = similarity.ivf_topk(emb, emb, k=3)
+    out = similarity.ivf_topk(emb, emb)
     grouped = {}
     for r in out.collect():
         grouped.setdefault(r["query_id"], []).append(r["cos"])
     assert len(grouped) == 100  # every query answered
-    assert all(len(v) == 3 and v == sorted(v, reverse=True) for v in grouped.values())
+    assert all(len(v) == 10 and v == sorted(v, reverse=True) for v in grouped.values())
 
 
 def test_label_centroids(spark):
@@ -391,7 +388,7 @@ def test_winnow_overlap_pairs(spark):
         (3, "gamma gamma entirely unrelated content stream"),
     ]
     df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    pairs = {(r.id_a, r.id_b) for r in winnow_overlap_pairs(df, min_shared=2).collect()}
+    pairs = {(r.id_a, r.id_b) for r in winnow_overlap_pairs(df).collect()}
     assert (1, 2) in pairs
     assert not any(3 in p for p in pairs)
 
@@ -405,7 +402,9 @@ def test_tfidf_top_terms(spark):
         (3, "common phoenix"),
     ]
     df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    top1 = {r.doc_id: r.term for r in tfidf_top_terms(df, top_k=1).collect()}
+    out = tfidf_top_terms(df).collect()
+    assert all(r.rk <= 3 for r in out)
+    top1 = {r.doc_id: r.term for r in out if r.rk == 1}
     # 'common' appears in every doc (idf = ln(1) = 0) so the rare term wins
     assert top1 == {1: "unicorn", 2: "dragon", 3: "phoenix"}
 
@@ -528,26 +527,24 @@ def test_pmi_collocations(spark):
 
 
 def test_duplicated_span_stats(spark):
-    """Hand-computed: two docs share their full 4-word text (every span
-    duplicated), a third is unique, a fourth is too short for n=3."""
+    """Hand-computed: two docs share their full 10-word text (every
+    8-word span duplicated), a third is unique, a fourth is too short
+    for an 8-word span."""
     docs = spark.createDataFrame(
         [
-            (1, "a b c d", "s1"),
-            (2, "a b c d", "s1"),
-            (3, "p q r s", "s2"),
+            (1, "a b c d e f g h i j", "s1"),
+            (2, "a b c d e f g h i j", "s1"),
+            (3, "p q r s t u v w x", "s2"),
             (4, "x y", "s2"),
         ],
         "doc_id long, text string, source string",
     )
-    rows = {
-        r["source"]: r
-        for r in dedup.duplicated_span_stats(docs, n=3).collect()
-    }
+    rows = {r["source"]: r for r in dedup.duplicated_span_stats(docs).collect()}
     # s1: both docs 100% duplicated spans, both heavy
     assert rows["s1"]["n_docs"] == 2
     assert rows["s1"]["avg_dup_frac"] == pytest.approx(1.0)
     assert rows["s1"]["n_heavy"] == 2
-    # s2: doc 3 has 0 duplicated spans; doc 4 (2 words < n) contributes
+    # s2: doc 3 has 0 duplicated spans; doc 4 (2 words < 8) contributes
     # no spans and is excluded entirely
     assert rows["s2"]["n_docs"] == 1
     assert rows["s2"]["avg_dup_frac"] == pytest.approx(0.0)
@@ -575,26 +572,15 @@ def test_jaccard_pairs_prefix_matches_full_join(docs):
     threshold (the filter may only prune candidates, never answers)."""
     full = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup.ngram_jaccard_pairs(docs, threshold=0.3).collect()
+        for r in dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()
     }
     pref = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup.jaccard_pairs_prefix(docs, threshold=0.3).collect()
+        for r in dedup.jaccard_pairs_prefix(docs).collect()
     }
     assert pref.keys() == full.keys()
     for k in full:
         assert pref[k] == pytest.approx(full[k], abs=1e-12)
-
-
-def test_jaccard_prefix_threshold_one_still_finds_identical(spark):
-    """At t=1.0 the prefix is a single (rarest) shingle, the tightest
-    legal bound — identical docs must still pair up."""
-    docs = spark.createDataFrame(
-        [(1, "w x y z q r s t"), (2, "w x y z q r s t"), (3, "a b c d e f g h")],
-        "doc_id long, text string",
-    )
-    rows = dedup.jaccard_pairs_prefix(docs, threshold=1.0).collect()
-    assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in rows] == [(1, 2, 1.0)]
 
 
 def test_profile_table_exact_and_approx_agree(spark):
@@ -632,7 +618,7 @@ def test_incremental_near_dup_drops_paraphrase(spark):
         ],
         "doc_id long, text string",
     )
-    kept = [r["doc_id"] for r in dedup.incremental_near_dup(new, seen, threshold=0.4).collect()]
+    kept = [r["doc_id"] for r in dedup.incremental_near_dup(new, seen).collect()]
     assert kept == [11]
 
 
@@ -720,7 +706,7 @@ def test_ann_recall_report_bounds_and_selfcheck(spark):
     rep = {
         r["method"]: r
         for r in similarity.ann_recall_report(
-            emb, emb.filter("vec_id < 6"), planes=2
+            emb, emb.filter("vec_id < 6")
         ).collect()
     }
     for m in ("lsh_bucketed", "ivf"):
@@ -761,14 +747,14 @@ def test_pca_project_invariants(spark):
     from avro_sql_spark.session import load_tables
 
     emb = load_tables(spark, "/root/testdata/sf0.001", register=False)["embeddings"]
-    proj, explained = pca_project(emb, k=2)
+    proj, explained = pca_project(emb)
     assert explained[0] >= explained[1] > 0
     assert sum(explained) <= 1.0 + 1e-9
     # projected variance ratio reproduces the eigenvalue ratio
     v = proj.agg(
         F.var_pop("pc1").alias("v1"), F.var_pop("pc2").alias("v2")
     ).collect()[0]
-    cov_rows = gram_covariance(emb, round_to=12).collect()
+    cov_rows = gram_covariance(emb).collect()
     d = max(r["i"] for r in cov_rows) + 1
     m = np.zeros((d, d))
     for r in cov_rows:
@@ -777,7 +763,7 @@ def test_pca_project_invariants(spark):
     assert abs(v["v1"] / trace - explained[0]) < 1e-3
     assert abs(v["v2"] / trace - explained[1]) < 1e-3
     # determinism: rerun yields identical projections (sign fixed)
-    proj2, _ = pca_project(emb, k=2)
+    proj2, _ = pca_project(emb)
     a = {r["vec_id"]: (r["pc1"], r["pc2"]) for r in proj.collect()}
     b = {r["vec_id"]: (r["pc1"], r["pc2"]) for r in proj2.collect()}
     assert a == b
@@ -793,8 +779,8 @@ def test_power_iteration_matches_eigh(spark):
     from avro_sql_spark.session import load_tables
 
     emb = load_tables(spark, "/root/testdata/sf0.001", register=False)["embeddings"]
-    cov = gram_covariance(emb, round_to=4)
-    v, lam = power_iteration(cov, iters=800)
+    cov = gram_covariance(emb)
+    v, lam = power_iteration(cov)
     rows = cov.collect()
     d = max(r["i"] for r in rows) + 1
     m = np.zeros((d, d))
@@ -805,7 +791,7 @@ def test_power_iteration_matches_eigh(spark):
     cos = abs(float(np.dot(top, np.array(v))))
     assert cos > 0.999  # aligned with the true dominant direction
     assert abs(lam - float(vals[-1])) < 1e-3 * max(1.0, abs(float(vals[-1])))
-    v2, lam2 = power_iteration(cov, iters=800)
+    v2, lam2 = power_iteration(cov)
     assert v == v2 and lam == lam2
 
 
@@ -823,13 +809,13 @@ def test_bm25_ranks_matching_docs_first(spark):
         ],
         ["doc_id", "text"],
     )
-    out = bm25_topk(docs, [("q", ["join", "rareword"])], k=4).collect()
+    out = bm25_topk(docs, [("q", ["join", "rareword"])]).collect()
     ranked = [r["doc_id"] for r in out]
     assert ranked[0] == 1          # only doc with 'join'
     assert 3 not in ranked         # no query terms -> no score row
     # 'spark' is in 3 of 4 docs (low idf); 'join' in 1 (high idf):
     out2 = {r["doc_id"]: r["score"] for r in
-            bm25_topk(docs, [("q", ["spark", "join"])], k=4).collect()}
+            bm25_topk(docs, [("q", ["spark", "join"])]).collect()}
     assert out2[1] > out2[4]       # one rare term beats many common ones
 
 
@@ -861,10 +847,10 @@ def test_snapshot_diff_classifies_changes(spark):
     from avro_sql_spark.operators.profile import snapshot_diff
 
     old = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)], ["id", "s", "v"]
+        [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)], ["id", "s", "value"]
     )
     new = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 9.0), (4, "d", 4.0)], ["id", "s", "v"]
+        [(1, "a", 1.0), (2, "b", 9.0), (4, "d", 4.0)], ["id", "s", "value"]
     )
     out = {r["id"]: r["change_type"]
            for r in snapshot_diff(old, new, ["id"]).collect()}
@@ -876,8 +862,8 @@ def test_snapshot_diff_null_vs_value_not_equal(spark):
     coalesce sentinel keeps NULL from hashing equal to empty)."""
     from avro_sql_spark.operators.profile import snapshot_diff
 
-    old = spark.createDataFrame([(1, None), (2, "")], "id long, s string")
-    new = spark.createDataFrame([(1, ""), (2, "")], "id long, s string")
+    old = spark.createDataFrame([(1, None), (2, "")], "id long, value string")
+    new = spark.createDataFrame([(1, ""), (2, "")], "id long, value string")
     out = {r["id"]: r["change_type"]
            for r in snapshot_diff(old, new, ["id"]).collect()}
     assert out == {1: "changed"}
@@ -888,8 +874,8 @@ def test_value_histogram_conserves_counts_and_edges(spark):
     lands in the last bin."""
     from avro_sql_spark.operators.profile import value_histogram
 
-    df = spark.createDataFrame([(float(i),) for i in range(101)], ["v"])
-    rows = value_histogram(df, "v", bins=10).collect()
+    df = spark.createDataFrame([("e", float(i)) for i in range(101)], ["event_type", "v"])
+    rows = value_histogram(df, "v").collect()
     assert sum(r["n"] for r in rows) == 101
     assert rows[0]["bin_lo"] == 0.0 and rows[-1]["bin_hi"] == 100.0
     assert rows[-1]["bin"] == 9 and rows[-1]["n"] == 11  # 90..100 inclusive
@@ -913,18 +899,9 @@ def test_merge_upsert_semantics(spark):
     )
     got = {
         r["k"]: (r["v"], r["x"])
-        for r in merge_upsert(target, updates, ["k"], "is_delete").collect()
+        for r in merge_upsert(target, updates, ["k"]).collect()
     }
     assert got == {1: ("a", 10.0), 2: ("B", 25.0), 4: ("d", 40.0)}
-
-
-def test_merge_upsert_no_delete_col(spark):
-    from avro_sql_spark.operators.profile import merge_upsert
-
-    target = spark.createDataFrame([(1, "a")], ["k", "v"])
-    updates = spark.createDataFrame([(1, "A"), (2, "b")], ["k", "v"])
-    got = {r["k"]: r["v"] for r in merge_upsert(target, updates, ["k"]).collect()}
-    assert got == {1: "A", 2: "b"}
 
 
 def test_connected_components_chain(spark):
@@ -1018,17 +995,20 @@ def test_source_overlap(spark):
 def test_source_overlap_prefix(spark):
     from avro_sql_spark.operators.dedup import source_overlap
 
-    # same 10-char head, divergent tails: prefix fingerprint catches it
+    # the same 80-char head with divergent tails is caught by the head
+    # fingerprint; docs that diverge inside the first 80 chars are not
+    head = "same boilerplate header " * 4  # 96 chars
     docs = spark.createDataFrame(
         [
-            (1, "same head AAAA tail one", "a"),
-            (2, "same head BBBB tail two", "b"),
+            (1, head + "tail one", "a"),
+            (2, head + "tail two", "b"),
+            (3, "same head AAAA tail one", "c"),
+            (4, "same head BBBB tail two", "d"),
         ],
         "doc_id LONG, text STRING, source STRING",
     )
-    assert source_overlap(docs).count() == 0
-    row = source_overlap(docs, prefix_len=10).collect()[0]
-    assert (row["source_a"], row["source_b"], row["n_shared"]) == ("a", "b", 1)
+    rows = [(r["source_a"], r["source_b"], r["n_shared"]) for r in source_overlap(docs).collect()]
+    assert rows == [("a", "b", 1)]
 
 
 def test_dsir_importance_directional(spark):
@@ -1120,15 +1100,15 @@ def test_pq_topk_recall_and_determinism(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
     queries = emb.filter(F.col("vec_id") < 3)
-    out = similarity.pq_topk(emb, queries, k=5)
+    out = similarity.pq_topk(emb, queries)
     got = out.collect()
-    # shape: 3 queries x top-5, ranks 1..5, adist nondecreasing per query
-    assert len(got) == 15
+    # shape: 3 queries x top-10, ranks 1..10, adist nondecreasing per query
+    assert len(got) == 30
     per_q = {}
     for r in got:
         per_q.setdefault(r["query_id"], []).append((r["rank"], r["adist"]))
     for q, rs in per_q.items():
-        assert [x[0] for x in sorted(rs)] == [1, 2, 3, 4, 5]
+        assert [x[0] for x in sorted(rs)] == list(range(1, 11))
         dists = [x[1] for x in sorted(rs)]
         assert dists == sorted(dists)
     # euclidean exact truth: squared distance on the raw vectors
@@ -1143,12 +1123,12 @@ def test_pq_topk_recall_and_determinism(spark):
                 sum((a - b) ** 2 for a, b in zip(data[q], data[i])),
                 i,
             ),
-        )[:5]
+        )[:10]
         approx = [r["neighbor_id"] for r in got if r["query_id"] == q]
         hits += len(set(truth) & set(approx))
-    assert hits / 15 >= 0.5
+    assert hits / 30 >= 0.5
     # deterministic: a rerun returns the identical frame
-    again = similarity.pq_topk(emb, queries, k=5).collect()
+    again = similarity.pq_topk(emb, queries).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, again))
 
 
@@ -1166,24 +1146,16 @@ def test_semantic_dedup_report_drops_centroid_near_member(spark):
     keep-the-outlier rule); a lone far-out vector survives."""
     from avro_sql_spark.operators.similarity import semantic_dedup_report
 
-    rows = [
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [0.99, 0.12, 0.0, 0.0]),   # near-dup of 1
-        (3, [0.0, 1.0, 0.0, 0.0]),     # unrelated direction
-        (4, [0.0, 0.0, 1.0, 0.0]),
-        (5, [0.0, 0.0, 0.0, 1.0]),
-    ]
+    # ids 1-8 are the 8 unit axes (the k=8 seeds, one cluster each);
+    # id 9 is a near-dup of id 1 and joins its cluster
+    rows = [(i, [1.0 if j == i - 1 else 0.0 for j in range(8)]) for i in range(1, 9)]
+    rows.append((9, [0.99, 0.12] + [0.0] * 6))
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    rep = {
-        r["cluster"]: r
-        for r in semantic_dedup_report(
-            emb, k=2, iterations=1, tau=0.9
-        ).collect()
-    }
+    rep = {r["cluster"]: r for r in semantic_dedup_report(emb).collect()}
     total_dropped = sum(r["n_dropped"] for r in rep.values())
     total_pairs = sum(r["n_pairs"] for r in rep.values())
     assert total_pairs == 1 and total_dropped == 1
-    assert sum(r["n_kept"] for r in rep.values()) == 4
+    assert sum(r["n_kept"] for r in rep.values()) == 8
 
 
 def test_gopher_repetition_signals_hand_truth(spark):
@@ -1228,8 +1200,8 @@ def test_ks_drift_hand_truth(spark):
     the integer numerator."""
     from avro_sql_spark.operators.profile import ks_drift
 
-    a = spark.createDataFrame([(v,) for v in [1, 2, 2, 3]], "v int")
-    b = spark.createDataFrame([(v,) for v in [2, 3, 3, 4, 4]], "v int")
+    a = spark.createDataFrame([("en", v) for v in [1, 2, 2, 3]], "lang string, v int")
+    b = spark.createDataFrame([("en", v) for v in [2, 3, 3, 4, 4]], "lang string, v int")
     row = ks_drift(a, b, "v").collect()[0]
     # n=4, m=5; ECDFs: at v=1 |1*5-0*4|=5; v=2 |3*5-1*4|=11; v=3
     # |4*5-3*4|=8; v=4 |20-20|=0 -> D = 11/20 = 0.55
@@ -1240,25 +1212,27 @@ def test_ks_drift_hand_truth(spark):
 def test_ks_drift_identical_distributions_grouped(spark):
     from avro_sql_spark.operators.profile import ks_drift
 
-    a = spark.createDataFrame([("g", v) for v in range(50)], "g string, v int")
-    out = ks_drift(a, a, "v", group_col="g").collect()
+    a = spark.createDataFrame([("en", v) for v in range(50)], "lang string, v int")
+    out = ks_drift(a, a, "v").collect()
     assert len(out) == 1 and out[0]["ks_num"] == 0 and out[0]["ks_stat"] == 0.0
 
 
 def test_heaps_curve_hand_truth(spark):
-    """Cumulative token and vocabulary counts on a tiny ordered corpus:
-    repeated words add tokens but not vocabulary."""
+    """Cumulative token and vocabulary counts on a tiny ordered corpus
+    of 10 docs, one per bucket: repeated words add tokens but not
+    vocabulary."""
     from avro_sql_spark.operators.text import heaps_curve
 
+    texts = ["a b", "a c", "a b", "d d"] + ["a a"] * 6
     docs = spark.createDataFrame(
-        [(1, "a b"), (2, "a c"), (3, "a b"), (4, "d d")],
-        "doc_id long, text string",
+        list(enumerate(texts, start=1)), "doc_id long, text string"
     )
-    out = {r["bucket"]: r for r in heaps_curve(docs, buckets=2).collect()}
-    # bucket 1 = docs 1,2: tokens 4, vocab {a,b,c}=3
-    assert (out[1]["cum_tokens"], out[1]["cum_vocab"]) == (4, 3)
-    # bucket 2 = docs 3,4: +4 tokens, vocab adds only {d}
-    assert (out[2]["cum_tokens"], out[2]["cum_vocab"]) == (8, 4)
+    out = {r["bucket"]: (r["cum_tokens"], r["cum_vocab"]) for r in heaps_curve(docs).collect()}
+    # vocab grows {a,b}, +c, -, +d, then nothing; tokens 2 per doc
+    assert out == {
+        1: (2, 2), 2: (4, 3), 3: (6, 3), 4: (8, 4), 5: (10, 4),
+        6: (12, 4), 7: (14, 4), 8: (16, 4), 9: (18, 4), 10: (20, 4),
+    }
 
 
 def test_char_mass_median_hand_truth(spark):
@@ -1290,9 +1264,7 @@ def test_hard_negatives_excludes_same_label(spark):
     emb = spark.createDataFrame(
         rows, "vec_id LONG, embedding ARRAY<DOUBLE>, label INT"
     )
-    out = similarity.hard_negatives(
-        emb, emb.filter(F.col("vec_id") < 3), k=5
-    ).collect()
+    out = similarity.hard_negatives(emb, emb.filter(F.col("vec_id") < 3)).collect()
     assert out, "expected some negatives"
     for r in out:
         # never a positive (same label), never self
@@ -1303,7 +1275,7 @@ def test_hard_negatives_excludes_same_label(spark):
     for qid in (0, 1, 2):
         cos = [r["cos"] for r in out if r["query_id"] == qid]
         assert cos == sorted(cos, reverse=True)
-        assert len(cos) <= 5
+        assert len(cos) <= 10
 
 
 def test_random_projection_matches_manual_dot(spark):
@@ -1325,17 +1297,16 @@ def test_jl_shortlist_recall_bounds(spark):
 
     rows = [
         (i, [math.cos(i * 0.1 + 0.01 * j) for j in range(64)])
-        for i in range(40)
+        for i in range(33)
     ]
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    out = similarity.jl_shortlist_recall(
-        emb, emb.filter(F.col("vec_id") < 2), k=5, shortlist=39
-    ).collect()
+    out = similarity.jl_shortlist_recall(emb, emb.filter(F.col("vec_id") < 2)).collect()
     assert len(out) == 2
     for r in out:
-        # shortlist of everything must recall everything
-        assert r["n_shortlist"] == 39
-        assert r["n_hit"] == 5
+        # a 32-row shortlist of a 33-vector corpus is every other vector,
+        # so it must recall everything
+        assert r["n_shortlist"] == 32
+        assert r["n_hit"] == 10
         assert r["recall_at_k"] == 1.0
 
 
@@ -1343,18 +1314,26 @@ def test_mmr_select_diversifies(spark):
     # the fixed query q splits into two orthogonal halves: vec 0 is q's
     # first 32 coordinates (relevance 0.737), vec 2 its last 32 (0.676).
     # vec 1 duplicates vec 0, so pure relevance would rank it second,
-    # but its maxsim of 1.0 must push it behind the orthogonal vec 2
+    # but its maxsim of 1.0 must push it behind the orthogonal vec 2;
+    # vecs 4-7 point away from q (negative relevance), so they fill
+    # the 8 picks last
     q = similarity._plane_components(1, 64, 23)[0]
     head = q[:32] + [0.0] * 32
+    tail = [0.0] * 32 + q[32:]
     rows = [
         (0, head),
         (1, head),  # exact duplicate of 0
-        (2, [0.0] * 32 + q[32:]),  # orthogonal to 0, a little less relevant
+        (2, tail),  # orthogonal to 0, a little less relevant
         (3, [q[1], -q[0]] + [0.0] * 62),  # orthogonal to q: irrelevant
+        (4, [-x for x in head]),
+        (5, [-x for x in tail]),
+        (6, [-x for x in q]),
+        (7, [-x for x in q[:16]] + [0.0] * 48),
     ]
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    out = similarity.mmr_select(emb, k=3, pool=4).collect()
-    assert [r["step"] for r in out] == [1, 2, 3]
+    out = similarity.mmr_select(emb).collect()
+    assert [r["step"] for r in out] == list(range(1, 9))
+    assert sorted(r["vec_id"] for r in out) == list(range(8))
     # relevance tie between 0 and 1 breaks to the lowest id
     assert out[0]["vec_id"] == 0
     # second pick is the orthogonal direction, not the duplicate:
@@ -1369,15 +1348,15 @@ def test_twopass_median_matches_sorted(spark):
 
     vals = [float(x) for x in [9, 1, 7, 3, 5, 11, 2, 8, 4]]  # n=9, k=5 -> 5.0
     df = spark.createDataFrame([(v,) for v in vals], "value DOUBLE")
-    r = profile.twopass_median(df, "value").collect()[0]
+    r = profile.twopass_median(df).collect()[0]
     assert (r["n_rows"], r["rank"], r["median_value"]) == (9, 5, 5.0)
     # even n takes the LOWER median: k = ceil(n/2)
     df2 = spark.createDataFrame([(float(v),) for v in [1, 2, 3, 4]], "value DOUBLE")
-    r2 = profile.twopass_median(df2, "value").collect()[0]
+    r2 = profile.twopass_median(df2).collect()[0]
     assert (r2["rank"], r2["median_value"]) == (2, 2.0)
     # degenerate all-equal input must not divide by zero
     df3 = spark.createDataFrame([(7.0,)] * 5, "value DOUBLE")
-    assert profile.twopass_median(df3, "value").collect()[0]["median_value"] == 7.0
+    assert profile.twopass_median(df3).collect()[0]["median_value"] == 7.0
 
 
 def test_incremental_agg_merge_equals_recompute(spark):
@@ -1565,7 +1544,7 @@ def test_ivf_pq_topk_contract_and_cell_restriction(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
     queries = emb.filter(F.col("vec_id") < 3)
-    out = similarity.ivf_pq_topk(emb, queries, k=5).collect()
+    out = similarity.ivf_pq_topk(emb, queries).collect()
     per_q = {}
     for r in out:
         per_q.setdefault(r["query_id"], []).append((r["rank"], r["adist"], r["neighbor_id"]))
@@ -1576,7 +1555,7 @@ def test_ivf_pq_topk_contract_and_cell_restriction(spark):
         assert all(rs[i][1] <= rs[i + 1][1] for i in range(len(rs) - 1))
         assert q not in {r[2] for r in rs}  # self excluded
     # determinism: identical second run
-    again = similarity.ivf_pq_topk(emb, queries, k=5).collect()
+    again = similarity.ivf_pq_topk(emb, queries).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 
@@ -1589,7 +1568,7 @@ def test_blocklist_report_hand_computed(spark):
         (3, "clean text here", "s2"),    # 0 hits
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = {r["source"]: r for r in blocklist_report(df, ["bad"], max_hits=2).collect()}
+    out = {r["source"]: r for r in blocklist_report(df, ["bad"]).collect()}
     assert out["s1"]["n_docs"] == 2 and out["s1"]["n_quarantined"] == 1
     assert out["s1"]["total_hits"] == 4
     assert out["s1"]["quarantine_rate"] == 0.5
@@ -1682,17 +1661,17 @@ def test_dataset_card_hand_computed(spark):
 
 
 def test_equi_depth_histogram_hand_computed(spark):
-    """10 values into 4 buckets: rank-ceil sizes 2/3/2/3, boundaries are
-    exact data values."""
+    """40 values into 16 buckets: rank-ceil sizes alternate 2/3,
+    boundaries are exact data values."""
     from avro_sql_spark.operators.profile import equi_depth_histogram
 
     df = spark.createDataFrame(
-        [(i, float(i * 10)) for i in range(1, 11)], "o_orderkey long, v double"
+        [(i, float(i * 10)) for i in range(1, 41)], "o_orderkey long, v double"
     )
-    out = {r["bucket"]: r for r in equi_depth_histogram(df, "v", "o_orderkey", buckets=4).collect()}
-    assert [out[b]["n_rows"] for b in (1, 2, 3, 4)] == [2, 3, 2, 3]
+    out = {r["bucket"]: r for r in equi_depth_histogram(df, "v", "o_orderkey").collect()}
+    assert [out[b]["n_rows"] for b in range(1, 17)] == [2, 3] * 8
     assert out[1]["lo"] == 10.0 and out[1]["hi"] == 20.0
-    assert out[4]["lo"] == 80.0 and out[4]["hi"] == 100.0
+    assert out[16]["lo"] == 380.0 and out[16]["hi"] == 400.0
 
 
 def test_disorder_audit_hand_computed(spark):
@@ -1711,7 +1690,7 @@ def test_disorder_audit_hand_computed(spark):
         ],
         "event_type string, ts timestamp_ntz, arrival long",
     )
-    r = disorder_audit(df, order_col="arrival").collect()[0]
+    r = disorder_audit(df).collect()[0]
     assert r["n_events"] == 3 and r["n_late"] == 1
     assert r["max_lateness_s"] == 3600
     assert r["late_frac"] == round(1 / 3, 6)

@@ -433,17 +433,6 @@ def test_nearest_order_attribution_directions(spark):
     assert all(r["mean_dist_hours"] >= 0 for r in out)
 
 
-def test_near_duplicate_events_gap_monotone(spark):
-    """A wider gap can only flag MORE events as near-dups."""
-    from avro_sql_spark.operators.relational import near_duplicate_events
-
-    narrow = {r["event_type"]: r["n_near_dup"]
-              for r in near_duplicate_events(spark, "/root/testdata/sf0.001", 1).collect()}
-    wide = {r["event_type"]: r["n_near_dup"]
-            for r in near_duplicate_events(spark, "/root/testdata/sf0.001", 60).collect()}
-    assert all(wide[t] >= narrow[t] for t in narrow)
-
-
 def test_session_paths_topk_hand_computed(spark, tmp_path):
     """Two users, one session boundary exactly at the 30-min gap (>=
     starts a new session), paths truncate at four events."""

@@ -11,8 +11,9 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_kll_quantiles_within_rank_error(spark):
-    """KLL(200) has ~1.1% normalized rank error; assert each estimate's
-    true rank is within 5% of its target."""
+    """KLL(32768) at this scale keeps every value (at most ~1.1%
+    normalized rank error past it); assert each estimate's true rank is
+    within 5% of its target."""
     ev = load_tables(spark, SF, register=False)["events"]
     est = {r["event_type"]: r for r in sketches.kll_value_quantiles(ev).collect()}
     for etype, r in est.items():
@@ -53,10 +54,10 @@ def test_heavy_users_counts_match_exact(spark):
     per-user counts for every returned item."""
     ev = load_tables(spark, SF, register=False)["events"]
     got = {r["user_id"]: r["est_count"]
-           for r in sketches.heavy_users_topk(ev, k=5).collect()}
+           for r in sketches.heavy_users_topk(ev).collect()}
     exact = {r["user_id"]: r["count"]
              for r in ev.groupBy("user_id").count().collect()}
-    assert len(got) == 5
+    assert len(got) == min(23, len(exact))  # sf0.001 has 15 users
     for uid, c in got.items():
         assert c == exact[uid]
     # the top estimated count is the true maximum
@@ -76,25 +77,28 @@ def test_sketch_aggs_partial_merge_plan(spark):
 def test_count_min_never_underestimates(spark):
     from avro_sql_spark.operators import sketches
 
+    # 201 keys over 64 counters a row: every row collides
     df = spark.createDataFrame(
-        [(i % 13,) for i in range(500)] + [(99,)] * 50, "k LONG"
+        [(i % 200,) for i in range(2000)] + [(999,)] * 50, "k LONG"
     )
-    out = sketches.count_min_report(df, "k", depth=4, width=8, topk=14).collect()
-    assert len(out) == 14
+    out = sketches.count_min_report(df, "k").collect()
+    assert len(out) == 20
+    assert any(r["overestimate"] > 0 for r in out)
     for r in out:
         # the CM guarantee: min over rows can only overestimate
         assert r["est_n"] >= r["exact_n"]
         assert r["overestimate"] == r["est_n"] - r["exact_n"]
     # heaviest key first with exact count intact
-    assert out[0]["key"] == 99 or out[0]["exact_n"] >= out[1]["exact_n"]
+    assert out[0]["key"] == 999 and out[0]["exact_n"] == 50
 
 
 def test_count_min_wide_sketch_is_exact(spark):
     from avro_sql_spark.operators import sketches
 
-    # 5 distinct keys, width 4096: collisions virtually impossible
+    # 5 distinct keys over 64 counters in each of 4 rows: the min over
+    # the rows finds a collision-free cell for every key
     df = spark.createDataFrame([(i % 5,) for i in range(100)], "k LONG")
-    out = sketches.count_min_report(df, "k", depth=4, width=4096, topk=5).collect()
+    out = sketches.count_min_report(df, "k").collect()
     assert all(r["overestimate"] == 0 for r in out)
     assert all(r["exact_n"] == 20 for r in out)
 
@@ -106,7 +110,7 @@ def test_join_size_sketch_one_sided(spark):
 
     a = spark.createDataFrame([(k,) for k in [1, 1, 1, 2, 3]], "user_id long")
     b = spark.createDataFrame([(k,) for k in [1, 2, 2, 4]], "o_custkey long")
-    r = join_size_sketch(a, "user_id", b, "o_custkey", depth=4, width=64).collect()[0]
+    r = join_size_sketch(a, "user_id", b, "o_custkey").collect()[0]
     # exact: key1 3*1 + key2 1*2 = 5
     assert r["exact_size"] == 5
     assert r["est_size"] >= 5

@@ -87,12 +87,13 @@ def test_multimodal_resize(spark):
 def test_multimodal_sample_frames(spark):
     from avro_sql_spark.operators import multimodal
 
-    # payload of 100 bytes, frame=10 -> 10 frames, every 3rd -> idx 0,3,6,9
-    docs = spark.createDataFrame([(7, "x" * 100)], "doc_id LONG, text STRING")
+    # payload of 700 bytes, 64-byte frames -> 10 whole frames (the
+    # 60-byte tail is not a frame), every 4th -> idx 0,4,8
+    docs = spark.createDataFrame([(7, "x" * 700)], "doc_id LONG, text STRING")
     media = multimodal.attach_fake_payload(docs)
-    rows = multimodal.sample_frames(media, frame_bytes=10, every_n=3).orderBy("frame_idx").collect()
-    assert [r.frame_idx for r in rows] == [0, 3, 6, 9]
-    assert all(len(r.frame) == 10 for r in rows)
+    rows = multimodal.sample_frames(media).orderBy("frame_idx").collect()
+    assert [r.frame_idx for r in rows] == [0, 4, 8]
+    assert all(len(r.frame) == 64 for r in rows)
 
 
 def test_compact_table_collapses_small_files(spark, tmp_path):
@@ -142,3 +143,26 @@ def test_read_table_avro_honors_avro_schema_option(spark, tmp_path):
     rows = out.collect()
     assert [(r["id"], r["extra"]) for r in rows] == [(1, None), (2, None)]
     assert dict(out.dtypes)["id"] == "bigint"
+
+
+def test_scratch_dir_is_per_process(spark):
+    """The default warehouse lives under this process's own scratch
+    directory, and another process gets a different one, so two
+    registry runs on one host never write to the same path."""
+    import os
+    import subprocess
+    import sys
+
+    from avro_sql_spark.session import scratch_dir
+
+    mine = scratch_dir()
+    want = os.environ.get("SPARK_GRAFT_WAREHOUSE") or os.path.join(mine, "warehouse")
+    got = spark.conf.get("spark.sql.warehouse.dir")
+    assert got.removeprefix("file:").rstrip("/") == want.rstrip("/")
+    code = "from avro_sql_spark.session import scratch_dir; print(scratch_dir())"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    other = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True
+    ).stdout.strip()
+    assert os.path.isdir(mine) and other and other != mine
+    assert not os.path.exists(other)  # removed when its process exited

@@ -60,7 +60,7 @@ def test_scc_pinned_blocks_bounded(spark):
     # 6-cycle: closure needs 3 doubling rounds; one component
     edges = [(i, (i + 1) % 6) for i in range(6)]
     df = spark.createDataFrame(edges, "src LONG, dst LONG")
-    labels = {r["node"]: r["scc_id"] for r in scc_labels(df, rounds=4).collect()}
+    labels = {r["node"]: r["scc_id"] for r in scc_labels(df).collect()}
     assert set(labels.values()) == {0}
     assert _n_persisted(spark) <= 4
     _sweep(spark)
@@ -73,7 +73,7 @@ def test_bpe_pinned_blocks_bounded(spark):
     docs = spark.createDataFrame(
         [("the cat sat on the mat the cat",)] * 3, "text STRING"
     )
-    merges, words = train_bpe_state(docs, n_merges=6)
+    merges, words = train_bpe_state(docs)
     words.collect()  # materialize the final (returned-lazy) table
     assert len(merges) >= 3
     # without the port: one vocabulary frame pinned per merge round
@@ -109,31 +109,6 @@ def test_label_cc_pinned_blocks_bounded_and_correct(spark, held):
     pairs = spark.createDataFrame(_CC_EDGES, "id_a LONG, id_b LONG")
     nodes = spark.createDataFrame([(n,) for n in _CC_LABELS], "id LONG")
     _assert_cc_bounded_and_correct(spark, connected_components(nodes, pairs))
-
-
-def test_dangling_pagerank_pinned_blocks_bounded(spark, held):
-    """Dangling-mass mode pins every round eagerly; 12 iterations must
-    leave the three operator-lifetime pins plus ~2 round frames, with
-    ranks equal to a plain-Python power iteration."""
-    from avro_sql_spark.operators.graph import pagerank
-
-    _sweep(spark)
-    edges = [(1, 2), (2, 3), (3, 4), (5, 4), (1, 5)]  # 4 is dangling
-    df = spark.createDataFrame(edges, "src LONG, dst LONG")
-    got = {r["node"]: r["pr"] for r in pagerank(df, iterations=12).collect()}
-    nodes = sorted({n for e in edges for n in e})
-    out = {n: [d for s, d in edges if s == n] for n in nodes}
-    pr = {n: 1.0 / len(nodes) for n in nodes}
-    for _ in range(12):
-        dm = sum(pr[n] for n in nodes if not out[n])
-        contrib = {n: 0.0 for n in nodes}
-        for n in nodes:
-            for d in out[n]:
-                contrib[d] += pr[n] / len(out[n])
-        pr = {n: 0.15 / len(nodes) + 0.85 * (contrib[n] + dm / len(nodes)) for n in nodes}
-    assert got == pytest.approx(pr, abs=1e-12)
-    assert _n_persisted(spark) <= 6
-    _sweep(spark)
 
 
 def test_markov_removal_pinned_blocks_bounded(spark, held):
@@ -182,14 +157,3 @@ def test_only_pins_module_unpersists_checkpoints():
         if pattern.search(line)
     ]
     assert offenders == []
-
-
-def test_kcore_zero_rounds_empty_frame(spark):
-    """rounds < 1 returns an empty frame with the documented schema
-    (was: AttributeError on None.orderBy) — ADVICE r8 item."""
-    from avro_sql_spark.operators.graph import kcore_peel
-
-    df = spark.createDataFrame([(1, 2)], "src LONG, dst LONG")
-    out = kcore_peel(df, k=2, rounds=0)
-    assert [f.name for f in out.schema.fields] == ["round", "n_nodes", "n_edges"]
-    assert out.count() == 0

@@ -22,7 +22,7 @@ def docs(spark):
 def test_skipgram_window_and_counts(docs):
     out = {
         (r.w1, r.w2): r.n
-        for r in skipgram_pairs(docs, window=2, top_k=100).collect()
+        for r in skipgram_pairs(docs).collect()
     }
     # per "a b c d": (a,b) (a,c) (b,c) (b,d) (c,d) — twice (docs 1, 2)
     assert out[("a", "b")] == 2
@@ -35,8 +35,11 @@ def test_skipgram_window_and_counts(docs):
     assert ("b", "a") not in out
 
 
-def test_skipgram_top_k_truncates(docs):
-    assert skipgram_pairs(docs, window=2, top_k=3).count() == 3
+def test_skipgram_top_k_truncates(spark):
+    # 60 distinct words in a row make 117 distinct pairs; 100 are kept
+    words = [f"w{chr(97 + i // 26)}{chr(97 + i % 26)}" for i in range(60)]
+    docs = spark.createDataFrame([(1, " ".join(words))], "doc_id LONG, text STRING")
+    assert skipgram_pairs(docs).count() == 100
 
 
 def test_tf_cosine_identical_docs(spark):
@@ -46,7 +49,7 @@ def test_tf_cosine_identical_docs(spark):
         (3, "m n o m n o m n o"),
     ]
     docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    out = tf_cosine_pairs(docs, threshold=0.5, max_df=100).collect()
+    out = tf_cosine_pairs(docs).collect()
     pairs = {(r.doc_a, r.doc_b): r for r in out}
     assert set(pairs) == {(1, 2)}  # identical docs, and only those
     assert pairs[(1, 2)].cosine == 1.0
@@ -56,7 +59,7 @@ def test_tf_cosine_hand_value(spark):
     # doc1 grams: (a b c), (b c d); doc2 grams: (a b c), (c d e)
     rows = [(1, "a b c d"), (2, "a b c d e")]
     docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    out = tf_cosine_pairs(docs, threshold=0.0, max_df=100).collect()
+    out = tf_cosine_pairs(docs).collect()
     assert len(out) == 1
     r = out[0]
     # common grams: "a b c" and "b c d" (doc2 has a b c, b c d, c d e)
@@ -66,20 +69,15 @@ def test_tf_cosine_hand_value(spark):
 
 
 def test_tf_cosine_df_cap_drops_hot_gram(spark):
-    # the gram "t t t" appears in every doc; with max_df=2 it is dropped
-    # and the only surviving similarity comes from the rare tail
-    rows = [
-        (1, "t t t t u u"),
-        (2, "t t t t u u"),
-        (3, "t t t t w w"),
+    # the gram "t t t" appears in all 102 docs, over the df cap of 100,
+    # so it is dropped and the only surviving similarity comes from the
+    # rare tail; kept, it alone would give every pair cosine 2/3 >= 0.5
+    tails = [f"w{chr(97 + i // 26)}{chr(97 + i % 26)}" for i in range(100)]
+    rows = [(1, "t t t t u u"), (2, "t t t t u u")] + [
+        (3 + i, f"t t t t {w} {w}") for i, w in enumerate(tails)
     ]
     docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    uncapped = tf_cosine_pairs(docs, threshold=0.0, max_df=100)
-    assert uncapped.count() == 3  # all pairs share "t t t"
-    capped = {
-        (r.doc_a, r.doc_b)
-        for r in tf_cosine_pairs(docs, threshold=0.0, max_df=2).collect()
-    }
+    capped = {(r.doc_a, r.doc_b) for r in tf_cosine_pairs(docs).collect()}
     assert capped == {(1, 2)}  # only the "t t u"/"t u u" tail survives
 
 

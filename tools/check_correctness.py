@@ -9,13 +9,15 @@ order-insensitive value hash. Usage:
 from __future__ import annotations
 
 import math
+import os
 import struct
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# this checkout's own program, wherever the checkout lives
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from avro_sql_spark.session import TABLES, get_spark  # noqa: E402
 
