@@ -499,14 +499,7 @@ def read_avro_fallback(
             resolved = resolve_names(schema)
             if spark_schema is None:
                 spark_schema = avro_to_spark_schema(resolved)
-            fields_schema = {f["name"]: f["type"] for f in resolved["fields"]}
-            for r in records:
-                rows.append(
-                    tuple(
-                        _avro_to_spark_value(r.get(f.name), f.dataType, fields_schema[f.name])
-                        for f in spark_schema.fields
-                    )
-                )
+            rows.extend(_avro_to_spark_value(r, spark_schema, resolved) for r in records)
     return spark.createDataFrame(rows, spark_schema)
 
 
@@ -524,14 +517,11 @@ def write_avro_fallback(
     partition at a time. Returns the record count."""
     avro_schema = spark_to_avro_schema(df.schema, name=name, namespace=namespace)
     resolved = resolve_names(avro_schema)
-    fields_schema = {f["name"]: f["type"] for f in resolved["fields"]}
+    schema = df.schema
 
     def rows() -> Iterator[dict]:
         for row in df.toLocalIterator():
-            yield {
-                f.name: _spark_to_avro_value(row[i], f.dataType, fields_schema[f.name])
-                for i, f in enumerate(df.schema.fields)
-            }
+            yield _spark_to_avro_value(row, schema, resolved)
 
     with open(path, "wb") as out:
         return write_container(out, avro_schema, rows(), codec=codec)

@@ -71,6 +71,17 @@ def _node(s: Any) -> Any:
     return s
 
 
+def _reader_fields(reader: dict) -> dict:
+    """Reader record fields by the writer names they claim: each field's
+    own name, then its ``aliases`` (spec); an alias never displaces a
+    name already claimed."""
+    rfields = {f["name"]: f for f in reader["fields"]}
+    for f in reader["fields"]:
+        for alias in f.get("aliases", ()):
+            rfields.setdefault(alias, f)
+    return rfields
+
+
 def resolution_plan(writer: Any, reader: Any, path: str = "$") -> dict:
     """Build the decode plan for (writer, reader); raises AvroSqlError
     with the offending path on any incompatibility."""
@@ -153,11 +164,7 @@ def resolution_plan(writer: Any, reader: Any, path: str = "$") -> dict:
                 )
         return {"kind": "enum", "mapping": mapping}
     if wt == "record":
-        rfields = {f["name"]: f for f in reader["fields"]}
-        # reader field aliases also claim writer names (spec)
-        for f in reader["fields"]:
-            for alias in f.get("aliases", ()):
-                rfields.setdefault(alias, f)
+        rfields = _reader_fields(reader)
         taken: set[str] = set()
         actions = []
         for wf in writer["fields"]:
@@ -252,10 +259,7 @@ def compat_report(writer: Any, reader: Any) -> "list[dict]":
     if _tname(writer) != "record" or _tname(reader) != "record":
         raise AvroSqlError("compat_report expects two record schemas")
     rows: list[dict] = []
-    rfields = {f["name"]: f for f in reader["fields"]}
-    for f in reader["fields"]:
-        for alias in f.get("aliases", ()):
-            rfields.setdefault(alias, f)
+    rfields = _reader_fields(reader)
     taken: set[str] = set()
     for wf in writer["fields"]:
         rf = rfields.get(wf["name"])
