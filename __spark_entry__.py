@@ -2387,16 +2387,12 @@ def _hilbert_layout_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     via bits chained rotate-reflect projections (layout.hilbert_index),
     then the same 16-segment min/max rollup. All-integer after the
     scale floor, so the CTE-chain oracle replays it bit-for-bit."""
-    from avro_sql_spark.operators._scan import spread_scan
+    from avro_sql_spark.operators._scan import spread
     from avro_sql_spark.operators.layout import hilbert_index
 
     t = load_tables(spark, sf_dir, register=False)
-    # spread the curve fold across cores when the scan is narrower than
-    # the cluster: a single-row-group parquet file scans as ONE task
-    # (guide §2.5 input skew — repartition right after the read,
-    # carrying only the two audit columns); the segment rollup is
-    # min/max/count — order-free, so placement can't change the result
-    orders = spread_scan(t["orders"].select("o_totalprice", "o_custkey"))
+    # the segment rollup is min/max/count: placement can't change results
+    orders = spread(t["orders"].select("o_totalprice", "o_custkey"))
     h = hilbert_index(orders, ["o_totalprice", "o_custkey"])
     return (
         h.select(
@@ -2457,6 +2453,7 @@ def _corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from avro_sql_spark.functions.text import gopher_pass
+    from avro_sql_spark.operators._scan import spread
 
     t = load_tables(spark, sf_dir, register=False)
     docs = t["documents"]
@@ -2466,8 +2463,10 @@ def _corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # iterations: measured 9.8 s -> ~3 s at sf0.1) while folding the
     # stage materializations into the jobs that first consume them
     # (near-dup's own CC jobs, then the one terminal count union)
-    # instead of four synchronous construction barriers
-    q = docs.filter(gopher_pass(F.col("text"))).localCheckpoint(eager=False)
+    # instead of four synchronous construction barriers. A pinned frame
+    # lists no input files, so the stages' own spreads leave it alone:
+    # spread at the scan, before the first pin
+    q = spread(docs, "doc_id").filter(gopher_pass(F.col("text"))).localCheckpoint(eager=False)
     ex = dedup.dedup_exact(q).localCheckpoint(eager=False)
     labels = dedup.near_dup_clusters(ex)
     nd = ex.join(

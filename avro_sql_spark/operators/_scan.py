@@ -1,36 +1,48 @@
-"""Scale-adaptive scan spreading for aggregation keys.
+"""The one scan-spread policy: repartition before heavy per-row work
+only when the scan is narrower than the cluster.
 
 A compacted input (one parquet row group -> one scan task) serializes
-everything up to the first exchange onto a single core — including the
-PARTIAL side of any aggregation, which Spark places in the scan stage.
-For a fact-table groupBy that partial pass is the expensive half (e.g.
-copurchase baskets: collect_set over every lineitem row).
+everything up to the first exchange onto a single core: tokenize,
+shingle and hash chains, vector math, Arrow batches, and the PARTIAL
+side of any aggregation, which Spark places in the scan stage.
+:func:`spread` is the only place that adds a repartition for that
+reason; operators call it right after their projection of the scan.
 
-``spread_groupby_scan`` repartitions the projected scan on the grouping
-key ONLY when the scan under-parallelizes. The repartition exchange has
-the exact partitioning the downstream groupBy requires (same key, count
-= shuffle.partitions = defaultParallelism in every session this engine
-builds), so EnsureRequirements adds NO second exchange: the shuffle
-count is unchanged, the aggregation simply runs with both phases after
-the exchange on every core.
+The count is EXPLICIT (``defaultParallelism``): a bare
+``repartition(col)`` takes part in AQE partition coalescing, which sees
+"a few MB of text" and merges the shuffle back to one partition. AQE
+cannot know that the per-row compute downstream is heavy. A keyed
+spread has the partitioning a downstream groupBy or window on the same
+key needs (count = shuffle.partitions = defaultParallelism in every
+session this engine builds), so EnsureRequirements adds no second
+exchange.
 
-The probe counts parquet ROW GROUPS, not splits: Spark happily carves a
-single file into ``defaultParallelism`` byte ranges, but a row group is
+The probe counts parquet ROW GROUPS, not splits: Spark carves a single
+file into ``defaultParallelism`` byte ranges, but a row group is
 assigned to the one split holding its midpoint, so effective scan
 parallelism is bounded by the row-group count and
 ``df.rdd.getNumPartitions()`` over-reports it (32 "splits" of a
 one-row-group file = 31 empty tasks + 1 doing all the work). Footers
-are read on the driver with pyarrow — a few KB per file — and only
-when the file count alone doesn't already prove the scan wide enough.
+are read on the driver with pyarrow (a few KB per file), and only when
+the file count alone does not already prove the scan wide enough.
 
-The condition keeps the 100 TB story honest: a real fact table scans as
-thousands of files/row groups (the file-count short-circuit answers
-before any footer is read), the partial aggregation combines map-side
-(TPC-H lineitem is clustered by orderkey — ~7 rows fold to 1 before
-the wire), and forcing the repartition would throw that 7x shuffle
-reduction away. Only a scan narrower than the cluster
-(compacted/unsplittable input, guide §2.5 "input skew") takes the
-spread.
+The files are read off the ANALYZED plan, not ``df.inputFiles()``:
+that one reads the cache-substituted plan, where a cached scan lists
+no files, yet a cached scan keeps the scan's partitions (one row group
+-> one partition holding every row).
+
+Frames the probe leaves alone (it answers "wide enough"):
+ - in-memory and checkpointed frames: they list no input files. A
+   checkpoint's partition count over-reports the same way splits do,
+   so callers that pin spread at the scan, before the pin;
+ - non-parquet files (CSV, JSON, ORC): Spark splits them by byte
+   range, so the row-group bound does not apply;
+ - files the driver cannot read locally.
+
+At scale a real table scans as thousands of files or row groups (the
+file-count short-circuit answers before any footer is read), and a
+forced repartition would add a full shuffle of the raw text or vectors
+and throw away map-side combining.
 """
 
 from __future__ import annotations
@@ -40,16 +52,29 @@ import os
 from pyspark.sql import Column, DataFrame
 
 
+def _input_files(df: DataFrame) -> "list[str]":
+    """The files under ``df``'s file-source relations, cached or not."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    files: "set[str]" = set()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            rel = leaf.relation()
+            if rel.getClass().getSimpleName() == "HadoopFsRelation":
+                files.update(rel.inputFiles())
+    return sorted(files)
+
+
 def _scan_row_groups(df: DataFrame, cap: int) -> int:
     """Effective scan-task upper bound for ``df``'s input, counted up
     to ``cap`` (returns early once the scan is provably wide enough).
-    Falls back to ``cap`` (= "wide enough, leave it alone") when the
-    input isn't local parquet files the driver can footer-read,
-    including when it has no files at all (an in-memory frame)."""
-    files = df.inputFiles()
+    Returns ``cap`` for every frame the module docstring lists as left
+    alone."""
+    files = _input_files(df)
     if not files or len(files) >= cap:
         return cap
     try:
+        import pyarrow as pa
         import pyarrow.parquet as pq
     except ImportError:  # pragma: no cover - pyarrow ships with pyspark
         return cap
@@ -58,34 +83,22 @@ def _scan_row_groups(df: DataFrame, cap: int) -> int:
         path = uri[len("file://"):] if uri.startswith("file://") else uri
         if not os.path.isfile(path):
             return cap
-        total += pq.read_metadata(path).num_row_groups
+        try:
+            total += pq.read_metadata(path).num_row_groups
+        except pa.ArrowInvalid:  # not parquet: split by byte range
+            return cap
         if total >= cap:
             return total
     return total
 
 
-def spread_groupby_scan(df: DataFrame, *keys: "Column | str") -> DataFrame:
-    """Repartition ``df`` on ``keys`` iff its scan has fewer row groups
-    than ``defaultParallelism``. ``df`` must be a scan/projection (no
-    joins or aggregates below), so ``inputFiles()`` resolves on the
-    driver without running a job."""
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
+def spread(df: DataFrame, *keys: "Column | str") -> DataFrame:
+    """Repartition ``df`` to ``defaultParallelism`` partitions, hashed
+    on ``keys`` (round-robin when none are given), iff its scan has
+    fewer row groups than that; otherwise return ``df`` itself. ``df``
+    should be a scan or projection of one, so the probe reads its files
+    on the driver without running a job."""
+    n = df.sparkSession.sparkContext.defaultParallelism
     if _scan_row_groups(df, n) >= n:
         return df
     return df.repartition(n, *keys)
-
-
-def spread_scan(df: DataFrame) -> DataFrame:
-    """Round-robin variant for expensive NON-grouped scan-stage work
-    (tokenize/explode/regex chains with no key to reuse): adds one
-    genuinely new exchange carrying the projected input, but only when
-    the probe proves the scan is narrower than the cluster — the
-    compacted-input case where the whole chain would otherwise run on
-    one core. On splittable input at scale this is a no-op and the
-    chain stays exchange-free."""
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
-    if _scan_row_groups(df, n) >= n:
-        return df
-    return df.repartition(n)

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint
 from ._pins import RoundPins
+from ._scan import spread
 
 # MinHash permutation family: h_i(s) = (a_i * x(s) + b_i) mod P, the
 # textbook 2-universal family over the Mersenne prime P = 2^31-1, with
@@ -60,26 +61,11 @@ def _minhash_params(i: int) -> "tuple[int, int]":
     return a, b
 
 
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Repartition on the id before compute-heavy per-doc work.
-
-    A small/compacted input (one parquet file → one partition) would
-    otherwise serialize the whole shingle/hash computation onto a single
-    core. The partition count must be EXPLICIT: a bare repartition(col)
-    participates in AQE partition coalescing, which sees "few MB of text"
-    and merges the shuffle back to one partition — AQE can't know the
-    downstream per-row compute is heavy. defaultParallelism scales with
-    the cluster. The shuffled payload (id + text) is far cheaper than the
-    per-doc compute it unlocks."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, F.col(key))
-
-
 def _shingles(
     docs: DataFrame, id_col: str, text_col: str, n: int, out_id: "str | None" = None
 ) -> DataFrame:
     """Exploded DISTINCT word n-shingles as (out_id, s_raw) STRINGS —
-    spread across the cluster first (see :func:`_spread`) and tokenized
+    spread across the cluster first (``_scan.spread``) and tokenized
     ONCE into a materialized array column before the gram transform.
     Calling word_shingles(text, n) directly inlines its split() into
     every element_at of every gram (Catalyst does no CSE inside
@@ -88,7 +74,7 @@ def _shingles(
     from ..functions.text import word_ngrams_of
 
     out = out_id or id_col
-    toks = _spread(docs, id_col).select(
+    toks = spread(docs, id_col).select(
         F.col(id_col).alias(out), F.split(F.lower(F.col(text_col)), " ").alias("w")
     )
     return toks.select(
@@ -100,7 +86,7 @@ def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Groups of byte-identical (post-normalization) documents:
     (fingerprint, n_copies, canonical_id) for groups with >1 member."""
     return (
-        _spread(docs, "doc_id").select(F.col("doc_id"), fingerprint(F.col("text")).alias("fp"))
+        spread(docs, "doc_id").select(F.col("doc_id"), fingerprint(F.col("text")).alias("fp"))
         .groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n_copies"), F.min("doc_id").alias("canonical_id"))
         .filter(F.col("n_copies") > 1)
@@ -112,7 +98,7 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
     version of dropDuplicates(text): dedup on the 16-byte hash, never on
     the full text column."""
     keep = (
-        _spread(docs, "doc_id").select(F.col("doc_id"), fingerprint(F.col("text")).alias("fp"))
+        spread(docs, "doc_id").select(F.col("doc_id"), fingerprint(F.col("text")).alias("fp"))
         .groupBy("fp")
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
@@ -791,11 +777,8 @@ def duplicated_span_stats(docs: DataFrame) -> DataFrame:
     """
     from ..functions.text import word_ngrams_of
 
-    # spread + tokenize-once: without the repartition the explode runs
-    # on the compacted scan's 1-3 partitions, and word_shingles would
-    # re-split the text 8 times per span (no CSE inside lambda) — the
-    # two together measured ~20x on this operator at sf0.1
-    toks = _spread(docs, "doc_id").select(
+    # spread + tokenize-once (no CSE inside lambdas): ~20x at sf0.1
+    toks = spread(docs, "doc_id").select(
         F.col("doc_id").alias("did"),
         F.col("source").alias("grp"),
         F.split(F.lower(F.col("text")), " ").alias("w"),

@@ -311,14 +311,9 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     items, C(7,2) <= 21 pairs per order), so the pair frame is linear
     in the fact table; the 2-order floor prunes the long tail before the
     symmetric union doubles it."""
-    from ._scan import spread_groupby_scan
+    from ._scan import spread
 
-    # compacted-input guard: the collect_set PARTIAL otherwise runs
-    # single-core in a one-split scan stage (guide §2.5); the spread
-    # reuses the groupBy's own exchange, so shuffle count is unchanged
-    src = spread_groupby_scan(
-        lineitem.select("l_orderkey", "l_partkey"), "l_orderkey"
-    )
+    src = spread(lineitem.select("l_orderkey", "l_partkey"), "l_orderkey")
     baskets = src.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("ps")
     )

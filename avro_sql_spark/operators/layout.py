@@ -162,7 +162,7 @@ def skipping_report(
     32 x 4^2 rows — driver-negligible, oracle-replayable (the
     z-value is the same integer interleave as :func:`zvalue`, and the
     NTILE remainder rule is replayed bit-exactly)."""
-    from ._scan import spread_scan
+    from ._scan import spread
     from .curation import global_rank
 
     if len(cols) != 2:
@@ -174,16 +174,10 @@ def skipping_report(
     # audit columns only — project BEFORE any exchange (guide §2.3)
     need = df.select(c0, c1, tiebreak_col)
     if "hilbert" in layouts:
-        # spread the 16-level curve fold across cores BEFORE it runs
-        # when the scan is narrower than the cluster: a single-row-group
-        # parquet file scans as ONE task no matter the split count
-        # (guide §2.5 input skew — repartition right after the read),
-        # and the fold is the audit's heaviest per-row compute
-        # (measured r9: the range-sample job that materializes base ran
-        # 1.2 s on one core). The exchange carries only the 3 projected
-        # audit columns; rows are re-ranked by a TOTAL order downstream,
-        # so round-robin placement cannot affect results.
-        need = spread_scan(need)
+        # the 16-level fold is the audit's heaviest per-row compute
+        # (measured r9: 1.2 s on one core); rows are re-ranked by a TOTAL
+        # order downstream, so placement cannot affect results
+        need = spread(need)
     # the hilbert layout pays one extra pass (the 16-level fold), so
     # it is opt-in via ``layouts``
     src = (

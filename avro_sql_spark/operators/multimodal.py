@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ._scan import spread
+
 MEDIA_META = StructType(
     [
         StructField("kind", StringType(), False),
@@ -98,18 +100,12 @@ def extract_features(media_df: DataFrame) -> DataFrame:
                 }
             )
 
-    # repartition so Arrow batches spread across cores even when the
-    # source is one compacted file (explicit count — AQE would coalesce)
     # NULL payloads are dropped at the plan level: len(None)/frombuffer
     # (None) would kill the Python worker, and a null medium has no
     # features to extract
-    n = media_df.sparkSession.sparkContext.defaultParallelism
-    return (
-        media_df.select("doc_id", "payload")
-        .filter(F.col("payload").isNotNull())
-        .repartition(n, F.col("doc_id"))
-        .mapInPandas(_extract, FEATURE_SCHEMA)
-    )
+    return spread(
+        media_df.select("doc_id", "payload").filter(F.col("payload").isNotNull()), "doc_id"
+    ).mapInPandas(_extract, FEATURE_SCHEMA)
 
 
 def payload_sizes(media_df: DataFrame) -> DataFrame:
@@ -165,13 +161,10 @@ def resize_images(media_df: DataFrame) -> DataFrame:
                 }
             )
 
-    n = media_df.sparkSession.sparkContext.defaultParallelism
-    return (
-        media_df.select("doc_id", "payload")
-        .filter(F.col("payload").isNotNull())  # see extract_features
-        .repartition(n, F.col("doc_id"))
-        .mapInPandas(_resize, RESIZED_SCHEMA)
-    )
+    return spread(
+        # see extract_features
+        media_df.select("doc_id", "payload").filter(F.col("payload").isNotNull()), "doc_id"
+    ).mapInPandas(_resize, RESIZED_SCHEMA)
 
 
 FRAME_SCHEMA = StructType(
@@ -202,13 +195,10 @@ def sample_frames(media_df: DataFrame) -> DataFrame:
                     frames.append(payload[fi * 64 : (fi + 1) * 64])
             yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame": frames})
 
-    n = media_df.sparkSession.sparkContext.defaultParallelism
-    return (
-        media_df.select("doc_id", "payload")
-        .filter(F.col("payload").isNotNull())  # see extract_features
-        .repartition(n, F.col("doc_id"))
-        .mapInPandas(_sample, FRAME_SCHEMA)
-    )
+    return spread(
+        # see extract_features
+        media_df.select("doc_id", "payload").filter(F.col("payload").isNotNull()), "doc_id"
+    ).mapInPandas(_sample, FRAME_SCHEMA)
 
 
 def payload_dedup_stats(media: DataFrame) -> DataFrame:

@@ -4125,16 +4125,11 @@ def poisson_bootstrap_ci(events: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"), F.sum("qv").alias("sv")
     )
     from .curation import hash_unit
-    from ._scan import spread_scan
+    from ._scan import spread
 
-    # compacted-input guard (guide §2.5): the replicate explode, the
-    # 32 md5 draws per row, and the (g, b) partial aggregate
-    # all live in the scan stage — single-core on a one-row-group file;
-    # the spread carries the 3 projected columns once and is a no-op on
-    # splittable input. Row placement cannot change the result: the
-    # draws are keyed on (event_id, b) and the replicate sums are
-    # order-free decimal accumulations.
-    reps = spread_scan(ev).withColumn(
+    # placement cannot change the result: the draws are keyed on
+    # (event_id, b) and the replicate sums are order-free decimals
+    reps = spread(ev).withColumn(
         "b", F.explode(F.sequence(F.lit(0), F.lit(31)))
     )
     u = hash_unit(F.concat_ws(":", F.col("event_id"), F.col("b")), "boot")

@@ -1847,14 +1847,9 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     risk here. The basket frame is cached (three consumers: pairs,
     per-part counts, total), per the cache contract."""
     li = load_tables(spark, sf_dir, register=False)["lineitem"]
-    from ._scan import spread_groupby_scan
+    from ._scan import spread
 
-    # compacted-input guard (see graph.copurchase_edges): spreads the
-    # collect_set partial off the single scan core, reusing the
-    # groupBy's own exchange
-    src = spread_groupby_scan(
-        li.select("l_orderkey", "l_partkey"), "l_orderkey"
-    )
+    src = spread(li.select("l_orderkey", "l_partkey"), "l_orderkey")
     baskets = (
         src.groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))

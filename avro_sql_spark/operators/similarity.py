@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine
+from ._scan import spread
 
 def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact cosine top-k of every corpus vector for each query vector.
@@ -27,11 +28,7 @@ def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFra
     tiebreak, so the result is stable across float summation orders (and
     reproducible by the DuckDB oracle)."""
     q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    # spread the corpus side first: a compacted single-file scan would
-    # otherwise run every dot product in one task (the broadcast join
-    # adds no exchange of its own)
-    n = emb.sparkSession.sparkContext.defaultParallelism
-    c = emb.repartition(n, F.col("vec_id")).select(
+    c = spread(emb, "vec_id").select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")
     )
     scored = (
@@ -463,8 +460,7 @@ def pq_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     ``adist`` rounded to 4.
     """
     _sub_dists_sql, _code_sql = _pq_model(emb)
-    n = emb.sparkSession.sparkContext.defaultParallelism
-    codes = emb.repartition(n, F.col("vec_id")).selectExpr(
+    codes = spread(emb, "vec_id").selectExpr(
         "`vec_id` AS neighbor_id",
         *[f"{_code_sql('`embedding`', s)} AS c{s}" for s in range(4)],
     )
@@ -523,8 +519,7 @@ def ivf_pq_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
         fut_pq = pool.submit(_pq_model, emb)
         centroids = fut_coarse.result()
         _sub_dists_sql, _code_sql = fut_pq.result()
-    n = emb.sparkSession.sparkContext.defaultParallelism
-    codes = emb.repartition(n, F.col("vec_id")).select(
+    codes = spread(emb, "vec_id").select(
         F.col("vec_id").alias("neighbor_id"),
         _cell_of("`embedding`", centroids).alias("cell"),
         *[
@@ -569,8 +564,7 @@ def label_centroids(emb: DataFrame) -> DataFrame:
     rounding absorbs float summation-order noise. Re-pack with
     ``array_sort(collect_list(struct(dim, mean_v)))`` when an array
     column is wanted downstream."""
-    n = emb.sparkSession.sparkContext.defaultParallelism
-    ex = emb.repartition(n, F.col("vec_id")).select(
+    ex = spread(emb, "vec_id").select(
         # a fresh attribute: embedding_outliers joins this back to ``emb``
         F.col("label").alias("label"),
         F.posexplode(F.col("embedding")).alias("dim", "v"),
@@ -597,11 +591,7 @@ def quantization_error_stats(emb: DataFrame) -> DataFrame:
     only shuffle is the final tiny per-label aggregate."""
     from ..functions.vectors import dequantize, quantize, quantize_scale
 
-    # spread: same single-file-scan rationale as brute_force_topk — the
-    # per-row quantize/reconstruct array math needs every core
-    emb = emb.repartition(
-        emb.sparkSession.sparkContext.defaultParallelism, F.col("vec_id")
-    )
+    emb = spread(emb, "vec_id")
     v = F.col("embedding")
     scale = quantize_scale(v)
     recon = dequantize(quantize(v, scale), scale)
@@ -664,7 +654,7 @@ def embedding_outliers(emb: DataFrame) -> DataFrame:
         6,
     )
     dists = (
-        emb.repartition(emb.sparkSession.sparkContext.defaultParallelism, F.col("vec_id"))
+        spread(emb, "vec_id")
         .join(F.broadcast(cents), emb["label"] == cents["label"])
         .select(emb["label"].alias("lbl"), dist.alias("dist"))
         .cache()
@@ -840,9 +830,9 @@ def gram_covariance(emb: DataFrame) -> DataFrame:
     independent of row count. The partials are then posexploded and
     merged by a map-side-combined sum per cell. Nothing driver-side
     grows with the data; d is the only scaling knob (d^2 floats per
-    partition row). The rows spread round-robin over the default
-    parallelism, so the partial-summation grouping follows the scan
-    layout and cluster size. Null vectors are excluded, matching what
+    partition row). A narrow scan is spread round-robin
+    (``_scan.spread``), so the partial-summation grouping follows the
+    scan layout and cluster size. Null vectors are excluded, matching what
     any per-cell aggregate would do."""
     src0 = emb.filter(F.col("embedding").isNotNull())
     head = src0.select("embedding").first()
@@ -851,9 +841,7 @@ def gram_covariance(emb: DataFrame) -> DataFrame:
 
         raise AvroSqlError("gram_covariance: input has no vectors")
     d = len(head[0])  # one cheap dimension-probe job; d is not in the schema
-    src = src0.select(F.col("embedding").alias("v")).repartition(
-        emb.sparkSession.sparkContext.defaultParallelism
-    )
+    src = spread(src0.select(F.col("embedding").alias("v")))
 
     def _partials(batches):
         import numpy as np
@@ -938,9 +926,8 @@ def fixed_point_covariance(emb: DataFrame, round_to: int | None = 6) -> DataFram
     cell (overflow-proof: int64 per-partition partials hold while
     rows_per_partition * (1e6 * |v|_max)^2 < 2^63 — 3e6 rows per
     partition at |v| <= 1; the partition row count is the only
-    knob). No fixed repartition
-    pinning is needed — integer
-    sums are order-free — so the default parallelism path is both the
+    knob). No fixed repartition pinning is needed — integer sums are
+    order-free — so the default parallelism path is both the
     deterministic AND the fast one.
     """
     src0 = emb.filter(F.col("embedding").isNotNull())
@@ -950,10 +937,7 @@ def fixed_point_covariance(emb: DataFrame, round_to: int | None = 6) -> DataFram
 
         raise AvroSqlError("fixed_point_covariance: input has no vectors")
     d = len(head[0])
-    sess = emb.sparkSession
-    src = src0.select(F.col("embedding").alias("v")).repartition(
-        sess.sparkContext.defaultParallelism
-    )
+    src = spread(src0.select(F.col("embedding").alias("v")))
 
     def _partials(batches):
         import numpy as np
@@ -1208,17 +1192,10 @@ def semantic_dedup_report(emb: DataFrame) -> DataFrame:
             "sqrt(nn) AS nrm",
             f"{ccos_sql} AS ccos",
         )
-        # spread the points across cores BEFORE checkpointing: a small
-        # embeddings parquet arrives as ONE partition, and since every
-        # downstream join is broadcast, the whole O(sum cluster_size^2)
-        # pair pass would otherwise run single-core on the checkpointed
-        # blocks (measured 5.2 s -> 1.1 s at sf0.1). hash(id) placement
-        # is result-neutral; defaultParallelism keeps it core-adaptive
-        .repartition(
-            emb.sparkSession.sparkContext.defaultParallelism, "id"
-        )
-        .localCheckpoint(eager=True)  # reused by both sides of the pair join
     )
+    # spread before the pin, or the broadcast pair pass runs single-core
+    # on the checkpointed blocks (measured 5.2 s -> 1.1 s at sf0.1)
+    pts = spread(pts, "id").localCheckpoint(eager=True)  # reused by both sides of the pair join
     a, b = pts.alias("a"), pts.alias("b")
     # the candidate join's equi-key has only k distinct values, so its
     # output lands on <= k partitions — emit SKINNY id pairs there and
@@ -1300,8 +1277,7 @@ def hard_negatives(emb: DataFrame, queries: DataFrame) -> DataFrame:
         F.col("label").alias("query_label"),
         F.col("embedding").alias("qv"),
     )
-    n = emb.sparkSession.sparkContext.defaultParallelism
-    c = emb.repartition(n, F.col("vec_id")).select(
+    c = spread(emb, "vec_id").select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("label").alias("neighbor_label"),
         F.col("embedding").alias("cv"),
@@ -1380,8 +1356,7 @@ def jl_shortlist_recall(emb: DataFrame, queries: DataFrame) -> DataFrame:
     q = proj_q.select(
         F.col("vec_id").alias("query_id"), F.col("projected").alias("qv")
     )
-    n = emb.sparkSession.sparkContext.defaultParallelism
-    c = proj_c.repartition(n, F.col("vec_id")).select(
+    c = spread(proj_c, "vec_id").select(
         F.col("vec_id").alias("neighbor_id"), F.col("projected").alias("cv")
     )
     scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).select(

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import text as T
+from ._scan import spread
 
 
 def analyze_documents(docs: DataFrame) -> DataFrame:
@@ -15,11 +16,7 @@ def analyze_documents(docs: DataFrame) -> DataFrame:
     language guess, quality score, fingerprint. All codegen'd Column
     expressions — the scan cost IS the operator cost at 100 TB."""
     t = F.col("text")
-    # repartition first: a compacted single-file input would pin all the
-    # string work to one core (same rationale + explicit-count caveat as
-    # dedup._spread: AQE would coalesce a bare repartition(col) back)
-    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, F.col("doc_id"))
-    return docs.select(
+    return spread(docs, "doc_id").select(
         F.col("doc_id"),
         T.whitespace_token_count(t).cast("long").alias("n_tokens_ws"),
         T.regex_token_count(t).cast("long").alias("n_tokens_re"),
@@ -42,13 +39,11 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     (the gram only refines the first key), so the second groupBy reuses
     the first shuffle's locality; everything is map-side combined."""
     from ..functions.text import word_ngrams_of
-    from .dedup import _spread
 
-    # spread + tokenize-once (see dedup._shingles): the explode must not
-    # run on a compacted scan's few partitions, and the gram transform
-    # must not re-split the text per element
+    # tokenize once (see dedup._shingles): the gram transform must not
+    # re-split the text per element
     grams = (
-        _spread(docs, "doc_id")
+        spread(docs, "doc_id")
         .select(F.col("doc_id"), F.split(F.lower(F.col("text")), " ").alias("w"))
         .select(F.col("doc_id"), F.explode(word_ngrams_of(F.col("w"))).alias("g"))
     )
@@ -103,13 +98,8 @@ def winnow_fingerprints(docs: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
             lambda j: F.array_min(F.slice(F.col("__h"), j, w)),
         )
     )
-    # spread docs across cores first: the heavy per-row array work would
-    # otherwise run inside however few tasks the scan produced (a single
-    # compacted file = one task). One cheap shuffle of the raw text vs
-    # the old explode+sort-window's full k-gram shuffle.
-    n = docs.sparkSession.sparkContext.defaultParallelism
     return (
-        docs.repartition(n, F.col("doc_id"))
+        spread(docs, "doc_id")
         .select(F.col("doc_id"), hashes.alias("__h"))
         .select(F.col("doc_id"), F.explode(fps).alias("fp"))
     )
@@ -328,10 +318,9 @@ def bigram_logprob_scores(docs: DataFrame) -> DataFrame:
     token array before pairing, so punctuation never fabricates or
     breaks a transition, and no positional explode+window is needed.
     Scale: the regex tokenization (the expensive in-row work) runs ONCE
-    — spread across cores by an explicit repartition (a compacted
-    single-file scan would otherwise pin it to one task) and ``.cache``d
-    because both the count pass and the score pass consume it (caller
-    owns unpersist, same convention as the dedup module). Per-bigram
+    — spread across cores (``_scan.spread``) and ``.cache``d because
+    both the count pass and the score pass consume it (caller owns
+    unpersist, same convention as the dedup module). Per-bigram
     scores are computed on the VOCAB-sized count table (bc ⋈ broadcast
     uc), not per instance; the instance join then shuffles doc bigrams
     against that scored table (bigram vocab can exceed broadcast size);
@@ -339,9 +328,8 @@ def bigram_logprob_scores(docs: DataFrame) -> DataFrame:
     than two valid tokens have no transitions and are excluded, like
     the unigram scorer excludes token-free docs."""
     words = T.word_tokens(F.col("text"))
-    sess = docs.sparkSession
     toks = (
-        docs.repartition(sess.sparkContext.defaultParallelism, F.col("doc_id"))
+        spread(docs, "doc_id")
         .select(F.col("doc_id"), words.alias("ws"))
         .cache()
     )
@@ -409,9 +397,8 @@ def kneser_ney_scores(docs: DataFrame) -> DataFrame:
     against the scored vocab table once. All terms are integer counts —
     the DuckDB oracle replays the identical formula exactly."""
     words = T.word_tokens(F.col("text"))
-    sess = docs.sparkSession
     toks = (
-        docs.repartition(sess.sparkContext.defaultParallelism, F.col("doc_id"))
+        spread(docs, "doc_id")
         .select(F.col("doc_id"), words.alias("ws"))
         .cache()
     )
@@ -536,9 +523,8 @@ def char_entropy_stats(docs: DataFrame) -> DataFrame:
         F.lit(0.0),
         lambda acc, k: acc + (k.cast("double") / n) * F.log2(k.cast("double") / n),
     ) + F.lit(0.0)
-    sess = docs.sparkSession
     per_doc = (
-        docs.repartition(sess.sparkContext.defaultParallelism, F.col("doc_id"))
+        spread(docs, "doc_id")
         # empty/NULL texts have no character distribution: exclude them,
         # matching the oracle's unnest (which emits no rows for them) —
         # n_docs therefore counts docs WITH text
@@ -589,7 +575,7 @@ def bm25_topk(docs: DataFrame, queries: list[tuple[str, list[str]]]) -> DataFram
         F.split(F.lower(F.col("text")), r"\s+"), lambda w: w != ""
     )
     toks = (
-        docs.repartition(sess.sparkContext.defaultParallelism, F.col("doc_id"))
+        spread(docs, "doc_id")
         .select(F.col("doc_id"), words.alias("ws"))
         .cache()
     )
@@ -694,12 +680,10 @@ def skipgram_pairs(docs: DataFrame) -> DataFrame:
     the (w1, w2) count (map-side combined), then TakeOrderedAndProject
     for the global top 100.  Counts are integers, so the result is
     hash-exact across engines."""
-    from .dedup import _spread
-
     # tokenize-once: the HOF lambdas below must reference a materialized
     # array column, not the split expression itself (no CSE inside
     # lambdas — see dedup._shingles)
-    toks = _spread(docs, "doc_id").select(
+    toks = spread(docs, "doc_id").select(
         F.col("doc_id"), T.word_tokens(F.col("text")).alias("w")
     )
     w = F.col("w")
@@ -754,13 +738,12 @@ def tf_cosine_pairs(docs: DataFrame) -> DataFrame:
     hashing can conflate shingles at extreme corpus sizes — the same
     accepted trade as the MinHash/Jaccard family.)"""
     from ..functions.text import word_ngrams_of
-    from .dedup import _spread
 
     gram_hash = F.conv(
         F.substring(F.md5(F.col("g").cast("binary")), 1, 12), 16, 10
     ).cast("long")
     toks = (
-        _spread(docs, "doc_id")
+        spread(docs, "doc_id")
         .select(F.col("doc_id"), T.word_tokens(F.col("text")).alias("w"))
         .filter(F.size("w") >= 3)
         .select(F.col("doc_id"), F.explode(word_ngrams_of(F.col("w"), 3)).alias("g"))
@@ -868,10 +851,9 @@ def gopher_repetition_signals(docs: DataFrame) -> DataFrame:
     the (doc, n) key (partitions are document-sized, never global).
     Ties break (count DESC, gram ASC)."""
     from ..functions.text import word_ngrams_of
-    from .dedup import _spread
 
     ns = [2, 3, 4, 5, 10]  # top-gram signals read n = 2..4, dup-gram n = 5, 10
-    base = _spread(docs, "doc_id").select(
+    base = spread(docs, "doc_id").select(
         F.col("doc_id"),
         F.length(F.col("text")).alias("n_text_chars"),
         F.split(F.lower(F.col("text")), " ").alias("w"),
@@ -1204,10 +1186,7 @@ def lexical_diversity(docs: DataFrame) -> DataFrame:
     zero shuffles before the final ordering. Docs with fewer than
     25 tokens have no full chunk and are excluded."""
     ws = T.word_tokens(F.col("text"))
-    sess = docs.sparkSession
-    d = docs.repartition(
-        sess.sparkContext.defaultParallelism, F.col("doc_id")
-    ).select(F.col("doc_id"), ws.alias("ws"))
+    d = spread(docs, "doc_id").select(F.col("doc_id"), ws.alias("ws"))
     n_full = F.floor(F.size("ws") / 25).cast("int")
     ttrs = F.transform(
         F.sequence(F.lit(0), n_full - 1),
@@ -2429,17 +2408,14 @@ def ngram_novelty_report(docs: DataFrame) -> DataFrame:
     all-pairs), one per-source fold; the df frame carries no text,
     only (gram, df)."""
     from ..functions.text import word_ngrams_of
-    from .dedup import _spread
 
     # tokenize ONCE into a materialized array column before the gram
     # transform (word_shingles(text, n) would inline its split() into
     # every element_at of every gram — Catalyst does no CSE inside
     # higher-order-function lambdas — re-splitting the text n times per
-    # shingle), and spread the compacted scan across the cluster first
-    # so the per-doc gram compute parallelizes (the _shingles recipe;
-    # identical gram multiset: array_distinct over the same transform)
+    # shingle): the _shingles recipe, identical gram multiset
     grams = (
-        _spread(docs, "doc_id")
+        spread(docs, "doc_id")
         .select(
             "doc_id",
             F.col("source"),

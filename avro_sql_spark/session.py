@@ -67,6 +67,9 @@ def get_spark(app_name: str = "avro-sql-spark", cpus: int | None = None, shuffle
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # the console progress bar writes carriage-return lines into the
+        # same stream as result lines (check_correctness's OK/FAIL)
+        .config("spark.ui.showConsoleProgress", "false")
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE") or os.path.join(scratch_dir(), "warehouse"),

@@ -1928,13 +1928,13 @@ def test_scan_probe_leaves_in_memory_frames_alone(spark):
     """A frame with no input files (in-memory rows) can't be footer-read:
     the probe answers ``cap`` ("wide enough") and no repartition is
     added."""
-    from avro_sql_spark.operators._scan import _scan_row_groups, spread_groupby_scan, spread_scan
+    from avro_sql_spark.operators._scan import _scan_row_groups, spread
 
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k LONG, v STRING")
     assert df.inputFiles() == []
     assert _scan_row_groups(df, 8) == 8
-    assert spread_groupby_scan(df, "k") is df
-    assert spread_scan(df) is df
+    assert spread(df, "k") is df
+    assert spread(df) is df
 
 
 def test_scan_probe_counts_parquet_row_groups(spark, tmp_path):
@@ -1943,3 +1943,100 @@ def test_scan_probe_counts_parquet_row_groups(spark, tmp_path):
     path = str(tmp_path / "t")
     spark.range(100).coalesce(1).write.parquet(path)
     assert _scan_row_groups(spark.read.parquet(path), 8) == 1
+
+
+def test_scan_probe_leaves_non_parquet_files_alone(spark, tmp_path):
+    """Spark splits CSV by byte range, so the row-group bound does not
+    apply: the probe answers ``cap`` instead of footer-reading a file
+    that has no parquet footer."""
+    from avro_sql_spark.operators import _scan
+
+    path = str(tmp_path / "t")
+    spark.range(100).selectExpr("id AS k").coalesce(1).write.csv(path)
+    df = spark.read.csv(path, schema="k LONG")
+    assert len(df.inputFiles()) == 1
+    assert _scan._scan_row_groups(df, 8) == 8
+    assert _scan.spread(df, "k") is df
+
+
+def _write_row_groups(tmp_path, table, n_groups: int) -> str:
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / f"rg{n_groups}.parquet")
+    pq.write_table(table, path, row_group_size=-(-table.num_rows // n_groups))
+    assert pq.read_metadata(path).num_row_groups == n_groups
+    return path
+
+
+def test_spread_follows_row_groups(spark, tmp_path):
+    """One row group scans as one task, so ``spread`` repartitions to
+    ``defaultParallelism`` (hashed on the key, round-robin without one),
+    also when the scan is cached: the cache keeps the scan's partitions.
+    8 row groups already cover the 4 cores, so it adds nothing."""
+    import re
+
+    import pyarrow as pa
+
+    from avro_sql_spark.operators._scan import spread
+
+    n = spark.sparkContext.defaultParallelism
+    table = pa.table({"k": list(range(80)), "v": [str(i) for i in range(80)]})
+    wide = spark.read.parquet(_write_row_groups(tmp_path, table, 8))
+    assert spread(wide, "k") is wide
+    assert spread(wide) is wide
+    narrow = spark.read.parquet(_write_row_groups(tmp_path, table, 1))
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert re.search(rf"Exchange hashpartitioning\(k#\d+L?, {n}\)", plan(spread(narrow, "k")))
+    assert f"Exchange RoundRobinPartitioning({n})" in plan(spread(narrow))
+    narrow.cache().count()
+    try:
+        assert "Exchange hashpartitioning(k#" in plan(spread(narrow.select("k"), "k"))
+    finally:
+        narrow.unpersist()
+
+
+def test_exact_duplicates_spreads_only_a_narrow_scan(spark, tmp_path):
+    """The per-row fingerprint work is spread only when the scan is
+    narrower than the cluster: over an 8-row-group copy of the same
+    documents the plan has one Exchange fewer (the groupBy's own)."""
+    import pyarrow.parquet as pq
+
+    from tools.gen_plan_budgets import SF, plan_metrics
+
+    src = f"{SF}/documents.parquet"
+    assert pq.read_metadata(src).num_row_groups == 1
+    wide = _write_row_groups(tmp_path, pq.read_table(src), 8)
+
+    def exchanges(path):
+        df = dedup.exact_duplicates(spark.read.parquet(path))
+        return plan_metrics(df._jdf.queryExecution().executedPlan().toString())["exchanges"]
+
+    assert exchanges(wide) == exchanges(src) - 1
+
+
+def test_no_repartition_outside_scan_module():
+    """``_scan.spread`` is the one place that decides a spread: any other
+    ``.repartition(`` call in the package or the registry would shuffle
+    unconditionally. (``repartitionByRange`` sets an output layout and
+    is not a spread.)"""
+    import ast
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = ["__spark_entry__.py"]
+    for base, dirs, files in os.walk(os.path.join(root, "avro_sql_spark")):
+        dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+        paths += [os.path.relpath(os.path.join(base, f), root) for f in sorted(files) if f.endswith(".py")]
+    calls = [
+        f"{rel}:{node.lineno}"
+        for rel in paths
+        if rel != os.path.join("avro_sql_spark", "operators", "_scan.py")
+        for node in ast.walk(ast.parse(open(os.path.join(root, rel)).read()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "repartition"
+    ]
+    assert calls == [], f"{len(calls)} repartition calls outside _scan.spread: {calls}"
